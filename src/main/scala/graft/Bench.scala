@@ -24,6 +24,43 @@ import java.nio.file.{Files, Paths}
   * the driver calls with no args = full run). */
 object Bench {
 
+  /** Batch-size-adaptive state-store parallelism (partitioning scales
+    * with the data, not with the box): the per-micro-batch cost of a
+    * stateful query includes one state-store COMMIT per shuffle
+    * partition (measured: 128 delta writes per 50k-row batch at the
+    * batch-board 32; parts=8 ran 2.25x faster with an identical state
+    * curve). Partitions are derived from the
+    * bytes one micro-batch ingests — input size div 256 KiB, clamped
+    * to [4, cores] — so small micro-batches stop paying 32 fixed
+    * commits while corpus-scale batches keep full parallelism.
+    * SPARK_GRAFT_STREAM_PARTS overrides the derivation (probe knob). */
+  private[graft] def streamParts(dir: String, mfpt: Option[Int], cores: Int): Int =
+    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
+      // enumerate the SAME events.parquet* glob the stream source
+      // reads (a file or a directory of slices), counting only
+      // `.parquet` files in either place — a stray events.parquet.tmp
+      // or _SUCCESS marker must not skew the size — and guard
+      // listFiles' null (unreadable dir): fall back to the floor and
+      // let the downstream schema read raise the friendly error
+      val parent = new java.io.File(dir)
+      val files = Option(parent.listFiles()).getOrElse(Array.empty)
+        .filter(f => f.getName.startsWith("events.parquet"))
+        .flatMap { f =>
+          if (f.isFile) Array(f)
+          else Option(f.listFiles()).getOrElse(Array.empty).filter(_.isFile)
+        }
+        .filter(_.getName.endsWith(".parquet"))
+      if (files.isEmpty) 4
+      else {
+        val total = files.map(_.length).sum
+        // AvailableNow with maxFilesPerTrigger=n ingests n files/batch
+        val perBatch = mfpt.filter(_ > 0).map { n =>
+          total / math.max(1L, (files.length.toLong + n - 1) / n)
+        }.getOrElse(total)
+        math.max(4L, math.min(cores.toLong, perBatch / (256L * 1024L))).toInt
+      }
+    }
+
   /** Micro-batch throughput of the two headline streaming ops: the A26
     * row-local changefeed pipeline and the A27 per-key stateful
     * snapshot, each replaying the SF's events file to completion
@@ -57,45 +94,9 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         (name, 0L, -1.0, 0L)
       }
-    // Batch-size-adaptive state-store parallelism (guide §2: make
-    // partitioning scale with the data, not with the box): the
-    // per-micro-batch cost of a stateful query includes one state-store
-    // COMMIT per shuffle partition (measured r14: 128 delta writes per
-    // 50k-row batch at the batch-board 32; parts=8 ran 2.25x faster
-    // with an identical state curve). Partitions are derived from the
-    // bytes one micro-batch ingests — input size div 256 KiB, clamped
-    // to [4, cores] — so small micro-batches stop paying 32 fixed
-    // commits while corpus-scale batches keep full parallelism.
-    // SPARK_GRAFT_STREAM_PARTS overrides the derivation (probe knob).
-    def streamParts(dir: String, mfpt: Option[Int]): Int =
-      sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-        // enumerate the SAME events.parquet* glob the stream source
-        // reads (a tier copy may ship events.parquet_2, …), and guard
-        // listFiles' null (unreadable dir) — fall back to the floor and
-        // let the downstream schema read raise the friendly error
-        val parent = new java.io.File(dir)
-        val files = Option(parent.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith("events.parquet"))
-          .flatMap { f =>
-            if (f.isFile) Array(f)
-            else Option(f.listFiles()).getOrElse(Array.empty)
-              .filter(x => x.isFile && x.getName.endsWith(".parquet"))
-          }
-        if (files.isEmpty) 4
-        else {
-          val total = files.map(_.length).sum
-          // AvailableNow with maxFilesPerTrigger=n ingests n files/batch
-          val perBatch = mfpt.filter(_ > 0).map { n =>
-            total / math.max(1L, (files.length.toLong + n - 1) / n)
-          }.getOrElse(total)
-          math.max(4L, math.min(
-            spark.sparkContext.defaultParallelism.toLong,
-            perBatch / (256L * 1024L))).toInt
-        }
-      }
     def suite(dir: String, mfpt: Option[Int], suffix: String) = {
       spark.conf.set("spark.sql.shuffle.partitions",
-        streamParts(dir, mfpt).toString)
+        streamParts(dir, mfpt, spark.sparkContext.defaultParallelism).toString)
       val pipeline = streaming.CdcStream.pipeline(spark, dir,
         maxFilesPerTrigger = mfpt)
       val schema = spark.read.parquet(s"$dir/events.parquet").schema

@@ -137,8 +137,8 @@ object OperatorLifecycle {
   def moveTrace(moves: DataFrame): DataFrame =
     moves
       .withColumn("arm",
-        pmod(row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("grp"), col("span"))).cast("long") - 1L, lit(6L)))
+        pmod(row_number().over(graft.util.Windows.bounded(col("grp"), col("span")))
+          .cast("long") - 1L, lit(6L)))
       .select(col("grp"), col("span"), col("from_node").as("origin"),
         col("to_node").as("dest0"), col("arm"),
         explode(expr(s"sequence(0L, ${MaxTick}L)")).as("tick"))

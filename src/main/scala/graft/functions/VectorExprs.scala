@@ -2,11 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{array, call_function, col, lit}
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst vector expressions for the similarity operators.
   *
@@ -241,12 +243,33 @@ case class QuantizeVector(first: Expression, second: Expression,
   * PRECONDITIONS: both arrays sorted ascending in UTF8String order
   * (`sort_array` default) with no null elements. Duplicates are
   * skipped, so the count equals `size(array_intersect(a, b))` (which
-  * dedupes) even on non-distinct inputs. */
+  * dedupes) even on non-distinct inputs. The merge compares raw bytes,
+  * so analysis rejects any element collation but UTF8_BINARY (a
+  * case- or trim-insensitive collation would miscount), and a null
+  * element fails the task with an IllegalArgumentException. */
 case class SortedIntersectSize(left: Expression, right: Expression)
   extends BinaryExpression {
 
   override def dataType: DataType = org.apache.spark.sql.types.IntegerType
   override def prettyName: String = "sorted_intersect_size"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    children.map(_.dataType).find {
+      case ArrayType(st: StringType, _) => st != StringType // the default is UTF8_BINARY
+      case _ => true
+    } match {
+      case Some(t) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName needs two array<string> arguments with UTF8_BINARY " +
+          s"collation (it merges by raw bytes), got ${t.catalogString}")
+      case None => TypeCheckResult.TypeCheckSuccess
+    }
+
+  private def at(a: ArrayData, i: Int): UTF8String = {
+    val s = a.getUTF8String(i)
+    if (s == null) throw new IllegalArgumentException(
+      s"$prettyName: array element $i is null (the arrays must hold no nulls)")
+    s
+  }
 
   override def nullSafeEval(a: Any, b: Any): Any = compute(a, b)
 
@@ -264,17 +287,17 @@ case class SortedIntersectSize(left: Expression, right: Expression)
     // testing) — one System.getenv + String.encode per comparison,
     // caught live in the r16 thread dumps.
     while (i < n && j < m) {
-      val xi = x.getUTF8String(i)
-      val c = xi.binaryCompare(y.getUTF8String(j))
+      val xi = at(x, i)
+      val c = xi.binaryCompare(at(y, j))
       if (c < 0) i += 1
       else if (c > 0) j += 1
       else {
         cnt += 1
         // skip duplicate runs on both sides so the count is DISTINCT
         i += 1
-        while (i < n && x.getUTF8String(i).binaryCompare(xi) == 0) i += 1
+        while (i < n && at(x, i).binaryCompare(xi) == 0) i += 1
         j += 1
-        while (j < m && y.getUTF8String(j).binaryCompare(xi) == 0) j += 1
+        while (j < m && at(y, j).binaryCompare(xi) == 0) j += 1
       }
     }
     cnt

@@ -50,7 +50,10 @@ object Corpus {
     * `GraftSession.releaseCaches` drops the memo. */
   private val repetitionMemo =
     scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private[graft] def clearRepetitionMemo(): Unit = repetitionMemo.clear()
+  private[graft] def clearRepetitionMemo(): Unit = repetitionMemo.synchronized {
+    repetitionMemo.values.foreach(graft.util.Checkpoints.drop)
+    repetitionMemo.clear()
+  }
 
   def textRepetition(spark: SparkSession, dir: String): DataFrame =
     repetitionMemo.synchronized {

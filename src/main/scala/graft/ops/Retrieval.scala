@@ -160,7 +160,10 @@ object Retrieval {
     * `GraftSession.releaseCaches` drops the memo. */
   private val winnowMemo =
     scala.collection.concurrent.TrieMap[(SparkSession, String, Int), DataFrame]()
-  private[graft] def clearWinnowMemo(): Unit = winnowMemo.clear()
+  private[graft] def clearWinnowMemo(): Unit = winnowMemo.synchronized {
+    winnowMemo.values.foreach(graft.util.Checkpoints.drop)
+    winnowMemo.clear()
+  }
 
   private[graft] def winnowHashesCached(spark: SparkSession, dir: String,
                                         win: Int): DataFrame =

@@ -527,7 +527,16 @@ object Similarity {
     * orphaning checkpoint-pinned frames). */
   private val ivfMemo = scala.collection.concurrent.TrieMap[
     (SparkSession, String, Int, Int, Int, Int), (DataFrame, DataFrame, Long)]()
-  private[graft] def clearIvfMemo(): Unit = { ivfMemo.clear(); pqMemo.clear() }
+  private[graft] def clearIvfMemo(): Unit = {
+    ivfMemo.synchronized {
+      ivfMemo.values.flatMap(e => Seq(e._1, e._2)).foreach(graft.util.Checkpoints.drop)
+      ivfMemo.clear()
+    }
+    pqMemo.synchronized {
+      pqMemo.values.flatMap(e => Seq(e._1, e._2, e._3)).foreach(graft.util.Checkpoints.drop)
+      pqMemo.clear()
+    }
+  }
 
   /** Corpus + trained centroids — the index-build inputs shared by
     * [[annIvf]], [[dedupSemantic]] and the pruneAssign work probe

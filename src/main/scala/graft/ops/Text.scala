@@ -27,11 +27,12 @@ object Text {
     * tokenize would otherwise run on one core, and doc_id pre-aligns
     * the groupBy(doc_id)/window consumers so the WIDE token frame
     * never reshuffles — only the small text rows do.
-    * Bench accounting caveat (declared in OPTIMIZATION_r16.md): under
-    * the per-query-min methodology the one-time tokenize build lands
-    * in whichever pass first touches the cache; consumer cells then
-    * measure post-tokenize work, exactly like the r15 pair/span
-    * ledgers. */
+    * Bench accounting caveat: under graft.Bench's per-query-min
+    * methodology the one-time tokenize build lands in whichever pass
+    * first touches the cache; consumer cells then measure post-tokenize
+    * work, exactly like the pair/span ledgers. The `curation_cold`
+    * workload of perfbench (fresh session, empty caches) times the
+    * build inside every pass instead. */
   def docTokens(spark: SparkSession, dir: String): DataFrame =
     graft.util.Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))

@@ -28,8 +28,8 @@ object GraftSession {
     * warning cannot be silenced at the query level — demote this one
     * logger instead. A future genuinely-unbounded window would be a
     * bug in any case at any log level: PlanQualitySpec's plan pins and
-    * the Windows.bounded discipline (plain `Window.orderBy` is
-    * grep-able) are the real guards. */
+    * the Windows.bounded discipline (SourceLintSpec fails on a plain
+    * `Window.orderBy` anywhere else) are the real guards. */
   private def quietBoundedWindowWarning(): Unit =
     try org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
@@ -45,6 +45,31 @@ object GraftSession {
     quietBoundedWindowWarning()
   }
 
+  /** The session builder every graft entry point uses.
+    *
+    * Shared generated code: every session of one context (each
+    * `newSession()` and each streaming clone) reuses the classes the
+    * first one compiled. Spark's generated-class cache keys on (thread
+    * context classloader, source text), and two defaults make a fresh
+    * session miss it for every class; both are turned off here.
+    *
+    * - `spark.sql.artifact.isolation.enabled=false`: with isolation on,
+    *   every job carries its session's UUID and the executor runs it
+    *   under a per-session classloader, so each `newSession()` recompiles
+    *   (and re-JITs) every stage. Isolation only scopes jars, files and
+    *   archives added to a session; graft adds none (no `addJar`,
+    *   `addArtifact` or `addFile` anywhere), so every session already
+    *   sees the same classes and turning it off changes no result.
+    * - `spark.sql.codegen.useIdInClassName=false`: AQE numbers codegen
+    *   stages in an order that varies between runs, so a byte-identical
+    *   stage arrives as `GeneratedIteratorForCodegenStage<N>` under a new
+    *   N and misses the cache. The id only names the class (it still
+    *   appears in plan strings and in the code's comments); each
+    *   generated class is compiled alone, so a constant name cannot
+    *   clash.
+    *
+    * CodegenReuseSpec pins the effect: a third fresh session compiles
+    * nothing. */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
     quietBoundedWindowWarning()
     SparkSession.builder()
@@ -82,6 +107,10 @@ object GraftSession {
       // would recompile + re-JIT every stage on every revisit. Static
       // conf — must be set before the session exists.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // One compiled-code cache for every session of this context (each
+      // newSession() and each streaming clone) — see the scaladoc above.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       // HotSpot never JIT-compiles a method above 8000 bytecodes
       // (-XX:-DontCompileHugeMethods) while Spark's whole-stage
       // fallback only trips at 65535, so a fused stage landing in

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The cached/checkpointed frames the signature pipelines pin must be
@@ -12,6 +13,35 @@ class CacheHygieneSpec extends AnyFunSuite {
   val dir = "/root/testdata/sf0.001"
 
   private def pinnedRdds: Int = spark.sparkContext.getPersistentRDDs.size
+
+  /** Ids of the checkpointed RDDs behind memo frames. */
+  private def checkpointIds(dfs: Seq[DataFrame]): Set[Int] =
+    dfs.flatMap(_.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }).toSet
+
+  test("each memo clear drops its checkpoint blocks along with the entry") {
+    val memos: Seq[(String, () => Seq[DataFrame], () => Unit)] = Seq(
+      ("winnow", () => Seq(ops.Retrieval.winnowHashesCached(spark, dir, 4)),
+        () => ops.Retrieval.clearWinnowMemo()),
+      ("repetition", () => Seq(ops.Corpus.textRepetition(spark, dir)),
+        () => ops.Corpus.clearRepetitionMemo()),
+      ("ivf", () => { val (c, cent, _) = ops.Similarity.ivfIndexInputs(spark, dir); Seq(c, cent) },
+        () => ops.Similarity.clearIvfMemo()),
+      ("pq", () => { val (c, book, a) = ops.Similarity.pqIndexParts(spark, dir); Seq(c, book, a) },
+        () => ops.Similarity.clearIvfMemo()),
+      ("pairs", () => Seq(ops.Dedup.ngramPairsCached(spark, dir, 0.5)),
+        () => ops.Dedup.clearPairsMemo()),
+      ("spans", () => Seq(ops.Retrieval.substringSpansCached(spark, dir, 8)),
+        () => ops.Retrieval.clearSpansMemo()))
+    for ((name, build, clear) <- memos) {
+      graft.util.GraftSession.releaseCaches(spark)
+      val ids = checkpointIds(build())
+      def pinned = ids.intersect(spark.sparkContext.getPersistentRDDs.keySet)
+      assert(ids.nonEmpty && pinned == ids, s"$name memo should pin its checkpoints")
+      clear()
+      assert(pinned.isEmpty, s"$name clear left pinned RDDs ${pinned.mkString(",")}")
+    }
+    graft.util.GraftSession.releaseCaches(spark)
+  }
 
   test("releaseCaches frees every pinned frame and operators still rerun") {
     graft.util.GraftSession.releaseCaches(spark)

@@ -1140,6 +1140,26 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     }
   }
 
+  test("C73: sorted_intersect_size rejects a non-binary collation and null elements") {
+    val spk = spark
+    import spk.implicits._
+    val df = Seq((Seq("A", "b"), Seq("a", "B"))).toDF("a", "b")
+    // byte order and equality differ under UTF8_LCASE: the merge would
+    // count 0 where the collation says 2, so analysis must refuse it
+    val lcase = (c: String) => sort_array(transform(col(c), x => collate(x, "UTF8_LCASE")))
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(graft.functions.VectorExprs.sortedIntersectSize(lcase("a"), lcase("b"))))
+    assert(err.getMessage.contains("UTF8_BINARY"), err.getMessage)
+    // a null element (sorted first) must not be miscounted or NPE
+    val withNull = Seq((Seq("a", null), Seq("a"))).toDF("a", "b")
+      .select(graft.functions.VectorExprs.sortedIntersectSize(
+        sort_array(col("a")), sort_array(col("b"))))
+    val thrown = intercept[Exception](withNull.collect())
+    val causes = Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[IllegalArgumentException]),
+      causes.map(_.toString).mkString(" <- "))
+  }
+
   test("C73: the truth sample is bounded at every corpus size") {
     val spk = spark
     import spk.implicits._

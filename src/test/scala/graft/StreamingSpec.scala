@@ -20,6 +20,28 @@ class StreamingSpec extends AnyFunSuite {
     q.awaitTermination(120000)
   }
 
+  test("Bench.streamParts sizes from .parquet files only, top level and sliced") {
+    assume(!sys.env.contains("SPARK_GRAFT_STREAM_PARTS"), "override set")
+    val mib = 1024L * 1024L
+    def sized(f: java.io.File, bytes: Long): Unit = {
+      val raf = new java.io.RandomAccessFile(f, "rw")
+      try raf.setLength(bytes) finally raf.close()
+    }
+    val top = java.nio.file.Files.createTempDirectory("parts").toFile
+    sized(new java.io.File(top, "events.parquet"), 2 * mib) // 8 x 256 KiB
+    assert(Bench.streamParts(top.getPath, None, 32) == 8)
+    // a stray temp file next to it is not input and must not count
+    sized(new java.io.File(top, "events.parquet.tmp"), 6 * mib)
+    assert(Bench.streamParts(top.getPath, None, 32) == 8)
+    // the directory branch applies the same rule
+    val sliced = java.nio.file.Files.createTempDirectory("parts").toFile
+    val slices = new java.io.File(sliced, "events.parquet")
+    slices.mkdir()
+    sized(new java.io.File(slices, "part-0.parquet"), 3 * mib)
+    sized(new java.io.File(slices, "part-0.parquet.crc"), 6 * mib)
+    assert(Bench.streamParts(sliced.getPath, None, 32) == 12)
+  }
+
   test("A26: streaming changefeed pipeline matches batch filter+route+encode") {
     val rules = Seq("db0.%", "db1.t1")
     val topicRules = Seq(Seq("db0.%") -> "cdc_{schema}_{table}")
