@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.Portable
 import graft.util.Tables
 
@@ -600,16 +599,17 @@ object Dedup {
     * Persisting BEFORE any filter/explode is load-bearing: the shingle
     * chain is an interpreted higher-order expression, and project-filter
     * collapse would otherwise re-evaluate it once per consumer (the
-    * band join alone has two). The CacheManager dedupes by canonical
-    * plan, so every operator in a session shares one cache entry. */
+    * band join alone has two). Built once per (session, documents
+    * listing) by [[Tables.persisted]], like the
+    * [[Text.docTokens]] frame it reads. */
   private[ops] def gramsCached(spark: SparkSession, dir: String): DataFrame =
-    Text.docTokens(spark, dir)
-      // native shingling (graft.functions.WordNGrams): one JVM loop per
-      // doc instead of interpreted higher-order lambdas; set-identical
-      // to the declarative Text.gramsExpr and the DuckDB oracle
-      .select(col("doc_id"), col("lang"),
-        call_function("graft_word_ngrams", col("toks"), lit(3)).as("grams"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    Tables.persisted(spark, "grams", dir, "documents")(_ =>
+      Text.docTokens(spark, dir)
+        // native shingling (graft.functions.WordNGrams): one JVM loop per
+        // doc instead of interpreted higher-order lambdas; set-identical
+        // to the declarative Text.gramsExpr and the DuckDB oracle
+        .select(col("doc_id"), col("lang"),
+          call_function("graft_word_ngrams", col("toks"), lit(3)).as("grams")))
 
   /** Non-empty gram arrays (cache-backed). */
   private[graft] def gramFrame(spark: SparkSession, dir: String): DataFrame =

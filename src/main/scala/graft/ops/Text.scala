@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Shared text primitives for the LLM-data-pipeline operators.
   * Normalization and tokenization must render identically in Spark and
@@ -16,12 +15,12 @@ object Text {
     * regex+lower+split tokenize over documents.text from scratch
     * (quality bank, model filter, perplexity, tfidf, surprisal,
     * fertility, heavy hitters, …); a production pipeline tokenizes a
-    * corpus snapshot once and every stage reads the token column. Same
-    * discipline as Dedup.gramsCached: `persist` dedupes through the
-    * CacheManager by canonical plan, so every consumer in a session
-    * shares ONE cache entry; the frame is per-session only — rebuilt
-    * from the parquet inputs in every fresh process, released by
-    * [[graft.util.GraftSession.releaseCaches]] (catalog.clearCache).
+    * corpus snapshot once and every stage reads the token column. Built
+    * once per (session, documents listing) by
+    * [[graft.util.Tables.persisted]], so every consumer in a session
+    * shares ONE frame and cache entry; rebuilt from the parquet inputs
+    * in every fresh process, released by
+    * [[graft.util.GraftSession.releaseCaches]].
     * The repartition matters twice (the gramsCached rationale): the
     * documents table is one parquet split locally, so the CPU-heavy
     * tokenize would otherwise run on one core, and doc_id pre-aligns
@@ -34,11 +33,10 @@ object Text {
     * workload of perfbench (fresh session, empty caches) times the
     * build inside every pass instead. */
   def docTokens(spark: SparkSession, dir: String): DataFrame =
-    graft.util.Tables.documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
-        tokens(col("text")).as("toks"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    graft.util.Tables.persisted(spark, "docTokens", dir, "documents")(
+      _.repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
+          tokens(col("text")).as("toks")))
 
   /** Ensure a `toks` column on a documents-shaped frame: pass-through
     * when the frame already carries tokens (the [[docTokens]] cache —

@@ -100,6 +100,9 @@ object GraftSession {
       // 0.43 s warm scan of sf10 lineitem). Single-row-group files
       // (driver SFs, emb/docs/skew tiers) do all work in one split at
       // any setting; 4m just wastes fewer no-op footer parses there.
+      // The engine spreads that work itself: the changelog
+      // (cdc.ChangeEvents.changelog) and the token frame
+      // (ops.Text.docTokens) repartition after their scan.
       .config("spark.sql.files.maxPartitionBytes", "4m")
       // ~100 queries x several codegen stages each far exceeds the
       // default 100-entry generated-class cache: a pass-interleaved
@@ -135,7 +138,7 @@ object GraftSession {
   }
 
   /** Release every frame the engine pinned in this session: the
-    * CacheManager entries (the cross-query gram cache `persist`) and
+    * CacheManager entries (the session frames of `Tables.persisted`) and
     * every checkpointed RDD (the `localCheckpoint` frames the dedup /
     * similarity self-join pipelines materialize). One-shot drivers
     * (Verify, Bench) never need this — executor storage dies with the
@@ -164,9 +167,8 @@ object GraftSession {
     graft.ops.Dedup.clearPairsMemo()
     graft.cdc.Scheduler.clearCensusMemo()
     graft.cdc.ClDims.clear()
-    // Parquet-footer schema memo: stale only if a dataset is
-    // REGENERATED at the same path inside one JVM — exactly the
-    // between-pipelines moment this method exists for.
-    graft.util.Tables.clearSchemaMemo()
+    // The session frames (changelog store, tokens, grams) and the
+    // parquet-footer schema memo.
+    graft.util.Tables.clear()
   }
 }

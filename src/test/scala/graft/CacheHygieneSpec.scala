@@ -193,4 +193,84 @@ class CacheHygieneSpec extends AnyFunSuite {
       cdc.ChangeEvents.changelog(spark, dir)).count() == s1)
     graft.util.GraftSession.releaseCaches(spark)
   }
+
+  private def tempDir(): java.io.File =
+    java.nio.file.Files.createTempDirectory("graft-cache").toFile
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).toSeq.flatten.foreach(deleteTree)
+    f.delete()
+  }
+
+  /** (rows, bit_xor of a row hash) over every column. */
+  private def digest(df: DataFrame): (Long, Long) = {
+    import org.apache.spark.sql.functions._
+    val r = df.select(xxhash64(df.columns.map(col).toSeq: _*).as("h"))
+      .agg(count(lit(1)), bit_xor(col("h"))).collect()(0)
+    (r.getLong(0), r.getLong(1))
+  }
+
+  test("changelog store is one frame per session and listing, and releases") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.storage.StorageLevel.NONE
+    graft.util.GraftSession.releaseCaches(spark)
+    val store = cdc.ChangeEvents.changelog(spark, dir)
+    assert(store.storageLevel == NONE, "a first read must not build the store")
+    assert(cdc.ChangeEvents.changelog(spark, dir) eq store,
+      "repeated calls should return the same frame")
+    assert(store.storageLevel != NONE, "a second read must pin the store")
+    assert(digest(store) ==
+      digest(cdc.ChangeEvents.fromEvents(graft.util.Tables.events(spark, dir))))
+    // every transaction lives in one partition of the store
+    assert(store.select(col("start_ts"), spark_partition_id().as("part"))
+      .groupBy("start_ts").agg(countDistinct("part").as("n"))
+      .filter(col("n") > 1).count() == 0)
+    // the store is the only frame pinned since the release above
+    val ids = spark.sparkContext.getPersistentRDDs.keySet
+    assert(ids.nonEmpty, "the store must be pinned")
+
+    // a part file added under a copied events directory is picked up
+    // without releaseCaches
+    val tmp = tempDir()
+    try {
+      val events = new java.io.File(tmp, "events.parquet")
+      events.mkdir()
+      val src = new java.io.File(s"$dir/events.parquet").toPath
+      java.nio.file.Files.copy(src, new java.io.File(events, "part-0.parquet").toPath)
+      val one = cdc.ChangeEvents.changelog(spark, tmp.getPath)
+      assert(cdc.ChangeEvents.changelog(spark, tmp.getPath) eq one)
+      val n = one.count()
+      java.nio.file.Files.copy(src, new java.io.File(events, "part-1.parquet").toPath)
+      val two = cdc.ChangeEvents.changelog(spark, tmp.getPath)
+      assert(!(two eq one), "a changed listing must rebuild the store")
+      assert(one.storageLevel == NONE, "a changed listing must drop the old store")
+      assert(two.count() == 2 * n)
+      assert(cdc.ChangeEvents.changelog(spark, tmp.getPath) eq two)
+      assert(two.storageLevel != NONE)
+      assert(two.count() == 2 * n)
+    } finally deleteTree(tmp)
+
+    graft.util.GraftSession.releaseCaches(spark)
+    assert(!ids.exists(spark.sparkContext.getPersistentRDDs.contains),
+      "releaseCaches left the store pinned")
+    assert(pinnedRdds == 0, s"release left $pinnedRdds pinned RDDs")
+    assert(!(cdc.ChangeEvents.changelog(spark, dir) eq store),
+      "release must drop the store")
+    graft.util.GraftSession.releaseCaches(spark)
+  }
+
+  test("a table rewritten at the same path is read with its new schema") {
+    import spark.implicits._
+    val tmp = tempDir()
+    try {
+      val path = s"${tmp.getPath}/t.parquet"
+      Seq(1L, 2L).toDF("a").write.parquet(path)
+      assert(graft.util.Tables(spark, tmp.getPath, "t").schema.fieldNames.toSeq == Seq("a"))
+      Seq(("x", 1)).toDF("a", "b").write.mode("overwrite").parquet(path)
+      val t = graft.util.Tables(spark, tmp.getPath, "t")
+      assert(t.schema.map(f => f.name -> f.dataType.typeName) ==
+        Seq("a" -> "string", "b" -> "integer"))
+      assert(t.collect().map(r => (r.getString(0), r.getInt(1))).toSeq == Seq(("x", 1)))
+    } finally deleteTree(tmp)
+  }
 }

@@ -17,14 +17,16 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("ts filter pushes down to the parquet scan") {
-    spark.catalog.clearCache() // other suites may have cached the changelog
+    // other suites may have read the changelog twice, which pins it;
+    // a session's first read plans over the scan
+    graft.util.GraftSession.releaseCaches(spark)
     val p = plan(cdc.Filters.tsFilter(cdc.ChangeEvents.changelog(spark, dir), 100L))
     // the commit_ts predicate is on event_id; pushdown must reach the scan
     assert(p.contains("PushedFilters: [IsNotNull(event_id), GreaterThan(event_id,100)]"), p)
   }
 
   test("column selector prunes the scan schema") {
-    spark.catalog.clearCache()
+    graft.util.GraftSession.releaseCaches(spark)
     val p = plan(cdc.ChangeEvents.changelog(spark, dir)
       .select("schema_name", "table_name", "pk", "commit_ts", "op", "after_value"))
     // props/ts must not be read for this projection
@@ -284,18 +286,38 @@ class PlanQualitySpec extends AnyFunSuite {
     * (Tree collect cannot be used instead: executedPlan is an
     * AdaptiveSparkPlanExec leaf wrapper, and the pre-AQE sparkPlan has
     * not run EnsureRequirements yet, so it carries no exchanges.) */
-  private def paidExchanges(df: org.apache.spark.sql.DataFrame): Int = {
+  private def paidExchanges(df: org.apache.spark.sql.DataFrame): Int =
+    exchangeLines(df)._1.size
+
+  /** Exchange lines of the printed executed plan: (paid per run, inside
+    * a cached relation's one-time build). */
+  private def exchangeLines(df: org.apache.spark.sql.DataFrame): (Seq[String], Seq[String]) = {
     def ind(l: String): Int = math.max(l.indexWhere(_.isLetter), 0)
-    var skip = -1; var n = 0
+    var skip = -1
+    val paid = Seq.newBuilder[String]; val built = Seq.newBuilder[String]
     for (l <- df.queryExecution.executedPlan.toString.linesIterator) {
       val i = ind(l)
       if (skip >= 0 && i <= skip) skip = -1
-      if (skip < 0) {
-        if (l.contains("InMemoryRelation")) skip = i
-        else if (l.contains("Exchange")) n += 1
-      }
+      if (skip < 0 && l.contains("InMemoryRelation")) skip = i
+      else if (l.contains("Exchange")) (if (skip < 0) paid else built) += l.trim
     }
-    n
+    (paid.result(), built.result())
+  }
+
+  /** The changelog store: a second read in the session pins the frame
+    * that every read returns. */
+  private def store: org.apache.spark.sql.DataFrame = {
+    val cl = cdc.ChangeEvents.changelog(spark, dir)
+    assert(cdc.ChangeEvents.changelog(spark, dir) eq cl)
+    cl
+  }
+
+  /** The changelog store's one-time build is its start_ts repartition
+    * and nothing else. */
+  private def assertStoreBuild(df: org.apache.spark.sql.DataFrame): Unit = {
+    val built = exchangeLines(df)._2
+    assert(built.forall(_.contains("Exchange hashpartitioning(start_ts")),
+      s"unexpected exchange in the changelog store build:\n${built.mkString("\n")}")
   }
 
   test("new aggregation ops hold their probed shuffle budgets") {
@@ -360,14 +382,17 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("txn matcher shuffles each leg once on the matcher key, nothing twice") {
-    val cl = cdc.ChangeEvents.changelog(spark, dir)
-    val p = cdc.TxnMatcher.matched(cl).queryExecution.executedPlan.toString
+    val cl = store
+    val m = cdc.TxnMatcher.matched(cl)
+    val p = m.queryExecution.executedPlan.toString
     // every leg (prewrite dedup, rollback anti, commit probe) hashes
     // its own arm-filtered SLICE of the changelog on (table, key,
     // startTs) — total shuffled bytes ~ one pass of the data, and the
     // anti/inner joins must ride the dedup agg's partitioning rather
-    // than re-shuffling it
-    val fresh = "Exchange hashpartitioning".r.findAllIn(p).length
+    // than re-shuffling it. Paid per run: each leg's scan of the
+    // changelog store prints the store's one-time build as well.
+    assertStoreBuild(m)
+    val fresh = exchangeLines(m)._1.count(_.contains("Exchange hashpartitioning"))
     assert(fresh <= 4, s"expected <=4 keyed exchanges (one per input leg), got $fresh:\n$p")
     assert(!p.contains("SortMergeJoin") || fresh <= 4, p)
   }
@@ -379,9 +404,13 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("new wire ops hold their shuffle budgets") {
-    def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-      "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).length
-    val cl = cdc.ChangeEvents.changelog(spark, dir)
+    // paid per run: the printed plan also embeds the changelog store's
+    // one-time start_ts repartition under its InMemoryRelation
+    def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
+      assertStoreBuild(df)
+      paidExchanges(df)
+    }
+    val cl = store
     // the Avro arm emits the same legs as the JSON arm (DML row-local,
     // bootstrap distinct, cadence window, DDL grid, watermark agg) —
     // the wire format must not change the shuffle structure
@@ -424,7 +453,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("dispatchers and codecs add no shuffle beyond the scan") {
-    val cl = cdc.ChangeEvents.changelog(spark, dir)
+    val cl = store
     for ((name, df) <- Seq(
       "dispatch_table" -> cdc.Dispatchers.byTable(cl, 16),
       "canal" -> cdc.Codecs.canalJson(cl),
@@ -440,19 +469,46 @@ class PlanQualitySpec extends AnyFunSuite {
       "data_split" -> ops.Corpus.dataSplit(spark, dir),
       "stratified_sample" -> ops.Curation.stratifiedSample(spark, dir),
       "pii_redact" -> ops.Curation.piiRedact(spark, dir))) {
-      val p = plan(df)
-      assert(!p.contains("Exchange"), s"$name introduces a shuffle:\n$p")
+      // paid per run: the cached changelog store and token frame print
+      // their one-time repartition under an InMemoryRelation
+      assert(paidExchanges(df) == 0,
+        s"$name introduces a shuffle:\n${df.queryExecution.executedPlan}")
     }
+    assertStoreBuild(cl)
+    assert(exchangeLines(cl)._2.nonEmpty, cl.queryExecution.executedPlan.toString)
     // A30: the rule-match + sanitize chain runs once per distinct table
     // (the reference's own per-table topic cache); events pick their
     // topic via a broadcast hash join — a BroadcastExchange of the
     // table dimension is the design, a shuffle of the events is not.
-    val router =
-      plan(cdc.Routing.route(cl, Seq(Seq("db0.%") -> "t_{schema}"), "d"))
+    val routed = cdc.Routing.route(cl, Seq(Seq("db0.%") -> "t_{schema}"), "d")
+    val router = plan(routed)
     assert(router.contains("BroadcastHashJoin"), router)
-    assert(!router.linesIterator.exists(l =>
-      l.contains("Exchange") && !l.contains("BroadcastExchange")),
+    assertStoreBuild(routed)
+    assert(exchangeLines(routed)._1.forall(_.contains("BroadcastExchange")),
       s"topic_router shuffles the event stream:\n$router")
+  }
+
+  test("sinks keyed on start_ts reuse the changelog's partitioning") {
+    // no transaction spans two changelog partitions, so the per-txn
+    // sinks group within a partition. On the first read the changelog's
+    // own repartition is their only exchange; over the store they pay
+    // none. The cached plan reports its partitioning once it is built.
+    val cfg = cdc.Changefeed.Config(tableRules = Seq("db0.%", "db1.t1"), ignoreOps = Seq("D"))
+    def sinks(cl: org.apache.spark.sql.DataFrame) = Seq(
+      "mysql" -> cdc.Changefeed.mysql(cl, cfg),
+      "txn_atomicity" -> cdc.Sinks.txnAtomicity(cdc.Changefeed.filtered(cl, cfg), cfg.maxTxnRow))
+    graft.util.GraftSession.releaseCaches(spark)
+    for ((name, df) <- sinks(cdc.ChangeEvents.changelog(spark, dir))) {
+      val paid = exchangeLines(df)._1
+      assert(paid.size == 1 && paid.head.contains("Exchange hashpartitioning(start_ts"),
+        s"$name on the first read:\n${df.queryExecution.executedPlan}")
+    }
+    val cl = store
+    cl.count()
+    for ((name, df) <- sinks(cl)) {
+      assertStoreBuild(df)
+      assert(paidExchanges(df) == 0, s"$name over the store:\n${df.queryExecution.executedPlan}")
+    }
   }
 
   test("large-message sinks render the canal payload exactly once per row") {
