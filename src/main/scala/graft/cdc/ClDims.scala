@@ -3,38 +3,24 @@ package graft.cdc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Memoized changelog dimension frames.
+/** Changelog dimension frames, kept per (session, changelog plan) by
+  * [[graft.util.Tables.checkpointed]].
   *
   * Every CDC operator grid hangs off one of two tiny aggregations of
   * the changelog: the distinct table universe (≤ tables rows) and the
   * 1-row max commit-ts watermark. Without sharing, each query
   * re-evaluates them per SUBTREE — sink_ddl_routing alone paid four
   * full changelog scans for frames totalling 7 rows (17 s at the sf10
-  * tier for a ~1 M-row output). One localCheckpoint-backed memo keyed
-  * on (session, input plan, kind) — the span-census/winnow/ivf
-  * discipline, released in `GraftSession.releaseCaches` — makes every
-  * grid build O(dimension) after the first scan, within a query and
-  * across the bench.
+  * tier for a ~1 M-row output).
   *
   * Streaming inputs can't checkpoint; they fall through to the
   * uncached build (their micro-batch plans are bounded anyway). */
 object ClDims {
 
-  private val memo = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession,
-     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String),
-    DataFrame]()
-  private[graft] def clear(): Unit = memo.clear()
-
   private def cached(df: DataFrame, kind: String)
                     (build: => DataFrame): DataFrame =
     if (df.isStreaming) build
-    else memo.synchronized {
-      memo.keys.filter(_._1.sparkContext.isStopped).foreach(memo.remove)
-      memo.getOrElseUpdate(
-        (df.sparkSession, df.queryExecution.logical.canonicalized, kind),
-        build.localCheckpoint())
-    }
+    else graft.util.Tables.checkpointed(df, "dims", kind)(build.localCheckpoint())
 
   /** Distinct (schema_name, table_name) universe of a changelog-shaped
     * frame. */
@@ -47,8 +33,7 @@ object ClDims {
     cached(cl, "maxts")(cl.agg(max(col("commit_ts")).as("m")))
 
   /** 1-row (min_ts, max_ts, n) census — the physical-plan chooser's
-    * input (A85's mono/chunked switch). Same memo discipline, so the
-    * scan is paid once per (session, changelog). */
+    * input (A85's mono/chunked switch). */
   def tsCensus(cl: DataFrame): DataFrame =
     cached(cl, "tscensus")(cl.agg(min(col("commit_ts")).as("lo"),
       max(col("commit_ts")).as("hi"), count(lit(1)).as("n")))

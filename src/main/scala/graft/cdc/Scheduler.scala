@@ -88,32 +88,16 @@ object Scheduler {
   private[cdc] val nodesValuesSql: String =
     (0 until NNodes).map(n => s"(CAST($n AS BIGINT))").mkString(", ")
 
-  /** (grp, region_id, span, n_rows) — one row per table×region cell.
-    *
-    * Memoized per (session, changelog plan, nRegions) — the census is
-    * the ONLY full-data pass in the whole scheduler/operator plane
-    * (A79/A80/A92/A94/A109/A110 all funnel through it), it reduces to
-    * a tables×regions dimension frame (~48 rows), and without a
-    * checkpoint every downstream stage re-evaluates the md5-bucketed
-    * scan subtree: A109 composes THREE scheduler outputs and paid the
-    * scan ~20× (20.4 s at the sf10 tier vs 0.8 s for one census pass).
-    * Keyed on the canonicalized logical plan so spec-driven synthetic
-    * changelogs memoize independently; `GraftSession.releaseCaches`
-    * drops the memo (the C18/C30/winnow discipline). */
-  private val censusMemo = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession,
-     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int),
-    DataFrame]()
-  private[graft] def clearCensusMemo(): Unit = censusMemo.clear()
-
-  private[cdc] def spanFrame(cl: DataFrame, nRegions: Int): DataFrame =
-    censusMemo.synchronized {
-      censusMemo.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(censusMemo.remove)
-      censusMemo.getOrElseUpdate(
-        (cl.sparkSession, cl.queryExecution.logical.canonicalized, nRegions),
-        spanFrameUncached(cl, nRegions).localCheckpoint())
-    }
+  /** (grp, region_id, span, n_rows) — one row per table×region cell,
+    * kept per (session, changelog plan, nRegions) by
+    * [[graft.util.Tables.checkpointed]]: A79/A80/A92/A94/A109/A110 all
+    * funnel through this ~48-row census, the only full-data pass of the
+    * scheduler plane, and A109 alone composes three scheduler outputs
+    * (it paid the scan ~20×, 20.4 s at the sf10 tier vs 0.8 s for one
+    * census pass). */
+  private[graft] def spanFrame(cl: DataFrame, nRegions: Int): DataFrame =
+    graft.util.Tables.checkpointed(cl, "census", nRegions)(
+      spanFrameUncached(cl, nRegions).localCheckpoint())
 
   private def spanFrameUncached(cl: DataFrame, nRegions: Int): DataFrame =
     cl.withColumn("region_id",

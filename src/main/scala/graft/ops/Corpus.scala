@@ -43,25 +43,12 @@ object Corpus {
     * raw double fractions hash-flaked on the round-3 driver); docs
     * under 3 tokens carry the -1 sentinel in the gram ratios.
     *
-    * The per-doc profile is memoized per (session, dir) — the C18/C30
-    * discipline: the manifest (C24), the rule bank (C32) and the
-    * funnel (C46) all consume this exact frame, and without the memo
-    * each re-runs the explode → doc-keyed gram aggregation.
-    * `GraftSession.releaseCaches` drops the memo. */
-  private val repetitionMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
-  private[graft] def clearRepetitionMemo(): Unit = repetitionMemo.synchronized {
-    repetitionMemo.values.foreach(graft.util.Checkpoints.drop)
-    repetitionMemo.clear()
-  }
-
+    * Kept per (session, documents) by [[Tables.checkpointed]]: the
+    * manifest (C24), the rule bank (C32) and the funnel (C46) consume
+    * this frame. */
   def textRepetition(spark: SparkSession, dir: String): DataFrame =
-    repetitionMemo.synchronized {
-      repetitionMemo.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(repetitionMemo.remove)
-      repetitionMemo.getOrElseUpdate((spark, dir),
-        buildTextRepetition(spark, dir).localCheckpoint())
-    }
+    Tables.checkpointed(spark, "repetition", dir, "documents", ())(
+      buildTextRepetition(spark, dir).localCheckpoint())
 
   private def buildTextRepetition(spark: SparkSession, dir: String): DataFrame = {
     val toks = Text.docTokens(spark, dir)

@@ -114,36 +114,22 @@ object Curation {
     * component size, and a 0/1 `canonical` flag marking the one row
     * per cluster a pipeline would keep.
     *
-    * The result is memoized per (session, dir, tau): the CC loop runs
-    * eagerly (localCheckpoint per round), so two invocations build
-    * DISTINCT checkpointed plans the CacheManager can't dedupe — and
-    * the manifest (C24) reuses the cluster frame exactly as a real
-    * pipeline does. `GraftSession.releaseCaches` drops the memo. */
-  private val clusterMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, Double), DataFrame]()
-  private[graft] def clearMemo(): Unit = clusterMemo.clear()
-
+    * Kept per (session, documents, tau) by [[Tables.checkpointed]]:
+    * C24, C49 and C78 consume this frame, and the CC loop
+    * checkpoints every round, so two builds are distinct plans the
+    * CacheManager cannot share. */
   def dedupClusters(spark: SparkSession, dir: String, tau: Double = 0.5): DataFrame =
-    // the whole lookup is synchronized: the build is expensive (pair
-    // join + CC rounds) and TrieMap.getOrElseUpdate may run it twice
-    // under concurrency, orphaning a checkpoint-pinned frame; entries
-    // of stopped sessions are evicted here so a session stopped without
-    // GraftSession.releaseCaches cannot be retained process-wide
-    clusterMemo.synchronized {
-      clusterMemo.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(clusterMemo.remove)
-      clusterMemo.getOrElseUpdate((spark, dir, tau), {
-        val assign = connectedComponents(dupEdges(spark, dir, tau))
-          .select(col("u").as("doc_id"), col("v").as("cluster_id"))
-        Tables.documents(spark, dir).select(col("doc_id"))
-          .join(assign, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
-          .withColumn("cluster_size",
-            count(lit(1)).over(Window.partitionBy("cluster_id")))
-          .withColumn("canonical",
-            (col("doc_id") === col("cluster_id")).cast("long"))
-          .localCheckpoint()
-      })
+    Tables.checkpointed(spark, "clusters", dir, "documents", tau) {
+      val assign = connectedComponents(dupEdges(spark, dir, tau))
+        .select(col("u").as("doc_id"), col("v").as("cluster_id"))
+      Tables.documents(spark, dir).select(col("doc_id"))
+        .join(assign, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
+        .withColumn("cluster_size",
+          count(lit(1)).over(Window.partitionBy("cluster_id")))
+        .withColumn("canonical",
+          (col("doc_id") === col("cluster_id")).cast("long"))
+        .localCheckpoint()
     }
 
   def dedupClustersSql(tau: Double = 0.5): String =

@@ -602,7 +602,7 @@ object Dedup {
     * band join alone has two). Built once per (session, documents
     * listing) by [[Tables.persisted]], like the
     * [[Text.docTokens]] frame it reads. */
-  private[ops] def gramsCached(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def gramsCached(spark: SparkSession, dir: String): DataFrame =
     Tables.persisted(spark, "grams", dir, "documents")(_ =>
       Text.docTokens(spark, dir)
         // native shingling (graft.functions.WordNGrams): one JVM loop per
@@ -616,36 +616,17 @@ object Dedup {
     gramsCached(spark, dir).filter(size(col("grams")) > 0)
 
   /** The VERIFIED C4 near-dup pair ledger (doc_a < doc_b, no score
-    * column), memoized per (session, dir, τ) — the dedup graph's fuzzy
-    * edge set that C18's clusters, C71's split-leakage labeling and
-    * C78's chain audit all consume. A real pipeline materializes this
-    * ledger once per corpus snapshot and every downstream stage reads
-    * it (the clusterMemo / gramsCached precedent); before the memo,
-    * each of the three consumers re-ran the full PPJoin candidate
-    * generation + exact verify — three corpus-scale inverted-index
-    * joins per composition instead of one (r15 plan audit:
-    * split_leakage alone carried 25 parquet scans / 75 exchanges,
-    * most of them this subtree). `dedup_ngram_jaccard` itself does NOT
-    * read the memo — the declared query recomputes from the parquet
-    * inputs on every invocation. Released by
-    * [[graft.util.GraftSession.releaseCaches]]. */
-  private val pairsMemo = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, Double), DataFrame]()
-  private[graft] def clearPairsMemo(): Unit = pairsMemo.synchronized {
-    // release the checkpoint blocks WITH the reference (ADVICE r15):
-    // the ledger is corpus-scale, and ContextCleaner GC is not prompt
-    pairsMemo.values.foreach(graft.util.Checkpoints.drop)
-    pairsMemo.clear()
-  }
+    * column), kept per (session, documents, τ) by
+    * [[Tables.checkpointed]]: C18's clusters, C71's split-leakage
+    * labeling and C78's chain audit all consume this edge set, and
+    * each used to re-run the PPJoin candidate generation + exact
+    * verify (r15 plan audit: split_leakage alone carried 25 parquet
+    * scans / 75 exchanges, most of them this subtree).
+    * `dedup_ngram_jaccard` itself recomputes from the parquet inputs. */
   private[graft] def ngramPairsCached(spark: SparkSession, dir: String,
                                       tau: Double): DataFrame =
-    pairsMemo.synchronized {
-      pairsMemo.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(pairsMemo.remove)
-      pairsMemo.getOrElseUpdate((spark, dir, tau),
-        ngramJaccard(spark, dir, tau)
-          .select(col("doc_a"), col("doc_b")).localCheckpoint())
-    }
+    Tables.checkpointed(spark, "pairs", dir, "documents", tau)(
+      ngramJaccard(spark, dir, tau).select(col("doc_a"), col("doc_b")).localCheckpoint())
 
   /** (doc_id, gram) exploded pairs (cache-backed; explode drops empty
     * docs, so no pre-filter needed). */

@@ -153,27 +153,13 @@ object Retrieval {
       .distinct()
   }
 
-  /** The production fingerprint frame, memoized per (session, dir,
-    * win) — the C18/C30 discipline: C39, C42 and the funnel (C46) all
-    * consume this exact frame, and the containment self-join consumes
-    * it TWICE; the eager checkpoint builds it once.
-    * `GraftSession.releaseCaches` drops the memo. */
-  private val winnowMemo =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, Int), DataFrame]()
-  private[graft] def clearWinnowMemo(): Unit = winnowMemo.synchronized {
-    winnowMemo.values.foreach(graft.util.Checkpoints.drop)
-    winnowMemo.clear()
-  }
-
+  /** The production fingerprint frame, kept per (session, documents,
+    * win) by [[Tables.checkpointed]]: C39, C42 and the funnel (C46)
+    * consume this frame, and the containment self-join reads it twice. */
   private[graft] def winnowHashesCached(spark: SparkSession, dir: String,
                                         win: Int): DataFrame =
-    winnowMemo.synchronized {
-      winnowMemo.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(winnowMemo.remove)
-      winnowMemo.getOrElseUpdate((spark, dir, win),
-        winnowHashes(graft.ops.Text.docTokens(spark, dir), win)
-          .localCheckpoint())
-    }
+    Tables.checkpointed(spark, "winnow", dir, "documents", win)(
+      winnowHashes(Text.docTokens(spark, dir), win).localCheckpoint())
 
   /** C39 — decontamination by winnowing-fingerprint overlap: the MOSS
     * guarantee (any shared run of ≥ win+2 tokens shares a fingerprint)
@@ -1196,29 +1182,14 @@ object Retrieval {
                           k: Int = 8): DataFrame =
     dedupSubstringSpansFrom(Text.docTokens(spark, dir), k)
 
-  /** The C59 span LEDGER memoized per (session, dir, k) — consumed by
-    * C68 (char projection) and C69 (cut apply), the two downstream
-    * stages of the same cut pipeline; a production pass materializes
-    * the ledger once and both read it (the clusterMemo /
-    * winnowHashesCached precedent). `dedup_substring_spans` itself
-    * does NOT read the memo — the declared query recomputes from the
-    * parquet inputs on every invocation. Released by
-    * [[graft.util.GraftSession.releaseCaches]]. */
-  private val spansMemo = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, Int), DataFrame]()
-  private[graft] def clearSpansMemo(): Unit = spansMemo.synchronized {
-    // release the checkpoint blocks WITH the reference (ADVICE r15)
-    spansMemo.values.foreach(graft.util.Checkpoints.drop)
-    spansMemo.clear()
-  }
+  /** The C59 span ledger, kept per (session, documents, k) by
+    * [[Tables.checkpointed]]: C68 (char projection) and C69 (cut
+    * apply), the two downstream stages of the cut pipeline, consume it.
+    * `dedup_substring_spans` itself recomputes from the parquet inputs. */
   private[graft] def substringSpansCached(spark: SparkSession, dir: String,
                                           k: Int): DataFrame =
-    spansMemo.synchronized {
-      spansMemo.keys.filter(_._1.sparkContext.isStopped)
-        .foreach(spansMemo.remove)
-      spansMemo.getOrElseUpdate((spark, dir, k),
-        dedupSubstringSpans(spark, dir, k).localCheckpoint())
-    }
+    Tables.checkpointed(spark, "spans", dir, "documents", k)(
+      dedupSubstringSpans(spark, dir, k).localCheckpoint())
 
   /** Positioned 60-bit gram-hash occurrences of a documents frame
     * (shared by C59 and its streaming twin's static-index builder). */

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Tables
+import graft.util.{Checkpoints, Tables}
 
 /** Embedding similarity search: LSH-filtered cosine pairs, brute-force
   * ANN top-k, and multi-probe LSH-bucketed ANN.
@@ -519,37 +519,18 @@ object Similarity {
     (candPairs, fallback)
   }
 
-  /** Memoized trained index per (session, dir, knobs): C6/C13/C25 and
-    * the assign probe all build the SAME corpus + centroids, and a real
-    * pipeline runs several of them per session — train once, reuse.
-    * Same synchronized + evict-stopped-sessions discipline as the C18
-    * cluster memo (getOrElseUpdate may double-build under concurrency,
-    * orphaning checkpoint-pinned frames). */
-  private val ivfMemo = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, Int, Int, Int, Int), (DataFrame, DataFrame, Long)]()
-  private[graft] def clearIvfMemo(): Unit = {
-    ivfMemo.synchronized {
-      ivfMemo.values.flatMap(e => Seq(e._1, e._2)).foreach(graft.util.Checkpoints.drop)
-      ivfMemo.clear()
-    }
-    pqMemo.synchronized {
-      pqMemo.values.flatMap(e => Seq(e._1, e._2, e._3)).foreach(graft.util.Checkpoints.drop)
-      pqMemo.clear()
-    }
-  }
-
-  /** Corpus + trained centroids — the index-build inputs shared by
-    * [[annIvf]], [[dedupSemantic]] and the pruneAssign work probe
-    * ([[graft.IvfAssignProbe]]). Returns (corpus, refined centroids, k). */
+  /** Corpus + trained centroids (corpus, refined centroids, k), kept
+    * per (session, embeddings, knobs) by [[Tables.checkpointed]]:
+    * [[annIvf]], [[dedupSemantic]], [[knnGraph]], [[clusterLabelTfidf]]
+    * and the pruneAssign work probe ([[graft.IvfAssignProbe]]) all read
+    * the same trained index. */
   private[graft] def ivfIndexInputs(spark: SparkSession, dir: String,
                                     kMin: Int = 64, kCap: Int = 4096,
                                     sampleFactor: Int = 64,
                                     lloydRounds: Int = 1): (DataFrame, DataFrame, Long) =
-    ivfMemo.synchronized {
-      ivfMemo.keys.filter(_._1.sparkContext.isStopped).foreach(ivfMemo.remove)
-      ivfMemo.getOrElseUpdate((spark, dir, kMin, kCap, sampleFactor, lloydRounds),
-        buildIvfIndex(spark, dir, kMin, kCap, sampleFactor, lloydRounds))
-    }
+    Tables.checkpointed(spark, "ivf", dir, "embeddings",
+        (kMin, kCap, sampleFactor, lloydRounds))(
+      buildIvfIndex(spark, dir, kMin, kCap, sampleFactor, lloydRounds))
 
   private def buildIvfIndex(spark: SparkSession, dir: String,
                             kMin: Int, kCap: Int, sampleFactor: Int,
@@ -594,8 +575,15 @@ object Similarity {
             col("cnt")).cast("double")): _*).as("cv"))
         .withColumn("cn", sqrt(dot("cv", "cv")))
         .localCheckpoint()
+    // each checkpoint is eager, so a round's input and the training
+    // sample are scratch once the round after them is built
     val refined = (1 to math.max(1, lloydRounds))
-      .foldLeft(seeds.localCheckpoint())((cs, _) => refine(cs))
+      .foldLeft(seeds.localCheckpoint()) { (cs, _) =>
+        val next = refine(cs)
+        Checkpoints.drop(cs)
+        next
+      }
+    Checkpoints.drop(sample)
     (c, refined, k)
   }
 
@@ -855,20 +843,14 @@ object Similarity {
     * rounded at 1e-4 with the cent-index tie-break (portable argmin);
     * the reconstruction error ships as e4-quantized BIGINT so the
     * 8-term sum is order-independent. */
-  /** Trained PQ parts memo — [[pqEncode]] and [[pqAdcTopK]] share one
-    * (corpus, codebook, assignments) build per (session, dir, knobs);
-    * released together with the IVF memo by [[clearIvfMemo]]. */
-  private val pqMemo = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, Int, Int, Int), (DataFrame, DataFrame, DataFrame)]()
-
+  /** The trained PQ parts, kept per (session, embeddings, knobs) by
+    * [[Tables.checkpointed]]: [[pqEncode]] and [[pqAdcTopK]] read the
+    * same (corpus, codebook, assignments). */
   private[graft] def pqIndexParts(spark: SparkSession, dir: String,
                                   subspaces: Int = 8, subK: Int = 16,
                                   sampleFactor: Int = 64): (DataFrame, DataFrame, DataFrame) =
-    pqMemo.synchronized {
-      pqMemo.keys.filter(_._1.sparkContext.isStopped).foreach(pqMemo.remove)
-      pqMemo.getOrElseUpdate((spark, dir, subspaces, subK, sampleFactor),
-        buildPqIndex(spark, dir, subspaces, subK, sampleFactor))
-    }
+    Tables.checkpointed(spark, "pq", dir, "embeddings", (subspaces, subK, sampleFactor))(
+      buildPqIndex(spark, dir, subspaces, subK, sampleFactor))
 
   /** (corpus, refined codebook (sub, cent, cv), assignments
     * (vec_id, sub, cent, rd)) — the trained-PQ state. */
@@ -917,7 +899,9 @@ object Similarity {
         (floorDiv(col(s"s$i") + floorDiv(col("cnt"), lit(2L)), col("cnt"))
           .cast("double") / lit(1024.0))): _*).as("cv"))
       .localCheckpoint()
-    (c, book, assign(subExplode(c), book).localCheckpoint())
+    val assigned = assign(subExplode(c), book).localCheckpoint()
+    Seq(exSample, sample).foreach(Checkpoints.drop)
+    (c, book, assigned)
   }
 
   def pqEncode(spark: SparkSession, dir: String, subspaces: Int = 8,

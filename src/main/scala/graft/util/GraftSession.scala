@@ -137,10 +137,10 @@ object GraftSession {
     s
   }
 
-  /** Release every frame the engine pinned in this session: the
-    * CacheManager entries (the session frames of `Tables.persisted`) and
+  /** Release every frame the engine pinned: the CacheManager entries,
     * every checkpointed RDD (the `localCheckpoint` frames the dedup /
-    * similarity self-join pipelines materialize). One-shot drivers
+    * similarity self-join pipelines materialize) and the session-cache
+    * registry ([[Tables.clear]]). One-shot mains
     * (Verify, Bench) never need this — executor storage dies with the
     * session — but a long-lived session composing many operators
     * should call it between pipelines or executor memory/disk
@@ -156,19 +156,6 @@ object GraftSession {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.valuesIterator
       .foreach(_.unpersist(blocking = false))
-    graft.ops.Curation.clearMemo()
-    // Every memo holding checkpoint-backed frames must drop with the
-    // blocks above, or later lookups serve frames whose blocks are gone
-    // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on first action).
-    graft.ops.Similarity.clearIvfMemo()
-    graft.ops.Corpus.clearRepetitionMemo()
-    graft.ops.Retrieval.clearWinnowMemo()
-    graft.ops.Retrieval.clearSpansMemo()
-    graft.ops.Dedup.clearPairsMemo()
-    graft.cdc.Scheduler.clearCensusMemo()
-    graft.cdc.ClDims.clear()
-    // The session frames (changelog store, tokens, grams) and the
-    // parquet-footer schema memo.
-    graft.util.Tables.clear()
+    Tables.clear()
   }
 }

@@ -3,13 +3,16 @@ package graft.util
 import scala.collection.concurrent.TrieMap
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.{col, unix_micros, lit}
 import org.apache.spark.sql.types.{StructType, TimestampType, TimestampNTZType}
 import org.apache.spark.storage.StorageLevel
 
-/** Loaders for the generated parquet tables (TESTDATA.md), and
-  * the one place the engine pins a frame for a session ([[persisted]]). */
+/** Loaders for the generated parquet tables (TESTDATA.md), and the
+  * engine's one session-cache registry ([[persisted]] and
+  * [[checkpointed]]). */
 object Tables {
   /** A table's data files as (path, length, mtime), sorted; files and
     * directories whose name starts with `_` or `.` are skipped, as
@@ -45,11 +48,7 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    read(spark, path, listing(spark, path))
-  }
-
-  /** The parquet table at `path`, whose data files are `files`. */
-  private def read(spark: SparkSession, path: String, files: Listing): DataFrame = {
+    val files = listing(spark, path)
     val schema = schemaMemo.get(path) match {
       case Some((`files`, s)) => s
       case _ =>
@@ -60,54 +59,118 @@ object Tables {
     spark.read.schema(schema).parquet(path)
   }
 
-  /** A frame derived from one table, kept per (session, kind, dir)
-    * while the table's listing is unchanged and pinned
-    * (MEMORY_AND_DISK) from its `pinAt`-th read in the session on: the
-    * tokenized documents (`Text.docTokens`) and their word grams
+  /** A frame derived from one table, kept in the session-cache
+    * registry per (session, kind, table) and pinned (MEMORY_AND_DISK)
+    * from its `pinAt`-th read in the session on: the tokenized
+    * documents (`Text.docTokens`) and their word grams
     * (`Dedup.gramsCached`) at the first read, the changelog store
     * (`ChangeEvents.changelog`) at the second, so that a one-shot
     * reader is not made to build a store nobody reads again. Every
     * read returns the same frame, and every `persist` of the engine
-    * goes through here (SourceLintSpec).
-    *
-    * A changed listing rebuilds the entry, and first unpersists every
-    * entry over the same table whose listing differs, of any kind and
-    * in any session. That order is load-bearing: the CacheManager
-    * matches a new plan against cached ones by `sameResult`, and
-    * `InMemoryFileIndex.equals` compares root paths only, so a new
-    * frame over changed files would otherwise be served the old
-    * cached rows. Released by [[graft.util.GraftSession.releaseCaches]]. */
+    * goes through here (SourceLintSpec). */
   private[graft] def persisted(spark: SparkSession, kind: String, dir: String,
                                table: String, pinAt: Int = 1)
                               (build: DataFrame => DataFrame): DataFrame =
-    frames.synchronized {
-      frames.keys.filter(_._1.sparkContext.isStopped).foreach(frames.remove)
-      val path = s"$dir/$table.parquet"
-      val files = listing(spark, path)
-      for ((k, e) <- frames if k._3 == dir && e.table == table && e.files != files) {
-        e.frame.unpersist(blocking = false)
-        frames.remove(k)
-      }
-      val e = frames.getOrElseUpdate((spark, kind, dir),
-        new Entry(table, files, build(read(spark, path, files))))
+    entries.synchronized {
+      val (root, files) = tableFiles(spark, dir, table)
+      val e = entry((spark, kind, root, ()), root, files, persist = true)(
+        build(apply(spark, dir, table)))
       e.reads += 1
+      val frame = e.value.asInstanceOf[DataFrame]
       // pin unless cached: another session's entry over the same files
       // may already hold it, and a bare catalog.clearCache drops a pin
-      if (e.reads >= pinAt && e.frame.storageLevel == StorageLevel.NONE)
-        e.frame.persist(StorageLevel.MEMORY_AND_DISK)
-      e.frame
+      if (e.reads >= pinAt && frame.storageLevel == StorageLevel.NONE)
+        frame.persist(StorageLevel.MEMORY_AND_DISK)
+      frame
     }
 
-  private final class Entry(val table: String, val files: Listing, val frame: DataFrame) {
-    var reads = 0
+  /** A value of eagerly checkpointed frames (a frame or a tuple holding
+    * frames) derived from one table, kept in the session-cache registry
+    * per (session, kind, table, params): every lookup returns the value
+    * the first one built. */
+  private[graft] def checkpointed[T](spark: SparkSession, kind: String, dir: String,
+                                     table: String, params: Any)(build: => T): T =
+    entries.synchronized {
+      val (root, files) = tableFiles(spark, dir, table)
+      entry((spark, kind, root, params), root, files, persist = false)(build)
+        .value.asInstanceOf[T]
+    }
+
+  /** [[checkpointed]] for a value derived from a frame, kept per
+    * (session, kind, canonical plan of `input`, params); its files are
+    * those of the file indexes in the plan. */
+  private[graft] def checkpointed[T](input: DataFrame, kind: String, params: Any)
+                                    (build: => T): T =
+    entries.synchronized {
+      val plan = input.queryExecution.analyzed
+      val indexes = plan.collect { case r: LogicalRelation => r.relation }.collect {
+        case HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _) => i
+      }
+      val files = indexes.flatMap(_.allFiles())
+        .map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted
+      entry((input.sparkSession, kind, plan.canonicalized, params),
+        indexes.flatMap(_.rootPaths).map(_.toString).sorted.mkString(","), files,
+        persist = false)(build).value.asInstanceOf[T]
+    }
+
+  /** The qualified root of table `name` under `dir`, as a file index
+    * names it, and its listing. */
+  private def tableFiles(spark: SparkSession, dir: String, name: String): (String, Listing) = {
+    val path = new Path(s"$dir/$name.parquet")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs.makeQualified(path).toString, listing(spark, path.toString))
   }
 
-  private val frames = TrieMap[(SparkSession, String, String), Entry]()
+  /** The session-cache registry: one entry per (session, kind, input,
+    * params), built at most once under one reentrant lock (builds nest:
+    * clusters read the pair ledger, which reads the grams, which read
+    * the tokens).
+    *
+    * An entry is stale once the files of its input differ from the
+    * files a new lookup's input reads. Any lookup forgets every stale
+    * entry over the same tables, of any kind and in any session, before
+    * it builds. A stale persisted frame is unpersisted first: the
+    * CacheManager matches plans by `sameResult`, and
+    * `InMemoryFileIndex.equals` compares root paths only, so a new
+    * frame over changed files would otherwise be served the old rows.
+    * A stale checkpointed value is only forgotten, because dropping its
+    * blocks would break frames already handed out; [[clear]] and the
+    * persistent-RDD sweep of `GraftSession.releaseCaches` free them. */
+  private final class Entry(val tables: String, val files: Listing,
+                            val value: Any, val persist: Boolean) {
+    var reads = 0
+    def release(): Unit = {
+      val frames: Seq[Dataset[_]] = value match {
+        case df: Dataset[_] => Seq(df)
+        case p: Product => p.productIterator.collect { case df: Dataset[_] => df }.toSeq
+      }
+      if (persist) frames.foreach(_.unpersist(blocking = false))
+      else frames.foreach(Checkpoints.drop)
+    }
+  }
 
-  /** Forget every [[persisted]] frame and the schemas; the caller has
-    * dropped the cached data. */
-  private[graft] def clear(): Unit = frames.synchronized {
-    frames.clear()
+  private val entries =
+    scala.collection.mutable.HashMap[(SparkSession, String, Any, Any), Entry]()
+
+  private def entry(key: (SparkSession, String, Any, Any), tables: String,
+                    files: Listing, persist: Boolean)(build: => Any): Entry = {
+    for ((k, e) <- entries.toSeq
+         if k._1.sparkContext.isStopped || (e.tables == tables && e.files != files)) {
+      if (e.persist && !k._1.sparkContext.isStopped) e.release()
+      entries.remove(k)
+    }
+    entries.getOrElse(key, {
+      val e = new Entry(tables, files, build, persist)
+      entries(key) = e
+      e
+    })
+  }
+
+  /** Release every registry entry (unpersist, or drop the checkpoint
+    * blocks of every frame it holds) and forget it and the schemas. */
+  private[graft] def clear(): Unit = entries.synchronized {
+    for ((k, e) <- entries if !k._1.sparkContext.isStopped) e.release()
+    entries.clear()
     schemaMemo.clear()
   }
 

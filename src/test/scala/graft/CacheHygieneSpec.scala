@@ -18,28 +18,51 @@ class CacheHygieneSpec extends AnyFunSuite {
   private def checkpointIds(dfs: Seq[DataFrame]): Set[Int] =
     dfs.flatMap(_.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }).toSet
 
+  /** Ids of the RDDs holding the blocks of materialized registry
+    * frames: the checkpointed RDDs and the cached column buffers. */
+  private def blockIds(dfs: Seq[DataFrame]): Set[Int] = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    checkpointIds(dfs) ++ dfs.flatMap(df =>
+      cm.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+        .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id))
+  }
+
   test("each memo clear drops its checkpoint blocks along with the entry") {
-    val memos: Seq[(String, () => Seq[DataFrame], () => Unit)] = Seq(
-      ("winnow", () => Seq(ops.Retrieval.winnowHashesCached(spark, dir, 4)),
-        () => ops.Retrieval.clearWinnowMemo()),
-      ("repetition", () => Seq(ops.Corpus.textRepetition(spark, dir)),
-        () => ops.Corpus.clearRepetitionMemo()),
-      ("ivf", () => { val (c, cent, _) = ops.Similarity.ivfIndexInputs(spark, dir); Seq(c, cent) },
-        () => ops.Similarity.clearIvfMemo()),
-      ("pq", () => { val (c, book, a) = ops.Similarity.pqIndexParts(spark, dir); Seq(c, book, a) },
-        () => ops.Similarity.clearIvfMemo()),
-      ("pairs", () => Seq(ops.Dedup.ngramPairsCached(spark, dir, 0.5)),
-        () => ops.Dedup.clearPairsMemo()),
-      ("spans", () => Seq(ops.Retrieval.substringSpansCached(spark, dir, 8)),
-        () => ops.Retrieval.clearSpansMemo()))
-    for ((name, build, clear) <- memos) {
+    def cl = cdc.ChangeEvents.changelog(spark, dir)
+    val kinds: Seq[(String, () => Seq[DataFrame])] = Seq(
+      "winnow" -> (() => Seq(ops.Retrieval.winnowHashesCached(spark, dir, 4))),
+      "repetition" -> (() => Seq(ops.Corpus.textRepetition(spark, dir))),
+      "ivf" -> (() => { val (c, cent, _) = ops.Similarity.ivfIndexInputs(spark, dir); Seq(c, cent) }),
+      "pq" -> (() => { val (c, book, a) = ops.Similarity.pqIndexParts(spark, dir); Seq(c, book, a) }),
+      "pairs" -> (() => Seq(ops.Dedup.ngramPairsCached(spark, dir, 0.5))),
+      "spans" -> (() => Seq(ops.Retrieval.substringSpansCached(spark, dir, 8))),
+      "clusters" -> (() => Seq(ops.Curation.dedupClusters(spark, dir))),
+      "census" -> (() => Seq(cdc.Scheduler.spanFrame(cl, cdc.Scheduler.NRegions))),
+      "dims" -> (() => Seq(cdc.ClDims.tables(cl), cdc.ClDims.maxTs(cl), cdc.ClDims.tsCensus(cl))),
+      "tokens" -> (() => Seq(ops.Text.docTokens(spark, dir))),
+      "grams" -> (() => Seq(ops.Dedup.gramsCached(spark, dir))),
+      "changelog" -> (() => { cl; Seq(cl) })) // pinned at its second read
+    for ((name, build) <- kinds) {
       graft.util.GraftSession.releaseCaches(spark)
-      val ids = checkpointIds(build())
+      val frames = build()
+      frames.foreach(_.count())
+      val ids = blockIds(frames)
       def pinned = ids.intersect(spark.sparkContext.getPersistentRDDs.keySet)
-      assert(ids.nonEmpty && pinned == ids, s"$name memo should pin its checkpoints")
-      clear()
+      assert(ids.nonEmpty && pinned == ids, s"$name entry should pin its blocks")
+      graft.util.Tables.clear()
       assert(pinned.isEmpty, s"$name clear left pinned RDDs ${pinned.mkString(",")}")
     }
+    graft.util.GraftSession.releaseCaches(spark)
+  }
+
+  test("ivf and pq builds leave only their returned frames pinned") {
+    graft.util.GraftSession.releaseCaches(spark)
+    assert(pinnedRdds == 0, "the check must start from a clean slate")
+    val (c, cent, _) = ops.Similarity.ivfIndexInputs(spark, dir)
+    val (pc, book, assigned) = ops.Similarity.pqIndexParts(spark, dir)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet ==
+      checkpointIds(Seq(c, cent, pc, book, assigned)))
     graft.util.GraftSession.releaseCaches(spark)
   }
 
@@ -257,6 +280,68 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(!(cdc.ChangeEvents.changelog(spark, dir) eq store),
       "release must drop the store")
     graft.util.GraftSession.releaseCaches(spark)
+  }
+
+  /** Copy `table` of the test data into `into` as one part file and
+    * return the part file's path. */
+  private def copyPart(table: String, into: java.io.File, part: String): java.io.File = {
+    val d = new java.io.File(into, s"$table.parquet")
+    d.mkdirs()
+    val f = new java.io.File(d, part)
+    java.nio.file.Files.copy(new java.io.File(s"$dir/$table.parquet").toPath, f.toPath)
+    f
+  }
+
+  /** Write `df` as one more part file `part` of the table at `table`. */
+  private def addPart(df: DataFrame, table: java.io.File, part: String): Unit = {
+    val out = tempDir()
+    try {
+      df.coalesce(1).write.mode("overwrite").parquet(s"${out.getPath}/p")
+      val f = new java.io.File(out, "p").listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(f.toPath, new java.io.File(table, part).toPath)
+    } finally deleteTree(out)
+  }
+
+  test("a changelog dimension follows a part file added under its events directory") {
+    import org.apache.spark.sql.functions._
+    val tmp = tempDir()
+    try {
+      val first = copyPart("events", tmp, "part-0.parquet")
+      val one = cdc.ChangeEvents.changelog(spark, tmp.getPath)
+      assert(cdc.ClDims.maxTs(one).head().getLong(0) ==
+        one.agg(max(col("commit_ts"))).head().getLong(0))
+      addPart(spark.read.parquet(first.getPath)
+        .withColumn("event_id", col("event_id") + lit(1000000000L)),
+        first.getParentFile, "part-1.parquet")
+      val two = cdc.ChangeEvents.changelog(spark, tmp.getPath)
+      val newMax = two.agg(max(col("commit_ts"))).head().getLong(0)
+      assert(newMax >= 1000000000L)
+      val dim = cdc.ClDims.maxTs(two)
+      assert(dim.head().getLong(0) == newMax)
+      // the dimension and the store it reads agree on the listing, so
+      // neither lookup drops the other's entry
+      assert(cdc.ChangeEvents.changelog(spark, tmp.getPath) eq two)
+      assert(cdc.ClDims.maxTs(two) eq dim)
+    } finally deleteTree(tmp)
+  }
+
+  test("a repetition profile follows a part file added under its documents directory") {
+    import org.apache.spark.sql.functions._
+    val tmp = tempDir()
+    try {
+      val first = copyPart("documents", tmp, "part-0.parquet")
+      val n = ops.Corpus.textRepetition(spark, tmp.getPath).count()
+      assert(n == ops.Text.docTokens(spark, tmp.getPath).count())
+      addPart(spark.read.parquet(first.getPath)
+        .withColumn("doc_id", col("doc_id") + lit(1000000000L)),
+        first.getParentFile, "part-1.parquet")
+      val profile = ops.Corpus.textRepetition(spark, tmp.getPath)
+      val tokens = ops.Text.docTokens(spark, tmp.getPath)
+      assert(tokens.count() == 2 * n)
+      assert(profile.count() == tokens.count())
+      assert(ops.Corpus.textRepetition(spark, tmp.getPath) eq profile)
+      assert(ops.Text.docTokens(spark, tmp.getPath) eq tokens)
+    } finally deleteTree(tmp)
   }
 
   test("a table rewritten at the same path is read with its new schema") {

@@ -44,4 +44,14 @@ class SourceLintSpec extends AnyFunSuite {
     val found = hits("""\.\s*(persist\s*\(|cache\s*\(\s*\))""".r, "util/Tables.scala")
     assert(found.isEmpty, "use graft.util.Tables.persisted for: " + found.mkString(", "))
   }
+
+  /** Every session cache lives in the registry of
+    * [[graft.util.Tables]] (`persisted` and `checkpointed`), which keys
+    * it on the files it read and frees it in `releaseCaches`. A
+    * `TrieMap` anywhere else would be a cache with its own lock,
+    * staleness and release rules. */
+  test("session caches are kept only in the Tables registry") {
+    val found = hits("""\bTrieMap\b""".r, "util/Tables.scala")
+    assert(found.isEmpty, "use graft.util.Tables.checkpointed for: " + found.mkString(", "))
+  }
 }
