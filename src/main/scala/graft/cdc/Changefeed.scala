@@ -80,11 +80,7 @@ object Changefeed {
   def kafka(cl: DataFrame, cfg: Config): DataFrame = {
     val routed = Routing.withTopic(filtered(cl, cfg), cl, cfg.topicRules,
       cfg.defaultTopic)
-    // the debezium value references the pre-rendered arm columns (the
-    // dual-image CSE fix — see Codecs.withDebeziumArms)
-    val base = if (cfg.protocol == Protocol.Debezium)
-      Codecs.withDebeziumArms(routed) else routed
-    base
+    routed
       .select(
         col("commit_ts"),
         col("topic"),

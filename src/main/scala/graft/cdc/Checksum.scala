@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Portable
+import graft.functions.WireRender.fixed4
 
 /** Row-level checksums — the engine's equivalent of TiCDC's integrity
   * checking (reference: pkg/sink/codec/common/verify_checksum.go:36-107
@@ -51,8 +52,7 @@ object Checksum {
     * NULL contributes nothing. */
   private def numB(c: Column): Column =
     when(c.isNull, lit("")).otherwise(concat(lit("D"),
-      octet_length(format_string("%.4f", c)), lit(":"),
-      format_string("%.4f", c)))
+      octet_length(fixed4(c)), lit(":"), fixed4(c)))
   private def numBSql(e: String): String =
     s"""CASE WHEN $e IS NULL THEN '' ELSE CONCAT('D',
        | octet_length(encode(printf('%.4f', $e))), ':', printf('%.4f', $e)) END""".stripMargin
@@ -117,7 +117,7 @@ object Checksum {
       .when(col("op") === "D", lit("DELETE")).otherwise(lit("UPDATE"))
     val vStr = (c: Column) =>
       when(c.isNull, lit("null"))
-        .otherwise(concat(lit("\""), format_string("%.4f", c), lit("\"")))
+        .otherwise(concat(lit("\""), fixed4(c), lit("\"")))
     cl.select(col("commit_ts"), concat(
       lit("{\"cur\":"), current,
       lit(",\"prev\":"), previous,

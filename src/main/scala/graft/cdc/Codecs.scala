@@ -2,30 +2,32 @@ package graft.cdc
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.{WireKernels, WireRender, WireScanExprs}
 
 /** Change-event encoders — the engine's equivalent of TiCDC's sink
   * codecs (reference: pkg/sink/codec/{canal,open,debezium,csv,avro}).
   *
-  * Every codec is a pure row-local string expression built from
-  * `concat`/`format_string`: fully whole-stage-codegen'd, no UDFs, no
-  * shuffle. Doubles render as `%.4f` (identical in JVM and C printf for
-  * non-midpoint doubles), NULL images render as the JSON literal
-  * `null`, and the `props` payload column (already JSON) embeds raw.
-  * Each codec has a character-identical DuckDB SQL rendering for the
-  * oracle.
+  * Every codec is a row-local string expression: no shuffle. The
+  * canal-json, debezium and csv messages are each written by one
+  * native kernel ([[graft.functions.WireKernels]]) and read back by
+  * one single-pass scanner ([[graft.functions.CanalScan]],
+  * [[graft.functions.DebeziumScan]], [[graft.functions.CsvScan]]); the
+  * other codecs are `concat` trees whose numbers and TypedImage arms
+  * come from the same native functions. Doubles render as `%.4f`
+  * ([[graft.functions.Num4]], identical to Spark's `format_string` and
+  * to C printf for non-midpoint doubles), NULL images render as the
+  * JSON literal `null`, and the `props` payload column (already JSON)
+  * embeds raw. Each codec has a character-identical DuckDB SQL
+  * rendering for the oracle.
   */
 object Codecs {
 
   /** %.4f or the JSON literal null. */
   private[cdc] def fmt(c: Column): Column =
-    when(c.isNull, lit("null")).otherwise(format_string("%.4f", c))
+    coalesce(WireRender.fixed4(c), lit("null"))
 
   private[cdc] def fmtSql(e: String): String =
     s"CASE WHEN $e IS NULL THEN 'null' ELSE printf('%.4f', $e) END"
-
-  private val opWord: Column =
-    when(col("op") === "I", lit("INSERT"))
-      .when(col("op") === "D", lit("DELETE")).otherwise(lit("UPDATE"))
 
   private val opWordSql =
     "CASE op WHEN 'I' THEN 'INSERT' WHEN 'D' THEN 'DELETE' ELSE 'UPDATE' END"
@@ -45,64 +47,8 @@ object Codecs {
   def canalJson(cl: DataFrame): DataFrame =
     cl.select(col("commit_ts"), canalJsonValue.as("value"))
 
-  private[cdc] val canalSqlTypeJson: String =
-    "{\"pk\":-5,\"value\":8,\"props\":12,\"c_date\":91,\"c_dt\":93," +
-      "\"c_dec\":3,\"c_enum\":4,\"c_bit\":-7,\"c_set\":-7," +
-      // binary-charset blob -> JavaSQLTypeBLOB (helper.go:51-64); TIME 92;
-      // YEAR is a VARCHAR 12 (helper.go:274-281); the unsigned bigint
-      // value EXCEEDS MaxInt64, so its java type widens to DECIMAL 3
-      // (helper.go:241-255)
-      "\"c_bin\":2004,\"c_time\":92,\"c_year\":12,\"c_ubig\":3," +
-      // the last two dispatch cells (r12): TypeGeometry ->
-      // JavaSQLTypeBINARY -2 (java.go:136-138 — "not supported, should
-      // not hit", but the sqlType mapping is total); TypeNull ->
-      // JavaSQLTypeNULL 0 (java.go:85-86). Both VALUES are always JSON
-      // null: the encoders carry nothing for either type.
-      "\"c_geo\":-2,\"c_null\":0}"
-  private[cdc] val canalMysqlTypeJson: String =
-    "{\"pk\":\"bigint\",\"value\":\"double\",\"props\":\"json\"," +
-      "\"c_date\":\"date\",\"c_dt\":\"datetime\",\"c_dec\":\"decimal\"," +
-      "\"c_enum\":\"enum\",\"c_bit\":\"bit\",\"c_set\":\"set\"," +
-      "\"c_bin\":\"varbinary\",\"c_time\":\"time\",\"c_year\":\"year\"," +
-      "\"c_ubig\":\"bigint unsigned\"," +
-      "\"c_geo\":\"geometry\",\"c_null\":\"null\"}"
-
-  /** Everything of the canal-json DML message except the closing brace
-    * — shared by A19 (plain) and the TiDB-extension envelope (A57). */
-  private[cdc] def canalJsonCore: Column = concat(
-    lit("{\"id\":"), col("commit_ts"),
-    lit(",\"database\":\""), col("schema_name"),
-    lit("\",\"table\":\""), col("table_name"),
-    lit("\",\"pkNames\":[\"pk\"],\"isDdl\":false,\"type\":\""), opWord,
-    lit("\",\"es\":"), col("commit_ts"),
-    lit(",\"ts\":"), col("start_ts"),
-    lit(",\"sqlType\":" + canalSqlTypeJson),
-    lit(",\"mysqlType\":" + canalMysqlTypeJson),
-    lit(",\"data\":[{\"pk\":"), col("pk"),
-    lit(",\"value\":"),
-    fmt(when(col("op") === "D", col("before_value")).otherwise(col("after_value"))),
-    lit(",\"props\":"), col("props"),
-    lit(",\"c_date\":\""), TypedImage.dateStr,
-    lit("\",\"c_dt\":\""), TypedImage.dtStr,
-    lit("\",\"c_dec\":\""), TypedImage.decStr,
-    lit("\",\"c_enum\":\""), TypedImage.enumIdx.cast("string"),
-    // r11 arms, each per its helper.go rendering: bit/set as the uint
-    // value string, binary as the ISO-8859-1(=ASCII here) decode, time
-    // as Duration.String(), year as the int string, unsigned bigint as
-    // FormatUint (all canal data values are JSON strings)
-    lit("\",\"c_bit\":\""), TypedImage.bitVal.cast("string"),
-    lit("\",\"c_set\":\""), TypedImage.setMask.cast("string"),
-    lit("\",\"c_bin\":\""), TypedImage.binStr,
-    lit("\",\"c_time\":\""), TypedImage.timeStr,
-    lit("\",\"c_year\":\""), TypedImage.yearVal.cast("string"),
-    lit("\",\"c_ubig\":\""), TypedImage.ubigStr,
-    // geometry (unsupported by the encoder) and the NULL type carry no
-    // value on any wire: both render literal JSON null
-    lit("\",\"c_geo\":null,\"c_null\":null}],\"old\":"),
-    when(col("op") === "U", concat(lit("[{\"value\":"), fmt(col("before_value")), lit("}]")))
-      .otherwise(lit("null")))
-
-  private[cdc] def canalJsonValue: Column = concat(canalJsonCore, lit("}"))
+  /** The canal-json DML message (A19), written by its native kernel. */
+  private[cdc] def canalJsonValue: Column = WireRender.kernel(WireKernels.Canal)
 
   private[cdc] val canalJsonCoreSql: String =
     s"""CONCAT('{"id":', commit_ts,
@@ -111,8 +57,8 @@ object Codecs {
        |  '","pkNames":["pk"],"isDdl":false,"type":"', $opWordSql,
        |  '","es":', commit_ts,
        |  ',"ts":', start_ts,
-       |  ',"sqlType":$canalSqlTypeJson',
-       |  ',"mysqlType":$canalMysqlTypeJson',
+       |  ',"sqlType":${WireKernels.CanalSqlTypeJson}',
+       |  ',"mysqlType":${WireKernels.CanalMysqlTypeJson}',
        |  ',"data":[{"pk":', pk,
        |  ',"value":', ${fmtSql("CASE WHEN op = 'D' THEN before_value ELSE after_value END")},
        |  ',"props":', props,
@@ -157,8 +103,7 @@ object Codecs {
     * aggregate; one union, no joins. */
   def canalEnvelope(cl: DataFrame): DataFrame = {
     val dml = cl.select(col("commit_ts"), lit("ROW").as("msg_type"),
-      concat(canalJsonCore, lit(",\"_tidb\":{\"commitTs\":"), col("commit_ts"),
-        lit("}}")).as("value"))
+      WireRender.kernel(WireKernels.CanalTidb).as("value"))
     val canalDdlType =
       when(col("ddl_type") === "CREATE", lit("CREATE")).otherwise(lit("ALTER"))
     val ddl = SchemaStore.ddlEvents(cl, Nil)
@@ -303,7 +248,7 @@ object Codecs {
   /** A65 — consumer side of the canal TiDB-extension envelope (A57):
     * the classification every canal consumer runs
     * (canal_json_message.go:126-140 tidbExtension + the decoder's
-    * isDdl/TIDB_WATERMARK routing). One `from_json` parse per message;
+    * isDdl/TIDB_WATERMARK routing). One CanalScan pass per message;
     * WATERMARK messages resolve their ts from `_tidb.watermarkTs`,
     * DDL messages surface the action word + query, ROW messages decode
     * exactly as A42 (DELETE's image rides `data`, UPDATE's old image
@@ -408,22 +353,18 @@ object Codecs {
     * decoded type is upsert|delete — exactly what a consumer applies;
     * the original I/U distinction is not on the wire. */
   def openProtocolDecode(cl: DataFrame): DataFrame = {
-    val kSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "ts BIGINT, scm STRING, tbl STRING")
-    val vSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "u STRUCT<pk: BIGINT, value: DOUBLE>, d STRUCT<pk: BIGINT, value: DOUBLE>")
     def k(p: String): Column = col("k").getField(p)
     def v(p: String): Column = col("v").getField(p)
     openProtocol(cl)
-      .select(from_json(col("key"), kSchema).as("k"),
-        from_json(col("value"), vSchema).as("v"))
+      .select(WireScanExprs.openKeyDecode(col("key")).as("k"),
+        WireScanExprs.openValueDecode(col("value")).as("v"))
       .select(
         k("ts").as("commit_ts"),
         k("scm").as("schema_name"),
         k("tbl").as("table_name"),
-        when(v("d").isNotNull, "delete").otherwise(lit("upsert")).as("msg_type"),
-        coalesce(v("u").getField("pk"), v("d").getField("pk")).as("pk"),
-        coalesce(v("u").getField("value"), v("d").getField("value")).as("value"))
+        when(v("is_delete"), "delete").otherwise(lit("upsert")).as("msg_type"),
+        v("pk").as("pk"),
+        v("value").as("value"))
   }
 
   val openProtocolDecodeSql: String = {
@@ -446,69 +387,12 @@ object Codecs {
     * (:368-391, t.Unix()/86400), DATETIME → int64 epoch millis
     * (:393-421, precision ≤3), DECIMAL → a JSON number (:349-366;
     * fixed-scale rendering — the documented %.4f-family divergence),
-    * ENUM → the element NAME (:311-328, ParseEnumValue). */
-  /** One render per row of every typed arm the debezium images embed.
-    * The op-gated images reference each arm TWICE (before + after) and
-    * a conditional concat defeats subexpression elimination, so
-    * inlining the arms evaluated every render twice per row — measured
-    * 2.9 → 29 s at sf10 when the r11 arms landed. The aliases are
-    * multiply-referenced and non-cheap, so CollapseProject keeps this
-    * projection its own codegen stage and each arm renders once. */
-  private[cdc] val debeziumArmCols: Seq[Column] = Seq(
-    // numeric arms pre-render to STRINGS here: the value concat then
-    // touches pure column refs, keeping the consuming stage's ONE
-    // whole-stage method under HotSpot's 8000-bytecode JIT ceiling
-    // (the changefeed stage — join + arms + envelope + hash — crossed
-    // it when the r11 arms landed and ran interpreted: 12.4 s at sf10)
-    TypedImage.dateDays.cast("string").as("_dbz_date"),
-    (TypedImage.dtSec * 1000L).cast("string").as("_dbz_dtms"),
-    TypedImage.decStr.as("_dbz_dec"),
-    TypedImage.enumName.as("_dbz_enum"),
-    TypedImage.bitB64.as("_dbz_bit"),
-    TypedImage.setName.as("_dbz_set"),
-    TypedImage.binB64.as("_dbz_bin"),
-    TypedImage.timeMicros.cast("string").as("_dbz_time"),
-    TypedImage.yearVal.cast("string").as("_dbz_year"),
-    TypedImage.ubigWrapped.cast("string").as("_dbz_ubig"),
-    TypedImage.decPreciseB64.as("_dbz_decp"))
-  private[cdc] def withDebeziumArms(cl: DataFrame): DataFrame =
-    cl.select(col("*") +: debeziumArmCols: _*)
-
-  /** Requires the [[withDebeziumArms]] columns on the input frame. */
-  private[cdc] def debeziumValue: Column = {
-    def image(v: Column): Column =
-      when(v.isNull, lit("null"))
-        .otherwise(concat(lit("{\"pk\":"), col("pk"), lit(",\"value\":"), fmt(v),
-          lit(",\"c_date\":"), col("_dbz_date"),
-          lit(",\"c_dt\":"), col("_dbz_dtms"),
-          lit(",\"c_dec\":"), col("_dbz_dec"),
-          lit(",\"c_enum\":\""), col("_dbz_enum"),
-          // r11 arms per writeDebeziumFieldValue: BIT(8) base64 LE
-          // bytes (:274-291), SET name CSV (:330-347), binary base64
-          // (:303-305), TIME micros int64 (:467-487), YEAR int32,
-          // unsigned BIGINT reinterpreted int64 (:489-503 — wraps),
-          // plus the upstream precise-decimal wire (Connect Decimal:
-          // base64 big-endian unscaled bytes; scale in the schema)
-          lit("\",\"c_bit\":\""), col("_dbz_bit"),
-          lit("\",\"c_set\":\""), col("_dbz_set"),
-          lit("\",\"c_bin\":\""), col("_dbz_bin"),
-          lit("\",\"c_time\":"), col("_dbz_time"),
-          lit(",\"c_year\":"), col("_dbz_year"),
-          lit(",\"c_ubig\":"), col("_dbz_ubig"),
-          lit(",\"c_dec_prec\":\""), col("_dbz_decp"),
-          lit("\"}")))
-    concat(
-      lit("{\"before\":"), image(col("before_value")),
-      lit(",\"after\":"), image(col("after_value")),
-      lit(",\"source\":{\"db\":\""), col("schema_name"),
-      lit("\",\"table\":\""), col("table_name"),
-      lit("\"},\"op\":\""),
-      when(col("op") === "I", lit("c")).when(col("op") === "D", lit("d")).otherwise(lit("u")),
-      lit("\",\"ts_ms\":"), col("commit_ts"), lit("}"))
-  }
+    * ENUM → the element NAME (:311-328, ParseEnumValue). Written by
+    * its native kernel; each arm renders once per image. */
+  private[cdc] def debeziumValue: Column = WireRender.kernel(WireKernels.Debezium)
 
   def debezium(cl: DataFrame): DataFrame =
-    withDebeziumArms(cl).select(col("commit_ts"), debeziumValue.as("value"))
+    cl.select(col("commit_ts"), debeziumValue.as("value"))
 
   private[cdc] val debeziumValueSql: String = {
     def imageSql(v: String) =
@@ -538,47 +422,20 @@ object Codecs {
 
   /** A44 — debezium DECODE: the envelope is fully invertible
     * (op c|u|d ↔ I|U|D, both images on the wire), so the decoded frame
-    * reproduces the changelog at codec precision — spec-asserted. */
+    * reproduces the changelog at codec precision — spec-asserted. One
+    * native [[graft.functions.DebeziumScan]] pass per message decodes
+    * the typed arms back to canonical integers and names (the
+    * consumer-side inverse of each writeDebeziumFieldValue conversion:
+    * base64 wires back to their integer or byte truth, the wrapped
+    * unsigned bigint stays the int64 the wire carries). */
   def debeziumDecode(cl: DataFrame): DataFrame = {
-    val img = "STRUCT<pk: BIGINT, value: DOUBLE, c_date: BIGINT, " +
-      "c_dt: BIGINT, c_dec: DECIMAL(20,4), c_enum: STRING, " +
-      "c_bit: STRING, c_set: STRING, c_bin: STRING, c_time: BIGINT, " +
-      "c_year: BIGINT, c_ubig: BIGINT, c_dec_prec: STRING>"
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      s"before $img, after $img, " +
-        "source STRUCT<db: STRING, `table`: STRING>, " +
-        "op STRING, ts_ms BIGINT")
     def m(p: String): Column = col("m").getField(p)
-    def img0(f: String): Column =
-      coalesce(m("after").getField(f), m("before").getField(f))
-    debezium(cl).select(from_json(col("value"), schema).as("m")).select(
-      m("ts_ms").as("commit_ts"),
-      m("source").getField("db").as("schema_name"),
-      m("source").getField("table").as("table_name"),
-      when(m("op") === "c", "I").when(m("op") === "d", "D")
-        .otherwise(lit("U")).as("op"),
-      coalesce(m("after").getField("pk"), m("before").getField("pk")).as("pk"),
-      m("before").getField("value").as("before_value"),
-      m("after").getField("value").as("after_value"),
-      // typed arms back to canonical integers/names (the consumer-side
-      // inverse of each writeDebeziumFieldValue conversion)
-      img0("c_date").as("c_date_days"),
-      img0("c_dt").as("c_dt_ms"),
-      (img0("c_dec") * 10000).cast("long").as("c_dec_e4"),
-      img0("c_enum").as("c_enum_name"),
-      // r11 arms: base64 wires decode back to their integer/byte truth
-      // (conv(hex(unbase64)) re-reads big-endian bytes as the unscaled
-      // value — the consumer's BigInteger(bytes) for Connect Decimal);
-      // numbers pass through; the wrapped unsigned bigint stays the
-      // int64 reinterpretation the wire actually carries
-      conv(hex(unbase64(img0("c_bit"))), 16, 10).cast("long").as("c_bit_val"),
-      img0("c_set").as("c_set_name"),
-      unbase64(img0("c_bin")).cast("string").as("c_bin_str"),
-      img0("c_time").as("c_time_us"),
-      img0("c_year").as("c_year_val"),
-      img0("c_ubig").as("c_ubig_wrapped"),
-      conv(hex(unbase64(img0("c_dec_prec"))), 16, 10).cast("long")
-        .as("c_dec_prec_e4"))
+    debezium(cl).select(WireScanExprs.debeziumDecode(col("value")).as("m")).select(
+      graft.functions.DebeziumScan.Struct.fieldNames.toSeq.map {
+        case "op" => when(m("op") === "c", "I").when(m("op") === "d", "D")
+          .otherwise(lit("U")).as("op")
+        case f => m(f).as(f)
+      }: _*)
   }
 
   val debeziumDecodeSql: String = {
@@ -638,86 +495,14 @@ object Codecs {
   // io.debezium.data.Enum), op, ts_ms, and the event.block transaction
   // struct. Deterministic stand-ins: cluster id literal, both ts_ms
   // fields = commit_ts (the TSO physical-ms and nowFunc clocks).
-  // Row-local codegen concat — zero shuffle at any scale.
+  // Written by its native kernel, row-local — zero shuffle at any scale.
 
-  private val dbzCluster = "graft-cluster"
-  // per-column field schemas in writeDebeziumFieldSchema order/shape
-  // (codec.go:62-253): int64, double, then the TypedImage matrix —
-  // io.debezium.time.Date int32 (:128-135), io.debezium.time.Timestamp
-  // int64 (:137-148), decimal as double (:121-126), io.debezium.data
-  // .Enum string with the allowed parameter (:97-107)
-  private val dbzColFields =
-    """{"type":"int64","optional":false,"field":"pk"},{"type":"double","optional":true,"field":"value"},""" +
-      """{"type":"int32","optional":false,"name":"io.debezium.time.Date","version":1,"field":"c_date"},""" +
-      """{"type":"int64","optional":false,"name":"io.debezium.time.Timestamp","version":1,"field":"c_dt"},""" +
-      """{"type":"double","optional":false,"field":"c_dec"},""" +
-      s"""{"type":"string","optional":false,"name":"io.debezium.data.Enum","version":1,"parameters":{"allowed":"${TypedImage.enumAllowed}"},"field":"c_enum"},""" +
-      // r11 arms: io.debezium.data.Bits with the bit length (:76-87),
-      // EnumSet with allowed (:109-120), binary blob schema stays
-      // "string" (the :89-94 arm does not branch on IsBinary — only
-      // the VALUE base64s; transcribed faithfully), MicroTime int64
-      // (:159-166), io.debezium.time.Year int32 (:234-241), unsigned
-      // bigint int64 (:213), and the upstream Connect Decimal bytes
-      // schema with the scale parameter for the precise wire
-      """{"type":"bytes","optional":false,"name":"io.debezium.data.Bits","version":1,"parameters":{"length":"8"},"field":"c_bit"},""" +
-      s"""{"type":"string","optional":false,"name":"io.debezium.data.EnumSet","version":1,"parameters":{"allowed":"${TypedImage.setAllowed}"},"field":"c_set"},""" +
-      """{"type":"string","optional":false,"field":"c_bin"},""" +
-      """{"type":"int64","optional":false,"name":"io.debezium.time.MicroTime","version":1,"field":"c_time"},""" +
-      """{"type":"int32","optional":false,"name":"io.debezium.time.Year","version":1,"field":"c_year"},""" +
-      """{"type":"int64","optional":false,"field":"c_ubig"},""" +
-      """{"type":"bytes","optional":false,"name":"org.apache.kafka.connect.data.Decimal","version":1,"parameters":{"scale":"4"},"field":"c_dec_prec"}"""
-  private val dbzSourceSchema =
-    """{"type":"struct","fields":[{"type":"string","optional":false,"field":"version"},{"type":"string","optional":false,"field":"connector"},{"type":"string","optional":false,"field":"name"},{"type":"int64","optional":false,"field":"ts_ms"},{"type":"string","optional":true,"name":"io.debezium.data.Enum","version":1,"parameters":{"allowed":"true,last,false,incremental"},"default":"false","field":"snapshot"},{"type":"string","optional":false,"field":"db"},{"type":"string","optional":true,"field":"sequence"},{"type":"string","optional":true,"field":"table"},{"type":"int64","optional":false,"field":"server_id"},{"type":"string","optional":true,"field":"gtid"},{"type":"string","optional":false,"field":"file"},{"type":"int64","optional":false,"field":"pos"},{"type":"int32","optional":false,"field":"row"},{"type":"int64","optional":true,"field":"thread"},{"type":"string","optional":true,"field":"query"}],"optional":false,"name":"io.debezium.connector.mysql.Source","field":"source"}"""
-  private val dbzTailSchema =
-    """{"type":"string","optional":false,"field":"op"},{"type":"int64","optional":true,"field":"ts_ms"},{"type":"struct","fields":[{"type":"string","optional":false,"field":"id"},{"type":"int64","optional":false,"field":"total_order"},{"type":"int64","optional":false,"field":"data_collection_order"}],"optional":true,"name":"event.block","version":1,"field":"transaction"}"""
 
-  private[cdc] def debeziumEnvelopeValue: Column = {
-    def image(v: Column): Column =
-      concat(lit("{\"pk\":"), col("pk"), lit(",\"value\":"),
-        when(v.isNull, lit("null")).otherwise(fmt(v)),
-        lit(",\"c_date\":"), col("_dbz_date"),
-        lit(",\"c_dt\":"), col("_dbz_dtms"),
-        lit(",\"c_dec\":"), col("_dbz_dec"),
-        lit(",\"c_enum\":\""), col("_dbz_enum"),
-        lit("\",\"c_bit\":\""), col("_dbz_bit"),
-        lit("\",\"c_set\":\""), col("_dbz_set"),
-        lit("\",\"c_bin\":\""), col("_dbz_bin"),
-        lit("\",\"c_time\":"), col("_dbz_time"),
-        lit(",\"c_year\":"), col("_dbz_year"),
-        lit(",\"c_ubig\":"), col("_dbz_ubig"),
-        lit(",\"c_dec_prec\":\""), col("_dbz_decp"),
-        lit("\"}"))
-    def valueStruct(f: String): Column = concat(
-      lit(s"""{"type":"struct","optional":true,"name":"$dbzCluster."""),
-      col("schema_name"), lit("."), col("table_name"),
-      lit(s""".Value","field":"$f","fields":[$dbzColFields]}"""))
-    val source = concat(
-      lit(s"""{"payload":{"source":{"version":"2.4.0.Final","connector":"TiCDC","name":"$dbzCluster","ts_ms":"""),
-      col("commit_ts"),
-      lit(""","snapshot":"false","db":""""), col("schema_name"),
-      lit("""","table":""""), col("table_name"),
-      lit("""","server_id":0,"gtid":null,"file":"","pos":0,"row":0,"thread":0,"query":null,"commit_ts":"""),
-      col("commit_ts"), lit(s""","cluster_id":"$dbzCluster"},"ts_ms":"""),
-      col("commit_ts"), lit(""","transaction":null,"""))
-    val ops = when(col("op") === "I",
-        concat(lit("\"op\":\"c\",\"before\":null,\"after\":"), image(col("after_value"))))
-      .when(col("op") === "D",
-        concat(lit("\"op\":\"d\",\"after\":null,\"before\":"), image(col("before_value"))))
-      .otherwise(
-        concat(lit("\"op\":\"u\",\"before\":"), image(col("before_value")),
-          lit(",\"after\":"), image(col("after_value"))))
-    val schemaBlock = concat(
-      lit(s"""},"schema":{"type":"struct","optional":false,"name":"$dbzCluster."""),
-      col("schema_name"), lit("."), col("table_name"),
-      lit(""".Envelope","version":1,"fields":["""),
-      valueStruct("before"), lit(","), valueStruct("after"), lit(","),
-      lit(dbzSourceSchema), lit(","), lit(dbzTailSchema), lit("]}}"))
-    concat(source, ops, schemaBlock)
-  }
+  private[cdc] def debeziumEnvelopeValue: Column =
+    WireRender.kernel(WireKernels.DebeziumEnvelope)
 
   def debeziumEnvelope(cl: DataFrame): DataFrame =
-    withDebeziumArms(cl)
-      .select(col("commit_ts"), debeziumEnvelopeValue.as("value"))
+    cl.select(col("commit_ts"), debeziumEnvelopeValue.as("value"))
 
   val debeziumEnvelopeSql: String = {
     def imageSql(v: String) =
@@ -735,14 +520,14 @@ object Codecs {
          |  ',"c_ubig":', ${TypedImage.ubigWrappedSql},
          |  ',"c_dec_prec":"', ${TypedImage.decPreciseB64Sql}, '"}')""".stripMargin
     def valueStructSql(f: String) =
-      s"""CONCAT('{"type":"struct","optional":true,"name":"$dbzCluster.', schema_name, '.', table_name, '.Value","field":"$f","fields":[$dbzColFields]}')"""
+      s"""CONCAT('{"type":"struct","optional":true,"name":"${WireKernels.DbzCluster}.', schema_name, '.', table_name, '.Value","field":"$f","fields":[${WireKernels.DbzColFields}]}')"""
     s"""SELECT commit_ts, CONCAT(
-       |  '{"payload":{"source":{"version":"2.4.0.Final","connector":"TiCDC","name":"$dbzCluster","ts_ms":',
+       |  '{"payload":{"source":{"version":"2.4.0.Final","connector":"TiCDC","name":"${WireKernels.DbzCluster}","ts_ms":',
        |  commit_ts,
        |  ',"snapshot":"false","db":"', schema_name,
        |  '","table":"', table_name,
        |  '","server_id":0,"gtid":null,"file":"","pos":0,"row":0,"thread":0,"query":null,"commit_ts":',
-       |  commit_ts, ',"cluster_id":"$dbzCluster"},"ts_ms":', commit_ts,
+       |  commit_ts, ',"cluster_id":"${WireKernels.DbzCluster}"},"ts_ms":', commit_ts,
        |  ',"transaction":null,',
        |  CASE op
        |    WHEN 'I' THEN CONCAT('"op":"c","before":null,"after":', ${imageSql("after_value")})
@@ -750,35 +535,29 @@ object Codecs {
        |    ELSE CONCAT('"op":"u","before":', ${imageSql("before_value")},
        |      ',"after":', ${imageSql("after_value")})
        |  END,
-       |  '},"schema":{"type":"struct","optional":false,"name":"$dbzCluster.',
+       |  '},"schema":{"type":"struct","optional":false,"name":"${WireKernels.DbzCluster}.',
        |  schema_name, '.', table_name, '.Envelope","version":1,"fields":[',
        |  ${valueStructSql("before")}, ',', ${valueStructSql("after")}, ',',
-       |  '$dbzSourceSchema', ',', '$dbzTailSchema', ']}}'
+       |  '${WireKernels.DbzSourceSchema}', ',', '${WireKernels.DbzTailSchema}', ']}}'
        |) AS value
        |FROM changelog""".stripMargin
   }
 
-  /** A71 — consumer side of the full envelope: one JSON parse back to
+  /** A71 — consumer side of the full envelope: one native scan back to
     * the row-event frame, event identity from payload.source (the
     * TiDB commit_ts extension — the consumer's only exact clock),
     * images from the op-gated before/after. decode∘encode = id over
     * the changelog projection (the oracle checks it; A44 covers the
     * simplified form). */
   def debeziumEnvelopeDecode(cl: DataFrame): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "payload STRUCT<source STRUCT<db: STRING, `table`: STRING, commit_ts: BIGINT>, " +
-        "op STRING, before STRUCT<pk: BIGINT, value: DOUBLE>, " +
-        "after STRUCT<pk: BIGINT, value: DOUBLE>>")
-    def m(p: String): Column = col("m").getField("payload").getField(p)
-    debeziumEnvelope(cl).select(from_json(col("value"), schema).as("m")).select(
-      m("source").getField("commit_ts").as("commit_ts"),
-      m("source").getField("db").as("schema_name"),
-      m("source").getField("table").as("table_name"),
-      when(m("op") === "c", "I").when(m("op") === "d", "D")
-        .otherwise(lit("U")).as("op"),
-      coalesce(m("after").getField("pk"), m("before").getField("pk")).as("pk"),
-      m("before").getField("value").as("before_value"),
-      m("after").getField("value").as("after_value"))
+    def m(p: String): Column = col("m").getField(p)
+    debeziumEnvelope(cl)
+      .select(WireScanExprs.debeziumEnvelopeDecode(col("value")).as("m")).select(
+        m("commit_ts").as("commit_ts"), m("schema_name").as("schema_name"),
+        m("table_name").as("table_name"),
+        when(m("op") === "c", "I").when(m("op") === "d", "D").otherwise(lit("U")).as("op"),
+        m("pk").as("pk"), m("before_value").as("before_value"),
+        m("after_value").as("after_value"))
   }
 
   val debeziumEnvelopeDecodeSql: String = {
@@ -797,19 +576,7 @@ object Codecs {
   /** A22 — csv line (reference: pkg/sink/codec/csv/csv_message.go —
     * opType,schema,table,commitTs,cols...). Strings double-quote with
     * `""` escaping; NULL image renders `\N` (MySQL convention). */
-  private[cdc] def csvLine: Column = {
-    def quoted(c: Column): Column =
-      concat(lit("\""), regexp_replace(c, "\"", "\"\""), lit("\""))
-    concat_ws(",",
-      quoted(col("op")), quoted(col("schema_name")), quoted(col("table_name")),
-      col("commit_ts").cast("string"), col("pk").cast("string"),
-      when(col("after_value").isNull, lit("\\N")).otherwise(format_string("%.4f", col("after_value"))),
-      quoted(col("props")),
-      // the TypedImage matrix: date/datetime/enum as quoted strings,
-      // decimal as a bare number — the storage-sink csv convention
-      quoted(TypedImage.dateStr), quoted(TypedImage.dtStr),
-      TypedImage.decStr, quoted(TypedImage.enumName))
-  }
+  private[cdc] def csvLine: Column = WireRender.kernel(WireKernels.Csv)
 
   def csv(cl: DataFrame): DataFrame =
     cl.select(col("commit_ts"), csvLine.as("line"))
@@ -851,39 +618,13 @@ object Codecs {
   /** A51 — csv DECODE (consumer side of A22, reference:
     * pkg/sink/codec/csv/csv_decoder.go): parse the line back to the
     * after-image event frame — quoted fields unescaped (`""` → `"`),
-    * `\N` back to NULL, value at codec (%.4f) precision. ONE `from_csv`
-    * parse per row (the csv analogue of the decoders' single `from_json`
-    * — seven per-field regex extractions re-scanned the line 7×); the
-    * DuckDB oracle parses with the anchored [[csvPat]] regex instead,
-    * so the oracle equality ALSO proves the two parsers agree. */
-  def csvDecode(frame: DataFrame): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "op STRING, schema_name STRING, table_name STRING, " +
-        "commit_ts BIGINT, pk BIGINT, value STRING, props STRING, " +
-        "c_date STRING, c_dt STRING, c_dec STRING, c_enum STRING")
-    // no parser-wide nullValue: that option would turn a QUOTED string
-    // field whose content is literally \N into NULL too (an engine
-    // divergence vs the oracle's per-field regex) — only the value
-    // column's unquoted \N means NULL in this layout, so it is mapped
-    // explicitly after the parse
-    val opts = Map("quote" -> "\"", "escape" -> "\"")
-    frame.select(from_csv(col("line"), schema, opts).as("m"))
-      .select(
-        col("m.commit_ts").as("commit_ts"),
-        col("m.schema_name").as("schema_name"),
-        col("m.table_name").as("table_name"),
-        col("m.op").as("op"),
-        col("m.pk").as("pk"),
-        when(col("m.value") === "\\N", lit(null).cast("double"))
-          .otherwise(col("m.value").cast("double")).as("after_value"),
-        col("m.props").as("props"),
-        // typed arms back to canonical integer forms
-        datediff(to_date(col("m.c_date")),
-          lit(java.sql.Date.valueOf("1970-01-01"))).cast("long").as("c_date_days"),
-        unix_timestamp(to_timestamp(col("m.c_dt"))).as("c_dt_sec"),
-        regexp_replace(col("m.c_dec"), "\\.", "").cast("long").as("c_dec_e4"),
-        col("m.c_enum").as("c_enum_name"))
-  }
+    * `\N` back to NULL, value at codec (%.4f) precision, typed arms to
+    * their canonical integers. ONE native [[graft.functions.CsvScan]]
+    * pass per line; the DuckDB oracle parses with the anchored
+    * [[csvPat]] regex instead, so the oracle equality ALSO proves the
+    * two parsers agree. */
+  def csvDecode(frame: DataFrame): DataFrame =
+    frame.select(WireScanExprs.csvDecode(col("line")).as("m")).select(col("m.*"))
 
   private val csvLineSqlForDecode: String =
     """CONCAT(

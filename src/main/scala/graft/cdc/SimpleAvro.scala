@@ -117,7 +117,7 @@ object SimpleAvro {
   private def valueEntry(v: Column): Column =
     concat(lit(strHexConst("value")),
       when(v.isNull, lit("00"))
-        .otherwise(concat(lit(zvarHexConst(4)), strHex(format_string("%.4f", v)))))
+        .otherwise(concat(lit(zvarHexConst(4)), strHex(graft.functions.WireRender.fixed4(v)))))
 
   private def valueEntrySql(e: String): String =
     s"""CONCAT('${strHexConst("value")}',

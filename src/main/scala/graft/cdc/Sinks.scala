@@ -97,8 +97,6 @@ object Sinks {
     * (A58) large-message arms. Adds payload_bytes / var_bytes /
     * compressed_bytes to the changelog columns. */
   private def compressedSized(cl: DataFrame): DataFrame = {
-    val fmtV = (c: org.apache.spark.sql.Column) =>
-      when(c.isNull, lit("null")).otherwise(format_string("%.4f", c))
     val digits = (c: org.apache.spark.sql.Column) =>
       octet_length(c.cast("string"))
     cl.select(col("schema_name"), col("table_name"), col("commit_ts"),
@@ -117,10 +115,10 @@ object Sinks {
       .withColumn("var_bytes",
         octet_length(col("schema_name")) + octet_length(col("table_name")) +
         digits(col("commit_ts")) + digits(col("start_ts")) + digits(col("pk")) +
-        octet_length(fmtV(when(col("op") === "D", col("before_value"))
+        octet_length(Codecs.fmt(when(col("op") === "D", col("before_value"))
           .otherwise(col("after_value")))) +
         octet_length(col("props")) +
-        when(col("op") === "U", octet_length(fmtV(col("before_value"))))
+        when(col("op") === "U", octet_length(Codecs.fmt(col("before_value"))))
           .otherwise(lit(0)))
       .withColumn("compressed_bytes",
         (lit(18) + Craft.uvarintLen(col("payload_bytes").cast("long")) +

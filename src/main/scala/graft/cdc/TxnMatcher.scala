@@ -3,6 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Portable
+import graft.functions.WireRender.fixed4
 
 /** The logpuller transaction matcher — the engine's equivalent of
   * `logservice/logpuller/txn_matcher.go`: raw TiKV change entries
@@ -54,9 +55,9 @@ object TxnMatcher {
     // value payload: the encoded row, 'del' for deletes (a real delete
     // prewrite is not a heartbeat fake; fakes are the EMPTY payload)
     val payload = when(col("op") === "D", lit("del"))
-      .otherwise(format_string("%.4f", col("after_value")))
+      .otherwise(fixed4(col("after_value")))
     val oldPayload = when(col("before_value").isNull, lit(""))
-      .otherwise(format_string("%.4f", col("before_value")))
+      .otherwise(fixed4(col("before_value")))
     val real = keyed.filter(col("arm") =!= 1L)
       .select(col("schema_name"), col("table_name"), col("pk"), col("start_ts"),
         lit(0L).as("seq"), payload.as("value"), oldPayload.as("old_value"))
@@ -91,9 +92,9 @@ object TxnMatcher {
   private[graft] def rawStream(cl: DataFrame): DataFrame = {
     val keyed = cl.withColumn("arm", arm)
     val payload = when(col("op") === "D", lit("del"))
-      .otherwise(format_string("%.4f", col("after_value")))
+      .otherwise(fixed4(col("after_value")))
     val oldPayload = when(col("before_value").isNull, lit(""))
-      .otherwise(format_string("%.4f", col("before_value")))
+      .otherwise(fixed4(col("before_value")))
     def leg(f: Column, kind: String, seq: Long, v: Column, ov: Column,
             cts: Column, op: Column): DataFrame =
       keyed.filter(f).select(col("schema_name"), col("table_name"), col("pk"),

@@ -1,7 +1,9 @@
 package graft.cdc
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
+import graft.functions.ImageArms
+import graft.functions.WireRender.arm
 
 /** The TiDB column-type matrix for the codecs (round-10 mandate #4,
   * completed round 11 with BIT/SET/BINARY/TIME/YEAR/unsigned-bigint
@@ -31,7 +33,11 @@ import org.apache.spark.sql.functions._
   *
   * plus the existing `props` column formalized as the JSON arm.
   * Every derivation is integer arithmetic + ISO formatting, so the
-  * DuckDB oracle renders the identical characters. Per-codec value
+  * DuckDB oracle renders the identical characters. Each arm has one
+  * implementation, the native function in [[graft.functions.ImageArms]]:
+  * the codec kernels call it directly and the Columns below reach it
+  * through one thin expression each; the `*Sql` twins are the
+  * oracle's. Per-codec value
   * renderings follow the reference dispatch:
   *
   *   | arm      | canal (helper.go)        | debezium (codec.go)        | avro (arvo.go, string mode) |
@@ -49,18 +55,19 @@ import org.apache.spark.sql.functions._
 object TypedImage {
 
   /** ENUM element list (canal/debezium `allowed` parameter order). */
-  val enumElems: Seq[String] = Seq("click", "error", "purchase", "signup", "view")
+  val enumElems: Seq[String] = ImageArms.EnumElems
   val enumAllowed: String = enumElems.mkString(",")
 
   // ----------------------------------------------------------- DATE
   /** epoch-day number (the debezium int32 wire value) */
-  val dateDays: Column = pmod(col("commit_ts"), lit(40000L))
+  private def ts: Column = col("commit_ts")
+  private def pk: Column = col("pk")
+
+  val dateDays: Column = arm(ImageArms.DateDays, ts)
   val dateDaysSql: String = "(commit_ts % 40000)"
 
   /** ISO 'yyyy-MM-dd' (the canal / avro / csv wire value) */
-  val dateStr: Column =
-    date_add(lit(java.sql.Date.valueOf("1970-01-01")), dateDays.cast("int"))
-      .cast("string")
+  val dateStr: Column = arm(ImageArms.DateStr, ts)
   val dateStrSql: String =
     s"CAST(DATE '1970-01-01' + CAST($dateDaysSql AS INTEGER) AS VARCHAR)"
 
@@ -70,41 +77,34 @@ object TypedImage {
     * commit_ts is reduced before the ×37 so the derivation cannot wrap
     * at ANY input (the OverflowGuard discipline — identical values for
     * commit_ts < 1.2e9, i.e. every driver SF) */
-  val dtSec: Column = lit(800000000L) +
-    pmod(pmod(col("commit_ts"), lit(1200000000L)) * 37L, lit(1200000000L))
+  val dtSec: Column = arm(ImageArms.DtSec, ts)
   val dtSecSql: String =
     "(800000000 + ((commit_ts % 1200000000) * 37) % 1200000000)"
 
-  /** 'yyyy-MM-dd HH:mm:ss' (canal / avro / csv wire value; session TZ
-    * is UTC in both engines — GraftSession pins it, DuckDB
-    * make_timestamp is epoch-naive) */
-  val dtStr: Column = date_format(timestamp_seconds(dtSec), "yyyy-MM-dd HH:mm:ss")
+  /** 'yyyy-MM-dd HH:mm:ss' (canal / avro / csv wire value) in UTC, as
+    * DuckDB's epoch-naive make_timestamp renders it */
+  val dtStr: Column = arm(ImageArms.DtStr, ts)
   val dtStrSql: String =
     s"strftime(make_timestamp($dtSecSql * 1000000), '%Y-%m-%d %H:%M:%S')"
 
   // -------------------------------------------------------- DECIMAL
   /** fixed-point ×10⁴ integer (always ≥ 0: pk and commit_ts are);
     * pk reduced first so ×137 cannot wrap at any input */
-  val decE4: Column = pmod(col("pk"), lit(1000000000000L)) * 137L +
-    pmod(col("commit_ts"), lit(10000L))
+  val decE4: Column = arm(ImageArms.DecE4, ts, pk)
   val decE4Sql: String =
     "((pk % 1000000000000) * 137 + commit_ts % 10000)"
 
   /** plain decimal string 'i.ffff' — canal/avro wire value, and the
     * digits of the debezium number (fixed-scale divergence above) */
-  val decStr: Column = concat(
-    call_function("div", decE4, lit(10000L)).cast("string"), lit("."),
-    lpad(pmod(decE4, lit(10000L)).cast("string"), 4, "0"))
+  val decStr: Column = arm(ImageArms.DecStr, ts, pk)
   val decStrSql: String =
     s"CONCAT($decE4Sql // 10000, '.', lpad(CAST($decE4Sql % 10000 AS VARCHAR), 4, '0'))"
 
   // ----------------------------------------------------------- ENUM
   /** 1-based index into [[enumElems]] (canal integer value;
     * helper.go:115-122 renders 0 as null — the changelog's event-type
-    * universe is exactly the element list, so 0 never occurs) */
-  val enumIdx: Column = enumElems.zipWithIndex.foldLeft(lit(0L)) {
-    case (acc, (e, i)) => when(col("event_type") === e, lit(i + 1L)).otherwise(acc)
-  }
+    * universe is exactly the element list, so 0 never occurs); the
+    * canal kernel renders it with [[ImageArms.enumIdx]] */
   val enumIdxSql: String = enumElems.zipWithIndex
     .map { case (e, i) => s"WHEN '$e' THEN ${i + 1}" }
     .mkString("CASE event_type ", " ", " ELSE 0 END")
@@ -147,31 +147,27 @@ object TypedImage {
   // exclusion). These two rows make the type dispatch literally total.
 
   /** SET element list (4 elems → masks 1..15). */
-  val setElems: Seq[String] = Seq("alpha", "beta", "gamma", "delta")
+  val setElems: Seq[String] = ImageArms.SetElems
   val setAllowed: String = setElems.mkString(",")
 
   // -------------------------------------------------------------- BIT
   /** BIT(8) value 0..255 (inputs reduced first — cannot wrap) */
-  val bitVal: Column = pmod(pmod(col("pk"), lit(256L)) * 7L + 3L, lit(256L))
+  val bitVal: Column = arm(ImageArms.BitVal, pk = pk)
   val bitValSql: String = "(((pk % 256) * 7 + 3) % 256)"
 
   /** debezium wire: BIT(8) → base64 of the single little-endian byte */
-  val bitB64: Column = base64(unhex(lpad(hex(bitVal), 2, "0")))
+  val bitB64: Column = arm(ImageArms.BitB64, pk = pk)
   val bitB64Sql: String =
     s"to_base64(unhex(lpad(hex($bitValSql), 2, '0')))"
 
   // -------------------------------------------------------------- SET
   /** bitmask 1..15 — never 0, so the canal null arm never fires */
-  val setMask: Column =
-    lit(1L) + pmod(pmod(col("pk"), lit(15L)) + pmod(col("commit_ts"), lit(15L)), lit(15L))
+  val setMask: Column = arm(ImageArms.SetMask, ts, pk)
   val setMaskSql: String = "(1 + ((pk % 15) + (commit_ts % 15)) % 15)"
 
   /** comma-joined selected element names (ParseSetValue — the
-    * debezium/avro wire value); concat_ws skips the null arms in both
-    * engines */
-  val setName: Column = concat_ws(",", setElems.zipWithIndex.map {
-    case (e, i) => when(setMask.bitwiseAND(lit(1L << i)) > 0L, lit(e))
-  }: _*)
+    * debezium/avro wire value); the SQL concat_ws skips the null arms */
+  val setName: Column = arm(ImageArms.SetName, ts, pk)
   val setNameSql: String = setElems.zipWithIndex
     .map { case (e, i) =>
       s"CASE WHEN $setMaskSql & ${1L << i} > 0 THEN '$e' END" }
@@ -180,41 +176,38 @@ object TypedImage {
   // ----------------------------------------------------------- BINARY
   /** VARBINARY(4) whose bytes are ASCII digits — the canal ISO-8859-1
     * decode is then the identity and every JSON stays escape-free */
-  val binStr: Column =
-    lpad((pmod(col("pk"), lit(10000L)) * 13L % 10000L).cast("string"), 4, "0")
+  val binStr: Column = arm(ImageArms.BinStr, pk = pk)
   val binStrSql: String =
     "lpad(CAST((pk % 10000) * 13 % 10000 AS VARCHAR), 4, '0')"
 
   /** debezium / avro binary wire: base64 of the UTF-8(=ASCII) bytes */
-  val binB64: Column = base64(binStr.cast("binary"))
+  val binB64: Column = arm(ImageArms.BinB64, pk = pk)
   val binB64Sql: String = s"to_base64(encode($binStrSql))"
 
   // ------------------------------------------------------------- TIME
   /** seconds-of-day 0..86399 (Duration < 24h) */
-  val timeSec: Column = pmod(pmod(col("commit_ts"), lit(86400L)) * 11L, lit(86400L))
+  val timeSec: Column = arm(ImageArms.TimeSec, ts)
   val timeSecSql: String = "(((commit_ts % 86400) * 11) % 86400)"
 
   /** 'HH:MM:SS' (canal Duration.String() / avro string) */
-  val timeStr: Column = date_format(timestamp_seconds(timeSec), "HH:mm:ss")
+  val timeStr: Column = arm(ImageArms.TimeStr, ts)
   val timeStrSql: String =
     s"strftime(make_timestamp(CAST($timeSecSql AS BIGINT) * 1000000), '%H:%M:%S')"
 
   /** debezium io.debezium.time.MicroTime int64 value */
-  val timeMicros: Column = timeSec * 1000000L
+  val timeMicros: Column = arm(ImageArms.TimeMicros, ts)
   val timeMicrosSql: String = s"($timeSecSql * 1000000)"
 
   // ------------------------------------------------------------- YEAR
   /** 1970..2124 (inside MySQL YEAR's 1901..2155) */
-  val yearVal: Column = lit(1970L) + pmod(col("commit_ts"), lit(155L))
+  val yearVal: Column = arm(ImageArms.YearVal, ts)
   val yearValSql: String = "(1970 + commit_ts % 155)"
 
   // -------------------------------------------- BIGINT UNSIGNED (UBIG)
   /** the widening offset x < 2^20; the modeled column value is
     * 2^63 + x — ABOVE Long.MaxValue, so every handler's widening arm
     * actually fires */
-  val ubigOff: Column =
-    pmod(pmod(col("pk"), lit(1048576L)) * 31L + pmod(col("commit_ts"), lit(1048576L)),
-      lit(1048576L))
+  val ubigOff: Column = arm(ImageArms.UbigOff, ts, pk)
   val ubigOffSql: String =
     "(((pk % 1048576) * 31 + commit_ts % 1048576) % 1048576)"
 
@@ -222,14 +215,13 @@ object TypedImage {
     * bigintUnsignedHandlingMode=string): 2^63 = 9223372036854775808
     * and x < 2^20 only moves the last 7 digits (4775808 + x ≤ 5824383,
     * no carry), so the closed form is exact in both engines */
-  val ubigStr: Column = concat(lit("922337203685"),
-    (lit(4775808L) + ubigOff).cast("string"))
+  val ubigStr: Column = arm(ImageArms.UbigStr, ts, pk)
   val ubigStrSql: String = s"CONCAT('922337203685', 4775808 + $ubigOffSql)"
 
   /** debezium int64 REINTERPRET (codec.go:489-503 WriteInt64Field
     * (int64(v)) — two's-complement wrap, the documented consumer
     * footgun): int64(2^63 + x) = Long.MinValue + x */
-  val ubigWrapped: Column = lit(Long.MinValue) + ubigOff
+  val ubigWrapped: Column = arm(ImageArms.UbigWrapped, ts, pk)
   val ubigWrappedSql: String = s"(-9223372036854775808 + $ubigOffSql)"
 
   // ------------------------------------- DECIMAL, precise wire (DEC p)
@@ -238,25 +230,19 @@ object TypedImage {
     * (BigInteger.toByteArray — even-length hex, plus a leading 0x00
     * when the top bit is set), scale rides the schema. [[decE4]] is
     * non-negative < 2^48 so the sign arm is the 0x00 prefix only. */
-  private[graft] def beBytesHex(v: Column): Column = {
-    val h = hex(v)
-    val even = call_function("lpad", h,
-      (length(h) + pmod(length(h), lit(2))).cast("int"), lit("0"))
-    when(substring(even, 1, 1).isin("8", "9", "A", "B", "C", "D", "E", "F"),
-      concat(lit("00"), even)).otherwise(even)
-  }
+  private[graft] def beBytesHex(v: Column): Column = arm(ImageArms.BeHex, v)
   private def beBytesHexSql(e: String): String = {
     val even = s"lpad(hex($e), CAST(length(hex($e)) + length(hex($e)) % 2 AS INTEGER), '0')"
     s"""CASE WHEN substring($even, 1, 1) IN ('8','9','A','B','C','D','E','F')
        |  THEN CONCAT('00', $even) ELSE $even END""".stripMargin
   }
 
-  val decPreciseB64: Column = base64(unhex(beBytesHex(decE4)))
+  val decPreciseB64: Column = arm(ImageArms.DecPreciseB64, ts, pk)
   val decPreciseB64Sql: String = s"to_base64(unhex(${beBytesHexSql(decE4Sql)}))"
 
   /** the same minimal big-endian unscaled bytes as uppercase hex — the
     * avro-binary (A41) bytes-decimal payload (varint length prefix is
     * the encoder's job) */
-  val decPreciseHex: Column = beBytesHex(decE4)
+  val decPreciseHex: Column = arm(ImageArms.DecPreciseHex, ts, pk)
   val decPreciseHexSql: String = beBytesHexSql(decE4Sql)
 }

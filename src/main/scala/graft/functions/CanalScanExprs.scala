@@ -23,10 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * 2.6 s query; a typed Jackson schema was SLOWER, 3.7 s). This
   * scanner walks the message once, char-at-a-time, extracting the
   * JSONMessage fields by key and skipping nested metadata objects
-  * with a depth counter — the same single-pass shape as the binary
-  * wire parsers in [[WireExprs]]. Key order independent; standard
-  * JSON string escapes handled on a slow path (the fast path is a
-  * zero-copy substring). Malformed input decodes to NULL, the
+  * with a depth counter ([[JsonCursor]], shared with the debezium
+  * and open-protocol scanners of [[WireScan]]). Key order
+  * independent; standard JSON string escapes handled on a slow path
+  * (the fast path is a zero-copy substring). Malformed input decodes to NULL, the
   * `from_json` contract, and a message is only accepted if the scan
   * consumes every byte — the whole-message bounds invariant shared
   * by the avro/craft decoders.
@@ -85,131 +85,8 @@ object CanalScan {
   private final val WMARK = 23
   private[functions] final val NumSlots = 24
 
-  private final class Scanner(s: String, out: Array[Any]) {
-    private var pos = 0
-    private val n = s.length
-
-    private def err(): Nothing =
-      throw new IllegalArgumentException("bad canal json")
-    private def ch: Char = { if (pos >= n) err(); s.charAt(pos) }
-    private def eat(c: Char): Unit = { if (ch != c) err(); pos += 1 }
-
-    /** Read a JSON string at an opening quote. Fast path is a
-      * zero-copy substring; any backslash falls to the unescape pass. */
-    private def readString(): String = {
-      eat('"')
-      val start = pos
-      var hasEsc = false
-      while (ch != '"') {
-        if (s.charAt(pos) == '\\') { hasEsc = true; pos += 2 }
-        else pos += 1
-      }
-      val raw = s.substring(start, pos)
-      pos += 1
-      if (hasEsc) unescape(raw) else raw
-    }
-
-    private def unescape(raw: String): String = {
-      val b = new java.lang.StringBuilder(raw.length)
-      var i = 0
-      while (i < raw.length) {
-        val c = raw.charAt(i)
-        if (c == '\\') {
-          i += 1
-          raw.charAt(i) match {
-            case '"'  => b.append('"')
-            case '\\' => b.append('\\')
-            case '/'  => b.append('/')
-            case 'b'  => b.append('\b')
-            case 'f'  => b.append('\f')
-            case 'n'  => b.append('\n')
-            case 'r'  => b.append('\r')
-            case 't'  => b.append('\t')
-            case 'u' =>
-              b.append(Integer.parseInt(raw.substring(i + 1, i + 5), 16).toChar)
-              i += 4
-            case _ => err()
-          }
-          i += 1
-        } else { b.append(c); i += 1 }
-      }
-      b.toString
-    }
-
-    /** Raw token of a number / true / false / null. */
-    private def scalarToken(): String = {
-      val start = pos
-      while (pos < n && { val c = s.charAt(pos)
-        c != ',' && c != '}' && c != ']' }) pos += 1
-      if (pos == start) err()
-      s.substring(start, pos)
-    }
-
-    private def longToken(): Long = java.lang.Long.parseLong(scalarToken())
-
-    /** Skip any JSON value: depth-counted for objects/arrays (with
-      * escape-aware string skipping), token scan for scalars. */
-    private def skipValue(): Unit = ch match {
-      case '"' =>
-        pos += 1
-        while (ch != '"') {
-          if (s.charAt(pos) == '\\') pos += 2 else pos += 1
-        }
-        pos += 1
-      case '{' | '[' =>
-        var depth = 0
-        var first = true
-        while (first || depth > 0) {
-          first = false
-          ch match {
-            case '"' =>
-              pos += 1
-              while (ch != '"') {
-                if (s.charAt(pos) == '\\') pos += 2 else pos += 1
-              }
-              pos += 1
-            case c =>
-              if (c == '{' || c == '[') depth += 1
-              else if (c == '}' || c == ']') depth -= 1
-              pos += 1
-          }
-        }
-      case _ => scalarToken(); ()
-    }
-
-    /** Walk an object, dispatching each key's value to `handle`
-      * (which must consume it). */
-    private def obj(handle: String => Unit): Unit = {
-      eat('{')
-      if (ch == '}') { pos += 1; return }
-      var more = true
-      while (more) {
-        val key = readString()
-        eat(':')
-        handle(key)
-        if (ch == ',') pos += 1
-        else { eat('}'); more = false }
-      }
-    }
-
-    private def utf(x: String): UTF8String = UTF8String.fromString(x)
-
-    // canonical-form converters for the typed arms; all exact integer
-    // arithmetic in UTC (proleptic Gregorian via LocalDate), matching
-    // the SQL conversions the DuckDB oracle performs independently
-    private def dateDays(d: String): Long =
-      java.time.LocalDate.parse(d).toEpochDay
-    private def timeSec(t: String): Long =
-      (Integer.parseInt(t.substring(0, 2)) * 3600 +
-        Integer.parseInt(t.substring(3, 5)) * 60 +
-        Integer.parseInt(t.substring(6, 8))).toLong
-    private def dtSec(x: String): Long =
-      dateDays(x.substring(0, 10)) * 86400L + timeSec(x.substring(11))
-    private def decE4(x: String): Long = {
-      val i = x.indexOf('.')
-      if (i < 0) err()
-      java.lang.Long.parseLong(x.substring(0, i) + x.substring(i + 1))
-    }
+  private final class Scanner(s: String, out: Array[Any]) extends JsonCursor(s) {
+    import WireScan.{dateDays, decE4, dtSec, timeSec, utf}
 
     // the ten typed-image arms ride data[0] in fixed slots 10..19
     private def dataKey(key: String): Unit = key match {
@@ -275,10 +152,7 @@ object CanalScan {
       case _ => skipValue() // id, pkNames, sqlType, mysqlType, unknown
     }
 
-    def run(): Unit = {
-      obj(topKey)
-      if (pos != n) err() // whole-message invariant
-    }
+    def run(): Unit = { obj(topKey); end() }
   }
 
   /** NULL on malformed input — the from_json contract. */

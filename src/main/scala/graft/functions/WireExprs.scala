@@ -537,9 +537,7 @@ case class ChecksumImage(pk: Expression, value: Expression,
     sb.append(hex)
     val v = value.eval(input)
     if (v != null) {
-      // Spark's format_string renders through Formatter(Locale.US)
-      val s = String.format(java.util.Locale.US, "%.4f",
-        Double.box(v.asInstanceOf[Double]))
+      val s = Num4.string(v.asInstanceOf[Double])
       sb.append('D').append(s.length).append(':').append(s)
     }
     val pr = props.eval(input)

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Tables
+import graft.util.{Checkpoints, Tables}
 import graft.functions.Portable
 
 /** Corpus-curation operators that sit between candidate generation and
@@ -90,6 +90,8 @@ object Curation {
     while (round < maxRounds && !converged) {
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val cur = sig(next)
+      // the checkpoint is eager: the round's input is scratch now
+      Checkpoints.drop(edges)
       edges = next
       converged = cur == prev
       prev = cur
@@ -120,9 +122,9 @@ object Curation {
     * CacheManager cannot share. */
   def dedupClusters(spark: SparkSession, dir: String, tau: Double = 0.5): DataFrame =
     Tables.checkpointed(spark, "clusters", dir, "documents", tau) {
-      val assign = connectedComponents(dupEdges(spark, dir, tau))
-        .select(col("u").as("doc_id"), col("v").as("cluster_id"))
-      Tables.documents(spark, dir).select(col("doc_id"))
+      val cc = connectedComponents(dupEdges(spark, dir, tau))
+      val assign = cc.select(col("u").as("doc_id"), col("v").as("cluster_id"))
+      val clusters = Tables.documents(spark, dir).select(col("doc_id"))
         .join(assign, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
         .withColumn("cluster_size",
@@ -130,6 +132,8 @@ object Curation {
         .withColumn("canonical",
           (col("doc_id") === col("cluster_id")).cast("long"))
         .localCheckpoint()
+      Checkpoints.drop(cc)
+      clusters
     }
 
   def dedupClustersSql(tau: Double = 0.5): String =

@@ -1069,7 +1069,7 @@ object Similarity {
     frame.select(col("vec_id"), col("label"),
       md5(concat_ws(",",
         (0 until outDim).map(j =>
-          format_string("%.4f", col(s"p$j") + lit(0.0))): _*)
+          graft.functions.WireRender.fixed4(col(s"p$j") + lit(0.0))): _*)
         .cast("binary")).as("proj_digest"),
       round(sqrt((0 until outDim).map(j => col(s"p$j") * col(s"p$j"))
         .reduce(_ + _)) * 10000.0).cast("long").as("proj_norm_e4"))

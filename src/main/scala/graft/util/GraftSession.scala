@@ -76,6 +76,8 @@ object GraftSession {
       .master(master)
       .withExtensions(graft.functions.VectorExprs.register)
       .withExtensions(graft.functions.WireExprs.register)
+      .withExtensions(graft.functions.WireRender.register)
+      .withExtensions(graft.functions.WireScanExprs.register)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -125,9 +127,8 @@ object GraftSession {
       // materialization over big strings (session_transcripts 4.2 ->
       // 28 s, q_window_running 2 -> 10 s, the decode family +6 s each;
       // board total 642 -> 698 s). The default stays; over-limit
-      // stages get fixed at the EXPRESSION level instead (the
-      // debezium arm projection pre-renders its strings so the value
-      // concat is pure column refs).
+      // stages get fixed at the EXPRESSION level instead (the codec
+      // wire formats are native kernels over plain column refs).
   }
 
   /** Test/dev session. */
@@ -154,8 +155,10 @@ object GraftSession {
     * release, re-invoke the operator for a fresh frame. */
   def releaseCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
+    // the registry first: the sweep then finds only what it missed, so
+    // no RDD is unpersisted twice
+    Tables.clear()
     spark.sparkContext.getPersistentRDDs.valuesIterator
       .foreach(_.unpersist(blocking = false))
-    Tables.clear()
   }
 }

@@ -66,6 +66,49 @@ class CacheHygieneSpec extends AnyFunSuite {
     graft.util.GraftSession.releaseCaches(spark)
   }
 
+  test("a dedupClusters build leaves only registry entries pinned") {
+    graft.util.GraftSession.releaseCaches(spark)
+    assert(pinnedRdds == 0, "the check must start from a clean slate")
+    val clusters = ops.Curation.dedupClusters(spark, dir)
+    // the registry entries the build reads or makes; the calls below
+    // return the frames it already built
+    val entries = Seq(clusters, ops.Dedup.ngramPairsCached(spark, dir, 0.5),
+      ops.Text.docTokens(spark, dir), ops.Dedup.gramsCached(spark, dir))
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == blockIds(entries),
+      "connected-components scratch checkpoints stayed pinned")
+    graft.util.GraftSession.releaseCaches(spark)
+  }
+
+  test("releaseCaches unpersists each RDD once") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerUnpersistRDD}
+    graft.util.GraftSession.releaseCaches(spark)
+    def cl = cdc.ChangeEvents.changelog(spark, dir)
+    Seq(ops.Curation.dedupClusters(spark, dir), cdc.ClDims.tables(cl), cl, cl)
+      .foreach(_.count())
+    val unpersisted = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val ended = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = unpersisted.add(e.rddId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.util.GraftSession.releaseCaches(spark)
+      // one queue delivers in order: once this job's end arrives, every
+      // unpersist event of the release has been delivered too
+      val marker = spark.sparkContext.parallelize(Seq(1), 1)
+      marker.count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (ended.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(!ended.isEmpty, "the marker job's end never arrived")
+      import scala.jdk.CollectionConverters._
+      val ids = unpersisted.asScala.toSeq
+      assert(ids.nonEmpty, "the release unpersisted nothing")
+      val twice = ids.groupBy(identity).collect { case (id, n) if n.size > 1 => id }
+      assert(twice.isEmpty, s"RDDs unpersisted more than once: ${twice.mkString(",")}")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("releaseCaches frees every pinned frame and operators still rerun") {
     graft.util.GraftSession.releaseCaches(spark)
     assert(pinnedRdds == 0, "release must start from a clean slate")

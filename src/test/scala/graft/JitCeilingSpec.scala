@@ -31,8 +31,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * global hugeMethodLimit (measured net-negative on the full sf10
   * board — 642 → 698 s: forcing per-operator materialization loses
   * more broadly than interpreted fusion costs). Fix the offending
-  * stage at the EXPRESSION level — pre-render shared strings into a
-  * named column (the debezium-arm fix), or collapse an unrolled
+  * stage at the EXPRESSION level — write a whole message in one
+  * native kernel (functions/WireRender.scala), or collapse an unrolled
   * per-element expression family into one native loop expression (the
   * graft_quantize fix in functions/VectorExprs.scala).
   */

@@ -512,15 +512,14 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("large-message sinks render the canal payload exactly once per row") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.{WireKernel, WireKernels}
     // The dual-render disease (r11 ADVICE, three sites by now): a
     // conditional reference to the rendered value plus an
     // octet_length over it is invisible to CSE and duplicated by
     // CollapseProject, so every inline message pays the full canal
-    // concat twice. Contract: across the whole optimized plan, the
-    // canal render marker literal ("sqlType" — the metadata block only
-    // the FULL payload carries; the degraded handle-key stub shares
-    // "pkNames" but not it) appears in exactly one expression tree.
+    // render twice. Contract: across the whole optimized plan, the
+    // canal kernel (the FULL payload; the degraded handle-key stub is
+    // a concat of its own) appears in exactly one expression tree.
     val cl = cdc.ChangeEvents.changelog(spark, dir)
     for ((name, df) <- Seq(
       "claim_check" -> cdc.Sinks.claimCheck(cl, 16, 758),
@@ -528,11 +527,38 @@ class PlanQualitySpec extends AnyFunSuite {
       "handle_key_only" -> cdc.Sinks.handleKeyOnly(cl, 16, 465))) {
       val lp = df.queryExecution.optimizedPlan
       val renders = lp.map(node => node.expressions.map(_.collect {
-        case l: Literal if l.value != null &&
-          l.value.toString.contains("\"sqlType\"") => l
+        case k: WireKernel if k.format == WireKernels.Canal => k
       }.size).sum).sum
       assert(renders == 1,
         s"$name renders the canal payload $renders times:\n$lp")
+    }
+  }
+
+  test("codec plans parse and render natively: no JSON/CSV parser, no format_string, no fallback over a computed child") {
+    import org.apache.spark.sql.catalyst.expressions.{CsvToStructs, FormatString, JsonToStructs, LeafExpression}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    // Spark's JSON and CSV parsers and format_string evaluate a whole
+    // message tree interpreted under them; a CodegenFallback over a
+    // computed child does the same to that child. The wire kernels and
+    // scanners are single generated calls over column references.
+    val cl = cdc.ChangeEvents.changelog(spark, dir)
+    val cfg = cdc.Changefeed.Config(tableRules = Seq("db0.%", "db1.t1"), ignoreOps = Seq("D"))
+    import cdc.Changefeed.Protocol
+    for ((name, df) <- Seq(
+      "kafka_canal_json" -> cdc.Changefeed.kafka(cl, cfg.copy(protocol = Protocol.CanalJson)),
+      "kafka_debezium" -> cdc.Changefeed.kafka(cl, cfg.copy(protocol = Protocol.Debezium)),
+      "kafka_csv" -> cdc.Changefeed.kafka(cl, cfg.copy(protocol = Protocol.Csv)),
+      "canal_decode" -> cdc.Codecs.canalJsonDecode(cl),
+      "debezium_decode" -> cdc.Codecs.debeziumDecode(cl),
+      "debezium_envelope_decode" -> cdc.Codecs.debeziumEnvelopeDecode(cl),
+      "csv_decode" -> cdc.Codecs.csvDecode(cdc.Codecs.csv(cl)))) {
+      val lp = df.queryExecution.optimizedPlan
+      val offenders = lp.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: JsonToStructs | _: CsvToStructs | _: FormatString) => e.prettyName
+        case e: CodegenFallback if !e.children.forall(_.isInstanceOf[LeafExpression]) =>
+          s"${e.prettyName} (fallback over a computed child)"
+      }))
+      assert(offenders.isEmpty, s"$name: ${offenders.distinct.mkString(", ")}\n$lp")
     }
   }
 

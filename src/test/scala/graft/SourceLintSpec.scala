@@ -54,4 +54,15 @@ class SourceLintSpec extends AnyFunSuite {
     val found = hits("""\bTrieMap\b""".r, "util/Tables.scala")
     assert(found.isEmpty, "use graft.util.Tables.checkpointed for: " + found.mkString(", "))
   }
+
+  /** Every `%.4f` number of the engine is rendered by the one native
+    * renderer ([[graft.functions.Num4]], reached from Columns through
+    * `WireRender.fixed4`), which matches Spark's `format_string`
+    * byte for byte. A `format_string("%.4f"` or `String.format` with
+    * that pattern elsewhere would be a second renderer. */
+  test("%.4f numbers are rendered only by the native renderer") {
+    val found = hits("""(format_string|String\.format)\s*\([^)]*"%\.4f"""".r,
+      "functions/WireRender.scala")
+    assert(found.isEmpty, "use graft.functions.WireRender.fixed4 for: " + found.mkString(", "))
+  }
 }

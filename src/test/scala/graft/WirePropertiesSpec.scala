@@ -3,7 +3,8 @@ package graft
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.WireHex
+import graft.functions.{CsvScan, DebeziumScan, WireHex, WireKernels}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Property-based hardening of the wire layer: the targeted boundary
   * specs (OperatorSemanticsSpec's tamper arms) prove specific edges;
@@ -76,5 +77,76 @@ class WirePropertiesSpec extends AnyFunSuite {
         WireHex.zvarintHex(n).toString + "FF"))
       r.getLong(2) == 0L
     })
+    // the JSON and CSV scanners: total on arbitrary text, and a real
+    // message decodes only whole — one with trailing bytes is NULL, and
+    // so is a truncated JSON message (a csv line cut at a comma is a
+    // shorter valid line)
+    val scanners: Seq[(String, String => Any, Int, Boolean)] = Seq(
+      ("debezium", s => DebeziumScan.decode(u(s)), WireKernels.Debezium, true),
+      ("debezium envelope", s => DebeziumScan.decodeEnvelope(u(s)),
+        WireKernels.DebeziumEnvelope, true),
+      ("csv", s => CsvScan.decode(u(s)), WireKernels.Csv, false))
+    for ((name, decode, format, json) <- scanners) {
+      check(s"$name total")(Prop.forAll(Gen.oneOf(garbage, jsonish)) { s => decode(s); true })
+      check(s"$name partial consumes")(Prop.forAll(image, Gen.chooseNum(1, 40)) { (img, cut) =>
+        val msg = img.render(format)
+        decode(msg) != null && decode(msg + "}") == null && decode(msg + ",") == null &&
+          (!json || decode(msg.dropRight(math.min(cut, msg.length))) == null)
+      })
+    }
+  }
+
+  /** Text built from the characters the JSON and CSV wires use. */
+  private val jsonish: Gen[String] =
+    Gen.listOf(Gen.oneOf("{}[]\":,.-+0123456789eEnulltrfasNIc_\\ ".toSeq)).map(_.mkString)
+
+  /** One change event's image columns, any values. */
+  private case class Image(cts: Long, sts: Long, schema: String, table: String, op: String,
+                           pk: Long, before: Option[Double], after: Option[Double],
+                           props: String, et: String) {
+    def render(format: Int): String = WireKernels.render(format, false, cts, false, sts,
+      UTF8String.fromString(schema), UTF8String.fromString(table), UTF8String.fromString(op),
+      false, pk, before.isEmpty, before.getOrElse(0.0), after.isEmpty, after.getOrElse(0.0),
+      UTF8String.fromString(props), UTF8String.fromString(et)).toString
+  }
+
+  private val image: Gen[Image] = for {
+    cts <- Gen.chooseNum(0L, Long.MaxValue)
+    sts <- Gen.chooseNum(0L, Long.MaxValue)
+    schema <- Gen.alphaNumStr
+    table <- Gen.alphaNumStr
+    op <- Gen.oneOf("I", "U", "D")
+    pk <- Gen.chooseNum(Long.MinValue, Long.MaxValue)
+    before <- Gen.option(doubles)
+    after <- Gen.option(doubles)
+    k <- Gen.chooseNum(0, 99)
+    et <- Gen.oneOf(cdc.TypedImage.enumElems)
+  } yield Image(cts, sts, schema, table, op, pk, before, after, s"""{"k": $k}""", et)
+
+  private lazy val doubles: Gen[Double] = Gen.frequency(
+    4 -> Gen.chooseNum(-1e6, 1e6),
+    2 -> Gen.chooseNum(-1e13, 1e13),
+    2 -> Gen.long.map(java.lang.Double.longBitsToDouble), // every bit pattern
+    // x.xxxx5 midpoints and their neighbours
+    2 -> Gen.chooseNum(-100000000L, 100000000L).map(n => n / 10000.0 + 0.00005),
+    1 -> Gen.chooseNum(-100000000L, 100000000L).map(n =>
+      Math.nextUp(n / 10000.0 + 0.00005)),
+    1 -> Gen.oneOf(fixedDoubles))
+
+  /** Signs, signed zero, non-finite values, x.xxxx5 midpoints,
+    * subnormals and large magnitudes. */
+  private lazy val fixedDoubles: Seq[Double] = Seq(-0.0, 0.0, Double.NaN,
+    Double.PositiveInfinity, Double.NegativeInfinity, Double.MinPositiveValue,
+    -Double.MinPositiveValue, java.lang.Double.MIN_NORMAL, 1e-310, 1e300, -1e300,
+    Double.MaxValue, -Double.MaxValue, 0.00005, -0.00005, 0.00015, 0.5, -0.5, 1.00005,
+    2.12345, -2.12345, 1234.56785, 12345678.12345, 99999.99995, -1e-5, -4.9e-5, 49.99995,
+    1e11, 1e15, 9.2e18, -12.34, 34.8)
+
+  test("the native %.4f renderer is byte-identical to Spark's format_string") {
+    // format_string formats through java.util.Formatter with Locale.US
+    def same(d: Double): Boolean =
+      graft.functions.Num4.string(d) == String.format(java.util.Locale.US, "%.4f", Double.box(d))
+    for (d <- fixedDoubles) assert(same(d), s"$d renders ${graft.functions.Num4.string(d)}")
+    check("num4 == Formatter")(Prop.forAll(doubles)(same))
   }
 }
