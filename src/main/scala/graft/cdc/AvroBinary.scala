@@ -194,7 +194,8 @@ s"""CASE WHEN ${fits(1)} THEN ${withLen(1)}
     * interface every protocol implements — instantiated for avro by the
     * consumer's schema-registry reader). Both wire messages parse
     * through a real sequential Avro-binary parser (native loop-codegen
-    * expressions [[graft.functions.AvroDecodeKey]]/[[AvroDecodeValue]]):
+    * decoders `graft_avro_decode_key`/`graft_avro_decode_value` of
+    * [[graft.functions.WireScanExprs]]):
     * Confluent magic + int32 schema id, varint-length UTF-8 strings,
     * zigzag varints, union-branch decimal cents (minimal big-endian
     * two's complement, sign-extended). `valid`=1 requires magic 0x00 AND
@@ -205,11 +206,11 @@ s"""CASE WHEN ${fits(1)} THEN ${withLen(1)}
     * money images take the -1 sentinel (cents are non-negative by
     * construction); row-local, zero shuffle. */
   def decode(msgs: DataFrame): DataFrame = {
-    import graft.functions.WireExprs
+    import graft.functions.WireScanExprs
     // layered projections: parse once per message, then field accesses
     msgs.select(
-        WireExprs.avroDecodeKey(col("key")).as("k"),
-        WireExprs.avroDecodeValue(col("value")).as("v"))
+        WireScanExprs.decode("avro_key", col("key")).as("k"),
+        WireScanExprs.decode("avro_value", col("value")).as("v"))
       .select(
         col("k.schema_id").as("key_schema_id"),
         col("k.pk").as("key_pk"),

@@ -14,11 +14,11 @@ import graft.functions.{WireKernels, WireRender, WireScanExprs}
   * [[graft.functions.DebeziumScan]], [[graft.functions.CsvScan]]); the
   * other codecs are `concat` trees whose numbers and TypedImage arms
   * come from the same native functions. Doubles render as `%.4f`
-  * ([[graft.functions.Num4]], identical to Spark's `format_string` and
-  * to C printf for non-midpoint doubles), NULL images render as the
-  * JSON literal `null`, and the `props` payload column (already JSON)
-  * embeds raw. Each codec has a character-identical DuckDB SQL
-  * rendering for the oracle.
+  * ([[graft.functions.FixedPoint]], identical to Spark's
+  * `format_string` and to C printf for non-midpoint doubles), NULL
+  * images render as the JSON literal `null`, and the `props` payload
+  * column (already JSON) embeds raw. Each codec has a
+  * character-identical DuckDB SQL rendering for the oracle.
   */
 object Codecs {
 
@@ -164,16 +164,13 @@ object Codecs {
     * whitespace, and consumers treat it as opaque).
     *
     * Parse is ONE pass of the native [[graft.functions.CanalScan]]
-    * scanner per message (r12): Jackson `from_json` was the entire
-    * decode cost above the encode — the payload's fixed
-    * sqlType/mysqlType metadata is ~40% of the bytes and the general
-    * tokenizer can't skip it cheaply, while every arm transform after
-    * the parse is noise by comparison. */
+    * scanner per message ([[graft.functions.WireScan]] says why not
+    * `from_json`). */
   def canalJsonDecode(cl: DataFrame): DataFrame = {
     val v = canalJsonValue.as("value")
     def m(p: String): Column = col("m").getField(p)
     cl.select(v)
-      .select(graft.functions.CanalScanExprs.canalDecode(col("value")).as("m"))
+      .select(WireScanExprs.decode("canal", col("value")).as("m"))
       .select(
         m("es").as("commit_ts"),
         m("ts").as("start_ts"),
@@ -262,7 +259,7 @@ object Codecs {
     def m(p: String): Column = col("m").getField(p)
     val isRow = !m("is_ddl") && m("type") =!= "TIDB_WATERMARK"
     canalEnvelope(cl)
-      .select(graft.functions.CanalScanExprs.canalDecode(col("value")).as("m"))
+      .select(WireScanExprs.decode("canal", col("value")).as("m"))
       .select(
         when(m("type") === "TIDB_WATERMARK", "RESOLVED")
           .when(m("is_ddl"), "DDL").otherwise(lit("ROW")).as("msg_kind"),
@@ -356,8 +353,8 @@ object Codecs {
     def k(p: String): Column = col("k").getField(p)
     def v(p: String): Column = col("v").getField(p)
     openProtocol(cl)
-      .select(WireScanExprs.openKeyDecode(col("key")).as("k"),
-        WireScanExprs.openValueDecode(col("value")).as("v"))
+      .select(WireScanExprs.decode("open_key", col("key")).as("k"),
+        WireScanExprs.decode("open_value", col("value")).as("v"))
       .select(
         k("ts").as("commit_ts"),
         k("scm").as("schema_name"),
@@ -430,7 +427,7 @@ object Codecs {
     * unsigned bigint stays the int64 the wire carries). */
   def debeziumDecode(cl: DataFrame): DataFrame = {
     def m(p: String): Column = col("m").getField(p)
-    debezium(cl).select(WireScanExprs.debeziumDecode(col("value")).as("m")).select(
+    debezium(cl).select(WireScanExprs.decode("debezium", col("value")).as("m")).select(
       graft.functions.DebeziumScan.Struct.fieldNames.toSeq.map {
         case "op" => when(m("op") === "c", "I").when(m("op") === "d", "D")
           .otherwise(lit("U")).as("op")
@@ -552,7 +549,7 @@ object Codecs {
   def debeziumEnvelopeDecode(cl: DataFrame): DataFrame = {
     def m(p: String): Column = col("m").getField(p)
     debeziumEnvelope(cl)
-      .select(WireScanExprs.debeziumEnvelopeDecode(col("value")).as("m")).select(
+      .select(WireScanExprs.decode("debezium_envelope", col("value")).as("m")).select(
         m("commit_ts").as("commit_ts"), m("schema_name").as("schema_name"),
         m("table_name").as("table_name"),
         when(m("op") === "c", "I").when(m("op") === "d", "D").otherwise(lit("U")).as("op"),
@@ -624,7 +621,7 @@ object Codecs {
     * [[csvPat]] regex instead, so the oracle equality ALSO proves the
     * two parsers agree. */
   def csvDecode(frame: DataFrame): DataFrame =
-    frame.select(WireScanExprs.csvDecode(col("line")).as("m")).select(col("m.*"))
+    frame.select(WireScanExprs.decode("csv", col("line")).as("m")).select(col("m.*"))
 
   private val csvLineSqlForDecode: String =
     """CONCAT(

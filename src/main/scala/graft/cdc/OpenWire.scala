@@ -39,7 +39,7 @@ object OpenWire {
 
   /** 8-byte big-endian length prefix of a string's UTF-8 bytes, hex. */
   private def lenHex(c: Column): Column =
-    format_string("%016X", octet_length(c).cast("long"))
+    lpad(hex(octet_length(c).cast("long")), 16, "0")
   private def lenHexSql(e: String): String =
     s"printf('%016X', octet_length(encode($e)))"
 

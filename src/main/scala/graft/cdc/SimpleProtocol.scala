@@ -236,7 +236,7 @@ object SimpleProtocol {
     // materialization, at any scale.
     def m(p: String): Column = col("m").getField(p)
     val parsed = msgs.select(col("msg_type"),
-      graft.functions.SimpleScanExprs.simpleDecode(col("value")).as("m"))
+      graft.functions.WireScanExprs.decode("simple", col("value")).as("m"))
     val decoded = parsed.select(
       when(m("has_data") === 1L || m("has_old") === 1L, "ROW")
         .when(m("typ") === "WATERMARK", "RESOLVED")
@@ -256,7 +256,7 @@ object SimpleProtocol {
         .as("schema_version"))
     val schemas = msgs
       .filter(col("msg_type").isin("BOOTSTRAP", "DDL"))
-      .select(graft.functions.SimpleScanExprs.simpleDecode(col("value")).as("m"))
+      .select(graft.functions.WireScanExprs.decode("simple", col("value")).as("m"))
       .select(
         m("ts_schema").as("schema_name"),
         m("ts_table").as("table_name"),

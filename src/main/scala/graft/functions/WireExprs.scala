@@ -440,17 +440,6 @@ case class AvroBytesHex(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-case class AvroDecodeKey(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WireHex.KeyStruct
-  override def prettyName: String = "graft_avro_decode_key"
-  override def nullSafeEval(a: Any): Any =
-    WireHex.avroDecodeKey(a.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.WireHex.avroDecodeKey($a)")
-  override protected def withNewChildInternal(newChild: Expression): AvroDecodeKey =
-    copy(child = newChild)
-}
-
 case class OpenWireDecode(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = ArrayType(WireHex.OpenPairStruct, containsNull = false)
@@ -493,17 +482,6 @@ case class SimpleAvroDecode(child: Expression) extends UnaryExpression
     copy(child = newChild)
 }
 
-case class AvroDecodeValue(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WireHex.ValueStruct
-  override def prettyName: String = "graft_avro_decode_value"
-  override def nullSafeEval(a: Any): Any =
-    WireHex.avroDecodeValue(a.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.WireHex.avroDecodeValue($a)")
-  override protected def withNewChildInternal(newChild: Expression): AvroDecodeValue =
-    copy(child = newChild)
-}
-
 /** The A46 row-image checksum digest in ONE row-local pass — layout
   * per pkg/sink/codec/common/verify_checksum.go buildChecksumBytes
   * (columns in schema order, typed contributions, nil skipped):
@@ -537,7 +515,7 @@ case class ChecksumImage(pk: Expression, value: Expression,
     sb.append(hex)
     val v = value.eval(input)
     if (v != null) {
-      val s = Num4.string(v.asInstanceOf[Double])
+      val s = FixedPoint.string(v.asInstanceOf[Double], 4)
       sb.append('D').append(s.length).append(':').append(s)
     }
     val pr = props.eval(input)
@@ -584,11 +562,6 @@ case class CraftSizes(children: Seq[Expression])
   override def nullable: Boolean = true
   override def prettyName: String = "graft_craft_sizes"
 
-  // sequential-compare twins of the Column CASE ladders (same results
-  // for every input, including the degenerate negative-input arm)
-  private def uvLen(v: Long): Long = CraftWire.uvLen(v)
-  private def zzLen(v: Long): Long = CraftWire.zzLen(v)
-
   override def eval(input: InternalRow): Any = {
     val vals = children.map(_.eval(input))
     val (opA, pkA, afterA, beforeA, propsA, etA, ctsA, schA, tblA) =
@@ -597,34 +570,26 @@ case class CraftSizes(children: Seq[Expression])
     if (opA == null || pkA == null || propsA == null || etA == null ||
         ctsA == null || schA == null || tblA == null) return null
     val op = opA.asInstanceOf[UTF8String].toString
+    // the `%.2f` rendering's length; Formatter renders null as "null"
     def moneyLen(v: Any): Long =
-      if (v == null) 4L // Formatter renders null as "null"
-      else String.format(java.util.Locale.US, "%.2f",
-        Double.box(v.asInstanceOf[Double])).length.toLong
-    val pkLen = uvLen(pkA.asInstanceOf[Long] * 2)
+      if (v == null) 4L else FixedPoint.length(v.asInstanceOf[Double], 2).toLong
+    val pkLen = CraftWire.uvLen(pkA.asInstanceOf[Long] * 2)
     val propsLen = propsA.asInstanceOf[UTF8String].numBytes.toLong
     val etLen = etA.asInstanceOf[UTF8String].numBytes.toLong
     val newValueLen = if (op != "D") moneyLen(afterA) else -1L
     val oldValueLen = if (op != "I") moneyLen(beforeA) else -1L
-    def groupSize(vLen: Long): Long =
-      graft.cdc.Craft.GroupFixedBytes + graft.cdc.Craft.NilColumnMarkerBytes +
-        zzLen(pkLen) + zzLen(vLen) +
-        zzLen(propsLen) + zzLen(etLen) + pkLen + vLen + propsLen + etLen
-    val newGroup = if (op != "D") groupSize(newValueLen) else -1L
-    val oldGroup = if (op != "I") groupSize(oldValueLen) else -1L
-    val headerSize = uvLen(ctsA.asInstanceOf[Long]) + 4L
+    val newGroup =
+      if (op != "D") CraftWire.groupSize(pkLen, newValueLen, propsLen, etLen) else -1L
+    val oldGroup =
+      if (op != "I") CraftWire.groupSize(pkLen, oldValueLen, propsLen, etLen) else -1L
+    val headerSize = CraftWire.uvLen(ctsA.asInstanceOf[Long]) + 4L
     val bodySize = (if (newGroup >= 0) newGroup else 0L) +
       (if (oldGroup >= 0) oldGroup else 0L)
     val dictSize = graft.cdc.Craft.DictFixedBytes +
       schA.asInstanceOf[UTF8String].numBytes.toLong +
       tblA.asInstanceOf[UTF8String].numBytes.toLong
-    val firstGroup = if (newGroup >= 0) newGroup else oldGroup
-    val tablesPre =
-      (1L + zzLen(headerSize) + zzLen(dictSize - headerSize)) +
-      (1L + zzLen(bodySize)) +
-      (1L + zzLen(firstGroup) +
-        (if (op == "U") zzLen(oldGroup - newGroup) else 0L))
-    val sizeTables = tablesPre + uvLen(tablesPre)
+    val sizeTables = CraftWire.sizeTables(headerSize, dictSize, bodySize, newGroup,
+      oldGroup, op == "U")
     val msgSize = 1L + headerSize + bodySize + dictSize + sizeTables
     new GenericInternalRow(Array[Any](pkLen, newValueLen, oldValueLen,
       propsLen, etLen, newGroup, oldGroup, headerSize, bodySize,
@@ -636,68 +601,51 @@ case class CraftSizes(children: Seq[Expression])
     copy(children = newChildren)
 }
 
-/** The A47 decode-side group-size recount in one pass — same
-  * arithmetic as the composed groupSize Column chain (zigzag CASE
-  * ladders), evaluated once per row instead of once per CaseWhen
-  * branch. children: pk_len, v_len (nullable = absent-value arm),
-  * props_len, et_len — all LONG. */
+/** The A47 decode-side group-size recount ([[CraftWire.groupSize]]),
+  * evaluated once per row instead of once per CaseWhen branch.
+  * children: pk_len, v_len (NULL = absent value), props_len, et_len —
+  * all LONG. */
 case class CraftGroupSize(children: Seq[Expression])
   extends Expression with CodegenFallback {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_craft_group_size"
   override def eval(input: InternalRow): Any = {
-    val pkLen = children(0).eval(input)
-    val vLen = children(1).eval(input)
-    val propsLen = children(2).eval(input)
-    val etLen = children(3).eval(input)
-    if (pkLen == null || propsLen == null || etLen == null) return null
-    val p = pkLen.asInstanceOf[Long]
-    val pr = propsLen.asInstanceOf[Long]
-    val e = etLen.asInstanceOf[Long]
-    val v = if (vLen == null) -1L else vLen.asInstanceOf[Long]
-    val vPay = if (vLen == null) 0L else v
-    graft.cdc.Craft.GroupFixedBytes + graft.cdc.Craft.NilColumnMarkerBytes +
-      CraftWire.zzLen(p) +
-      CraftWire.zzLen(v) + CraftWire.zzLen(pr) + CraftWire.zzLen(e) +
-      p + vPay + pr + e
+    val v = children.map(_.eval(input))
+    if (v(0) == null || v(2) == null || v(3) == null) return null
+    CraftWire.groupSize(v(0).asInstanceOf[Long],
+      if (v(1) == null) -1L else v(1).asInstanceOf[Long],
+      v(2).asInstanceOf[Long], v(3).asInstanceOf[Long])
   }
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): CraftGroupSize =
     copy(children = newChildren)
 }
 
-/** The A47 size-table recount (tables_pre + its own uvarint length) in
-  * one pass. children: header_size, dict_size, body_size,
-  * new_group_size, old_group_size (-1 sentinels), op — LONGs + STRING. */
+/** The A47 size-table recount ([[CraftWire.sizeTables]]). children:
+  * header_size, dict_size, body_size, new_group_size, old_group_size
+  * (-1 sentinels), op — LONGs + STRING. */
 case class CraftSizeTables(children: Seq[Expression])
   extends Expression with CodegenFallback {
   override def dataType: DataType = LongType
   override def nullable: Boolean = true
   override def prettyName: String = "graft_craft_size_tables"
   override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.exists(_ == null)) return null
-    val header = vals(0).asInstanceOf[Long]
-    val dict = vals(1).asInstanceOf[Long]
-    val body = vals(2).asInstanceOf[Long]
-    val newGs = vals(3).asInstanceOf[Long]
-    val oldGs = vals(4).asInstanceOf[Long]
-    val op = vals(5).asInstanceOf[UTF8String].toString
-    val firstGroup = if (newGs != -1L) newGs else oldGs
-    val tablesPre =
-      (1L + CraftWire.zzLen(header) + CraftWire.zzLen(dict - header)) +
-      (1L + CraftWire.zzLen(body)) +
-      (1L + CraftWire.zzLen(firstGroup) +
-        (if (op == "U") CraftWire.zzLen(oldGs - newGs) else 0L))
-    tablesPre + CraftWire.uvLen(tablesPre)
+    val v = children.map(_.eval(input))
+    if (v.exists(_ == null)) return null
+    def l(i: Int): Long = v(i).asInstanceOf[Long]
+    CraftWire.sizeTables(l(0), l(1), l(2), l(3), l(4),
+      v(5).asInstanceOf[UTF8String].toString == "U")
   }
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): CraftSizeTables =
     copy(children = newChildren)
 }
 
-/** Shared JVM twins of the craft varint-length Column CASE ladders. */
+/** The craft layout arithmetic, shared by the encode-side layout and
+  * the decode-side recounts: JVM twins of the Column CASE ladders (same
+  * results for every input, including the degenerate negative-input
+  * arm). */
 object CraftWire {
   def uvLen(v: Long): Long = {
     var n = 1
@@ -705,6 +653,25 @@ object CraftWire {
     n.toLong
   }
   def zzLen(v: Long): Long = uvLen(if (v >= 0) v * 2 else -v * 2 - 1)
+
+  /** One column group's bytes; `vLen` < 0 is an absent value (its
+    * length prefix is the -1 marker, its payload empty). */
+  def groupSize(pkLen: Long, vLen: Long, propsLen: Long, etLen: Long): Long =
+    graft.cdc.Craft.GroupFixedBytes + graft.cdc.Craft.NilColumnMarkerBytes +
+      zzLen(pkLen) + zzLen(vLen) + zzLen(propsLen) + zzLen(etLen) +
+      pkLen + math.max(vLen, 0L) + propsLen + etLen
+
+  /** The size tables (meta [header, dict], body, groups) plus their
+    * own uvarint length; -1 marks an absent group. */
+  def sizeTables(header: Long, dict: Long, body: Long, newGs: Long, oldGs: Long,
+                 isUpdate: Boolean): Long = {
+    val firstGroup = if (newGs != -1L) newGs else oldGs
+    val tablesPre =
+      (1L + zzLen(header) + zzLen(dict - header)) +
+      (1L + zzLen(body)) +
+      (1L + zzLen(firstGroup) + (if (isUpdate) zzLen(oldGs - newGs) else 0L))
+    tablesPre + uvLen(tablesPre)
+  }
 }
 
 object WireExprs {
@@ -738,14 +705,6 @@ object WireExprs {
       new ExpressionInfo(classOf[AvroBytesHex].getName, "graft_avro_bytes_hex"),
       (children: Seq[Expression]) => AvroBytesHex(children.head)))
     ext.injectFunction((
-      FunctionIdentifier("graft_avro_decode_key"),
-      new ExpressionInfo(classOf[AvroDecodeKey].getName, "graft_avro_decode_key"),
-      (children: Seq[Expression]) => AvroDecodeKey(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_avro_decode_value"),
-      new ExpressionInfo(classOf[AvroDecodeValue].getName, "graft_avro_decode_value"),
-      (children: Seq[Expression]) => AvroDecodeValue(children.head)))
-    ext.injectFunction((
       FunctionIdentifier("graft_simple_avro_decode"),
       new ExpressionInfo(classOf[SimpleAvroDecode].getName, "graft_simple_avro_decode"),
       (children: Seq[Expression]) => SimpleAvroDecode(children.head)))
@@ -753,23 +712,11 @@ object WireExprs {
       FunctionIdentifier("graft_open_wire_decode"),
       new ExpressionInfo(classOf[OpenWireDecode].getName, "graft_open_wire_decode"),
       (children: Seq[Expression]) => OpenWireDecode(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_canal_decode"),
-      new ExpressionInfo(classOf[CanalDecode].getName, "graft_canal_decode"),
-      (children: Seq[Expression]) => CanalDecode(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simple_decode"),
-      new ExpressionInfo(classOf[SimpleDecode].getName, "graft_simple_decode"),
-      (children: Seq[Expression]) => SimpleDecode(children.head)))
   }
 
   def zvarintHex(n: Column): Column = call_function("graft_zvarint_hex", n)
   def avroBytesHex(unscaled: Column): Column =
     call_function("graft_avro_bytes_hex", unscaled)
-  def avroDecodeKey(msg: Column): Column =
-    call_function("graft_avro_decode_key", msg)
-  def avroDecodeValue(msg: Column): Column =
-    call_function("graft_avro_decode_value", msg)
   def simpleAvroDecode(msg: Column): Column =
     call_function("graft_simple_avro_decode", msg)
   def openWireDecode(keyWire: Column, valueWire: Column): Column =

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, 
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The native write side of the codecs: one `%.4f` renderer, the
+/** The native write side of the codecs: one fixed-point renderer, the
   * [[graft.cdc.TypedImage]] arms and one kernel per JSON/CSV wire
   * format (canal-json, debezium, the full debezium envelope, csv).
   *
@@ -90,7 +90,10 @@ final class WireBuf(capacity: Int) {
     this
   }
 
-  def num4(d: Double): WireBuf = { Num4.append(this, d); this }
+  /** `%.<scale>f` of `d` ([[FixedPoint]]). */
+  def fixed(d: Double, scale: Int): WireBuf = { FixedPoint.append(this, d, scale); this }
+
+  def length: Int = n
 
   /** Standard base64 (with `=` padding) of `len` bytes of `src`. */
   def base64(src: Array[Byte], len: Int): WireBuf = {
@@ -118,35 +121,41 @@ object WireBuf {
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/".getBytes(UTF_8)
 }
 
-/** The engine's one `%.4f` renderer: byte-identical to Spark's
-  * `format_string("%.4f", d)`, which formats through
-  * `java.util.Formatter` with `Locale.US` (so `-0.0000` for a negative
-  * value that rounds to zero, `NaN`, `Infinity`). Below 1e11 the four
-  * decimals come from one scaled multiply unless the scaled value lies
-  * within four ulps of a rounding midpoint; those values, the large
-  * ones and the non-finite ones take the Formatter itself. */
-object Num4 {
+/** The engine's one fixed-point number renderer, `%.<scale>f` for a
+  * scale of 2 or 4: byte-identical to Spark's `format_string`, which
+  * formats through `java.util.Formatter` with `Locale.US` (so `-0.0000`
+  * for a negative value that rounds to zero, `NaN`, `Infinity`). Below
+  * 1e11 the decimals come from one scaled multiply unless the scaled
+  * value lies within four ulps of a rounding midpoint; those values,
+  * the large ones and the non-finite ones take the Formatter itself. */
+object FixedPoint {
   private val local = ThreadLocal.withInitial[WireBuf](() => new WireBuf(32))
+  private val Scales = Array(1L, 10L, 100L, 1000L, 10000L)
+  private val Formats = Array.tabulate(5)(k => s"%.${k}f")
 
-  def append(b: WireBuf, d: Double): Unit = {
+  def append(b: WireBuf, d: Double, scale: Int): Unit = {
     val a = Math.abs(d)
     if (a < 1e11) {
-      val y = a * 10000.0
+      val p = Scales(scale)
+      val y = a * p
       val whole = Math.floor(y)
       val frac = y - whole
       if (Math.abs(frac - 0.5) > 4 * Math.ulp(y)) {
         val r = whole.toLong + (if (frac > 0.5) 1L else 0L)
         if (java.lang.Double.doubleToRawLongBits(d) < 0) b.byte('-')
-        b.long(r / 10000).byte('.').padded(r % 10000, 4)
+        b.long(r / p).byte('.').padded(r % p, scale)
         return
       }
     }
-    b.ascii(String.format(java.util.Locale.US, "%.4f", Double.box(d)))
+    b.ascii(String.format(java.util.Locale.US, Formats(scale), Double.box(d)))
   }
 
-  def render(d: Double): UTF8String = local.get().reset().num4(d).result()
+  def render(d: Double, scale: Int): UTF8String = local.get().reset().fixed(d, scale).result()
 
-  def string(d: Double): String = render(d).toString
+  def string(d: Double, scale: Int): String = render(d, scale).toString
+
+  /** The rendering's length in bytes, without building it. */
+  def length(d: Double, scale: Int): Int = local.get().reset().fixed(d, scale).length
 }
 
 /** The [[graft.cdc.TypedImage]] arms: each is derived from the row's
@@ -460,7 +469,7 @@ object WireKernels {
 
   /** `fmt`: `%.4f`, or the JSON literal null. */
   private def fmt(o: WireBuf, isNull: Boolean, d: Double): Unit =
-    if (isNull) o.bytes(nullWord) else o.num4(d)
+    if (isNull) o.bytes(nullWord) else o.fixed(d, 4)
 
   private def canal(r: Image, tidb: Boolean): Boolean = {
     if (r.ctsNull || r.stsNull || r.pkNull || r.schema == null || r.table == null ||
@@ -607,7 +616,7 @@ object WireKernels {
     if (r.table != null) sep().csvQuoted(r.table)
     if (!r.ctsNull) sep().long(r.cts)
     if (!r.pkNull) sep().long(r.pk)
-    if (r.afterNull) sep().bytes(csvNull) else sep().num4(r.after)
+    if (r.afterNull) sep().bytes(csvNull) else sep().fixed(r.after, 4)
     if (r.props != null) sep().csvQuoted(r.props)
     if (!r.ctsNull) { sep().byte('"'); ImageArms.dateStr(o, r.cts); o.byte('"') }
     if (!r.ctsNull) { sep().byte('"'); ImageArms.dtStr(o, r.cts); o.byte('"') }
@@ -616,14 +625,14 @@ object WireKernels {
   }
 }
 
-/** `%.4f` of a double column ([[Num4]]); NULL stays NULL. */
+/** `%.4f` of a double column ([[FixedPoint]]); NULL stays NULL. */
 case class Fixed4(child: Expression) extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(DoubleType)
   override def dataType: DataType = StringType
   override def prettyName: String = "graft_fixed4"
-  override def nullSafeEval(d: Any): Any = Num4.render(d.asInstanceOf[Double])
+  override def nullSafeEval(d: Any): Any = FixedPoint.render(d.asInstanceOf[Double], 4)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, d => s"graft.functions.Num4.render($d)")
+    defineCodeGen(ctx, ev, d => s"graft.functions.FixedPoint.render($d, 4)")
   override protected def withNewChildInternal(newChild: Expression): Fixed4 =
     copy(child = newChild)
 }

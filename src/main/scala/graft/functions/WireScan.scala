@@ -8,14 +8,32 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The read side of the JSON/CSV wires: one single-pass scanner per
-  * format, all in the [[CanalScan]] shape. A scanner walks the message
-  * once, keeps the fields it needs by key (key-order independent),
-  * skips the rest, converts the typed arms straight to their canonical
-  * forms and accepts a message only if it consumes every byte; any
-  * malformed message decodes to NULL. The DuckDB oracles extract the
-  * same fields with their own JSON and regex functions, so the oracle
-  * equality also checks the scanners. */
+/** The read side of the wires: one single-pass scanner per format, each
+  * registered as `graft_<format>_decode` through [[WireScanExprs]].
+  *
+  * A JSON scanner walks the message once on the shared [[JsonCursor]]:
+  * it keeps the fields it needs by key (key-order independent), skips
+  * the rest (nested metadata objects by a depth counter), converts the
+  * typed arms straight to their canonical forms and accepts a message
+  * only if it consumes every byte. Malformed input decodes to NULL.
+  * This is the `from_json` contract, including whitespace: the cursor
+  * skips inter-token whitespace at every structural position, so a
+  * pretty-printed rendering decodes exactly like the compact wire, at
+  * one failed char compare per skip site on the compact wire. Numbers
+  * parse with `Double.parseDouble`, the correctly rounded IEEE result
+  * Jackson gives for the same token. One documented leniency: bare
+  * `NaN`/`Infinity` tokens parse, because the `%.4f` renderer writes
+  * them for non-finite doubles and a consumer accepts its own wire.
+  *
+  * Jackson `from_json` is not used because tokenizing the whole message
+  * was the entire decode cost above the encode: the canal payload's
+  * fixed `sqlType`/`mysqlType` objects are ~40 % of its bytes (sf0.1:
+  * parse ~1.8 s of a 2.6 s query; a typed Jackson schema was slower,
+  * 3.7 s), and the simple-protocol decode wall at the sf10 tier was
+  * Jackson's tokenization of 10M messages.
+  *
+  * The DuckDB oracles extract the same fields with their own JSON and
+  * regex functions, so the oracle equality also checks the scanners. */
 object WireScan {
   def utf(x: String): UTF8String = UTF8String.fromString(x)
 
@@ -56,9 +74,11 @@ object WireScan {
   }
 }
 
-/** The JSON walking primitives every wire scanner shares: one cursor
-  * over one message. Errors throw; the scanner's entry point turns
-  * them into a NULL row. */
+/** The one JSON walker: a cursor over one message. The structural
+  * walkers ([[message]], [[obj]], [[arr]]) skip whitespace around every
+  * token they consume, so the value readers always start on a value's
+  * first char. Errors throw; the scanner's entry point turns them into
+  * a NULL row. */
 private[functions] abstract class JsonCursor(s: String) {
   protected var pos = 0
   protected val n: Int = s.length
@@ -66,6 +86,11 @@ private[functions] abstract class JsonCursor(s: String) {
   protected def err(): Nothing = throw new IllegalArgumentException("malformed message")
   protected def ch: Char = { if (pos >= n) err(); s.charAt(pos) }
   protected def eat(c: Char): Unit = { if (ch != c) err(); pos += 1 }
+
+  /** Skip JSON whitespace; one compare for any char above the space. */
+  private def ws(): Unit =
+    while (pos < n && { val c = s.charAt(pos)
+      c <= ' ' && (c == ' ' || c == '\n' || c == '\r' || c == '\t') }) pos += 1
 
   /** Read a JSON string at an opening quote. Fast path is a zero-copy
     * substring; any backslash falls to the unescape pass. */
@@ -113,7 +138,7 @@ private[functions] abstract class JsonCursor(s: String) {
   protected def scalarToken(): String = {
     val start = pos
     while (pos < n && { val c = s.charAt(pos)
-      c != ',' && c != '}' && c != ']' }) pos += 1
+      c > ' ' && c != ',' && c != '}' && c != ']' }) pos += 1
     if (pos == start) err()
     s.substring(start, pos)
   }
@@ -157,20 +182,252 @@ private[functions] abstract class JsonCursor(s: String) {
   /** Walk an object, dispatching each key's value to `handle` (which
     * must consume it). */
   protected def obj(handle: String => Unit): Unit = {
-    eat('{')
+    eat('{'); ws()
     if (ch == '}') { pos += 1; return }
     var more = true
     while (more) {
       val key = readString()
-      eat(':')
+      ws(); eat(':'); ws()
       handle(key)
-      if (ch == ',') pos += 1
+      ws()
+      if (ch == ',') { pos += 1; ws() }
       else { eat('}'); more = false }
     }
   }
 
-  /** The whole-message invariant: the scan consumed every byte. */
-  protected def end(): Unit = if (pos != n) err()
+  /** Walk an array, handing each element's index to `elem` (which must
+    * consume it); the element count. */
+  protected def arr(elem: Int => Unit): Int = {
+    eat('['); ws()
+    if (ch == ']') { pos += 1; return 0 }
+    var k = 0
+    var more = true
+    while (more) {
+      elem(k); k += 1
+      ws()
+      if (ch == ',') { pos += 1; ws() }
+      else { eat(']'); more = false }
+    }
+    k
+  }
+
+  /** The whole message: one value, optionally surrounded by whitespace,
+    * that consumes every byte. */
+  protected def message[T](value: => T): T = {
+    ws()
+    val r = value
+    ws()
+    if (pos != n) err()
+    r
+  }
+}
+
+/** Scanner for the canal-json wire (consumer side of A19/A57/A65;
+  * reference: pkg/sink/codec/canal/canal_json_message.go, the
+  * JSONMessage field set and the decoder's isDdl/TIDB_WATERMARK
+  * routing at :126-140). The event image rides `data[0]`; further
+  * elements are skipped. */
+object CanalScan {
+  val Struct: StructType = StructType(Seq(
+    StructField("es", LongType),
+    StructField("ts", LongType),
+    StructField("database", StringType),
+    StructField("table", StringType),
+    StructField("type", StringType),
+    StructField("is_ddl", BooleanType),
+    StructField("sql", StringType),
+    StructField("pk", LongType),
+    StructField("value", StringType),      // raw number token; null image -> null
+    StructField("old_value", StringType),  // old[0].value token
+    // the typed arms decode straight to their canonical integer forms
+    // here (the consumer-side inverse of each helper.go rendering):
+    // leaving them as strings for Catalyst datediff/to_timestamp/
+    // regexp_replace arms pushed the fused render+scan+arms WSCG
+    // method over HotSpot's 8000-bytecode JIT ceiling and the whole
+    // stage ran interpreted (measured: sf10 117 s vs ~5 s for the
+    // same scan without the arms)
+    StructField("c_date_days", LongType),
+    StructField("c_dt_sec", LongType),
+    StructField("c_dec_e4", LongType),
+    StructField("c_enum_idx", LongType),
+    StructField("c_bit_val", LongType),
+    StructField("c_set_mask", LongType),
+    StructField("c_bin", StringType),
+    StructField("c_time_sec", LongType),
+    StructField("c_year_val", LongType),
+    StructField("c_ubig", StringType),
+    // GEOMETRY + NULL arms (r12): always JSON null on the wire
+    // (java.go:136-138 — geometry unsupported; TypeNull by definition)
+    // — decoded as null-preserving raw tokens so a non-null value in a
+    // foreign wire still surfaces instead of being silently dropped
+    StructField("c_geo", StringType),
+    StructField("c_null", StringType),
+    StructField("commit_ts_ext", LongType),   // _tidb.commitTs
+    StructField("watermark_ts", LongType)))   // _tidb.watermarkTs
+
+  // struct slot indices (must match Struct above)
+  private final val ES = 0
+  private final val TS = 1
+  private final val DB = 2
+  private final val TBL = 3
+  private final val TYP = 4
+  private final val DDL = 5
+  private final val SQL = 6
+  private final val PK = 7
+  private final val VAL = 8
+  private final val OLD = 9
+  private final val CDATE = 10 // c_date..c_null occupy 10..21 in wire order
+  private final val CTS_EXT = 22
+  private final val WMARK = 23
+  private final val NumSlots = 24
+
+  private final class Scanner(s: String) extends JsonCursor(s) {
+    import WireScan.{dateDays, decE4, dtSec, timeSec, utf}
+    private val out = new Array[Any](NumSlots)
+
+    /** A raw token or string that is usually JSON null. */
+    private def rawOrNull(slot: Int): Unit =
+      if (ch == '"') out(slot) = utf(readString())
+      else { val t = scalarToken(); if (t != "null") out(slot) = utf(t) }
+
+    // the ten typed-image arms ride data[0] in fixed slots 10..19
+    private def dataKey(key: String): Unit = key match {
+      case "pk"     => out(PK) = longToken()
+      case "value"  =>
+        val t = scalarToken(); if (t != "null") out(VAL) = utf(t)
+      case "c_date" => out(CDATE) = dateDays(readString())
+      case "c_dt"   => out(CDATE + 1) = dtSec(readString())
+      case "c_dec"  => out(CDATE + 2) = decE4(readString())
+      case "c_enum" => out(CDATE + 3) = java.lang.Long.parseLong(readString())
+      case "c_bit"  => out(CDATE + 4) = java.lang.Long.parseLong(readString())
+      case "c_set"  => out(CDATE + 5) = java.lang.Long.parseLong(readString())
+      case "c_bin"  => out(CDATE + 6) = utf(readString())
+      case "c_time" => out(CDATE + 7) = timeSec(readString())
+      case "c_year" => out(CDATE + 8) = java.lang.Long.parseLong(readString())
+      case "c_ubig" => out(CDATE + 9) = utf(readString())
+      case "c_geo"  => rawOrNull(CDATE + 10)
+      case "c_null" => rawOrNull(CDATE + 11)
+      case _        => skipValue() // props, unknown
+    }
+
+    /** `data` or `old`: null, or a non-empty array whose first element
+      * is the image. */
+    private def image(first: String => Unit): Unit =
+      if (!nullToken() && arr(i => if (i == 0) obj(first) else skipValue()) == 0) err()
+
+    private def topKey(key: String): Unit = key match {
+      case "database" => out(DB) = utf(readString())
+      case "table"    => out(TBL) = utf(readString())
+      case "type"     => out(TYP) = utf(readString())
+      case "isDdl"    => out(DDL) = (scalarToken() == "true")
+      case "sql"      => out(SQL) = utf(readString())
+      case "es"       => out(ES) = longToken()
+      case "ts"       => out(TS) = longToken()
+      case "data"     => image(dataKey)
+      case "old"      => image {
+        case "value" => val t = scalarToken(); if (t != "null") out(OLD) = utf(t)
+        case _       => skipValue()
+      }
+      case "_tidb" => obj {
+        case "commitTs"    => out(CTS_EXT) = longToken()
+        case "watermarkTs" => out(WMARK) = longToken()
+        case _             => skipValue()
+      }
+      case _ => skipValue() // id, pkNames, sqlType, mysqlType, unknown
+    }
+
+    def run(): InternalRow = { message(obj(topKey)); new GenericInternalRow(out) }
+  }
+
+  /** NULL on malformed input. */
+  def decode(u: UTF8String): InternalRow =
+    try new Scanner(u.toString).run() catch { case _: Exception => null }
+}
+
+/** Scanner for the simple-protocol JSON wire (consumer side of
+  * A34/A45; reference: pkg/sink/codec/simple/message.go, the field set
+  * the decoder.go:309-356 consumer reads). Props payloads, pkNames and
+  * the tableSchema column list (except its count) are skipped. */
+object SimpleScan {
+  val Struct: StructType = StructType(Seq(
+    StructField("database", StringType),
+    StructField("table", StringType),
+    StructField("typ", StringType),
+    StructField("commit_ts", LongType),
+    StructField("schema_version", LongType),
+    StructField("sql", StringType),
+    StructField("has_data", LongType),      // 1 when a data image exists
+    StructField("data_pk", LongType),
+    StructField("data_value", DoubleType),
+    StructField("has_old", LongType),
+    StructField("old_pk", LongType),
+    StructField("old_value", DoubleType),
+    StructField("ts_schema", StringType),
+    StructField("ts_table", StringType),
+    StructField("ts_version", LongType),
+    StructField("ts_cols", LongType)))
+
+  private final val DB = 0
+  private final val TBL = 1
+  private final val TYP = 2
+  private final val CTS = 3
+  private final val SVER = 4
+  private final val SQL = 5
+  private final val HASD = 6
+  private final val DPK = 7
+  private final val DVAL = 8
+  private final val HASO = 9
+  private final val OPK = 10
+  private final val OVAL = 11
+  private final val TSS = 12
+  private final val TST = 13
+  private final val TSV = 14
+  private final val TSC = 15
+  private final val NumSlots = 16
+
+  private final class Scanner(s: String) extends JsonCursor(s) {
+    import WireScan.utf
+    private val out = new Array[Any](NumSlots)
+
+    /** `data` or `old`: null, or the image object. */
+    private def image(hasSlot: Int, pkSlot: Int, valSlot: Int): Unit = if (!nullToken()) {
+      out(hasSlot) = 1L
+      obj {
+        case "pk" => out(pkSlot) = longToken()
+        case "value" =>
+          val t = scalarToken()
+          if (t != "null") out(valSlot) = java.lang.Double.parseDouble(t)
+        case _ => skipValue() // props
+      }
+    }
+
+    private def tableSchema(): Unit = if (!nullToken()) obj {
+      case "schema"  => out(TSS) = utf(readString())
+      case "table"   => out(TST) = utf(readString())
+      case "version" => out(TSV) = longToken()
+      case "columns" => out(TSC) = arr(_ => skipValue()).toLong
+      case _         => skipValue()
+    }
+
+    private def topKey(key: String): Unit = key match {
+      case "database"      => out(DB) = utf(readString())
+      case "table"         => out(TBL) = utf(readString())
+      case "type"          => out(TYP) = utf(readString())
+      case "commitTs"      => out(CTS) = longToken()
+      case "schemaVersion" => out(SVER) = longToken()
+      case "sql"           => out(SQL) = utf(readString())
+      case "data"          => image(HASD, DPK, DVAL)
+      case "old"           => image(HASO, OPK, OVAL)
+      case "tableSchema"   => tableSchema()
+      case _ => skipValue() // version, tableID, buildTs, watermarkTs, …
+    }
+
+    def run(): InternalRow = { message(obj(topKey)); new GenericInternalRow(out) }
+  }
+
+  /** NULL on malformed input. */
+  def decode(u: UTF8String): InternalRow =
+    try new Scanner(u.toString).run() catch { case _: Exception => null }
 }
 
 /** Scanner for the debezium wire (consumer side of A21 and A70;
@@ -253,9 +510,10 @@ object DebeziumScan {
     }
 
     def run(): InternalRow = {
-      if (typed) obj(event)
-      else obj { case "payload" => obj(event); case _ => skipValue() }
-      end()
+      message {
+        if (typed) obj(event)
+        else obj { case "payload" => obj(event); case _ => skipValue() }
+      }
       out(4) = if (after(0) != null) after(0) else before(0)
       out(5) = before(1)
       out(6) = after(1)
@@ -290,13 +548,12 @@ object OpenScan {
     import WireScan.{double, utf}
     def key(): InternalRow = {
       val out = new Array[Any](3)
-      obj {
+      message(obj {
         case "ts"  => if (!nullToken()) out(0) = longToken()
         case "scm" => if (!nullToken()) out(1) = utf(readString())
         case "tbl" => if (!nullToken()) out(2) = utf(readString())
         case _     => skipValue()
-      }
-      end()
+      })
       new GenericInternalRow(out)
     }
     def value(): InternalRow = {
@@ -314,12 +571,11 @@ object OpenScan {
         }
         true
       }
-      obj {
+      message(obj {
         case "u" => image(u)
         case "d" => isDelete = image(d)
         case _   => skipValue()
-      }
-      end()
+      })
       new GenericInternalRow(Array[Any](isDelete,
         if (u(0) != null) u(0) else d(0), if (u(1) != null) u(1) else d(1)))
     }
@@ -398,14 +654,14 @@ object CsvScan {
     } catch { case _: Exception => null }
 }
 
-/** A scanner over one message column: NULL in, NULL out, and NULL for
-  * a malformed message (the generated code null-checks the result, the
-  * [[CanalDecode]] convention). */
+/** A registered decoder over one message column. NULL in gives NULL
+  * out, and the generated code null-checks the entry point's result,
+  * since a malformed JSON or csv message decodes to NULL. */
 case class WireScanDecode(format: String, child: Expression) extends UnaryExpression {
-  private def scanner: WireScanExprs.Scanner = WireScanExprs.Scanners(format)
+  @transient private lazy val scanner: WireScanExprs.Scanner = WireScanExprs.Scanners(format)
   override def dataType: DataType = scanner.struct
   override def nullable: Boolean = true
-  override def prettyName: String = s"graft_${format}_decode"
+  override def prettyName: String = scanner.name
   override def nullSafeEval(a: Any): Any = scanner.decode(a.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v =>
@@ -418,29 +674,38 @@ case class WireScanDecode(format: String, child: Expression) extends UnaryExpres
 }
 
 object WireScanExprs {
-  /** A scanner's row type, its entry point and that entry point's name
-    * for generated code. */
-  final case class Scanner(struct: StructType, decode: UTF8String => InternalRow, call: String)
+  /** A decoder's SQL name, row type, entry point and that entry point's
+    * name for generated code. */
+  final case class Scanner(name: String, struct: StructType,
+                           decode: UTF8String => InternalRow, call: String)
 
+  private def scanner(format: String, struct: StructType, decode: UTF8String => InternalRow,
+                      call: String): (String, Scanner) =
+    format -> Scanner(s"graft_${format}_decode", struct, decode, call)
+
+  /** Every message decoder by format. The avro pair keeps its SQL
+    * names, and its malformed frames decode to a `valid` = 0 row
+    * rather than NULL. */
   val Scanners: Map[String, Scanner] = Map(
-    "debezium" -> Scanner(DebeziumScan.Struct, DebeziumScan.decode, "DebeziumScan.decode"),
-    "debezium_envelope" -> Scanner(DebeziumScan.EnvelopeStruct, DebeziumScan.decodeEnvelope,
+    scanner("canal", CanalScan.Struct, CanalScan.decode, "CanalScan.decode"),
+    scanner("simple", SimpleScan.Struct, SimpleScan.decode, "SimpleScan.decode"),
+    scanner("debezium", DebeziumScan.Struct, DebeziumScan.decode, "DebeziumScan.decode"),
+    scanner("debezium_envelope", DebeziumScan.EnvelopeStruct, DebeziumScan.decodeEnvelope,
       "DebeziumScan.decodeEnvelope"),
-    "csv" -> Scanner(CsvScan.Struct, CsvScan.decode, "CsvScan.decode"),
-    "open_key" -> Scanner(OpenScan.KeyStruct, OpenScan.decodeKey, "OpenScan.decodeKey"),
-    "open_value" -> Scanner(OpenScan.ValueStruct, OpenScan.decodeValue, "OpenScan.decodeValue"))
+    scanner("csv", CsvScan.Struct, CsvScan.decode, "CsvScan.decode"),
+    scanner("open_key", OpenScan.KeyStruct, OpenScan.decodeKey, "OpenScan.decodeKey"),
+    scanner("open_value", OpenScan.ValueStruct, OpenScan.decodeValue, "OpenScan.decodeValue"),
+    "avro_key" -> Scanner("graft_avro_decode_key", WireHex.KeyStruct, WireHex.avroDecodeKey,
+      "WireHex.avroDecodeKey"),
+    "avro_value" -> Scanner("graft_avro_decode_value", WireHex.ValueStruct,
+      WireHex.avroDecodeValue, "WireHex.avroDecodeValue"))
 
   def register(ext: SparkSessionExtensions): Unit =
-    for (f <- Scanners.keys)
-      ext.injectFunction((FunctionIdentifier(s"graft_${f}_decode"),
-        new ExpressionInfo(classOf[WireScanDecode].getName, s"graft_${f}_decode"),
-        (children: Seq[Expression]) => WireScanDecode(f, children.head)))
+    for ((format, sc) <- Scanners)
+      ext.injectFunction((FunctionIdentifier(sc.name),
+        new ExpressionInfo(classOf[WireScanDecode].getName, sc.name),
+        (children: Seq[Expression]) => WireScanDecode(format, children.head)))
 
-  def debeziumDecode(msg: Column): Column = call_function("graft_debezium_decode", msg)
-  def debeziumEnvelopeDecode(msg: Column): Column =
-    call_function("graft_debezium_envelope_decode", msg)
-  def csvDecode(line: Column): Column = call_function("graft_csv_decode", line)
-  def openKeyDecode(key: Column): Column = call_function("graft_open_key_decode", key)
-  def openValueDecode(value: Column): Column =
-    call_function("graft_open_value_decode", value)
+  /** The decoded struct of each message of a [[Scanners]] format. */
+  def decode(format: String, msg: Column): Column = call_function(Scanners(format).name, msg)
 }

@@ -632,29 +632,68 @@ class OperatorSemanticsSpec extends AnyFunSuite {
   }
 
   test("graft_simple_decode honors the from_json whitespace contract") {
-    import graft.functions.SimpleScan
-    val compact = """{"database":"d b","table":"t","type":"UPDATE","commitTs":42,""" +
+    import graft.functions.{CanalScan, DebeziumScan, OpenScan, SimpleScan, WireKernels}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.StructType
+    import org.apache.spark.unsafe.types.UTF8String
+    import org.apache.spark.unsafe.types.UTF8String.{fromString => utf}
+    // every JSON scanner: a compact message and its pretty-printed copy
+    // (whitespace at every structural position, none inside a string)
+    // decode field for field alike
+    def rendered(format: Int, op: String): String = WireKernels.render(format, false, 42L,
+      false, 41L, utf("d b"), utf("t:1"), utf(op), false, 7L, false, 1.5, false, -2.25,
+      utf("""{"x": [1, 2]}"""), utf("view")).toString
+    val simple = """{"database":"d b","table":"t","type":"UPDATE","commitTs":42,""" +
       """"schemaVersion":4,"data":{"pk":7,"value":1.5000,"props":{"x":[1,2]}},""" +
       """"old":{"pk":7,"value":null},"tableSchema":{"schema":"d b","table":"t",""" +
       """"version":4,"columns":[{"name":"pk"},{"name":"v"},{"name":"w"}]},"tableID":9}"""
-    // the same message pretty-printed: whitespace at every structural
-    // position (after {, around :, around ,, inside arrays, trailing)
-    val pretty = compact
-      .replace("{", "{ ").replace("}", " }")
-      .replace("[", "[ ").replace("]", " ]")
-      .replace(":", " : ").replace(",", " ,\n ") + "  \n"
-    val a = SimpleScan.decode(org.apache.spark.unsafe.types.UTF8String.fromString(compact))
-    val b = SimpleScan.decode(org.apache.spark.unsafe.types.UTF8String.fromString(pretty))
-    assert(a != null, "compact wire must decode")
-    assert(b != null, "pretty-printed wire must decode (from_json contract)")
-    val n = SimpleScan.Struct.length
-    assert((0 until n).forall { i =>
-      val (x, y) = (a.get(i, SimpleScan.Struct(i).dataType), b.get(i, SimpleScan.Struct(i).dataType))
-      if (x == null) y == null else x == y
-    }, "pretty-printed decode must equal compact decode field-for-field")
-    // the ':'-replacement above cannot corrupt string contents: keys and
-    // values in this message carry no ':'; a value with spaces survives
-    assert(a.get(0, SimpleScan.Struct(0).dataType).toString == "d b")
+    val cases: Seq[(String, String, UTF8String => InternalRow, StructType)] = Seq(
+      ("simple", simple, SimpleScan.decode, SimpleScan.Struct),
+      ("canal", rendered(WireKernels.Canal, "U"), CanalScan.decode, CanalScan.Struct),
+      ("canal tidb", rendered(WireKernels.CanalTidb, "D"), CanalScan.decode, CanalScan.Struct),
+      ("debezium", rendered(WireKernels.Debezium, "U"), DebeziumScan.decode, DebeziumScan.Struct),
+      ("debezium envelope", rendered(WireKernels.DebeziumEnvelope, "U"),
+        DebeziumScan.decodeEnvelope, DebeziumScan.EnvelopeStruct),
+      ("open key", """{"ts":42,"scm":"d b","tbl":"t:1","t":1}""", OpenScan.decodeKey,
+        OpenScan.KeyStruct),
+      ("open value", """{"u":{"pk":7,"value":1.5000,"props":{"x":[1,2]}}}""",
+        OpenScan.decodeValue, OpenScan.ValueStruct))
+    /** Whitespace around every structural char outside strings. */
+    def pretty(m: String): String = {
+      val b = new StringBuilder("  \n")
+      var inString = false
+      var i = 0
+      while (i < m.length) {
+        val c = m.charAt(i)
+        if (inString) {
+          b += c
+          if (c == '\\') { b += m.charAt(i + 1); i += 1 }
+          else if (c == '"') inString = false
+        } else c match {
+          case '"' => b += c; inString = true
+          case '{' | '[' => b ++= s"$c \n\t "
+          case '}' | ']' => b ++= s" \r\n$c"
+          case ':' | ',' => b ++= s" $c\n  "
+          case _ => b += c
+        }
+        i += 1
+      }
+      b ++= " \n"
+      b.toString
+    }
+    for ((name, compact, decode, struct) <- cases) {
+      val a = decode(utf(compact))
+      val b = decode(utf(pretty(compact)))
+      assert(a != null, s"$name: compact wire must decode")
+      assert(b != null, s"$name: pretty-printed wire must decode (from_json contract)")
+      val differ = struct.fields.indices.filterNot { i =>
+        val (x, y) = (a.get(i, struct(i).dataType), b.get(i, struct(i).dataType))
+        if (x == null) y == null else x == y
+      }.map(struct(_).name)
+      assert(differ.isEmpty, s"$name: pretty-printed decode differs in ${differ.mkString(", ")}")
+    }
+    // a value with a space survives
+    assert(SimpleScan.decode(utf(simple)).getUTF8String(0).toString == "d b")
   }
 
   test("row checksum verifies clean streams and catches a single flipped byte") {

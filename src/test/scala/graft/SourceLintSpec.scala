@@ -12,14 +12,26 @@ class SourceLintSpec extends AnyFunSuite {
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
 
-  /** `file:line` of every match of `re` in src/main, `allowed` excepted. */
-  private def hits(re: scala.util.matching.Regex, allowed: String): Seq[String] = {
+  /** `file:line` of every match of `re` in src/main, except those in an
+    * `allowed` place: a file (`functions/WireRender.scala`) or one
+    * member of a file (`cdc/Craft.scala#frameComposed`, from its `def`
+    * to the next line at the same or a smaller indent). */
+  private def hits(re: scala.util.matching.Regex, allowed: String*): Seq[String] = {
     assert(main.isDirectory, s"run from the repository root (no ${main.getPath})")
-    scalaFiles(main).filterNot(_.getPath.endsWith(allowed)).flatMap { f =>
+    scalaFiles(main).flatMap { f =>
       val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      re.findAllMatchIn(src).map { m =>
-        s"${f.getPath}:${src.substring(0, m.start).count(_ == '\n') + 1}"
+      val spans = allowed.map(_.split('#')).filter(a => f.getPath.endsWith(a(0))).map {
+        case Array(_) => (0, src.length)
+        case Array(_, member) =>
+          val d = ("""(?m)^( *).*\bdef """ + member + """\b""").r.findFirstMatchIn(src)
+            .getOrElse(fail(s"${f.getPath} has no def $member"))
+          val body = src.indexOf('\n', d.end) + 1
+          val end = ("""(?m)^ {0,""" + d.group(1).length + """}\S""").r
+            .findFirstMatchIn(src.substring(body)).fold(src.length)(body + _.start)
+          (d.start, end)
       }
+      re.findAllMatchIn(src).filterNot(m => spans.exists { case (a, b) => m.start >= a && m.start < b })
+        .map(m => s"${f.getPath}:${src.substring(0, m.start).count(_ == '\n') + 1}")
     }
   }
 
@@ -55,14 +67,26 @@ class SourceLintSpec extends AnyFunSuite {
     assert(found.isEmpty, "use graft.util.Tables.checkpointed for: " + found.mkString(", "))
   }
 
-  /** Every `%.4f` number of the engine is rendered by the one native
-    * renderer ([[graft.functions.Num4]], reached from Columns through
-    * `WireRender.fixed4`), which matches Spark's `format_string`
-    * byte for byte. A `format_string("%.4f"` or `String.format` with
-    * that pattern elsewhere would be a second renderer. */
+  /** Every fixed-point number of the engine (`%.2f`, `%.4f`) is
+    * rendered by the one native renderer ([[graft.functions.FixedPoint]],
+    * reached from Columns through `WireRender.fixed4`), which matches
+    * Spark's `format_string` byte for byte, and no row renders a number
+    * through `java.util.Formatter`. A `format_string` or `String.format`
+    * with a `%.Nf` or `%0NX` pattern elsewhere would be a second
+    * renderer. Bench's output line and the composed parity reference
+    * of the craft layout are the exceptions. */
   test("%.4f numbers are rendered only by the native renderer") {
-    val found = hits("""(format_string|String\.format)\s*\([^)]*"%\.4f"""".r,
-      "functions/WireRender.scala")
-    assert(found.isEmpty, "use graft.functions.WireRender.fixed4 for: " + found.mkString(", "))
+    val found = hits("""(format_string|String\.format)\s*\([^)]*"%(\.\d+f|0\d+X)"""".r,
+      "functions/WireRender.scala", "graft/Bench.scala#f3", "cdc/Craft.scala#frameComposed")
+    assert(found.isEmpty, "use graft.functions.FixedPoint for: " + found.mkString(", "))
+  }
+
+  /** Every message decoder is a native scanner registered through
+    * [[graft.functions.WireScanExprs]]; Spark's `from_json` and
+    * `from_csv` tokenize the whole message interpreted. The A46
+    * checksum verifier is the one remaining parse. */
+  test("messages are parsed only by the registered wire scanners") {
+    val found = hits("""\bfrom_(json|csv)\s*\(""".r, "cdc/Checksum.scala#verifyMessages")
+    assert(found.isEmpty, "use graft.functions.WireScanExprs.decode for: " + found.mkString(", "))
   }
 }

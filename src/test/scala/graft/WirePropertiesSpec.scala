@@ -3,7 +3,7 @@ package graft
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{CsvScan, DebeziumScan, WireHex, WireKernels}
+import graft.functions.{CanalScan, CsvScan, DebeziumScan, FixedPoint, OpenScan, SimpleScan, WireHex, WireKernels}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Property-based hardening of the wire layer: the targeted boundary
@@ -77,22 +77,28 @@ class WirePropertiesSpec extends AnyFunSuite {
         WireHex.zvarintHex(n).toString + "FF"))
       r.getLong(2) == 0L
     })
-    // the JSON and CSV scanners: total on arbitrary text, and a real
-    // message decodes only whole — one with trailing bytes is NULL, and
-    // so is a truncated JSON message (a csv line cut at a comma is a
-    // shorter valid line)
-    val scanners: Seq[(String, String => Any, Int, Boolean)] = Seq(
-      ("debezium", s => DebeziumScan.decode(u(s)), WireKernels.Debezium, true),
+    // the JSON and CSV scanners: total on arbitrary text, and a
+    // kernel-rendered message decodes only whole — one with trailing
+    // bytes is NULL, and so is a truncated JSON message (a csv line cut
+    // at a comma is a shorter valid line)
+    val scanners: Seq[(String, String => Any, Seq[Int])] = Seq(
+      ("canal", s => CanalScan.decode(u(s)), Seq(WireKernels.Canal, WireKernels.CanalTidb)),
+      ("debezium", s => DebeziumScan.decode(u(s)), Seq(WireKernels.Debezium)),
       ("debezium envelope", s => DebeziumScan.decodeEnvelope(u(s)),
-        WireKernels.DebeziumEnvelope, true),
-      ("csv", s => CsvScan.decode(u(s)), WireKernels.Csv, false))
-    for ((name, decode, format, json) <- scanners) {
+        Seq(WireKernels.DebeziumEnvelope)),
+      ("csv", s => CsvScan.decode(u(s)), Seq(WireKernels.Csv)),
+      ("open key", s => OpenScan.decodeKey(u(s)), Nil),
+      ("open value", s => OpenScan.decodeValue(u(s)), Nil),
+      ("simple", s => SimpleScan.decode(u(s)), Nil))
+    for ((name, decode, formats) <- scanners) {
       check(s"$name total")(Prop.forAll(Gen.oneOf(garbage, jsonish)) { s => decode(s); true })
-      check(s"$name partial consumes")(Prop.forAll(image, Gen.chooseNum(1, 40)) { (img, cut) =>
-        val msg = img.render(format)
-        decode(msg) != null && decode(msg + "}") == null && decode(msg + ",") == null &&
-          (!json || decode(msg.dropRight(math.min(cut, msg.length))) == null)
-      })
+      for (format <- formats)
+        check(s"$name/$format partial consumes")(Prop.forAll(image, Gen.chooseNum(1, 40)) {
+          (img, cut) =>
+            val msg = img.render(format)
+            decode(msg) != null && decode(msg + "}") == null && decode(msg + ",") == null &&
+              (format == WireKernels.Csv || decode(msg.dropRight(math.min(cut, msg.length))) == null)
+        })
     }
   }
 
@@ -123,30 +129,42 @@ class WirePropertiesSpec extends AnyFunSuite {
     et <- Gen.oneOf(cdc.TypedImage.enumElems)
   } yield Image(cts, sts, schema, table, op, pk, before, after, s"""{"k": $k}""", et)
 
-  private lazy val doubles: Gen[Double] = Gen.frequency(
-    4 -> Gen.chooseNum(-1e6, 1e6),
-    2 -> Gen.chooseNum(-1e13, 1e13),
-    2 -> Gen.long.map(java.lang.Double.longBitsToDouble), // every bit pattern
-    // x.xxxx5 midpoints and their neighbours
-    2 -> Gen.chooseNum(-100000000L, 100000000L).map(n => n / 10000.0 + 0.00005),
-    1 -> Gen.chooseNum(-100000000L, 100000000L).map(n =>
-      Math.nextUp(n / 10000.0 + 0.00005)),
-    1 -> Gen.oneOf(fixedDoubles))
+  private lazy val doubles: Gen[Double] = doublesAt(4)
 
-  /** Signs, signed zero, non-finite values, x.xxxx5 midpoints,
-    * subnormals and large magnitudes. */
+  /** Any double, weighted towards the rounding midpoints of `scale`
+    * decimals (x.xx5 for 2, x.xxxx5 for 4) and their neighbours. */
+  private def doublesAt(scale: Int): Gen[Double] = {
+    val p = math.pow(10, scale)
+    Gen.frequency(
+      4 -> Gen.chooseNum(-1e6, 1e6),
+      2 -> Gen.chooseNum(-1e13, 1e13),
+      2 -> Gen.long.map(java.lang.Double.longBitsToDouble), // every bit pattern
+      2 -> Gen.chooseNum(-100000000L, 100000000L).map(n => n / p + 0.5 / p),
+      1 -> Gen.chooseNum(-100000000L, 100000000L).map(n => Math.nextUp(n / p + 0.5 / p)),
+      1 -> Gen.oneOf(fixedDoubles))
+  }
+
+  /** Signs, signed zero, non-finite values, x.xx5 and x.xxxx5
+    * midpoints, subnormals and large magnitudes. */
   private lazy val fixedDoubles: Seq[Double] = Seq(-0.0, 0.0, Double.NaN,
     Double.PositiveInfinity, Double.NegativeInfinity, Double.MinPositiveValue,
     -Double.MinPositiveValue, java.lang.Double.MIN_NORMAL, 1e-310, 1e300, -1e300,
     Double.MaxValue, -Double.MaxValue, 0.00005, -0.00005, 0.00015, 0.5, -0.5, 1.00005,
     2.12345, -2.12345, 1234.56785, 12345678.12345, 99999.99995, -1e-5, -4.9e-5, 49.99995,
-    1e11, 1e15, 9.2e18, -12.34, 34.8)
+    1e11, 1e15, 9.2e18, -12.34, 34.8, 0.005, -0.005, 0.015, 0.125, -0.375, 1.005, 2.675,
+    1234.565, 99999.995, -0.0049, 49.995)
 
   test("the native %.4f renderer is byte-identical to Spark's format_string") {
-    // format_string formats through java.util.Formatter with Locale.US
-    def same(d: Double): Boolean =
-      graft.functions.Num4.string(d) == String.format(java.util.Locale.US, "%.4f", Double.box(d))
-    for (d <- fixedDoubles) assert(same(d), s"$d renders ${graft.functions.Num4.string(d)}")
-    check("num4 == Formatter")(Prop.forAll(doubles)(same))
+    // format_string formats through java.util.Formatter with Locale.US;
+    // the renderer serves %.2f and %.4f
+    def same(d: Double, scale: Int): Boolean =
+      FixedPoint.string(d, scale) ==
+        String.format(java.util.Locale.US, s"%.${scale}f", Double.box(d))
+    for (scale <- Seq(2, 4); d <- fixedDoubles)
+      assert(same(d, scale), s"$d renders ${FixedPoint.string(d, scale)} at scale $scale")
+    check("fixed point == Formatter")(Prop.forAll(
+      Gen.oneOf(2, 4).flatMap(scale => doublesAt(scale).map(_ -> scale))) {
+      case (d, scale) => same(d, scale)
+    })
   }
 }
