@@ -32,34 +32,32 @@ object Bench {
     * curve). Partitions are derived from the
     * bytes one micro-batch ingests — input size div 256 KiB, clamped
     * to [4, cores] — so small micro-batches stop paying 32 fixed
-    * commits while corpus-scale batches keep full parallelism.
-    * SPARK_GRAFT_STREAM_PARTS overrides the derivation (probe knob). */
-  private[graft] def streamParts(dir: String, mfpt: Option[Int], cores: Int): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse {
-      // enumerate the SAME events.parquet* glob the stream source
-      // reads (a file or a directory of slices), counting only
-      // `.parquet` files in either place — a stray events.parquet.tmp
-      // or _SUCCESS marker must not skew the size — and guard
-      // listFiles' null (unreadable dir): fall back to the floor and
-      // let the downstream schema read raise the friendly error
-      val parent = new java.io.File(dir)
-      val files = Option(parent.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("events.parquet"))
-        .flatMap { f =>
-          if (f.isFile) Array(f)
-          else Option(f.listFiles()).getOrElse(Array.empty).filter(_.isFile)
-        }
-        .filter(_.getName.endsWith(".parquet"))
-      if (files.isEmpty) 4
-      else {
-        val total = files.map(_.length).sum
-        // AvailableNow with maxFilesPerTrigger=n ingests n files/batch
-        val perBatch = mfpt.filter(_ > 0).map { n =>
-          total / math.max(1L, (files.length.toLong + n - 1) / n)
-        }.getOrElse(total)
-        math.max(4L, math.min(cores.toLong, perBatch / (256L * 1024L))).toInt
+    * commits while corpus-scale batches keep full parallelism. */
+  private[graft] def streamParts(dir: String, mfpt: Option[Int], cores: Int): Int = {
+    // enumerate the SAME events.parquet* glob the stream source
+    // reads (a file or a directory of slices), counting only
+    // `.parquet` files in either place — a stray events.parquet.tmp
+    // or _SUCCESS marker must not skew the size — and guard
+    // listFiles' null (unreadable dir): fall back to the floor and
+    // let the downstream schema read raise the friendly error
+    val parent = new java.io.File(dir)
+    val files = Option(parent.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("events.parquet"))
+      .flatMap { f =>
+        if (f.isFile) Array(f)
+        else Option(f.listFiles()).getOrElse(Array.empty).filter(_.isFile)
       }
+      .filter(_.getName.endsWith(".parquet"))
+    if (files.isEmpty) 4
+    else {
+      val total = files.map(_.length).sum
+      // AvailableNow with maxFilesPerTrigger=n ingests n files/batch
+      val perBatch = mfpt.filter(_ > 0).map { n =>
+        total / math.max(1L, (files.length.toLong + n - 1) / n)
+      }.getOrElse(total)
+      math.max(4L, math.min(cores.toLong, perBatch / (256L * 1024L))).toInt
     }
+  }
 
   /** Micro-batch throughput of the two headline streaming ops: the A26
     * row-local changefeed pipeline and the A27 per-key stateful

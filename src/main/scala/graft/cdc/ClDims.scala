@@ -31,10 +31,4 @@ object ClDims {
   /** 1-row max(commit_ts) watermark, column `m`. Call-sites alias. */
   def maxTs(cl: DataFrame): DataFrame =
     cached(cl, "maxts")(cl.agg(max(col("commit_ts")).as("m")))
-
-  /** 1-row (min_ts, max_ts, n) census — the physical-plan chooser's
-    * input (A85's mono/chunked switch). */
-  def tsCensus(cl: DataFrame): DataFrame =
-    cached(cl, "tscensus")(cl.agg(min(col("commit_ts")).as("lo"),
-      max(col("commit_ts")).as("hi"), count(lit(1)).as("n")))
 }

@@ -175,72 +175,14 @@ object EventService {
     * commit_ts%29==7 also arrive from a WRONG SERVER. Epoch indices,
     * per-epoch positions, seqs, the global item position `pos`, and
     * every outcome are CLOSED FORMS in prefix counts of the row-local
-    * source flags — no sequential fold, and (the r10 rewrite) no
-    * monolithic per-dispatcher window either: the prefix counts split
-    * into chunk-local windows over (dispatcher, ts-chunk) plus a tiny
-    * per-chunk summary scan that broadcast-joins back, so the one
-    * corpus shuffle sorts 64x more partitions than dispatchers (the
-    * r9 ladder's worst grower: one window per 6-path universe ran
-    * 6-way; sf10 13.4 s → ~7 s, and a single hot dispatcher can no
-    * longer serialize the operator at any scale). The fold-equality
-    * spec replays the reference's stateful loop (transcribed) over the
-    * trace and must reproduce every outcome. */
-  /** chunk count per dispatcher for the two-level prefix scheme */
-  val SeqChunks = 64L
-  /** below this row count the chunk machinery's fixed cost (extra agg
-    * job + broadcast + summary scan, ~2 s) exceeds what a monolithic
-    * 6-way window costs outright — the corpus-derived-parameter floor
-    * discipline: small-SF plans (and their timings) match the r9
-    * shape, the chunked plan engages only where it wins */
-  val SeqChunkMinRows = 2000000L
-
-  /** EAGER-ACTION CONTRACT: building this frame runs Spark jobs at
-    * construction time — the 1-row ts-census `.head()` below (the plan
-    * choice is data-dependent: row count picks mono vs chunked, and
-    * the chunked plan needs the ts bounds as literals) and, on the
-    * chunked path, the `localCheckpoint` of the chunk-local window
-    * frame. Unlike the rest of the registry this operator is therefore
-    * NOT composable into fully-lazy/streaming contexts; callers that
-    * need laziness should call [[seqCheckMono]]'s plan through
-    * [[seqCheckItems]] directly and accept the #paths parallelism cap. */
+    * source flags — no sequential fold: one per-dispatcher window
+    * (ordered by commit_ts, pk — pk closes the total order for oracle
+    * hash parity on same-ts DMLs) carries every prefix count, and the
+    * anchors explode into positioned items row-locally. Building the
+    * frame runs no Spark job. The fold-equality spec replays the
+    * reference's stateful loop (transcribed) over the trace and must
+    * reproduce every outcome. */
   def seqCheck(cl: DataFrame): DataFrame = {
-    // TWO-LEVEL PREFIX SUMS (the q_ntile_cume distributed-rank
-    // discipline, applied to the sequential-protocol class): a plain
-    // dispatcher-keyed window caps parallelism at #paths — 6 here, and
-    // ONE hot dispatcher at any scale. Every window quantity the trace
-    // needs (rn, epoch, p, first_ts_epoch, pos offset) is a prefix
-    // count of SOURCE flags, so it splits into a chunk-local window
-    // over (path, ts-chunk) — parallelism #paths x SeqChunks — plus a
-    // dimension-scale per-chunk summary whose own prefix scan is tiny
-    // and broadcast-joins back. Same single corpus shuffle as before,
-    // 64x the sort/window parallelism. Quiet-box A/B at sf10 (r11
-    // SeqAbProbe, 3 passes each, min): mono 12.3 s, chunked 7.9 s —
-    // the r10 ladder's 13.4 s chunked entry was load-inflated, not a
-    // plan property (BENCH_PROBES_r11.json). The bounds/count pass is
-    // one driver-side 1-row agg (the Curation .head() class); chunking
-    // never changes a single output value, so the oracle is
-    // shape-blind (the A85 chunked-equality spec in EventServiceSpec forces the
-    // chunked plan on small data and asserts frame equality with
-    // mono). pk closes the total order (oracle hash parity for
-    // same-ts DMLs).
-    val b0 = ClDims.tsCensus(cl).head()
-    val n = b0.getLong(2)
-    // chunk ids are (ts - lo) * SeqChunks div (span + 1): Long wraps
-    // when span exceeds Long.Max / SeqChunks (~1.4e17, plausible for
-    // TSO-scale timestamps) and a wrapped id breaks the b-monotone-
-    // in-ts ordering the whole prefix scheme relies on — fall back to
-    // the mono window there (ADVICE r10)
-    val spanSafe = !b0.isNullAt(0) &&
-      b0.getLong(1) - b0.getLong(0) < Long.MaxValue / SeqChunks - 1L
-    val base =
-      if (n < SeqChunkMinRows || !spanSafe) seqCheckMono(cl)
-      else seqCheckChunked(cl, b0.getLong(0), b0.getLong(1))
-    seqCheckItems(base)
-  }
-
-  /** monolithic per-dispatcher window plan — optimal under
-    * [[SeqChunkMinRows]] where job-fixed costs dominate */
-  private[graft] def seqCheckMono(cl: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("schema_name"), col("table_name"))
       .orderBy(col("commit_ts"), col("pk"))
@@ -267,131 +209,8 @@ object EventService {
           + (col("delayed") && col("next_ts").isNotNull).cast("long"))
     // second WindowExec on the same sorted frame (streaming pass, no
     // new shuffle/sort)
-    base.withColumn("pos_base",
+    val counted = base.withColumn("pos_base",
       coalesce(sum(col("n_items")).over(wPrev), lit(0L)))
-  }
-
-  /** chunked two-level prefix plan — engages at volume */
-  private[graft] def seqCheckChunked(cl: DataFrame, tsLo: Long,
-                              tsHi: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val span = tsHi - tsLo
-    val src = cl.select(col("schema_name"), col("table_name"),
-        col("commit_ts"), col("pk"))
-      .withColumn("b", call_function("div",
-        (col("commit_ts") - lit(tsLo)) * lit(SeqChunks),
-        lit(span + 1L)))
-      .withColumn("c23", expr("commit_ts % 23 = 3"))
-      .withColumn("c23odd", expr("commit_ts % 23 = 3 AND commit_ts % 2 = 1"))
-      .withColumn("wrong", expr("commit_ts % 29 = 7"))
-    val lw = Window.partitionBy(col("schema_name"), col("table_name"), col("b"))
-      .orderBy(col("commit_ts"), col("pk"))
-    val lPrev = lw.rowsBetween(Window.unboundedPreceding, -1)
-    val local = src
-      .withColumn("l_rn", row_number().over(lw).cast("long"))
-      .withColumn("l_lead", lead(col("commit_ts"), 1).over(lw))
-      .withColumn("l_c23_prev",
-        coalesce(sum(col("c23").cast("long")).over(lPrev), lit(0L)))
-      .withColumn("l_c23odd_prev",
-        coalesce(sum(col("c23odd").cast("long")).over(lPrev), lit(0L)))
-      .withColumn("l_wrong_prev",
-        coalesce(sum(col("wrong").cast("long")).over(lPrev), lit(0L)))
-      // latest PRIOR c23 row in this chunk: its local rn + its next ts.
-      // A prior row always has a successor inside the chunk, so its
-      // l_lead is non-null by construction.
-      .withColumn("l_lastc23",
-        last(when(col("c23"), struct(col("l_rn").as("r"),
-          col("l_lead").as("nxt"))), ignoreNulls = true).over(lPrev))
-      // consumed by BOTH the summary aggregate and the final merge —
-      // eager checkpoint so the scan+shuffle+window subtree runs once
-      // (the standing two-consumer discipline)
-      .localCheckpoint()
-    // per-(path, chunk) summary — dimension x SeqChunks scale
-    val pw = Window.partitionBy(col("schema_name"), col("table_name"))
-      .orderBy(col("b"))
-    val pPrev = pw.rowsBetween(Window.unboundedPreceding, -1)
-    val summary = local.groupBy(col("schema_name"), col("table_name"), col("b"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(col("c23").cast("long")).as("c23_cnt"),
-        sum(col("c23odd").cast("long")).as("c23odd_cnt"),
-        sum(col("wrong").cast("long")).as("wrong_cnt"),
-        min(col("commit_ts")).as("first_ts"),
-        max(when(col("c23"), struct(col("l_rn").as("r"),
-          col("l_lead").as("nxt")))).as("chunk_lastc23"),
-        max(when(col("l_rn") === 1L, col("c23").cast("long")))
-          .as("head_c23"),
-        max(when(col("l_rn") === 1L, col("c23odd").cast("long")))
-          .as("head_c23odd"))
-      .withColumn("off", coalesce(sum(col("cnt")).over(pPrev), lit(0L)))
-      .withColumn("c23_off",
-        coalesce(sum(col("c23_cnt")).over(pPrev), lit(0L)))
-      .withColumn("c23odd_off",
-        coalesce(sum(col("c23odd_cnt")).over(pPrev), lit(0L)))
-      .withColumn("wrong_off",
-        coalesce(sum(col("wrong_cnt")).over(pPrev), lit(0L)))
-      // head ts of the NEXT present chunk: fixes chunk-final leads
-      .withColumn("next_first_ts", lead(col("first_ts"), 1).over(pw))
-      // latest c23 row of this chunk in GLOBAL coordinates, its next ts
-      // boundary-fixed (a chunk-final c23 row's successor is the next
-      // chunk's head)
-      .withColumn("lastc23_glob",
-        when(col("chunk_lastc23").isNotNull,
-          struct((col("off") + col("chunk_lastc23.r")).as("r"),
-            coalesce(col("chunk_lastc23.nxt"), col("next_first_ts"))
-              .as("nxt"))))
-      // latest c23 row across all PREVIOUS chunks
-      .withColumn("prev_lastc23",
-        last(col("lastc23_glob"), ignoreNulls = true).over(pPrev))
-      // path-level facts: global first row's flags and its commit_ts
-      .withColumn("path_first_ts", first(col("first_ts")).over(pw))
-      .withColumn("first_c23", first(col("head_c23")).over(pw))
-      .withColumn("first_c23odd", first(col("head_c23odd")).over(pw))
-      .select(col("schema_name"), col("table_name"), col("b"), col("off"),
-        col("c23_off"), col("c23odd_off"), col("wrong_off"),
-        col("next_first_ts"), col("prev_lastc23"), col("path_first_ts"),
-        col("first_c23"), col("first_c23odd"))
-    // merge: every trace quantity is closed-form in (global rn, global
-    // prefix counts, latest-prior-c23 info, path facts)
-    val pastFirst = (col("rn") > 1L).cast("long")
-    local.join(broadcast(summary),
-        Seq("schema_name", "table_name", "b"))
-      .withColumn("rn", col("off") + col("l_rn"))
-      .withColumn("inj", col("c23") && col("rn") > 1L)
-      .withColumn("delayed", col("inj") && expr("commit_ts % 2 = 1"))
-      .withColumn("next_ts", coalesce(col("l_lead"), col("next_first_ts")))
-      // inj counts = c23 counts minus the path's first row (never inj)
-      .withColumn("epoch",
-        col("c23_off") + col("l_c23_prev") - col("first_c23") * pastFirst)
-      // latest prior c23 row's global rn; rn 1 is the sole prior c23
-      // only when it IS the path head (not inj) -> no prior inj
-      .withColumn("last_c23_rn", greatest(
-        coalesce(col("off") + col("l_lastc23.r"), lit(0L)),
-        coalesce(col("prev_lastc23.r"), lit(0L))))
-      .withColumn("p", col("rn") -
-        when(col("last_c23_rn") > 1L, col("last_c23_rn")).otherwise(lit(0L)))
-      .withColumn("last_c23_nxt",
-        coalesce(col("l_lastc23.nxt"), col("prev_lastc23.nxt")))
-      .withColumn("first_ts_epoch",
-        when(col("last_c23_rn") > 1L, col("last_c23_nxt"))
-          .otherwise(col("path_first_ts")))
-      .withColumn("seq",
-        when(col("epoch") === 0L, lit(1L) + col("p")).otherwise(lit(2L) + col("p")))
-      // global item-position offset: each prior anchor emits
-      // 1[rn=1] + 1 + wrong + 3*inj + (inj && odd) items (a prior row
-      // always has a successor, so its delayed-item guard is vacuous)
-      .withColumn("pos_base",
-        pastFirst // the path-head handshake
-          + (col("rn") - 1L)
-          + col("wrong_off") + col("l_wrong_prev")
-          + lit(3L) * (col("c23_off") + col("l_c23_prev")
-            - col("first_c23") * pastFirst)
-          + (col("c23odd_off") + col("l_c23odd_prev")
-            - col("first_c23odd") * pastFirst))
-  }
-
-  /** explode the per-anchor trace frame into positioned items — shared
-    * by both physical plans (pure row-local consumption) */
-  private[graft] def seqCheckItems(counted: DataFrame): DataFrame = {
     // per-anchor offsets of each entry among the PRESENT ones — the
     // prefix sums of the presence flags, so pos needs no post-explode
     // rank (and no non-codegen array HOF: plain explode + null filter)

@@ -248,8 +248,7 @@ object Corpus {
 
   /** C23 — the dataset card: per (lang, source) doc/token/char totals
     * plus exact interpolated token-count percentiles (×10⁴ BIGINT, the
-    * B13 convention; swap `percentile` for `percentile_approx` at
-    * 100 TB) and a truncating-integral-division mean. Token counts are
+    * B13 convention) and a truncating-integral-division mean. Token counts are
     * row-local; one aggregation shuffle on the (lang, source) cell. */
   def corpusStats(spark: SparkSession, dir: String): DataFrame =
     Text.docTokens(spark, dir)
@@ -260,28 +259,6 @@ object Corpus {
         sum(col("n_tokens")).as("total_tokens"),
         sum(col("n_chars")).as("total_chars"),
         expr("percentile(n_tokens, array(0.5, 0.95))").as("pp"))
-      .select(col("lang"), col("source"), col("n_docs"),
-        col("total_tokens"), col("total_chars"),
-        round(element_at(col("pp"), 1) * lit(10000.0)).cast("long").as("p50_tokens_x10k"),
-        round(element_at(col("pp"), 2) * lit(10000.0)).cast("long").as("p95_tokens_x10k"),
-        call_function("div", col("total_tokens").cast("decimal(38,0)")
-            * lit(1000000L), col("n_docs"))
-          .as("avg_tokens_micro"))
-
-  /** C23's 100 TB variant: token percentiles via `approx_percentile`
-    * (bounded sketch, mergeable partials) instead of the exact
-    * group-buffering `percentile`; rank error ≤ 1/accuracy, asserted
-    * by the ApproxProbe main. Same frame and output convention. */
-  def corpusStatsApprox(spark: SparkSession, dir: String,
-                        accuracy: Int = 10000): DataFrame =
-    Text.docTokens(spark, dir)
-      .select(col("lang"), col("source"), col("n_chars"),
-        size(col("toks")).cast("long").as("n_tokens"))
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("total_tokens"),
-        sum(col("n_chars")).as("total_chars"),
-        expr(s"approx_percentile(n_tokens, array(0.5, 0.95), $accuracy)").as("pp"))
       .select(col("lang"), col("source"), col("n_docs"),
         col("total_tokens"), col("total_chars"),
         round(element_at(col("pp"), 1) * lit(10000.0)).cast("long").as("p50_tokens_x10k"),

@@ -386,48 +386,12 @@ object Retrieval {
     * disjoint by the split and sum to |∩|. */
   private val HotPostingMax = 64L
 
-  /** Fingerprint-duplication fraction above which the candidate-universe
-    * prune is a net loss: when a large share of fingerprint rows live in
-    * shared postings, candDocs ≈ the whole corpus and the semi-join is a
-    * pure fixed cost (r12 measured +0.8 s at sf0.1 and only −10% at the
-    * dup-heavy docs tier). Below it — the mostly-unique shape of a real
-    * pre-dedup 100 TB corpus — candDocs collapses to the near-dup
-    * fraction and the prune shrinks the k-window, both regimes and the
-    * cold pair generation at once. */
-  private val PruneMaxSharedFpFrac = 0.05
-
-  /** True iff the fingerprint frame is unique enough for the
-    * candidate-universe prune to pay (shared-fp row fraction below
-    * [[PruneMaxSharedFpFrac]]). One agg over the already-materialized
-    * (localCheckpointed) fingerprint frame — sub-second against the
-    * seconds the wrong plan shape costs. The distinct estimate runs at
-    * rsd 2% so estimator error sits 2.5x below the 5% decision
-    * threshold: the HLL default (~5% rsd) was the same order as the
-    * threshold, letting near-boundary or fully-unique corpora draw the
-    * slower plan arbitrarily (exactness was never at stake — both
-    * plans are exact — but plan choice should be stable). rsd 0.5% is
-    * NOT the answer: its 2^16-register sketch made this one gate agg
-    * cost 5–8 s at sf0.1 (GateProbe, r15 — the entire r14 C42
-    * regression; the decision never moved: sharedFrac is 0.81 on the
-    * bench corpus at every precision). rsd 2% keeps the sketch at
-    * 2^12 registers and the gate at ~0.4 s with precision to spare. */
-  private[graft] def pruneGate(fps: DataFrame): Boolean = {
-    val r = fps.agg(count(lit(1)).cast("double").as("n"),
-      approx_count_distinct(col("fp_hash"), 0.02).cast("double").as("d")).head()
-    val n = r.getDouble(0)
-    n > 0 && (1.0 - r.getDouble(1) / n) < PruneMaxSharedFpFrac
-  }
-
   private[graft] def containmentFromFps(fpsFull: DataFrame, g: DataFrame,
-      tauPpm: Long, hotMax: Long = HotPostingMax,
-      prune: Option[Boolean] = None): DataFrame = {
+      tauPpm: Long, hotMax: Long = HotPostingMax): DataFrame = {
     require(tauPpm > 0L,
       "containment threshold must be positive: zero-intersection pairs " +
         "are dropped by the partial-agg plan (and filtered by any tau > 0)")
     val fps = fpsFull.select(col("doc_id"), col("fp_hash"))
-    // Corpus-uniqueness gate: decide the prune from the data, not a
-    // flag (prune = Some(...) overrides, for specs and probes).
-    val doPrune = prune.getOrElse(pruneGate(fps))
     val cand = fps.as("a").join(fps.as("b"), Seq("fp_hash"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -451,29 +415,7 @@ object Retrieval {
     // drop out of the inner joins; any tauPpm > 0 filters them
     // identically, so the frame is value-equal to the oracle's
     // list_intersect verify.
-    // Candidate-universe prune, gated on corpus uniqueness (above): a
-    // doc can appear in a candidate pair iff it shares some winnow fp
-    // with another doc — one fp_hash-partitioned window over fps + one
-    // distinct. Applied to the exploded gram frame BEFORE the
-    // posting-length window (r12 pruned only the cold branch AFTER it):
-    // non-candidate docs can contribute to neither regime, and pruning
-    // first shrinks the k-window sort, both regime inputs and the cold
-    // pair generation in one pipelined semi-join. Exactness: both
-    // regimes split on the SAME pruned-universe k, so per candidate
-    // pair every shared gram is counted exactly once — the split point
-    // moves, the sum doesn't; the final left_semi against `cand`
-    // restores pair-exactness. At a mostly-unique corpus the whole |∩|
-    // computation collapses to the near-dup fraction instead of
-    // hotMax × corpus-gram-rows.
-    val exAll = g.select(col("doc_id"), explode(col("grams")).as("gram"))
-    val ex = (if (doPrune) {
-        val candDocs = fps
-          .withColumn("nd",
-            count(lit(1)).over(Window.partitionBy(col("fp_hash"))))
-          .filter(col("nd") > 1L)
-          .select(col("doc_id")).distinct()
-        exAll.join(candDocs, Seq("doc_id"), "left_semi")
-      } else exAll)
+    val ex = g.select(col("doc_id"), explode(col("grams")).as("gram"))
       .withColumn("k", count(lit(1)).over(Window.partitionBy(col("gram"))))
     val sz = g.select(col("doc_id"), size(col("grams")).cast("long").as("sz"))
     val cold = ex.filter(col("k") <= hotMax).select(col("doc_id"), col("gram"))

@@ -377,8 +377,7 @@ object Similarity {
   }
 
   def annLshBucketed(spark: SparkSession, dir: String,
-                     targetBucket: Long = 32L, nQueries: Int = 8, k: Int = 3,
-                     multiProbe: Boolean = true): DataFrame = {
+                     targetBucket: Long = 32L, nQueries: Int = 8, k: Int = 3): DataFrame = {
     val c0 = corpus(spark, dir)
     val nPlanes = planeCount(c0.count(), targetBucket)
     val w = planes(MaxBucketPlanes, seed = 7L)
@@ -392,8 +391,7 @@ object Similarity {
       .withColumn("bucket", (0 until nPlanes).map(p => col(s"bp$p")).reduce(_ + _))
       .drop((0 until nPlanes).map(p => s"bp$p"): _*)
       .localCheckpoint()
-    val probeMasks =
-      if (multiProbe) 0L +: (0 until nPlanes).map(p => 1L << p) else Seq(0L)
+    val probeMasks = 0L +: (0 until nPlanes).map(p => 1L << p)
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("bucket").as("qbucket"))
@@ -443,9 +441,7 @@ object Similarity {
     * training (the mean of 64 members concentrates), which is why
     * every large-scale IVF library trains on a sample. The one
     * remaining n·k pass is the FINAL list assignment — inherent to
-    * building the inverted file; at extreme corpus sizes it too can
-    * be pruned (hyperplane-bucket the centroids like C7, or go
-    * hierarchical √k→√k), which changes nothing on the probe side. */
+    * building the inverted file. */
   /** Nearest-centroid scoring: every input row against every centroid
     * (broadcast), keep the top `keep` per vector. */
   private def nearestCents(in: DataFrame, cents: DataFrame, keep: Int): DataFrame = {
@@ -458,72 +454,16 @@ object Similarity {
   }
 
   /** The IVF list assignment — the one full n·k pass of the index
-    * build. `prune` = the extreme-scale path (SURVEY §5): centroids are
-    * hyperplane-bucketed with C7's own machinery (`assignPlanes` seeded
-    * sign bits) and each corpus vector scores only the centroids of its
-    * own cell plus every 1-bit-flip neighbor — expected work
-    * n·k·(assignPlanes+1)/2^assignPlanes instead of n·k. A vector whose
-    * probed cells hold no centroid falls back to the full scan (a
-    * vanishing fraction; the union keeps the assignment total).
-    * Default (false) is the exact assignment the DuckDB oracle mirrors. */
-  private[graft] def assignLists(c: DataFrame, cents: DataFrame,
-                                 prune: Boolean = false,
-                                 assignPlanes: Int = 4): DataFrame = {
-    val full = (in: DataFrame) => nearestCents(in, cents, 1)
+    * build: every vector joins the list of its nearest centroid (the
+    * exact assignment the DuckDB oracle mirrors). */
+  private[graft] def assignLists(c: DataFrame, cents: DataFrame): DataFrame =
+    nearestCents(c, cents, 1)
       .select(col("cent_id"), col("vec_id"), col("v"), col("nrm"))
-    if (!prune) full(c)
-    else {
-      val w = planes(assignPlanes, seed = 11L)
-      def bucket(vcol: String): Column = (0 until assignPlanes)
-        .map(p => when(proj(vcol, w(p)) >= 0d, lit(1L << p)).otherwise(lit(0L)))
-        .reduce(_ + _)
-      val cb = cents.withColumn("cbucket", bucket("cv"))
-      val probeMasks = 0L +: (0 until assignPlanes).map(p => 1L << p)
-      val probed = c.withColumn("bucket", bucket("v"))
-        .select(col("vec_id"), col("v"), col("nrm"),
-          explode(array(probeMasks.map(m =>
-            col("bucket").bitwiseXOR(lit(m))): _*)).as("cell"))
-      val win = Window.partitionBy(col("vec_id"))
-        .orderBy(col("sim").desc, col("cent_id"))
-      val pruned = probed.join(broadcast(cb), col("cell") === col("cbucket"))
-        .withColumn("sim", round(dot("v", "cv") / (col("nrm") * col("cn")), 4))
-        .withColumn("rn", row_number().over(win))
-        .filter(col("rn") === 1)
-        .select(col("cent_id"), col("vec_id"), col("v"), col("nrm"))
-      val missed = c.join(pruned.select("vec_id"), Seq("vec_id"), "left_anti")
-      pruned.unionByName(full(missed))
-    }
-  }
-
-  /** Work accounting for the pruned assignment: (candidate pairs the
-    * pruned path actually scores, fallback rows that rescan all k).
-    * The exact path's work is n·k by definition; the expected pruned
-    * ratio is (assignPlanes+1)/2^assignPlanes. Probe-only — mirrors
-    * the candidate generation of [[assignLists]] exactly. */
-  private[graft] def assignWorkStats(c: DataFrame, cents: DataFrame,
-                                     assignPlanes: Int = 4): (Long, Long) = {
-    val w = planes(assignPlanes, seed = 11L)
-    def bucket(vcol: String): Column = (0 until assignPlanes)
-      .map(p => when(proj(vcol, w(p)) >= 0d, lit(1L << p)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    val cb = cents.withColumn("cbucket", bucket("cv"))
-    val probeMasks = 0L +: (0 until assignPlanes).map(p => 1L << p)
-    val probed = c.withColumn("bucket", bucket("v"))
-      .select(col("vec_id"),
-        explode(array(probeMasks.map(m =>
-          col("bucket").bitwiseXOR(lit(m))): _*)).as("cell"))
-    val perVec = probed.join(broadcast(cb), col("cell") === col("cbucket"))
-      .groupBy(col("vec_id")).agg(count(lit(1)).as("cands"))
-    val candPairs = perVec.agg(sum(col("cands"))).head.getLong(0)
-    val fallback = c.join(perVec.select("vec_id"), Seq("vec_id"), "left_anti").count()
-    (candPairs, fallback)
-  }
 
   /** Corpus + trained centroids (corpus, refined centroids, k), kept
     * per (session, embeddings, knobs) by [[Tables.checkpointed]]:
-    * [[annIvf]], [[dedupSemantic]], [[knnGraph]], [[clusterLabelTfidf]]
-    * and the pruneAssign work probe ([[graft.IvfAssignProbe]]) all read
-    * the same trained index. */
+    * [[annIvf]], [[dedupSemantic]], [[knnGraph]] and [[clusterLabelTfidf]]
+    * all read the same trained index. */
   private[graft] def ivfIndexInputs(spark: SparkSession, dir: String,
                                     kMin: Int = 64, kCap: Int = 4096,
                                     sampleFactor: Int = 64,
@@ -590,11 +530,10 @@ object Similarity {
   def annIvf(spark: SparkSession, dir: String, nProbe: Int = 8,
              nQueries: Int = 8, topK: Int = 3, kMin: Int = 64,
              kCap: Int = 4096, sampleFactor: Int = 64,
-             lloydRounds: Int = 1, pruneAssign: Boolean = false,
-             assignPlanes: Int = 4): DataFrame = {
+             lloydRounds: Int = 1): DataFrame = {
     val (c, refined, _) =
       ivfIndexInputs(spark, dir, kMin, kCap, sampleFactor, lloydRounds)
-    val assigned = assignLists(c, refined, pruneAssign, assignPlanes)
+    val assigned = assignLists(c, refined)
       .localCheckpoint()
     val qprobe = nearestCents(c.filter(col("vec_id") < nQueries), refined, nProbe)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),

@@ -389,9 +389,8 @@ object Analytics {
       |FROM events
       |GROUP BY 1, 2""".stripMargin
 
-  /** B13 — quantiles: exact interpolated percentiles for oracle parity;
-    * at 100 TB swap `percentile` for `percentile_approx` (sketch-merge,
-    * single pass, no sort) — same API shape. Output is the quantile
+  /** B13 — quantiles: exact interpolated percentiles for oracle parity
+    * (a sketch's answer is engine-specific). Output is the quantile
     * ×10^4 as BIGINT (round-half-up and C round agree for positive
     * values), not a ROUND-ed double. */
   def qApproxQuantile(spark: SparkSession, dir: String): DataFrame = {
@@ -424,23 +423,6 @@ object Analytics {
         round(element_at(col("pp"), 2) * lit(10000.0)).cast("long").as("p95_x10k"),
         round(col("pq") * lit(10000.0)).cast("long").as("p50_qty_x10k"))
   }
-
-  /** B13's 100 TB variant: `percentile_approx` (a bounded GK sketch —
-    * constant memory per group and mergeable partials, where exact
-    * `percentile` buffers every value of a group) with rank error
-    * ≤ 1/accuracy. Same frame and ×10⁴ integer convention; not an
-    * oracle row (the sketch is engine-specific) — the ApproxProbe main
-    * asserts the rank-error bound against the exact path instead. */
-  def qApproxQuantileApprox(spark: SparkSession, dir: String,
-                            accuracy: Int = 10000): DataFrame =
-    Tables.lineitem(spark, dir)
-      .groupBy(col("l_returnflag"))
-      .agg(expr(s"approx_percentile(l_extendedprice, array(0.5, 0.95), $accuracy)").as("pp"),
-        expr(s"approx_percentile(l_quantity, 0.5, $accuracy)").as("pq"))
-      .select(col("l_returnflag"),
-        round(element_at(col("pp"), 1) * lit(10000.0)).cast("long").as("p50_x10k"),
-        round(element_at(col("pp"), 2) * lit(10000.0)).cast("long").as("p95_x10k"),
-        round(col("pq") * lit(10000.0)).cast("long").as("p50_qty_x10k"))
 
   val qApproxQuantileSql: String =
     """SELECT l_returnflag,

@@ -39,7 +39,7 @@ class CacheHygieneSpec extends AnyFunSuite {
       "spans" -> (() => Seq(ops.Retrieval.substringSpansCached(spark, dir, 8))),
       "clusters" -> (() => Seq(ops.Curation.dedupClusters(spark, dir))),
       "census" -> (() => Seq(cdc.Scheduler.spanFrame(cl, cdc.Scheduler.NRegions))),
-      "dims" -> (() => Seq(cdc.ClDims.tables(cl), cdc.ClDims.maxTs(cl), cdc.ClDims.tsCensus(cl))),
+      "dims" -> (() => Seq(cdc.ClDims.tables(cl), cdc.ClDims.maxTs(cl))),
       "tokens" -> (() => Seq(ops.Text.docTokens(spark, dir))),
       "grams" -> (() => Seq(ops.Dedup.gramsCached(spark, dir))),
       "changelog" -> (() => { cl; Seq(cl) })) // pinned at its second read

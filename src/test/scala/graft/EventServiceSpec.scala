@@ -291,25 +291,6 @@ class EventServiceSpec extends AnyFunSuite {
     * :292-335 IterAll; range_ts_map.go:33-41 startTs coverage):
     * replay the deterministic lock/migrate schedule sequentially with
     * a locked map + an unlocked-ts map and recompute every output. */
-  test("A85: the chunked prefix plan equals the mono window plan frame-for-frame") {
-    // SeqChunkMinRows keeps production small-SF runs on the mono plan,
-    // so the chunked path never meets the sf<=0.1 oracle — force it
-    // here (ADVICE r10 #1): same input, both physical plans, exact
-    // row-set equality of the EXPLODED item frame. The ts bounds are
-    // the census values seqCheck would pass.
-    val cl = cdc.ChangeEvents.changelog(spark, dir)
-    val b = cdc.ClDims.tsCensus(cl).head()
-    val mono = cdc.EventService.seqCheckItems(
-      cdc.EventService.seqCheckMono(cl))
-    val chunked = cdc.EventService.seqCheckItems(
-      cdc.EventService.seqCheckChunked(cl, b.getLong(0), b.getLong(1)))
-    assert(mono.columns.toSeq == chunked.columns.toSeq)
-    // exceptAll both directions: multiset equality, order-free
-    assert(chunked.exceptAll(mono).isEmpty && mono.exceptAll(chunked).isEmpty,
-      "chunked two-level prefix plan diverged from the mono window plan")
-    assert(mono.count() == chunked.count())
-  }
-
   test("A96: range-lock frame equals the sequential lock/unlock replay") {
     val cl = cdc.ChangeEvents.changelog(spark, dir)
     val R = cdc.RangeLock.NRegions

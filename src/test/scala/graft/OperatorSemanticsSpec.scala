@@ -343,41 +343,6 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     assert(recall2 >= 0.5, f"3-round IVF recall $recall2%.2f below floor")
   }
 
-  test("IVF pruned list assignment stays total and holds the recall floor") {
-    // the extreme-scale flag: hyperplane-bucketed centroid cells prune
-    // the final n·k assignment pass. The assignment must remain TOTAL
-    // (every vector in exactly one list) and the end-to-end query
-    // recall vs the exact-assignment IVF must hold a floor.
-    val nq = 6
-    val exactIvf = ops.Similarity.annIvf(spark, dir, nQueries = nq, topK = 3)
-      .select(col("query_id"), col("vec_id"))
-      .collect().map(_.toSeq).toSet
-    val prunedIvf = ops.Similarity.annIvf(spark, dir, nQueries = nq, topK = 3,
-        pruneAssign = true)
-      .select(col("query_id"), col("vec_id"))
-      .collect().map(_.toSeq).toSet
-    val agree = exactIvf.intersect(prunedIvf).size.toDouble / exactIvf.size
-    assert(agree >= 0.5, f"pruned-assignment IVF agreement $agree%.2f below 0.5 floor")
-    // brute-force ground truth: the pruned path must still be a usable
-    // ANN, not just self-consistent
-    val exact = ops.Similarity.annTopK(spark, dir, nQueries = nq, k = 3)
-      .select(col("query_id"), col("vec_id"))
-      .collect().map(_.toSeq).toSet
-    val recall = exact.intersect(prunedIvf).size.toDouble / exact.size
-    assert(recall >= 0.4, f"pruned IVF brute-force recall $recall%.2f below floor")
-    // totality: every corpus vector lands in exactly one list, pruned
-    // or not — the fallback union covers empty probe neighborhoods
-    val corpusFrame = ops.Similarity.corpus(spark, dir).localCheckpoint()
-    val n = corpusFrame.count()
-    val seedCents = corpusFrame.limit(8)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-    val assignedPruned = ops.Similarity.assignLists(corpusFrame, seedCents,
-      prune = true)
-    assert(assignedPruned.count() == n, "pruned assignment lost vectors")
-    assert(assignedPruned.select("vec_id").distinct().count() == n,
-      "a vector was assigned to more than one list")
-  }
-
   // from-scratch Avro-binary reader — the independent side of the
   // wire-format round-trip tests below
   case class AvroDecoded(schemaId: Long, schemaName: String, tableName: String,
@@ -788,21 +753,6 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     assert(c.filter(col("claimed") =!= (col("compressed_bytes") > 75L)).count() == 0)
     assert(c.filter(col("claimed") && col("claim_location").isNull).count() == 0)
     assert(c.filter(!col("claimed") && col("claim_location").isNotNull).count() == 0)
-  }
-
-  test("multi-probe ANN candidates are a superset of exact-bucket candidates") {
-    // every (query, neighbor) from single-cell probing must also surface
-    // with multi-probe enabled (the extra cells only add candidates)
-    val multi = ops.Similarity
-      .annLshBucketed(spark, dir, nQueries = 4, k = 500, multiProbe = true)
-      .select(col("query_id"), col("vec_id"))
-      .collect().map(_.toSeq).toSet
-    val single = ops.Similarity
-      .annLshBucketed(spark, dir, nQueries = 4, k = 500, multiProbe = false)
-      .select(col("query_id"), col("vec_id"))
-      .collect().map(_.toSeq).toSet
-    assert(single.subsetOf(multi))
-    assert(multi.size > single.size, "multi-probe should add candidate cells")
   }
 
   test("large-star/small-star components equal union-find on adversarial graphs") {

@@ -64,19 +64,16 @@ class PlanQualitySpec extends AnyFunSuite {
     // .ddlEvents) and inherit its version-grid broadcast.
     val tinyBroadcastByDesign = Set("q_scalar_subquery",
       "cdc_dynstream_path_assign", // 1-row handoff-midpoint broadcast
-      "cdc_event_seq_check", // 1-row ts-bounds broadcast (chunk grid)
       "cdc_schema_asof", "cdc_ddl_events", "cdc_ddl_filter_rich", "codec_simple",
       "codec_simple_decode", "sink_mysql_ddl", "sink_startts_resume",
-      "sink_syncpoint_stmts", "codec_simple_avro", "codec_simple_avro_decode",
+      "codec_simple_avro", "codec_simple_avro_decode",
       "codec_open_wire", "codec_open_wire_bytes", "codec_open_wire_decode",
       "sink_ddl_routing", // DDL grid + the 1-row checkpoint x topics cross
       "codec_canal_envelope", "codec_canal_envelope_decode",
       "ann_topk_bruteforce", "ann_matryoshka_topk", "cdc_syncpoint",
       "ann_ivf", "doc_tfidf",
-      "dedup_semantic", // shares ann_ivf's corpus x k-centroid broadcast cross
       "source_mix_weights", // 1-row totals broadcast (q_scalar_subquery shape)
       "mix_epoch_plan",     // embeds C26's totals cross + its own 1-row budget cross
-      "knn_graph", // shares the ann_ivf corpus x k-centroid assignment cross
       // the shared assignment cross + its 1-row n_cells broadcast
       "cluster_label_tfidf",
       // the deliberate dimension x salt-range replication cross (R rows)
@@ -100,10 +97,6 @@ class PlanQualitySpec extends AnyFunSuite {
       "bpe_pair_merge",
       // embeds C40's tercile cross + C34's corpus-total cross
       "curation_funnel",
-      // the 10-row-per-prio decile position grid broadcast-range-joined
-      // to the value cells it intersects (the B39 distributed-rank
-      // rewrite; the grid is 50 rows at any corpus size)
-      "q_ntile_cume",
       // 1-row token-total broadcast (q_scalar_subquery shape)
       "seq_length_histogram",
       // 1-row totals + 3-row mass-pct grid broadcast crosses over the
@@ -164,12 +157,58 @@ class PlanQualitySpec extends AnyFunSuite {
       "lsh_recall_audit",
       // embeds hybrid_rrf_topk's scalar + query-vector crosses
       "rag_context_pack")
-    SparkEntry.queries.foreach { case (name, fn) =>
+    val stale = tinyBroadcastByDesign -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"exempt names that are not queries: ${stale.mkString(", ")}")
+    val notNested = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
       val p = plan(fn(spark, dir))
       assert(!p.contains("CartesianProduct"), s"$name plans a cartesian product")
-      if (!tinyBroadcastByDesign(name)) {
-        assert(!p.contains("BroadcastNestedLoopJoin"), s"$name plans a nested loop join")
-      }
+      val nested = p.contains("BroadcastNestedLoopJoin")
+      assert(!nested || tinyBroadcastByDesign(name), s"$name plans a nested loop join")
+      if (tinyBroadcastByDesign(name) && !nested) Some(name) else None
+    }
+    // an exemption must still be needed
+    assert(notNested.isEmpty,
+      s"exempt but planning no nested loop join: ${notNested.mkString(", ")}")
+  }
+
+  test("building the seq-check and containment frames starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    /** Descriptions of the jobs `build` starts. */
+    def jobsOf(build: => Any): Seq[String] = {
+      started.clear()
+      build
+      // one queue delivers in order: once the marker job's start
+      // arrives, every job `build` started has been counted
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(started.contains("marker"), "the marker job's start never arrived")
+      started.asScala.toSeq.filterNot(_ == "marker")
+    }
+    graft.util.GraftSession.releaseCaches(spark)
+    sc.addSparkListener(listener)
+    try {
+      val cl = cdc.ChangeEvents.changelog(spark, dir)
+      val seq = jobsOf(cdc.EventService.seqCheck(cl))
+      assert(seq.isEmpty, s"seqCheck started ${seq.size} job(s) while building")
+      // the winnow fingerprints and the gram frame are session caches:
+      // building them runs jobs, the operator over them must not
+      ops.Retrieval.winnowHashesCached(spark, dir, 4)
+      ops.Dedup.gramFrame(spark, dir)
+      val cont = jobsOf(ops.Retrieval.dedupContainment(spark, dir))
+      assert(cont.isEmpty, s"dedupContainment started ${cont.size} job(s) while building")
+    } finally {
+      sc.removeSparkListener(listener)
+      graft.util.GraftSession.releaseCaches(spark)
     }
   }
 

@@ -21,7 +21,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("Bench.streamParts sizes from .parquet files only, top level and sliced") {
-    assume(!sys.env.contains("SPARK_GRAFT_STREAM_PARTS"), "override set")
     val mib = 1024L * 1024L
     def sized(f: java.io.File, bytes: Long): Unit = {
       val raf = new java.io.RandomAccessFile(f, "rw")

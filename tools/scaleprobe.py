@@ -148,30 +148,8 @@ def docskew(out, hot_frac=0.8):
                    f"{out}/documents.parquet")
     print(f"[docskew] documents: {t.num_rows} rows, ~{hot_frac:.0%} now lang=en")
 
-def approx(sf_dir):
-    """Approx-percentile probe (runs queries, not a data build): drives
-    graft.ApproxProbe, which times the exact `percentile` vs the
-    bounded-sketch `approx_percentile` paths of B13/C23 on sf_dir and
-    asserts the sketch's rank-error bound (err <= 1/accuracy). Reports
-    both; exits nonzero on a bound violation."""
-    import subprocess
-    r = subprocess.run(
-        ["tools/run.sh", "graft.ApproxProbe", sf_dir],
-        cwd="/root/repo", capture_output=True, text=True)
-    line = next((l for l in reversed(r.stdout.splitlines())
-                 if l.startswith('{"probe"')), None)
-    for l in r.stderr.splitlines():
-        if l.startswith("[approx]"):
-            print(l)
-    if line is None:
-        print("[approx] FAILED: no probe JSON emitted", file=sys.stderr)
-        print(r.stderr[-2000:], file=sys.stderr)
-        sys.exit(1)
-    print(line)
-    sys.exit(r.returncode)
-
 if __name__ == "__main__":
     mode, out = sys.argv[1], sys.argv[2]
     {"sf1x": sf1x, "sf10": lambda o: sf1x(o, replicas=100),
      "skew": skew, "emb": emb, "docs": docs,
-     "docskew": docskew, "approx": approx}[mode](out)
+     "docskew": docskew}[mode](out)
