@@ -21,7 +21,12 @@ import java.nio.file.{Files, Paths}
   * channel (stdout may be decorated by the build tool).
   *
   * Optional CLI args restrict the run to the named queries (dev loop;
-  * the driver calls with no args = full run). */
+  * the driver calls with no args = full run). A subset run
+  * (`graft.Bench q1 q2 …`) is still warming up after two passes: with
+  * few queries per pass the JIT and the codegen cache have not
+  * settled (`cdc_event_seq_check` read 9.3 → 2.8 → 1.0 s over three
+  * passes at sf0.1 on `local[4]`), so a two-pass min is a warm-up
+  * reading. Compare subsets with `SPARK_GRAFT_BENCH_REPEAT` ≥ 4. */
 object Bench {
 
   /** Batch-size-adaptive state-store parallelism (partitioning scales

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Engine-portable deterministic hashing.
+/** Engine-portable deterministic hashing and floor division.
   *
   * TiCDC's partition dispatchers (reference:
   * downstreamadapter/sink/helper/eventrouter/partition/) hash table
@@ -38,4 +38,13 @@ object Portable {
   def bucket(c: Column, n: Int): Column = pmod(hash60(c), lit(n.toLong))
 
   def bucketSql(expr: String, n: Int): String = s"(${hash60Sql(expr)} % $n)"
+
+  /** Floor division `num / den` for a positive `den`, in the
+    * exact-multiple form `div(num - pmod(num, den), den)`: the
+    * numerator is made a multiple of `den` first, where flooring and
+    * truncating division agree, so the result matches the oracle's
+    * `(num - ((num % den + den) % den)) // den` under DuckDB's
+    * truncating `//` for negative numerators too. */
+  def floorDiv(num: Column, den: Column): Column =
+    call_function("div", num - pmod(num, den), den)
 }

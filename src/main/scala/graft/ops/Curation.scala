@@ -1039,11 +1039,9 @@ object Curation {
     feats.join(broadcast(bits), "bkt")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_feats"), sum(col("bits")).as("dsir_bits"))
-      // dsir_bits can be negative: floor division via the exact-
-      // multiple form (Spark DIV and DuckDB // both truncate toward
-      // zero, so plain DIV would disagree between engines below zero)
+      // dsir_bits can be negative: plain DIV truncates toward zero
       .withColumn("mean_millibits",
-        expr("(dsir_bits * 1000 - pmod(dsir_bits * 1000, n_feats)) DIV n_feats"))
+        Portable.floorDiv(col("dsir_bits") * 1000, col("n_feats")))
       .select(col("doc_id"), col("n_feats"), col("dsir_bits"),
         col("mean_millibits"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.util.{Checkpoints, Tables}
+import graft.functions.Portable
 
 /** Embedding similarity search: LSH-filtered cosine pairs, brute-force
   * ANN top-k, and multi-probe LSH-bucketed ANN.
@@ -226,10 +227,8 @@ object Similarity {
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("q")).as("sum_q"),
         sum(col("q") * col("q")).as("ss_q"))
-      // exact-multiple floor division: sum_q can be negative and
-      // Spark div / DuckDB // disagree on negative truncation
-      .withColumn("mean_micro", call_function("div",
-        col("sum_q") - pmod(col("sum_q"), col("n_vecs")), col("n_vecs")))
+      // sum_q can be negative: floor, not truncating, division
+      .withColumn("mean_micro", Portable.floorDiv(col("sum_q"), col("n_vecs")))
       .withColumn("var_e12",
         call_function("div", col("ss_q"), col("n_vecs")) -
           col("mean_micro") * col("mean_micro"))
@@ -406,6 +405,30 @@ object Similarity {
       .select(col("query_id"), col("bucket"), col("vec_id"), col("cosine"), col("rank"))
   }
 
+  /** Sizing of the two trained indexes, read by the Spark builds and by
+    * their DuckDB renderings ([[ivfAssignedCtes]], [[pqEncodeSql]]), so
+    * the oracle trains on the same sample with the same k. */
+  private val IvfKMin = 64
+  private val IvfKCap = 4096
+  private val PqSubspaces = 8
+  private val PqSubK = 16
+  /** Training-sample rows per centroid (IVF) or codebook entry (PQ). */
+  private val TrainPerCentroid = 64
+
+  /** The deterministic bounded training sample: the `m` rows of `c`
+    * with the lowest `salt`-keyed hash, with that hash as `h`. The
+    * ranking is engine-portable, so the oracle draws the same rows
+    * ([[trainSampleSql]]). orderBy+limit plans as a distributed
+    * partial top-m (TakeOrdered), not a global sort. */
+  private def trainSample(c: DataFrame, salt: String, m: Long): DataFrame =
+    c.withColumn("h", Portable.hash60(concat(lit(s"$salt:"), col("vec_id").cast("string"))))
+      .orderBy(col("h"), col("vec_id")).limit(m.toInt)
+      .localCheckpoint()
+
+  private def trainSampleSql(salt: String, limit: String): String =
+    s"""SELECT *, ${Portable.hash60Sql(s"CONCAT('$salt:', CAST(vec_id AS VARCHAR))")} AS h FROM c
+       |  ORDER BY h, vec_id LIMIT $limit""".stripMargin
+
   /** C13 — IVF-bucketed ANN (inverted-file index): the corpus is
     * assigned to its nearest centroid; a query scores only the lists of
     * its `nProbe` nearest centroids. This is the second scale path next
@@ -413,11 +436,12 @@ object Similarity {
     * distribution, and probing more lists trades work for recall.
     *
     * The index build is one k-means round, fully deterministic:
-    *  - k scales with the corpus: `max(kMin, ceil(sqrt(n)))` — constant
-    *    work per vector per assignment as the corpus grows, lists of
-    *    ~sqrt(n) vectors each;
-    *  - seed centroids are the first k vectors; every vector assigns to
-    *    its nearest seed (rounded cosine, cent_id tiebreak);
+    *  - k scales with the corpus: `min(IvfKCap, max(IvfKMin,
+    *    ceil(sqrt(n))))` — constant work per vector per assignment as
+    *    the corpus grows, lists of ~sqrt(n) vectors each;
+    *  - seed centroids are the first k vectors of the training sample;
+    *    every sample vector assigns to its nearest seed (rounded cosine,
+    *    cent_id tiebreak);
     *  - ONE Lloyd refinement recomputes each centroid as its members'
     *    per-dimension mean. The mean is computed in EXACT integer
     *    arithmetic over power-of-2-quantized components
@@ -426,22 +450,22 @@ object Similarity {
     *    floor-divided — no double summation-order or rounding anywhere,
     *    which is what lets an iterative clustering survive an exact
     *    cross-engine hash check.
-    * Assignment + probe then rerun against the refined centroids; the
-    * probed lists are scored with the exact cosine on the ORIGINAL
-    * vectors. More Lloyd rounds iterate the same two join shapes.
+    * Every vector then joins the list of its nearest refined centroid;
+    * the probed lists are scored with the exact cosine on the ORIGINAL
+    * vectors.
     *
     * 100 TB path (coded, not just documented): centroid TRAINING —
-    * the seed assignment and the Lloyd mean — runs on a deterministic
-    * bounded sample, the `sampleFactor·k` lowest salted-hash rows
-    * (engine-portable ranking, so the oracle draws the identical
-    * sample). Training cost is then `sampleFactor·k² = sampleFactor·n`
-    * under k~√n — linear, and constant once `kCap` bites — instead of
-    * the full n·k. k-means quality on an i.i.d. sample of 64 rows per
-    * centroid is statistically indistinguishable from full-corpus
-    * training (the mean of 64 members concentrates), which is why
-    * every large-scale IVF library trains on a sample. The one
-    * remaining n·k pass is the FINAL list assignment — inherent to
-    * building the inverted file. */
+    * the seed assignment and the Lloyd mean — runs on the
+    * `TrainPerCentroid·k` rows of [[trainSample]]. Training cost is
+    * then `TrainPerCentroid·k² = TrainPerCentroid·n` under k~√n —
+    * linear, and constant once `IvfKCap` bites — instead of the full
+    * n·k. k-means quality on an i.i.d. sample of 64 rows per centroid
+    * is statistically indistinguishable from full-corpus training (the
+    * mean of 64 members concentrates), which is why every large-scale
+    * IVF library trains on a sample. The one remaining n·k pass is the
+    * list assignment — inherent to building the inverted file, and run
+    * once per session inside [[ivfIndex]]. The sizing constants are
+    * the ones above [[trainSample]]; the oracle renders the same. */
   /** Nearest-centroid scoring: every input row against every centroid
     * (broadcast), keep the top `keep` per vector. */
   private def nearestCents(in: DataFrame, cents: DataFrame, keep: Int): DataFrame = {
@@ -453,93 +477,51 @@ object Similarity {
       .filter(col("rn") <= keep)
   }
 
-  /** The IVF list assignment — the one full n·k pass of the index
-    * build: every vector joins the list of its nearest centroid (the
-    * exact assignment the DuckDB oracle mirrors). */
-  private[graft] def assignLists(c: DataFrame, cents: DataFrame): DataFrame =
-    nearestCents(c, cents, 1)
-      .select(col("cent_id"), col("vec_id"), col("v"), col("nrm"))
+  /** The trained IVF index (centroids (cent_id, cv, cn), lists
+    * (cent_id, vec_id, v, nrm): every vector in the list of its
+    * nearest centroid), kept per (session, embeddings) by
+    * [[Tables.checkpointed]]: [[annIvf]], [[dedupSemantic]],
+    * [[knnGraph]] and [[clusterLabelTfidf]] all read the same lists. */
+  private[graft] def ivfIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    Tables.checkpointed(spark, "ivf", dir, "embeddings", ())(buildIvfIndex(spark, dir))
 
-  /** Corpus + trained centroids (corpus, refined centroids, k), kept
-    * per (session, embeddings, knobs) by [[Tables.checkpointed]]:
-    * [[annIvf]], [[dedupSemantic]], [[knnGraph]] and [[clusterLabelTfidf]]
-    * all read the same trained index. */
-  private[graft] def ivfIndexInputs(spark: SparkSession, dir: String,
-                                    kMin: Int = 64, kCap: Int = 4096,
-                                    sampleFactor: Int = 64,
-                                    lloydRounds: Int = 1): (DataFrame, DataFrame, Long) =
-    Tables.checkpointed(spark, "ivf", dir, "embeddings",
-        (kMin, kCap, sampleFactor, lloydRounds))(
-      buildIvfIndex(spark, dir, kMin, kCap, sampleFactor, lloydRounds))
-
-  private def buildIvfIndex(spark: SparkSession, dir: String,
-                            kMin: Int, kCap: Int, sampleFactor: Int,
-                            lloydRounds: Int): (DataFrame, DataFrame, Long) = {
+  private def buildIvfIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val c = corpus(spark, dir).localCheckpoint()
-    val k = math.min(kCap.toLong, math.max(kMin.toLong,
+    val k = math.min(IvfKCap.toLong, math.max(IvfKMin.toLong,
       math.ceil(math.sqrt(c.count().toDouble)).toLong))
-    val m = sampleFactor * k
-    // deterministic bounded training sample: lowest m salted hashes.
-    // orderBy+limit plans as a distributed partial top-m (TakeOrdered),
-    // not a global sort — each partition keeps m candidates.
-    val trainH = graft.functions.Portable.hash60(
-      concat(lit("ivf-train-v1:"), col("vec_id").cast("string")))
-    val sample = c.withColumn("h", trainH)
-      .orderBy(col("h"), col("vec_id")).limit(m.toInt)
-      .localCheckpoint()
+    val sample = trainSample(c, "ivf-train-v1", TrainPerCentroid * k)
     val seeds = sample.orderBy(col("h"), col("vec_id")).limit(k.toInt)
       .select(col("vec_id").as("cent_id"), col("v").as("cv"), col("nrm").as("cn"))
-    def nearest(in: DataFrame, cents: DataFrame, keep: Int): DataFrame =
-      nearestCents(in, cents, keep)
     // Lloyd refinement: per-dimension integer-exact rounded mean of the
-    // quantized members; the refined centroid lives on the 1/1024 grid.
-    // The floor-divide is written as (num - pmod(num, cnt)) div cnt —
-    // the numerator becomes an exact multiple of cnt, where floor and
-    // truncating division coincide, so the oracle's `//` (which
-    // TRUNCATES toward zero in DuckDB, diverging from floor on the
-    // negative component sums) computes the identical centroid under
-    // any engine version.
+    // quantized members; the refined centroid lives on the 1/1024 grid
     val qSums = (0 until Dim).map(i =>
       sum(round(col("v").getItem(i) * lit(1024.0)).cast("long")).as(s"s$i"))
-    def floorDiv(num: Column, den: Column): Column =
-      call_function("div", num - pmod(num, den), den)
-    // each round reassigns the sample to the current centroids and
-    // re-means; `lloydRounds` > 1 is the quality knob (recall-curve
-    // spec) — the oracle mirrors the default single round
-    def refine(cents: DataFrame): DataFrame =
-      nearest(sample, cents, 1)
-        .groupBy(col("cent_id"))
-        .agg(qSums.head, qSums.tail :+ count(lit(1)).as("cnt"): _*)
-        .select(col("cent_id"), array((0 until Dim).map(i =>
-          floorDiv(col(s"s$i") + call_function("div", col("cnt"), lit(2L)),
-            col("cnt")).cast("double")): _*).as("cv"))
-        .withColumn("cn", sqrt(dot("cv", "cv")))
-        .localCheckpoint()
-    // each checkpoint is eager, so a round's input and the training
-    // sample are scratch once the round after them is built
-    val refined = (1 to math.max(1, lloydRounds))
-      .foldLeft(seeds.localCheckpoint()) { (cs, _) =>
-        val next = refine(cs)
-        Checkpoints.drop(cs)
-        next
-      }
-    Checkpoints.drop(sample)
-    (c, refined, k)
+    val cents = nearestCents(sample, seeds, 1)
+      .groupBy(col("cent_id"))
+      .agg(qSums.head, qSums.tail :+ count(lit(1)).as("cnt"): _*)
+      .select(col("cent_id"), array((0 until Dim).map(i =>
+        Portable.floorDiv(col(s"s$i") + call_function("div", col("cnt"), lit(2L)),
+          col("cnt")).cast("double")): _*).as("cv"))
+      .withColumn("cn", sqrt(dot("cv", "cv")))
+      .localCheckpoint()
+    val lists = nearestCents(c, cents, 1)
+      .select(col("cent_id"), col("vec_id"), col("v"), col("nrm"))
+      .localCheckpoint()
+    // each checkpoint is eager: the sample and the corpus are scratch
+    Seq(sample, c).foreach(Checkpoints.drop)
+    (cents, lists)
   }
 
   def annIvf(spark: SparkSession, dir: String, nProbe: Int = 8,
-             nQueries: Int = 8, topK: Int = 3, kMin: Int = 64,
-             kCap: Int = 4096, sampleFactor: Int = 64,
-             lloydRounds: Int = 1): DataFrame = {
-    val (c, refined, _) =
-      ivfIndexInputs(spark, dir, kMin, kCap, sampleFactor, lloydRounds)
-    val assigned = assignLists(c, refined)
-      .localCheckpoint()
-    val qprobe = nearestCents(c.filter(col("vec_id") < nQueries), refined, nProbe)
+             nQueries: Int = 8, topK: Int = 3): DataFrame = {
+    val (cents, lists) = ivfIndex(spark, dir)
+    val queries = lists.filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("v"), col("nrm"))
+    val qprobe = nearestCents(queries, cents, nProbe)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("cent_id"))
     val win = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
-    assigned.join(broadcast(qprobe), Seq("cent_id"))
+    lists.join(broadcast(qprobe), Seq("cent_id"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", round(dot("qv", "v") / (col("qn") * col("nrm")), 4))
       .withColumn("rank", row_number().over(win).cast("long"))
@@ -549,9 +531,8 @@ object Similarity {
 
   /** The IVF index-build CTE chain (corpus → bounded training sample →
     * seeds → one Lloyd round → `cents`/`s1`/`assigned`) shared by the
-    * C13 oracle and the semantic-dedup oracle — the SQL mirror of
-    * [[ivfIndexInputs]] + [[assignLists]]. */
-  private def ivfAssignedCtes(kMin: Int, kCap: Int, sampleFactor: Int): String = {
+    * IVF oracles — the SQL mirror of [[ivfIndex]]. */
+  private def ivfAssignedCtes: String = {
     val qSums = (0 until Dim)
       .map(i => s"SUM(CAST(ROUND(v[${i + 1}] * 1024.0, 0) AS BIGINT)) AS s$i")
       .mkString(", ")
@@ -564,12 +545,9 @@ object Similarity {
         s"CAST(($num - ((($num % cnt) + cnt) % cnt)) // cnt AS DOUBLE)"
       }
       .mkString("[", ", ", "]")
-    val trainHSql = graft.functions.Portable
-      .hash60Sql("CONCAT('ivf-train-v1:', CAST(vec_id AS VARCHAR))")
     s"""$corpusSql,
-       |kk AS (SELECT LEAST($kCap, GREATEST($kMin, CAST(CEIL(SQRT(COUNT(*))) AS BIGINT))) AS k FROM c),
-       |sample AS (SELECT *, $trainHSql AS h FROM c
-       |  ORDER BY h, vec_id LIMIT (SELECT k * $sampleFactor FROM kk)),
+       |kk AS (SELECT LEAST($IvfKCap, GREATEST($IvfKMin, CAST(CEIL(SQRT(COUNT(*))) AS BIGINT))) AS k FROM c),
+       |sample AS (${trainSampleSql("ivf-train-v1", s"(SELECT k * $TrainPerCentroid FROM kk)")}),
        |seeds AS (SELECT vec_id AS cent_id, v AS cv, nrm AS cn FROM sample
        |  ORDER BY h, vec_id LIMIT (SELECT k FROM kk)),
        |s0 AS (SELECT sample.vec_id, sample.v, seeds.cent_id,
@@ -591,10 +569,8 @@ object Similarity {
        |  ) WHERE rn = 1)""".stripMargin
   }
 
-  def annIvfSql(nProbe: Int = 8, nQueries: Int = 8, topK: Int = 3,
-                kMin: Int = 64, kCap: Int = 4096,
-                sampleFactor: Int = 64): String = {
-    s"""WITH ${ivfAssignedCtes(kMin, kCap, sampleFactor)},
+  def annIvfSql(nProbe: Int = 8, nQueries: Int = 8, topK: Int = 3): String = {
+    s"""WITH $ivfAssignedCtes,
        |qprobe AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, cent_id FROM (
        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
        |      ORDER BY sim DESC, cent_id) AS rn
@@ -614,27 +590,25 @@ object Similarity {
   /** C25 — semantic dedup (SemDeDup-style: arXiv:2303.09540 — dedup in
     * embedding space by clustering, then dropping near-identical
     * neighbors WITHIN each cluster): every vector is filed into its IVF
-    * cell (C13's trained centroids + exact list assignment — the same
-    * index build, so the cluster structure is shared with ANN), and
-    * within each cell every pair is scored with the exact cosine; a doc
+    * cell (the lists of C13's [[ivfIndex]] entry, so the cluster
+    * structure is shared with ANN), and within each cell every pair is
+    * scored with the exact cosine; a doc
     * whose cell holds a LOWER-id doc with cosine ≥ τ is dropped, keyed
     * to its smallest such keeper. Output: one row per dropped doc
     * (doc_id, cent_id, dup_of, cosine-to-keeper).
     *
     * Scale shape: NEVER all-pairs — the quadratic work is per-cell
-    * (cell size ≈ n/k = √n under k~√n, and bounded by the k knob:
-    * at 100 TB you raise kCap so cells stay ~10⁴ rows and the pair
-    * work stays cell-linear, Σ|cell|² ≪ n²). The pair join shuffles
-    * once on cent_id; the keeper choice is one window per dropped doc.
-    * The dropped set feeds C18's cluster resolution exactly like the
-    * MinHash pair stream. */
+    * (cell size ≈ n/k = √n under k~√n, so Σ|cell|² ≈ n^1.5 ≪ n²; past
+    * IvfKCap² ≈ 1.7·10⁷ vectors k stops growing and cells grow as
+    * n/IvfKCap). The pair join shuffles once on cent_id; the keeper
+    * choice is one window per dropped doc. The dropped set feeds C18's
+    * cluster resolution exactly like the MinHash pair stream. */
   def dedupSemantic(spark: SparkSession, dir: String,
                     tau: Double = 0.4): DataFrame = {
-    val (c, cents, _) = ivfIndexInputs(spark, dir)
-    val assigned = assignLists(c, cents).localCheckpoint()
-    val a = assigned.select(col("cent_id"), col("vec_id").as("dup_of"),
+    val (_, lists) = ivfIndex(spark, dir)
+    val a = lists.select(col("cent_id"), col("vec_id").as("dup_of"),
       col("v").as("va"), col("nrm").as("na"))
-    val b = assigned.select(col("cent_id"), col("vec_id").as("doc_id"),
+    val b = lists.select(col("cent_id"), col("vec_id").as("doc_id"),
       col("v").as("vb"), col("nrm").as("nb"))
     val win = Window.partitionBy(col("doc_id")).orderBy(col("dup_of"))
     a.join(b, Seq("cent_id"))
@@ -646,9 +620,8 @@ object Similarity {
       .select(col("doc_id"), col("cent_id"), col("dup_of"), col("cosine"))
   }
 
-  def dedupSemanticSql(tau: Double = 0.4, kMin: Int = 64, kCap: Int = 4096,
-                       sampleFactor: Int = 64): String =
-    s"""WITH ${ivfAssignedCtes(kMin, kCap, sampleFactor)},
+  def dedupSemanticSql(tau: Double = 0.4): String =
+    s"""WITH $ivfAssignedCtes,
        |pairs AS (SELECT b.vec_id AS doc_id, a.cent_id, a.vec_id AS dup_of,
        |    ROUND((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm), 4) AS cosine
        |  FROM assigned a JOIN assigned b ON a.cent_id = b.cent_id
@@ -665,18 +638,17 @@ object Similarity {
     * clustering / NN-descent seeding consumes downstream.
     *
     * Scale: candidates are within-cell only — Σ|cell|² bounded work
-    * exactly like [[dedupSemantic]] (never all-pairs; the k knob
-    * bounds cell size at scale), sharing the SAME memoized index
-    * build, so a session composing dedup + graph pays for one
-    * training pass. Ranking is a per-src top-k window on the cell
-    * join; the mutual flag is a self-equi-join of the (n·k)-row edge
-    * frame on the reversed key — edge-scale, not corpus-scale. */
+    * exactly like [[dedupSemantic]] (never all-pairs), reading the
+    * SAME lists of [[ivfIndex]], so a session composing dedup + graph
+    * pays for one training pass and one list assignment. Ranking is a
+    * per-src top-k window on the cell join; the mutual flag is a
+    * self-equi-join of the (n·k)-row edge frame on the reversed key —
+    * edge-scale, not corpus-scale. */
   def knnGraph(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
-    val (c, cents, _) = ivfIndexInputs(spark, dir)
-    val assigned = assignLists(c, cents).localCheckpoint()
-    val a = assigned.select(col("cent_id"), col("vec_id").as("src"),
+    val (_, lists) = ivfIndex(spark, dir)
+    val a = lists.select(col("cent_id"), col("vec_id").as("src"),
       col("v").as("va"), col("nrm").as("na"))
-    val b = assigned.select(col("cent_id"), col("vec_id").as("dst"),
+    val b = lists.select(col("cent_id"), col("vec_id").as("dst"),
       col("v").as("vb"), col("nrm").as("nb"))
     val win = Window.partitionBy(col("src")).orderBy(col("cosine").desc, col("dst"))
     val edges = a.join(b, Seq("cent_id"))
@@ -699,13 +671,12 @@ object Similarity {
     * corpus), idf = the log-free linear ratio n_cells/df_cells (the
     * C15 precedent — a monotone transform preserves per-cell ranking
     * for fixed df), score = tf·n_cells div df_cells in exact BIGINT,
-    * ties pinned to the lexicographically smaller term. Shares the
-    * memoized C13 index; the token explode is the one corpus-scale
-    * pass, tf/df aggregations are (cells×vocab)- and vocab-bounded,
-    * the top-k is a cell-keyed window. */
+    * ties pinned to the lexicographically smaller term. Reads the
+    * lists of the C13 index ([[ivfIndex]]); the token explode is the
+    * one corpus-scale pass, tf/df aggregations are (cells×vocab)- and
+    * vocab-bounded, the top-k is a cell-keyed window. */
   def clusterLabelTfidf(spark: SparkSession, dir: String, topK: Int = 5): DataFrame = {
-    val (c, cents, _) = ivfIndexInputs(spark, dir)
-    val assigned = assignLists(c, cents)
+    val assigned = ivfIndex(spark, dir)._2
       .select(col("vec_id").as("doc_id"), col("cent_id"))
     val toks = graft.ops.Text.docTokens(spark, dir)
       .select(col("doc_id"), explode(col("toks")).as("term"))
@@ -725,9 +696,8 @@ object Similarity {
         col("df_cells"), col("score"))
   }
 
-  def clusterLabelTfidfSql(topK: Int = 5, kMin: Int = 64, kCap: Int = 4096,
-                           sampleFactor: Int = 64): String =
-    s"""WITH ${ivfAssignedCtes(kMin, kCap, sampleFactor)},
+  def clusterLabelTfidfSql(topK: Int = 5): String =
+    s"""WITH $ivfAssignedCtes,
        |cells AS (SELECT vec_id AS doc_id, cent_id FROM assigned),
        |toks AS (
        |  SELECT doc_id, unnest(${graft.ops.Text.tokensSql("text")}) AS term
@@ -747,9 +717,8 @@ object Similarity {
        |  FROM tf f JOIN dfc d ON f.term = d.term CROSS JOIN nc
        |) WHERE rnk <= $topK""".stripMargin
 
-  def knnGraphSql(k: Int = 3, kMin: Int = 64, kCap: Int = 4096,
-                  sampleFactor: Int = 64): String =
-    s"""WITH ${ivfAssignedCtes(kMin, kCap, sampleFactor)},
+  def knnGraphSql(k: Int = 3): String =
+    s"""WITH $ivfAssignedCtes,
        |pairs AS (SELECT a.vec_id AS src, b.vec_id AS dst,
        |    ROUND((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm), 4) AS cosine
        |  FROM assigned a JOIN assigned b ON a.cent_id = b.cent_id
@@ -766,52 +735,44 @@ object Similarity {
 
   /** C30 — product quantization (the public PQ construction of
     * Jégou/Douze/Schmid, IEEE TPAMI 2011): the 64-dim space splits
-    * into `subspaces` 8-dim subspaces, each with its own `subK`-entry
-    * codebook trained on the SAME deterministic bounded sample as the
-    * IVF index (lowest salted hashes; seed assignment + one
+    * into `PqSubspaces` (8) 8-dim subspaces, each with its own
+    * `PqSubK`-entry (16) codebook trained on a sample drawn like the
+    * IVF index's ([[trainSample]], its own salt; seed assignment + one
     * integer-exact Lloyd round on the 1/1024 grid, so the oracle
     * replays the training bit-for-bit). A vector's code is one hex
     * nibble per subspace — 4 bytes replacing 512, the memory format
     * ANN serving tiers hold in RAM at 100 TB scale.
     *
-    * Scale: training is sample-bounded (subK·sampleFactor rows);
-    * encoding is a fixed n×subspaces×subK fan-out (explode + broadcast
-    * codebook join), collapsed by map-side partial aggregation —
+    * Scale: training is sample-bounded (PqSubK·TrainPerCentroid
+    * rows); encoding is a fixed n×PqSubspaces×PqSubK fan-out (explode +
+    * broadcast codebook join), collapsed by map-side partial aggregation —
     * min(struct) per (vec, sub) combines the 16 candidate rows inside
     * the explode's own partition before any shuffle. Distances are
     * rounded at 1e-4 with the cent-index tie-break (portable argmin);
     * the reconstruction error ships as e4-quantized BIGINT so the
-    * 8-term sum is order-independent. */
-  /** The trained PQ parts, kept per (session, embeddings, knobs) by
+    * 8-term sum is order-independent. The sizing constants are the
+    * ones above [[trainSample]]; the oracle renders the same. */
+  /** The trained PQ parts, kept per (session, embeddings) by
     * [[Tables.checkpointed]]: [[pqEncode]] and [[pqAdcTopK]] read the
     * same (corpus, codebook, assignments). */
-  private[graft] def pqIndexParts(spark: SparkSession, dir: String,
-                                  subspaces: Int = 8, subK: Int = 16,
-                                  sampleFactor: Int = 64): (DataFrame, DataFrame, DataFrame) =
-    Tables.checkpointed(spark, "pq", dir, "embeddings", (subspaces, subK, sampleFactor))(
-      buildPqIndex(spark, dir, subspaces, subK, sampleFactor))
+  private[graft] def pqIndexParts(spark: SparkSession,
+                                  dir: String): (DataFrame, DataFrame, DataFrame) =
+    Tables.checkpointed(spark, "pq", dir, "embeddings", ())(buildPqIndex(spark, dir))
 
   /** (corpus, refined codebook (sub, cent, cv), assignments
     * (vec_id, sub, cent, rd)) — the trained-PQ state. */
-  private def buildPqIndex(spark: SparkSession, dir: String, subspaces: Int,
-                           subK: Int, sampleFactor: Int): (DataFrame, DataFrame, DataFrame) = {
-    val S = Dim / subspaces
+  private def buildPqIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val S = Dim / PqSubspaces
     val c = corpus(spark, dir).localCheckpoint()
-    def floorDiv(num: Column, den: Column): Column =
-      call_function("div", num - pmod(num, den), den)
     def subExplode(df: DataFrame): DataFrame =
-      df.select(col("vec_id"), explode(array((0 until subspaces).map(s =>
+      df.select(col("vec_id"), explode(array((0 until PqSubspaces).map(s =>
           struct(lit(s).as("sub"), slice(col("v"), s * S + 1, S).as("sv"))): _*)).as("x"))
         .select(col("vec_id"), col("x.sub").as("sub"), col("x.sv").as("sv"))
-    val trainH = graft.functions.Portable.hash60(
-      concat(lit("pq-train-v1:"), col("vec_id").cast("string")))
-    val sample = c.withColumn("h", trainH)
-      .orderBy(col("h"), col("vec_id")).limit(sampleFactor * subK)
-      .localCheckpoint()
-    val seeds = sample.orderBy(col("h"), col("vec_id")).limit(subK)
+    val sample = trainSample(c, "pq-train-v1", TrainPerCentroid * PqSubK)
+    val seeds = sample.orderBy(col("h"), col("vec_id")).limit(PqSubK)
       .withColumn("cent",
         row_number().over(graft.util.Windows.bounded(col("h"), col("vec_id"))).cast("int") - 1)
-    val book0 = seeds.select(explode(array((0 until subspaces).map(s =>
+    val book0 = seeds.select(explode(array((0 until PqSubspaces).map(s =>
         struct(lit(s).as("sub"), col("cent"),
           slice(col("v"), s * S + 1, S).as("cv"))): _*)).as("x"))
       .select(col("x.sub").as("sub"), col("x.cent").as("cent"), col("x.cv").as("cv"))
@@ -835,7 +796,7 @@ object Similarity {
       // scale-invariant so IVF never needs this, but L2 distances do;
       // /1024 is a power of two, so the double is exact both engines
       .select(col("sub"), col("cent"), array((0 until S).map(i =>
-        (floorDiv(col(s"s$i") + floorDiv(col("cnt"), lit(2L)), col("cnt"))
+        (Portable.floorDiv(col(s"s$i") + Portable.floorDiv(col("cnt"), lit(2L)), col("cnt"))
           .cast("double") / lit(1024.0))): _*).as("cv"))
       .localCheckpoint()
     val assigned = assign(subExplode(c), book).localCheckpoint()
@@ -843,9 +804,8 @@ object Similarity {
     (c, book, assigned)
   }
 
-  def pqEncode(spark: SparkSession, dir: String, subspaces: Int = 8,
-               subK: Int = 16, sampleFactor: Int = 64): DataFrame = {
-    val (c, _, af) = pqIndexParts(spark, dir, subspaces, subK, sampleFactor)
+  def pqEncode(spark: SparkSession, dir: String): DataFrame = {
+    val (c, _, af) = pqIndexParts(spark, dir)
     af
       .groupBy(col("vec_id"))
       .agg(
@@ -857,15 +817,12 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("pq_code"), col("err2_e4"))
   }
 
-  def pqEncodeSql(subspaces: Int = 8, subK: Int = 16,
-                  sampleFactor: Int = 64): String = {
-    val S = Dim / subspaces
-    val trainHSql = graft.functions.Portable
-      .hash60Sql("CONCAT('pq-train-v1:', CAST(vec_id AS VARCHAR))")
-    def subUnion(src: String): String = (0 until subspaces).map { s =>
+  def pqEncodeSql(): String = {
+    val S = Dim / PqSubspaces
+    def subUnion(src: String): String = (0 until PqSubspaces).map { s =>
       s"SELECT vec_id, $s AS sub, v[${s * S + 1}:${s * S + S}] AS sv FROM $src"
     }.mkString("\n    UNION ALL\n    ")
-    val bookUnion = (0 until subspaces).map { s =>
+    val bookUnion = (0 until PqSubspaces).map { s =>
       s"SELECT $s AS sub, cent, v[${s * S + 1}:${s * S + S}] AS cv FROM seeds"
     }.mkString("\n    UNION ALL\n    ")
     val d2 = (0 until S).map(i =>
@@ -885,11 +842,10 @@ object Similarity {
          |        ORDER BY ROUND($d2, 4), b.cent) AS rn
          |    FROM $ex x JOIN $book b ON x.sub = b.sub) WHERE rn = 1""".stripMargin
     s"""WITH $corpusSql,
-       |samp AS (SELECT *, $trainHSql AS h FROM c
-       |  ORDER BY h, vec_id LIMIT ${sampleFactor * subK}),
+       |samp AS (${trainSampleSql("pq-train-v1", s"${TrainPerCentroid * PqSubK}")}),
        |seeds AS (SELECT vec_id, v,
        |    ROW_NUMBER() OVER (ORDER BY h, vec_id) - 1 AS cent
-       |  FROM samp ORDER BY h, vec_id LIMIT $subK),
+       |  FROM samp ORDER BY h, vec_id LIMIT $PqSubK),
        |book0 AS (
        |    $bookUnion
        |),
@@ -916,20 +872,19 @@ object Similarity {
   /** C31 — asymmetric-distance (ADC) top-k over the PQ codes: the
     * serving pattern the codes exist for (Jégou et al. §IV). Each
     * query precomputes its distance to every codebook entry — a
-    * subspaces×subK lookup table, broadcast — and a database vector's
+    * PqSubspaces×PqSubK lookup table, broadcast — and a database vector's
     * approximate distance is the SUM OF TABLE LOOKUPS addressed by its
     * code nibbles: the 64-dim scan never touches the raw vectors
     * again. Distances live on the e4 integer grid (order-independent
     * sums, and ADC(q → q's own code) reconstructs q's err2_e4 exactly
     * — the cross-operator identity the spec pins).
     *
-    * Scale: the LUT is queries×subspaces×subK rows (broadcast); the
-    * scan is the code frame (n×subspaces) joined to it with map-side
+    * Scale: the LUT is queries×PqSubspaces×PqSubK rows (broadcast); the
+    * scan is the code frame (n×PqSubspaces) joined to it with map-side
     * partial aggregation per (query, vec); one top-k window. */
   def pqAdcTopK(spark: SparkSession, dir: String, nQueries: Int = 8,
-                topK: Int = 3, subspaces: Int = 8, subK: Int = 16,
-                sampleFactor: Int = 64): DataFrame = {
-    val scores = pqAdcScores(spark, dir, nQueries, subspaces, subK, sampleFactor)
+                topK: Int = 3): DataFrame = {
+    val scores = pqAdcScores(spark, dir, nQueries)
       .filter(col("vec_id") =!= col("query_id"))
     val win = Window.partitionBy(col("query_id")).orderBy(col("adc_e4"), col("vec_id"))
     scores.withColumn("rank", row_number().over(win).cast("long"))
@@ -939,12 +894,11 @@ object Similarity {
 
   /** Full ADC score frame (query_id, vec_id, adc_e4), self included. */
   private[graft] def pqAdcScores(spark: SparkSession, dir: String,
-                                 nQueries: Int, subspaces: Int = 8,
-                                 subK: Int = 16, sampleFactor: Int = 64): DataFrame = {
-    val S = Dim / subspaces
-    val (c, book, af) = pqIndexParts(spark, dir, subspaces, subK, sampleFactor)
+                                 nQueries: Int): DataFrame = {
+    val S = Dim / PqSubspaces
+    val (c, book, af) = pqIndexParts(spark, dir)
     val qx = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), explode(array((0 until subspaces).map(s =>
+      .select(col("vec_id").as("query_id"), explode(array((0 until PqSubspaces).map(s =>
         struct(lit(s).as("sub"), slice(col("v"), s * S + 1, S).as("sv"))): _*)).as("x"))
       .select(col("query_id"), col("x.sub").as("sub"), col("x.sv").as("sv"))
     val d2 = (0 until S).map(i =>
@@ -957,16 +911,15 @@ object Similarity {
       .agg(sum(col("qd_e4")).as("adc_e4"))
   }
 
-  def pqAdcTopKSql(nQueries: Int = 8, topK: Int = 3, subspaces: Int = 8,
-                   subK: Int = 16, sampleFactor: Int = 64): String = {
-    val S = Dim / subspaces
+  def pqAdcTopKSql(nQueries: Int = 8, topK: Int = 3): String = {
+    val S = Dim / PqSubspaces
     val d2q = (0 until S).map(i =>
       s"(q.sv[${i + 1}] - b.cv[${i + 1}]) * (q.sv[${i + 1}] - b.cv[${i + 1}])")
       .mkString(" + ")
-    val qxUnion = (0 until subspaces).map { s =>
+    val qxUnion = (0 until PqSubspaces).map { s =>
       s"SELECT vec_id AS query_id, $s AS sub, v[${s * S + 1}:${s * S + S}] AS sv FROM c WHERE vec_id < $nQueries"
     }.mkString("\n    UNION ALL\n    ")
-    val encodeBody = pqEncodeSql(subspaces, subK, sampleFactor)
+    val encodeBody = pqEncodeSql()
     // reuse the encode chain up to the assignment CTE `af`
     val ctes = encodeBody.substring(0, encodeBody.indexOf(",\ng AS ("))
     s"""$ctes,
@@ -1200,8 +1153,6 @@ object Similarity {
     * boundaries cannot change the result. Upper triangle only
     * (i ≤ j). */
   def embeddingCovariance(spark: SparkSession, dir: String): DataFrame = {
-    def floorDiv(num: Column, den: Column): Column =
-      call_function("div", num - pmod(num, den), den)
     val spk = spark
     import spk.implicits._
     val cells = corpus(spark, dir)
@@ -1253,9 +1204,9 @@ object Similarity {
       .agg(sum(col("pn")).as("n_vecs"), sum(col("pqq")).as("sum_qq"),
         sum(col("pqi")).as("sum_qi"), sum(col("pqj")).as("sum_qj"))
     cells.select(col("i"), col("j"), col("n_vecs"),
-      (floorDiv(col("sum_qq"), col("n_vecs")) -
-        floorDiv(col("sum_qi"), col("n_vecs")) *
-          floorDiv(col("sum_qj"), col("n_vecs"))).as("cov_e12"),
+      (Portable.floorDiv(col("sum_qq"), col("n_vecs")) -
+        Portable.floorDiv(col("sum_qi"), col("n_vecs")) *
+          Portable.floorDiv(col("sum_qj"), col("n_vecs"))).as("cov_e12"),
       (col("i") === col("j")).cast("long").as("diag"))
   }
 
@@ -1403,8 +1354,7 @@ object Similarity {
             |    (a, b) -> CAST(ROUND(a * 1000000, 0) AS BIGINT) * b),
             |  0L, (acc, e) -> acc + e)""".stripMargin).as("p12"))
       .select(col("vec_id"), col("label"),
-        call_function("div", col("p12") - pmod(col("p12"), lit(1000000L)),
-          lit(1000000L)).as("proj_micro"))
+        Portable.floorDiv(col("p12"), lit(1000000L)).as("proj_micro"))
   }
 
   def embeddingPcaProjectSql(iters: Int = PcaIters): String = {

@@ -1697,10 +1697,8 @@ object Analytics {
     // monthly revenue is a corpus-scale money sum: delta·10⁶ passes
     // 2.5·10¹⁸ at the sf10 tier — the numerator runs in decimal(38)
     // (oracle: HUGEINT) so the ppm stays exact at any volume
-    def floorDivPpm(num0: Column, den: Column): Column = {
-      val num = num0.cast("decimal(38,0)") * lit(1000000L)
-      call_function("div", num - pmod(num, den), den)
-    }
+    def floorDivPpm(num: Column, den: Column): Column =
+      graft.functions.Portable.floorDiv(num.cast("decimal(38,0)") * lit(1000000L), den)
     val monthly = Tables.orders(spark, dir)
       .groupBy((year(col("o_orderdate")) * 12 +
         month(col("o_orderdate")) - 1).cast("long").as("month_idx"))

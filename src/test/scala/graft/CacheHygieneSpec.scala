@@ -33,7 +33,7 @@ class CacheHygieneSpec extends AnyFunSuite {
     val kinds: Seq[(String, () => Seq[DataFrame])] = Seq(
       "winnow" -> (() => Seq(ops.Retrieval.winnowHashesCached(spark, dir, 4))),
       "repetition" -> (() => Seq(ops.Corpus.textRepetition(spark, dir))),
-      "ivf" -> (() => { val (c, cent, _) = ops.Similarity.ivfIndexInputs(spark, dir); Seq(c, cent) }),
+      "ivf" -> (() => { val (cent, lists) = ops.Similarity.ivfIndex(spark, dir); Seq(cent, lists) }),
       "pq" -> (() => { val (c, book, a) = ops.Similarity.pqIndexParts(spark, dir); Seq(c, book, a) }),
       "pairs" -> (() => Seq(ops.Dedup.ngramPairsCached(spark, dir, 0.5))),
       "spans" -> (() => Seq(ops.Retrieval.substringSpansCached(spark, dir, 8))),
@@ -59,10 +59,10 @@ class CacheHygieneSpec extends AnyFunSuite {
   test("ivf and pq builds leave only their returned frames pinned") {
     graft.util.GraftSession.releaseCaches(spark)
     assert(pinnedRdds == 0, "the check must start from a clean slate")
-    val (c, cent, _) = ops.Similarity.ivfIndexInputs(spark, dir)
+    val (cent, lists) = ops.Similarity.ivfIndex(spark, dir)
     val (pc, book, assigned) = ops.Similarity.pqIndexParts(spark, dir)
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet ==
-      checkpointIds(Seq(c, cent, pc, book, assigned)))
+      checkpointIds(Seq(cent, lists, pc, book, assigned)))
     graft.util.GraftSession.releaseCaches(spark)
   }
 
@@ -131,17 +131,17 @@ class CacheHygieneSpec extends AnyFunSuite {
 
   test("ivf index memo shares one build and releases with the caches") {
     graft.util.GraftSession.releaseCaches(spark)
-    val (c1, cent1, k1) = ops.Similarity.ivfIndexInputs(spark, dir)
-    val (c2, cent2, k2) = ops.Similarity.ivfIndexInputs(spark, dir)
-    assert((c1 eq c2) && (cent1 eq cent2) && k1 == k2,
+    val (cent1, lists1) = ops.Similarity.ivfIndex(spark, dir)
+    val (cent2, lists2) = ops.Similarity.ivfIndex(spark, dir)
+    assert((cent1 eq cent2) && (lists1 eq lists2),
       "second lookup should reuse the memoized build")
     val n1 = cent1.count()
     graft.util.GraftSession.releaseCaches(spark)
-    val (c3, cent3, _) = ops.Similarity.ivfIndexInputs(spark, dir)
-    assert(!(c3 eq c1), "release must drop the ivf memo")
+    val (cent3, lists3) = ops.Similarity.ivfIndex(spark, dir)
+    assert(!(lists3 eq lists1), "release must drop the ivf memo")
     // the rebuilt frames must be live (their blocks exist) and identical
     assert(cent3.count() == n1)
-    assert(c3.count() > 0)
+    assert(lists3.count() > 0)
     graft.util.GraftSession.releaseCaches(spark)
   }
 

@@ -332,15 +332,6 @@ class OperatorSemanticsSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     val recall = exact.intersect(ivf).size.toDouble / exact.size
     assert(recall >= 0.5, f"IVF recall $recall%.2f below 0.5 floor")
-    // the lloydRounds quality knob: extra refinement rounds keep the
-    // frame valid and at least hold the recall floor (tighter clusters
-    // concentrate true neighbors into the probed lists)
-    val ivf2 = ops.Similarity.annIvf(spark, dir, nQueries = nq, topK = 3,
-        lloydRounds = 3)
-      .select(col("query_id"), col("vec_id"))
-      .collect().map(_.toSeq).toSet
-    val recall2 = exact.intersect(ivf2).size.toDouble / exact.size
-    assert(recall2 >= 0.5, f"3-round IVF recall $recall2%.2f below floor")
   }
 
   // from-scratch Avro-binary reader — the independent side of the
@@ -2082,8 +2073,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     // iff its cell holds a LOWER-id doc with cosine >= tau, keyed to
     // the smallest such keeper — quadratic within cells, like the
     // operator, but built from first principles on the test side
-    val (c, cents, _) = ops.Similarity.ivfIndexInputs(spark, dir)
-    val assigned = ops.Similarity.assignLists(c, cents).cache()
+    val assigned = ops.Similarity.ivfIndex(spark, dir)._2
     val a = assigned.select(col("cent_id"), col("vec_id").as("keep_id"),
       col("v").as("va"), col("nrm").as("na"))
     val b = assigned.select(col("cent_id"), col("vec_id").as("doc_id"),
@@ -2422,8 +2412,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     val row = labels.filter(col("rnk") === 1L).orderBy("cent_id").head
     val cell = row.getAs[Long]("cent_id")
     val term = row.getAs[String]("term")
-    val (c, cents, _) = ops.Similarity.ivfIndexInputs(spark, dir)
-    val docsInCell = ops.Similarity.assignLists(c, cents)
+    val docsInCell = ops.Similarity.ivfIndex(spark, dir)._2
       .filter(col("cent_id") === cell).select(col("vec_id").as("doc_id"))
     val n = graft.util.Tables.documents(spark, dir)
       .join(docsInCell, "doc_id")

@@ -49,8 +49,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // corpus scan via a non-equi (!=) condition IS the brute-force design.
     // cdc_syncpoint: tables x boundary-grid broadcast cross is the
     // telescoping-delta design (boundaries are max_ts/step rows).
-    // ann_ivf: corpus x k-centroid broadcast cross for list assignment
-    // is the IVF index build (centroids are k rows).
+    // ann_ivf: query-block x k-centroid broadcast cross picks each
+    // query's probed lists (centroids are k rows).
     // doc_tfidf: the 1-row corpus-size scalar broadcast (same shape as
     // q_scalar_subquery).
     // codec_simple_decode re-plans the codec_simple stream and inherits
@@ -74,7 +74,7 @@ class PlanQualitySpec extends AnyFunSuite {
       "ann_ivf", "doc_tfidf",
       "source_mix_weights", // 1-row totals broadcast (q_scalar_subquery shape)
       "mix_epoch_plan",     // embeds C26's totals cross + its own 1-row budget cross
-      // the shared assignment cross + its 1-row n_cells broadcast
+      // 1-row n_cells broadcast over the cell x term counts
       "cluster_label_tfidf",
       // the deliberate dimension x salt-range replication cross (R rows)
       "q_salted_skew_join",
@@ -171,7 +171,7 @@ class PlanQualitySpec extends AnyFunSuite {
       s"exempt but planning no nested loop join: ${notNested.mkString(", ")}")
   }
 
-  test("building the seq-check and containment frames starts no Spark job") {
+  test("building the seq-check, containment and IVF frames starts no Spark job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
@@ -206,6 +206,13 @@ class PlanQualitySpec extends AnyFunSuite {
       ops.Dedup.gramFrame(spark, dir)
       val cont = jobsOf(ops.Retrieval.dedupContainment(spark, dir))
       assert(cont.isEmpty, s"dedupContainment started ${cont.size} job(s) while building")
+      // the IVF index entry holds the list assignment: its consumers
+      // read the lists and assign nothing themselves
+      ops.Similarity.ivfIndex(spark, dir)
+      val ann = jobsOf(ops.Similarity.annIvf(spark, dir))
+      assert(ann.isEmpty, s"annIvf started ${ann.size} job(s) while building")
+      val sem = jobsOf(ops.Similarity.dedupSemantic(spark, dir))
+      assert(sem.isEmpty, s"dedupSemantic started ${sem.size} job(s) while building")
     } finally {
       sc.removeSparkListener(listener)
       graft.util.GraftSession.releaseCaches(spark)

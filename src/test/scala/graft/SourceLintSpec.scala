@@ -81,6 +81,16 @@ class SourceLintSpec extends AnyFunSuite {
     assert(found.isEmpty, "use graft.functions.FixedPoint for: " + found.mkString(", "))
   }
 
+  /** Floor division that must agree with the oracle's truncating `//`
+    * is written once, in [[graft.functions.Portable.floorDiv]]: the
+    * exact-multiple form `div(num - pmod(num, den), den)`. A `- pmod(`
+    * feeding a `div` or `DIV` elsewhere would be a second copy of it. */
+  test("exact-multiple floor division is written only in Portable.floorDiv") {
+    val idiom = """"div"\s*,[^;]{0,80}?-\s*pmod\s*\(|-\s*pmod\s*\([^"\n]*?\)\s*(?i:div)\b""".r
+    val found = hits(idiom, "functions/Portable.scala")
+    assert(found.isEmpty, "use graft.functions.Portable.floorDiv for: " + found.mkString(", "))
+  }
+
   /** Every message decoder is a native scanner registered through
     * [[graft.functions.WireScanExprs]]; Spark's `from_json` and
     * `from_csv` tokenize the whole message interpreted. The A46
