@@ -33,7 +33,9 @@ import org.apache.spark.sql.functions._
   *    can re-remove it — so remove traces carry no TASK_REMOVED
   *    event, and `PostFinish` only logs.
   *  - MOVE — maintainer/operator/operator_move.go:54-186: the same
-  *    six-arm machine as the coordinator move A92 transcribed
+  *    six-arm machine as the coordinator's operator_move.go:55-173,
+  *    so A92 (`cdc_operator_move`) is this fold's move half read with
+  *    the coordinator's columns ([[OperatorLifecycle.operatorMove]])
   *    (origin non-Working stops, dest Working after stop finishes,
   *    dest lost before stop swaps the move into an add-back-to-origin
   *    with dest := origin, dest lost after stop marks the span ABSENT
@@ -48,9 +50,9 @@ import org.apache.spark.sql.functions._
   * of DROPPED tables (tables on the grp-hash mod 3 = 0 arm — the
   * RemoveTasksByTableIDs path) with arms clean-nonworking-ack / node
   * crash / stalled; MOVE operators execute the A80 default-group
-  * balance moves over the A92 six-arm scenario grid. Events ride the
-  * heartbeat tick grid; each tick applies at most one event then
-  * polls Schedule(), exactly the controller's poll loop.
+  * balance moves over the six-arm scenario grid ([[moveTrace]]).
+  * Events ride the heartbeat tick grid; each tick applies at most one
+  * event then polls Schedule(), exactly the controller's poll loop.
   *
   * Scale shape: the operator lists are dimension-scale (A79/A80 cap
   * them at the batch; dropped-table spans are bounded by the span
@@ -60,8 +62,8 @@ import org.apache.spark.sql.functions._
   * does. */
 object SpanLifecycle {
 
-  /** Move heartbeat grid 0..5 (A92's); add/remove machines finish on
-    * the shorter 0..3 grid. */
+  /** Move heartbeat grid 0..5 (A92 reads it too); add/remove machines
+    * finish on the shorter 0..3 grid. */
   val MoveMaxTick = 5L
   val AddRemoveMaxTick = 3L
 
@@ -179,37 +181,72 @@ object SpanLifecycle {
         col("o.can").as("canceled"), col("o.msg").as("msg"),
         col("o.target").as("msg_target"), col("o.mark").as("db_mark"))
 
+  /** The six move scenarios, one operator per A80 balance move
+    * (origin = from_node, dest = to_node): clean move, origin crash,
+    * dest crash before stop (the swap/rollback arm), dest crash after
+    * stop (the absent arm), DDL drop, and a stalled origin (still
+    * re-sending Add at trace end). Arm index = (global move rank - 1)
+    * mod 6 over the (grp, span)-ordered move list, so any fleet with
+    * ≥6 scheduled moves exercises every arm; the rank window is bounded
+    * by the move list (≤ the A80 batch cap), never by data volume.
+    * Output: the [[spanFrame]] trace of the moves (op_id = span). */
+  def moveTrace(moves: DataFrame): DataFrame =
+    moves
+      .withColumn("arm",
+        pmod(row_number().over(graft.util.Windows.bounded(col("grp"), col("span")))
+          .cast("long") - 1L, lit(6L)))
+      .select(lit("move").as("op_type"), col("span").as("op_id"),
+        col("from_node").as("origin"), col("to_node").as("dest0"), col("arm"),
+        explode(expr(s"sequence(0L, ${MoveMaxTick}L)")).as("tick"))
+      .withColumn("kind",
+        when(col("arm") === 0L && col("tick") === 2L, "CHECK_STOPPED")
+          .when(col("arm") === 0L && col("tick") === 4L, "CHECK_WORKING")
+          .when(col("arm") === 1L && col("tick") === 2L, "NODE_REMOVE")
+          .when(col("arm") === 1L && col("tick") === 3L, "CHECK_WORKING")
+          .when(col("arm") === 2L && col("tick") === 1L, "NODE_REMOVE")
+          .when(col("arm") === 2L && col("tick") === 3L, "CHECK_WORKING")
+          .when(col("arm") === 3L && col("tick") === 2L, "CHECK_STOPPED")
+          .when(col("arm") === 3L && col("tick") === 3L, "NODE_REMOVE")
+          .when(col("arm") === 4L && col("tick") === 2L, "TASK_REMOVED")
+          .when(col("arm") === 5L && col("tick") === 2L, "CHECK_STOPPED")
+          .otherwise("HB"))
+      // CHECK_STOPPED is from the origin; NODE_REMOVE hits the dest on
+      // arms 2/3, the origin on arm 1; CHECK_WORKING is from the dest
+      // except arm 2's add-back (origin)
+      .withColumn("node",
+        when(col("kind") === "HB" || col("kind") === "TASK_REMOVED", lit(-1L))
+          .when(col("kind") === "NODE_REMOVE" && col("arm").isin(2L, 3L),
+            col("dest0"))
+          .when(col("kind") === "NODE_REMOVE", col("origin"))
+          .when(col("kind") === "CHECK_WORKING" && col("arm") === 2L,
+            col("origin"))
+          .when(col("kind") === "CHECK_WORKING", col("dest0"))
+          .otherwise(col("origin")))
+      .select(col("op_type"), col("op_id"), col("origin"), col("dest0"),
+        col("tick"), col("kind"), col("node"))
+
   /** A109 production query: ADD machines over the A79 assignments
     * (6-arm round-robin), REMOVE machines over the dropped tables'
     * spans (grp-hash mod 3 = 0, the RemoveTasksByTableIDs path; 3-arm
     * round-robin), MOVE machines over the A80 default-group balance
-    * moves (the A92 six-arm scenario grid). */
+    * moves ([[moveTrace]]). */
   def spanOperators(cl: DataFrame, batch: Int = 1000,
                     nRegions: Int = Scheduler.NRegions): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
     val adds = Scheduler.basicSchedule(cl, batch, nRegions)
       .select(lit("add").as("op_type"), col("span").as("op_id"),
         lit(-1L).as("origin"), col("target_node").as("dest0"),
-        pmod(col("assign_seq") - 1L, lit(6L)).as("arm"),
-        lit(AddRemoveMaxTick).as("max_tick"))
+        pmod(col("assign_seq") - 1L, lit(6L)).as("arm"))
     val removes = Scheduler.spanPlacement(cl, nRegions)
       .filter(graft.functions.Portable.bucket(col("grp"), 3) === 0L)
-      .withColumn("rn", row_number().over(w.orderBy(col("span"))).cast("long"))
+      .withColumn("rn",
+        row_number().over(graft.util.Windows.bounded(col("span"))).cast("long"))
       .select(lit("remove").as("op_type"), col("span").as("op_id"),
         lit(-1L).as("origin"), col("node").as("dest0"),
-        pmod(col("rn") - 1L, lit(3L)).as("arm"),
-        lit(AddRemoveMaxTick).as("max_tick"))
-    val moves = Scheduler.defaultGroupMoves(cl, batch, nRegions)
-      .withColumn("arm",
-        pmod(row_number().over(w.orderBy(col("grp"), col("span")))
-          .cast("long") - 1L, lit(6L)))
-      .select(lit("move").as("op_type"), col("span").as("op_id"),
-        col("from_node").as("origin"), col("to_node").as("dest0"),
-        col("arm"), lit(MoveMaxTick).as("max_tick"))
-    val trace = adds.unionByName(removes).unionByName(moves)
+        pmod(col("rn") - 1L, lit(3L)).as("arm"))
+    val trace = adds.unionByName(removes)
       .select(col("op_type"), col("op_id"), col("origin"), col("dest0"),
         col("arm"),
-        explode(expr("sequence(0L, max_tick)")).as("tick"))
+        explode(expr(s"sequence(0L, ${AddRemoveMaxTick}L)")).as("tick"))
       .withColumn("kind",
         // add arms: clean / removed-report / stopped-ignored / dest
         // crash / task drop / stalled
@@ -230,47 +267,15 @@ object SpanLifecycle {
             col("tick") === 2L, "CHECK_NONWORKING")
           .when(col("op_type") === "remove" && col("arm") === 1L &&
             col("tick") === 1L, "NODE_REMOVE")
-          // move arms: the A92 scenario grid
-          .when(col("op_type") === "move" && col("arm") === 0L &&
-            col("tick") === 2L, "CHECK_STOPPED")
-          .when(col("op_type") === "move" && col("arm") === 0L &&
-            col("tick") === 4L, "CHECK_WORKING")
-          .when(col("op_type") === "move" && col("arm") === 1L &&
-            col("tick") === 2L, "NODE_REMOVE")
-          .when(col("op_type") === "move" && col("arm") === 1L &&
-            col("tick") === 3L, "CHECK_WORKING")
-          .when(col("op_type") === "move" && col("arm") === 2L &&
-            col("tick") === 1L, "NODE_REMOVE")
-          .when(col("op_type") === "move" && col("arm") === 2L &&
-            col("tick") === 3L, "CHECK_WORKING")
-          .when(col("op_type") === "move" && col("arm") === 3L &&
-            col("tick") === 2L, "CHECK_STOPPED")
-          .when(col("op_type") === "move" && col("arm") === 3L &&
-            col("tick") === 3L, "NODE_REMOVE")
-          .when(col("op_type") === "move" && col("arm") === 4L &&
-            col("tick") === 2L, "TASK_REMOVED")
-          .when(col("op_type") === "move" && col("arm") === 5L &&
-            col("tick") === 2L, "CHECK_STOPPED")
           .otherwise("HB"))
+      // every addressed event hits the machine's node
       .withColumn("node",
         when(col("kind").isin("HB", "TASK_REMOVED"), lit(-1L))
-          // move: CHECK_STOPPED is from the origin; NODE_REMOVE hits
-          // the dest on arms 2/3, the origin on arm 1; CHECK_WORKING
-          // is from the dest except arm 2's add-back (origin)
-          .when(col("op_type") === "move" && col("kind") === "CHECK_STOPPED",
-            col("origin"))
-          .when(col("op_type") === "move" && col("kind") === "NODE_REMOVE" &&
-            col("arm").isin(2L, 3L), col("dest0"))
-          .when(col("op_type") === "move" && col("kind") === "NODE_REMOVE",
-            col("origin"))
-          .when(col("op_type") === "move" && col("kind") === "CHECK_WORKING" &&
-            col("arm") === 2L, col("origin"))
-          .when(col("op_type") === "move", col("dest0"))
-          // add/remove: every addressed event hits the machine's node
           .otherwise(col("dest0")))
       .select(col("op_type"), col("op_id"), col("origin"), col("dest0"),
         col("tick"), col("kind"), col("node"))
-    spanFrame(trace)
+    spanFrame(trace.unionByName(
+      moveTrace(Scheduler.defaultGroupMoves(cl, batch, nRegions))))
   }
 
   def spanOperatorsSql(batch: Int = 1000,

@@ -273,7 +273,6 @@ object Dedup {
         posexplode(graft.functions.VectorExprs.minhashBands(col("grams"),
           perms, bands)).as(Seq("band_id", "band_key")))
       .withColumn("is_batch", isIncrementalBatch(col("doc_id")))
-      .localCheckpoint()
     val probe = banded.filter(col("is_batch"))
       .select(col("doc_id").as("bid"), col("band_id"), col("band_key"))
     val idx = banded.filter(!col("is_batch"))
@@ -734,16 +733,13 @@ object Dedup {
     * count, and the md5 fingerprint of the surviving text (kept lines
     * re-joined in order). */
   def dedupLines(spark: SparkSession, dir: String, width: Int = 10): DataFrame = {
-    // the exploded line frame feeds BOTH the first-occurrence agg and
-    // the probe join: checkpoint it once (the self-join discipline) or
-    // the slice/array_join string construction runs twice. The agg and
-    // join key on the line's md5, not the line text — an 8-byte-ish
-    // key vs a width-token string in every shuffle record (collisions:
-    // 128-bit md5, negligible far past corpus scale).
+    // The first-occurrence agg and the probe join key on the line's
+    // md5, not the line text — an 8-byte-ish key vs a width-token
+    // string in every shuffle record (collisions: 128-bit md5,
+    // negligible far past corpus scale).
     val occ = lineFrame(spark, dir, width)
       .withColumn("okey", col("doc_id") * lit(1048576L) + col("line_no"))
       .withColumn("lh", md5(col("line").cast("binary")))
-      .localCheckpoint()
     val firsts = occ.groupBy(col("lh")).agg(min(col("okey")).as("first_key"))
     val marked = occ.join(firsts, "lh")
       .withColumn("kept", col("okey") === col("first_key"))

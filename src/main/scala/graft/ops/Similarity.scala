@@ -116,9 +116,7 @@ object Similarity {
     * is checked. */
   def cosinePairs(spark: SparkSession, dir: String, tau: Double = 0.4,
                   bands: Int = 8, targetBucket: Long = 32L): DataFrame = {
-    // Materialize the normed corpus once (eager, lineage-truncating):
-    // it feeds the band projection AND both verify-join sides.
-    val c = corpus(spark, dir).localCheckpoint()
+    val c = corpus(spark, dir)
     val bitsPerBand = bandBits(c.count(), targetBucket)
     val w = planes(bands * MaxBandBits, seed = 42L)
     // ONE native expression computes every band key in a single tight
@@ -131,7 +129,6 @@ object Similarity {
     val banded = c.select(col("vec_id"), col("label"),
         posexplode(graft.functions.VectorExprs.bandKeys(col("v"), w, bands,
           bitsPerBand, MaxBandBits)).as(Seq("band_id", "band_key")))
-      .localCheckpoint()
     val cand = banded.as("x").join(banded.as("y"), Seq("label", "band_id", "band_key"))
       .filter(col("x.vec_id") < col("y.vec_id"))
       .select(col("label"), col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
@@ -283,7 +280,6 @@ object Similarity {
     val c = corpus(spark, dir)
       .withColumn("vp", expr(s"slice(v, 1, $prefixDim)"))
       .withColumn("np", sqrt(dot("vp", "vp")))
-      .localCheckpoint()
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("vp").as("qvp"), col("np").as("qnp"))
@@ -381,7 +377,7 @@ object Similarity {
     val nPlanes = planeCount(c0.count(), targetBucket)
     val w = planes(MaxBucketPlanes, seed = 7L)
     // two-step bit columns (JIT-able codegen units), then the bucket
-    // sum; materialized once for the query filter + candidate join
+    // sum
     val bitCols = (0 until nPlanes).map { p =>
       when(proj("v", w(p)) >= 0d, lit(1L << p)).otherwise(lit(0L)).as(s"bp$p")
     }
@@ -389,7 +385,6 @@ object Similarity {
       .select(Seq(col("vec_id"), col("label"), col("v"), col("nrm")) ++ bitCols: _*)
       .withColumn("bucket", (0 until nPlanes).map(p => col(s"bp$p")).reduce(_ + _))
       .drop((0 until nPlanes).map(p => s"bp$p"): _*)
-      .localCheckpoint()
     val probeMasks = 0L +: (0 until nPlanes).map(p => 1L << p)
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
@@ -657,7 +652,6 @@ object Similarity {
       .withColumn("rank", row_number().over(win).cast("long"))
       .filter(col("rank") <= k)
       .select(col("src"), col("dst"), col("rank"), col("cosine"))
-      .localCheckpoint()
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"), lit(1L).as("m"))
     edges.join(rev, Seq("src", "dst"), "left")
       .select(col("src"), col("dst"), col("rank"), col("cosine"),

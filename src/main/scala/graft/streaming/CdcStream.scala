@@ -350,12 +350,13 @@ object CdcStream {
     * Check/OnNodeRemove/OnTaskRemoved call mutates the five live
     * fields, then the controller polls Schedule), so the state is ONE
     * 5-field record per in-flight operator and each micro-batch folds
-    * its events in tick order. The batch operator (A92) computes the
-    * same replay as a Catalyst aggregate; the spec replays the
-    * production trace across micro-batch boundaries and asserts the
-    * two readings agree row-for-row. In-order arrival across batches
-    * is the contract (heartbeats are the controller's own poll
-    * cadence); state is bounded by the in-flight operator count. */
+    * its events in tick order. The batch operator (A92, the move half
+    * of the A109 fold) computes the same replay as a Catalyst
+    * aggregate; the spec replays the production trace across
+    * micro-batch boundaries and asserts the two readings agree
+    * row-for-row. In-order arrival across batches is the contract
+    * (heartbeats are the controller's own poll cadence); state is
+    * bounded by the in-flight operator count. */
   def streamOperatorMove(ev: Dataset[MoveEvent]): Dataset[MoveOutcome] = {
     import ev.sparkSession.implicits._
     ev.groupByKey(e => (e.grp, e.span, e.origin, e.dest0))

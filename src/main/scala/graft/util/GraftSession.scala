@@ -139,19 +139,26 @@ object GraftSession {
   }
 
   /** Release every frame the engine pinned: the CacheManager entries,
-    * every checkpointed RDD (the `localCheckpoint` frames the dedup /
-    * similarity self-join pipelines materialize) and the session-cache
-    * registry ([[Tables.clear]]). One-shot mains
-    * (Verify, Bench) never need this — executor storage dies with the
-    * session — but a long-lived session composing many operators
-    * should call it between pipelines or executor memory/disk
-    * accumulates one checkpoint per operator run.
+    * every checkpointed RDD (the registry's checkpoint entries and the
+    * operator checkpoints named below) and the session-cache registry
+    * ([[Tables.clear]]). One-shot mains (Verify, Bench) never need
+    * this — executor storage dies with the session — but a long-lived
+    * session composing many operators should call it between
+    * pipelines or executor memory/disk accumulates one checkpoint per
+    * operator run.
     *
-    * CAUTION: this invalidates DataFrames RETURNED by earlier operator
-    * calls, not just the internal caches. A `localCheckpoint` truncates
-    * lineage, so a released checkpoint cannot recompute — re-collecting
-    * a pre-release result frame throws (cache-backed frames merely
-    * recompute). Collect or write results you still need first; after
+    * CAUTION: this invalidates some DataFrames RETURNED by earlier
+    * operator calls, not just the internal caches. A `localCheckpoint`
+    * truncates lineage, so a released checkpoint cannot recompute, and
+    * re-collecting a pre-release frame that reads one throws. Those
+    * frames are the ones over a [[Tables.checkpointed]] entry (winnow
+    * fingerprints, repetition profile, IVF and PQ indexes, pair and
+    * span ledgers, dedup clusters, changelog census and dimensions)
+    * and the results of the operators that checkpoint when they are
+    * built: `dedup_minhash_lsh`, `lsh_recall_audit`, `dedup_simhash`,
+    * `quality_dsir`, `corpus_phrases`, `q_percentile_exact` and
+    * `q_ntile_cume`. Cache-backed and checkpoint-free frames merely
+    * recompute. Collect or write results you still need first; after
     * release, re-invoke the operator for a fresh frame. */
   def releaseCaches(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

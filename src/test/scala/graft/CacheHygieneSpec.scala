@@ -4,10 +4,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The cached/checkpointed frames the signature pipelines pin must be
-  * releasable: a long-lived session composing many operators would
-  * otherwise accumulate executor storage forever (one localCheckpoint
-  * per self-join pipeline per run, plus the shared gram cache). */
+/** Every frame the engine pins must be releasable: a long-lived
+  * session composing many operators would otherwise accumulate
+  * executor storage forever (the registry entries, plus the
+  * checkpoint the few operators that still take one at build time pin
+  * per run). A frame whose operator takes no checkpoint must still
+  * collect after a release. */
 class CacheHygieneSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.util.GraftSession.local(4)
   val dir = "/root/testdata/sf0.001"
@@ -127,6 +129,18 @@ class CacheHygieneSpec extends AnyFunSuite {
     assert(r2 == r1)
     graft.util.GraftSession.releaseCaches(spark)
     assert(pinnedRdds == before, "cache entry count grew across runs")
+  }
+
+  test("frames built without a checkpoint still collect after a release") {
+    graft.util.GraftSession.releaseCaches(spark)
+    val built = Seq(
+      "annMatryoshkaTopK" -> (() => ops.Similarity.annMatryoshkaTopK(spark, dir)),
+      "dedupLines" -> (() => ops.Dedup.dedupLines(spark, dir)))
+    val frames = built.map { case (name, build) => name -> build() }
+    graft.util.GraftSession.releaseCaches(spark)
+    for (((name, df), (_, build)) <- frames.zip(built))
+      assert(df.collect().toSet == build().collect().toSet, s"$name changed across the release")
+    graft.util.GraftSession.releaseCaches(spark)
   }
 
   test("ivf index memo shares one build and releases with the caches") {

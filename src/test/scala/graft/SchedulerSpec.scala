@@ -663,6 +663,7 @@ class SchedulerSpec extends AnyFunSuite {
   }
 
   test("A92: Catalyst fold equals the transcribed move machine on every arm") {
+    // the coordinator's move machine is the move arm of the span fold:
     // one trace per arm family, plus the ignored-event edges: a
     // premature dest-Working heartbeat (not yet stopped), events after
     // finish/cancel, and a removal of an unrelated node
@@ -683,10 +684,10 @@ class SchedulerSpec extends AnyFunSuite {
       "stall" -> Seq(hb(0), (1L, "CHECK_STOPPED", 0L), hb(2), hb(3), hb(4)),
       "other_node" -> Seq(hb(0), (1L, "NODE_REMOVE", 3L), hb(2), hb(3), hb(4)))
     val trace = traces.toSeq.flatMap { case (op, evs) =>
-      evs.map { case (t, kind, node) => (op, op, 0L, 1L, t, kind, node) }
-    }.toDF("grp", "span", "origin", "dest0", "tick", "kind", "node")
-    val got = cdc.OperatorLifecycle.moveFrame(trace)
-      .select("span", "tick", "dest", "origin_stopped", "bound", "finished",
+      evs.map { case (t, kind, node) => ("move", op, 0L, 1L, t, kind, node) }
+    }.toDF("op_type", "op_id", "origin", "dest0", "tick", "kind", "node")
+    val got = cdc.SpanLifecycle.spanFrame(trace)
+      .select("op_id", "tick", "cur", "origin_stopped", "bound", "finished",
         "canceled", "msg", "msg_target", "db_mark")
       .as[(String, Long, Long, Long, Long, Long, Long, String, Long, String)]
       .collect().groupBy(_._1)
@@ -797,14 +798,14 @@ class SchedulerSpec extends AnyFunSuite {
     val nOps = frame.select("grp", "span").distinct().count()
     assert(nOps > 0)
     // the full tick grid per operator, Start marked exactly at tick 0
-    assert(frame.count() == nOps * (cdc.OperatorLifecycle.MaxTick + 1))
+    assert(frame.count() == nOps * (cdc.SpanLifecycle.MoveMaxTick + 1))
     assert(frame.filter(col("db_mark") === "scheduling").count() == nOps)
     assert(frame.filter(col("db_mark") === "scheduling" && col("tick") =!= 0L)
       .count() == 0)
     // finished and canceled are absorbing and mutually exclusive
     assert(frame.filter(col("finished") === 1L && col("canceled") === 1L)
       .count() == 0)
-    val finals = frame.filter(col("tick") === cdc.OperatorLifecycle.MaxTick).cache()
+    val finals = frame.filter(col("tick") === cdc.SpanLifecycle.MoveMaxTick).cache()
     // a finished op was marked replicating exactly once; a canceled-by-
     // dest-loss op was marked absent exactly once; a stalled op is
     // still re-scheduling the Add to its dest
@@ -913,6 +914,8 @@ class SchedulerSpec extends AnyFunSuite {
       ("mv_task_removed", "move", Seq(hb(0), (1L, "TASK_REMOVED", -1L),
         (2L, "CHECK_STOPPED", 0L), hb(3), hb(4), hb(5))),
       ("mv_stall", "move", Seq(hb(0), (1L, "CHECK_STOPPED", 0L), hb(2),
+        hb(3), hb(4), hb(5))),
+      ("mv_other_node", "move", Seq(hb(0), (1L, "NODE_REMOVE", 3L), hb(2),
         hb(3), hb(4), hb(5))))
     val trace = cases.flatMap { case (id, op, evs) =>
       val (origin, dest0) = if (op == "move") (0L, 1L) else (-1L, 2L)

@@ -537,17 +537,20 @@ class StreamingSpec extends AnyFunSuite {
   test("A92s: incremental move-operator machine equals the batch Catalyst fold") {
     import spark.implicits._
     // operator state (stopped/bind/fin/can/dest) must survive
-    // micro-batch boundaries: replay the production trace in 3
+    // micro-batch boundaries: replay the production move trace in 3
     // tick-range batches (0-1 / 2-3 / 4-5) — every arm's decisive
     // event lands in a different batch than its Start
     val tmp = java.nio.file.Files.createTempDirectory("a92s").toString
     val cl = graft.cdc.ChangeEvents.changelog(spark, dir)
-    val trace = graft.cdc.OperatorLifecycle.moveTrace(
-      graft.cdc.Scheduler.defaultGroupMoves(cl)).cache()
+    val events = graft.cdc.SpanLifecycle.moveTrace(
+      graft.cdc.Scheduler.defaultGroupMoves(cl))
+      .select(substring_index(col("op_id"), ".", 1).as("grp"),
+        col("op_id").as("span"), col("origin"), col("dest0"), col("tick"),
+        col("kind"), col("node")).cache()
     val parts = Seq(
-      trace.filter(col("tick") <= 1L),
-      trace.filter(col("tick").between(2L, 3L)),
-      trace.filter(col("tick") >= 4L))
+      events.filter(col("tick") <= 1L),
+      events.filter(col("tick").between(2L, 3L)),
+      events.filter(col("tick") >= 4L))
     val t0 = java.lang.System.currentTimeMillis() - 60000
     parts.zipWithIndex.foreach { case (p, i) =>
       val d = s"$tmp/f$i"
@@ -555,18 +558,18 @@ class StreamingSpec extends AnyFunSuite {
       new java.io.File(d).listFiles().filter(_.getName.endsWith(".parquet"))
         .foreach(_.setLastModified(t0 + i * 10000))
     }
-    val stream = spark.readStream.schema(trace.schema)
+    val stream = spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$tmp/f*")
       .as[graft.streaming.CdcStream.MoveEvent]
     runToCompletion(
       graft.streaming.CdcStream.streamOperatorMove(stream).toDF(),
       "a92s", "append")
     val got = spark.table("a92s")
-    val want = graft.cdc.OperatorLifecycle.moveFrame(trace)
+    val want = graft.cdc.OperatorLifecycle.operatorMove(cl)
     assert(got.count() == want.count(), "one outcome per trace tick")
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "streamed outcomes must equal the batch Catalyst fold")
-    trace.unpersist()
+    events.unpersist()
   }
 
   test("B18s: stream-stream interval join pairs across micro-batches equal batch B18") {
