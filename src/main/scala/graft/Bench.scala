@@ -29,6 +29,10 @@ import java.nio.file.{Files, Paths}
   * reading. Compare subsets with `SPARK_GRAFT_BENCH_REPEAT` ≥ 4. */
 object Bench {
 
+  /** Slice files per micro-batch when the sliced tier named by
+    * SPARK_GRAFT_STREAM_SLICES is replayed. */
+  private val SlicedFilesPerTrigger = 2
+
   /** Batch-size-adaptive state-store parallelism (partitioning scales
     * with the data, not with the box): the per-micro-batch cost of a
     * stateful query includes one state-store COMMIT per shuffle
@@ -124,7 +128,7 @@ object Bench {
     }
     // multi-micro-batch smoke (VERDICT r12 #7): when the env names a
     // tier copy whose events.parquet is a multi-file DIRECTORY, replay
-    // the same four ops in bounded micro-batches (maxFilesPerTrigger)
+    // the same four ops in bounded micro-batches (SlicedFilesPerTrigger)
     // so watermark finalization crosses batch boundaries; reported
     // under *_mb keys next to the single-batch rates.
     // main-tier suite runs FIRST so its rates are measured on the same
@@ -134,8 +138,7 @@ object Bench {
     val batchParts = spark.conf.get("spark.sql.shuffle.partitions")
     val mainSuite = suite(sfDir, None, "")
     val sliced = sys.env.get("SPARK_GRAFT_STREAM_SLICES").toSeq.flatMap {
-      dir => suite(dir,
-        Some(sys.env.getOrElse("SPARK_GRAFT_STREAM_MFPT", "2").toInt), "_mb")
+      dir => suite(dir, Some(SlicedFilesPerTrigger), "_mb")
     }
     spark.conf.set("spark.sql.shuffle.partitions", batchParts)
     mainSuite ++ sliced

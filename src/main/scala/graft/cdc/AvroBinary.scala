@@ -32,6 +32,10 @@ import org.apache.spark.sql.functions._
   */
 object AvroBinary {
 
+  /** Schema-registry ids the key and value records carry. */
+  val KeySchemaId = 1
+  val ValueSchemaId = 2
+
   /** 512-char lookup "000102...FF": hex of byte b = 2 chars at b*2+1.
     * A table probe beats java.lang.String.format by ~10× per byte, and
     * `substr` renders identically in DuckDB. */
@@ -159,7 +163,7 @@ s"""CASE WHEN ${fits(1)} THEN ${withLen(1)}
     * arvo.go:87). Value record mirrors A23's field order:
     * schema_name, table_name, op, pk, commit_ts, before_value,
     * after_value. */
-  def messages(cl: DataFrame, keySchemaId: Int = 1, valueSchemaId: Int = 2): DataFrame =
+  def messages(cl: DataFrame): DataFrame =
     cl.select(col("commit_ts"),
         zvarHex(col("pk")).as("h_pk"),
         zvarHex(col("commit_ts")).as("h_ts"),
@@ -182,8 +186,8 @@ s"""CASE WHEN ${fits(1)} THEN ${withLen(1)}
         graft.functions.WireExprs.avroBytesHex(TypedImage.decE4)
           .as("h_dec_prec"))
       .select(col("commit_ts"),
-        concat(lit(headerHex(keySchemaId)), col("h_pk")).as("key"),
-        concat(lit(headerHex(valueSchemaId)), col("h_schema"), col("h_table"),
+        concat(lit(headerHex(KeySchemaId)), col("h_pk")).as("key"),
+        concat(lit(headerHex(ValueSchemaId)), col("h_schema"), col("h_table"),
           col("h_op"), col("h_pk"), col("h_ts"), col("h_before"), col("h_after"),
           col("h_date"), col("h_dt"), col("h_dec"), col("h_enum"),
           col("h_dec_prec"))
@@ -230,10 +234,10 @@ s"""CASE WHEN ${fits(1)} THEN ${withLen(1)}
         (col("k.valid") * col("v.valid")).as("valid"))
   }
 
-  def decodeSql(keySchemaId: Int = 1, valueSchemaId: Int = 2): String =
-    s"""SELECT CAST($keySchemaId AS BIGINT) AS key_schema_id,
+  def decodeSql(): String =
+    s"""SELECT CAST($KeySchemaId AS BIGINT) AS key_schema_id,
        |  pk AS key_pk,
-       |  CAST($valueSchemaId AS BIGINT) AS val_schema_id,
+       |  CAST($ValueSchemaId AS BIGINT) AS val_schema_id,
        |  schema_name, table_name, op, pk, commit_ts,
        |  CASE WHEN before_value IS NULL THEN CAST(-1 AS BIGINT)
        |       ELSE CAST(ROUND(before_value * 100.0, 0) AS BIGINT) END AS before_cents,
@@ -247,10 +251,10 @@ s"""CASE WHEN ${fits(1)} THEN ${withLen(1)}
        |  CAST(1 AS BIGINT) AS valid
        |FROM changelog""".stripMargin
 
-  def messagesSql(keySchemaId: Int = 1, valueSchemaId: Int = 2): String =
+  def messagesSql(): String =
     s"""SELECT commit_ts,
-       |  CONCAT('${headerHex(keySchemaId)}', h_pk) AS key,
-       |  CONCAT('${headerHex(valueSchemaId)}', h_schema, h_table, h_op,
+       |  CONCAT('${headerHex(KeySchemaId)}', h_pk) AS key,
+       |  CONCAT('${headerHex(ValueSchemaId)}', h_schema, h_table, h_op,
        |         h_pk, h_ts, h_before, h_after, h_date, h_dt, h_dec, h_enum,
        |         h_dec_prec)
        |    AS value

@@ -35,7 +35,6 @@ import org.apache.spark.sql.functions._
   * with (area, scenario)-partitioned rank windows. */
 object Backpressure {
 
-  val NRegions = 8
   /** Quota sweep: usage ≈ pct of the quota in each scenario. */
   val ScenarioPcts: Seq[Long] = Seq(70L, 82L, 87L, 92L, 100L)
 
@@ -47,10 +46,9 @@ object Backpressure {
       .when(usagePpm >= 800000L, 20L)
       .otherwise(0L)
 
-  def memBackpressure(cl: DataFrame, nRegions: Int = NRegions): DataFrame = {
+  def memBackpressure(cl: DataFrame): DataFrame = {
     val paths = cl
-      .withColumn("region_id",
-        graft.functions.Portable.bucket(col("pk").cast("string"), nRegions))
+      .withColumn("region_id", Scheduler.pkRegion())
       .groupBy(col("schema_name").as("area"),
         concat_ws("#", col("table_name"), col("region_id")).as("path"))
       .agg(sum(octet_length(Codecs.openProtocolValue)).as("pending_bytes"))
@@ -77,9 +75,8 @@ object Backpressure {
         col("stop_max"), col("size_rank"), col("paused"))
   }
 
-  def memBackpressureSql(nRegions: Int = NRegions): String = {
-    val bucket =
-      graft.functions.Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)
+  def memBackpressureSql(): String = {
+    val bucket = Scheduler.pkRegionSql()
     val pcts = ScenarioPcts.mkString(", ")
     s"""WITH paths AS (
        |  SELECT schema_name AS area,

@@ -268,7 +268,7 @@ object Barrier {
     }.mkString(", ")
     s"""regions AS (
        |  SELECT schema_name, table_name,
-       |    ${graft.functions.Portable.bucketSql("CAST(pk AS VARCHAR)", 8)} AS region_id,
+       |    ${Scheduler.pkRegionSql()} AS region_id,
        |    MAX(commit_ts) AS rts
        |  FROM changelog GROUP BY 1, 2, 3
        |),

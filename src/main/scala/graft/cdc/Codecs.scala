@@ -22,6 +22,9 @@ import graft.functions.{WireKernels, WireRender, WireScanExprs}
   */
 object Codecs {
 
+  /** The topic expression of [[kafkaMessages]]. */
+  val TopicTemplate = "{schema}_{table}"
+
   /** %.4f or the JSON literal null. */
   private[cdc] def fmt(c: Column): Column =
     coalesce(WireRender.fixed4(c), lit("null"))
@@ -751,15 +754,14 @@ object Codecs {
     * kafka_sink.go): (topic, partition, key, value) per event — topic
     * routing ([[Routing.topicExpr]]) + index-value partition routing +
     * open-protocol key + canal-json value. */
-  def kafkaMessages(cl: DataFrame, n: Int,
-                    topicTemplate: String = "{schema}_{table}"): DataFrame =
-    cl.select(col("commit_ts"), Routing.topicExpr(topicTemplate).as("topic"),
+  def kafkaMessages(cl: DataFrame, n: Int): DataFrame =
+    cl.select(col("commit_ts"), Routing.topicExpr(TopicTemplate).as("topic"),
       Dispatchers.indexValueBucket(n).as("partition"),
       openProtocolKey.as("key"), canalJsonValue.as("value"))
 
-  def kafkaMessagesSql(n: Int, topicTemplate: String = "{schema}_{table}"): String =
+  def kafkaMessagesSql(n: Int): String =
     s"""SELECT commit_ts,
-       |  ${Routing.topicExprSql(topicTemplate)} AS topic,
+       |  ${Routing.topicExprSql(TopicTemplate)} AS topic,
        |  ${Dispatchers.indexValueBucketSql(n)} AS partition,
        |  $openProtocolKeySql AS key,
        |  $canalJsonValueSql AS value

@@ -3,7 +3,6 @@ package graft.cdc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.Portable
 
 /** A100 — the barrier bootstrap coverage checker: given the sub-span
   * reports the dispatchers have sent, is every table's keyspace
@@ -35,18 +34,17 @@ import graft.functions.Portable
   * A90 region scan. */
 object Coverage {
 
-  def spanCoverage(cl: DataFrame, regionThreshold: Int = 20,
-                   nScan: Int = Scheduler.SplitScanRegions): DataFrame = {
+  def spanCoverage(cl: DataFrame): DataFrame = {
     // occupied-region index per (grp, rid): the coverage domain
     val ridx = cl
-      .withColumn("rid", Portable.bucket(col("pk").cast("string"), nScan))
+      .withColumn("rid", Scheduler.pkRegion(Scheduler.SplitScanRegions))
       .select(concat_ws(".", col("schema_name"), col("table_name")).as("grp"),
         col("rid"))
       .distinct()
       .withColumn("idx", row_number().over(
         Window.partitionBy(col("grp")).orderBy(col("rid"))).cast("long") - 1L)
     val n = ridx.groupBy(col("grp")).agg(count(lit(1)).as("n_regions"))
-    val spans = Scheduler.spanSplitRegions(cl, regionThreshold, nScan)
+    val spans = Scheduler.spanSplitRegions(cl)
       .join(ridx.select(col("grp"), col("rid").as("start_rid"),
         col("idx").as("start_idx")), Seq("grp", "start_rid"))
       .join(ridx.select(col("grp"), col("rid").as("end_rid"),
@@ -106,11 +104,10 @@ object Coverage {
         coalesce(col("g.gap_end"), lit(-1L)).as("first_gap_end"))
   }
 
-  def spanCoverageSql(regionThreshold: Int = 20,
-                      nScan: Int = Scheduler.SplitScanRegions): String = {
-    val a90 = Scheduler.spanSplitRegionsSql(regionThreshold, nScan)
+  def spanCoverageSql(): String = {
+    val a90 = Scheduler.spanSplitRegionsSql()
       .linesIterator.map("    " + _).mkString("\n")
-    val bucket = Portable.bucketSql("CAST(pk AS VARCHAR)", nScan)
+    val bucket = Scheduler.pkRegionSql(Scheduler.SplitScanRegions)
     s"""WITH ridx AS (
        |  SELECT grp, rid,
        |    CAST(ROW_NUMBER() OVER (PARTITION BY grp ORDER BY rid) - 1

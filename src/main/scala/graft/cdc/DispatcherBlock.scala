@@ -36,9 +36,12 @@ import org.apache.spark.sql.functions._
   * all joins are broadcast equi-joins on schema/table keys. */
 object DispatcherBlock {
 
+  /** Commit-ts spacing of the planted block events. */
+  val SyncStep = 1000L
+
   val SyncPoints = 3L
 
-  def dispatcherBlock(cl: DataFrame, syncStep: Long = 1000L): DataFrame = {
+  def dispatcherBlock(cl: DataFrame): DataFrame = {
     val disp = Scheduler.hotSpans(cl)
       .select(col("span"), substring_index(col("span"), ".", 1).as("d_schema"),
         substring_index(col("span"), ".", -1).as("d_table"),
@@ -51,17 +54,17 @@ object DispatcherBlock {
     val dropDb = cl.select(col("schema_name")).distinct()
       .crossJoin(broadcast(horizon))
       .select(col("schema_name"), lit("*").as("table_name"),
-        (col("mx") + syncStep).as("ts"), lit("DROP_DATABASE").as("ddl_type"),
+        (col("mx") + SyncStep).as("ts"), lit("DROP_DATABASE").as("ddl_type"),
         lit("db").as("influence"))
     val flashback = horizon
       .select(lit("*").as("schema_name"), lit("*").as("table_name"),
-        (col("mx") + 2L * syncStep).as("ts"),
+        (col("mx") + 2L * SyncStep).as("ts"),
         lit("FLASHBACK").as("ddl_type"), lit("all").as("influence"))
     val syncs = horizon
       .select(explode(expr(s"sequence(1L, ${SyncPoints}L)")).as("k"),
         col("mx"))
       .select(lit("*").as("schema_name"), lit("*").as("table_name"),
-        (col("mx") + (col("k") + 2L) * syncStep).as("ts"),
+        (col("mx") + (col("k") + 2L) * SyncStep).as("ts"),
         lit("SYNCPOINT").as("ddl_type"), lit("syncpoint").as("influence"))
     // the multi-table NORMAL arm (a RENAME blocks both its tables —
     // the >1-blocked-tables branch of shouldBlock): one per schema,
@@ -73,7 +76,7 @@ object DispatcherBlock {
       .filter(col("rn") <= 2L)
       .crossJoin(broadcast(horizon))
       .select(col("schema_name"), col("table_name"),
-        (col("mx") + 6L * syncStep).as("ts"), lit("RENAME").as("ddl_type"),
+        (col("mx") + 6L * SyncStep).as("ts"), lit("RENAME").as("ddl_type"),
         lit("normal2").as("influence"))
     val events = ddl.unionByName(dropDb).unionByName(flashback)
       .unionByName(syncs).unionByName(rename)
@@ -119,7 +122,7 @@ object DispatcherBlock {
           .otherwise("single_complete"))
   }
 
-  def dispatcherBlockSql(syncStep: Long = 1000L): String = {
+  def dispatcherBlockSql(): String = {
     val hot = Scheduler.hotSpansSql()
       .linesIterator.map("    " + _).mkString("\n")
     val ddl = SchemaStore.ddlEventsSql(Nil)
@@ -146,18 +149,18 @@ object DispatcherBlock {
        |  SELECT schema_name, table_name, CAST(ts AS BIGINT) AS ts,
        |    ddl_type, influence FROM ddlev
        |  UNION ALL
-       |  SELECT s.schema_name, '*', h.mx + $syncStep, 'DROP_DATABASE', 'db'
+       |  SELECT s.schema_name, '*', h.mx + $SyncStep, 'DROP_DATABASE', 'db'
        |  FROM (SELECT DISTINCT schema_name FROM changelog) s
        |  CROSS JOIN horizon h
        |  UNION ALL
-       |  SELECT '*', '*', mx + 2 * $syncStep, 'FLASHBACK', 'all'
+       |  SELECT '*', '*', mx + 2 * $SyncStep, 'FLASHBACK', 'all'
        |  FROM horizon
        |  UNION ALL
-       |  SELECT '*', '*', mx + (k + 2) * $syncStep, 'SYNCPOINT', 'syncpoint'
+       |  SELECT '*', '*', mx + (k + 2) * $SyncStep, 'SYNCPOINT', 'syncpoint'
        |  FROM horizon CROSS JOIN
        |    (SELECT UNNEST(GENERATE_SERIES(1, $SyncPoints)) AS k) g
        |  UNION ALL
-       |  SELECT schema_name, table_name, mx + 6 * $syncStep, 'RENAME',
+       |  SELECT schema_name, table_name, mx + 6 * $SyncStep, 'RENAME',
        |    'normal2'
        |  FROM (SELECT schema_name, table_name,
        |          ROW_NUMBER() OVER (PARTITION BY schema_name

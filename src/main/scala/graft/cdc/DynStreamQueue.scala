@@ -50,7 +50,7 @@ import graft.functions.Portable
   * Event fleet: changelog DMLs (detail = pk), the A18 DDL grid
   * (detail = schema version, one per region path — DDLs visit every
   * span dispatcher, the A99 convention), and per-path resolved-ts
-  * SIGNALs every `signalStep` ticks (the A81 heartbeat-grid
+  * SIGNALs every [[SignalStep]] ticks (the A81 heartbeat-grid
   * convention; step 20 leaves multi-signal runs in every table's
   * quiet gaps at sf0.01+, so the collapse arm runs on real data).
   *
@@ -61,7 +61,6 @@ import graft.functions.Portable
   * total order; the reference itself is that sequential loop). */
 object DynStreamQueue {
 
-  val NRegions = 8
   val NStreams = 4
   val BatchCount = 4
   val SignalStep = 20L
@@ -75,19 +74,17 @@ object DynStreamQueue {
   val SignalBudget = 5000L
 
   /** The pre-filled queue: (stream, area, path, ts, tie, kind, detail). */
-  private[cdc] def queueFrame(cl: DataFrame, nRegions: Int,
+  private[cdc] def queueFrame(cl: DataFrame,
                          signalStep: Long): DataFrame = {
     val dml = cl
-      .withColumn("region_id",
-        Portable.bucket(col("pk").cast("string"), nRegions))
+      .withColumn("region_id", Scheduler.pkRegion())
       .select(col("schema_name").as("area"),
         concat_ws("#", col("schema_name"), col("table_name"),
           col("region_id")).as("path"),
         col("commit_ts").as("ts"), lit(0L).as("tie"),
         lit("DML").as("kind"), col("pk").cast("string").as("detail"))
     val regionGrid = cl
-      .withColumn("region_id",
-        Portable.bucket(col("pk").cast("string"), nRegions))
+      .withColumn("region_id", Scheduler.pkRegion())
       .select(col("schema_name"), col("table_name"), col("region_id"))
       .distinct()
     val ddl = SchemaStore.ddlEvents(cl, Nil)
@@ -115,7 +112,7 @@ object DynStreamQueue {
 
   /** Closed-form drain over a pre-filled queue frame
     * (stream, area, path, ts, tie, kind, detail) — spec-drivable. */
-  def drainFrame(queue: DataFrame, batchCount: Int = BatchCount): DataFrame = {
+  def drainFrame(queue: DataFrame): DataFrame = {
     val wPath = Window.partitionBy(col("path"))
       .orderBy(col("ts"), col("tie"), col("detail"))
     val wRun = wPath.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -128,10 +125,10 @@ object DynStreamQueue {
       .withColumn("pos_in_run", col("rn") - col("run_start"))
       .withColumn("sub",
         when(col("kind") === "DDL", col("pos_in_run"))
-          .otherwise(expr(s"pos_in_run div $batchCount")))
+          .otherwise(expr(s"pos_in_run div $BatchCount")))
       .withColumn("pos_in_batch",
         when(col("kind") === "DDL", lit(1L))
-          .otherwise(col("pos_in_run") - col("sub") * batchCount + 1L))
+          .otherwise(col("pos_in_run") - col("sub") * BatchCount + 1L))
     val batches = seg
       .groupBy(col("stream"), col("path"), col("run_start"), col("sub"))
       .agg(min(col("ts")).as("first_ts"), min(col("tie")).as("first_tie"),
@@ -149,17 +146,14 @@ object DynStreamQueue {
         col("pos_in_batch"), col("batch_size"), col("emitted"))
   }
 
-  def queueDrain(cl: DataFrame, nRegions: Int = NRegions,
-                 batchCount: Int = BatchCount,
-                 signalStep: Long = SignalStep): DataFrame =
-    drainFrame(queueFrame(cl, nRegions, signalStep), batchCount)
+  def queueDrain(cl: DataFrame): DataFrame =
+    drainFrame(queueFrame(cl, SignalStep))
 
-  def queueDrainSql(nRegions: Int = NRegions, batchCount: Int = BatchCount,
-                    signalStep: Long = SignalStep): String = {
-    val bucket = Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)
+  def queueDrainSql(): String = {
+    val bucket = Scheduler.pkRegionSql()
     val streamOf = Portable.bucketSql("path", NStreams)
     s"""WITH sstep AS (
-       |  SELECT GREATEST($signalStep,
+       |  SELECT GREATEST($SignalStep,
        |    (SELECT MAX(commit_ts) FROM changelog) // $SignalBudget) AS st
        |), rg AS (
        |  SELECT DISTINCT schema_name, table_name, $bucket AS region_id
@@ -204,10 +198,10 @@ object DynStreamQueue {
        |), seg AS (
        |  SELECT *,
        |    CASE WHEN kind = 'DDL' THEN rn - run_start
-       |      ELSE (rn - run_start) // $batchCount END AS sub,
+       |      ELSE (rn - run_start) // $BatchCount END AS sub,
        |    CASE WHEN kind = 'DDL' THEN 1
        |      ELSE rn - run_start
-       |        - ((rn - run_start) // $batchCount) * $batchCount + 1
+       |        - ((rn - run_start) // $BatchCount) * $BatchCount + 1
        |      END AS pos_in_batch
        |  FROM seg1
        |), batches AS (

@@ -43,26 +43,28 @@ import org.apache.spark.sql.functions._
   * post-filter), partial-aggregated before the final join. */
 object EventService {
 
+  /** Commit-ts width of one [[scanTasks]] / [[scanEmit]] tick. */
+  val SyncStep = 100L
+
   /** A77: one row per dispatcher span with its scan decision. */
-  def scanTasks(cl: DataFrame, nRegions: Int = 8, syncStep: Long = 100L): DataFrame = {
+  def scanTasks(cl: DataFrame): DataFrame = {
     val step = SchemaStore.step
-    val withRegion = cl.withColumn("region_id",
-      graft.functions.Portable.bucket(col("pk").cast("string"), nRegions))
+    val withRegion = cl.withColumn("region_id", Scheduler.pkRegion())
     // per-span state + the global DDL grid constant
     val spans = withRegion
       .groupBy(col("schema_name"), col("table_name"), col("region_id"))
       .agg(max(col("commit_ts")).as("rts"))
       .withColumn("cls", pmod(col("region_id"), lit(4L)))
-      .withColumn("aligned", expr(s"(rts div $syncStep) * $syncStep"))
+      .withColumn("aligned", expr(s"(rts div $SyncStep) * $SyncStep"))
       .withColumn("sent_ts",
         when(col("cls") === 0L || col("cls") === 3L, col("aligned"))
           .otherwise(col("rts")))
       .withColumn("store_resolved_ts",
-        when(col("cls") === 2L, col("rts") + syncStep).otherwise(col("rts")))
+        when(col("cls") === 2L, col("rts") + SyncStep).otherwise(col("rts")))
       .withColumn("latest_commit_ts", col("rts"))
       .withColumn("ddl_resolved_ts",
         when(col("cls") === 3L, col("aligned"))
-          .otherwise(col("rts") + syncStep / 2))
+          .otherwise(col("rts") + SyncStep / 2))
     val ddlMax = cl.agg(
       expr(s"(max(commit_ts) div $step) * $step").as("ddl_max_commit_ts"))
     val tasks = spans.crossJoin(broadcast(ddlMax))
@@ -94,9 +96,9 @@ object EventService {
         col("decision"), coalesce(col("n_events"), lit(0L)).as("n_events"))
   }
 
-  def scanTasksSql(nRegions: Int = 8, syncStep: Long = 100L): String = {
+  def scanTasksSql(): String = {
     val step = SchemaStore.step
-    val bucket = graft.functions.Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)
+    val bucket = Scheduler.pkRegionSql()
     s"""WITH regioned AS (
        |  SELECT schema_name, table_name, $bucket AS region_id, commit_ts
        |  FROM changelog
@@ -104,15 +106,15 @@ object EventService {
        |spans AS (
        |  SELECT schema_name, table_name, region_id, MAX(commit_ts) AS rts,
        |    region_id % 4 AS cls,
-       |    (MAX(commit_ts) // $syncStep) * $syncStep AS aligned
+       |    (MAX(commit_ts) // $SyncStep) * $SyncStep AS aligned
        |  FROM regioned GROUP BY 1, 2, 3
        |),
        |st AS (
        |  SELECT schema_name, table_name, region_id, rts,
        |    CASE WHEN cls IN (0, 3) THEN aligned ELSE rts END AS start_ts,
-       |    CASE WHEN cls = 2 THEN rts + $syncStep ELSE rts END AS store_resolved_ts,
+       |    CASE WHEN cls = 2 THEN rts + $SyncStep ELSE rts END AS store_resolved_ts,
        |    rts AS latest_commit_ts,
-       |    CASE WHEN cls = 3 THEN aligned ELSE rts + ${syncStep / 2} END AS ddl_resolved_ts,
+       |    CASE WHEN cls = 3 THEN aligned ELSE rts + ${SyncStep / 2} END AS ddl_resolved_ts,
        |    (SELECT (MAX(commit_ts) // $step) * $step FROM changelog) AS ddl_max_commit_ts
        |  FROM spans
        |),
@@ -340,16 +342,15 @@ object EventService {
     * changelog pass (equi join on (table, region) + the range as a
     * post-filter) unioned with the task × DDL-grid rows; pos and seq
     * are two windows on the same task-keyed shuffle. */
-  def scanEmit(cl: DataFrame, nRegions: Int = 8, syncStep: Long = 100L): DataFrame = {
+  def scanEmit(cl: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val tasks = scanTasks(cl, nRegions, syncStep)
+    val tasks = scanTasks(cl)
       .filter(col("decision") === "scan")
       .select(col("schema_name"), col("table_name"), col("region_id"),
         // the changelog carries its own txn start_ts — rename the range
         col("start_ts").as("scan_start"), col("end_ts"))
     val dmls = cl
-      .withColumn("region_id",
-        graft.functions.Portable.bucket(col("pk").cast("string"), nRegions))
+      .withColumn("region_id", Scheduler.pkRegion())
       .join(broadcast(tasks), Seq("schema_name", "table_name", "region_id"))
       .filter(col("commit_ts") > col("scan_start") && col("commit_ts") <= col("end_ts"))
       .select(col("schema_name"), col("table_name"), col("region_id"),
@@ -379,10 +380,10 @@ object EventService {
         col("pos"), col("kind"), col("ts"), col("seq"), col("detail"))
   }
 
-  def scanEmitSql(nRegions: Int = 8, syncStep: Long = 100L): String = {
-    val bucket = graft.functions.Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)
+  def scanEmitSql(): String = {
+    val bucket = Scheduler.pkRegionSql()
     s"""WITH alltasks AS (
-       |${scanTasksSql(nRegions, syncStep).linesIterator.map("  " + _).mkString("\n")}
+       |${scanTasksSql().linesIterator.map("  " + _).mkString("\n")}
        |), tasks AS (
        |  SELECT schema_name, table_name, region_id, start_ts, end_ts
        |  FROM alltasks WHERE decision = 'scan'
@@ -701,7 +702,7 @@ object EventService {
     * Everything after the ONE changelog aggregation is
     * dimension-scale: stats × node grid × request grid ride broadcast
     * crosses. */
-  def logCandidates(cl: DataFrame, nNodes: Int = 4): DataFrame = {
+  def logCandidates(cl: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val stats = cl.groupBy(col("schema_name"), col("table_name"))
       .agg(min(col("commit_ts")).as("tmin"), max(col("commit_ts")).as("tmax"))
@@ -709,9 +710,9 @@ object EventService {
         row_number().over(graft.util.Windows.bounded(col("schema_name"), col("table_name")))
           .cast("long") - 1L)
       .withColumn("stride", expr("(tmax - tmin) div 8"))
-    val nodes = stats.sparkSession.range(nNodes).select(col("id").as("nord"))
+    val nodes = stats.sparkSession.range(Scheduler.NNodes).select(col("id").as("nord"))
     val subs = stats.crossJoin(broadcast(nodes))
-      .filter(expr(s"(tord + nord) % $nNodes != ${nNodes - 1}"))
+      .filter(expr(s"(tord + nord) % ${Scheduler.NNodes} != ${Scheduler.NNodes - 1}"))
       .select(col("schema_name"), col("table_name"), col("tmin"), col("tmax"),
         col("stride"), col("nord"),
         explode(array(lit(0L), lit(1L))).as("k"))
@@ -735,7 +736,7 @@ object EventService {
         col("resolved_ts"))
   }
 
-  def logCandidatesSql(nNodes: Int = 4): String =
+  def logCandidatesSql(): String =
     s"""WITH stats AS (
        |  SELECT schema_name, table_name,
        |    MIN(commit_ts) AS tmin, MAX(commit_ts) AS tmax,
@@ -749,9 +750,9 @@ object EventService {
        |    s.tmin + (n.nord * 2 + k.k) * s.stride AS cp,
        |    s.tmax - ((n.nord + 3 * k.k) % 5) * ((s.tmax - s.tmin) // 16) AS rts
        |  FROM stats s
-       |  CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, ${nNodes - 1})) AS nord) n
+       |  CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, ${Scheduler.NNodes - 1})) AS nord) n
        |  CROSS JOIN (SELECT UNNEST([0, 1]) AS k) k
-       |  WHERE (s.tord + n.nord) % $nNodes != ${nNodes - 1}
+       |  WHERE (s.tord + n.nord) % ${Scheduler.NNodes} != ${Scheduler.NNodes - 1}
        |), reqs AS (
        |  SELECT schema_name, table_name,
        |    UNNEST([tmin + (tmax - tmin) // 4,

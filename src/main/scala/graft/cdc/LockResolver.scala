@@ -72,9 +72,8 @@ object LockResolver {
   /** Per-(table, region, txn) lock census with status classification.
     * One row per lock: lock_ts (= start_ts), key (= min pk the txn
     * touched in the region), n_keys, status. */
-  def lockCensus(cl: DataFrame, nRegions: Int = RangeLock.NRegions): DataFrame =
-    cl.withColumn("region_id",
-        Portable.bucket(col("pk").cast("string"), nRegions))
+  def lockCensus(cl: DataFrame): DataFrame =
+    cl.withColumn("region_id", Scheduler.pkRegion())
       .groupBy(col("schema_name"), col("table_name"), col("region_id"),
         col("start_ts"))
       .agg(min(col("pk")).as("lock_key"),
@@ -106,16 +105,16 @@ object LockResolver {
     *  - resolved_ts = least(txn_resolved_ts, range_eff_ts),
     *  - pin ∈ {'lock','range','none'} — which side holds the min
     *    (lock wins ties: the resolver runs BECAUSE the ts is stuck). */
-  def resolvePass(cl: DataFrame, nRegions: Int = RangeLock.NRegions): DataFrame = {
+  def resolvePass(cl: DataFrame): DataFrame = {
     val maxV = cl.groupBy(col("schema_name"), col("table_name"))
       .agg((expr("min(commit_ts) + (max(commit_ts) - min(commit_ts)) div 2"))
         .as("max_version"))
-    val census = lockCensus(cl, nRegions)
+    val census = lockCensus(cl)
     // every (table, region) cell appears — the resolver scans regions
     // with no locks too (one empty round, clean resolvedTs)
     val grid = maxV.select(col("schema_name"), col("table_name"),
       col("max_version"),
-      explode(expr(s"sequence(0L, ${nRegions - 1}L)")).as("region_id"))
+      explode(expr(s"sequence(0L, ${Scheduler.NRegions - 1}L)")).as("region_id"))
     val perRegion = grid
       .join(census, Seq("schema_name", "table_name", "region_id"), "left")
       .groupBy(col("schema_name"), col("table_name"), col("region_id"),
@@ -138,7 +137,7 @@ object LockResolver {
       .withColumn("txn_resolved_ts",
         when(col("n_live") > 0L, col("min_live_ts") - 1L)
           .otherwise(col("max_version")))
-    val range = RangeLock.regionStates(cl, nRegions)
+    val range = RangeLock.regionStates(cl)
       .filter(col("tick") === RangeLock.MaxTick)
       .select(col("schema_name"), col("table_name"), col("region_id"),
         col("eff_ts").as("range_eff_ts"))
@@ -157,8 +156,8 @@ object LockResolver {
         col("resolved_ts"), col("pin"))
   }
 
-  def resolvePassSql(nRegions: Int = RangeLock.NRegions): String = {
-    val bucket = Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)
+  def resolvePassSql(): String = {
+    val bucket = Scheduler.pkRegionSql()
     val lockHash = Portable.hash60Sql(
       "'lock:' || schema_name || '.' || table_name || '#' || " +
         "CAST(region_id AS VARCHAR) || '@' || CAST(start_ts AS VARCHAR)")
@@ -167,7 +166,7 @@ object LockResolver {
         "CAST(region_id AS VARCHAR) || '@' || CAST(start_ts AS VARCHAR)")
     // the A96 region-states CTE chain, shared verbatim; the resolver
     // reads its final-tick `eff` rows as the capture-side bound
-    s"""WITH ${RangeLock.regionStatesCteSql(nRegions)},
+    s"""WITH ${RangeLock.regionStatesCteSql()},
        |maxv AS (
        |  SELECT schema_name, table_name,
        |    CAST(MIN(commit_ts) + (MAX(commit_ts) - MIN(commit_ts)) // 2
@@ -187,7 +186,7 @@ object LockResolver {
        |), rgrid AS (
        |  SELECT m.schema_name, m.table_name, m.max_version, r.region_id
        |  FROM maxv m CROSS JOIN
-       |    (SELECT UNNEST(GENERATE_SERIES(0, ${nRegions - 1})) AS region_id) r
+       |    (SELECT UNNEST(GENERATE_SERIES(0, ${Scheduler.NRegions - 1})) AS region_id) r
        |), per_region AS (
        |  SELECT g.schema_name, g.table_name, g.region_id, g.max_version,
        |    CAST(SUM(CASE WHEN c.lock_ts IS NOT NULL THEN 1 ELSE 0 END)

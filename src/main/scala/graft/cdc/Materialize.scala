@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object Materialize {
 
+  /** [[gcTrim]]'s event-store retention below the span frontier
+    * (commit-ts units). */
+  val GcRetention = 2000L
+
   /** Current snapshot: latest image per key, deletes applied. */
   def snapshot(cl: DataFrame): DataFrame =
     cl.groupBy(col("schema_name"), col("table_name"), col("pk"))
@@ -103,10 +107,9 @@ object Materialize {
     * dispatch hash pmod nRegions); a region's resolvedTs is the max
     * commit_ts it has seen. One partial-aggregated (table, region)
     * shuffle, then dimension-scale table reduces + tie-break joins. */
-  def spanFrontier(cl: DataFrame, nRegions: Int = 8): DataFrame = {
+  def spanFrontier(cl: DataFrame): DataFrame = {
     val regions = cl
-      .withColumn("region_id",
-        graft.functions.Portable.bucket(col("pk").cast("string"), nRegions))
+      .withColumn("region_id", Scheduler.pkRegion())
       .groupBy(col("schema_name"), col("table_name"), col("region_id"))
       .agg(max(col("commit_ts")).as("rts"))
     val tbl = regions.groupBy(col("schema_name"), col("table_name"))
@@ -128,8 +131,8 @@ object Materialize {
         col("slowest_region"))
   }
 
-  def spanFrontierSql(nRegions: Int = 8): String = {
-    val bucket = graft.functions.Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)
+  def spanFrontierSql(): String = {
+    val bucket = Scheduler.pkRegionSql()
     s"""WITH regions AS (
        |  SELECT schema_name, table_name, $bucket AS region_id,
        |    MAX(commit_ts) AS rts
@@ -168,8 +171,8 @@ object Materialize {
     * surviving commit ts, -1 when the table empties). One broadcast
     * of the dimension-scale gc frame + one partial-aggregated pass
     * over the changelog. */
-  def gcTrim(cl: DataFrame, nRegions: Int = 8, retention: Long = 2000L): DataFrame = {
-    val gc = spanFrontier(cl, nRegions)
+  def gcTrim(cl: DataFrame, retention: Long = GcRetention): DataFrame = {
+    val gc = spanFrontier(cl)
       .select(col("schema_name"), col("table_name"),
         greatest(col("frontier_ts") - retention, lit(0L)).as("gc_ts"))
     cl.join(broadcast(gc), Seq("schema_name", "table_name"))
@@ -181,15 +184,15 @@ object Materialize {
           .as("low_watermark"))
   }
 
-  def gcTrimSql(nRegions: Int = 8, retention: Long = 2000L): String = {
-    val bucket = graft.functions.Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)
+  def gcTrimSql(): String = {
+    val bucket = Scheduler.pkRegionSql()
     s"""WITH regions AS (
        |  SELECT schema_name, table_name, $bucket AS region_id,
        |    MAX(commit_ts) AS rts
        |  FROM changelog GROUP BY 1, 2, 3
        |), gc AS (
        |  SELECT schema_name, table_name,
-       |    GREATEST(MIN(rts) - $retention, 0) AS gc_ts
+       |    GREATEST(MIN(rts) - $GcRetention, 0) AS gc_ts
        |  FROM regions GROUP BY 1, 2
        |)
        |SELECT c.schema_name, c.table_name, g.gc_ts,
@@ -344,7 +347,7 @@ object Materialize {
     * per-table total order — the A2 event-sort shape), one grouped
     * aggregation, and a 1-row broadcast of the pass boundary; the
     * 3-scenario unpivot is a row-local explode of the 6-table frame. */
-  def tableProgress(cl: DataFrame, step: Long = SchemaStore.step): DataFrame = {
+  def tableProgress(cl: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("schema_name"), col("table_name"))
       .orderBy(col("commit_ts"))
@@ -361,6 +364,7 @@ object Materialize {
       min(when(expr("rn > cnt div 2"), col("commit_ts"))).as("first_unflushed50"),
       coalesce(sum(when(expr("rn <= cnt div 2"), col("sz"))), lit(0L)).as("bytes50"),
       sum(col("sz")).as("bytes_all"))
+    val step = SchemaStore.step
     val pass = cl.agg(expr(s"(MAX(commit_ts) div $step) * $step").as("pass_max"))
     agg.crossJoin(broadcast(pass))
       .select(col("schema_name"), col("table_name"), col("n").as("n_events"),
@@ -414,8 +418,8 @@ object Materialize {
       |  GREATEST(max_dml, (SELECT pass_max FROM pass)) - 1,
       |  CAST(1 AS BIGINT), bytes_all FROM agg""".stripMargin
 
-  def tableProgressSql(step: Long = SchemaStore.step): String =
-    s"WITH ${tpCtes(step)}\n$tpSelect"
+  def tableProgressSql(): String =
+    s"WITH ${tpCtes(SchemaStore.step)}\n$tpSelect"
 
   // ---------------------------------------------------------------- A84
   /** A84: the dispatcher-level checkpoint — `Dispatcher.GetCheckpointTs`
@@ -440,18 +444,16 @@ object Materialize {
             greatest(col("checkpoint_ts"), col("resolved_ts")))
           .otherwise(col("checkpoint_ts")).as("final_ts"))
 
-  def dispatcherCheckpoint(cl: DataFrame,
-      step: Long = SchemaStore.step, nRegions: Int = 8): DataFrame =
+  def dispatcherCheckpoint(cl: DataFrame): DataFrame =
     dispatcherCheckpointFrom(
-      tableProgress(cl, step),
-      spanFrontier(cl, nRegions)
+      tableProgress(cl),
+      spanFrontier(cl)
         .select(col("schema_name"), col("table_name"),
           col("frontier_ts").as("resolved_ts")))
 
-  def dispatcherCheckpointSql(step: Long = SchemaStore.step,
-      nRegions: Int = 8): String = {
-    val bucket = graft.functions.Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)
-    s"""WITH ${tpCtes(step)}, tp AS (
+  def dispatcherCheckpointSql(): String = {
+    val bucket = Scheduler.pkRegionSql()
+    s"""WITH ${tpCtes(SchemaStore.step)}, tp AS (
        |$tpSelect
        |), frontier AS (
        |  SELECT schema_name, table_name, MIN(rts) AS resolved_ts

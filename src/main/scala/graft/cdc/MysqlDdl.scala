@@ -35,6 +35,13 @@ import org.apache.spark.sql.functions._
   * per-event aggregation shuffles only the blocked expansion. */
 object MysqlDdl {
 
+  /** The downstream identity every syncpoint / DDL-ts row is keyed by. */
+  val ClusterId = "graft-cluster"
+  val ChangefeedId = "cf-1"
+  /** [[syncpointStmts]]' retention and the boundary period of its cleanup. */
+  val SyncpointRetentionSec = 86400L
+  val SyncpointCleanupEvery = 5
+
   val RetryBudget = 20 // mysql_writer.go:42 defaultDDLMaxRetry
 
   /** deterministic tableID, shared convention with SimpleProtocol:
@@ -77,8 +84,8 @@ object MysqlDdl {
   }
 
   def frameFrom(ddl: DataFrame, uni: DataFrame,
-                clusterId: String = "graft-cluster",
-                changefeed: String = "cf-1",
+                clusterId: String = ClusterId,
+                changefeed: String = ChangefeedId,
                 isTiDB: Boolean = false): DataFrame = {
     val blocked = blockedExpansion(ddl, uni)
 
@@ -124,10 +131,9 @@ object MysqlDdl {
 
   /** A52 queries entry: the frame over the deterministic A18 DDL
     * stream and the changelog's table universe. */
-  def frame(cl: DataFrame, clusterId: String = "graft-cluster",
-            changefeed: String = "cf-1"): DataFrame =
+  def frame(cl: DataFrame): DataFrame =
     frameFrom(SchemaStore.ddlEvents(cl, Nil), universe(cl),
-      clusterId, changefeed)
+      ClusterId, ChangefeedId)
 
   /** A54 — syncpoint writer frame (reference: mysql_writer.go:135-242
     * `FlushSyncPointEvent`/`SendSyncPointEvent`): at each syncpoint the
@@ -142,14 +148,10 @@ object MysqlDdl {
     * commit_ts, so the downstream's position after applying everything
     * up to the boundary is exactly this max); the wall-clock retention
     * sweep (`lastCleanSyncPointTime`, :215) fires every
-    * `cleanupEvery`-th boundary. Shapes: one tiny boundary grid
+    * [[SyncpointCleanupEvery]]-th boundary. Shapes: one tiny boundary grid
     * (max_ts/step rows) + one aggregation for the per-boundary max —
     * broadcast-scale at any corpus size. */
-  def syncpointStmts(cl: DataFrame, step: Long = 100L,
-                     cleanupEvery: Int = 5,
-                     retentionSec: Long = 86400L,
-                     clusterId: String = "graft-cluster",
-                     changefeed: String = "cf-1"): DataFrame = {
+  def syncpointStmts(cl: DataFrame, step: Long = 100L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bounds = ClDims.maxTs(cl)
       .select(explode(when(col("m") >= step, sequence(lit(step), col("m"), lit(step)))
@@ -170,12 +172,12 @@ object MysqlDdl {
     bounds.join(perBound, Seq("primary_ts"), "left")
       .withColumn("secondary_ts", max(col("bmax")).over(wRun))
       .withColumn("cleanup_due",
-        (pmod(expr(s"primary_ts div $step"), lit(cleanupEvery.toLong)) === 0L)
+        (pmod(expr(s"primary_ts div $step"), lit(SyncpointCleanupEvery.toLong)) === 0L)
           .cast("long"))
       .select(col("primary_ts"),
         coalesce(col("secondary_ts"), lit(0L)).as("secondary_ts"),
         concat(lit(s"insert ignore into tidb_cdc.syncpoint_v1 " +
-            s"(ticdc_cluster_id, changefeed, primary_ts, secondary_ts) VALUES ('$clusterId', '$changefeed', "),
+            s"(ticdc_cluster_id, changefeed, primary_ts, secondary_ts) VALUES ('$ClusterId', '$ChangefeedId', "),
           col("primary_ts"), lit(", "),
           coalesce(col("secondary_ts"), lit(0L)), lit(")")).as("insert_stmt"),
         concat(lit("set global tidb_external_ts = "),
@@ -183,15 +185,12 @@ object MysqlDdl {
         col("cleanup_due"),
         when(col("cleanup_due") === 1L,
           lit(s"DELETE IGNORE FROM tidb_cdc.syncpoint_v1 WHERE " +
-            s"ticdc_cluster_id = '$clusterId' and changefeed = '$changefeed' " +
-            s"and created_at < (NOW() - INTERVAL $retentionSec.00 SECOND)"))
+            s"ticdc_cluster_id = '$ClusterId' and changefeed = '$ChangefeedId' " +
+            s"and created_at < (NOW() - INTERVAL $SyncpointRetentionSec.00 SECOND)"))
           .otherwise(lit(null).cast("string")).as("cleanup_stmt"))
   }
 
-  def syncpointStmtsSql(step: Long = 100L, cleanupEvery: Int = 5,
-                        retentionSec: Long = 86400L,
-                        clusterId: String = "graft-cluster",
-                        changefeed: String = "cf-1"): String =
+  def syncpointStmtsSql(step: Long = 100L): String =
     s"""WITH bounds AS (
        |  SELECT UNNEST(GENERATE_SERIES($step, (SELECT MAX(commit_ts) FROM changelog), $step))
        |    AS primary_ts
@@ -205,17 +204,17 @@ object MysqlDdl {
        |  SELECT b.primary_ts,
        |    MAX(p.bmax) OVER (ORDER BY b.primary_ts
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS secondary_ts,
-       |    CAST((b.primary_ts // $step) % $cleanupEvery = 0 AS BIGINT) AS cleanup_due
+       |    CAST((b.primary_ts // $step) % $SyncpointCleanupEvery = 0 AS BIGINT) AS cleanup_due
        |  FROM bounds b LEFT JOIN per_bound p USING (primary_ts)
        |)
        |SELECT primary_ts,
        |  CAST(COALESCE(secondary_ts, 0) AS BIGINT) AS secondary_ts,
-       |  CONCAT('insert ignore into tidb_cdc.syncpoint_v1 (ticdc_cluster_id, changefeed, primary_ts, secondary_ts) VALUES (''$clusterId'', ''$changefeed'', ',
+       |  CONCAT('insert ignore into tidb_cdc.syncpoint_v1 (ticdc_cluster_id, changefeed, primary_ts, secondary_ts) VALUES (''$ClusterId'', ''$ChangefeedId'', ',
        |    primary_ts, ', ', COALESCE(secondary_ts, 0), ')') AS insert_stmt,
        |  CONCAT('set global tidb_external_ts = ', COALESCE(secondary_ts, 0)) AS external_ts_stmt,
        |  cleanup_due,
        |  CASE WHEN cleanup_due = 1 THEN
-       |    'DELETE IGNORE FROM tidb_cdc.syncpoint_v1 WHERE ticdc_cluster_id = ''$clusterId'' and changefeed = ''$changefeed'' and created_at < (NOW() - INTERVAL $retentionSec.00 SECOND)'
+       |    'DELETE IGNORE FROM tidb_cdc.syncpoint_v1 WHERE ticdc_cluster_id = ''$ClusterId'' and changefeed = ''$ChangefeedId'' and created_at < (NOW() - INTERVAL $SyncpointRetentionSec.00 SECOND)'
        |  END AS cleanup_stmt
        |FROM filled""".stripMargin
 
@@ -285,14 +284,13 @@ object MysqlDdl {
        |    THEN 0 ELSE s.t_last END, 0) = 0 AS BIGINT) AS is_new
        |FROM uni u LEFT JOIN state s USING (u_schema, u_table, table_id)""".stripMargin
 
-  def frameSql(clusterId: String = "graft-cluster",
-               changefeed: String = "cf-1"): String = {
+  def frameSql(): String = {
     // a literal single quote inside a SQL string literal is '' — the
     // rendered tuples must match the Scala side byte-for-byte
     val upsertTuple =
-      s"CONCAT('(''$clusterId'', ''$changefeed'', ''', valid_from, ''', ', table_id, ')')"
+      s"CONCAT('(''$ClusterId'', ''$ChangefeedId'', ''', valid_from, ''', ', table_id, ')')"
     val deleteTuple =
-      s"CONCAT('(''$clusterId'', ''$changefeed'', ', table_id, ')')"
+      s"CONCAT('(''$ClusterId'', ''$ChangefeedId'', ', table_id, ')')"
     s"""WITH ddl AS (${SchemaStore.ddlEventsSql(Nil)}),
        |inf AS (
        |  SELECT *,

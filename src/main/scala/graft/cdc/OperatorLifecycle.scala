@@ -32,10 +32,9 @@ object OperatorLifecycle {
     * always has a span, and the coalesce keeps the column non-nullable
     * as A80's `grp` is), `dest` the fold's `cur`, and a move never
     * sets `removed`. */
-  def operatorMove(cl: DataFrame, batch: Int = 1000,
-                   nRegions: Int = Scheduler.NRegions): DataFrame =
+  def operatorMove(cl: DataFrame): DataFrame =
     SpanLifecycle.spanFrame(SpanLifecycle.moveTrace(
-      Scheduler.defaultGroupMoves(cl, batch, nRegions))).select(
+      Scheduler.defaultGroupMoves(cl))).select(
       coalesce(substring_index(col("op_id"), ".", 1), lit("")).as("grp"),
       col("op_id").as("span"), col("origin"), col("tick"), col("kind"),
       col("node"), col("cur").as("dest"), col("origin_stopped"),
@@ -127,9 +126,8 @@ object OperatorLifecycle {
     * delete-vs-pause PostFinish) with arms clean-ack / node-redirect /
     * task-removed. Node stand-in for the stop side: the feed's
     * maintainer runs on its portable-hash node, coordinator = node 0. */
-  def operatorAddStop(cl: DataFrame, batch: Int = 1000,
-                      nRegions: Int = Scheduler.NRegions): DataFrame = {
-    val adds = Scheduler.basicSchedule(cl, batch, nRegions)
+  def operatorAddStop(cl: DataFrame): DataFrame = {
+    val adds = Scheduler.basicSchedule(cl)
       .select(lit("add").as("op_type"), col("span").as("op_id"),
         lit(-1L).as("removed"), col("target_node").as("dest0"),
         pmod(col("assign_seq") - 1L, lit(4L)).as("arm"))
@@ -169,9 +167,8 @@ object OperatorLifecycle {
     addStopFrame(trace)
   }
 
-  def operatorAddStopSql(batch: Int = 1000,
-                         nRegions: Int = Scheduler.NRegions): String = {
-    val basic = Scheduler.basicScheduleSql(batch, nRegions)
+  def operatorAddStopSql(): String = {
+    val basic = Scheduler.basicScheduleSql()
       .linesIterator.map("    " + _).mkString("\n")
     val bucket = graft.functions.Portable.bucketSql("schema_name",
       Scheduler.NNodes)
@@ -276,9 +273,8 @@ object OperatorLifecycle {
 
   /** A92's oracle: the same projection over the A109 oracle's move
     * rows. */
-  def operatorMoveSql(batch: Int = 1000,
-                      nRegions: Int = Scheduler.NRegions): String = {
-    val spans = SpanLifecycle.spanOperatorsSql(batch, nRegions)
+  def operatorMoveSql(): String = {
+    val spans = SpanLifecycle.spanOperatorsSql()
       .linesIterator.map("  " + _).mkString("\n")
     s"""SELECT SPLIT_PART(op_id, '.', 1) AS grp, op_id AS span, origin,
        |  tick, kind, node, cur AS dest, origin_stopped, bound, finished,

@@ -40,7 +40,6 @@ import org.apache.spark.sql.functions._
   * No fold, no driver loop. */
 object RangeLock {
 
-  val NRegions = 8
   val MaxTick = 12L
   val TickW = 1000L
   /** Unlock window [UnlockFrom, RelockAt) for regions r mod 4 = 1. */
@@ -48,16 +47,15 @@ object RangeLock {
   val RelockAt = 8L
 
   /** Per (table, region, tick): lock state, version, effective ts. */
-  def regionStates(cl: DataFrame, nRegions: Int = NRegions): DataFrame = {
+  def regionStates(cl: DataFrame): DataFrame = {
     val tables = ClDims.tables(cl)
     val grid = tables
       .select(col("schema_name"), col("table_name"),
-        explode(expr(s"sequence(0L, ${nRegions - 1}L)")).as("region_id"))
+        explode(expr(s"sequence(0L, ${Scheduler.NRegions - 1}L)")).as("region_id"))
       .select(col("schema_name"), col("table_name"), col("region_id"),
         explode(expr(s"sequence(0L, ${MaxTick}L)")).as("tick"))
     val perTick = cl
-      .withColumn("region_id",
-        graft.functions.Portable.bucket(col("pk").cast("string"), nRegions))
+      .withColumn("region_id", Scheduler.pkRegion())
       .withColumn("tick", expr(s"commit_ts div $TickW") + 1L)
       .filter(col("tick") <= MaxTick)
       .groupBy(col("schema_name"), col("table_name"), col("region_id"),
@@ -101,8 +99,8 @@ object RangeLock {
     * frame — resolvedTs over locked + unlocked coverage, locked
     * region census, and the fastest/slowest locked regions with the
     * reference's first-region-wins ties. */
-  def rangeLockStats(cl: DataFrame, nRegions: Int = NRegions): DataFrame = {
-    val st = regionStates(cl, nRegions)
+  def rangeLockStats(cl: DataFrame): DataFrame = {
+    val st = regionStates(cl)
     val agg = st.groupBy(col("schema_name"), col("table_name"), col("tick"))
       .agg(
         sum(when(col("state") === "locked", 1L).otherwise(0L)).as("n_locked"),
@@ -138,15 +136,14 @@ object RangeLock {
     * `cum` → `states` → `eff`) — the SQL twin of [[regionStates]],
     * shared with the A108 lock resolver, which joins the final-tick
     * `eff` rows as the capture-side resolvedTs bound. */
-  def regionStatesCteSql(nRegions: Int = NRegions): String = {
-    val bucket =
-      graft.functions.Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)
+  def regionStatesCteSql(): String = {
+    val bucket = Scheduler.pkRegionSql()
     s"""tables AS (
        |  SELECT DISTINCT schema_name, table_name FROM changelog
        |), grid AS (
        |  SELECT t.schema_name, t.table_name, r.region_id, g.tick
        |  FROM tables t
-       |  CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, ${nRegions - 1}))
+       |  CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, ${Scheduler.NRegions - 1}))
        |    AS region_id) r
        |  CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, $MaxTick)) AS tick) g
        |), pertick AS (
@@ -183,8 +180,8 @@ object RangeLock {
        |)""".stripMargin
   }
 
-  def rangeLockStatsSql(nRegions: Int = NRegions): String = {
-    s"""WITH ${regionStatesCteSql(nRegions)}, agg AS (
+  def rangeLockStatsSql(): String = {
+    s"""WITH ${regionStatesCteSql()}, agg AS (
        |  SELECT schema_name, table_name, tick,
        |    CAST(SUM(CASE WHEN state = 'locked' THEN 1 ELSE 0 END)
        |      AS BIGINT) AS n_locked,

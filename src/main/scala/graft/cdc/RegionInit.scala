@@ -41,16 +41,12 @@ import org.apache.spark.sql.functions._
   * shuffle is the partial-aggregated grid build. */
 object RegionInit {
 
-  val NRegions = 8
   val TickW = 100L
   val MaxTick = 12L
   /** startTs for odd regions — commits at or below it are stale. */
   val Stale = 50L
   /** The tick whose resolved entry is planted BELOW the previous one. */
   val RegressTick = 9L
-
-  private def regionOf(c: org.apache.spark.sql.Column) =
-    graft.functions.Portable.bucket(c.cast("string"), NRegions)
 
   /** A97 production frame: one row per protocol entry with outcome. */
   def regionInit(cl: DataFrame): DataFrame = {
@@ -60,7 +56,7 @@ object RegionInit {
     // DML entries: the COMMIT stream (prewrite delivery is implied by
     // the arm: delayed behind the scan for race regions pre-init)
     val commits = cl
-      .withColumn("region_id", regionOf(col("pk")))
+      .withColumn("region_id", Scheduler.pkRegion())
       .select(col("schema_name"), col("table_name"), col("region_id"),
         lit("COMMIT").as("kind"), col("commit_ts").as("ts"),
         col("pk").cast("string").as("detail"))
@@ -74,7 +70,7 @@ object RegionInit {
     val tables = ClDims.tables(cl)
     val resolved = tables
       .select(col("schema_name"), col("table_name"),
-        explode(expr(s"sequence(0L, ${NRegions - 1}L)")).as("region_id"))
+        explode(expr(s"sequence(0L, ${Scheduler.NRegions - 1}L)")).as("region_id"))
       .select(col("schema_name"), col("table_name"), col("region_id"),
         explode(expr(s"sequence(1L, ${MaxTick}L)")).as("tick"))
       .withColumn("ts",
@@ -93,8 +89,7 @@ object RegionInit {
   }
 
   def regionInitSql: String = {
-    val bucket =
-      graft.functions.Portable.bucketSql("CAST(pk AS VARCHAR)", NRegions)
+    val bucket = Scheduler.pkRegionSql()
     s"""WITH commits AS (
        |  SELECT schema_name, table_name, $bucket AS region_id,
        |    'COMMIT' AS kind, commit_ts AS ts, CAST(pk AS VARCHAR) AS detail
@@ -111,7 +106,7 @@ object RegionInit {
        |), grid AS (
        |  SELECT t.schema_name, t.table_name, r.region_id, g.tick
        |  FROM (SELECT DISTINCT schema_name, table_name FROM changelog) t
-       |  CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, ${NRegions - 1}))
+       |  CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(0, ${Scheduler.NRegions - 1}))
        |    AS region_id) r
        |  CROSS JOIN (SELECT UNNEST(GENERATE_SERIES(1, $MaxTick)) AS tick) g
        |), res AS (

@@ -67,8 +67,8 @@ object ReplicationDb {
   /** Per (grp, span, tick): the db action applied at the tick, the
     * span's state and node binding after it, and the group census
     * (GetGroups surface) at the tick. */
-  def spanStates(cl: DataFrame, nRegions: Int = Scheduler.NRegions): DataFrame =
-    spanStatesFrom(Scheduler.spanFrame(cl, nRegions))
+  def spanStates(cl: DataFrame): DataFrame =
+    spanStatesFrom(Scheduler.spanFrame(cl))
 
   /** [[spanStates]] over any (grp, span) frame — the spec drives it
     * with synthetic spans chosen to land on every arm. */
@@ -119,8 +119,8 @@ object ReplicationDb {
 
   /** The machine's final surface — what the schedulers consume:
     * (grp, span, state, node) at the last tick. */
-  def finalStates(cl: DataFrame, nRegions: Int = Scheduler.NRegions): DataFrame =
-    spanStates(cl, nRegions)
+  def finalStates(cl: DataFrame): DataFrame =
+    spanStates(cl)
       .filter(col("tick") === MaxTick)
       .select(col("grp"), col("span"), col("state"), col("node"))
 
@@ -173,12 +173,11 @@ object ReplicationDb {
 
   /** A110 production query: the full transition trace with the group
     * census columns. */
-  def replicationState(cl: DataFrame,
-                       nRegions: Int = Scheduler.NRegions): DataFrame =
-    spanStates(cl, nRegions)
+  def replicationState(cl: DataFrame): DataFrame =
+    spanStates(cl)
 
-  def replicationStateSql(nRegions: Int = Scheduler.NRegions): String =
-    s"""WITH spans AS (${Scheduler.spanFrameSql(nRegions)}),
+  def replicationStateSql(): String =
+    s"""WITH spans AS (${Scheduler.spanFrameSql()}),
        |$spanStatesCteSql
        |SELECT s.grp, s.span, s.arm, s.tick, s.action, s.state, s.node,
        |  CAST(SUM(CASE WHEN s.state = 'absent' THEN 1 ELSE 0 END)

@@ -77,8 +77,45 @@ object Scheduler {
 
   /** Alive-node universe (stand-in for NodeManager.GetAliveNodes). */
   val NNodes = 4
-  /** Region sub-spans per table, the A69/A77 convention. */
+  /** Region sub-spans per table, the A69/A77 convention: every
+    * region-level cdc/ operator (scheduler, event service, frontier,
+    * locks, backpressure, coverage) and the streaming twins map a row
+    * to its region with [[pkRegion]] over this one count. */
   val NRegions = 8
+
+  /** The pk-hash region map: `hash60(pk) mod n`, [[NRegions]] cells per
+    * table (the splitters pass their finer [[SplitScanRegions]] grid). */
+  def pkRegion(n: Int = NRegions): Column = Portable.bucket(col("pk").cast("string"), n)
+
+  /** DuckDB rendering of [[pkRegion]]. */
+  def pkRegionSql(n: Int = NRegions): String = Portable.bucketSql("CAST(pk AS VARCHAR)", n)
+
+  /** Scheduler batch: the most spans one scheduling pass assigns or
+    * moves (A79/A80/A92/A94/A109). */
+  val Batch = 1000
+
+  /** A81 hot-span walk: tick width (commit-ts units), the per-tick write
+    * threshold, the score that marks a span hot and the ticks without
+    * an increment that make it stale — shared by the batch walk, its
+    * oracle and the A81s streaming twin. */
+  val HotTickW = 100L
+  val HotThr = 10L
+  val HotScoreThr = 3
+  val HotClearTicks = 3L
+
+  /** getSpansNumber's cap on sub-spans per split and its regions-per-span
+    * limit. */
+  val MaxSpanNum = 100
+  val SpanRegionLimit = 50000L
+
+  /** Sub-spans a hot span splits into: `getSpansNumber(NRegions, NNodes)`. */
+  val HotSplitSpans: Int = spansNumber(NRegions, NNodes)
+
+  /** A82/A90/A101 splitter thresholds: the table write count below which
+    * the write splitter keeps a table whole, and the occupied-region count
+    * above which the region splitter cuts it. */
+  val SplitWriteThreshold = 500L
+  val SplitRegionThreshold = 20
 
   private[cdc] def nodeFrame(spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
@@ -89,19 +126,18 @@ object Scheduler {
     (0 until NNodes).map(n => s"(CAST($n AS BIGINT))").mkString(", ")
 
   /** (grp, region_id, span, n_rows) — one row per table×region cell,
-    * kept per (session, changelog plan, nRegions) by
+    * kept per (session, changelog plan) by
     * [[graft.util.Tables.checkpointed]]: A79/A80/A92/A94/A109/A110 all
     * funnel through this ~48-row census, the only full-data pass of the
     * scheduler plane, and A109 alone composes three scheduler outputs
     * (it paid the scan ~20×, 20.4 s at the sf10 tier vs 0.8 s for one
     * census pass). */
-  private[graft] def spanFrame(cl: DataFrame, nRegions: Int): DataFrame =
-    graft.util.Tables.checkpointed(cl, "census", nRegions)(
-      spanFrameUncached(cl, nRegions).localCheckpoint())
+  private[graft] def spanFrame(cl: DataFrame): DataFrame =
+    graft.util.Tables.checkpointed(cl, "census", ())(
+      spanFrameUncached(cl).localCheckpoint())
 
-  private def spanFrameUncached(cl: DataFrame, nRegions: Int): DataFrame =
-    cl.withColumn("region_id",
-        Portable.bucket(col("pk").cast("string"), nRegions))
+  private def spanFrameUncached(cl: DataFrame): DataFrame =
+    cl.withColumn("region_id", pkRegion())
       .groupBy(
         concat_ws(".", col("schema_name"), col("table_name")).as("grp"),
         col("region_id"))
@@ -109,12 +145,12 @@ object Scheduler {
       .withColumn("span",
         concat(col("grp"), lit("#r"), col("region_id").cast("string")))
 
-  private[cdc] def spanFrameSql(nRegions: Int): String =
+  private[cdc] def spanFrameSql(): String =
     s"""SELECT schema_name || '.' || table_name AS grp, region_id,
        |    CAST(COUNT(*) AS BIGINT) AS n_rows,
        |    schema_name || '.' || table_name || '#r' || CAST(region_id AS VARCHAR) AS span
        |  FROM (SELECT *,
-       |    ${Portable.bucketSql("CAST(pk AS VARCHAR)", nRegions)} AS region_id
+       |    ${pkRegionSql()} AS region_id
        |    FROM changelog)
        |  GROUP BY schema_name, table_name, region_id""".stripMargin
 
@@ -132,14 +168,13 @@ object Scheduler {
     * absent spans are deleted without one). Shared with the A109
     * maintainer span-operator plane, whose remove machines run over
     * the spans of dropped tables. */
-  private[cdc] def spanPlacement(cl: DataFrame,
-                                 nRegions: Int = NRegions): DataFrame =
-    ReplicationDb.finalStates(cl, nRegions)
+  private[cdc] def spanPlacement(cl: DataFrame): DataFrame =
+    ReplicationDb.finalStates(cl)
       .filter(col("state") === "replicating")
       .select(col("grp"), col("span"), col("node"))
 
-  private[cdc] def spanPlacementSql(nRegions: Int = NRegions): String =
-    s"""WITH spans AS (${spanFrameSql(nRegions)}),
+  private[cdc] def spanPlacementSql(): String =
+    s"""WITH spans AS (${spanFrameSql()}),
        |${ReplicationDb.spanStatesCteSql},
        |${ReplicationDb.finalsCteSql}
        |SELECT grp, span, node FROM finals
@@ -180,20 +215,19 @@ object Scheduler {
     * (crashed-off and still-undiscovered spans) and the node loads
     * are the db's replicating task counts (basic.go:106-139 reading
     * GetAbsentByGroup / GetTaskSizePerNode). */
-  def basicSchedule(cl: DataFrame, batch: Int = 1000,
-                    nRegions: Int = NRegions): DataFrame = {
-    val fin = ReplicationDb.finalStates(cl, nRegions)
+  def basicSchedule(cl: DataFrame): DataFrame = {
+    val fin = ReplicationDb.finalStates(cl)
     val absent = fin.filter(col("state") === "absent").select(col("span"))
     val loads = nodeFrame(cl.sparkSession)
       .join(fin.filter(col("state") === "replicating")
           .groupBy("node").agg(count(lit(1)).as("cnt")),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("cnt"), lit(0L)).as("load"))
-    basicFrame(loads, absent, batch)
+    basicFrame(loads, absent, Batch)
   }
 
-  def basicScheduleSql(batch: Int = 1000, nRegions: Int = NRegions): String =
-    s"""WITH spans AS (${spanFrameSql(nRegions)}),
+  def basicScheduleSql(): String =
+    s"""WITH spans AS (${spanFrameSql()}),
        |${ReplicationDb.spanStatesCteSql},
        |${ReplicationDb.finalsCteSql},
        |nodes(node) AS (VALUES $nodesValuesSql),
@@ -221,7 +255,7 @@ object Scheduler {
        |SELECT r.span, r.assign_seq, s.node AS target_node,
        |  s.height AS node_load_after
        |FROM ranked r JOIN slots s ON r.assign_seq = s.slot_rank
-       |WHERE r.assign_seq <= $batch""".stripMargin
+       |WHERE r.assign_seq <= $Batch""".stripMargin
 
   // ------------------------------------------------------------------
   // A80 — balance scheduler: per-group surplus→deficit moves
@@ -305,25 +339,23 @@ object Scheduler {
     * per group ALWAYS (the CheckBalanceStatus verdict — balanced
     * groups report deficit 0 with null move columns, the reference's
     * fast-path) plus one row per move for groups with a deficit. */
-  def groupBalance(cl: DataFrame, batch: Int = 1000,
-                   nRegions: Int = NRegions): DataFrame = {
-    val tasks = ReplicationDb.finalStates(cl, nRegions)
+  def groupBalance(cl: DataFrame): DataFrame = {
+    val tasks = ReplicationDb.finalStates(cl)
       .filter(col("state") === "replicating")
       .select("grp", "node", "span")
     val nodes = nodeFrame(cl.sparkSession)
-    val moves = balanceFrame(tasks, nodes, batch)
+    val moves = balanceFrame(tasks, nodes, Batch)
       .select(col("grp"), col("move_seq"), col("span"), col("from_node"),
         col("from_height"), col("to_node"), col("to_height"))
-    balanceStatus(tasks, nodes, batch).join(moves, Seq("grp"), "left")
+    balanceStatus(tasks, nodes, Batch).join(moves, Seq("grp"), "left")
   }
 
   /** The shared balance CTE chain (spans → tasks → loads → …
     * → moves) with the scheduler-group expression pluggable: `grp`
     * for the per-table split groups (A80), `'default'` for the
     * one-group default arm (A92's operator input). */
-  private def balanceCteSql(batch: Int, nRegions: Int,
-                            grpExpr: String): String =
-    s"""WITH spans AS (${spanFrameSql(nRegions)}),
+  private def balanceCteSql(grpExpr: String): String =
+    s"""WITH spans AS (${spanFrameSql()}),
        |${ReplicationDb.spanStatesCteSql},
        |${ReplicationDb.finalsCteSql},
        |nodes(node) AS (VALUES $nodesValuesSql),
@@ -352,7 +384,7 @@ object Scheduler {
        |    CAST(MAX(total) AS BIGINT) AS grp_total,
        |    CAST(MAX(lower_lim) AS BIGINT) AS grp_lower,
        |    CAST(SUM(GREATEST(lower_lim - cnt, 0)) AS BIGINT) AS deficit,
-       |    CAST(LEAST(SUM(GREATEST(lower_lim - cnt, 0)), $batch) AS BIGINT)
+       |    CAST(LEAST(SUM(GREATEST(lower_lim - cnt, 0)), $Batch) AS BIGINT)
        |      AS grp_cap
        |  FROM stat GROUP BY grp
        |),
@@ -395,13 +427,13 @@ object Scheduler {
        |    AND d.task_rank = t.task_rank
        |  JOIN slots s ON d.grp = s.grp AND d.rnk = s.rnk
        |  JOIN gated g ON d.grp = g.grp
-       |  WHERE g.moved_before < $batch AND g.deficit > 0
+       |  WHERE g.moved_before < $Batch AND g.deficit > 0
        |    AND d.rnk <= g.grp_cap
        |)
        |""".stripMargin
 
-  def groupBalanceSql(batch: Int = 1000, nRegions: Int = NRegions): String =
-    balanceCteSql(batch, nRegions, "grp") +
+  def groupBalanceSql(): String =
+    balanceCteSql("grp") +
       s"""SELECT g.grp, g.grp_total, g.grp_lower, g.deficit, g.grp_cap,
          |  g.moved_before, m.move_seq, m.span, m.from_node, m.from_height,
          |  m.to_node, m.to_height
@@ -413,20 +445,18 @@ object Scheduler {
     * own; one group per feed means small fleets still rebalance). A
     * changefeed here is a schema — the per-schema feed convention of
     * A76/A78. */
-  def defaultGroupMoves(cl: DataFrame, batch: Int = 1000,
-                        nRegions: Int = NRegions): DataFrame = {
-    val tasks = ReplicationDb.finalStates(cl, nRegions)
+  def defaultGroupMoves(cl: DataFrame): DataFrame = {
+    val tasks = ReplicationDb.finalStates(cl)
       .filter(col("state") === "replicating")
       .select(substring_index(col("grp"), ".", 1).as("grp"),
         col("node"), col("span"))
-    balanceFrame(tasks, nodeFrame(cl.sparkSession), batch)
+    balanceFrame(tasks, nodeFrame(cl.sparkSession), Batch)
       .select(col("grp"), col("move_seq"), col("span"),
         col("from_node"), col("to_node"))
   }
 
-  def defaultGroupMovesSql(batch: Int = 1000,
-                           nRegions: Int = NRegions): String =
-    balanceCteSql(batch, nRegions, "SPLIT_PART(grp, '.', 1)") +
+  def defaultGroupMovesSql(): String =
+    balanceCteSql("SPLIT_PART(grp, '.', 1)") +
       "SELECT grp, move_seq, span, from_node, to_node FROM moves"
 
   // ------------------------------------------------------------------
@@ -436,11 +466,10 @@ object Scheduler {
   /** getSpansNumber (region_count_splitter.go:173-180): how many
     * sub-spans a hot span splits into. */
   def spansNumber(regionNum: Int, captureNum: Int,
-                  maxSpanNum: Int = 100): Int = {
-    val spanRegionLimit = 50000
+                  maxSpanNum: Int = MaxSpanNum): Int = {
     val coefficient = math.max(captureNum - 1, 3)
     val spanNum =
-      if (regionNum > 1) math.max(captureNum * coefficient, regionNum / spanRegionLimit)
+      if (regionNum > 1) math.max(captureNum * coefficient, (regionNum / SpanRegionLimit).toInt)
       else 1
     math.min(spanNum, maxSpanNum)
   }
@@ -487,16 +516,16 @@ object Scheduler {
     * rest split groups (coefficient 3). */
   /** The dense production tick frame feeding the walk (also the
     * replay source for the A81s streaming twin). */
-  def hotTicks(cl: DataFrame, tickW: Long = 100L): DataFrame = {
+  def hotTicks(cl: DataFrame): DataFrame = {
     val obs = cl.groupBy(
         concat_ws(".", col("schema_name"), col("table_name")).as("span"),
-        expr(s"commit_ts div $tickW").as("tick"))
+        expr(s"commit_ts div $HotTickW").as("tick"))
       .agg(count(lit(1)).as("obs_bytes"))
     val uni = cl.select(
         concat_ws(".", col("schema_name"), col("table_name")).as("span"),
         col("schema_name"))
       .distinct()
-    val grid = cl.agg(max(expr(s"commit_ts div $tickW")).as("mx"))
+    val grid = cl.agg(max(expr(s"commit_ts div $HotTickW")).as("mx"))
       .select(explode(sequence(lit(0L), col("mx"))).as("tick"))
     uni.crossJoin(broadcast(grid))
       .join(obs, Seq("span", "tick"), "left")
@@ -505,11 +534,8 @@ object Scheduler {
         when(col("schema_name") === "db0", 1L).otherwise(3L).as("coeff"))
   }
 
-  def hotSpans(cl: DataFrame, tickW: Long = 100L, thr: Long = 10L,
-               scoreThr: Int = 3, clearTicks: Long = 3L,
-               nRegions: Int = NRegions, maxSpanNum: Int = 100): DataFrame =
-    hotWalkFrame(hotTicks(cl, tickW), thr, scoreThr, clearTicks,
-      spansNumber(nRegions, NNodes, maxSpanNum))
+  def hotSpans(cl: DataFrame): DataFrame =
+    hotWalkFrame(hotTicks(cl), HotThr, HotScoreThr, HotClearTicks, HotSplitSpans)
 
   // ------------------------------------------------------------------
   // A82 — write-bytes span splitter (greedy weight packing)
@@ -589,7 +615,7 @@ object Scheduler {
     * per region with its written-key count, rid-ordered within grp.
     * Output: one row per packed span. */
   def splitFrame(regions: DataFrame, spansNum: Int, threshold: Long,
-                 spanRegionLimit: Long = 50000L): DataFrame =
+                 spanRegionLimit: Long = SpanRegionLimit): DataFrame =
     regions
       .groupBy(col("grp"))
       .agg(sort_array(collect_list(struct(col("rid"), col("wk")))).as("rs"))
@@ -615,24 +641,21 @@ object Scheduler {
     * `getSpansNumber(regions, captures)` = 12 spans; tables under the
     * write threshold stay whole (at sf0.001 every table takes that
     * arm; at sf0.01+ the packing arms run). */
-  def spanSplitBytes(cl: DataFrame, threshold: Long = 500L,
-                     nScan: Int = SplitScanRegions): DataFrame = {
+  def spanSplitBytes(cl: DataFrame, threshold: Long = SplitWriteThreshold): DataFrame = {
     val regions = cl
-      .withColumn("rid", Portable.bucket(col("pk").cast("string"), nScan))
+      .withColumn("rid", pkRegion(SplitScanRegions))
       .groupBy(
         concat_ws(".", col("schema_name"), col("table_name")).as("grp"),
         col("rid"))
       .agg(count(lit(1)).as("wk"))
-    splitFrame(regions, spansNumber(nScan, NNodes), threshold)
+    splitFrame(regions, spansNumber(SplitScanRegions, NNodes), threshold)
   }
 
-  def spanSplitBytesSql(threshold: Long = 500L,
-                        nScan: Int = SplitScanRegions): String = {
-    val spansNum = spansNumber(nScan, NNodes)
-    val spanRegionLimit = 50000L
+  def spanSplitBytesSql(threshold: Long = SplitWriteThreshold): String = {
+    val spansNum = spansNumber(SplitScanRegions, NNodes)
     s"""WITH RECURSIVE regions0 AS (
        |  SELECT schema_name || '.' || table_name AS grp,
-       |    ${Portable.bucketSql("CAST(pk AS VARCHAR)", nScan)} AS rid,
+       |    ${pkRegionSql(SplitScanRegions)} AS rid,
        |    CAST(COUNT(*) AS BIGINT) AS wk
        |  FROM changelog GROUP BY 1, 2
        |),
@@ -685,7 +708,7 @@ object Scheduler {
        |        ((t.n - (s.i + 1)) <= (CASE WHEN s.rest_spans = 1
        |            THEN s.rest_weight // t.lim ELSE s.rest_spans END)
        |          OR (s.sw + r.wk + 1) > t.lim
-       |          OR (s.rc + 1) >= $spanRegionLimit) AS em,
+       |          OR (s.rc + 1) >= $SpanRegionLimit) AS em,
        |      s.rest_weight AS rw, t.n, t.last_rid, t.lim, r.rid AS cur_rid
        |    FROM step s
        |    JOIN tstats t ON t.grp = s.grp
@@ -727,8 +750,8 @@ object Scheduler {
     * dependence at all: every span is pure per-row arithmetic over
     * (j, n) — dimension-scale rows, no fold, no window. */
   def splitRegionsFrame(regions: DataFrame, captureNum: Int = NNodes,
-                        maxSpanNum: Int = 100,
-                        regionThreshold: Int = 20): DataFrame = {
+                        maxSpanNum: Int = MaxSpanNum,
+                        regionThreshold: Int = SplitRegionThreshold): DataFrame = {
     val coeff = math.max(captureNum - 1, 3)
     val agged = regions
       .groupBy(col("grp"))
@@ -737,7 +760,7 @@ object Scheduler {
       // getSpansNumber: max(captures*coeff, n/spanRegionLimit), capped
       .withColumn("pages0", least(
         when(col("n") > 1L,
-          greatest(lit(captureNum.toLong * coeff), expr("n div 50000")))
+          greatest(lit(captureNum.toLong * coeff), expr(s"n div $SpanRegionLimit")))
           .otherwise(lit(1L)),
         lit(maxSpanNum.toLong)))
       .withColumn("rps0", expr("n div pages0"))
@@ -769,24 +792,22 @@ object Scheduler {
     * whose occupied-region count exceeds the threshold are evenly cut
     * into `getSpansNumber` sub-spans, the rest stay whole — the path
     * every fresh changefeed takes before write stats exist. */
-  def spanSplitRegions(cl: DataFrame, regionThreshold: Int = 20,
-                       nScan: Int = SplitScanRegions): DataFrame = {
+  def spanSplitRegions(cl: DataFrame): DataFrame = {
     val regions = cl
-      .withColumn("rid", Portable.bucket(col("pk").cast("string"), nScan))
+      .withColumn("rid", pkRegion(SplitScanRegions))
       .select(
         concat_ws(".", col("schema_name"), col("table_name")).as("grp"),
         col("rid"))
       .distinct()
-    splitRegionsFrame(regions, NNodes, 100, regionThreshold)
+    splitRegionsFrame(regions)
   }
 
-  def spanSplitRegionsSql(regionThreshold: Int = 20,
-                          nScan: Int = SplitScanRegions): String = {
+  def spanSplitRegionsSql(): String = {
     val captureNum = NNodes
     val coeff = math.max(captureNum - 1, 3)
     s"""WITH regions AS (
        |  SELECT DISTINCT schema_name || '.' || table_name AS grp,
-       |    ${Portable.bucketSql("CAST(pk AS VARCHAR)", nScan)} AS rid
+       |    ${pkRegionSql(SplitScanRegions)} AS rid
        |  FROM changelog
        |), ridx AS (
        |  SELECT grp, rid,
@@ -813,7 +834,7 @@ object Scheduler {
        |), s AS (
        |  SELECT grp, n, rps, rem,
        |    UNNEST(GENERATE_SERIES(0, pages - 1)) AS j
-       |  FROM a WHERE n > $regionThreshold
+       |  FROM a WHERE n > $SplitRegionThreshold
        |)
        |SELECT s.grp, CAST(s.j + 1 AS BIGINT) AS span_seq,
        |  r1.rid AS start_rid, r2.rid AS end_rid,
@@ -829,7 +850,7 @@ object Scheduler {
        |UNION ALL
        |SELECT grp, CAST(1 AS BIGINT) AS span_seq, first_rid, last_rid,
        |  n AS region_cnt, n AS n_regions
-       |FROM t WHERE n <= $regionThreshold""".stripMargin
+       |FROM t WHERE n <= $SplitRegionThreshold""".stripMargin
   }
 
   // ------------------------------------------------------------------
@@ -851,13 +872,11 @@ object Scheduler {
     * per-table span counts — no new corpus-scale work beyond the two
     * splitters' own partial-aggregated scans. Output carries both
     * candidate span counts so every verdict is auditable. */
-  def spanSplitChoose(cl: DataFrame, threshold: Long = 500L,
-                      regionThreshold: Int = 20,
-                      nScan: Int = SplitScanRegions): DataFrame = {
+  def spanSplitChoose(cl: DataFrame, threshold: Long = SplitWriteThreshold): DataFrame = {
     val cols = Seq("grp", "span_seq", "start_rid", "end_rid", "region_cnt")
       .map(col)
-    val wb = spanSplitBytes(cl, threshold, nScan).select(cols: _*)
-    val rc = spanSplitRegions(cl, regionThreshold, nScan).select(cols: _*)
+    val wb = spanSplitBytes(cl, threshold).select(cols: _*)
+    val rc = spanSplitRegions(cl).select(cols: _*)
     val counts = wb.groupBy(col("grp")).agg(count(lit(1)).as("n_write_spans"))
       .join(rc.groupBy(col("grp")).agg(count(lit(1)).as("n_region_spans")),
         Seq("grp"))
@@ -877,12 +896,11 @@ object Scheduler {
         col("end_rid"), col("region_cnt"))
   }
 
-  def spanSplitChooseSql(threshold: Long = 500L, regionThreshold: Int = 20,
-                         nScan: Int = SplitScanRegions): String =
+  def spanSplitChooseSql(threshold: Long = SplitWriteThreshold): String =
     s"""WITH wb AS (
-       |  ${spanSplitBytesSql(threshold, nScan).replace("\n", "\n  ")}
+       |  ${spanSplitBytesSql(threshold).replace("\n", "\n  ")}
        |), rc AS (
-       |  ${spanSplitRegionsSql(regionThreshold, nScan).replace("\n", "\n  ")}
+       |  ${spanSplitRegionsSql().replace("\n", "\n  ")}
        |), counts AS (
        |  SELECT w.grp, w.n_write_spans, r.n_region_spans,
        |    CASE WHEN w.n_write_spans > 1 THEN 'write'
@@ -905,13 +923,10 @@ object Scheduler {
        |WHERE c.chosen = t.src
        |   OR (c.chosen = 'none' AND t.src = 'write')""".stripMargin
 
-  def hotSpansSql(tickW: Long = 100L, thr: Long = 10L, scoreThr: Int = 3,
-                  clearTicks: Long = 3L, nRegions: Int = NRegions,
-                  maxSpanNum: Int = 100): String = {
-    val split = spansNumber(nRegions, NNodes, maxSpanNum)
+  def hotSpansSql(): String = {
     s"""WITH obs AS (
        |  SELECT schema_name || '.' || table_name AS span,
-       |    commit_ts // $tickW AS tick, CAST(COUNT(*) AS BIGINT) AS obs_bytes
+       |    commit_ts // $HotTickW AS tick, CAST(COUNT(*) AS BIGINT) AS obs_bytes
        |  FROM changelog GROUP BY 1, 2
        |),
        |uni AS (
@@ -920,7 +935,7 @@ object Scheduler {
        |),
        |grid AS (
        |  SELECT UNNEST(GENERATE_SERIES(0,
-       |    (SELECT MAX(commit_ts // $tickW) FROM changelog))) AS tick
+       |    (SELECT MAX(commit_ts // $HotTickW) FROM changelog))) AS tick
        |),
        |ticks AS (
        |  SELECT u.span, g.tick, COALESCE(o.obs_bytes, 0) AS bytes,
@@ -932,8 +947,8 @@ object Scheduler {
        |  SELECT *,
        |    SUM(delta) OVER w AS s
        |  FROM (SELECT *,
-       |    CASE WHEN bytes >= $thr * coeff THEN 1
-       |         WHEN bytes < $thr THEN -1 ELSE 0 END AS delta
+       |    CASE WHEN bytes >= $HotThr * coeff THEN 1
+       |         WHEN bytes < $HotThr THEN -1 ELSE 0 END AS delta
        |    FROM ticks)
        |  WINDOW w AS (PARTITION BY span ORDER BY tick)
        |),
@@ -953,16 +968,16 @@ object Scheduler {
        |)
        |SELECT span, coeff, n_ticks, peak_score, final_score, last_inc_tick,
        |  CAST(CASE WHEN last_inc_tick >= 0
-       |    AND last_tick - last_inc_tick > $clearTicks THEN 1 ELSE 0 END
+       |    AND last_tick - last_inc_tick > $HotClearTicks THEN 1 ELSE 0 END
        |    AS BIGINT) AS is_stale,
-       |  CAST(CASE WHEN final_score >= $scoreThr
+       |  CAST(CASE WHEN final_score >= $HotScoreThr
        |    AND NOT (last_inc_tick >= 0
-       |      AND last_tick - last_inc_tick > $clearTicks)
+       |      AND last_tick - last_inc_tick > $HotClearTicks)
        |    THEN 1 ELSE 0 END AS BIGINT) AS is_hot,
-       |  CAST(CASE WHEN final_score >= $scoreThr
+       |  CAST(CASE WHEN final_score >= $HotScoreThr
        |    AND NOT (last_inc_tick >= 0
-       |      AND last_tick - last_inc_tick > $clearTicks)
-       |    THEN $split ELSE 0 END AS BIGINT) AS split_spans
+       |      AND last_tick - last_inc_tick > $HotClearTicks)
+       |    THEN $HotSplitSpans ELSE 0 END AS BIGINT) AS split_spans
        |FROM summary""".stripMargin
   }
 }

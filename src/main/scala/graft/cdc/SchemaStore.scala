@@ -15,6 +15,10 @@ import graft.plans.AsOf
   * ASOF JOIN.
   */
 object SchemaStore {
+
+  /** The table filter of [[schemaSnapshot]]. */
+  val SnapshotRules: Seq[String] = Seq("db0.%", "db1.t1")
+
   val step = 1000L
 
   /** Deterministic version table: (schema, table, valid_from, schema_ver). */
@@ -221,11 +225,10 @@ object SchemaStore {
     * snapshot (birth + alters landed at or before it). Probe ts =
     * max commit_ts div 2 — a deterministic mid-stream snapshot the
     * oracle replays. Everything here is dimension-scale. */
-  def schemaSnapshot(spark: SparkSession, dir: String,
-                     tableRules: Seq[String] = Seq("db0.%", "db1.t1")): DataFrame = {
+  def schemaSnapshot(spark: SparkSession, dir: String): DataFrame = {
     val cl = ChangeEvents.changelog(spark, dir)
     val probe = cl.agg(expr(s"CAST(MAX(commit_ts) DIV 2 AS BIGINT)").as("snap_ts"))
-    val alive = Filters.tableFilter(tableLifecycle(spark, dir), tableRules)
+    val alive = Filters.tableFilter(tableLifecycle(spark, dir), SnapshotRules)
       .crossJoin(broadcast(probe))
       .filter(col("born_ts") <= col("snap_ts") &&
         (col("delete_ts") === -1L || col("snap_ts") < col("delete_ts")))
@@ -242,7 +245,7 @@ object SchemaStore {
         (lit(1L) + col("n_alters")).as("n_versions_asof"))
   }
 
-  def schemaSnapshotSql(tableRules: Seq[String] = Seq("db0.%", "db1.t1")): String =
+  def schemaSnapshotSql(): String =
     s"""WITH $lifecycleCtes,
        |snap AS (SELECT MAX(commit_ts) // 2 AS snap_ts FROM changelog),
        |alive AS (
@@ -250,7 +253,7 @@ object SchemaStore {
        |  FROM lifecycle l CROSS JOIN snap s
        |  WHERE l.born_ts <= s.snap_ts
        |    AND (l.delete_ts = -1 OR s.snap_ts < l.delete_ts)
-       |    AND ${Filters.tableFilterSql(tableRules)
+       |    AND ${Filters.tableFilterSql(SnapshotRules)
                   .replace("schema_name", "l.schema_name")
                   .replace("table_name", "l.table_name")}
        |), alt AS (SELECT base, ts FROM jobs WHERE action = 'ALTER')

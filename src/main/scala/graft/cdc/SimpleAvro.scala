@@ -167,8 +167,7 @@ object SimpleAvro {
   /** The full simple-protocol Avro-binary message stream — the same
     * legs, commit_ts column and msg_type labels as [[SimpleProtocol
     * .messages]], with `value` carrying the wire hex instead of JSON. */
-  def messages(cl: DataFrame,
-               resendEvery: Int = SimpleProtocol.DefaultResendEvery): DataFrame = {
+  def messages(cl: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
 
     val dml = cl.select(col("commit_ts"), lit("DML").as("msg_type"),
@@ -181,17 +180,15 @@ object SimpleAvro {
         concat(lit(wrapper(1) + verHex + zvarHexConst(0)),
           tableSchemaHex(lit(0L))).as("value"))
 
-    val resend = if (resendEvery <= 0) None else Some {
-      val w = Window.partitionBy(col("schema_name"), col("table_name"))
-        .orderBy(col("commit_ts"))
-      cl.select(col("schema_name"), col("table_name"), col("commit_ts"))
-        .withColumn("rn", row_number().over(w))
-        .filter(pmod(col("rn"), lit(resendEvery)) === 0)
-        .select(col("commit_ts"), lit("BOOTSTRAP").as("msg_type"),
-          concat(lit(wrapper(1) + verHex), zvarHex(col("commit_ts")),
-            tableSchemaHex(expr(s"commit_ts div ${SchemaStore.step}")))
-            .as("value"))
-    }
+    val w = Window.partitionBy(col("schema_name"), col("table_name"))
+      .orderBy(col("commit_ts"))
+    val resend = cl.select(col("schema_name"), col("table_name"), col("commit_ts"))
+      .withColumn("rn", row_number().over(w))
+      .filter(pmod(col("rn"), lit(SimpleProtocol.ResendEvery)) === 0)
+      .select(col("commit_ts"), lit("BOOTSTRAP").as("msg_type"),
+        concat(lit(wrapper(1) + verHex), zvarHex(col("commit_ts")),
+          tableSchemaHex(expr(s"commit_ts div ${SchemaStore.step}")))
+          .as("value"))
 
     // DDL payload: version, type, sql, commitTs, buildTs,
     // tableSchema union (present), preTableSchema union (null)
@@ -207,14 +204,11 @@ object SimpleAvro {
         concat(lit(wrapper(0) + verHex), zvarHex(col("rts")), zvarHex(col("rts")))
           .as("value"))
 
-    val base = bootstrap.unionAll(ddl).unionAll(dml).unionAll(watermark)
-    resend.fold(base)(base.unionAll)
+    bootstrap.unionAll(ddl).unionAll(dml).unionAll(watermark).unionAll(resend)
   }
 
-  def messagesSql: String = messagesSql(SimpleProtocol.DefaultResendEvery)
-
-  def messagesSql(resendEvery: Int): String = {
-    val resendLeg = if (resendEvery <= 0) "" else
+  def messagesSql: String = {
+    val resendLeg =
       s"""
          |UNION ALL
          |SELECT commit_ts, 'BOOTSTRAP' AS msg_type,
@@ -223,7 +217,7 @@ object SimpleAvro {
          |FROM (SELECT *, ROW_NUMBER() OVER (
          |        PARTITION BY schema_name, table_name ORDER BY commit_ts) AS rn
          |      FROM changelog)
-         |WHERE rn % $resendEvery = 0""".stripMargin
+         |WHERE rn % ${SimpleProtocol.ResendEvery} = 0""".stripMargin
     s"""SELECT CAST(0 AS BIGINT) AS commit_ts, 'BOOTSTRAP' AS msg_type,
        |  CONCAT('${wrapper(1) + verHex + zvarHexConst(0)}',
        |    ${tableSchemaHexSql("0")}) AS value
@@ -258,9 +252,7 @@ object SimpleAvro {
     * column-identical to the JSON decode, so the DuckDB oracle IS
     * [[SimpleProtocol.decodeSql]] — the oracle equality proves the two
     * wire formats of marshaller.go carry identical information. */
-  def decode(cl: DataFrame,
-             resendEvery: Int = SimpleProtocol.DefaultResendEvery): DataFrame =
-    decodeFrom(messages(cl, resendEvery))
+  def decode(cl: DataFrame): DataFrame = decodeFrom(messages(cl))
 
   def decodeFrom(msgs: DataFrame): DataFrame = {
     import graft.functions.WireExprs

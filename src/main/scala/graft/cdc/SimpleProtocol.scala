@@ -69,10 +69,10 @@ object SimpleProtocol {
       lit("}"))
   }
 
-  /** Default bootstrap re-send cadence: one re-sent BOOTSTRAP per table
-    * per 500 DML messages (reference default
-    * send-bootstrap-in-msg-count; bootstraper.go:55). */
-  val DefaultResendEvery = 500
+  /** Bootstrap re-send cadence: one re-sent BOOTSTRAP per table per 500
+    * DML messages (reference default send-bootstrap-in-msg-count;
+    * bootstraper.go:55), shared by the JSON and Avro wires. */
+  val ResendEvery = 500
 
   /** A34 — the full simple-protocol message stream over a changelog.
     *
@@ -92,7 +92,7 @@ object SimpleProtocol {
     * most `resendEvery` DMLs per table away from a schema-carrying
     * message — the invariant the spec checks. One extra per-table
     * window shuffle; `resendEvery` ≤ 0 disables. */
-  def messages(cl: DataFrame, resendEvery: Int = DefaultResendEvery): DataFrame = {
+  def messages(cl: DataFrame, resendEvery: Int = ResendEvery): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val dml = cl.select(col("commit_ts"), lit("DML").as("msg_type"),
       dmlValue.as("value"))
@@ -141,10 +141,8 @@ object SimpleProtocol {
     resend.fold(base)(base.unionAll)
   }
 
-  def messagesSql: String = messagesSql(DefaultResendEvery)
-
-  def messagesSql(resendEvery: Int): String = {
-    val resendLeg = if (resendEvery <= 0) "" else
+  def messagesSql: String = {
+    val resendLeg =
       s"""
          |UNION ALL
          |SELECT commit_ts, 'BOOTSTRAP' AS msg_type,
@@ -153,7 +151,7 @@ object SimpleProtocol {
          |FROM (SELECT *, ROW_NUMBER() OVER (
          |        PARTITION BY schema_name, table_name ORDER BY commit_ts) AS rn
          |      FROM changelog)
-         |WHERE rn % $resendEvery = 0""".stripMargin
+         |WHERE rn % $ResendEvery = 0""".stripMargin
     val dmlTypeSql = "CASE op WHEN 'I' THEN 'INSERT' WHEN 'D' THEN 'DELETE' ELSE 'UPDATE' END"
     val imageSql =
       s"""CONCAT('{"pk":', pk, ',"value":', ${Codecs.fmtSql("after_value")}, ',"props":', props, '}')"""

@@ -10,6 +10,10 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
+  /** Where claim-checked payloads live ([[claimCheck]],
+    * [[compressedClaimCheck]]). */
+  val ClaimCheckUri = "s3://claim-check"
+
   /** A31 — Kafka large-message claim-check (reference:
     * pkg/sink/kafka/claimcheck/claim_check.go:51 `WriteMessage` +
     * pkg/sink/codec/open/encoder.go:54): when an encoded message
@@ -33,11 +37,10 @@ object Sinks {
     * duplicates — so every inline message paid the full canal render
     * twice (the compressedSized/handleKeyOnly bug, same fix). */
   def claimCheckFrame(cl: DataFrame, n: Int, maxBytes: Int,
-                      uriPrefix: String = "s3://claim-check",
                       extra: Seq[org.apache.spark.sql.Column] = Nil)
       : DataFrame = {
     val claimed = col("payload_bytes") > maxBytes
-    val location = concat(lit(uriPrefix + "/"), col("schema_name"), lit("/"),
+    val location = concat(lit(ClaimCheckUri + "/"), col("schema_name"), lit("/"),
       col("table_name"), lit("/"), col("commit_ts"), lit(".json"))
     val stub = concat(
       lit("{\"ts\":"), col("commit_ts"),
@@ -52,15 +55,13 @@ object Sinks {
         when(claimed, stub).otherwise(col("_canal_value")).as("value")): _*)
   }
 
-  def claimCheck(cl: DataFrame, n: Int, maxBytes: Int,
-                 uriPrefix: String = "s3://claim-check"): DataFrame =
-    claimCheckFrame(cl, n, maxBytes, uriPrefix)
+  def claimCheck(cl: DataFrame, n: Int, maxBytes: Int): DataFrame =
+    claimCheckFrame(cl, n, maxBytes)
 
-  def claimCheckSql(n: Int, maxBytes: Int,
-                    uriPrefix: String = "s3://claim-check"): String = {
+  def claimCheckSql(n: Int, maxBytes: Int): String = {
     val valueSql = Codecs.canalJsonValueSql
     val bytesSql = s"octet_length(encode($valueSql))"
-    val locSql = s"CONCAT('$uriPrefix/', schema_name, '/', table_name, '/', commit_ts, '.json')"
+    val locSql = s"CONCAT('$ClaimCheckUri/', schema_name, '/', table_name, '/', commit_ts, '.json')"
     val stubSql =
       s"""CONCAT('{"ts":', commit_ts, ',"handleKey":{"pk":', pk,
          |  '},"claimCheckLocation":"', $locSql, '"}')""".stripMargin
@@ -127,8 +128,7 @@ object Sinks {
             .cast("int")).cast("long"))
   }
 
-  def compressedClaimCheck(cl: DataFrame, n: Int, maxBytes: Int,
-                           uriPrefix: String = "s3://claim-check"): DataFrame = {
+  def compressedClaimCheck(cl: DataFrame, n: Int, maxBytes: Int): DataFrame = {
     compressedSized(cl)
       .withColumn("claimed", col("compressed_bytes") > maxBytes)
       .select(
@@ -140,7 +140,7 @@ object Sinks {
         (col("payload_bytes").cast("long") * 100L / col("compressed_bytes"))
           .cast("long").as("ratio_pct"),
         col("claimed"),
-        when(col("claimed"), concat(lit(uriPrefix + "/"), col("schema_name"),
+        when(col("claimed"), concat(lit(ClaimCheckUri + "/"), col("schema_name"),
           lit("/"), col("table_name"), lit("/"), col("commit_ts"),
           lit(".json.sz"))).otherwise(lit(null).cast("string"))
           .as("claim_location"))
@@ -228,8 +228,7 @@ object Sinks {
        |FROM modeled""".stripMargin
   }
 
-  def compressedClaimCheckSql(n: Int, maxBytes: Int,
-                              uriPrefix: String = "s3://claim-check"): String = {
+  def compressedClaimCheckSql(n: Int, maxBytes: Int): String = {
     val fmtV = (e: String) =>
       s"CASE WHEN $e IS NULL THEN 'null' ELSE printf('%.4f', $e) END"
     val payload = s"octet_length(encode(${Codecs.canalJsonValueSql}))"
@@ -257,7 +256,7 @@ object Sinks {
        |  CAST(payload_bytes * 100 // compressed_bytes AS BIGINT) AS ratio_pct,
        |  compressed_bytes > $maxBytes AS claimed,
        |  CASE WHEN compressed_bytes > $maxBytes
-       |    THEN CONCAT('$uriPrefix/', schema_name, '/', table_name, '/', commit_ts, '.json.sz')
+       |    THEN CONCAT('$ClaimCheckUri/', schema_name, '/', table_name, '/', commit_ts, '.json.sz')
        |    ELSE NULL END AS claim_location
        |FROM modeled""".stripMargin
   }
@@ -664,8 +663,7 @@ object Sinks {
     * the A49 batch frame (corpus/maxBatch rows) — the A2 sequential-
     * protocol class: parallel across changefeeds, sequential within,
     * exactly the reference's concurrency layout. */
-  def encoderGroup(cl: DataFrame, n: Int = 16, maxBatch: Int = 16,
-                   concurrency: Long = EncoderConcurrency): DataFrame = {
+  def encoderGroup(cl: DataFrame, n: Int = 16, maxBatch: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val arrival = Window.partitionBy(col("schema_name"))
       .orderBy(col("first_ts"), col("table_name"), col("partition"),
@@ -677,7 +675,7 @@ object Sinks {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     batchFrame(cl, n, maxBatch)
       .withColumn("batch_seq", row_number().over(arrival).cast("long"))
-      .withColumn("enc_idx", pmod(col("batch_seq"), lit(concurrency)))
+      .withColumn("enc_idx", pmod(col("batch_seq"), lit(EncoderConcurrency)))
       .withColumn("enc_seq", row_number().over(perEnc).cast("long"))
       .withColumn("cost_us",
         col("n_rows") * EncCostPerRowUs +
@@ -697,8 +695,7 @@ object Sinks {
         col("consume_us"), col("hol_wait_us"), col("order_preserved"))
   }
 
-  def encoderGroupSql(n: Int = 16, maxBatch: Int = 16,
-                      concurrency: Long = EncoderConcurrency): String =
+  def encoderGroupSql(n: Int = 16, maxBatch: Int = 16): String =
     s"""WITH batches AS (
        |${batchFrameSql(n, maxBatch).linesIterator.map("  " + _).mkString("\n")}
        |), seqd AS (
@@ -708,7 +705,7 @@ object Sinks {
        |      AS batch_seq
        |  FROM batches
        |), enc AS (
-       |  SELECT *, batch_seq % $concurrency AS enc_idx,
+       |  SELECT *, batch_seq % $EncoderConcurrency AS enc_idx,
        |    CAST(n_rows * $EncCostPerRowUs +
        |      (batch_bytes // 100) * $EncCostPer100BytesUs AS BIGINT)
        |      AS cost_us

@@ -230,13 +230,12 @@ object SpanLifecycle {
     * spans (grp-hash mod 3 = 0, the RemoveTasksByTableIDs path; 3-arm
     * round-robin), MOVE machines over the A80 default-group balance
     * moves ([[moveTrace]]). */
-  def spanOperators(cl: DataFrame, batch: Int = 1000,
-                    nRegions: Int = Scheduler.NRegions): DataFrame = {
-    val adds = Scheduler.basicSchedule(cl, batch, nRegions)
+  def spanOperators(cl: DataFrame): DataFrame = {
+    val adds = Scheduler.basicSchedule(cl)
       .select(lit("add").as("op_type"), col("span").as("op_id"),
         lit(-1L).as("origin"), col("target_node").as("dest0"),
         pmod(col("assign_seq") - 1L, lit(6L)).as("arm"))
-    val removes = Scheduler.spanPlacement(cl, nRegions)
+    val removes = Scheduler.spanPlacement(cl)
       .filter(graft.functions.Portable.bucket(col("grp"), 3) === 0L)
       .withColumn("rn",
         row_number().over(graft.util.Windows.bounded(col("span"))).cast("long"))
@@ -275,16 +274,15 @@ object SpanLifecycle {
       .select(col("op_type"), col("op_id"), col("origin"), col("dest0"),
         col("tick"), col("kind"), col("node"))
     spanFrame(trace.unionByName(
-      moveTrace(Scheduler.defaultGroupMoves(cl, batch, nRegions))))
+      moveTrace(Scheduler.defaultGroupMoves(cl))))
   }
 
-  def spanOperatorsSql(batch: Int = 1000,
-                       nRegions: Int = Scheduler.NRegions): String = {
-    val basic = Scheduler.basicScheduleSql(batch, nRegions)
+  def spanOperatorsSql(): String = {
+    val basic = Scheduler.basicScheduleSql()
       .linesIterator.map("    " + _).mkString("\n")
-    val placement = Scheduler.spanPlacementSql(nRegions)
+    val placement = Scheduler.spanPlacementSql()
       .linesIterator.map("    " + _).mkString("\n")
-    val moves = Scheduler.defaultGroupMovesSql(batch, nRegions)
+    val moves = Scheduler.defaultGroupMovesSql()
       .linesIterator.map("    " + _).mkString("\n")
     val dropPick = graft.functions.Portable.bucketSql("grp", 3)
     s"""WITH RECURSIVE ops AS (

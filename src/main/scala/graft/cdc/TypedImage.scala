@@ -56,7 +56,6 @@ object TypedImage {
 
   /** ENUM element list (canal/debezium `allowed` parameter order). */
   val enumElems: Seq[String] = ImageArms.EnumElems
-  val enumAllowed: String = enumElems.mkString(",")
 
   // ----------------------------------------------------------- DATE
   /** epoch-day number (the debezium int32 wire value) */
@@ -148,7 +147,6 @@ object TypedImage {
 
   /** SET element list (4 elems → masks 1..15). */
   val setElems: Seq[String] = ImageArms.SetElems
-  val setAllowed: String = setElems.mkString(",")
 
   // -------------------------------------------------------------- BIT
   /** BIT(8) value 0..255 (inputs reduced first — cannot wrap) */
@@ -195,7 +193,6 @@ object TypedImage {
     s"strftime(make_timestamp(CAST($timeSecSql AS BIGINT) * 1000000), '%H:%M:%S')"
 
   /** debezium io.debezium.time.MicroTime int64 value */
-  val timeMicros: Column = arm(ImageArms.TimeMicros, ts)
   val timeMicrosSql: String = s"($timeSecSql * 1000000)"
 
   // ------------------------------------------------------------- YEAR
@@ -244,5 +241,4 @@ object TypedImage {
     * avro-binary (A41) bytes-decimal payload (varint length prefix is
     * the encoder's job) */
   val decPreciseHex: Column = arm(ImageArms.DecPreciseHex, ts, pk)
-  val decPreciseHexSql: String = beBytesHexSql(decE4Sql)
 }

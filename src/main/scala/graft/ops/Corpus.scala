@@ -20,6 +20,36 @@ import graft.util.Tables
   */
 object Corpus {
 
+  /** [[docTfidf]]'s keywords per document. */
+  val TfidfTopK = 3
+  /** [[dataSplit]]'s salt. */
+  val SplitSalt = "graft-split-v1:"
+  /** Sequence packing ([[seqPack]], [[packAttentionSpans]]): context
+    * length, shards and salt. */
+  val PackCtx = 2048L
+  val PackShards = 8
+  val PackSalt = "graft-pack-v1:"
+  /** [[corpusDrift]]'s threshold. */
+  val DriftPpm = 20000L
+  /** [[mixEpochPlan]]'s token budget multiple. */
+  val MixBudgetX = 4L
+  /** [[ngramHeavyHitters]]' n-gram order and count. */
+  val HeavyN = 5
+  val HeavyK = 50
+  /** BPE: [[bpePairMerge]]'s pairs and [[bpeSegment]]'s merge rounds. */
+  val BpeTopK = 20
+  val BpeMerges = 8
+  /** [[sessionTranscripts]]' session gap and turn cap. */
+  val SessionGapUs = 1800000000L
+  val MaxTurns = 8
+  /** [[lengthBatching]]: length bucket, shards and batch size. */
+  val LenDiv = 16
+  val LenShards = 8
+  val LenBatchSize = 4
+  /** [[corpusPhrases]]: minimum count and score threshold. */
+  val PhraseMinCount = 5L
+  val PhraseTauPpm = 1500000L
+
   // ALL word 3-gram occurrences (the distinct-set form drops the
   // duplicates repetition profiling measures). The declarative
   // transform-lambda ran interpreted at ~ms/doc (25 s at sf0.1);
@@ -142,7 +172,7 @@ object Corpus {
     * change the per-document ranking for fixed tf — the ranking, not
     * the absolute score, is the operator's contract). Scores are exact
     * integer products divided once. */
-  def docTfidf(spark: SparkSession, dir: String, topK: Int = 3): DataFrame = {
+  def docTfidf(spark: SparkSession, dir: String): DataFrame = {
     val terms = Text.docTokens(spark, dir)
       .select(col("doc_id"), explode(col("toks")).as("term"))
       .filter(col("term") =!= "")
@@ -154,12 +184,12 @@ object Corpus {
       .crossJoin(broadcast(nDocs))
       .withColumn("score", (col("tf") * col("n_docs")) / col("df"))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= TfidfTopK)
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
         col("score"), col("rank"))
   }
 
-  def docTfidfSql(topK: Int = 3): String =
+  def docTfidfSql(): String =
     s"""WITH t AS (
        |  SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents
        |), terms AS (
@@ -176,25 +206,24 @@ object Corpus {
        |    ROW_NUMBER() OVER (PARTITION BY tf.doc_id
        |      ORDER BY (tf.tf * n.n_docs) / dfreq.df DESC, tf.term) AS rank
        |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n
-       |) WHERE rank <= $topK""".stripMargin
+       |) WHERE rank <= $TfidfTopK""".stripMargin
 
   /** C16 — deterministic train/val/test assignment: a salted portable
     * hash of the doc id buckets 0–99; 90/5/5. Reproducible across
     * engines, runs, and cluster sizes — re-running the pipeline never
     * moves a document between splits (the salt versions the split). */
-  def dataSplit(spark: SparkSession, dir: String,
-                salt: String = "graft-split-v1:"): DataFrame =
+  def dataSplit(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(
       col("doc_id"),
       graft.functions.Portable
-        .bucket(concat(lit(salt), col("doc_id").cast("string")), 100).as("bucket"))
+        .bucket(concat(lit(SplitSalt), col("doc_id").cast("string")), 100).as("bucket"))
       .withColumn("split",
         when(col("bucket") < 90, "train").when(col("bucket") < 95, "val")
           .otherwise(lit("test")))
 
-  def dataSplitSql(salt: String = "graft-split-v1:"): String = {
+  def dataSplitSql(): String = {
     val bucket = graft.functions.Portable
-      .bucketSql(s"CONCAT('$salt', CAST(doc_id AS VARCHAR))", 100)
+      .bucketSql(s"CONCAT('$SplitSalt', CAST(doc_id AS VARCHAR))", 100)
     s"""SELECT doc_id, $bucket AS bucket,
        |  CASE WHEN $bucket < 90 THEN 'train'
        |       WHEN $bucket < 95 THEN 'val' ELSE 'test' END AS split
@@ -209,14 +238,13 @@ object Corpus {
     * the cumulative-sum window sorts a bounded shard, never a global
     * per-lang ordering (the number of shards scales with the corpus;
     * one window shuffle total). */
-  def seqPack(spark: SparkSession, dir: String, ctx: Long = 2048L,
-              nShards: Int = 8, salt: String = "graft-pack-v1:"): DataFrame = {
+  def seqPack(spark: SparkSession, dir: String, ctx: Long = PackCtx): DataFrame = {
     val w = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     Text.docTokens(spark, dir)
       .select(col("doc_id"), col("lang"),
         graft.functions.Portable
-          .bucket(concat(lit(salt), col("doc_id").cast("string")), nShards)
+          .bucket(concat(lit(PackSalt), col("doc_id").cast("string")), PackShards)
           .as("shard"),
         size(col("toks")).cast("long").as("n_tokens"))
       .withColumn("cum_before", coalesce(sum(col("n_tokens")).over(w), lit(0L)))
@@ -225,10 +253,9 @@ object Corpus {
         pmod(col("cum_before"), lit(ctx)).as("bin_offset"))
   }
 
-  def seqPackSql(ctx: Long = 2048L, nShards: Int = 8,
-                 salt: String = "graft-pack-v1:"): String = {
+  def seqPackSql(): String = {
     val shard = graft.functions.Portable
-      .bucketSql(s"CONCAT('$salt', CAST(doc_id AS VARCHAR))", nShards)
+      .bucketSql(s"CONCAT('$PackSalt', CAST(doc_id AS VARCHAR))", PackShards)
     s"""WITH t AS (
        |  SELECT doc_id, lang, $shard AS shard,
        |    CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS n_tokens
@@ -241,8 +268,8 @@ object Corpus {
        |  FROM t
        |)
        |SELECT doc_id, lang, shard, n_tokens,
-       |  CAST(cum_before // $ctx AS BIGINT) AS bin_id,
-       |  CAST(cum_before % $ctx AS BIGINT) AS bin_offset
+       |  CAST(cum_before // $PackCtx AS BIGINT) AS bin_id,
+       |  CAST(cum_before % $PackCtx AS BIGINT) AS bin_offset
        |FROM c""".stripMargin
   }
 
@@ -294,8 +321,7 @@ object Corpus {
     * appearing/disappearing sources are exactly the drifts worth
     * flagging. One partial-agg shuffle over the doc×dim explode;
     * everything after is dimension-scale. */
-  def corpusDrift(spark: SparkSession, dir: String,
-                  driftPpm: Long = 20000L): DataFrame = {
+  def corpusDrift(spark: SparkSession, dir: String): DataFrame = {
     val tagged = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"))
       .withColumn("batch", pmod(col("doc_id"), lit(2L)))
@@ -319,12 +345,12 @@ object Corpus {
         sum(when(col("batch") === 1L, col("ppm")).otherwise(0L)).as("new_ppm"))
       .withColumn("delta_ppm", col("new_ppm") - col("old_ppm"))
       .withColumn("drifted",
-        (abs(col("delta_ppm")) >= driftPpm).cast("long"))
+        (abs(col("delta_ppm")) >= DriftPpm).cast("long"))
       .select(col("dim"), col("value"), col("old_n"), col("new_n"),
         col("old_ppm"), col("new_ppm"), col("delta_ppm"), col("drifted"))
   }
 
-  def corpusDriftSql(driftPpm: Long = 20000L): String =
+  def corpusDriftSql(): String =
     s"""WITH tagged AS (
        |  SELECT doc_id % 2 AS batch, 'lang' AS dim, lang AS value
        |  FROM documents
@@ -351,7 +377,7 @@ object Corpus {
        |    - SUM(CASE WHEN batch = 0 THEN ppm ELSE 0 END) AS BIGINT)
        |    AS delta_ppm,
        |  CAST(CASE WHEN ABS(SUM(CASE WHEN batch = 1 THEN ppm ELSE 0 END)
-       |    - SUM(CASE WHEN batch = 0 THEN ppm ELSE 0 END)) >= $driftPpm
+       |    - SUM(CASE WHEN batch = 0 THEN ppm ELSE 0 END)) >= $DriftPpm
        |    THEN 1 ELSE 0 END AS BIGINT) AS drifted
        |FROM counted
        |GROUP BY 1, 2""".stripMargin
@@ -430,7 +456,7 @@ object Corpus {
     * Scale shape: C26's cell aggregation + the same 1-row totals
     * broadcast; the plan itself is pure per-cell arithmetic. */
   def mixEpochPlan(spark: SparkSession, dir: String,
-                   budgetX: Long = 4L): DataFrame = {
+                   budgetX: Long = MixBudgetX): DataFrame = {
     val mix = sourceMixWeights(spark, dir)
     val tot = mix.agg(sum(col("tokens")).as("tot"))
     mix.crossJoin(broadcast(tot))
@@ -455,13 +481,13 @@ object Corpus {
         col("full_epochs"), col("tail_ppm"), col("repeated"))
   }
 
-  def mixEpochPlanSql(budgetX: Long = 4L): String =
+  def mixEpochPlanSql(): String =
     s"""WITH mix AS (
        |${sourceMixWeightsSql.linesIterator.map("  " + _).mkString("\n")}
        |), tot AS (SELECT CAST(SUM(tokens) AS BIGINT) AS tot FROM mix),
        |plan AS (
        |  SELECT m.lang, m.source, m.tokens, m.target_ppm,
-       |    CAST((m.target_ppm * t.tot * $budgetX) // 1000000 AS BIGINT)
+       |    CAST((m.target_ppm * t.tot * $MixBudgetX) // 1000000 AS BIGINT)
        |      AS target_tokens
        |  FROM mix m CROSS JOIN tot t
        |)
@@ -491,7 +517,7 @@ object Corpus {
     * distributed top-k (orderBy+limit → TakeOrderedAndProject, the
     * C38 discipline) → rank re-derived over the ≤k survivors. */
   def ngramHeavyHitters(spark: SparkSession, dir: String,
-                        n: Int = 5, k: Int = 50): DataFrame = {
+                        n: Int = HeavyN, k: Int = HeavyK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     Text.docTokens(spark, dir)
       .select(col("doc_id"), col("toks"))
@@ -507,13 +533,13 @@ object Corpus {
         graft.util.Windows.bounded(col("n_docs").desc, col("gram"))).cast("long"))
   }
 
-  def ngramHeavyHittersSql(n: Int = 5, k: Int = 50): String = {
-    val terms = (0 until n).map(i => s"toks[i + $i]").mkString(" || ' ' || ")
+  def ngramHeavyHittersSql(): String = {
+    val terms = (0 until HeavyN).map(i => s"toks[i + $i]").mkString(" || ' ' || ")
     s"""WITH t AS (
        |  SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents
        |), g AS (
-       |  SELECT doc_id, list_distinct(CASE WHEN len(toks) >= $n
-       |    THEN list_transform(range(1, len(toks) - ${n - 2}),
+       |  SELECT doc_id, list_distinct(CASE WHEN len(toks) >= $HeavyN
+       |    THEN list_transform(range(1, len(toks) - ${HeavyN - 2}),
        |         i -> $terms)
        |    ELSE [] END) AS grams
        |  FROM t
@@ -526,7 +552,7 @@ object Corpus {
        |SELECT gram, n_docs,
        |  CAST(ROW_NUMBER() OVER (ORDER BY n_docs DESC, gram) AS BIGINT)
        |    AS rank
-       |FROM c ORDER BY n_docs DESC, gram LIMIT $k""".stripMargin
+       |FROM c ORDER BY n_docs DESC, gram LIMIT $HeavyK""".stripMargin
   }
 
   // ---------------------------------------------------------------- C47
@@ -609,8 +635,8 @@ object Corpus {
     * bounded, winner + stats ride 1-row broadcasts. A full BPE train
     * iterates this round; each round re-aggregates only the vocab
     * table, so the corpus is read once regardless of merge count. */
-  def bpePairMerge(spark: SparkSession, dir: String, topK: Int = 20): DataFrame =
-    bpePairMergeFrom(Text.docTokens(spark, dir), topK)
+  def bpePairMerge(spark: SparkSession, dir: String): DataFrame =
+    bpePairMergeFrom(Text.docTokens(spark, dir))
 
   /** Word-frequency table of ≥2-char words (the BPE training corpus
     * view shared by C41 and C65). */
@@ -637,7 +663,7 @@ object Corpus {
       .filter(col("rnk") <= topK)
   }
 
-  private[graft] def bpePairMergeFrom(docs: DataFrame, topK: Int = 20): DataFrame = {
+  private[graft] def bpePairMergeFrom(docs: DataFrame, topK: Int = BpeTopK): DataFrame = {
     val words = bpeWords(docs)
     val ranked = rankedPairs(words, topK)
     val winner = ranked.filter(col("rnk") === 1L)
@@ -658,7 +684,7 @@ object Corpus {
           .as("symbols_after"))
   }
 
-  def bpePairMergeSql(topK: Int = 20): String =
+  def bpePairMergeSql(): String =
     s"""WITH words AS (
        |  SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (
        |    SELECT unnest(${graft.ops.Text.tokensSql("text")}) AS w FROM documents)
@@ -676,7 +702,7 @@ object Corpus {
        |      CAST(ROW_NUMBER() OVER (ORDER BY pair_count DESC, left_sym,
        |        right_sym) AS BIGINT) AS rnk
        |    FROM pc)
-       |  WHERE rnk <= $topK
+       |  WHERE rnk <= $BpeTopK
        |), winner AS (
        |  SELECT left_sym || right_sym AS ms FROM ranked WHERE rnk = 1
        |), stats AS (
@@ -727,10 +753,10 @@ object Corpus {
     * corpus is read once for word counts — the shuffle is
     * |vocab|-bounded), the merge table rides a 1-row broadcast, and
     * the per-word fold is nMerges string rewrites inside Catalyst. */
-  def bpeSegment(spark: SparkSession, dir: String, nMerges: Int = 8): DataFrame =
+  def bpeSegment(spark: SparkSession, dir: String, nMerges: Int = BpeMerges): DataFrame =
     bpeSegmentFrom(Text.docTokens(spark, dir), nMerges)
 
-  private[graft] def bpeSegmentFrom(docs: DataFrame, nMerges: Int = 8): DataFrame = {
+  private[graft] def bpeSegmentFrom(docs: DataFrame, nMerges: Int = BpeMerges): DataFrame = {
     val words = bpeWords(docs)
     val merges = rankedPairs(words, nMerges)
       .agg(sort_array(collect_list(struct(col("rnk"),
@@ -751,7 +777,7 @@ object Corpus {
         expr("trim(replace(rep, chr(31), ' '))").as("pieces"))
   }
 
-  def bpeSegmentSql(nMerges: Int = 8): String =
+  def bpeSegmentSql(): String =
     s"""WITH RECURSIVE words AS (
        |  SELECT w, CAST(COUNT(*) AS BIGINT) AS freq FROM (
        |    SELECT unnest(${graft.ops.Text.tokensSql("text")}) AS w FROM documents)
@@ -769,7 +795,7 @@ object Corpus {
        |      CAST(ROW_NUMBER() OVER (ORDER BY pair_count DESC, left_sym,
        |        right_sym) AS BIGINT) AS rnk
        |    FROM pc)
-       |  WHERE rnk <= $nMerges
+       |  WHERE rnk <= $BpeMerges
        |), seg AS (
        |  SELECT w, freq, CAST(0 AS BIGINT) AS rnk,
        |    chr(31) || array_to_string(
@@ -804,9 +830,8 @@ object Corpus {
     * for per-source word counts, a |vocab|-bounded shuffle), then a
     * vocab-scale equi-join and a per-source reduce — at any corpus
     * size the join never exceeds sources × vocab. */
-  def tokenizerFertility(spark: SparkSession, dir: String,
-                         nMerges: Int = 8): DataFrame = {
-    val seg = bpeSegment(spark, dir, nMerges)
+  def tokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
+    val seg = bpeSegment(spark, dir)
       .select(col("word"), col("n_pieces"), col("n_chars"))
     val perSrc = Text.docTokens(spark, dir)
       .select(col("source"), explode(col("toks")).as("word"))
@@ -829,8 +854,8 @@ object Corpus {
           .as("single_piece_ppm"))
   }
 
-  def tokenizerFertilitySql(nMerges: Int = 8): String = {
-    val seg = bpeSegmentSql(nMerges)
+  def tokenizerFertilitySql(): String = {
+    val seg = bpeSegmentSql()
       .linesIterator.map("    " + _).mkString("\n")
     s"""WITH seg AS (
        |$seg
@@ -867,8 +892,8 @@ object Corpus {
     * (user, session) aggregation; the collected list is bounded by
     * the session, and the rendered transcript by `maxTurns`. */
   def sessionTranscripts(spark: SparkSession, dir: String,
-                         gapUs: Long = 1800000000L,
-                         maxTurns: Int = 8): DataFrame = {
+                         gapUs: Long = SessionGapUs,
+                         maxTurns: Int = MaxTurns): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
     Tables.events(spark, dir)
@@ -898,8 +923,7 @@ object Corpus {
         col("transcript"))
   }
 
-  def sessionTranscriptsSql(gapUs: Long = 1800000000L,
-                            maxTurns: Int = 8): String =
+  def sessionTranscriptsSql(): String =
     s"""WITH ev AS (
        |  SELECT user_id, event_id, event_type,
        |    CAST(epoch_us(ts) AS BIGINT) AS ts_us
@@ -907,7 +931,7 @@ object Corpus {
        |), brk AS (
        |  SELECT user_id, event_id, event_type, ts_us,
        |    CASE WHEN LAG(ts_us) OVER w IS NULL
-       |      OR ts_us - LAG(ts_us) OVER w > $gapUs THEN 1 ELSE 0 END AS brk
+       |      OR ts_us - LAG(ts_us) OVER w > $SessionGapUs THEN 1 ELSE 0 END AS brk
        |  FROM ev
        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
        |), ses AS (
@@ -925,11 +949,11 @@ object Corpus {
        |)
        |SELECT user_id, session_seq,
        |  CAST(len(turns) AS BIGINT) AS n_turns,
-       |  CAST(LEAST(len(turns), $maxTurns) AS BIGINT) AS kept_turns,
-       |  CAST(len(turns) > $maxTurns AS BIGINT) AS truncated,
+       |  CAST(LEAST(len(turns), $MaxTurns) AS BIGINT) AS kept_turns,
+       |  CAST(len(turns) > $MaxTurns AS BIGINT) AS truncated,
        |  CAST(turns[len(turns)].ts_us - turns[1].ts_us AS BIGINT)
        |    AS duration_us,
-       |  array_to_string(list_transform(turns[1:$maxTurns],
+       |  array_to_string(list_transform(turns[1:$MaxTurns],
        |    t -> t.event_type || '@' ||
        |      CAST((t.ts_us - turns[1].ts_us) // 1000000 AS VARCHAR)),
        |    ' | ') AS transcript
@@ -954,10 +978,9 @@ object Corpus {
     * each shard stream's final window shows its real tail fill. Per-
     * window ordinals ride the same (lang, shard) keyed shuffle C22
     * already runs; nothing global. */
-  def packAttentionSpans(spark: SparkSession, dir: String, ctx: Long = 2048L,
-                         nShards: Int = 8): DataFrame = {
+  def packAttentionSpans(spark: SparkSession, dir: String, ctx: Long = PackCtx): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val packed = seqPack(spark, dir, ctx, nShards)
+    val packed = seqPack(spark, dir, ctx)
       .withColumn("g", col("bin_id") * ctx + col("bin_offset"))
     val segs = packed
       .withColumn("win", explode(expr(
@@ -984,10 +1007,9 @@ object Corpus {
         col("is_head"), col("is_tail"), col("fill_ppm"))
   }
 
-  def packAttentionSpansSql(ctx: Long = 2048L, nShards: Int = 8,
-                            salt: String = "graft-pack-v1:"): String = {
+  def packAttentionSpansSql(): String = {
     val shard = graft.functions.Portable
-      .bucketSql(s"'$salt' || CAST(doc_id AS VARCHAR)", nShards)
+      .bucketSql(s"'$PackSalt' || CAST(doc_id AS VARCHAR)", PackShards)
     s"""WITH base AS (
        |  SELECT doc_id, lang, $shard AS shard,
        |    CAST(len(${graft.ops.Text.tokensSql("text")}) AS BIGINT)
@@ -1004,14 +1026,14 @@ object Corpus {
        |  SELECT lang, shard, doc_id, n_tokens, g,
        |    CAST(w.win AS BIGINT) AS win
        |  FROM packed,
-       |    UNNEST(GENERATE_SERIES(g // $ctx, (g + n_tokens - 1) // $ctx))
+       |    UNNEST(GENERATE_SERIES(g // $PackCtx, (g + n_tokens - 1) // $PackCtx))
        |      AS w(win)
        |), local AS (
        |  SELECT lang, shard, win, doc_id,
-       |    GREATEST(g, win * $ctx) - win * $ctx AS seg_start,
-       |    LEAST(g + n_tokens, (win + 1) * $ctx) - win * $ctx AS seg_end,
-       |    CAST(win = g // $ctx AS BIGINT) AS is_head,
-       |    CAST(win = (g + n_tokens - 1) // $ctx AS BIGINT) AS is_tail
+       |    GREATEST(g, win * $PackCtx) - win * $PackCtx AS seg_start,
+       |    LEAST(g + n_tokens, (win + 1) * $PackCtx) - win * $PackCtx AS seg_end,
+       |    CAST(win = g // $PackCtx AS BIGINT) AS is_head,
+       |    CAST(win = (g + n_tokens - 1) // $PackCtx AS BIGINT) AS is_tail
        |  FROM segs
        |)
        |SELECT lang, shard, win AS bin_id,
@@ -1022,7 +1044,7 @@ object Corpus {
        |  CAST(seg_end - seg_start AS BIGINT) AS seg_tokens,
        |  is_head, is_tail,
        |  CAST(SUM(seg_end - seg_start) OVER (PARTITION BY lang, shard, win)
-       |    * 1000000 // $ctx AS BIGINT) AS fill_ppm
+       |    * 1000000 // $PackCtx AS BIGINT) AS fill_ppm
        |FROM local""".stripMargin
   }
 
@@ -1033,26 +1055,25 @@ object Corpus {
     * length instead of arrival order cuts the pad-token waste that
     * otherwise dominates step cost — the dynamic-batching /
     * bucketed-sampler idiom): documents bucket by token length
-    * (`lenDiv`-token granularity), shard by hash (production batches
-    * PER WORKER — `nShards` scales with the fleet, which is exactly
+    * ([[LenDiv]]-token granularity), shard by hash (production batches
+    * PER WORKER — [[LenShards]] scales with the fleet, which is exactly
     * why no per-bucket global order exists at 100 TB), and within
     * (bucket, shard) a deterministic (hash-priority, id) order packs
-    * consecutive runs of `batchSize`. Output is the BATCH ledger: per
+    * consecutive runs of [[LenBatchSize]]. Output is the BATCH ledger: per
     * batch its size, length band, token mass, and pad-waste ppm
     * ((max·n − Σlen)/(max·n) — the number the loader owner watches;
     * tight buckets ⇒ low waste regardless of batch order). The rank
     * window is keyed by (bucket, shard) — cardinality grows with the
     * fleet, partitions shrink as shards scale: the honest distributed
     * shape. */
-  def lengthBatching(spark: SparkSession, dir: String, lenDiv: Int = 16,
-                     nShards: Int = 8, batchSize: Int = 4): DataFrame = {
+  def lengthBatching(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val base = Text.docTokens(spark, dir)
       .select(col("doc_id"), size(col("toks")).cast("long").as("len"))
-      .withColumn("bucket", call_function("div", col("len"), lit(lenDiv.toLong)))
+      .withColumn("bucket", call_function("div", col("len"), lit(LenDiv.toLong)))
       .withColumn("shard", pmod(graft.functions.Portable.hash60(
         concat(lit("graft-batch-v1:"), col("doc_id").cast("string"))),
-        lit(nShards.toLong)))
+        lit(LenShards.toLong)))
       .withColumn("prio", graft.functions.Portable.hash60(
         concat(lit("graft-order-v1:"), col("doc_id").cast("string"))))
     val w = Window.partitionBy(col("bucket"), col("shard"))
@@ -1060,7 +1081,7 @@ object Corpus {
     base
       .withColumn("batch_no",
         call_function("div", row_number().over(w).cast("long") - 1L,
-          lit(batchSize.toLong)))
+          lit(LenBatchSize.toLong)))
       .groupBy(col("bucket"), col("shard"), col("batch_no"))
       .agg(count(lit(1)).as("n_docs"),
         min(col("len")).as("min_len"), max(col("len")).as("max_len"),
@@ -1071,8 +1092,7 @@ object Corpus {
         col("max_len") * col("n_docs")))
   }
 
-  def lengthBatchingSql(lenDiv: Int = 16, nShards: Int = 8,
-                        batchSize: Int = 4): String = {
+  def lengthBatchingSql(): String = {
     val shard = graft.functions.Portable
       .hash60Sql("'graft-batch-v1:' || CAST(doc_id AS VARCHAR)")
     val prio = graft.functions.Portable
@@ -1081,14 +1101,14 @@ object Corpus {
        |  SELECT doc_id,
        |    CAST(len(${graft.ops.Text.tokensSql("text")}) AS BIGINT) AS len,
        |    CAST(len(${graft.ops.Text.tokensSql("text")}) AS BIGINT)
-       |      // $lenDiv AS bucket,
-       |    $shard % $nShards AS shard,
+       |      // $LenDiv AS bucket,
+       |    $shard % $LenShards AS shard,
        |    $prio AS prio
        |  FROM documents
        |), ranked AS (
        |  SELECT bucket, shard, len,
        |    (ROW_NUMBER() OVER (PARTITION BY bucket, shard
-       |      ORDER BY prio, doc_id) - 1) // $batchSize AS batch_no
+       |      ORDER BY prio, doc_id) - 1) // $LenBatchSize AS batch_no
        |  FROM base
        |)
        |SELECT bucket, shard, CAST(batch_no AS BIGINT) AS batch_no,
@@ -1335,9 +1355,7 @@ object Corpus {
     * corpus), two vocab-scale joins onto the unigram counts, and the
     * 1-row token total broadcast. Nothing corpus-quadratic; the
     * candidate frame is bounded by distinct bigrams with count ≥ δ. */
-  def corpusPhrases(spark: SparkSession, dir: String,
-                    minCount: Long = 5L,
-                    tauPpm: Long = 1500000L): DataFrame = {
+  def corpusPhrases(spark: SparkSession, dir: String): DataFrame = {
     val toks = Text.docTokens(spark, dir)
       .select(col("toks"))
       // three consumers (unigram agg, token total, pair agg) —
@@ -1352,7 +1370,7 @@ object Corpus {
              i -> concat(toks[i], ' ', toks[i+1]))
         ELSE array() END""")).as("pg"))
       .groupBy(col("pg")).agg(count(lit(1)).as("n_pair"))
-      .filter(col("n_pair") >= minCount)
+      .filter(col("n_pair") >= PhraseMinCount)
       .withColumn("w1", element_at(split(col("pg"), " "), 1))
       .withColumn("w2", element_at(split(col("pg"), " "), 2))
     pairs
@@ -1361,16 +1379,15 @@ object Corpus {
       .crossJoin(broadcast(n))
       .withColumn("score_ppm",
         call_function("div",
-          (col("n_pair") - lit(minCount)).cast("decimal(38,0)")
+          (col("n_pair") - lit(PhraseMinCount)).cast("decimal(38,0)")
             * col("n_total") * lit(1000000L),
           col("n_w1").cast("decimal(38,0)") * col("n_w2")).cast("long"))
-      .withColumn("phrase", (col("score_ppm") >= tauPpm).cast("long"))
+      .withColumn("phrase", (col("score_ppm") >= PhraseTauPpm).cast("long"))
       .select(col("w1"), col("w2"), col("n_pair"), col("n_w1"),
         col("n_w2"), col("score_ppm"), col("phrase"))
   }
 
-  def corpusPhrasesSql(minCount: Long = 5L,
-                       tauPpm: Long = 1500000L): String =
+  def corpusPhrasesSql(): String =
     s"""WITH d AS (
        |  SELECT ${Text.tokensSql("text")} AS toks FROM documents
        |), uni AS (
@@ -1388,14 +1405,14 @@ object Corpus {
        |      ELSE [] END) AS pg
        |    FROM d)
        |  GROUP BY 1
-       |  HAVING COUNT(*) >= $minCount
+       |  HAVING COUNT(*) >= $PhraseMinCount
        |)
        |SELECT p.w1, p.w2, p.n_pair, u1.n_w AS n_w1, u2.n_w AS n_w2,
-       |  CAST(CAST((p.n_pair - $minCount) AS HUGEINT) * n.n_total
+       |  CAST(CAST((p.n_pair - $PhraseMinCount) AS HUGEINT) * n.n_total
        |    * 1000000 // (CAST(u1.n_w AS HUGEINT) * u2.n_w) AS BIGINT)
        |    AS score_ppm,
-       |  CAST(CAST(CAST((p.n_pair - $minCount) AS HUGEINT) * n.n_total
-       |    * 1000000 // (CAST(u1.n_w AS HUGEINT) * u2.n_w) >= $tauPpm
+       |  CAST(CAST(CAST((p.n_pair - $PhraseMinCount) AS HUGEINT) * n.n_total
+       |    * 1000000 // (CAST(u1.n_w AS HUGEINT) * u2.n_w) >= $PhraseTauPpm
        |    AS INT) AS BIGINT) AS phrase
        |FROM pairs p
        |JOIN uni u1 ON p.w1 = u1.w

@@ -24,12 +24,29 @@ import graft.functions.Portable
   */
 object Curation {
 
+  /** [[connectedComponents]]' round cap. */
+  val MaxCcRounds = 20
+  /** [[stratifiedSample]]'s salt. */
+  val StratSalt = "graft-strat-v1:"
+  /** [[sourceCap]]'s per-source cap and its salt fan-out. */
+  val SourceCap = 10
+  val SourceCapSalts = 4
+  /** [[qualityFilterBank]]'s thresholds. */
+  val MinTokens = 20L
+  val MaxTokens = 100000L
+  val MinStopPpm = 20000L
+  val MaxDupGramPpm = 20000L
+  val MaxTopGramPpm = 100000L
+  /** [[qualityDsir]]'s target source and hash buckets. */
+  val DsirTarget = "src0"
+  val DsirBuckets = 1024
+
   // ---------------------------------------------------------------- C18
 
   /** Near-dup edges that seed the dedup graph: exact-fingerprint
     * cliques (star edges to the group min) unioned with verified
     * n-gram Jaccard near-dup pairs. Oriented (u > v). */
-  private def dupEdges(spark: SparkSession, dir: String, tau: Double): DataFrame = {
+  private def dupEdges(spark: SparkSession, dir: String): DataFrame = {
     val exact = Tables.documents(spark, dir)
       .select(md5(Text.norm(col("text")).cast("binary")).as("fp"), col("doc_id"))
       .withColumn("root", min(col("doc_id")).over(Window.partitionBy("fp")))
@@ -38,7 +55,7 @@ object Curation {
     // fuzzy edges come from the memoized C4 pair ledger — C18, C71 and
     // C78 all consume the same verified edge set; re-running the PPJoin
     // candidate generation per consumer tripled the corpus-scale work
-    val fuzzy = Dedup.ngramPairsCached(spark, dir, tau)
+    val fuzzy = Dedup.ngramPairsCached(spark, dir)
       .select(col("doc_b").as("u"), col("doc_a").as("v"))
     exact.union(fuzzy)
   }
@@ -72,7 +89,7 @@ object Curation {
     * large-star/small-star (public MapReduce-CC algorithm): converges
     * to a star forest in O(log n) rounds. Returns (node, root) for
     * every non-root node that appears in an edge. */
-  private[graft] def connectedComponents(edges0: DataFrame, maxRounds: Int = 20): DataFrame = {
+  private[graft] def connectedComponents(edges0: DataFrame): DataFrame = {
     var edges = edges0.select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v")).distinct().localCheckpoint()
@@ -87,7 +104,7 @@ object Curation {
     var prev = sig(edges)
     var round = 0
     var converged = false
-    while (round < maxRounds && !converged) {
+    while (round < MaxCcRounds && !converged) {
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val cur = sig(next)
       // the checkpoint is eager: the round's input is scratch now
@@ -103,7 +120,7 @@ object Curation {
     // pipeline must see, not paper over
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxRounds " +
+        s"connectedComponents did not converge within $MaxCcRounds " +
           "large-star/small-star rounds (graph diameter > 2^maxRounds); " +
           "raise maxRounds or investigate the edge set")
     edges
@@ -120,9 +137,9 @@ object Curation {
     * C24, C49 and C78 consume this frame, and the CC loop
     * checkpoints every round, so two builds are distinct plans the
     * CacheManager cannot share. */
-  def dedupClusters(spark: SparkSession, dir: String, tau: Double = 0.5): DataFrame =
-    Tables.checkpointed(spark, "clusters", dir, "documents", tau) {
-      val cc = connectedComponents(dupEdges(spark, dir, tau))
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    Tables.checkpointed(spark, "clusters", dir, "documents", ()) {
+      val cc = connectedComponents(dupEdges(spark, dir))
       val assign = cc.select(col("u").as("doc_id"), col("v").as("cluster_id"))
       val clusters = Tables.documents(spark, dir).select(col("doc_id"))
         .join(assign, Seq("doc_id"), "left")
@@ -136,7 +153,7 @@ object Curation {
       clusters
     }
 
-  def dedupClustersSql(tau: Double = 0.5): String =
+  def dedupClustersSql(): String =
     s"""WITH RECURSIVE fp AS (
        |  SELECT doc_id, md5(${Text.normSql("text")}) AS fp FROM documents
        |), exact_e AS (
@@ -144,7 +161,7 @@ object Curation {
        |    SELECT doc_id, MIN(doc_id) OVER (PARTITION BY fp) AS root FROM fp)
        |  WHERE doc_id <> root
        |), fuzzy_e AS (
-       |  SELECT doc_b AS u, doc_a AS v FROM (${Dedup.ngramJaccardSql(tau)})
+       |  SELECT doc_b AS u, doc_a AS v FROM (${Dedup.ngramJaccardSql()})
        |), edges AS (
        |  SELECT u, v FROM exact_e UNION SELECT u, v FROM fuzzy_e
        |  UNION SELECT v, u FROM exact_e UNION SELECT v, u FROM fuzzy_e
@@ -175,9 +192,8 @@ object Curation {
     * the corpus; hot clusters are exactly-duplicated boilerplate and
     * stay far below a partition). `why` makes the decision auditable:
     * singleton / best_quality / dominated. */
-  def dedupKeepBest(spark: SparkSession, dir: String,
-                    tau: Double = 0.5): DataFrame = {
-    val clusters = dedupClusters(spark, dir, tau)
+  def dedupKeepBest(spark: SparkSession, dir: String): DataFrame = {
+    val clusters = dedupClusters(spark, dir)
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
     val scores = TextAnalysis.qualityModelFilter(spark, dir)
       .select(col("doc_id"), col("score"))
@@ -194,8 +210,8 @@ object Curation {
         col("score"), col("keep"), col("why"))
   }
 
-  def dedupKeepBestSql(tau: Double = 0.5): String = {
-    val cc = dedupClustersSql(tau).linesIterator.map("    " + _).mkString("\n")
+  def dedupKeepBestSql(): String = {
+    val cc = dedupClustersSql().linesIterator.map("    " + _).mkString("\n")
     val qm = TextAnalysis.qualityModelFilterSql()
       .linesIterator.map("    " + _).mkString("\n")
     s"""WITH clusters AS (
@@ -336,11 +352,11 @@ object Curation {
   }
 
   def stratifiedSample(spark: SparkSession, dir: String,
-                       salt: String = "graft-strat-v1:"): DataFrame =
+                       salt: String = StratSalt): DataFrame =
     stratifiedSampleFrom(Tables.documents(spark, dir), salt)
 
-  def stratifiedSampleSql(salt: String = "graft-strat-v1:"): String = {
-    val bucket = Portable.bucketSql(s"CONCAT('$salt', CAST(doc_id AS VARCHAR))", 1000000)
+  def stratifiedSampleSql(): String = {
+    val bucket = Portable.bucketSql(s"CONCAT('$StratSalt', CAST(doc_id AS VARCHAR))", 1000000)
     val rate = StratRates.foldRight(StratDefault.toString) {
       case ((l, r), acc) => s"CASE WHEN lang = '$l' THEN $r ELSE $acc END"
     }
@@ -462,9 +478,7 @@ object Curation {
     * aggregation), and the final join is doc-keyed equi — no new
     * shuffle shapes. */
   def qualityFilterBank(spark: SparkSession, dir: String,
-                        minTokens: Long = 20L, maxTokens: Long = 100000L,
-                        minStopPpm: Long = 20000L, maxDupGramPpm: Long = 20000L,
-                        maxTopGramPpm: Long = 100000L): DataFrame = {
+                        maxTopGramPpm: Long = MaxTopGramPpm): DataFrame = {
     val m = Text.docTokens(spark, dir)
       .select(col("doc_id"), col("toks"))
       .withColumn("n_tokens", size(col("toks")).cast("long"))
@@ -477,9 +491,9 @@ object Curation {
       .select(col("doc_id"), col("dup_gram_ppm"), col("top_gram_ppm"))
     m.join(rep, "doc_id")
       .withColumn("reason",
-        when(col("n_tokens") < minTokens || col("n_tokens") > maxTokens, "word_count")
-          .when(col("stop_ppm") < minStopPpm, "stopword")
-          .when(col("dup_gram_ppm") > maxDupGramPpm, "repetition")
+        when(col("n_tokens") < MinTokens || col("n_tokens") > MaxTokens, "word_count")
+          .when(col("stop_ppm") < MinStopPpm, "stopword")
+          .when(col("dup_gram_ppm") > MaxDupGramPpm, "repetition")
           .when(col("top_gram_ppm") > maxTopGramPpm, "top_gram")
           .otherwise("pass"))
       .withColumn("keep", when(col("reason") === "pass", 1L).otherwise(0L))
@@ -487,9 +501,7 @@ object Curation {
         col("dup_gram_ppm"), col("top_gram_ppm"), col("keep"), col("reason"))
   }
 
-  def qualityFilterBankSql(minTokens: Long = 20L, maxTokens: Long = 100000L,
-                           minStopPpm: Long = 20000L, maxDupGramPpm: Long = 20000L,
-                           maxTopGramPpm: Long = 100000L): String =
+  def qualityFilterBankSql(): String =
     s"""WITH m AS (
        |  SELECT doc_id,
        |    CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -503,10 +515,10 @@ object Curation {
        |), j AS (
        |  SELECT m.doc_id, m.n_tokens, m.stop_ppm, rep.dup_gram_ppm, rep.top_gram_ppm,
        |    CASE
-       |      WHEN m.n_tokens < $minTokens OR m.n_tokens > $maxTokens THEN 'word_count'
-       |      WHEN m.stop_ppm < $minStopPpm THEN 'stopword'
-       |      WHEN rep.dup_gram_ppm > $maxDupGramPpm THEN 'repetition'
-       |      WHEN rep.top_gram_ppm > $maxTopGramPpm THEN 'top_gram'
+       |      WHEN m.n_tokens < $MinTokens OR m.n_tokens > $MaxTokens THEN 'word_count'
+       |      WHEN m.stop_ppm < $MinStopPpm THEN 'stopword'
+       |      WHEN rep.dup_gram_ppm > $MaxDupGramPpm THEN 'repetition'
+       |      WHEN rep.top_gram_ppm > $MaxTopGramPpm THEN 'top_gram'
        |      ELSE 'pass' END AS reason
        |  FROM m JOIN rep ON m.doc_id = rep.doc_id
        |)
@@ -624,13 +636,13 @@ object Curation {
     * Source sizes ride a separate partial-agg + broadcast join, never
     * a full-partition window. */
   def sourceCap(spark: SparkSession, dir: String,
-                cap: Int = 10, salts: Int = 4): DataFrame = {
+                cap: Int = SourceCap): DataFrame = {
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         Portable.hash60(concat(lit("graft-cap-v1:"),
           col("doc_id").cast("string"))).as("prio"))
     val local = base
-      .withColumn("salt", pmod(col("doc_id"), lit(salts.toLong)))
+      .withColumn("salt", pmod(col("doc_id"), lit(SourceCapSalts.toLong)))
       .withColumn("lrn", row_number().over(Window
         .partitionBy(col("source"), col("salt"))
         .orderBy(col("prio"), col("doc_id"))))
@@ -649,7 +661,7 @@ object Curation {
         when(col("rn").isNotNull, 1L).otherwise(0L).as("kept"))
   }
 
-  def sourceCapSql(cap: Int = 10): String = {
+  def sourceCapSql(): String = {
     val prio = Portable.hash60Sql("'graft-cap-v1:' || CAST(doc_id AS VARCHAR)")
     s"""WITH base AS (
        |  SELECT doc_id, source, $prio AS prio FROM documents
@@ -663,9 +675,9 @@ object Curation {
        |  FROM base GROUP BY 1
        |)
        |SELECT r.doc_id, r.source, c.n_source_docs,
-       |  CAST(CASE WHEN r.rn <= $cap THEN r.rn ELSE -1 END AS BIGINT)
+       |  CAST(CASE WHEN r.rn <= $SourceCap THEN r.rn ELSE -1 END AS BIGINT)
        |    AS cap_rank,
-       |  CAST(CASE WHEN r.rn <= $cap THEN 1 ELSE 0 END AS BIGINT) AS kept
+       |  CAST(CASE WHEN r.rn <= $SourceCap THEN 1 ELSE 0 END AS BIGINT) AS kept
        |FROM ranked r JOIN counts c ON r.source = c.source""".stripMargin
   }
 
@@ -689,15 +701,14 @@ object Curation {
     * the number an eval owner reads before trusting a benchmark.
     * Plan: the C1/C4 candidate shapes unchanged + two doc-keyed
     * split joins + a 6-row aggregate — nothing new at scale. */
-  def splitLeakage(spark: SparkSession, dir: String,
-                   tau: Double = 0.5): DataFrame = {
+  def splitLeakage(spark: SparkSession, dir: String): DataFrame = {
     val spk = spark
     import spk.implicits._
     val split = Corpus.dataSplit(spark, dir)
       .select(col("doc_id"), col("split"))
     // distinct: an exactly-duplicated pair is both a fingerprint star
     // edge AND a Jaccard-1.0 pair — it must count once
-    val pairs = dupEdges(spark, dir, tau)
+    val pairs = dupEdges(spark, dir)
       .select(col("u"), col("v")).distinct()
     val labeled = pairs
       .join(split.select(col("doc_id").as("u"), col("split").as("su")), "u")
@@ -721,7 +732,7 @@ object Curation {
           .otherwise(lit(0L)).as("share_ppm"))
   }
 
-  def splitLeakageSql(tau: Double = 0.5): String = {
+  def splitLeakageSql(): String = {
     val gridRows = (for {
       a <- splitNames; b <- splitNames if a <= b
     } yield s"('$a', '$b')").mkString(", ")
@@ -734,7 +745,7 @@ object Curation {
        |    SELECT doc_id, MIN(doc_id) OVER (PARTITION BY fp) AS root FROM fp)
        |  WHERE doc_id <> root
        |), fuzzy_e AS (
-       |  SELECT doc_b AS u, doc_a AS v FROM (${Dedup.ngramJaccardSql(tau)})
+       |  SELECT doc_b AS u, doc_a AS v FROM (${Dedup.ngramJaccardSql()})
        |), pairs AS (
        |  SELECT u, v FROM exact_e UNION SELECT u, v FROM fuzzy_e
        |), labeled AS (
@@ -780,9 +791,8 @@ object Curation {
     * bounded by cluster size (hot clusters are exact-dup cliques and
     * read density 10⁶); one edge→cluster equi-join + one cluster
     * reduce over the memoized C18 assignment. */
-  def clusterChainAudit(spark: SparkSession, dir: String,
-                        tau: Double = 0.5): DataFrame = {
-    val clusters = dedupClusters(spark, dir, tau)
+  def clusterChainAudit(spark: SparkSession, dir: String): DataFrame = {
+    val clusters = dedupClusters(spark, dir)
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
       .filter(col("cluster_size") > 1L)
     // direct pairs: fingerprint cliques (all same-fp pairs are direct
@@ -793,7 +803,7 @@ object Curation {
     val exactPairs = fp.as("a").join(fp.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .select(col("b.doc_id").as("u"), col("a.doc_id").as("v"))
-    val fuzzyPairs = Dedup.ngramPairsCached(spark, dir, tau)
+    val fuzzyPairs = Dedup.ngramPairsCached(spark, dir)
       .select(col("doc_b").as("u"), col("doc_a").as("v"))
     chainAuditFromEdges(clusters,
       exactPairs.union(fuzzyPairs).distinct())
@@ -825,8 +835,8 @@ object Curation {
         (col("direct_ppm") < 1000000L).cast("long"))
   }
 
-  def clusterChainAuditSql(tau: Double = 0.5): String = {
-    val cc = dedupClustersSql(tau)
+  def clusterChainAuditSql(): String = {
+    val cc = dedupClustersSql()
       .linesIterator.map("    " + _).mkString("\n")
     s"""WITH cc AS (
        |$cc
@@ -839,7 +849,7 @@ object Curation {
        |  SELECT b.doc_id AS u, a.doc_id AS v
        |  FROM fp2 a JOIN fp2 b ON a.fp = b.fp AND a.doc_id < b.doc_id
        |), fuzzy_p AS (
-       |  SELECT doc_b AS u, doc_a AS v FROM (${Dedup.ngramJaccardSql(tau)})
+       |  SELECT doc_b AS u, doc_a AS v FROM (${Dedup.ngramJaccardSql()})
        |), direct AS (
        |  SELECT c.cluster_id, CAST(COUNT(*) AS BIGINT) AS n_direct_pairs
        |  FROM (SELECT u, v FROM exact_p UNION SELECT u, v FROM fuzzy_p) p
@@ -883,23 +893,19 @@ object Curation {
     * doc-keyed self-join → (f1, f2) partial agg; totals broadcast
     * back onto the literal grid — the matrix never exceeds
     * filters². */
-  def filterOverlap(spark: SparkSession, dir: String,
-                    minTokens: Long = 20L, maxTokens: Long = 100000L,
-                    minStopPpm: Long = 20000L, maxDupGramPpm: Long = 20000L,
-                    maxTopGramPpm: Long = 100000L): DataFrame = {
+  def filterOverlap(spark: SparkSession, dir: String): DataFrame = {
     val spk = spark
     import spk.implicits._
-    val kills = qualityFilterBank(spark, dir, minTokens, maxTokens,
-        minStopPpm, maxDupGramPpm, maxTopGramPpm)
+    val kills = qualityFilterBank(spark, dir)
       .select(col("doc_id"), explode(array(
         struct(lit("repetition").as("f"),
-          (col("dup_gram_ppm") > maxDupGramPpm).cast("long").as("k")),
+          (col("dup_gram_ppm") > MaxDupGramPpm).cast("long").as("k")),
         struct(lit("stopword").as("f"),
-          (col("stop_ppm") < minStopPpm).cast("long").as("k")),
+          (col("stop_ppm") < MinStopPpm).cast("long").as("k")),
         struct(lit("top_gram").as("f"),
-          (col("top_gram_ppm") > maxTopGramPpm).cast("long").as("k")),
+          (col("top_gram_ppm") > MaxTopGramPpm).cast("long").as("k")),
         struct(lit("word_count").as("f"),
-          (col("n_tokens") < minTokens || col("n_tokens") > maxTokens)
+          (col("n_tokens") < MinTokens || col("n_tokens") > MaxTokens)
             .cast("long").as("k")))).as("e"))
       .filter(col("e.k") === 1L)
       .select(col("doc_id"), col("e.f").as("f"))
@@ -931,11 +937,8 @@ object Curation {
       .withColumn("overlap_f2_ppm", ratio(col("n_both"), col("n_f2")))
   }
 
-  def filterOverlapSql(minTokens: Long = 20L, maxTokens: Long = 100000L,
-                       minStopPpm: Long = 20000L, maxDupGramPpm: Long = 20000L,
-                       maxTopGramPpm: Long = 100000L): String = {
-    val qf = qualityFilterBankSql(minTokens, maxTokens, minStopPpm,
-      maxDupGramPpm, maxTopGramPpm).linesIterator.map("    " + _)
+  def filterOverlapSql(): String = {
+    val qf = qualityFilterBankSql().linesIterator.map("    " + _)
       .mkString("\n")
     val gridRows = overlapFilters.combinations(2)
       .map { case Seq(a, b) => s"('$a', '$b')" }.mkString(", ")
@@ -945,11 +948,11 @@ object Curation {
        |  SELECT doc_id, e.f AS f FROM (
        |    SELECT doc_id, UNNEST([
        |      {'f': 'repetition',
-       |       'k': dup_gram_ppm > $maxDupGramPpm},
-       |      {'f': 'stopword', 'k': stop_ppm < $minStopPpm},
-       |      {'f': 'top_gram', 'k': top_gram_ppm > $maxTopGramPpm},
+       |       'k': dup_gram_ppm > $MaxDupGramPpm},
+       |      {'f': 'stopword', 'k': stop_ppm < $MinStopPpm},
+       |      {'f': 'top_gram', 'k': top_gram_ppm > $MaxTopGramPpm},
        |      {'f': 'word_count',
-       |       'k': n_tokens < $minTokens OR n_tokens > $maxTokens}]) AS e
+       |       'k': n_tokens < $MinTokens OR n_tokens > $MaxTokens}]) AS e
        |    FROM qf)
        |  WHERE e.k
        |), totals AS (
@@ -1006,8 +1009,8 @@ object Curation {
     * stream, one doc-keyed agg. Nothing quadratic, no vocab-sized
     * state — the hashed grid is what makes DSIR run at 100 TB. */
   def qualityDsir(spark: SparkSession, dir: String,
-                  targetSource: String = "src0",
-                  buckets: Int = 1024): DataFrame = {
+                  targetSource: String = DsirTarget,
+                  buckets: Int = DsirBuckets): DataFrame = {
     val b = buckets.toLong
     // unigrams + bigrams of the normalized text, hashed onto the grid
     val feats = Text.docTokens(spark, dir)
@@ -1046,14 +1049,13 @@ object Curation {
         col("mean_millibits"))
   }
 
-  def qualityDsirSql(targetSource: String = "src0",
-                     buckets: Int = 1024): String =
+  def qualityDsirSql(): String =
     s"""WITH d AS (
        |  SELECT doc_id, source, ${Text.tokensSql("text")} AS toks
        |  FROM documents
        |), feats AS (
        |  SELECT doc_id, source,
-       |    (${Portable.hash60Sql("g")} % $buckets) AS bkt
+       |    (${Portable.hash60Sql("g")} % $DsirBuckets) AS bkt
        |  FROM (
        |    SELECT doc_id, source, unnest(list_concat(toks,
        |      CASE WHEN len(toks) >= 2
@@ -1064,18 +1066,18 @@ object Curation {
        |), raw AS (SELECT bkt, COUNT(*) AS r FROM feats GROUP BY 1),
        |tgt AS (
        |  SELECT bkt, COUNT(*) AS t FROM feats
-       |  WHERE source = '$targetSource' GROUP BY 1
+       |  WHERE source = '$DsirTarget' GROUP BY 1
        |), grid AS (
        |  SELECT g.range AS bkt, COALESCE(raw.r, 0) AS r,
        |    COALESCE(tgt.t, 0) AS t
-       |  FROM range($buckets) g
+       |  FROM range($DsirBuckets) g
        |  LEFT JOIN raw ON g.range = raw.bkt
        |  LEFT JOIN tgt ON g.range = tgt.bkt
        |), totals AS (SELECT SUM(r) AS rn, SUM(t) AS tn FROM grid),
        |bits AS (
        |  SELECT bkt,
-       |    (length(bin((rn + $buckets) // (r + 1))) - 1)
-       |    - (length(bin((tn + $buckets) // (t + 1))) - 1) AS bits
+       |    (length(bin((rn + $DsirBuckets) // (r + 1))) - 1)
+       |    - (length(bin((tn + $DsirBuckets) // (t + 1))) - 1) AS bits
        |  FROM grid CROSS JOIN totals
        |)
        |SELECT f.doc_id, CAST(COUNT(*) AS BIGINT) AS n_feats,

@@ -17,6 +17,24 @@ import graft.util.Tables
   */
 object Dedup {
 
+  /** MinHash signature: permutations and LSH bands ([[minhashLsh]],
+    * [[dedupIncremental]], [[lshRecallAudit]] and the incremental stream). */
+  val Perms = 128
+  val Bands = 16
+  /** Jaccard threshold of every near-duplicate pair ([[ngramJaccard]],
+    * [[minhashLsh]], [[dedupIncremental]] and the curation passes built on
+    * them). */
+  val JaccardTau = 0.5
+  /** [[lshRecallAudit]]: sample size and the Jaccard floor. */
+  val AuditSampleTarget = 1200L
+  val AuditJFloor = 0.2
+  /** [[simhash]]'s near-duplicate Hamming radius. */
+  val SimhashMaxHamming = 8
+  /** [[dedupLines]]' line width, tokens. */
+  val LineWidth = 10
+  /** [[prefixSuffix]]'s prefix/suffix length. */
+  val AffixTokens = 8
+
   /** C1 — exact dedup on normalized text: one row per distinct
     * fingerprint with the survivor (min doc_id) and multiplicity. */
   def exact(spark: SparkSession, dir: String): DataFrame =
@@ -43,7 +61,7 @@ object Dedup {
     * the exact Jaccard, so the result is IDENTICAL to the naive
     * all-pairs definition (100% recall by the prefix lemma) and the
     * all-pairs DuckDB oracle checks it directly. */
-  def ngramJaccard(spark: SparkSession, dir: String, tau: Double = 0.5): DataFrame = {
+  def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val g = gramFrame(spark, dir)
     val ex = g.select(col("doc_id"), col("lang"), size(col("grams")).as("sz"),
@@ -56,7 +74,7 @@ object Dedup {
     // lossy for non-default τ.
     val prefix = ex.join(freq, Seq("lang", "gram"))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= col("sz") - ceil(lit(tau) * col("sz") - lit(1e-9)) + lit(1L))
+      .filter(col("rn") <= col("sz") - ceil(lit(JaccardTau) * col("sz") - lit(1e-9)) + lit(1L))
       .select(col("lang"), col("gram"), col("doc_id"), col("sz"), col("rn"))
     // two more lossless prunes on the inverted-index join (PPJoin):
     // - length filter: J ≥ τ forces min(|a|,|b|) ≥ τ·max(|a|,|b|);
@@ -69,13 +87,13 @@ object Dedup {
     // would otherwise reject an exactly-qualifying |a|=4,|b|=5 pair);
     // integer sz spacing means ε can never admit a truly failing pair.
     val eps = 1e-9
-    val overlapNeeded = ceil(lit(tau / (1 + tau)) * (col("a.sz") + col("b.sz")) - lit(eps))
+    val overlapNeeded = ceil(lit(JaccardTau / (1 + JaccardTau)) * (col("a.sz") + col("b.sz")) - lit(eps))
     val overlapBound = lit(1L) +
       least(col("a.sz") - col("a.rn"), col("b.sz") - col("b.rn"))
     val cand = prefix.as("a").join(prefix.as("b"), Seq("lang", "gram"))
       .filter(col("a.doc_id") < col("b.doc_id") &&
-        col("b.sz") * lit(tau) <= col("a.sz") + lit(eps) &&
-        col("a.sz") * lit(tau) <= col("b.sz") + lit(eps) &&
+        col("b.sz") * lit(JaccardTau) <= col("a.sz") + lit(eps) &&
+        col("a.sz") * lit(JaccardTau) <= col("b.sz") + lit(eps) &&
         overlapBound >= overlapNeeded)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
@@ -92,7 +110,7 @@ object Dedup {
       // bit-for-bit.
       .withColumn("jac_raw",
         col("inter") / (size(col("ga")) + size(col("gb")) - col("inter")))
-      .filter(col("jac_raw") >= tau)
+      .filter(col("jac_raw") >= JaccardTau)
       .select(col("doc_a"), col("doc_b"), round(col("jac_raw"), 4).as("jaccard"))
   }
 
@@ -109,7 +127,7 @@ object Dedup {
     * filter. (Only the prefix + length prunes are mirrored; the
     * positional prune is Spark-side-only — a candidate superset keeps
     * the oracle lossless.) */
-  def ngramJaccardSql(tau: Double = 0.5): String =
+  def ngramJaccardSql(): String =
     s"""WITH t AS (
        |  SELECT doc_id, lang, ${Text.tokensSql("text")} AS toks FROM documents
        |), g AS (
@@ -123,12 +141,12 @@ object Dedup {
        |  SELECT ex.lang, ex.gram, ex.doc_id, ex.sz
        |  FROM ex JOIN freq ON ex.lang = freq.lang AND ex.gram = freq.gram
        |  QUALIFY row_number() OVER (PARTITION BY ex.doc_id ORDER BY freq.df, ex.gram)
-       |    <= ex.sz - CEIL($tau * ex.sz - 1e-9) + 1
+       |    <= ex.sz - CEIL($JaccardTau * ex.sz - 1e-9) + 1
        |), cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM pref a JOIN pref b
        |    ON a.lang = b.lang AND a.gram = b.gram AND a.doc_id < b.doc_id
-       |  WHERE b.sz * $tau <= a.sz + 1e-9 AND a.sz * $tau <= b.sz + 1e-9
+       |  WHERE b.sz * $JaccardTau <= a.sz + 1e-9 AND a.sz * $JaccardTau <= b.sz + 1e-9
        |)
        |SELECT c.doc_a, c.doc_b,
        |  ROUND(len(list_intersect(a.grams, b.grams))::DOUBLE /
@@ -137,7 +155,7 @@ object Dedup {
        |JOIN gg a ON a.doc_id = c.doc_a
        |JOIN gg b ON b.doc_id = c.doc_b
        |WHERE len(list_intersect(a.grams, b.grams))::DOUBLE /
-       |    (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) >= $tau""".stripMargin
+       |    (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) >= $JaccardTau""".stripMargin
 
   /** MinHash permutation constants: universal hashing
     * `(a_p * h + b_p) mod P` over the Mersenne prime P = 2^31 - 1.
@@ -162,13 +180,12 @@ object Dedup {
     * gram arrays — candidates only, never a cross product. Signature
     * and banding are engine-portable, so a generated DuckDB oracle
     * checks the full pipeline ([[minhashLshSql]]). */
-  def minhashLsh(spark: SparkSession, dir: String,
-                 perms: Int = 128, bands: Int = 16, tau: Double = 0.5): DataFrame = {
+  def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     val docs = gramFrame(spark, dir)
     val banded = docs
       .select(col("doc_id"),
         posexplode(graft.functions.VectorExprs.minhashBands(col("grams"),
-          perms, bands)).as(Seq("band_id", "band_key")))
+          Perms, Bands)).as(Seq("band_id", "band_key")))
       .localCheckpoint()
     val cand = banded.as("x").join(banded.as("y"), Seq("band_id", "band_key"))
       .filter(col("x.doc_id") < col("y.doc_id"))
@@ -181,34 +198,41 @@ object Dedup {
       // J ≥ τ forces min(|a|,|b|) ≥ τ·max(|a|,|b|); ε covers τ values
       // not exactly representable as doubles (integer sizes mean ε can
       // never admit a truly failing pair)
-      .filter(size(col("gb")) * lit(tau) <= size(col("ga")) + lit(1e-9) &&
-        size(col("ga")) * lit(tau) <= size(col("gb")) + lit(1e-9))
+      .filter(size(col("gb")) * lit(JaccardTau) <= size(col("ga")) + lit(1e-9) &&
+        size(col("ga")) * lit(JaccardTau) <= size(col("gb")) + lit(1e-9))
       .withColumn("inter", size(array_intersect(col("ga"), col("gb"))).cast("double"))
       .withColumn("jaccard", round(
         col("inter") / (size(col("ga")) + size(col("gb")) - col("inter")), 4))
-      .filter(col("jaccard") >= tau)
+      .filter(col("jaccard") >= JaccardTau)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
+  }
+
+  /** The oracle's MinHash signature: one `MIN` column per permutation
+    * over the gram hashes `h`, then one band-key row per band over the
+    * signatures `s` — shared by every LSH oracle. */
+  private def minhashColsSql: String = (0 until Perms)
+    .map(p => s"MIN((h * ${permA(p)} + ${permB(p)}) % $MersenneP) AS m$p")
+    .mkString(",\n    ")
+
+  private def minhashBandsSql: String = {
+    val rows = Perms / Bands
+    (0 until Bands).map { b =>
+      val key = (0 until rows).map(r => s"m${b * rows + r}").mkString(", ',', ")
+      s"SELECT doc_id, $b AS band_id, CONCAT($key) AS band_key FROM s"
+    }.mkString("\n  UNION ALL\n  ")
   }
 
   /** DuckDB oracle reproducing [[minhashLsh]] exactly (same portable
     * gram hashes, permutations, band keys, and Jaccard verify). */
-  def minhashLshSql(perms: Int = 128, bands: Int = 16, tau: Double = 0.5): String = {
-    val rows = perms / bands
-    val minCols = (0 until perms)
-      .map(p => s"MIN((h * ${permA(p)} + ${permB(p)}) % $MersenneP) AS m$p")
-      .mkString(",\n    ")
-    val bandSelects = (0 until bands).map { b =>
-      val key = (0 until rows).map(r => s"m${b * rows + r}").mkString(", ',', ")
-      s"SELECT doc_id, $b AS band_id, CONCAT($key) AS band_key FROM s"
-    }.mkString("\n  UNION ALL\n  ")
+  def minhashLshSql(): String = {
     s"""WITH $gramFrameSql,
        |e AS (SELECT doc_id, unnest(grams) AS gram FROM gg),
        |h AS (SELECT doc_id, ${Portable.hash60Sql("gram")} % $MersenneP AS h FROM e),
        |s AS (SELECT doc_id,
-       |    $minCols
+       |    $minhashColsSql
        |  FROM h GROUP BY doc_id),
        |b AS (
-       |  $bandSelects
+       |  $minhashBandsSql
        |),
        |cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
        |  FROM b x JOIN b y ON x.band_id = y.band_id AND x.band_key = y.band_key
@@ -220,7 +244,7 @@ object Dedup {
        |  JOIN gg ga ON ga.doc_id = cand.doc_a
        |  JOIN gg gb ON gb.doc_id = cand.doc_b)
        |SELECT doc_a, doc_b, ROUND(inter / (la + lb - inter), 4) AS jaccard
-       |FROM j WHERE ROUND(inter / (la + lb - inter), 4) >= $tau""".stripMargin
+       |FROM j WHERE ROUND(inter / (la + lb - inter), 4) >= $JaccardTau""".stripMargin
   }
 
   // ---------------------------------------------------------------- C79
@@ -256,22 +280,18 @@ object Dedup {
     * moves the batch, not the corpus; the verify joins gram arrays for
     * candidates only. Signature computation stays the one-shuffle
     * map-side-combined C2 pass. */
-  def dedupIncremental(spark: SparkSession, dir: String,
-                       perms: Int = 128, bands: Int = 16,
-                       tau: Double = 0.5): DataFrame =
-    dedupIncrementalFrom(gramFrame(spark, dir), perms, bands, tau)
+  def dedupIncremental(spark: SparkSession, dir: String): DataFrame =
+    dedupIncrementalFrom(gramFrame(spark, dir))
 
   /** [[dedupIncremental]] over any (doc_id, grams) frame — the spec
     * drives it with a corpus containing exact cross-split duplicates
     * so the exact_dup arm (absent in the synthetic tables) is
     * exercised. */
-  private[graft] def dedupIncrementalFrom(docs: DataFrame,
-                                          perms: Int = 128, bands: Int = 16,
-                                          tau: Double = 0.5): DataFrame = {
+  private[graft] def dedupIncrementalFrom(docs: DataFrame): DataFrame = {
     val banded = docs
       .select(col("doc_id"),
         posexplode(graft.functions.VectorExprs.minhashBands(col("grams"),
-          perms, bands)).as(Seq("band_id", "band_key")))
+          Perms, Bands)).as(Seq("band_id", "band_key")))
       .withColumn("is_batch", isIncrementalBatch(col("doc_id")))
     val probe = banded.filter(col("is_batch"))
       .select(col("doc_id").as("bid"), col("band_id"), col("band_key"))
@@ -303,21 +323,19 @@ object Dedup {
         coalesce(col("best_match"), lit(-1L)).as("best_match"),
         coalesce(col("best_j_ppm"), lit(-1L)).as("best_j_ppm"),
         when(col("is_exact") === 1L, "exact_dup")
-          .when(col("best_j_ppm") >= math.round(tau * 1e6), "near_dup")
+          .when(col("best_j_ppm") >= math.round(JaccardTau * 1e6), "near_dup")
           .otherwise("keep").as("verdict"))
   }
 
   /** The published band INDEX of the corpus side — (cid, band_id,
     * band_key); in production written once and appended nightly. The
     * C79s stream twin probes it as a STATIC frame. */
-  private[graft] def incrementalIndex(spark: SparkSession, dir: String,
-                                      perms: Int = 128,
-                                      bands: Int = 16): DataFrame =
+  private[graft] def incrementalIndex(spark: SparkSession, dir: String): DataFrame =
     gramFrame(spark, dir)
       .filter(!isIncrementalBatch(col("doc_id")))
       .select(col("doc_id").as("cid"),
         posexplode(graft.functions.VectorExprs.minhashBands(col("grams"),
-          perms, bands)).as(Seq("band_id", "band_key")))
+          Perms, Bands)).as(Seq("band_id", "band_key")))
 
   /** The corpus-side gram store (cid, gc) the verify step reads. */
   private[graft] def corpusGramStore(spark: SparkSession, dir: String): DataFrame =
@@ -325,25 +343,16 @@ object Dedup {
       .filter(!isIncrementalBatch(col("doc_id")))
       .select(col("doc_id").as("cid"), col("grams").as("gc"))
 
-  def dedupIncrementalSql(perms: Int = 128, bands: Int = 16,
-                          tau: Double = 0.5): String = {
-    val rows = perms / bands
-    val minCols = (0 until perms)
-      .map(p => s"MIN((h * ${permA(p)} + ${permB(p)}) % $MersenneP) AS m$p")
-      .mkString(",\n    ")
-    val bandSelects = (0 until bands).map { b =>
-      val key = (0 until rows).map(r => s"m${b * rows + r}").mkString(", ',', ")
-      s"SELECT doc_id, $b AS band_id, CONCAT($key) AS band_key FROM s"
-    }.mkString("\n  UNION ALL\n  ")
+  def dedupIncrementalSql(): String = {
     val isBatch = isIncrementalBatchSql("doc_id")
     s"""WITH $gramFrameSql,
        |e AS (SELECT doc_id, unnest(grams) AS gram FROM gg),
        |h AS (SELECT doc_id, ${Portable.hash60Sql("gram")} % $MersenneP AS h FROM e),
        |s AS (SELECT doc_id,
-       |    $minCols
+       |    $minhashColsSql
        |  FROM h GROUP BY doc_id),
        |b AS (
-       |  $bandSelects
+       |  $minhashBandsSql
        |),
        |probe AS (SELECT doc_id AS bid, band_id, band_key FROM b
        |  WHERE $isBatch),
@@ -373,7 +382,7 @@ object Dedup {
        |  CAST(COALESCE(best.cid, -1) AS BIGINT) AS best_match,
        |  CAST(COALESCE(best.j_ppm, -1) AS BIGINT) AS best_j_ppm,
        |  CASE WHEN best.is_exact = 1 THEN 'exact_dup'
-       |    WHEN best.j_ppm >= ${math.round(tau * 1e6)} THEN 'near_dup'
+       |    WHEN best.j_ppm >= ${math.round(JaccardTau * 1e6)} THEN 'near_dup'
        |    ELSE 'keep' END AS verdict
        |FROM (SELECT doc_id FROM gg WHERE $isBatch) d
        |LEFT JOIN best ON best.bid = d.doc_id""".stripMargin
@@ -390,7 +399,7 @@ object Dedup {
     * corpus scale that is only computable on a SAMPLE, so the audit
     * is declared sampled: a deterministic hash keeps 1/sampleMod of
     * documents, where sampleMod is DERIVED from the corpus count so
-    * the sampled block is a FIXED-SIZE target (~`sampleTarget` docs)
+    * the sampled block is a FIXED-SIZE target (~[[AuditSampleTarget]] docs)
     * regardless of SF — the quadratic truth join runs inside that
     * bounded block, so the audit's cost is a constant, not Θ(n²)
     * (the round-8 default sampleMod=2 grew quadratically with the
@@ -407,12 +416,8 @@ object Dedup {
     * ONCE in Scala and injected as the same literal into both
     * engines (no cross-engine pow drift). -1 sentinels for empty
     * bands. */
-  def lshRecallAudit(spark: SparkSession, dir: String,
-                     perms: Int = 128, bands: Int = 16,
-                     sampleTarget: Long = 1200L,
-                     jFloor: Double = 0.2): DataFrame =
-    lshRecallAuditFrom(gramFrame(spark, dir), perms, bands, sampleTarget,
-      jFloor)
+  def lshRecallAudit(spark: SparkSession, dir: String): DataFrame =
+    lshRecallAuditFrom(gramFrame(spark, dir))
 
   /** The audit's sampling modulus: ceil(n / target), floored at 1 —
     * keeps the expected sampled block at ~`target` docs so the
@@ -426,14 +431,11 @@ object Dedup {
     * drives it with a synthetic controlled-overlap corpus so the
     * partial-recall mid-bands are exercised, not just the exact-dup
     * top band real small-SF corpora produce. */
-  private[graft] def lshRecallAuditFrom(gramsFrame: DataFrame,
-                                        perms: Int = 128, bands: Int = 16,
-                                        sampleTarget: Long = 1200L,
-                                        jFloor: Double = 0.2): DataFrame = {
-    val rows = perms / bands
+  private[graft] def lshRecallAuditFrom(gramsFrame: DataFrame): DataFrame = {
+    val rows = Perms / Bands
     // One count against the (cache-backed) gram frame buys the bound:
     // the derived modulus pins the sampled block to ~sampleTarget docs.
-    val sampleMod = auditSampleMod(gramsFrame.count(), sampleTarget)
+    val sampleMod = auditSampleMod(gramsFrame.count(), AuditSampleTarget)
     val sampled = gramsFrame
       .filter(pmod(Portable.hash60(concat(lit("graft-audit-v1:"),
         col("doc_id").cast("string"))), lit(sampleMod)) === 0L)
@@ -464,9 +466,9 @@ object Dedup {
     // plans/r16/lsh_recall_audit_before.txt line 81).
     val truth = a.join(b, col("doc_a") < col("doc_b") &&
         least(col("sa"), col("sb")).cast("double") >=
-          lit(jFloor - 1e-4) * greatest(col("sa"), col("sb")) &&
+          lit(AuditJFloor - 1e-4) * greatest(col("sa"), col("sb")) &&
         round(interC / (size(col("ga")) + size(col("gb")) - interC), 4)
-          >= jFloor)
+          >= AuditJFloor)
       .withColumn("inter", interC)
       .withColumn("jaccard", round(col("inter") /
         (size(col("ga")) + size(col("gb")) - col("inter")), 4))
@@ -478,7 +480,7 @@ object Dedup {
     val banded = sampled
       .select(col("doc_id"),
         posexplode(graft.functions.VectorExprs.minhashBands(col("grams"),
-          perms, bands)).as(Seq("band_id", "band_key")))
+          Perms, Bands)).as(Seq("band_id", "band_key")))
       .localCheckpoint()
     val cand = banded.as("x").join(banded.as("y"), Seq("band_id", "band_key"))
       .filter(col("x.doc_id") < col("y.doc_id"))
@@ -487,8 +489,8 @@ object Dedup {
       .withColumn("hit", lit(1L))
     val spk = gramsFrame.sparkSession
     import spk.implicits._
-    val grid = ((jFloor * 10).toInt to 9).map { jb =>
-      (jb.toLong, expectedRecallPpm(jb, rows, bands))
+    val grid = ((AuditJFloor * 10).toInt to 9).map { jb =>
+      (jb.toLong, expectedRecallPpm(jb, rows, Bands))
     }.toDF("jband", "expected_recall_ppm")
     val measured = truth.join(cand, Seq("doc_a", "doc_b"), "left")
       .groupBy(col("jband"))
@@ -512,25 +514,16 @@ object Dedup {
     math.round((1.0 - math.pow(1.0 - math.pow(m, rows), bands)) * 1000000.0)
   }
 
-  def lshRecallAuditSql(perms: Int = 128, bands: Int = 16,
-                        sampleTarget: Long = 1200L,
-                        jFloor: Double = 0.2): String = {
-    val rows = perms / bands
-    val minCols = (0 until perms)
-      .map(p => s"MIN((h * ${permA(p)} + ${permB(p)}) % $MersenneP) AS m$p")
-      .mkString(",\n    ")
-    val bandSelects = (0 until bands).map { b =>
-      val key = (0 until rows).map(r => s"m${b * rows + r}").mkString(", ',', ")
-      s"SELECT doc_id, $b AS band_id, CONCAT($key) AS band_key FROM s"
-    }.mkString("\n  UNION ALL\n  ")
-    val gridRows = ((jFloor * 10).toInt to 9)
-      .map(jb => s"($jb, ${expectedRecallPpm(jb, rows, bands)})")
+  def lshRecallAuditSql(): String = {
+    val rows = Perms / Bands
+    val gridRows = ((AuditJFloor * 10).toInt to 9)
+      .map(jb => s"($jb, ${expectedRecallPpm(jb, rows, Bands)})")
       .mkString(", ")
     s"""WITH $gramFrameSql,
        |smod AS (
        |  -- ceil(n/target) floored at 1: the same modulus the Spark side
        |  -- derives on the driver, re-derived here from the same count
-       |  SELECT GREATEST(1, (COUNT(*) + ${sampleTarget - 1L}) // $sampleTarget)
+       |  SELECT GREATEST(1, (COUNT(*) + ${AuditSampleTarget - 1L}) // $AuditSampleTarget)
        |    AS m
        |  FROM gg
        |),
@@ -548,17 +541,17 @@ object Dedup {
        |        (len(a.grams) + len(b.grams)
        |          - len(list_intersect(a.grams, b.grams))), 4) AS jaccard
        |    FROM sampled a JOIN sampled b ON a.doc_id < b.doc_id)
-       |  WHERE jaccard >= $jFloor
+       |  WHERE jaccard >= $AuditJFloor
        |), e AS (
        |  SELECT s2.doc_id, unnest(s2.grams) AS gram FROM sampled s2
        |), h AS (
        |  SELECT doc_id, ${Portable.hash60Sql("gram")} % $MersenneP AS h FROM e
        |), s AS (
        |  SELECT doc_id,
-       |    $minCols
+       |    $minhashColsSql
        |  FROM h GROUP BY doc_id
        |), b AS (
-       |  $bandSelects
+       |  $minhashBandsSql
        |), cand AS (
        |  SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
        |  FROM b x JOIN b y ON x.band_id = y.band_id
@@ -622,10 +615,9 @@ object Dedup {
     * verify (r15 plan audit: split_leakage alone carried 25 parquet
     * scans / 75 exchanges, most of them this subtree).
     * `dedup_ngram_jaccard` itself recomputes from the parquet inputs. */
-  private[graft] def ngramPairsCached(spark: SparkSession, dir: String,
-                                      tau: Double): DataFrame =
-    Tables.checkpointed(spark, "pairs", dir, "documents", tau)(
-      ngramJaccard(spark, dir, tau).select(col("doc_a"), col("doc_b")).localCheckpoint())
+  private[graft] def ngramPairsCached(spark: SparkSession, dir: String): DataFrame =
+    Tables.checkpointed(spark, "pairs", dir, "documents", ())(
+      ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b")).localCheckpoint())
 
   /** (doc_id, gram) exploded pairs (cache-backed; explode drops empty
     * docs, so no pre-filter needed). */
@@ -654,12 +646,12 @@ object Dedup {
     * persisted so the band self-join computes it once.
     *
     * Banding: 4×15-bit bands — any pair within Hamming 3 agrees on ≥1
-    * band (pigeonhole); pairs up to `maxHamming` surface with the
+    * band (pigeonhole); pairs up to [[SimhashMaxHamming]] surface with the
     * standard LSH recall contract. Same-bucket pairs verify by exact
     * Hamming distance; candidate fan-out never leaves the join. The
     * hash is [[Portable.hash60]], so a DuckDB oracle reproduces the
     * signature bit-for-bit ([[simhashSql]]). */
-  def simhash(spark: SparkSession, dir: String, maxHamming: Int = 8): DataFrame = {
+  def simhash(spark: SparkSession, dir: String): DataFrame = {
     // row-local signature (graft.functions.SimhashValue): the gram
     // array is already per-document, so the 60 majority votes need no
     // explode + groupBy shuffle — the C2 fused-banding argument
@@ -680,13 +672,13 @@ object Dedup {
       .filter(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         bit_count(col("x.simhash").bitwiseXOR(col("y.simhash"))).cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= SimhashMaxHamming)
       .distinct()
   }
 
   /** DuckDB oracle reproducing [[simhash]] exactly (same md5-based
     * gram hashes, same majority votes, same banding). */
-  def simhashSql(maxHamming: Int = 8): String = {
+  def simhashSql(): String = {
     val h = Portable.hash60Sql("gram")
     val votes = (0 until 60)
       .map(i => s"SUM(CASE WHEN (h >> $i) & 1 = 1 THEN 1 ELSE -1 END) AS s$i")
@@ -708,7 +700,7 @@ object Dedup {
        |  CAST(bit_count(xor(x.simhash, y.simhash)) AS BIGINT) AS hamming
        |FROM b x JOIN b y ON x.band_id = y.band_id AND x.band_val = y.band_val
        |  AND x.doc_id < y.doc_id
-       |WHERE bit_count(xor(x.simhash, y.simhash)) <= $maxHamming""".stripMargin
+       |WHERE bit_count(xor(x.simhash, y.simhash)) <= $SimhashMaxHamming""".stripMargin
   }
 
   /** C27 — line-level dedup across the corpus (the CCNet / RefinedWeb
@@ -732,7 +724,7 @@ object Dedup {
     * Output per doc: line totals, kept/dropped counts, kept token
     * count, and the md5 fingerprint of the surviving text (kept lines
     * re-joined in order). */
-  def dedupLines(spark: SparkSession, dir: String, width: Int = 10): DataFrame = {
+  def dedupLines(spark: SparkSession, dir: String, width: Int = LineWidth): DataFrame = {
     // The first-occurrence agg and the probe join key on the line's
     // md5, not the line text — an 8-byte-ish key vs a width-token
     // string in every shuffle record (collisions: 128-bit md5,
@@ -780,12 +772,12 @@ object Dedup {
       .select(col("doc_id") +: col("line_no").cast("long").as("line_no") +:
         col("line") +: keep.map(col): _*)
 
-  def dedupLinesSql(width: Int = 10): String =
+  def dedupLinesSql(): String =
     s"""WITH t AS (
        |  SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents
        |), occ AS (
        |  SELECT doc_id,
-       |    CAST((pos - 1) // $width AS BIGINT) AS line_no,
+       |    CAST((pos - 1) // $LineWidth AS BIGINT) AS line_no,
        |    string_agg(w, ' ' ORDER BY pos) AS line
        |  FROM (SELECT doc_id, unnest(toks) AS w,
        |          generate_subscripts(toks, 1) AS pos FROM t)
@@ -861,18 +853,16 @@ object Dedup {
     * corpus-to-corpus join anywhere. The exact-verify semi-join
     * touches only the historical FINGERPRINT column (8-byte-ish md5
     * keys), and at scale would prune to bloom-positive rows first. */
-  def dedupBloom(spark: SparkSession, dir: String,
-                 mBitsOverride: Option[Long] = None,
-                 k: Int = BloomK): DataFrame = {
+  def dedupBloom(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.Portable
     val docs = Tables.documents(spark, dir)
-    val mBits = mBitsOverride.getOrElse(bloomBitsFor(docs.count()))
+    val mBits = bloomBitsFor(docs.count())
     val fps = docs
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), md5(Text.norm(col("text")).cast("binary")).as("fp"))
       .withColumn("incoming", (pmod(col("doc_id"), lit(3L)) === 0L).cast("long"))
     def positions(c: org.apache.spark.sql.Column) =
-      array((0 until k).map(i =>
+      array((0 until BloomK).map(i =>
         pmod(Portable.hash60(concat(lit(s"bloom$i:"), c)), lit(mBits))): _*)
     val bitmap = fps.filter(col("incoming") === 0L)
       .select(explode(positions(col("fp"))).as("pos"))
@@ -891,7 +881,7 @@ object Dedup {
           .cast("long"))
       .groupBy(col("doc_id"), col("fp"))
       .agg(sum(col("hit")).as("n_hits"))
-      .withColumn("bloom_positive", (col("n_hits") === k.toLong).cast("long"))
+      .withColumn("bloom_positive", (col("n_hits") === BloomK.toLong).cast("long"))
     tested
       .join(broadcast(histFps), Seq("fp"), "left")
       .withColumn("exact_dup", coalesce(col("exact_hit"), lit(0L)))
@@ -903,12 +893,12 @@ object Dedup {
         col("exact_dup"), col("verdict"))
   }
 
-  def dedupBloomSql(k: Int = BloomK): String = {
+  def dedupBloomSql(): String = {
     import graft.functions.Portable
     // the oracle derives the identical m from its own COUNT(*) ladder
     def posSql(i: Int) =
       s"(${Portable.hash60Sql(s"CONCAT('bloom$i:', fp)")} % (SELECT m FROM bm))"
-    val posList = (0 until k).map(posSql).mkString(", ")
+    val posList = (0 until BloomK).map(posSql).mkString(", ")
     s"""WITH bm AS (
        |  SELECT ${bloomBitsSql("COUNT(*)")} AS m FROM documents
        |), fps AS (
@@ -937,10 +927,10 @@ object Dedup {
        |  GROUP BY 1, 2
        |)
        |SELECT t.doc_id, t.n_hits,
-       |  CAST(t.n_hits = $k AS BIGINT) AS bloom_positive,
+       |  CAST(t.n_hits = $BloomK AS BIGINT) AS bloom_positive,
        |  CAST(COALESCE(h.exact_hit, 0) AS BIGINT) AS exact_dup,
        |  CASE WHEN COALESCE(h.exact_hit, 0) = 1 THEN 'dup'
-       |    WHEN t.n_hits = $k THEN 'false_positive'
+       |    WHEN t.n_hits = $BloomK THEN 'false_positive'
        |    ELSE 'new' END AS verdict
        |FROM tested t LEFT JOIN hist h ON h.fp = t.fp""".stripMargin
   }
@@ -961,18 +951,17 @@ object Dedup {
     * Scale: the key is row-local (slice + join of an array already on
     * the row), so the whole operator is one hash-keyed partial agg —
     * map-side combine, single shuffle on the 60-bit key. */
-  def prefixSuffix(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
-    prefixSuffixFrom(Text.docTokens(spark, dir), k)
+  def prefixSuffix(spark: SparkSession, dir: String): DataFrame =
+    prefixSuffixFrom(Text.docTokens(spark, dir))
 
-  private[graft] def prefixSuffixFrom(docsFrame: DataFrame,
-      k: Int = 8): DataFrame = {
+  private[graft] def prefixSuffixFrom(docsFrame: DataFrame): DataFrame = {
     val toks = Text.withToks(docsFrame)
       .select(col("doc_id"), col("toks"))
-      .filter(size(col("toks")) >= k)
+      .filter(size(col("toks")) >= AffixTokens)
     val pre = toks.select(col("doc_id"), lit("prefix").as("kind"),
-      array_join(slice(col("toks"), 1, k), " ").as("key"))
+      array_join(slice(col("toks"), 1, AffixTokens), " ").as("key"))
     val suf = toks.select(col("doc_id"), lit("suffix").as("kind"),
-      array_join(slice(col("toks"), -k, k), " ").as("key"))
+      array_join(slice(col("toks"), -AffixTokens, AffixTokens), " ").as("key"))
     pre.union(suf)
       .groupBy(col("kind"), Portable.hash60(col("key")).as("key_hash"))
       .agg(count(lit(1)).as("n_docs"),
@@ -981,17 +970,17 @@ object Dedup {
       .filter(col("n_docs") > 1L)
   }
 
-  def prefixSuffixSql(k: Int = 8): String =
+  def prefixSuffixSql(): String =
     s"""WITH t AS (
        |  SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents
        |), ok AS (
-       |  SELECT doc_id, toks FROM t WHERE len(toks) >= $k
+       |  SELECT doc_id, toks FROM t WHERE len(toks) >= $AffixTokens
        |), keys AS (
        |  SELECT doc_id, 'prefix' AS kind,
-       |    array_to_string(toks[1:$k], ' ') AS key FROM ok
+       |    array_to_string(toks[1:$AffixTokens], ' ') AS key FROM ok
        |  UNION ALL
        |  SELECT doc_id, 'suffix' AS kind,
-       |    array_to_string(list_slice(toks, len(toks) - ${k - 1}, len(toks)), ' ')
+       |    array_to_string(list_slice(toks, len(toks) - ${AffixTokens - 1}, len(toks)), ' ')
        |      AS key FROM ok
        |)
        |SELECT kind, ${Portable.hash60Sql("key")} AS key_hash,

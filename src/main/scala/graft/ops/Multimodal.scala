@@ -18,6 +18,17 @@ import graft.util.Tables
   */
 object Multimodal {
 
+  /** [[frameSamples]]' step and cap. */
+  val FrameStep = 4
+  val MaxFrames = 8
+  /** [[phashDedup]]'s Hamming threshold. */
+  val PhashTau = 3
+  /** [[audioSegments]]' window and hop. */
+  val AudioWin = 50
+  val AudioHop = 30
+  /** [[patchGrid]]'s patch edge. */
+  val PatchSize = 16
+
   /** A media row: payload is an opaque encoded blob + typed metadata. */
   case class MediaRow(doc_id: Long, media_type: String, payload: Array[Byte],
                       declared_w: Int, declared_h: Int)
@@ -109,21 +120,19 @@ object Multimodal {
 
   /** C33 — video frame sampling: the uniform temporal sampling every
     * frame-extraction pipeline runs before featurizing video (take
-    * every `step`-th frame, at most `maxFrames` per clip). The
+    * every [[FrameStep]]-th frame, at most [[MaxFrames]] per clip). The
     * "container format" is the deterministic stub — fixed-width frames
     * of `declared_w` bytes — but the batch shape is the real one:
     * bounded row amplification (≤ maxFrames per clip, never the full
     * frame count), partition-local byte slicing with one digest init
     * per partition, no shuffle at any scale. A real demuxer changes
     * only the slicing body. */
-  def frameSamples(spark: SparkSession, dir: String, step: Int = 4,
-                   maxFrames: Int = 8): DataFrame =
-    frameSamplesFrom(Tables.documents(spark, dir), step, maxFrames)
+  def frameSamples(spark: SparkSession, dir: String): DataFrame =
+    frameSamplesFrom(Tables.documents(spark, dir))
 
   /** [[frameSamples]] over any documents frame (streaming-safe: the
     * sampler is stateless per row). */
-  def frameSamplesFrom(docs: DataFrame, step: Int = 4,
-                       maxFrames: Int = 8): DataFrame = {
+  def frameSamplesFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     mediaFrom(docs)
       .filter(col("media_type") === "video")
@@ -134,7 +143,7 @@ object Multimodal {
           val stride = r.declared_w
           val nFrames = (r.payload.length + stride - 1) / stride
           (0 until nFrames).iterator
-            .filter(_ % step == 0).take(maxFrames)
+            .filter(_ % FrameStep == 0).take(MaxFrames)
             .map { i =>
               val from = i * stride
               val frame = java.util.Arrays.copyOfRange(
@@ -152,7 +161,7 @@ object Multimodal {
   /** DuckDB oracle for [[frameSamples]]: byte slicing over the UTF-8
     * text payload via substring arithmetic (the corpus is ASCII after
     * normalization upstream generated it, so char == byte offsets). */
-  def frameSamplesSql(step: Int = 4, maxFrames: Int = 8): String =
+  def frameSamplesSql(): String =
     s"""WITH v AS (
        |  SELECT doc_id, text,
        |    CAST(64 + (doc_id % 8) * 32 AS INT) AS stride,
@@ -170,7 +179,7 @@ object Multimodal {
        |  CAST(CONCAT('0x', SUBSTRING(MD5(SUBSTRING(text, i * stride + 1, stride)), 1, 15))
        |    AS BIGINT) AS frame_digest
        |FROM f
-       |WHERE i % $step = 0 AND i // $step < $maxFrames""".stripMargin
+       |WHERE i % $FrameStep = 0 AND i // $FrameStep < $MaxFrames""".stripMargin
 
   // ---------------------------------------------------------------- C44
   /** C44 — perceptual-hash image dedup: the banded near-dup join every
@@ -188,7 +197,7 @@ object Multimodal {
     * a handcrafted hash frame drives the near-miss arms. */
   /** The banded near-dup PAIR frame over a (doc_id, phash) index —
     * the spec drives it with injected duplicates. */
-  private[graft] def phashPairsFrom(hashes: DataFrame, tau: Int = 3): DataFrame = {
+  private[graft] def phashPairsFrom(hashes: DataFrame): DataFrame = {
     val bands = hashes.select(col("doc_id"), col("phash"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"),
@@ -203,7 +212,7 @@ object Multimodal {
     cand
       .withColumn("hamming",
         expr("CAST(bit_count(ha ^ hb) AS BIGINT)"))
-      .filter(col("hamming") <= tau)
+      .filter(col("hamming") <= PhashTau)
       .select(col("doc_a"), col("doc_b"), col("hamming"))
   }
 
@@ -212,13 +221,13 @@ object Multimodal {
     * byte-identical payloads, so n_dups is honestly 0 there — the
     * dedup arms are spec-driven with injected duplicates; a corpus
     * with re-encoded copies populates them with no plan change). */
-  def phashDedup(spark: SparkSession, dir: String, tau: Int = 3): DataFrame = {
+  def phashDedup(spark: SparkSession, dir: String): DataFrame = {
     val hashes = mediaTable(spark, dir).toDF()
       .filter(col("media_type") === "image")
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"),
         graft.functions.Portable.hash60(col("payload").cast("string")).as("phash"))
-    val pairs = phashPairsFrom(hashes, tau)
+    val pairs = phashPairsFrom(hashes)
     val cnt = pairs.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     hashes.join(cnt, Seq("doc_id"), "left")
@@ -252,14 +261,12 @@ object Multimodal {
     * transcript aligner consumes downstream. */
   val AudioFps = 100
   val AudioFrameBytes = 4
-  def audioSegments(spark: SparkSession, dir: String, win: Int = 50,
-                    hop: Int = 30): DataFrame =
-    audioSegmentsFrom(Tables.documents(spark, dir), win, hop)
+  def audioSegments(spark: SparkSession, dir: String): DataFrame =
+    audioSegmentsFrom(Tables.documents(spark, dir))
 
   /** [[audioSegments]] over any documents frame (streaming-safe: the
     * segmenter is stateless per row). */
-  def audioSegmentsFrom(docs: DataFrame, win: Int = 50,
-                        hop: Int = 30): DataFrame = {
+  def audioSegmentsFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     val msPerFrame = 1000L / AudioFps
     mediaFrom(docs)
@@ -271,10 +278,10 @@ object Multimodal {
           val nf = r.payload.length / AudioFrameBytes
           if (nf == 0) Iterator.empty
           else {
-            val nSegs = 1 + (math.max(0, nf - win) + hop - 1) / hop
+            val nSegs = 1 + (math.max(0, nf - AudioWin) + AudioHop - 1) / AudioHop
             (0 until nSegs).iterator.map { s =>
-              val fs = s.toLong * hop
-              val fe = math.min(fs + win, nf.toLong)
+              val fs = s.toLong * AudioHop
+              val fe = math.min(fs + AudioWin, nf.toLong)
               val from = (fs * AudioFrameBytes).toInt
               val to = (fe * AudioFrameBytes).toInt
               val slice = java.util.Arrays.copyOfRange(r.payload, from, to)
@@ -292,7 +299,7 @@ object Multimodal {
 
   /** DuckDB oracle for [[audioSegments]]: frame/byte arithmetic over
     * the UTF-8 text payload (ASCII corpus ⇒ char == byte offsets). */
-  def audioSegmentsSql(win: Int = 50, hop: Int = 30): String = {
+  def audioSegmentsSql(): String = {
     val fb = AudioFrameBytes
     val mpf = 1000L / AudioFps
     s"""WITH a AS (
@@ -302,19 +309,19 @@ object Multimodal {
        |), s AS (
        |  SELECT doc_id, text, nf,
        |    UNNEST(GENERATE_SERIES(0,
-       |      (GREATEST(nf - $win, 0) + ${hop - 1}) // $hop)) AS seg
+       |      (GREATEST(nf - $AudioWin, 0) + ${AudioHop - 1}) // $AudioHop)) AS seg
        |  FROM a WHERE nf > 0
        |)
        |SELECT doc_id, CAST(seg AS INT) AS seg_no,
-       |  CAST(seg * $hop AS BIGINT) AS frame_start,
-       |  CAST(LEAST(seg * $hop + $win, nf) AS BIGINT) AS frame_end,
-       |  CAST(seg * $hop * $mpf AS BIGINT) AS seg_ms_start,
-       |  CAST(LEAST(seg * $hop + $win, nf) * $mpf AS BIGINT) AS seg_ms_end,
-       |  CAST((LEAST(seg * $hop + $win, nf) - seg * $hop) * $fb AS BIGINT)
+       |  CAST(seg * $AudioHop AS BIGINT) AS frame_start,
+       |  CAST(LEAST(seg * $AudioHop + $AudioWin, nf) AS BIGINT) AS frame_end,
+       |  CAST(seg * $AudioHop * $mpf AS BIGINT) AS seg_ms_start,
+       |  CAST(LEAST(seg * $AudioHop + $AudioWin, nf) * $mpf AS BIGINT) AS seg_ms_end,
+       |  CAST((LEAST(seg * $AudioHop + $AudioWin, nf) - seg * $AudioHop) * $fb AS BIGINT)
        |    AS seg_bytes,
        |  CAST(CONCAT('0x', SUBSTRING(MD5(
-       |      SUBSTRING(text, seg * $hop * $fb + 1,
-       |        (LEAST(seg * $hop + $win, nf) - seg * $hop) * $fb)),
+       |      SUBSTRING(text, seg * $AudioHop * $fb + 1,
+       |        (LEAST(seg * $AudioHop + $AudioWin, nf) - seg * $AudioHop) * $fb)),
        |    1, 15)) AS BIGINT) AS seg_digest
        |FROM s""".stripMargin
   }
@@ -337,10 +344,10 @@ object Multimodal {
     * honest byte count (edge patches are short, fully-out-of-payload
     * patches are skipped — the same short-tail discipline as
     * C33/C64); both engines digest the identical assembled bytes. */
-  def patchGrid(spark: SparkSession, dir: String, p: Int = 16): DataFrame =
-    patchGridFrom(Tables.documents(spark, dir), p)
+  def patchGrid(spark: SparkSession, dir: String): DataFrame =
+    patchGridFrom(Tables.documents(spark, dir))
 
-  def patchGridFrom(docs: DataFrame, p: Int = 16): DataFrame = {
+  def patchGridFrom(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
     mediaFrom(docs)
       .filter(col("media_type") === "image")
@@ -349,23 +356,23 @@ object Multimodal {
         val md = java.security.MessageDigest.getInstance("MD5")
         it.flatMap { r =>
           val w = r.declared_w; val h = r.declared_h; val n = r.payload.length
-          val cols = (w + p - 1) / p
-          val rows = (h + p - 1) / p
+          val cols = (w + PatchSize - 1) / PatchSize
+          val rows = (h + PatchSize - 1) / PatchSize
           for {
             pr <- (0 until rows).iterator
             pc <- 0 until cols
             slices = for {
-              rr <- pr * p until math.min(pr * p + p, h)
-              from = rr * w + pc * p
+              rr <- pr * PatchSize until math.min(pr * PatchSize + PatchSize, h)
+              from = rr * w + pc * PatchSize
               if from < n
             } yield java.util.Arrays.copyOfRange(r.payload, from,
-              math.min(from + p, math.min((rr + 1) * w, n)))
+              math.min(from + PatchSize, math.min((rr + 1) * w, n)))
             bytes = slices.foldLeft(Array.empty[Byte])(_ ++ _)
             if bytes.nonEmpty
           } yield {
             md.reset()
             val hex = md.digest(bytes).take(8).map(b => f"$b%02x").mkString
-            ImagePatch(r.doc_id, pr, pc, (pr.toLong * p) * w + pc * p,
+            ImagePatch(r.doc_id, pr, pc, (pr.toLong * PatchSize) * w + pc * PatchSize,
               bytes.length.toLong,
               java.lang.Long.parseLong(hex.substring(0, 15), 16))
           }
@@ -377,7 +384,7 @@ object Multimodal {
   /** DuckDB oracle for [[patchGrid]]: the same raster arithmetic over
     * the UTF-8 text payload (ASCII ⇒ char == byte offsets); the patch
     * bytes assemble as concatenated row-slice substrings. */
-  def patchGridSql(p: Int = 16): String =
+  def patchGridSql(): String =
     s"""WITH img AS (
        |  SELECT doc_id, text,
        |    CAST(64 + (doc_id % 8) * 32 AS INT) AS w,
@@ -388,16 +395,16 @@ object Multimodal {
        |  SELECT doc_id, text, w, h, n,
        |    CAST(pr.i AS INT) AS patch_row, CAST(pc.i AS INT) AS patch_col
        |  FROM img,
-       |    UNNEST(GENERATE_SERIES(0, (h + $p - 1) // $p - 1)) AS pr(i),
-       |    UNNEST(GENERATE_SERIES(0, (w + $p - 1) // $p - 1)) AS pc(i)
+       |    UNNEST(GENERATE_SERIES(0, (h + $PatchSize - 1) // $PatchSize - 1)) AS pr(i),
+       |    UNNEST(GENERATE_SERIES(0, (w + $PatchSize - 1) // $PatchSize - 1)) AS pc(i)
        |), assembled AS (
        |  SELECT doc_id, patch_row, patch_col,
-       |    CAST(patch_row * $p * w + patch_col * $p AS BIGINT) AS byte_offset,
+       |    CAST(patch_row * $PatchSize * w + patch_col * $PatchSize AS BIGINT) AS byte_offset,
        |    array_to_string(list_transform(
-       |      GENERATE_SERIES(patch_row * $p,
-       |        LEAST(patch_row * $p + $p, h) - 1),
-       |      rr -> substring(text, rr * w + patch_col * $p + 1,
-       |        LEAST($p, LEAST((rr + 1) * w, n) - (rr * w + patch_col * $p)))),
+       |      GENERATE_SERIES(patch_row * $PatchSize,
+       |        LEAST(patch_row * $PatchSize + $PatchSize, h) - 1),
+       |      rr -> substring(text, rr * w + patch_col * $PatchSize + 1,
+       |        LEAST($PatchSize, LEAST((rr + 1) * w, n) - (rr * w + patch_col * $PatchSize)))),
        |      '') AS bytes
        |  FROM grid
        |)
@@ -408,7 +415,7 @@ object Multimodal {
        |FROM assembled
        |WHERE octet_length(encode(bytes)) > 0""".stripMargin
 
-  def phashDedupSql(tau: Int = 3): String = {
+  def phashDedupSql(): String = {
     val h = graft.functions.Portable.hash60Sql("text")
     s"""WITH img AS (
        |  SELECT doc_id, $h AS phash FROM documents WHERE doc_id % 3 = 0
@@ -422,7 +429,7 @@ object Multimodal {
        |  FROM bands a JOIN bands b
        |    ON a.band = b.band AND a.bv = b.bv AND a.doc_id < b.doc_id
        |), pairs AS (
-       |  SELECT doc_a, doc_b FROM cand WHERE bit_count(xor(ha, hb)) <= $tau
+       |  SELECT doc_a, doc_b FROM cand WHERE bit_count(xor(ha, hb)) <= $PhashTau
        |), cnt AS (
        |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n FROM (
        |    SELECT doc_a AS doc_id FROM pairs

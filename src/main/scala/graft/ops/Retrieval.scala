@@ -44,6 +44,32 @@ import graft.util.Tables
   */
 object Retrieval {
 
+  /** [[docChunk]]'s width and stride, tokens. */
+  val ChunkW = 64
+  val ChunkS = 48
+  /** Winnowing window ([[winnowing]] and every pass over its
+    * fingerprints). */
+  val Win = 4
+  /** Overlap thresholds: [[decontaminateWinnow]], [[dedupContainment]]
+    * and [[dedupEditDistance]] (with its compared-prefix cap and
+    * shared-fingerprint floor). */
+  val DecontamTauPpm = 100000L
+  val ContainTauPpm = 800000L
+  val EditTauPpm = 300000L
+  val EditCap = 600
+  val EditMinShared = 3
+  /** Retrieval depth ([[bm25TopK]], [[hybridRrfTopK]], [[ragContextPack]]),
+    * the RRF arm depth, RRF k and query vector. */
+  val RetrieveK = 20
+  val RrfKArm = 50
+  val RrfK = 60
+  val QueryVec = 0L
+  /** Substring-dedup gram length ([[dedupSubstringSpans]], the passes
+    * over its spans and the substring stream). */
+  val SubstrK = 8
+  /** [[ragContextPack]]'s token budget. */
+  val RagBudget = 600L
+
   private def docs(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
@@ -55,7 +81,7 @@ object Retrieval {
   /** Chunk count: 1 + ceil(max(0, n−W)/S) — the last chunk may be
     * shorter than W; a doc shorter than W is one chunk. */
   def docChunk(spark: SparkSession, dir: String,
-               w: Int = 64, s: Int = 48): DataFrame =
+               w: Int = ChunkW, s: Int = ChunkS): DataFrame =
     Text.docTokens(spark, dir)
       .select(col("doc_id"), col("toks"))
       .withColumn("n", size(col("toks")).cast("long"))
@@ -74,21 +100,21 @@ object Retrieval {
         length(col("chunk_text")).cast("long").as("chunk_chars"),
         Portable.hash60(col("chunk_text")).as("chunk_hash"))
 
-  def docChunkSql(w: Int = 64, s: Int = 48): String =
+  def docChunkSql(): String =
     s"""WITH t AS (
        |  SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents
        |), c AS (
        |  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n,
        |    UNNEST(GENERATE_SERIES(0,
-       |      (GREATEST(CAST(len(toks) AS BIGINT) - $w, 0) + ${s - 1}) // $s))
+       |      (GREATEST(CAST(len(toks) AS BIGINT) - $ChunkW, 0) + ${ChunkS - 1}) // $ChunkS))
        |      AS ci
        |  FROM t
        |), x AS (
        |  SELECT doc_id, ci, n,
-       |    CAST(ci * $s AS BIGINT) AS tok_start,
-       |    CAST(LEAST(ci * $s + $w, n) AS BIGINT) AS tok_end,
-       |    array_to_string(toks[CAST(ci * $s + 1 AS BIGINT) :
-       |      CAST(LEAST(ci * $s + $w, n) AS BIGINT)], ' ') AS chunk_text
+       |    CAST(ci * $ChunkS AS BIGINT) AS tok_start,
+       |    CAST(LEAST(ci * $ChunkS + $ChunkW, n) AS BIGINT) AS tok_end,
+       |    array_to_string(toks[CAST(ci * $ChunkS + 1 AS BIGINT) :
+       |      CAST(LEAST(ci * $ChunkS + $ChunkW, n) AS BIGINT)], ' ') AS chunk_text
        |  FROM c
        |)
        |SELECT doc_id, CAST(ci + 1 AS BIGINT) AS chunk_seq,
@@ -107,7 +133,7 @@ object Retrieval {
   private val HashMod = 1099511627776L // 2^40
   private val PosMod = 4194304L // 2^22
 
-  def winnowing(spark: SparkSession, dir: String, win: Int = 4): DataFrame = {
+  def winnowing(spark: SparkSession, dir: String): DataFrame = {
     val grams = Text.docTokens(spark, dir)
       .select(col("doc_id"),
         call_function("graft_word_ngrams_all", col("toks"), lit(3)).as("grams"))
@@ -117,10 +143,10 @@ object Retrieval {
         (Portable.hash60(col("gram")) % HashMod) * PosMod +
           (lit(PosMod - 1) - col("pos")))
     val frame = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(Window.currentRow, win - 1)
+      .rowsBetween(Window.currentRow, Win - 1)
     grams
       .withColumn("mk", min(col("key")).over(frame))
-      .filter(col("pos") <= col("m") - win)
+      .filter(col("pos") <= col("m") - Win)
       .select(col("doc_id"),
         (lit(PosMod - 1) - pmod(col("mk"), lit(PosMod))).as("fp_pos"),
         expr(s"mk div $PosMod").as("fp_hash"))
@@ -134,7 +160,7 @@ object Retrieval {
   /** Distinct winnowing fingerprint hashes per doc, carrying source —
     * the C37 selection with positions stripped (overlap detection
     * compares content, not offsets). */
-  private def winnowHashes(docsFrame: DataFrame, win: Int): DataFrame = {
+  private def winnowHashes(docsFrame: DataFrame): DataFrame = {
     val grams = Text.withToks(docsFrame)
       .select(col("doc_id"), col("source"),
         call_function("graft_word_ngrams_all", col("toks"), lit(3)).as("grams"))
@@ -145,10 +171,10 @@ object Retrieval {
         (Portable.hash60(col("gram")) % HashMod) * PosMod +
           (lit(PosMod - 1) - col("pos")))
     val frame = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(Window.currentRow, win - 1)
+      .rowsBetween(Window.currentRow, Win - 1)
     grams
       .withColumn("mk", min(col("key")).over(frame))
-      .filter(col("pos") <= col("m") - win)
+      .filter(col("pos") <= col("m") - Win)
       .select(col("doc_id"), col("source"), expr(s"mk div $PosMod").as("fp_hash"))
       .distinct()
   }
@@ -156,10 +182,9 @@ object Retrieval {
   /** The production fingerprint frame, kept per (session, documents,
     * win) by [[Tables.checkpointed]]: C39, C42 and the funnel (C46)
     * consume this frame, and the containment self-join reads it twice. */
-  private[graft] def winnowHashesCached(spark: SparkSession, dir: String,
-                                        win: Int): DataFrame =
-    Tables.checkpointed(spark, "winnow", dir, "documents", win)(
-      winnowHashes(Text.docTokens(spark, dir), win).localCheckpoint())
+  private[graft] def winnowHashesCached(spark: SparkSession, dir: String): DataFrame =
+    Tables.checkpointed(spark, "winnow", dir, "documents", ())(
+      winnowHashes(Text.docTokens(spark, dir)).localCheckpoint())
 
   /** C39 — decontamination by winnowing-fingerprint overlap: the MOSS
     * guarantee (any shared run of ≥ win+2 tokens shares a fingerprint)
@@ -170,16 +195,14 @@ object Retrieval {
     * the 100 TB path for substring-level decontamination. Per
     * non-benchmark doc: distinct fingerprint count, benchmark-hit
     * count, overlap ppm (−1 for fingerprint-free docs, the C19
-    * sentinel convention) and the keep/drop verdict at `tauPpm`.
+    * sentinel convention) and the keep/drop verdict at [[DecontamTauPpm]].
     * Plan: one doc-keyed window on the repartition key (no extra
     * exchange), one distinct, benchmark side broadcast (benchmark
     * suites are fixed-size while the corpus grows). */
-  private[graft] def decontaminateWinnowFrom(docsFrame: DataFrame,
-      win: Int = 4, tauPpm: Long = 100000L): DataFrame =
-    decontaminateFromFps(docsFrame, winnowHashes(docsFrame, win), tauPpm)
+  private[graft] def decontaminateWinnowFrom(docsFrame: DataFrame): DataFrame =
+    decontaminateFromFps(docsFrame, winnowHashes(docsFrame))
 
-  private def decontaminateFromFps(docsFrame: DataFrame, fps: DataFrame,
-      tauPpm: Long): DataFrame = {
+  private def decontaminateFromFps(docsFrame: DataFrame, fps: DataFrame): DataFrame = {
     val bench = fps.filter(col("source") === "src0")
       .select(col("fp_hash")).distinct().withColumn("hit", lit(1))
     val scored = fps.filter(col("source") =!= "src0")
@@ -198,15 +221,35 @@ object Retrieval {
             * lit(1000000L), col("n_fps")))
           .otherwise(lit(-1L)).as("overlap_ppm"))
       .withColumn("verdict",
-        when(col("overlap_ppm") >= tauPpm, lit("drop")).otherwise(lit("keep")))
+        when(col("overlap_ppm") >= DecontamTauPpm, lit("drop")).otherwise(lit("keep")))
   }
 
-  def decontaminateWinnow(spark: SparkSession, dir: String,
-      win: Int = 4, tauPpm: Long = 100000L): DataFrame =
+  def decontaminateWinnow(spark: SparkSession, dir: String): DataFrame =
     decontaminateFromFps(graft.ops.Text.docTokens(spark, dir),
-      winnowHashesCached(spark, dir, win), tauPpm)
+      winnowHashesCached(spark, dir))
 
-  def decontaminateWinnowSql(win: Int = 4, tauPpm: Long = 100000L): String = {
+  /** The SQL twin of [[winnowHashes]]' windowing over a `grams` list
+    * relation: per-position gram keys `h` and their [[Win]]-wide window
+    * minimum `w`, carrying the row keys `cols`. */
+  private def winnowCtesSql(cols: String, grams: String): String =
+    s"""pg AS (
+       |  SELECT $cols, CAST(len(grams) AS BIGINT) AS m,
+       |    UNNEST(list_transform(range(1, len(grams) + 1),
+       |      i -> {'pos': i - 1, 'gram': grams[i]})) AS e
+       |  FROM $grams
+       |), h AS (
+       |  SELECT $cols, m, CAST(e.pos AS BIGINT) AS pos,
+       |    (${Portable.hash60Sql("e.gram")} % $HashMod) * $PosMod
+       |      + (${PosMod - 1} - e.pos) AS key
+       |  FROM pg
+       |), w AS (
+       |  SELECT $cols, m, pos,
+       |    MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
+       |      ROWS BETWEEN CURRENT ROW AND ${Win - 1} FOLLOWING) AS mk
+       |  FROM h
+       |)""".stripMargin
+
+  def decontaminateWinnowSql(): String = {
     val allGrams =
       """CASE WHEN len(toks) >= 3
         |  THEN list_transform(range(1, len(toks) - 1),
@@ -216,24 +259,9 @@ object Retrieval {
        |  SELECT doc_id, source, ${Text.tokensSql("text")} AS toks FROM documents
        |), g AS (
        |  SELECT doc_id, source, $allGrams AS grams FROM t
-       |), pg AS (
-       |  SELECT doc_id, source, CAST(len(grams) AS BIGINT) AS m,
-       |    UNNEST(list_transform(range(1, len(grams) + 1),
-       |      i -> {'pos': i - 1, 'gram': grams[i]})) AS e
-       |  FROM g
-       |), h AS (
-       |  SELECT doc_id, source, m, CAST(e.pos AS BIGINT) AS pos,
-       |    (${Portable.hash60Sql("e.gram")} % $HashMod) * $PosMod
-       |      + (${PosMod - 1} - e.pos) AS key
-       |  FROM pg
-       |), w AS (
-       |  SELECT doc_id, source, m, pos,
-       |    MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN CURRENT ROW AND ${win - 1} FOLLOWING) AS mk
-       |  FROM h
-       |), fps AS (
+       |), ${winnowCtesSql("doc_id, source", "g")}, fps AS (
        |  SELECT DISTINCT doc_id, source, CAST(mk // $PosMod AS BIGINT) AS fp_hash
-       |  FROM w WHERE pos <= m - $win
+       |  FROM w WHERE pos <= m - $Win
        |), bench AS (
        |  SELECT DISTINCT fp_hash FROM fps WHERE source = 'src0'
        |), scored AS (
@@ -252,7 +280,7 @@ object Retrieval {
        |SELECT doc_id, n_fps, n_hits,
        |  CASE WHEN n_fps > 0 THEN n_hits * 1000000 // n_fps ELSE -1 END AS overlap_ppm,
        |  CASE WHEN (CASE WHEN n_fps > 0 THEN n_hits * 1000000 // n_fps ELSE -1 END)
-       |         >= $tauPpm THEN 'drop' ELSE 'keep' END AS verdict
+       |         >= $DecontamTauPpm THEN 'drop' ELSE 'keep' END AS verdict
        |FROM u""".stripMargin
   }
 
@@ -275,9 +303,8 @@ object Retrieval {
     * COUNT (a dimension), never by corpus size — the join cannot go
     * quadratic in docs by construction. One distinct, one bounded
     * self-join, two dimension-scale aggs. */
-  def sourceDedupMatrix(spark: SparkSession, dir: String,
-      win: Int = 4): DataFrame = {
-    val fps = winnowHashesCached(spark, dir, win)
+  def sourceDedupMatrix(spark: SparkSession, dir: String): DataFrame = {
+    val fps = winnowHashesCached(spark, dir)
     val fpsrc = fps.select(col("source"), col("fp_hash")).distinct()
     val totals = fpsrc.groupBy(col("source")).agg(count(lit(1)).as("n_fps"))
     fpsrc.as("a").join(fpsrc.as("b"), Seq("fp_hash"))
@@ -295,7 +322,7 @@ object Retrieval {
         col("fps_a"), col("fps_b"), col("share_a_ppm"), col("share_b_ppm"))
   }
 
-  def sourceDedupMatrixSql(win: Int = 4): String = {
+  def sourceDedupMatrixSql(): String = {
     val allGrams =
       """CASE WHEN len(toks) >= 3
         |  THEN list_transform(range(1, len(toks) - 1),
@@ -305,24 +332,9 @@ object Retrieval {
        |  SELECT doc_id, source, ${Text.tokensSql("text")} AS toks FROM documents
        |), g AS (
        |  SELECT doc_id, source, $allGrams AS grams FROM t
-       |), pg AS (
-       |  SELECT doc_id, source, CAST(len(grams) AS BIGINT) AS m,
-       |    UNNEST(list_transform(range(1, len(grams) + 1),
-       |      i -> {'pos': i - 1, 'gram': grams[i]})) AS e
-       |  FROM g
-       |), h AS (
-       |  SELECT doc_id, source, m, CAST(e.pos AS BIGINT) AS pos,
-       |    (${Portable.hash60Sql("e.gram")} % $HashMod) * $PosMod
-       |      + (${PosMod - 1} - e.pos) AS key
-       |  FROM pg
-       |), w AS (
-       |  SELECT doc_id, source, m, pos,
-       |    MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN CURRENT ROW AND ${win - 1} FOLLOWING) AS mk
-       |  FROM h
-       |), fpsrc AS (
+       |), ${winnowCtesSql("doc_id, source", "g")}, fpsrc AS (
        |  SELECT DISTINCT source, CAST(mk // $PosMod AS BIGINT) AS fp_hash
-       |  FROM w WHERE pos <= m - $win
+       |  FROM w WHERE pos <= m - $Win
        |), totals AS (
        |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n_fps
        |  FROM fpsrc GROUP BY 1
@@ -357,23 +369,21 @@ object Retrieval {
     * the candidate generation is mirrored in the oracle exactly (the
     * C2/C5 banding precedent). Exact verify on the distinct-3-gram
     * sets; ppm containment both directions; `contained` labels which
-    * side dissolves into the other at `tauPpm`.
+    * side dissolves into the other at [[ContainTauPpm]].
     *
     * Plan: fingerprint frame (one doc-keyed window on the repartition
     * key) self-joined on fp_hash (bucket-bounded, never all-pairs),
     * distinct pairs, then the exact verify as a partial-agg shared-gram
     * count over the exploded (doc, gram) frame — scalar rows only;
     * gram ARRAYS never cross a shuffle (see [[containmentFromFps]]). */
-  def dedupContainment(spark: SparkSession, dir: String,
-      win: Int = 4, tauPpm: Long = 800000L): DataFrame =
-    containmentFromFps(winnowHashesCached(spark, dir, win),
-      Dedup.gramFrame(spark, dir), tauPpm)
+  def dedupContainment(spark: SparkSession, dir: String): DataFrame =
+    containmentFromFps(winnowHashesCached(spark, dir),
+      Dedup.gramFrame(spark, dir))
 
   /** `g` must carry (doc_id, grams) with grams = the DISTINCT 3-gram
     * set of the doc's text (the C4 cached frame in production). */
-  private[graft] def dedupContainmentFrom(docsFrame: DataFrame, g: DataFrame,
-      win: Int = 4, tauPpm: Long = 800000L): DataFrame =
-    containmentFromFps(winnowHashes(docsFrame, win), g, tauPpm)
+  private[graft] def dedupContainmentFrom(docsFrame: DataFrame, g: DataFrame): DataFrame =
+    containmentFromFps(winnowHashes(docsFrame), g)
 
   /** Posting-length split point for the two-regime shared-gram count:
     * grams held by ≤ HotPostingMax docs count pairs through the
@@ -387,10 +397,7 @@ object Retrieval {
   private val HotPostingMax = 64L
 
   private[graft] def containmentFromFps(fpsFull: DataFrame, g: DataFrame,
-      tauPpm: Long, hotMax: Long = HotPostingMax): DataFrame = {
-    require(tauPpm > 0L,
-      "containment threshold must be positive: zero-intersection pairs " +
-        "are dropped by the partial-agg plan (and filtered by any tau > 0)")
+      hotMax: Long = HotPostingMax): DataFrame = {
     val fps = fpsFull.select(col("doc_id"), col("fp_hash"))
     val cand = fps.as("a").join(fps.as("b"), Seq("fp_hash"))
       .filter(col("a.doc_id") < col("b.doc_id"))
@@ -448,15 +455,15 @@ object Retrieval {
       .withColumn("cont_b_ppm",
         call_function("div", col("inter").cast("decimal(38,0)") * lit(1000000L),
           col("szb")))
-      .filter(col("cont_a_ppm") >= tauPpm || col("cont_b_ppm") >= tauPpm)
+      .filter(col("cont_a_ppm") >= ContainTauPpm || col("cont_b_ppm") >= ContainTauPpm)
       .select(col("doc_a"), col("doc_b"), col("inter"),
         col("cont_a_ppm"), col("cont_b_ppm"),
-        when(col("cont_a_ppm") >= tauPpm && col("cont_b_ppm") >= tauPpm, lit("both"))
-          .when(col("cont_a_ppm") >= tauPpm, lit("a_in_b"))
+        when(col("cont_a_ppm") >= ContainTauPpm && col("cont_b_ppm") >= ContainTauPpm, lit("both"))
+          .when(col("cont_a_ppm") >= ContainTauPpm, lit("a_in_b"))
           .otherwise(lit("b_in_a")).as("contained"))
   }
 
-  def dedupContainmentSql(win: Int = 4, tauPpm: Long = 800000L): String = {
+  def dedupContainmentSql(): String = {
     val allGrams =
       """CASE WHEN len(toks) >= 3
         |  THEN list_transform(range(1, len(toks) - 1),
@@ -466,24 +473,9 @@ object Retrieval {
        |  SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents
        |), ga AS (
        |  SELECT doc_id, $allGrams AS grams FROM t
-       |), pg AS (
-       |  SELECT doc_id, CAST(len(grams) AS BIGINT) AS m,
-       |    UNNEST(list_transform(range(1, len(grams) + 1),
-       |      i -> {'pos': i - 1, 'gram': grams[i]})) AS e
-       |  FROM ga
-       |), h AS (
-       |  SELECT doc_id, m, CAST(e.pos AS BIGINT) AS pos,
-       |    (${Portable.hash60Sql("e.gram")} % $HashMod) * $PosMod
-       |      + (${PosMod - 1} - e.pos) AS key
-       |  FROM pg
-       |), w AS (
-       |  SELECT doc_id, m, pos,
-       |    MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN CURRENT ROW AND ${win - 1} FOLLOWING) AS mk
-       |  FROM h
-       |), fps AS (
+       |), ${winnowCtesSql("doc_id", "ga")}, fps AS (
        |  SELECT DISTINCT doc_id, CAST(mk // $PosMod AS BIGINT) AS fp_hash
-       |  FROM w WHERE pos <= m - $win
+       |  FROM w WHERE pos <= m - $Win
        |), cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        |  FROM fps a JOIN fps b
@@ -501,13 +493,13 @@ object Retrieval {
        |SELECT doc_a, doc_b, inter,
        |  inter * 1000000 // sza AS cont_a_ppm,
        |  inter * 1000000 // szb AS cont_b_ppm,
-       |  CASE WHEN inter * 1000000 // sza >= $tauPpm
-       |        AND inter * 1000000 // szb >= $tauPpm THEN 'both'
-       |       WHEN inter * 1000000 // sza >= $tauPpm THEN 'a_in_b'
+       |  CASE WHEN inter * 1000000 // sza >= $ContainTauPpm
+       |        AND inter * 1000000 // szb >= $ContainTauPpm THEN 'both'
+       |       WHEN inter * 1000000 // sza >= $ContainTauPpm THEN 'a_in_b'
        |       ELSE 'b_in_a' END AS contained
        |FROM v
-       |WHERE inter * 1000000 // sza >= $tauPpm
-       |   OR inter * 1000000 // szb >= $tauPpm""".stripMargin
+       |WHERE inter * 1000000 // sza >= $ContainTauPpm
+       |   OR inter * 1000000 // szb >= $ContainTauPpm""".stripMargin
   }
 
   // ------------------------------------------------------------------
@@ -529,38 +521,32 @@ object Retrieval {
     * deliberately tighter than C42's and BOTH filters are part of the
     * operator's declared recall (mirrored exactly in the oracle, the
     * C2/C5 banding discipline):
-    *   - pairs must share ≥ `minShared` winnowing fingerprints (one
+    *   - pairs must share ≥ [[EditMinShared]] winnowing fingerprints (one
     *     shared phrase fingerprint is template noise; a ≤τ-edit
     *     variant keeps long untouched runs and shares many) — on the
     *     template-heavy sf0.1 corpus this cuts 334k candidate pairs
     *     to ~400 while keeping every near pair but one borderline;
     *   - the length bound |len_a−len_b| ≤ τ·max(len) (an edit
     *     distance is never below the length difference).
-    * Verify = levenshtein on the first `cap` chars (bounded O(cap²)
+    * Verify = levenshtein on the first [[EditCap]] chars (bounded O(cap²)
     * per pair at any doc length), ppm of the LONGER doc; each engine
     * runs its own native levenshtein — an independent
     * cross-implementation check. */
-  def dedupEditDistance(spark: SparkSession, dir: String, win: Int = 4,
-      tauPpm: Long = 300000L, cap: Int = 600,
-      minShared: Int = 3): DataFrame =
-    editDistanceFromFps(winnowHashesCached(spark, dir, win),
-      docs(spark, dir), tauPpm, cap, minShared)
+  def dedupEditDistance(spark: SparkSession, dir: String): DataFrame =
+    editDistanceFromFps(winnowHashesCached(spark, dir), docs(spark, dir))
 
-  private[graft] def dedupEditDistanceFrom(docsFrame: DataFrame, win: Int = 4,
-      tauPpm: Long = 300000L, cap: Int = 600, minShared: Int = 3): DataFrame =
-    editDistanceFromFps(winnowHashes(docsFrame, win), docsFrame, tauPpm, cap,
-      minShared)
+  private[graft] def dedupEditDistanceFrom(docsFrame: DataFrame): DataFrame =
+    editDistanceFromFps(winnowHashes(docsFrame), docsFrame)
 
-  private def editDistanceFromFps(fpsFull: DataFrame, docsFrame: DataFrame,
-      tauPpm: Long, cap: Int, minShared: Int): DataFrame = {
+  private def editDistanceFromFps(fpsFull: DataFrame, docsFrame: DataFrame): DataFrame = {
     val fps = fpsFull.select(col("doc_id"), col("fp_hash"))
     val cand = fps.as("a").join(fps.as("b"), Seq("fp_hash"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared.toLong)
+      .filter(col("n_shared") >= EditMinShared.toLong)
     val d = docsFrame.select(col("doc_id"),
-      substring(col("text"), 1, cap).as("txt"),
+      substring(col("text"), 1, EditCap).as("txt"),
       length(col("text")).cast("long").as("len"))
     cand
       .join(d.select(col("doc_id").as("doc_a"), col("txt").as("ta"),
@@ -569,17 +555,16 @@ object Retrieval {
         col("len").as("len_b")), "doc_b")
       // the length bound prunes BEFORE the quadratic DP runs
       .filter(abs(col("len_a") - col("len_b")) * 1000000L <=
-        lit(tauPpm) * greatest(col("len_a"), col("len_b"), lit(1L)))
+        lit(EditTauPpm) * greatest(col("len_a"), col("len_b"), lit(1L)))
       .withColumn("lev", levenshtein(col("ta"), col("tb")).cast("long"))
       .withColumn("lev_ppm", call_function("div", col("lev") * lit(1000000L),
         greatest(col("len_a"), col("len_b"), lit(1L))))
-      .filter(col("lev_ppm") <= tauPpm)
+      .filter(col("lev_ppm") <= EditTauPpm)
       .select(col("doc_a"), col("doc_b"), col("n_shared"), col("len_a"),
         col("len_b"), col("lev"), col("lev_ppm"))
   }
 
-  def dedupEditDistanceSql(win: Int = 4, tauPpm: Long = 300000L,
-      cap: Int = 600, minShared: Int = 3): String = {
+  def dedupEditDistanceSql(): String = {
     val allGrams =
       """CASE WHEN len(toks) >= 3
         |  THEN list_transform(range(1, len(toks) - 1),
@@ -589,31 +574,16 @@ object Retrieval {
        |  SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents
        |), g AS (
        |  SELECT doc_id, $allGrams AS grams FROM t
-       |), pg AS (
-       |  SELECT doc_id, CAST(len(grams) AS BIGINT) AS m,
-       |    UNNEST(list_transform(range(1, len(grams) + 1),
-       |      i -> {'pos': i - 1, 'gram': grams[i]})) AS e
-       |  FROM g
-       |), h AS (
-       |  SELECT doc_id, m, CAST(e.pos AS BIGINT) AS pos,
-       |    (${Portable.hash60Sql("e.gram")} % $HashMod) * $PosMod
-       |      + (${PosMod - 1} - e.pos) AS key
-       |  FROM pg
-       |), w AS (
-       |  SELECT doc_id, m, pos,
-       |    MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN CURRENT ROW AND ${win - 1} FOLLOWING) AS mk
-       |  FROM h
-       |), fps AS (
+       |), ${winnowCtesSql("doc_id", "g")}, fps AS (
        |  SELECT DISTINCT doc_id, CAST(mk // $PosMod AS BIGINT) AS fp_hash
-       |  FROM w WHERE pos <= m - $win
+       |  FROM w WHERE pos <= m - $Win
        |), cand AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |    CAST(COUNT(*) AS BIGINT) AS n_shared
        |  FROM fps a JOIN fps b
        |    ON a.fp_hash = b.fp_hash AND a.doc_id < b.doc_id
        |  GROUP BY 1, 2
-       |  HAVING COUNT(*) >= $minShared
+       |  HAVING COUNT(*) >= $EditMinShared
        |), pruned AS (
        |  SELECT c.doc_a, c.doc_b, c.n_shared,
        |    CAST(LENGTH(x.text) AS BIGINT) AS len_a,
@@ -623,20 +593,20 @@ object Retrieval {
        |  JOIN documents x ON x.doc_id = c.doc_a
        |  JOIN documents y ON y.doc_id = c.doc_b
        |  WHERE ABS(LENGTH(x.text) - LENGTH(y.text)) * 1000000
-       |    <= $tauPpm * GREATEST(LENGTH(x.text), LENGTH(y.text), 1)
+       |    <= $EditTauPpm * GREATEST(LENGTH(x.text), LENGTH(y.text), 1)
        |)
        |SELECT doc_a, doc_b, n_shared, len_a, len_b, lev,
        |  lev * 1000000 // GREATEST(len_a, len_b, 1) AS lev_ppm
        |FROM (
        |  SELECT doc_a, doc_b, n_shared, len_a, len_b,
-       |    CAST(levenshtein(substring(ta, 1, $cap),
-       |      substring(tb, 1, $cap)) AS BIGINT) AS lev
+       |    CAST(levenshtein(substring(ta, 1, $EditCap),
+       |      substring(tb, 1, $EditCap)) AS BIGINT) AS lev
        |  FROM pruned
        |)
-       |WHERE lev * 1000000 // GREATEST(len_a, len_b, 1) <= $tauPpm""".stripMargin
+       |WHERE lev * 1000000 // GREATEST(len_a, len_b, 1) <= $EditTauPpm""".stripMargin
   }
 
-  def winnowingSql(win: Int = 4): String = {
+  def winnowingSql(): String = {
     val allGrams =
       """CASE WHEN len(toks) >= 3
         |  THEN list_transform(range(1, len(toks) - 1),
@@ -659,13 +629,13 @@ object Retrieval {
        |), w AS (
        |  SELECT doc_id, m, pos,
        |    MIN(key) OVER (PARTITION BY doc_id ORDER BY pos
-       |      ROWS BETWEEN CURRENT ROW AND ${win - 1} FOLLOWING) AS mk
+       |      ROWS BETWEEN CURRENT ROW AND ${Win - 1} FOLLOWING) AS mk
        |  FROM h
        |)
        |SELECT DISTINCT doc_id,
        |  CAST(${PosMod - 1} - (mk % $PosMod) AS BIGINT) AS fp_pos,
        |  CAST(mk // $PosMod AS BIGINT) AS fp_hash
-       |FROM w WHERE pos <= m - $win""".stripMargin
+       |FROM w WHERE pos <= m - $Win""".stripMargin
   }
 
   // ------------------------------------------------------------------
@@ -676,8 +646,7 @@ object Retrieval {
     * score must be non-trivial on the synthetic vocabulary). */
   val Query: Seq[String] = Seq("hash", "join", "scan")
 
-  def bm25TopK(spark: SparkSession, dir: String, k: Int = 20,
-               query: Seq[String] = Query): DataFrame = {
+  def bm25TopK(spark: SparkSession, dir: String, k: Int = RetrieveK): DataFrame = {
     val base = Text.docTokens(spark, dir)
       .select(col("doc_id"), col("toks"))
       .withColumn("dl", size(col("toks")).cast("long"))
@@ -685,7 +654,7 @@ object Retrieval {
       sum(col("dl")).as("t_toks"))
     val tf = base
       .select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
-      .filter(col("term").isin(query: _*))
+      .filter(col("term").isin(Query: _*))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))
     val dfq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -700,12 +669,12 @@ object Retrieval {
           ((lit(10L) * col("tf") + 3L) * col("t_toks") +
             lit(9L) * col("dl") * col("n_docs")))
       .withColumn("s", col("num").cast("double") / col("den"))
-    val sCols = query.map(q =>
+    val sCols = Query.map(q =>
       coalesce(max(when(col("term") === q, col("s"))), lit(0.0d))
         .as(s"s_$q"))
     val pivoted = scored.groupBy(col("doc_id"), col("dl"))
       .agg(sCols.head, sCols.tail: _*)
-    val score = query.map(q => s"s_$q").mkString(" + ")
+    val score = Query.map(q => s"s_$q").mkString(" + ")
     // Distributed top-k: orderBy+limit plans TakeOrderedAndProject
     // (per-partition partial top-k, then a k-row merge) instead of
     // dragging every scored doc through one unpartitioned window task.
@@ -718,16 +687,16 @@ object Retrieval {
       .withColumn("rank", row_number().over(
         graft.util.Windows.bounded(col("score").desc, col("doc_id"))).cast("long"))
       .select(Seq(col("doc_id"), col("dl")) ++
-        query.map(q => col(s"s_$q")) ++
+        Query.map(q => col(s"s_$q")) ++
         Seq(col("score"), col("rank")): _*)
   }
 
-  def bm25TopKSql(k: Int = 20, query: Seq[String] = Query): String = {
-    val inList = query.map(q => s"'$q'").mkString(", ")
-    val sCols = query.map(q =>
+  def bm25TopKSql(k: Int = RetrieveK): String = {
+    val inList = Query.map(q => s"'$q'").mkString(", ")
+    val sCols = Query.map(q =>
       s"COALESCE(MAX(CASE WHEN term = '$q' THEN s END), 0.0) AS s_$q")
       .mkString(",\n       |    ")
-    val score = query.map(q => s"s_$q").mkString(" + ")
+    val score = Query.map(q => s"s_$q").mkString(" + ")
     s"""WITH base AS (
        |  SELECT doc_id,
        |    CAST(len(${Text.tokensSql("text")}) AS BIGINT) AS dl,
@@ -755,7 +724,7 @@ object Retrieval {
        |  FROM scored GROUP BY doc_id, dl
        |)
        |SELECT * FROM (
-       |  SELECT doc_id, dl, ${query.map(q => s"s_$q").mkString(", ")},
+       |  SELECT doc_id, dl, ${Query.map(q => s"s_$q").mkString(", ")},
        |    $score AS score,
        |    CAST(ROW_NUMBER() OVER (ORDER BY $score DESC, doc_id)
        |      AS BIGINT) AS rank
@@ -789,14 +758,13 @@ object Retrieval {
     * is a ≤2·kArm-row frame, so the full-outer fusion join and the
     * final re-rank window are bounded by construction. */
   def hybridRrfTopK(spark: SparkSession, dir: String,
-                    kArm: Int = 50, k: Int = 20, rrfK: Int = 60,
-                    queryVec: Long = 0L): DataFrame = {
+                    kArm: Int = RrfKArm): DataFrame = {
     val sparse = bm25TopK(spark, dir, kArm)
       .select(col("doc_id"), col("rank").as("sparse_rank"))
     val c = Similarity.corpus(spark, dir)
-    val q = c.filter(col("vec_id") === queryVec)
+    val q = c.filter(col("vec_id") === QueryVec)
       .select(col("v").as("qv"), col("nrm").as("qn"))
-    val dense = c.filter(col("vec_id") =!= queryVec)
+    val dense = c.filter(col("vec_id") =!= QueryVec)
       .join(broadcast(q))
       .withColumn("cosine",
         round(Similarity.dot("qv", "v") / (col("qn") * col("nrm")), 4))
@@ -809,26 +777,25 @@ object Retrieval {
       .select(col("doc_id"),
         coalesce(col("sparse_rank"), lit(-1L)).as("sparse_rank"),
         coalesce(col("dense_rank"), lit(-1L)).as("dense_rank"),
-        (coalesce(expr(s"1000000L div (${rrfK}L + sparse_rank)"), lit(0L)) +
-          coalesce(expr(s"1000000L div (${rrfK}L + dense_rank)"), lit(0L)))
+        (coalesce(expr(s"1000000L div (${RrfK}L + sparse_rank)"), lit(0L)) +
+          coalesce(expr(s"1000000L div (${RrfK}L + dense_rank)"), lit(0L)))
           .as("rrf_u"))
       .orderBy(col("rrf_u").desc, col("doc_id"))
-      .limit(k)
+      .limit(RetrieveK)
       .withColumn("rank", row_number().over(
         graft.util.Windows.bounded(col("rrf_u").desc, col("doc_id"))).cast("long"))
   }
 
-  def hybridRrfTopKSql(kArm: Int = 50, k: Int = 20, rrfK: Int = 60,
-                       queryVec: Long = 0L): String = {
-    val bm25 = bm25TopKSql(kArm)
+  def hybridRrfTopKSql(): String = {
+    val bm25 = bm25TopKSql(RrfKArm)
       .linesIterator.map("    " + _).mkString("\n")
     s"""WITH ${Similarity.corpusSql},
-       |q AS (SELECT v AS qv, nrm AS qn FROM c WHERE vec_id = $queryVec),
+       |q AS (SELECT v AS qv, nrm AS qn FROM c WHERE vec_id = $QueryVec),
        |dscore AS (
        |  SELECT c.vec_id,
        |    ROUND((${Similarity.dotSql("c.v", "qv")}) / (c.nrm * qn), 4)
        |      AS cosine
-       |  FROM c CROSS JOIN q WHERE c.vec_id <> $queryVec
+       |  FROM c CROSS JOIN q WHERE c.vec_id <> $QueryVec
        |),
        |dense AS (
        |  SELECT vec_id AS doc_id, rnk AS dense_rank FROM (
@@ -836,7 +803,7 @@ object Retrieval {
        |      CAST(ROW_NUMBER() OVER (ORDER BY cosine DESC, vec_id)
        |        AS BIGINT) AS rnk
        |    FROM dscore
-       |  ) WHERE rnk <= $kArm
+       |  ) WHERE rnk <= $RrfKArm
        |),
        |sparse AS (
        |  SELECT doc_id, rank AS sparse_rank FROM (
@@ -847,8 +814,8 @@ object Retrieval {
        |  SELECT COALESCE(s.doc_id, d.doc_id) AS doc_id,
        |    CAST(COALESCE(s.sparse_rank, -1) AS BIGINT) AS sparse_rank,
        |    CAST(COALESCE(d.dense_rank, -1) AS BIGINT) AS dense_rank,
-       |    CAST(COALESCE(1000000 // ($rrfK + s.sparse_rank), 0)
-       |      + COALESCE(1000000 // ($rrfK + d.dense_rank), 0) AS BIGINT)
+       |    CAST(COALESCE(1000000 // ($RrfK + s.sparse_rank), 0)
+       |      + COALESCE(1000000 // ($RrfK + d.dense_rank), 0) AS BIGINT)
        |      AS rrf_u
        |  FROM sparse s FULL OUTER JOIN dense d ON s.doc_id = d.doc_id
        |)
@@ -856,7 +823,7 @@ object Retrieval {
        |  SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY rrf_u DESC, doc_id)
        |    AS BIGINT) AS rank
        |  FROM fused
-       |) WHERE rank <= $k""".stripMargin
+       |) WHERE rank <= $RetrieveK""".stripMargin
   }
 
   // ------------------------------------------------------------------
@@ -877,8 +844,8 @@ object Retrieval {
     * loudly instead. Plan: C59's span frame + two (doc, token_idx)
     * equi-joins against the offsets stream + one doc-keyed norm
     * join — all doc-keyed, nothing new at scale. */
-  def dedupSpanChars(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val spans = substringSpansCached(spark, dir, k)
+  def dedupSpanChars(spark: SparkSession, dir: String): DataFrame = {
+    val spans = substringSpansCached(spark, dir)
       .select(col("doc_id"), col("span_seq"), col("tok_start"), col("tok_end"))
     val offs = graft.ops.TextAnalysis.tokenOffsets(spark, dir)
       .select(col("doc_id"), col("token_idx"), col("char_start"),
@@ -910,8 +877,8 @@ object Retrieval {
           col("extract") === col("span_join")).cast("long").as("verified"))
   }
 
-  def dedupSpanCharsSql(k: Int = 8): String = {
-    val spans = dedupSubstringSpansSql(k)
+  def dedupSpanCharsSql(): String = {
+    val spans = dedupSubstringSpansSql()
       .linesIterator.map("    " + _).mkString("\n")
     val offs = graft.ops.TextAnalysis.tokenOffsetsSql
       .linesIterator.map("    " + _).mkString("\n")
@@ -959,8 +926,8 @@ object Retrieval {
     * exact duplicates, which is why the hash is part of the
     * contract). One doc-keyed span collect + one doc-keyed join —
     * nothing beyond C59's own shapes. */
-  def dedupCutApply(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val spans = substringSpansCached(spark, dir, k)
+  def dedupCutApply(spark: SparkSession, dir: String): DataFrame = {
+    val spans = substringSpansCached(spark, dir)
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("tok_start"), col("tok_end"))))
         .as("spans"))
@@ -992,8 +959,8 @@ object Retrieval {
         Portable.hash60(array_join(col("kept_toks"), " ")).as("text_hash"))
   }
 
-  def dedupCutApplySql(k: Int = 8): String = {
-    val spans = dedupSubstringSpansSql(k)
+  def dedupCutApplySql(): String = {
+    val spans = dedupSubstringSpansSql()
       .linesIterator.map("    " + _).mkString("\n")
     s"""WITH spanrows AS (
        |$spans
@@ -1049,9 +1016,9 @@ object Retrieval {
     * offsets) is what prompt-builder debugging actually reads. The
     * rank window is unpartitioned but bounded by the top-k contract
     * (≤ k rows after the broadcast semi-join) — never corpus-scale. */
-  def ragContextPack(spark: SparkSession, dir: String, k: Int = 20,
-                     budget: Long = 600L): DataFrame = {
-    val ranked = hybridRrfTopK(spark, dir, k = k)
+  def ragContextPack(spark: SparkSession, dir: String,
+                     budget: Long = RagBudget): DataFrame = {
+    val ranked = hybridRrfTopK(spark, dir)
       .select(col("doc_id"), col("rank"))
     val toks = Text.docTokens(spark, dir)
       .select(col("doc_id"),
@@ -1071,8 +1038,8 @@ object Retrieval {
           .otherwise("dropped").as("status"))
   }
 
-  def ragContextPackSql(k: Int = 20, budget: Long = 600L): String = {
-    val ranked = hybridRrfTopKSql(k = k)
+  def ragContextPackSql(): String = {
+    val ranked = hybridRrfTopKSql()
       .linesIterator.map("    " + _).mkString("\n")
     s"""WITH ranked AS (
        |$ranked
@@ -1088,13 +1055,13 @@ object Retrieval {
        |  FROM ranked r JOIN toks t ON r.doc_id = t.doc_id
        |)
        |SELECT rank, doc_id, doc_tokens, cum_before,
-       |  GREATEST(0, LEAST(doc_tokens, $budget - cum_before)) AS take_tokens,
-       |  cum_before + GREATEST(0, LEAST(doc_tokens, $budget - cum_before))
+       |  GREATEST(0, LEAST(doc_tokens, $RagBudget - cum_before)) AS take_tokens,
+       |  cum_before + GREATEST(0, LEAST(doc_tokens, $RagBudget - cum_before))
        |    AS ctx_end,
        |  CASE
-       |    WHEN GREATEST(0, LEAST(doc_tokens, $budget - cum_before))
+       |    WHEN GREATEST(0, LEAST(doc_tokens, $RagBudget - cum_before))
        |      = doc_tokens THEN 'full'
-       |    WHEN GREATEST(0, LEAST(doc_tokens, $budget - cum_before)) > 0
+       |    WHEN GREATEST(0, LEAST(doc_tokens, $RagBudget - cum_before)) > 0
        |      THEN 'truncated'
        |    ELSE 'dropped' END AS status
        |FROM j""".stripMargin
@@ -1120,22 +1087,20 @@ object Retrieval {
     * size) for the island merge — nothing global, nothing quadratic.
     * Output: one row per removal span with the doc's totals — exactly
     * what a cut pass downstream consumes. */
-  def dedupSubstringSpans(spark: SparkSession, dir: String,
-                          k: Int = 8): DataFrame =
-    dedupSubstringSpansFrom(Text.docTokens(spark, dir), k)
+  def dedupSubstringSpans(spark: SparkSession, dir: String): DataFrame =
+    dedupSubstringSpansFrom(Text.docTokens(spark, dir))
 
   /** The C59 span ledger, kept per (session, documents, k) by
     * [[Tables.checkpointed]]: C68 (char projection) and C69 (cut
     * apply), the two downstream stages of the cut pipeline, consume it.
     * `dedup_substring_spans` itself recomputes from the parquet inputs. */
-  private[graft] def substringSpansCached(spark: SparkSession, dir: String,
-                                          k: Int): DataFrame =
-    Tables.checkpointed(spark, "spans", dir, "documents", k)(
-      dedupSubstringSpans(spark, dir, k).localCheckpoint())
+  private[graft] def substringSpansCached(spark: SparkSession, dir: String): DataFrame =
+    Tables.checkpointed(spark, "spans", dir, "documents", ())(
+      dedupSubstringSpans(spark, dir).localCheckpoint())
 
   /** Positioned 60-bit gram-hash occurrences of a documents frame
     * (shared by C59 and its streaming twin's static-index builder). */
-  private[graft] def substringOcc(docsFrame: DataFrame, k: Int = 8): DataFrame =
+  private[graft] def substringOcc(docsFrame: DataFrame, k: Int = SubstrK): DataFrame =
     Text.withToks(docsFrame)
       .select(col("doc_id"), col("toks"))
       .withColumn("doc_tokens", size(col("toks")).cast("long"))
@@ -1151,8 +1116,8 @@ object Retrieval {
     * of the batch C59 below (ONE definition for both consumers, in the
     * single-exchange countDistinct form: map-side (gh, doc_id) dedup
     * inside the partial aggregate, one hash(gh) shuffle). */
-  private[graft] def dupGramSet(docsFrame: DataFrame, k: Int = 8): DataFrame =
-    dupGramSetFromOcc(substringOcc(docsFrame, k))
+  private[graft] def dupGramSet(docsFrame: DataFrame): DataFrame =
+    dupGramSetFromOcc(substringOcc(docsFrame))
 
   private def dupGramSetFromOcc(occ: DataFrame): DataFrame =
     occ
@@ -1161,7 +1126,7 @@ object Retrieval {
       .select(col("gh"))
 
   private[graft] def dedupSubstringSpansFrom(docsFrame: DataFrame,
-                                             k: Int = 8): DataFrame = {
+                                             k: Int = SubstrK): DataFrame = {
     // The df>=2 index branch used to run distinct-on-(gh, doc_id)
     // [Exchange hash(gh, doc_id)] and THEN groupBy(gh) [Exchange
     // hash(gh)] — two corpus-scale exchanges where one suffices: the
@@ -1199,15 +1164,15 @@ object Retrieval {
           * lit(1000000L), col("doc_tokens")).as("dup_ppm"))
   }
 
-  def dedupSubstringSpansSql(k: Int = 8): String = {
+  def dedupSubstringSpansSql(): String = {
     val gramChain = "toks[i]" +
-      (1 until k).map(j => s" || ' ' || toks[i+$j]").mkString
+      (1 until SubstrK).map(j => s" || ' ' || toks[i+$j]").mkString
     s"""WITH t AS (
        |  SELECT doc_id, ${Text.tokensSql("text")} AS toks FROM documents
        |), g AS (
        |  SELECT doc_id, CAST(len(toks) AS BIGINT) AS doc_tokens,
-       |    CASE WHEN len(toks) >= $k
-       |      THEN list_transform(range(1, len(toks) - ${k - 2}),
+       |    CASE WHEN len(toks) >= $SubstrK
+       |      THEN list_transform(range(1, len(toks) - ${SubstrK - 2}),
        |           i -> $gramChain)
        |      ELSE [] END AS grams
        |  FROM t
@@ -1226,7 +1191,7 @@ object Retrieval {
        |  WHERE gdf >= 2
        |), marked AS (
        |  SELECT o.doc_id, o.doc_tokens, o.pos,
-       |    MAX(o.pos + $k) OVER (PARTITION BY o.doc_id ORDER BY o.pos
+       |    MAX(o.pos + $SubstrK) OVER (PARTITION BY o.doc_id ORDER BY o.pos
        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
        |  FROM occ o JOIN dup USING (gh)
        |), islands AS (
@@ -1237,7 +1202,7 @@ object Retrieval {
        |  FROM marked
        |), spans AS (
        |  SELECT doc_id, doc_tokens, island,
-       |    MIN(pos) AS tok_start, MAX(pos) + $k AS tok_end
+       |    MIN(pos) AS tok_start, MAX(pos) + $SubstrK AS tok_end
        |  FROM islands GROUP BY 1, 2, 3
        |)
        |SELECT doc_id,

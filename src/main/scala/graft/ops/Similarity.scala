@@ -29,6 +29,32 @@ import graft.functions.Portable
   */
 object Similarity {
 
+  /** Query vectors every ANN operator probes (ids 0 until NQueries). */
+  val NQueries = 8
+  /** Neighbours returned: [[annTopK]], [[annMatryoshkaTopK]], the
+    * LSH/IVF/PQ indexes, [[knnGraph]] and [[hardNegatives]]. */
+  val AnnK = 5
+  val MatryoshkaK = 10
+  val AnnTopK = 3
+  val KnnK = 3
+  val HardNegK = 5
+  /** [[annMatryoshkaTopK]]'s prefix and [[randomProjection]]'s output
+    * dimension. */
+  val PrefixDim = 16
+  val ProjDim = 16
+  /** Cosine near-duplicate threshold ([[cosinePairs]], [[dedupSemantic]])
+    * and [[cosinePairs]]' LSH band count. */
+  val CosineTau = 0.4
+  val CosineBands = 8
+  /** Target rows per LSH bucket, from which the plane count derives. */
+  val TargetBucket = 32L
+  /** [[annIvf]]'s lists probed per query. */
+  val NProbe = 8
+  /** [[embeddingDimStats]]' dead-dimension variance floor (×1e12). */
+  val DeadVarE12 = 1000000L
+  /** [[clusterLabelTfidf]]'s label terms. */
+  val LabelTopK = 5
+
   val Dim = 64
 
   /** Deterministic ±1 hyperplane rows (java.util.Random LCG is
@@ -86,22 +112,22 @@ object Similarity {
     * it). Pure integer ladder — no float log2 on either engine
     * ([[bandBitsSql]] renders the identical CASE ladder over
     * COUNT(*)). */
-  private[graft] def bandBits(n: Long, targetBucket: Long = 32L): Int = {
+  private[graft] def bandBits(n: Long): Int = {
     var b = 4
-    while (b < MaxBandBits && n > (targetBucket << b)) b += 1
+    while (b < MaxBandBits && n > (TargetBucket << b)) b += 1
     b
   }
 
-  private[ops] def bandBitsSql(cnt: String, targetBucket: Long = 32L): String = {
+  private[ops] def bandBitsSql(cnt: String): String = {
     val arms = (4 until MaxBandBits)
-      .map(b => s"WHEN $cnt <= ${targetBucket << b} THEN $b")
+      .map(b => s"WHEN $cnt <= ${TargetBucket << b} THEN $b")
       .mkString(" ")
     s"CASE $arms ELSE $MaxBandBits END"
   }
 
   /** C5 — near-duplicate cosine pairs within label blocks, LSH-banded.
     *
-    * Candidate generation is `bands` independent sign-bit keys of
+    * Candidate generation is [[CosineBands]] independent sign-bit keys of
     * bitsPerBand hyperplanes each, where bitsPerBand is DERIVED from
     * the corpus count ([[bandBits]]): a pair is a candidate iff it
     * agrees on ALL bits of ≥1 band within its label block (standard
@@ -114,11 +140,10 @@ object Similarity {
     * width from its own COUNT(*) and computes the identical bands, so
     * the operator's full contract — including its recall geometry —
     * is checked. */
-  def cosinePairs(spark: SparkSession, dir: String, tau: Double = 0.4,
-                  bands: Int = 8, targetBucket: Long = 32L): DataFrame = {
+  def cosinePairs(spark: SparkSession, dir: String): DataFrame = {
     val c = corpus(spark, dir)
-    val bitsPerBand = bandBits(c.count(), targetBucket)
-    val w = planes(bands * MaxBandBits, seed = 42L)
+    val bitsPerBand = bandBits(c.count())
+    val w = planes(CosineBands * MaxBandBits, seed = 42L)
     // ONE native expression computes every band key in a single tight
     // loop per row (graft.functions.HyperplaneBandKeys): the previous
     // bands×bits separate projection columns generated code past the
@@ -127,7 +152,7 @@ object Similarity {
     // here). Only the bits a band actually uses are computed (the
     // oracle computes all MaxBandBits and truncates — same key).
     val banded = c.select(col("vec_id"), col("label"),
-        posexplode(graft.functions.VectorExprs.bandKeys(col("v"), w, bands,
+        posexplode(graft.functions.VectorExprs.bandKeys(col("v"), w, CosineBands,
           bitsPerBand, MaxBandBits)).as(Seq("band_id", "band_key")))
     val cand = banded.as("x").join(banded.as("y"), Seq("label", "band_id", "band_key"))
       .filter(col("x.vec_id") < col("y.vec_id"))
@@ -137,17 +162,16 @@ object Similarity {
       .join(c.select(col("vec_id").as("vec_a"), col("v").as("va"), col("nrm").as("na")), "vec_a")
       .join(c.select(col("vec_id").as("vec_b"), col("v").as("vb"), col("nrm").as("nb")), "vec_b")
       .withColumn("cosine", round(dot("va", "vb") / (col("na") * col("nb")), 4))
-      .filter(col("cosine") >= tau)
+      .filter(col("cosine") >= CosineTau)
       .select(col("label"), col("vec_a"), col("vec_b"), col("cosine"))
   }
 
-  def cosinePairsSql(tau: Double = 0.4, bands: Int = 8,
-                     targetBucket: Long = 32L): String = {
-    val w = planes(bands * MaxBandBits, seed = 42L)
+  def cosinePairsSql(): String = {
+    val w = planes(CosineBands * MaxBandBits, seed = 42L)
     // The oracle renders the FULL MaxBandBits-char key per band and
     // truncates to the COUNT-derived width — exactly the prefix the
     // Spark side computes from the same plane grid.
-    val bandSelects = (0 until bands).map { b =>
+    val bandSelects = (0 until CosineBands).map { b =>
       val key = (0 until MaxBandBits).map { r =>
         s"(CASE WHEN ${projSql("v", w(b * MaxBandBits + r))} >= 0 THEN '1' ELSE '0' END)"
       }.mkString("CONCAT(", ", ", ")")
@@ -157,7 +181,7 @@ object Similarity {
     }.mkString("\n  UNION ALL\n  ")
     s"""WITH $corpusSql,
        |p AS (
-       |  SELECT CAST(${bandBitsSql("COUNT(*)", targetBucket)} AS INT) AS bpb
+       |  SELECT CAST(${bandBitsSql("COUNT(*)")} AS INT) AS bpb
        |  FROM c
        |),
        |b AS (
@@ -171,14 +195,14 @@ object Similarity {
        |  FROM cand
        |  JOIN c a ON a.vec_id = cand.vec_a
        |  JOIN c b ON b.vec_id = cand.vec_b)
-       |SELECT label, vec_a, vec_b, cosine FROM scored WHERE cosine >= $tau""".stripMargin
+       |SELECT label, vec_a, vec_b, cosine FROM scored WHERE cosine >= $CosineTau""".stripMargin
   }
 
   /** C6 — brute-force exact ANN: top-k cosine neighbors for each query
     * vector (vec_id < nQueries). The query side is a broadcast; the
     * corpus is scanned once; ranking is per-query top-k on the rounded
     * score with vec_id tiebreak (deterministic). */
-  def annTopK(spark: SparkSession, dir: String, nQueries: Int = 8, k: Int = 5): DataFrame = {
+  def annTopK(spark: SparkSession, dir: String, nQueries: Int = NQueries, k: Int = AnnK): DataFrame = {
     val c = corpus(spark, dir)
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -190,18 +214,18 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), col("cosine"), col("rank"))
   }
 
-  def annTopKSql(nQueries: Int = 8, k: Int = 5): String =
+  def annTopKSql(): String =
     s"""WITH $corpusSql,
        |scored AS (
        |  SELECT a.vec_id AS query_id, b.vec_id,
        |    ROUND((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm), 4) AS cosine
-       |  FROM c a JOIN c b ON a.vec_id < $nQueries AND b.vec_id <> a.vec_id
+       |  FROM c a JOIN c b ON a.vec_id < $NQueries AND b.vec_id <> a.vec_id
        |)
        |SELECT query_id, vec_id, cosine, rank FROM (
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |    ORDER BY cosine DESC, vec_id) AS rank
        |  FROM scored
-       |) WHERE rank <= $k""".stripMargin
+       |) WHERE rank <= $AnnK""".stripMargin
 
   /** C57 — per-dimension embedding statistics: the dead/collapsed
     * dimension audit run before trusting an embedding column (and
@@ -215,8 +239,7 @@ object Similarity {
     * integer identity E[q²] − E[q]² (truncating divisions,
     * non-negative). One posexplode + ONE 64-group partial-agg shuffle
     * — at any corpus size the reduce state is `Dim` rows. */
-  def embeddingDimStats(spark: SparkSession, dir: String,
-                        deadVarE12: Long = 1000000L): DataFrame =
+  def embeddingDimStats(spark: SparkSession, dir: String): DataFrame =
     corpus(spark, dir)
       .select(posexplode(col("v")).as(Seq("dim", "x")))
       .withColumn("q", round(col("x") * 1000000d).cast("long"))
@@ -229,11 +252,11 @@ object Similarity {
       .withColumn("var_e12",
         call_function("div", col("ss_q"), col("n_vecs")) -
           col("mean_micro") * col("mean_micro"))
-      .withColumn("dead", (col("var_e12") < deadVarE12).cast("long"))
+      .withColumn("dead", (col("var_e12") < DeadVarE12).cast("long"))
       .select(col("dim"), col("n_vecs"), col("mean_micro"), col("var_e12"),
         col("dead"))
 
-  def embeddingDimStatsSql(deadVarE12: Long = 1000000L): String =
+  def embeddingDimStatsSql(): String =
     s"""WITH $corpusSql,
        |q AS (
        |  SELECT CAST(e.i - 1 AS BIGINT) AS dim,
@@ -258,7 +281,7 @@ object Similarity {
        |  CAST(CASE WHEN ss_q // n_vecs
        |    - ((sum_q - ((sum_q % n_vecs + n_vecs) % n_vecs)) // n_vecs)
        |      * ((sum_q - ((sum_q % n_vecs + n_vecs) % n_vecs)) // n_vecs)
-       |    < $deadVarE12 THEN 1 ELSE 0 END AS BIGINT) AS dead
+       |    < $DeadVarE12 THEN 1 ELSE 0 END AS BIGINT) AS dead
        |FROM s""".stripMargin
 
   /** C56 — Matryoshka prefix-dimension retrieval audit: serve ANN from
@@ -275,8 +298,8 @@ object Similarity {
     * both arms per row, two rank windows on the same query-keyed
     * shuffle, then a per-query reduce — the C6 discipline, nothing
     * quadratic. */
-  def annMatryoshkaTopK(spark: SparkSession, dir: String, nQueries: Int = 8,
-                        k: Int = 10, prefixDim: Int = 16): DataFrame = {
+  def annMatryoshkaTopK(spark: SparkSession, dir: String, nQueries: Int = NQueries,
+                        k: Int = MatryoshkaK, prefixDim: Int = PrefixDim): DataFrame = {
     val c = corpus(spark, dir)
       .withColumn("vp", expr(s"slice(v, 1, $prefixDim)"))
       .withColumn("np", sqrt(dot("vp", "vp")))
@@ -307,20 +330,19 @@ object Similarity {
         col("top1_match"))
   }
 
-  def annMatryoshkaTopKSql(nQueries: Int = 8, k: Int = 10,
-                           prefixDim: Int = 16): String = {
+  def annMatryoshkaTopKSql(): String = {
     def dotN(a: String, b: String) =
-      (1 to prefixDim).map(i => s"$a[$i] * $b[$i]").mkString(" + ")
+      (1 to PrefixDim).map(i => s"$a[$i] * $b[$i]").mkString(" + ")
     s"""WITH $corpusSql,
        |cp AS (
-       |  SELECT vec_id, label, v, nrm, v[1:$prefixDim] AS vp,
+       |  SELECT vec_id, label, v, nrm, v[1:$PrefixDim] AS vp,
        |    sqrt(${dotN("v", "v")}) AS np
        |  FROM c
        |), scored AS (
        |  SELECT a.vec_id AS query_id, b.vec_id,
        |    ROUND((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm), 4) AS cos_full,
        |    ROUND((${dotN("a.vp", "b.vp")}) / (a.np * b.np), 4) AS cos_pre
-       |  FROM cp a JOIN cp b ON a.vec_id < $nQueries AND b.vec_id <> a.vec_id
+       |  FROM cp a JOIN cp b ON a.vec_id < $NQueries AND b.vec_id <> a.vec_id
        |), ranked AS (
        |  SELECT *,
        |    ROW_NUMBER() OVER (PARTITION BY query_id
@@ -330,14 +352,14 @@ object Similarity {
        |  FROM scored
        |)
        |SELECT query_id,
-       |  CAST(SUM(CASE WHEN rank_full <= $k AND rank_pre <= $k
+       |  CAST(SUM(CASE WHEN rank_full <= $MatryoshkaK AND rank_pre <= $MatryoshkaK
        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_overlap,
-       |  CAST(SUM(CASE WHEN rank_full <= $k AND rank_pre <= $k
-       |    THEN 1 ELSE 0 END) * 1000000 // $k AS BIGINT) AS overlap_ppm,
+       |  CAST(SUM(CASE WHEN rank_full <= $MatryoshkaK AND rank_pre <= $MatryoshkaK
+       |    THEN 1 ELSE 0 END) * 1000000 // $MatryoshkaK AS BIGINT) AS overlap_ppm,
        |  CAST(MAX(CASE WHEN rank_full = 1 AND rank_pre = 1
        |    THEN 1 ELSE 0 END) AS BIGINT) AS top1_match
        |FROM ranked
-       |WHERE rank_full <= $k OR rank_pre <= $k
+       |WHERE rank_full <= $MatryoshkaK OR rank_pre <= $MatryoshkaK
        |GROUP BY 1""".stripMargin
   }
 
@@ -359,22 +381,21 @@ object Similarity {
     * re-seats existing planes and the oracle can compute the full
     * bucket and mask to 2^q. */
   private val MaxBucketPlanes = 16
-  private[graft] def planeCount(n: Long, targetBucket: Long = 32L): Int = {
+  private[graft] def planeCount(n: Long): Int = {
     var q = 6
-    while (q < MaxBucketPlanes && n > (targetBucket << q)) q += 1
+    while (q < MaxBucketPlanes && n > (TargetBucket << q)) q += 1
     q
   }
-  private[ops] def planeMaskSql(cnt: String, targetBucket: Long = 32L): String = {
+  private[ops] def planeMaskSql(cnt: String): String = {
     val arms = (6 until MaxBucketPlanes)
-      .map(q => s"WHEN $cnt <= ${targetBucket << q} THEN ${(1L << q) - 1L}")
+      .map(q => s"WHEN $cnt <= ${TargetBucket << q} THEN ${(1L << q) - 1L}")
       .mkString(" ")
     s"CASE $arms ELSE ${(1L << MaxBucketPlanes) - 1L} END"
   }
 
-  def annLshBucketed(spark: SparkSession, dir: String,
-                     targetBucket: Long = 32L, nQueries: Int = 8, k: Int = 3): DataFrame = {
+  def annLshBucketed(spark: SparkSession, dir: String): DataFrame = {
     val c0 = corpus(spark, dir)
-    val nPlanes = planeCount(c0.count(), targetBucket)
+    val nPlanes = planeCount(c0.count())
     val w = planes(MaxBucketPlanes, seed = 7L)
     // two-step bit columns (JIT-able codegen units), then the bucket
     // sum
@@ -386,7 +407,7 @@ object Similarity {
       .withColumn("bucket", (0 until nPlanes).map(p => col(s"bp$p")).reduce(_ + _))
       .drop((0 until nPlanes).map(p => s"bp$p"): _*)
     val probeMasks = 0L +: (0 until nPlanes).map(p => 1L << p)
-    val q = c.filter(col("vec_id") < nQueries)
+    val q = c.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("bucket").as("qbucket"))
       .select(col("query_id"), col("qv"), col("qn"),
@@ -396,7 +417,7 @@ object Similarity {
       .withColumn("cosine", round(dot("qv", "v") / (col("qn") * col("nrm")), 4))
     val win = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(win).cast("long"))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= AnnTopK)
       .select(col("query_id"), col("bucket"), col("vec_id"), col("cosine"), col("rank"))
   }
 
@@ -426,7 +447,7 @@ object Similarity {
 
   /** C13 — IVF-bucketed ANN (inverted-file index): the corpus is
     * assigned to its nearest centroid; a query scores only the lists of
-    * its `nProbe` nearest centroids. This is the second scale path next
+    * its [[NProbe]] nearest centroids. This is the second scale path next
     * to hyperplane LSH (C7): centroid lists adapt to the data
     * distribution, and probing more lists trades work for recall.
     *
@@ -507,12 +528,12 @@ object Similarity {
     (cents, lists)
   }
 
-  def annIvf(spark: SparkSession, dir: String, nProbe: Int = 8,
-             nQueries: Int = 8, topK: Int = 3): DataFrame = {
+  def annIvf(spark: SparkSession, dir: String,
+             nQueries: Int = NQueries): DataFrame = {
     val (cents, lists) = ivfIndex(spark, dir)
     val queries = lists.filter(col("vec_id") < nQueries)
       .select(col("vec_id"), col("v"), col("nrm"))
-    val qprobe = nearestCents(queries, cents, nProbe)
+    val qprobe = nearestCents(queries, cents, NProbe)
       .select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("cent_id"))
     val win = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("vec_id"))
@@ -520,7 +541,7 @@ object Similarity {
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", round(dot("qv", "v") / (col("qn") * col("nrm")), 4))
       .withColumn("rank", row_number().over(win).cast("long"))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= AnnTopK)
       .select(col("query_id"), col("cent_id"), col("vec_id"), col("cosine"), col("rank"))
   }
 
@@ -564,13 +585,13 @@ object Similarity {
        |  ) WHERE rn = 1)""".stripMargin
   }
 
-  def annIvfSql(nProbe: Int = 8, nQueries: Int = 8, topK: Int = 3): String = {
+  def annIvfSql(): String = {
     s"""WITH $ivfAssignedCtes,
        |qprobe AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, cent_id FROM (
        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
        |      ORDER BY sim DESC, cent_id) AS rn
-       |    FROM s1 WHERE vec_id < $nQueries
-       |  ) WHERE rn <= $nProbe),
+       |    FROM s1 WHERE vec_id < $NQueries
+       |  ) WHERE rn <= $NProbe),
        |scored AS (SELECT q.query_id, a.cent_id, a.vec_id,
        |    ROUND((${dotSql("q.qv", "a.v")}) / (q.qn * a.nrm), 4) AS cosine
        |  FROM qprobe q JOIN assigned a ON a.cent_id = q.cent_id
@@ -579,7 +600,7 @@ object Similarity {
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |    ORDER BY cosine DESC, vec_id) AS rank
        |  FROM scored
-       |) WHERE rank <= $topK""".stripMargin
+       |) WHERE rank <= $AnnTopK""".stripMargin
   }
 
   /** C25 — semantic dedup (SemDeDup-style: arXiv:2303.09540 — dedup in
@@ -599,7 +620,7 @@ object Similarity {
     * choice is one window per dropped doc. The dropped set feeds C18's
     * cluster resolution exactly like the MinHash pair stream. */
   def dedupSemantic(spark: SparkSession, dir: String,
-                    tau: Double = 0.4): DataFrame = {
+                    tau: Double = CosineTau): DataFrame = {
     val (_, lists) = ivfIndex(spark, dir)
     val a = lists.select(col("cent_id"), col("vec_id").as("dup_of"),
       col("v").as("va"), col("nrm").as("na"))
@@ -615,7 +636,7 @@ object Similarity {
       .select(col("doc_id"), col("cent_id"), col("dup_of"), col("cosine"))
   }
 
-  def dedupSemanticSql(tau: Double = 0.4): String =
+  def dedupSemanticSql(): String =
     s"""WITH $ivfAssignedCtes,
        |pairs AS (SELECT b.vec_id AS doc_id, a.cent_id, a.vec_id AS dup_of,
        |    ROUND((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm), 4) AS cosine
@@ -624,7 +645,7 @@ object Similarity {
        |SELECT doc_id, cent_id, dup_of, cosine FROM (
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
        |    ORDER BY dup_of) AS rn
-       |  FROM pairs WHERE cosine >= $tau
+       |  FROM pairs WHERE cosine >= $CosineTau
        |) WHERE rn = 1""".stripMargin
 
   /** C29 — kNN-graph construction over the embedding corpus: each
@@ -639,7 +660,7 @@ object Similarity {
     * per-src top-k window on the cell join; the mutual flag is a
     * self-equi-join of the (n·k)-row edge frame on the reversed key —
     * edge-scale, not corpus-scale. */
-  def knnGraph(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
+  def knnGraph(spark: SparkSession, dir: String): DataFrame = {
     val (_, lists) = ivfIndex(spark, dir)
     val a = lists.select(col("cent_id"), col("vec_id").as("src"),
       col("v").as("va"), col("nrm").as("na"))
@@ -650,7 +671,7 @@ object Similarity {
       .filter(col("src") =!= col("dst"))
       .withColumn("cosine", round(dot("va", "vb") / (col("na") * col("nb")), 4))
       .withColumn("rank", row_number().over(win).cast("long"))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= KnnK)
       .select(col("src"), col("dst"), col("rank"), col("cosine"))
     val rev = edges.select(col("dst").as("src"), col("src").as("dst"), lit(1L).as("m"))
     edges.join(rev, Seq("src", "dst"), "left")
@@ -669,7 +690,7 @@ object Similarity {
     * lists of the C13 index ([[ivfIndex]]); the token explode is the
     * one corpus-scale pass, tf/df aggregations are (cells×vocab)- and
     * vocab-bounded, the top-k is a cell-keyed window. */
-  def clusterLabelTfidf(spark: SparkSession, dir: String, topK: Int = 5): DataFrame = {
+  def clusterLabelTfidf(spark: SparkSession, dir: String): DataFrame = {
     val assigned = ivfIndex(spark, dir)._2
       .select(col("vec_id").as("doc_id"), col("cent_id"))
     val toks = graft.ops.Text.docTokens(spark, dir)
@@ -685,12 +706,12 @@ object Similarity {
       .withColumn("score",
         call_function("div", col("tf") * col("n_cells"), col("df_cells")))
       .withColumn("rnk", row_number().over(win).cast("long"))
-      .filter(col("rnk") <= topK)
+      .filter(col("rnk") <= LabelTopK)
       .select(col("cent_id"), col("rnk"), col("term"), col("tf"),
         col("df_cells"), col("score"))
   }
 
-  def clusterLabelTfidfSql(topK: Int = 5): String =
+  def clusterLabelTfidfSql(): String =
     s"""WITH $ivfAssignedCtes,
        |cells AS (SELECT vec_id AS doc_id, cent_id FROM assigned),
        |toks AS (
@@ -709,9 +730,9 @@ object Similarity {
        |    CAST(ROW_NUMBER() OVER (PARTITION BY f.cent_id
        |      ORDER BY f.tf * nc.n_cells // d.df_cells DESC, f.term) AS BIGINT) AS rnk
        |  FROM tf f JOIN dfc d ON f.term = d.term CROSS JOIN nc
-       |) WHERE rnk <= $topK""".stripMargin
+       |) WHERE rnk <= $LabelTopK""".stripMargin
 
-  def knnGraphSql(k: Int = 3): String =
+  def knnGraphSql(): String =
     s"""WITH $ivfAssignedCtes,
        |pairs AS (SELECT a.vec_id AS src, b.vec_id AS dst,
        |    ROUND((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm), 4) AS cosine
@@ -721,7 +742,7 @@ object Similarity {
        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY src
        |      ORDER BY cosine DESC, dst) AS rank
        |    FROM pairs
-       |  ) WHERE rank <= $k)
+       |  ) WHERE rank <= $KnnK)
        |SELECT e.src, e.dst, e.rank, e.cosine,
        |  CAST(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS mutual
        |FROM edges e LEFT JOIN (SELECT dst AS src, src AS dst FROM edges) r
@@ -876,13 +897,12 @@ object Similarity {
     * Scale: the LUT is queries×PqSubspaces×PqSubK rows (broadcast); the
     * scan is the code frame (n×PqSubspaces) joined to it with map-side
     * partial aggregation per (query, vec); one top-k window. */
-  def pqAdcTopK(spark: SparkSession, dir: String, nQueries: Int = 8,
-                topK: Int = 3): DataFrame = {
-    val scores = pqAdcScores(spark, dir, nQueries)
+  def pqAdcTopK(spark: SparkSession, dir: String): DataFrame = {
+    val scores = pqAdcScores(spark, dir, NQueries)
       .filter(col("vec_id") =!= col("query_id"))
     val win = Window.partitionBy(col("query_id")).orderBy(col("adc_e4"), col("vec_id"))
     scores.withColumn("rank", row_number().over(win).cast("long"))
-      .filter(col("rank") <= topK)
+      .filter(col("rank") <= AnnTopK)
       .select(col("query_id"), col("vec_id"), col("rank"), col("adc_e4"))
   }
 
@@ -905,13 +925,13 @@ object Similarity {
       .agg(sum(col("qd_e4")).as("adc_e4"))
   }
 
-  def pqAdcTopKSql(nQueries: Int = 8, topK: Int = 3): String = {
+  def pqAdcTopKSql(): String = {
     val S = Dim / PqSubspaces
     val d2q = (0 until S).map(i =>
       s"(q.sv[${i + 1}] - b.cv[${i + 1}]) * (q.sv[${i + 1}] - b.cv[${i + 1}])")
       .mkString(" + ")
     val qxUnion = (0 until PqSubspaces).map { s =>
-      s"SELECT vec_id AS query_id, $s AS sub, v[${s * S + 1}:${s * S + S}] AS sv FROM c WHERE vec_id < $nQueries"
+      s"SELECT vec_id AS query_id, $s AS sub, v[${s * S + 1}:${s * S + S}] AS sv FROM c WHERE vec_id < $NQueries"
     }.mkString("\n    UNION ALL\n    ")
     val encodeBody = pqEncodeSql()
     // reuse the encode chain up to the assignment CTE `af`
@@ -931,12 +951,12 @@ object Similarity {
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |    ORDER BY adc_e4, vec_id) AS rank
        |  FROM adc WHERE vec_id <> query_id
-       |) WHERE rank <= $topK""".stripMargin
+       |) WHERE rank <= $AnnTopK""".stripMargin
   }
 
   /** C35 — random-projection dimensionality reduction (the
     * Johnson–Lindenstrauss / Achlioptas sign-matrix construction,
-    * public): project 64-dim vectors onto `outDim` seeded ±1
+    * public): project 64-dim vectors onto [[ProjDim]] seeded ±1
     * hyperplanes — the cheap pre-ANN reduction production pipelines
     * run before indexing (4× fewer dims ⇒ 4× cheaper distances; the
     * same literal-hyperplane machinery C5/C7 bucket with, kept
@@ -944,8 +964,8 @@ object Similarity {
     * output ships the %.4f component digest (C17's portable-code
     * pattern) + the e4 projected norm so the oracle checks every
     * component and the spec checks neighborhood preservation. */
-  def randomProjection(spark: SparkSession, dir: String, outDim: Int = 16): DataFrame = {
-    val frame = projFrame(spark, dir, outDim)
+  def randomProjection(spark: SparkSession, dir: String): DataFrame = {
+    val frame = projFrame(spark, dir, ProjDim)
     // + 0.0 normalizes IEEE signed zero before formatting: a projection
     // within 5e-5 of zero rounds to -0.0 under DuckDB's binary ROUND
     // but +0.0 under Spark's decimal-string route, and '%.4f' renders
@@ -954,10 +974,10 @@ object Similarity {
     // landed inside the window)
     frame.select(col("vec_id"), col("label"),
       md5(concat_ws(",",
-        (0 until outDim).map(j =>
+        (0 until ProjDim).map(j =>
           graft.functions.WireRender.fixed4(col(s"p$j") + lit(0.0))): _*)
         .cast("binary")).as("proj_digest"),
-      round(sqrt((0 until outDim).map(j => col(s"p$j") * col(s"p$j"))
+      round(sqrt((0 until ProjDim).map(j => col(s"p$j") * col(s"p$j"))
         .reduce(_ + _)) * 10000.0).cast("long").as("proj_norm_e4"))
   }
 
@@ -970,12 +990,12 @@ object Similarity {
     corpus(spark, dir).select(col("vec_id") +: col("label") +: comps: _*)
   }
 
-  def randomProjectionSql(outDim: Int = 16): String = {
-    val w = planes(outDim, seed = 23L)
-    val comps = (0 until outDim)
+  def randomProjectionSql(): String = {
+    val w = planes(ProjDim, seed = 23L)
+    val comps = (0 until ProjDim)
       .map(j => s"printf('%.4f', ROUND(${projSql("v", w(j))}, 4) + 0.0)")
       .mkString(", ',', ")
-    val norm = (0 until outDim)
+    val norm = (0 until ProjDim)
       .map(j => s"ROUND(${projSql("v", w(j))}, 4) * ROUND(${projSql("v", w(j))}, 4)")
       .mkString(" + ")
     s"""WITH $corpusSql
@@ -1047,8 +1067,7 @@ object Similarity {
        |FROM sc""".stripMargin
   }
 
-  def annLshBucketedSql(targetBucket: Long = 32L, nQueries: Int = 8,
-                        k: Int = 3): String = {
+  def annLshBucketedSql(): String = {
     val w = planes(MaxBucketPlanes, seed = 7L)
     // the oracle computes the FULL fixed-grid bucket and masks it to
     // the COUNT-derived plane count (mask = 2^q - 1 via the ladder)
@@ -1061,11 +1080,11 @@ object Similarity {
         s"WHERE $m <= (SELECT mask FROM pm) OR $m = 0")
       .mkString("\n  UNION ALL\n  ")
     s"""WITH $corpusSql,
-       |pm AS (SELECT ${planeMaskSql("COUNT(*)", targetBucket)} AS mask FROM c),
+       |pm AS (SELECT ${planeMaskSql("COUNT(*)")} AS mask FROM c),
        |cb AS (SELECT vec_id, label, v, nrm,
        |  ($bucketSql) & (SELECT mask FROM pm) AS bucket FROM c),
        |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn, bucket AS qbucket
-       |  FROM cb WHERE vec_id < $nQueries),
+       |  FROM cb WHERE vec_id < $NQueries),
        |probes AS (
        |  $probes
        |),
@@ -1076,7 +1095,7 @@ object Similarity {
        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
        |    ORDER BY cosine DESC, vec_id) AS rank
        |  FROM scored
-       |) WHERE rank <= $k""".stripMargin
+       |) WHERE rank <= $AnnTopK""".stripMargin
   }
 
   // ---------------------------------------------------------------- C62
@@ -1098,7 +1117,7 @@ object Similarity {
     * quadratic in the corpus — the quadratic side is capped by the
     * bounded query block. */
   def hardNegatives(spark: SparkSession, dir: String,
-                    nQueries: Int = 8, k: Int = 5): DataFrame = {
+                    nQueries: Int = NQueries, k: Int = HardNegK): DataFrame = {
     val c = corpus(spark, dir)
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
@@ -1322,8 +1341,7 @@ object Similarity {
     * (partition-local, corpus-volume-free past the scan), one
     * broadcast-literal row-local projection scan; the solve is
     * O(T·dim²) driver arithmetic — dimension-scale, data-free. */
-  def embeddingPcaProject(spark: SparkSession, dir: String,
-                          iters: Int = PcaIters): DataFrame = {
+  def embeddingPcaProject(spark: SparkSession, dir: String): DataFrame = {
     val cells = embeddingCovariance(spark, dir)
       .select(col("i"), col("j"), col("cov_e12")).collect()
     val dim = cells.iterator.map(_.getLong(1)).max.toInt + 1
@@ -1337,7 +1355,7 @@ object Similarity {
       cs(i)(j) = s
       cs(j)(i) = s
     }
-    val x = powerIterate(dim, cs, iters)
+    val x = powerIterate(dim, cs, PcaIters)
     val xlit = typedLit(x.toSeq)
     corpus(spark, dir)
       .withColumn("pc1", xlit)
@@ -1351,7 +1369,7 @@ object Similarity {
         Portable.floorDiv(col("p12"), lit(1000000L)).as("proj_micro"))
   }
 
-  def embeddingPcaProjectSql(iters: Int = PcaIters): String = {
+  def embeddingPcaProjectSql(): String = {
     // mirrored integer cell table in micro units
     val mirror =
       s"""cm AS MATERIALIZED (
@@ -1373,7 +1391,7 @@ object Similarity {
          |      THEN CAST(1000000 AS BIGINT) ELSE CAST(0 AS BIGINT) END AS xv
          |  FROM (SELECT DISTINCT i FROM cm) cm
          |)""".stripMargin
-    val steps = (1 to iters).map { t =>
+    val steps = (1 to PcaIters).map { t =>
       s"""y$t AS MATERIALIZED (
          |  SELECT cm.i AS dim, CAST(SUM(cm.cov_s * p.xv) AS BIGINT) AS y
          |  FROM cm JOIN x${t - 1} p ON cm.j = p.dim GROUP BY 1
@@ -1397,18 +1415,18 @@ object Similarity {
        |  SELECT c.vec_id, CAST(c.label AS BIGINT) AS label,
        |    CAST(SUM(CAST(ROUND(c.v[CAST(d.dim AS INT) + 1] * 1000000, 0)
        |      AS BIGINT) * d.xv) AS BIGINT) AS p12
-       |  FROM c CROSS JOIN x$iters d
+       |  FROM c CROSS JOIN x$PcaIters d
        |  GROUP BY c.vec_id, c.label
        |)""".stripMargin
   }
 
-  def hardNegativesSql(nQueries: Int = 8, k: Int = 5): String =
+  def hardNegativesSql(): String =
     s"""WITH $corpusSql,
        |scored AS (
        |  SELECT a.vec_id AS query_id, a.label AS qlabel,
        |    b.vec_id, b.label,
        |    ROUND((${dotSql("a.v", "b.v")}) / (a.nrm * b.nrm), 4) AS cosine
-       |  FROM c a JOIN c b ON a.vec_id < $nQueries AND b.vec_id <> a.vec_id
+       |  FROM c a JOIN c b ON a.vec_id < $NQueries AND b.vec_id <> a.vec_id
        |), pos AS (
        |  SELECT query_id, MAX(cosine) AS pos_best_cosine
        |  FROM scored WHERE label = qlabel GROUP BY 1
@@ -1423,5 +1441,5 @@ object Similarity {
        |  COALESCE(p.pos_best_cosine, -2.0) AS pos_best_cosine,
        |  ROUND(COALESCE(p.pos_best_cosine, -2.0) - n.cosine, 4) AS margin
        |FROM neg n LEFT JOIN pos p ON n.query_id = p.query_id
-       |WHERE n.neg_rank <= $k""".stripMargin
+       |WHERE n.neg_rank <= $HardNegK""".stripMargin
 }

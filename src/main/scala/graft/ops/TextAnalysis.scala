@@ -11,6 +11,13 @@ import graft.util.Tables
   */
 object TextAnalysis {
 
+  /** [[vocabCoverage]]'s vocabulary size. */
+  val VocabSize = 16
+  /** [[qualityModelFilter]]'s raw score threshold and
+    * [[qualityCalibration]]'s top share. */
+  val QualityRawTau = 290000L
+  val CalibTopPpm = 500000L
+
   private val markers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq("the", "and", "of", "to", "a"),
     "es" -> Seq("el", "la", "de", "los", "que"),
@@ -116,8 +123,7 @@ object TextAnalysis {
     * integer-exact (ppm ratios / scaled means, truncating div on
     * non-negative values), and the score is one BIGINT dot product —
     * row-local, zero shuffle, fully oracle-checkable. keep ⇔ score ≥ τ. */
-  def qualityModelFilter(spark: SparkSession, dir: String,
-                         tau: Long = 290000L): DataFrame =
+  def qualityModelFilter(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), Text.norm(col("text")).as("norm"))
       .withColumn("toks", split(col("norm"), " "))
@@ -142,12 +148,12 @@ object TextAnalysis {
         col("stop_ppm") * lit(200L) + col("len_sat_ppm") * lit(500L) -
           col("punct_ppm") * lit(300L) - col("digit_ppm") * lit(100L) +
           col("wordlen_e3") * lit(50L), lit(1000L)))
-      .withColumn("keep", (col("score") >= tau).cast("long"))
+      .withColumn("keep", (col("score") >= QualityRawTau).cast("long"))
       .select(col("doc_id"), col("n_tokens"), col("stop_ppm"), col("punct_ppm"),
         col("digit_ppm"), col("len_sat_ppm"), col("wordlen_e3"),
         col("score"), col("keep"))
 
-  def qualityModelFilterSql(tau: Long = 290000L): String =
+  def qualityModelFilterSql(): String =
     s"""WITH t AS (
        |  SELECT doc_id, ${Text.normSql("text")} AS norm FROM documents
        |), f AS (
@@ -173,7 +179,7 @@ object TextAnalysis {
        |  (stop_ppm * 200 + len_sat_ppm * 500 - punct_ppm * 300
        |    - digit_ppm * 100 + wordlen_e3 * 50) // 1000 AS score,
        |  CAST(((stop_ppm * 200 + len_sat_ppm * 500 - punct_ppm * 300
-       |    - digit_ppm * 100 + wordlen_e3 * 50) // 1000 >= $tau) AS BIGINT) AS keep
+       |    - digit_ppm * 100 + wordlen_e3 * 50) // 1000 >= $QualityRawTau) AS BIGINT) AS keep
        |FROM m""".stripMargin
 
   /** C55 — token→char offset map: the span-annotation infrastructure
@@ -292,7 +298,7 @@ object TextAnalysis {
     * token stream (explode again, broadcast hash join — no second
     * corpus shuffle for membership); the per-doc profile is one
     * doc-keyed aggregation. */
-  def vocabCoverage(spark: SparkSession, dir: String, vocabSize: Int = 16): DataFrame = {
+  def vocabCoverage(spark: SparkSession, dir: String, vocabSize: Int = VocabSize): DataFrame = {
     val toks = Text.docTokens(spark, dir)
       .select(col("doc_id"), explode(col("toks")).as("w"))
     val vocab = toks.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
@@ -504,13 +510,13 @@ object TextAnalysis {
        |       ELSE CAST(0 AS BIGINT) END AS keep
        |FROM scored CROSS JOIN b""".stripMargin
 
-  def vocabCoverageSql(vocabSize: Int = 16): String =
+  def vocabCoverageSql(): String =
     s"""WITH toks AS (
        |  SELECT doc_id, unnest(${Text.tokensSql("text")}) AS w FROM documents
        |), vocab AS (
        |  SELECT w FROM (
        |    SELECT w, COUNT(*) AS cnt FROM toks GROUP BY 1)
-       |  ORDER BY cnt DESC, w LIMIT $vocabSize
+       |  ORDER BY cnt DESC, w LIMIT $VocabSize
        |)
        |SELECT t.doc_id,
        |  CAST(COUNT(*) AS BIGINT) AS n_tokens,
@@ -537,17 +543,15 @@ object TextAnalysis {
     * scores, never corpus rows, so few-huge-sources skew can't bite),
     * then join the calibrated score back by (source, score). Output
     * carries BOTH verdicts — keep_raw (global raw threshold) and
-    * keep_cal (top `topPpm` of each source) — because their
+    * keep_cal (top [[CalibTopPpm]] of each source) — because their
     * disagreement IS the audit: keep_cal holds each source's keep
     * rate at ~topPpm by construction while keep_raw rates vary
     * freely (spec-asserted). Ties share a percentile (grid-derived),
     * so a tie straddling the cut keeps or drops as one block —
     * deterministic in both engines. */
-  def qualityCalibration(spark: SparkSession, dir: String,
-                         rawTau: Long = 290000L,
-                         topPpm: Long = 500000L): DataFrame = {
+  def qualityCalibration(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = qualityModelFilter(spark, dir, rawTau)
+    val scored = qualityModelFilter(spark, dir)
       .select(col("doc_id"), col("score"))
       .join(Tables.documents(spark, dir).select(col("doc_id"), col("source")),
         "doc_id")
@@ -563,13 +567,12 @@ object TextAnalysis {
           .as("cal_ppm"))
     scored.join(cal, Seq("source", "score"))
       .select(col("doc_id"), col("source"), col("score"), col("cal_ppm"),
-        (col("score") >= rawTau).cast("long").as("keep_raw"),
-        (col("cal_ppm") > lit(1000000L - topPpm)).cast("long").as("keep_cal"))
+        (col("score") >= QualityRawTau).cast("long").as("keep_raw"),
+        (col("cal_ppm") > lit(1000000L - CalibTopPpm)).cast("long").as("keep_cal"))
   }
 
-  def qualityCalibrationSql(rawTau: Long = 290000L,
-                            topPpm: Long = 500000L): String = {
-    val model = qualityModelFilterSql(rawTau)
+  def qualityCalibrationSql(): String = {
+    val model = qualityModelFilterSql()
       .linesIterator.map("    " + _).mkString("\n")
     s"""WITH model AS (
        |$model
@@ -590,8 +593,8 @@ object TextAnalysis {
        |    ON c.source = t.source
        |)
        |SELECT s.doc_id, s.source, s.score, c.cal_ppm,
-       |  CAST(s.score >= $rawTau AS BIGINT) AS keep_raw,
-       |  CAST(c.cal_ppm > ${1000000L - topPpm} AS BIGINT) AS keep_cal
+       |  CAST(s.score >= $QualityRawTau AS BIGINT) AS keep_raw,
+       |  CAST(c.cal_ppm > ${1000000L - CalibTopPpm} AS BIGINT) AS keep_cal
        |FROM scored s JOIN cal c
        |  ON s.source = c.source AND s.score = c.score""".stripMargin
   }

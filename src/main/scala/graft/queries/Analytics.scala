@@ -24,6 +24,23 @@ import graft.util.Tables
   */
 object Analytics {
 
+  /** [[qRangeJoin]]'s range (and its stream twin's): a view within 24 h
+    * before a purchase. */
+  val RangeJoinUs = 86400000000L
+  /** [[bucketedCum]]'s bucket width. */
+  val BktWidth = 1048576L
+  /** [[qSaltedSkewJoin]]'s salt fan-out of the skewed join key. */
+  val SkewSalts = 8
+  /** [[qRollingDistinct]]'s window, days. */
+  val RollingDays = 7
+  /** [[qConcurrencyGauge]]'s session duration and sampling grid. */
+  val GaugeDurUs = 300000000L
+  val GaugeGridUs = 60000000L
+  /** [[qRangeFrame]]'s RANGE frame width. */
+  val RangeFrameUs = 3600000000L
+  /** [[qHistogram]]'s bucket count. */
+  val HistBuckets = 20
+
   private val revenue = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
 
   /** Integral divide (Spark's `div`, truncating). Callers guarantee a
@@ -45,8 +62,8 @@ object Analytics {
     * passes cells already checkpointed — both internal consumers and
     * the caller's own reuse hit the one materialization. */
   private def bucketedCum(cells: DataFrame, part: String, v: String,
-      cnt: String, bktWidth: Long = 1048576L): DataFrame = {
-    val bucketed = cells.withColumn("bkt", ldiv(col(v), lit(bktWidth)))
+      cnt: String): DataFrame = {
+    val bucketed = cells.withColumn("bkt", ldiv(col(v), lit(BktWidth)))
     val off = bucketed.groupBy(col(part), col("bkt"))
       .agg(sum(col(cnt)).as("bcnt"))
       .withColumn("boff", coalesce(sum(col("bcnt")).over(
@@ -860,7 +877,7 @@ object Analytics {
     * PlanQualitySpec forbids). One shuffle each side + one aggregation.
     * Purchase-side explode is ×2, the fixed fan-out. */
   def qRangeJoin(spark: SparkSession, dir: String): DataFrame = {
-    val rangeUs = 86400000000L // 24 h, also the bucket width
+    val rangeUs = RangeJoinUs // also the bucket width
     val e = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"),
         expr("ts div 1000").as("ts_us"))
@@ -882,7 +899,7 @@ object Analytics {
   }
 
   val qRangeJoinSql: String =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT event_id, user_id, event_type, epoch_us(ts) AS ts_us FROM events
       |)
       |SELECT p.event_id AS purchase_id, p.user_id, p.ts_us AS purchase_us,
@@ -891,7 +908,7 @@ object Analytics {
       |FROM e p JOIN e v
       |  ON p.user_id = v.user_id AND p.event_type = 'purchase'
       | AND v.event_type = 'view'
-      | AND v.ts_us > p.ts_us - 86400000000 AND v.ts_us <= p.ts_us
+      | AND v.ts_us > p.ts_us - $RangeJoinUs AND v.ts_us <= p.ts_us
       |GROUP BY 1, 2, 3""".stripMargin
 
   /** B22 — the ranking-window family on ONE keyed shuffle: ntile
@@ -984,14 +1001,14 @@ object Analytics {
     * plan-level guarantee for when the dimension is mid-size (too big
     * to broadcast, as forced here) or the engine's splitter can't see
     * the skew. Oracle = the plain unsalted join + aggregation. */
-  def qSaltedSkewJoin(spark: SparkSession, dir: String, salts: Int = 8): DataFrame = {
+  def qSaltedSkewJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"),
-        pmod(col("event_id"), lit(salts.toLong)).as("salt"))
+        pmod(col("event_id"), lit(SkewSalts.toLong)).as("salt"))
     val dim = Tables.events(spark, dir).select(col("event_type")).distinct()
       .withColumn("type_weight", length(col("event_type")).cast("long"))
     val dimSalted = dim.crossJoin(
-      spark.range(salts).select(col("id").as("salt")))
+      spark.range(SkewSalts).select(col("id").as("salt")))
     ev.join(dimSalted.hint("shuffle_hash"), Seq("event_type", "salt"))
       .groupBy(col("event_type"), col("salt"))
       .agg(count(lit(1)).as("pn"),
@@ -1002,7 +1019,7 @@ object Analytics {
         count(lit(1)).as("n_salt_parts"))
   }
 
-  def qSaltedSkewJoinSql(salts: Int = 8): String =
+  def qSaltedSkewJoinSql(): String =
     s"""WITH dim AS (
        |  SELECT event_type, CAST(LENGTH(event_type) AS BIGINT) AS type_weight
        |  FROM (SELECT DISTINCT event_type FROM events)
@@ -1011,7 +1028,7 @@ object Analytics {
        |  CAST(COUNT(*) AS BIGINT) AS n_events,
        |  CAST(SUM(CAST(ROUND(e.value * 100.0, 0) AS BIGINT) * d.type_weight)
        |    AS BIGINT) AS weighted_cents,
-       |  CAST(COUNT(DISTINCT e.event_id % $salts) AS BIGINT) AS n_salt_parts
+       |  CAST(COUNT(DISTINCT e.event_id % $SkewSalts) AS BIGINT) AS n_salt_parts
        |FROM events e JOIN dim d ON e.event_type = d.event_type
        |GROUP BY 1""".stripMargin
 
@@ -1184,8 +1201,7 @@ object Analytics {
     * day. Amplification is the window length — a constant — vs the
     * running-set sweep that needs a global order. Day bounds ride a
     * 1-row broadcast so no phantom post-horizon days appear. */
-  def qRollingDistinct(spark: SparkSession, dir: String,
-                       win: Int = 7): DataFrame = {
+  def qRollingDistinct(spark: SparkSession, dir: String): DataFrame = {
     val pairs = Tables.events(spark, dir)
       .select(col("user_id"),
         ldiv(expr("ts div 1000"), lit(86400000000L)).as("day"))
@@ -1195,17 +1211,17 @@ object Analytics {
       .agg(countDistinct(col("user_id")).as("day_users"))
     pairs
       .select(col("user_id"),
-        explode(expr(s"sequence(day, day + ${win - 1}L)")).as("day"))
+        explode(expr(s"sequence(day, day + ${RollingDays - 1}L)")).as("day"))
       .crossJoin(broadcast(bounds))
       .filter(col("day") <= col("max_day"))
       .groupBy(col("day"))
-      .agg(countDistinct(col("user_id")).as(s"users_${win}d"))
+      .agg(countDistinct(col("user_id")).as(s"users_${RollingDays}d"))
       .join(perDay, Seq("day"), "left")
-      .select(col("day"), col(s"users_${win}d"),
+      .select(col("day"), col(s"users_${RollingDays}d"),
         coalesce(col("day_users"), lit(0L)).as("day_users"))
   }
 
-  def qRollingDistinctSql(win: Int = 7): String =
+  def qRollingDistinctSql(): String =
     s"""WITH pairs AS (
        |  SELECT DISTINCT user_id,
        |    CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day FROM events
@@ -1214,16 +1230,16 @@ object Analytics {
        |  SELECT day, COUNT(DISTINCT user_id) AS day_users
        |  FROM pairs GROUP BY 1
        |), unrolled AS (
-       |  SELECT p.user_id, UNNEST(GENERATE_SERIES(p.day, p.day + ${win - 1}))
+       |  SELECT p.user_id, UNNEST(GENERATE_SERIES(p.day, p.day + ${RollingDays - 1}))
        |    AS day
        |  FROM pairs p
        |), agg AS (
-       |  SELECT u.day, COUNT(DISTINCT u.user_id) AS users_${win}d
+       |  SELECT u.day, COUNT(DISTINCT u.user_id) AS users_${RollingDays}d
        |  FROM unrolled u CROSS JOIN bounds b
        |  WHERE u.day <= b.max_day
        |  GROUP BY 1
        |)
-       |SELECT a.day, a.users_${win}d,
+       |SELECT a.day, a.users_${RollingDays}d,
        |  CAST(COALESCE(p.day_users, 0) AS BIGINT) AS day_users
        |FROM agg a LEFT JOIN perday p ON p.day = a.day""".stripMargin
 
@@ -1237,26 +1253,23 @@ object Analytics {
     * boundaries it covers (constant amplification), then one
     * partial-aggregated count per boundary — embarrassingly parallel,
     * exact at every sampled point. */
-  def qConcurrencyGauge(spark: SparkSession, dir: String,
-                        durUs: Long = 300000000L,
-                        gridUs: Long = 60000000L): DataFrame =
+  def qConcurrencyGauge(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .select(expr("ts div 1000").as("s"), col("event_type"))
       .select(col("event_type"), explode(expr(
-        s"sequence((s + ${gridUs - 1}L) div ${gridUs}L, " +
-          s"(s + ${durUs - 1}L) div ${gridUs}L)")).as("minute"))
+        s"sequence((s + ${GaugeGridUs - 1}L) div ${GaugeGridUs}L, " +
+          s"(s + ${GaugeDurUs - 1}L) div ${GaugeGridUs}L)")).as("minute"))
       .groupBy(col("minute"))
       .agg(count(lit(1)).as("n_concurrent"),
         countDistinct(col("event_type")).as("n_types"))
 
-  def qConcurrencyGaugeSql(durUs: Long = 300000000L,
-                           gridUs: Long = 60000000L): String =
+  def qConcurrencyGaugeSql(): String =
     s"""WITH iv AS (
        |  SELECT event_type, epoch_us(ts) AS s FROM events
        |), cover AS (
        |  SELECT event_type,
-       |    UNNEST(GENERATE_SERIES((s + ${gridUs - 1}) // $gridUs,
-       |      (s + ${durUs - 1}) // $gridUs)) AS minute
+       |    UNNEST(GENERATE_SERIES((s + ${GaugeGridUs - 1}) // $GaugeGridUs,
+       |      (s + ${GaugeDurUs - 1}) // $GaugeGridUs)) AS minute
        |  FROM iv
        |)
        |SELECT minute, CAST(COUNT(*) AS BIGINT) AS n_concurrent,
@@ -1271,10 +1284,9 @@ object Analytics {
     * deterministic semantics both engines pin, no tie-break needed).
     * One user-keyed shuffle; the frame is bounded by the interval's
     * event density, never the partition. */
-  def qRangeFrame(spark: SparkSession, dir: String,
-                  winUs: Long = 3600000000L): DataFrame = {
+  def qRangeFrame(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
-      .rangeBetween(-winUs, 0)
+      .rangeBetween(-RangeFrameUs, 0)
     Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"),
         expr("ts div 1000").as("ts_us"),
@@ -1317,14 +1329,14 @@ object Analytics {
       |FROM events
       |GROUP BY 1, 2""".stripMargin
 
-  def qRangeFrameSql(winUs: Long = 3600000000L): String =
+  def qRangeFrameSql(): String =
     s"""SELECT user_id, event_id, epoch_us(ts) AS ts_us,
        |  CAST(SUM(CAST(ROUND(value * 100.0, 0) AS BIGINT)) OVER w
        |    AS BIGINT) AS hour_spend_cents,
        |  CAST(COUNT(*) OVER w AS BIGINT) AS hour_events
        |FROM events
        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-       |  RANGE BETWEEN $winUs PRECEDING AND CURRENT ROW)""".stripMargin
+       |  RANGE BETWEEN $RangeFrameUs PRECEDING AND CURRENT ROW)""".stripMargin
 
   /** B35 — CUBE: the full-margin lattice completing the grouping
     * family (B8's rollup drops the status-only margin, B20 picks its
@@ -1645,25 +1657,24 @@ object Analytics {
     * closed-form bucket edges — the frame a query planner's stats
     * collector or a monitoring dashboard reads. Buckets with no rows
     * are absent (sparse form); the edges make gaps interpretable. */
-  def qHistogram(spark: SparkSession, dir: String,
-                 buckets: Int = 20): DataFrame = {
+  def qHistogram(spark: SparkSession, dir: String): DataFrame = {
     val cents = Tables.orders(spark, dir)
       .select(round(col("o_totalprice") * 100).cast("long").as("cents"))
     val span = cents.agg(min(col("cents")).as("lo"),
       (max(col("cents")) - min(col("cents")) + 1L).as("w"))
     cents.crossJoin(broadcast(span))
       .withColumn("bucket",
-        ldiv((col("cents") - col("lo")) * buckets, col("w")))
+        ldiv((col("cents") - col("lo")) * HistBuckets, col("w")))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n"),
         min(col("cents")).as("min_cents"), max(col("cents")).as("max_cents"),
         (first(col("lo")) + ldiv(col("bucket") * first(col("w")),
-          lit(buckets.toLong))).as("edge_lo_cents"),
+          lit(HistBuckets.toLong))).as("edge_lo_cents"),
         (first(col("lo")) + ldiv((col("bucket") + 1L) * first(col("w")),
-          lit(buckets.toLong)) - 1L).as("edge_hi_cents"))
+          lit(HistBuckets.toLong)) - 1L).as("edge_hi_cents"))
   }
 
-  def qHistogramSql(buckets: Int = 20): String =
+  def qHistogramSql(): String =
     s"""WITH cents AS (
       |  SELECT CAST(ROUND(o_totalprice * 100.0, 0) AS BIGINT) AS cents
       |  FROM orders
@@ -1671,13 +1682,13 @@ object Analytics {
       |  SELECT MIN(cents) AS lo, MAX(cents) - MIN(cents) + 1 AS w
       |  FROM cents
       |)
-      |SELECT ((c.cents - s.lo) * $buckets) // s.w AS bucket,
+      |SELECT ((c.cents - s.lo) * $HistBuckets) // s.w AS bucket,
       |  CAST(COUNT(*) AS BIGINT) AS n,
       |  MIN(c.cents) AS min_cents, MAX(c.cents) AS max_cents,
-      |  CAST(s.lo + (((c.cents - s.lo) * $buckets) // s.w) * s.w
-      |    // $buckets AS BIGINT) AS edge_lo_cents,
-      |  CAST(s.lo + ((((c.cents - s.lo) * $buckets) // s.w) + 1) * s.w
-      |    // $buckets - 1 AS BIGINT) AS edge_hi_cents
+      |  CAST(s.lo + (((c.cents - s.lo) * $HistBuckets) // s.w) * s.w
+      |    // $HistBuckets AS BIGINT) AS edge_lo_cents,
+      |  CAST(s.lo + ((((c.cents - s.lo) * $HistBuckets) // s.w) + 1) * s.w
+      |    // $HistBuckets - 1 AS BIGINT) AS edge_hi_cents
       |FROM cents c CROSS JOIN span s
       |GROUP BY 1, s.lo, s.w""".stripMargin
 

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.cdc.{ChangeEvents, Codecs, Dispatchers, Filters, Routing, Sinks}
+import graft.cdc.{ChangeEvents, Codecs, Dispatchers, Filters, Routing, Scheduler, Sinks}
+import graft.functions.Portable
 
 /** Structured-Streaming form of the changefeed — the engine's
   * equivalent of TiCDC's continuous pipeline (reference: the
@@ -23,6 +24,13 @@ import graft.cdc.{ChangeEvents, Codecs, Dispatchers, Filters, Routing, Sinks}
   * state size and late-event buffering.
   */
 object CdcStream {
+
+  /** The streaming changefeed's topic and partition count (the batch
+    * twin's `Changefeed.Config` defaults). */
+  val DefaultTopic = "changefeed"
+  val NPartitions = 16
+  /** The tumbling window of [[windowedAgg]]. */
+  val WindowLen = "1 hour"
 
   /** Typed change event for stateful ops. */
   case class ChangeEvent(schema_name: String, table_name: String, op: String,
@@ -46,10 +54,7 @@ object CdcStream {
     * twins. */
   def pipeline(spark: SparkSession, dir: String,
                tableRules: Seq[String] = Seq("db%.%"),
-               ignoreOps: Seq[String] = Seq.empty,
                topicRules: Seq[(Seq[String], String)] = Nil,
-               defaultTopic: String = "changefeed",
-               nPartitions: Int = 16,
                claimCheckMaxBytes: Option[Int] = None,
                maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
@@ -61,18 +66,16 @@ object CdcStream {
     val raw = maxFilesPerTrigger.fold(reader)(n =>
       reader.option("maxFilesPerTrigger", n)).parquet(s"$dir/events.parquet*")
     val cl = ChangeEvents.fromEvents(raw)
-    val filtered = Filters.tableFilter(
-      if (ignoreOps.isEmpty) cl else Filters.eventTypeFilter(cl, ignoreOps),
-      tableRules)
-    val topic = Routing.topicFor(topicRules, defaultTopic).as("topic")
+    val filtered = Filters.tableFilter(cl, tableRules)
+    val topic = Routing.topicFor(topicRules, DefaultTopic).as("topic")
     claimCheckMaxBytes match {
       case Some(maxBytes) =>
         // large messages detour to external storage; the sink frame
         // carries the claim location + stub value (A31, streaming form)
-        Sinks.claimCheckFrame(filtered, nPartitions, maxBytes, extra = Seq(topic))
+        Sinks.claimCheckFrame(filtered, NPartitions, maxBytes, extra = Seq(topic))
       case None =>
         filtered.select(col("commit_ts"), topic,
-          Dispatchers.indexValueBucket(nPartitions).as("partition"),
+          Dispatchers.indexValueBucket(NPartitions).as("partition"),
           Codecs.openProtocolKey.as("key"),
           Codecs.openProtocolValue.as("value"))
     }
@@ -105,10 +108,9 @@ object CdcStream {
     * value totals over event-time windows; the watermark is the
     * resolved-ts analogue (late events beyond it are dropped, closed
     * windows emit finally). */
-  def windowedAgg(cl: DataFrame, watermarkDelay: String = "10 minutes",
-                  windowLen: String = "1 hour"): DataFrame =
-    cl.withWatermark("event_time", watermarkDelay)
-      .groupBy(window(col("event_time"), windowLen),
+  def windowedAgg(cl: DataFrame): DataFrame =
+    cl.withWatermark("event_time", DataOps.WatermarkDelay)
+      .groupBy(window(col("event_time"), WindowLen),
         col("schema_name"), col("table_name"))
       .agg(count(lit(1)).as("n_events"),
         // exact cents sum (graft.util.Money): partial-agg merge order
@@ -129,10 +131,10 @@ object CdcStream {
     * resolved ts as the reference actually maintains it (every region
     * event lifts its region's resolvedTs; the table frontier is the
     * min over regions and only ever moves FORWARD). State per table is
-    * one small region→ts map (nRegions entries); an advancement row
+    * one small region→ts map ([[Scheduler.NRegions]] entries); an advancement row
     * emits ONLY when the min rises — the "no earlier event will
     * arrive" signal downstream sinks key their flushes on. */
-  def spanFrontier(events: Dataset[ChangeEvent], nRegions: Int = 8): Dataset[FrontierAdvance] = {
+  def spanFrontier(events: Dataset[ChangeEvent]): Dataset[FrontierAdvance] = {
     import events.sparkSession.implicits._
     events.groupByKey(e => (e.schema_name, e.table_name))
       .flatMapGroupsWithState[FrontierState, FrontierAdvance](
@@ -148,10 +150,7 @@ object CdcStream {
           val out = scala.collection.mutable.Buffer[FrontierAdvance]()
           var cur = before
           it.toSeq.sortBy(_.commit_ts).foreach { e =>
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val hex = md.digest(e.pk.toString.getBytes("UTF-8"))
-              .take(8).map(b => f"$b%02x").mkString
-            val region = java.lang.Long.parseLong(hex.substring(0, 15), 16) % nRegions
+            val region = Portable.hash60Long(e.pk.toString) % Scheduler.NRegions
             if (regions.getOrElse(region, -1L) < e.commit_ts)
               regions = regions.updated(region, e.commit_ts)
             val f = frontier(regions)
@@ -301,9 +300,7 @@ object CdcStream {
     * of the reference loop agree. In-order arrival across batches is
     * the contract (heartbeats are periodic); state is bounded by the
     * span universe. */
-  def streamHotSpans(ticks: Dataset[SpanTick], thr: Long = 10L,
-                     scoreThr: Int = 3, clearTicks: Long = 3L,
-                     splitSpans: Int = 12): Dataset[HotSummary] = {
+  def streamHotSpans(ticks: Dataset[SpanTick]): Dataset[HotSummary] = {
     import ticks.sparkSession.implicits._
     ticks.groupByKey(t => (t.span, t.coeff))
       .mapGroupsWithState[HotState, HotSummary](
@@ -312,8 +309,8 @@ object CdcStream {
           var s = state.getOption.getOrElse(HotState(0L, 0L, -1L, -1L, 0L))
           it.toSeq.sortBy(_.tick).foreach { t =>
             val delta =
-              if (t.bytes >= thr * coeff) 1L
-              else if (t.bytes < thr) -1L
+              if (t.bytes >= Scheduler.HotThr * coeff) 1L
+              else if (t.bytes < Scheduler.HotThr) -1L
               else 0L
             val score = math.max(0L, s.score + delta)
             s = HotState(score, math.max(s.peak, score),
@@ -321,11 +318,11 @@ object CdcStream {
           }
           state.update(s)
           val stale =
-            if (s.last_inc >= 0L && s.last_tick - s.last_inc > clearTicks) 1L
+            if (s.last_inc >= 0L && s.last_tick - s.last_inc > Scheduler.HotClearTicks) 1L
             else 0L
-          val hot = if (s.score >= scoreThr && stale == 0L) 1L else 0L
+          val hot = if (s.score >= Scheduler.HotScoreThr && stale == 0L) 1L else 0L
           HotSummary(span, coeff, s.n, s.peak, s.score, s.last_inc,
-            s.last_tick, stale, hot, if (hot == 1L) splitSpans.toLong else 0L)
+            s.last_tick, stale, hot, if (hot == 1L) Scheduler.HotSplitSpans.toLong else 0L)
       }
   }
 

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.ops.Text
+import graft.ops.{Dedup, Retrieval, Text}
+import graft.queries.Analytics
 
 /** Streaming forms of the LLM-data-pipeline operators: continuous
   * ingest is how a 100 TB corpus actually arrives, so the dedup and
@@ -18,6 +19,15 @@ import graft.ops.Text
   *   equivalent of the batch lag+cumsum definition (B14).
   */
 object DataOps {
+
+  /** Event-time lateness every watermarked twin tolerates. */
+  val WatermarkDelay = "10 minutes"
+  /** [[streamSessionize]]'s session gap. */
+  val SessionGap = "30 minutes"
+  /** [[streamConcurrencyGauge]]'s window and slide (the batch gauge's
+    * 5-minute duration and 1-minute grid). */
+  val GaugeDur = "5 minutes"
+  val GaugeSlide = "1 minute"
 
   /** A35 — streaming exact dedup: first document per normalized-text
     * fingerprint survives. `withinWatermarkDelay` bounds state when an
@@ -44,18 +54,18 @@ object DataOps {
     * the state bounds with `dropDuplicatesWithinWatermark` like A35;
     * the unbounded form is the exact global pass (spec mode). Emits
     * one row per SURVIVING line occurrence. */
-  def streamLineDedup(docs: DataFrame, width: Int = 10,
+  def streamLineDedup(docs: DataFrame,
                       withinWatermarkDelay: Option[String] = None): DataFrame = {
     withinWatermarkDelay match {
       case Some(delay) =>
         graft.ops.Dedup
-          .lineFrameOf(docs.withWatermark("ingest_time", delay), width,
+          .lineFrameOf(docs.withWatermark("ingest_time", delay), Dedup.LineWidth,
             keep = Seq("ingest_time"))
           .withColumn("lh", md5(col("line").cast("binary")))
           .dropDuplicatesWithinWatermark("lh")
           .select(col("doc_id"), col("line_no"), col("lh"))
       case None =>
-        graft.ops.Dedup.lineFrameOf(docs, width)
+        graft.ops.Dedup.lineFrameOf(docs, Dedup.LineWidth)
           .withColumn("lh", md5(col("line").cast("binary")))
           .dropDuplicates("lh")
           .select(col("doc_id"), col("line_no"), col("lh"))
@@ -70,17 +80,16 @@ object DataOps {
     *
     * Boundary semantics: `session_window` closes at `start + gap`
     * exclusive, while the batch definition (B14) keeps an event at
-    * EXACTLY `gap` distance in the same session (`diff > gap` splits).
+    * EXACTLY [[SessionGap]] distance in the same session (`diff > gap` splits).
     * The two differ only when consecutive events are exactly the gap
     * apart — measure zero under microsecond timestamps, absent from
     * the test data, but callers comparing the frames should know. */
-  def streamSessionize(events: DataFrame, gap: String = "30 minutes",
-                       watermarkDelay: String = "10 minutes"): DataFrame =
+  def streamSessionize(events: DataFrame): DataFrame =
     graft.util.Tables.normalizeTs(events)
       .select(col("user_id"), expr("timestamp_micros(ts div 1000)").as("event_time"),
         col("value"))
-      .withWatermark("event_time", watermarkDelay)
-      .groupBy(session_window(col("event_time"), gap), col("user_id"))
+      .withWatermark("event_time", WatermarkDelay)
+      .groupBy(session_window(col("event_time"), SessionGap), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         graft.util.Money.sumCents(col("value")).as("sum_value_cents"))
       .select(col("session_window.start").as("session_start"), col("user_id"),
@@ -232,42 +241,32 @@ object DataOps {
     * order, the batch plan's exact tie rule. Same in-order contract
     * across batches as the other twins (a view arriving after a later
     * purchase's batch cannot retro-attribute — feed ts-ordered
-    * replays; spec-equal to batch on one). `ttl` reclaims dormant
-    * users' state; their next purchase then attributes to nothing
-    * until a fresh view arrives. */
-  def streamAsof(events: Dataset[AsofEvent],
-                 ttl: Option[String] = None): Dataset[AsofPair] = {
+    * replays; spec-equal to batch on one). */
+  def streamAsof(events: Dataset[AsofEvent]): Dataset[AsofPair] = {
     import events.sparkSession.implicits._
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[AsofState, AsofPair](
-        OutputMode.Append(), timeoutConf) {
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (user, batch, state: GroupState[AsofState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val out = Seq.newBuilder[AsofPair]
-            var s = state.getOption.orNull
-            val ordered = batch.toSeq.sortBy(e =>
-              (e.ts_us, if (e.event_type == "view") 0L else 1L, e.event_id))
-            for (e <- ordered) e.event_type match {
-              case "view" =>
-                if (s == null || e.ts_us > s.view_us ||
-                    (e.ts_us == s.view_us && e.event_id > s.view_id))
-                  s = AsofState(e.event_id, e.ts_us)
-              case "purchase" =>
-                out += (if (s == null)
-                  AsofPair(e.event_id, user, e.ts_us, None, None, None)
-                else
-                  AsofPair(e.event_id, user, e.ts_us, Some(s.view_id),
-                    Some(s.view_us), Some(e.ts_us - s.view_us)))
-              case _ => ()
-            }
-            if (s != null) state.update(s)
-            ttl.foreach(state.setTimeoutDuration)
-            out.result().iterator
+          val out = Seq.newBuilder[AsofPair]
+          var s = state.getOption.orNull
+          val ordered = batch.toSeq.sortBy(e =>
+            (e.ts_us, if (e.event_type == "view") 0L else 1L, e.event_id))
+          for (e <- ordered) e.event_type match {
+            case "view" =>
+              if (s == null || e.ts_us > s.view_us ||
+                  (e.ts_us == s.view_us && e.event_id > s.view_id))
+                s = AsofState(e.event_id, e.ts_us)
+            case "purchase" =>
+              out += (if (s == null)
+                AsofPair(e.event_id, user, e.ts_us, None, None, None)
+              else
+                AsofPair(e.event_id, user, e.ts_us, Some(s.view_id),
+                  Some(s.view_us), Some(e.ts_us - s.view_us)))
+            case _ => ()
           }
+          if (s != null) state.update(s)
+          out.result().iterator
       }
   }
 
@@ -288,8 +287,9 @@ object DataOps {
     * emits a pair as soon as both sides arrived (append mode), so over
     * a complete replay the pair set equals the batch B18 join exactly —
     * the spec aggregates the pairs and checks frame equality with B18's
-    * per-purchase counts. `rangeUs` must be a whole number of seconds
-    * (it is interpolated into an INTERVAL literal).
+    * per-purchase counts. The range is B18's [[Analytics.RangeJoinUs]],
+    * a whole number of seconds (it is interpolated into an INTERVAL
+    * literal).
     *
     * Multi-micro-batch cost shape (StreamProbe, r14, 8-slice sf0.1
     * tier, mfpt=2 = 4 batches of 50k): state is BOUNDED and eviction
@@ -305,25 +305,22 @@ object DataOps {
     * larger and the commit amortizes; on a real cluster, size
     * shuffle/state partitions to state volume, not to the batch
     * default. */
-  def streamRangeJoin(events: DataFrame,
-                      rangeUs: Long = 86400000000L,
-                      watermarkDelay: String = "10 minutes"): DataFrame = {
-    require(rangeUs % 1000000L == 0, "rangeUs must be whole seconds")
+  def streamRangeJoin(events: DataFrame): DataFrame = {
     val e = graft.util.Tables.normalizeTs(events)
       .select(col("event_id"), col("user_id"), col("event_type"),
         expr("timestamp_micros(ts div 1000)").as("etime"))
     val views = e.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
         col("etime").as("view_time"))
-      .withWatermark("view_time", watermarkDelay)
+      .withWatermark("view_time", WatermarkDelay)
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         col("etime").as("purchase_time"))
-      .withWatermark("purchase_time", watermarkDelay)
+      .withWatermark("purchase_time", WatermarkDelay)
     purchases.join(views,
         col("p_user") === col("v_user") &&
         col("view_time") > col("purchase_time") -
-          expr(s"INTERVAL ${rangeUs / 1000000L} SECONDS") &&
+          expr(s"INTERVAL ${Analytics.RangeJoinUs / 1000000L} SECONDS") &&
         col("view_time") <= col("purchase_time"))
       .select(col("purchase_id"), col("p_user").as("user_id"),
         expr("unix_micros(purchase_time)").as("purchase_us"),
@@ -353,25 +350,22 @@ object DataOps {
     * sentinel discipline (-1 on the unmatched view columns). State
     * on both sides stays O(range × rate), bounded by the same
     * time-range predicate as the inner twin. */
-  def streamLeftOuterJoin(events: DataFrame,
-                          rangeUs: Long = 86400000000L,
-                          watermarkDelay: String = "10 minutes"): DataFrame = {
-    require(rangeUs % 1000000L == 0, "rangeUs must be whole seconds")
+  def streamLeftOuterJoin(events: DataFrame): DataFrame = {
     val e = graft.util.Tables.normalizeTs(events)
       .select(col("event_id"), col("user_id"), col("event_type"),
         expr("timestamp_micros(ts div 1000)").as("etime"))
     val views = e.filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
         col("etime").as("view_time"))
-      .withWatermark("view_time", watermarkDelay)
+      .withWatermark("view_time", WatermarkDelay)
     val purchases = e.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         col("etime").as("purchase_time"))
-      .withWatermark("purchase_time", watermarkDelay)
+      .withWatermark("purchase_time", WatermarkDelay)
     purchases.join(views,
         col("p_user") === col("v_user") &&
         col("view_time") > col("purchase_time") -
-          expr(s"INTERVAL ${rangeUs / 1000000L} SECONDS") &&
+          expr(s"INTERVAL ${Analytics.RangeJoinUs / 1000000L} SECONDS") &&
         col("view_time") <= col("purchase_time"),
         "left_outer")
       .select(col("purchase_id"), col("p_user").as("user_id"),
@@ -392,11 +386,9 @@ object DataOps {
     * under exactly this convention. Append mode emits each window
     * once, when the watermark passes it — the gauge row becomes
     * immutable exactly like the reference's flushed metrics. */
-  def streamConcurrencyGauge(ev: DataFrame, dur: String = "5 minutes",
-                             slide: String = "1 minute",
-                             watermarkDelay: String = "10 minutes"): DataFrame =
-    ev.withWatermark("event_time", watermarkDelay)
-      .groupBy(window(col("event_time"), dur, slide))
+  def streamConcurrencyGauge(ev: DataFrame): DataFrame =
+    ev.withWatermark("event_time", WatermarkDelay)
+      .groupBy(window(col("event_time"), GaugeDur, GaugeSlide))
       .agg(count(lit(1)).as("n_open"))
       .select(col("window.start").as("w_start"),
         col("window.end").as("w_end"), col("n_open"))
@@ -422,15 +414,14 @@ object DataOps {
     * transcription is literally the same interval-union loop). With
     * the historical set = the corpus's own df≥2 grams, the streamed
     * output EQUALS batch C59 row-for-row (spec-asserted). */
-  def streamSubstringSpans(docs: DataFrame, dupGrams: DataFrame,
-                           k: Int = 8): DataFrame = {
+  def streamSubstringSpans(docs: DataFrame, dupGrams: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val occ = docs
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .withColumn("doc_tokens", size(col("toks")).cast("long"))
       .withColumn("grams",
-        call_function("graft_word_ngrams_all", col("toks"), lit(k)))
+        call_function("graft_word_ngrams_all", col("toks"), lit(Retrieval.SubstrK)))
       .select(col("doc_id"), col("doc_tokens"),
         posexplode(col("grams")).as(Seq("pos", "gram")))
       .select(col("doc_id"), col("doc_tokens"),
@@ -451,8 +442,8 @@ object DataOps {
             val spans = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
             rows.map(_.pos).sorted.foreach { p =>
               if (spans.nonEmpty && p <= spans.last._2)
-                spans(spans.length - 1) = (spans.last._1, p + k)
-              else spans += ((p, p + k))
+                spans(spans.length - 1) = (spans.last._1, p + Retrieval.SubstrK)
+              else spans += ((p, p + Retrieval.SubstrK))
             }
             val dup = spans.map(s => s._2 - s._1).sum
             spans.iterator.zipWithIndex.map { case ((s, e), i) =>
@@ -480,7 +471,7 @@ object DataOps {
     * gate is first-come — the honest semantics of an online cap
     * (a later better-priority doc cannot evict an admitted one).
     * `cap_rank` is the admission ordinal; dropped docs carry -1. */
-  def streamSourceCap(docs: DataFrame, cap: Int = 10): DataFrame = {
+  def streamSourceCap(docs: DataFrame, cap: Int = graft.ops.Curation.SourceCap): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
@@ -524,9 +515,7 @@ object DataOps {
     * same corpus split, the streamed verdicts EQUAL batch C79
     * row-for-row (spec-asserted). */
   def streamDedupIncremental(docs: DataFrame, index: DataFrame,
-                             gramStore: DataFrame,
-                             perms: Int = 128, bands: Int = 16,
-                             tau: Double = 0.5): DataFrame = {
+                             gramStore: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val probes = docs
@@ -537,12 +526,12 @@ object DataOps {
       .filter(graft.ops.Dedup.isIncrementalBatch(col("doc_id")))
       .select(col("doc_id"), col("gb"),
         posexplode(graft.functions.VectorExprs.minhashBands(col("gb"),
-          perms, bands)).as(Seq("band_id", "band_key")))
+          Dedup.Perms, Dedup.Bands)).as(Seq("band_id", "band_key")))
       .join(index, Seq("band_id", "band_key"), "left_outer")
       .join(gramStore, Seq("cid"), "left_outer")
       .select(col("doc_id"), col("gb"), col("cid"), col("gc"))
       .as[IncProbe]
-    val tauPpm = math.round(tau * 1e6)
+    val tauPpm = math.round(Dedup.JaccardTau * 1e6)
     probes.groupByKey(_.doc_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (id: Long, it: Iterator[IncProbe], state: GroupState[Long]) =>

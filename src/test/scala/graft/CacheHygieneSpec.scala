@@ -33,14 +33,14 @@ class CacheHygieneSpec extends AnyFunSuite {
   test("each memo clear drops its checkpoint blocks along with the entry") {
     def cl = cdc.ChangeEvents.changelog(spark, dir)
     val kinds: Seq[(String, () => Seq[DataFrame])] = Seq(
-      "winnow" -> (() => Seq(ops.Retrieval.winnowHashesCached(spark, dir, 4))),
+      "winnow" -> (() => Seq(ops.Retrieval.winnowHashesCached(spark, dir))),
       "repetition" -> (() => Seq(ops.Corpus.textRepetition(spark, dir))),
       "ivf" -> (() => { val (cent, lists) = ops.Similarity.ivfIndex(spark, dir); Seq(cent, lists) }),
       "pq" -> (() => { val (c, book, a) = ops.Similarity.pqIndexParts(spark, dir); Seq(c, book, a) }),
-      "pairs" -> (() => Seq(ops.Dedup.ngramPairsCached(spark, dir, 0.5))),
-      "spans" -> (() => Seq(ops.Retrieval.substringSpansCached(spark, dir, 8))),
+      "pairs" -> (() => Seq(ops.Dedup.ngramPairsCached(spark, dir))),
+      "spans" -> (() => Seq(ops.Retrieval.substringSpansCached(spark, dir))),
       "clusters" -> (() => Seq(ops.Curation.dedupClusters(spark, dir))),
-      "census" -> (() => Seq(cdc.Scheduler.spanFrame(cl, cdc.Scheduler.NRegions))),
+      "census" -> (() => Seq(cdc.Scheduler.spanFrame(cl))),
       "dims" -> (() => Seq(cdc.ClDims.tables(cl), cdc.ClDims.maxTs(cl))),
       "tokens" -> (() => Seq(ops.Text.docTokens(spark, dir))),
       "grams" -> (() => Seq(ops.Dedup.gramsCached(spark, dir))),
@@ -74,7 +74,7 @@ class CacheHygieneSpec extends AnyFunSuite {
     val clusters = ops.Curation.dedupClusters(spark, dir)
     // the registry entries the build reads or makes; the calls below
     // return the frames it already built
-    val entries = Seq(clusters, ops.Dedup.ngramPairsCached(spark, dir, 0.5),
+    val entries = Seq(clusters, ops.Dedup.ngramPairsCached(spark, dir),
       ops.Text.docTokens(spark, dir), ops.Dedup.gramsCached(spark, dir))
     assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == blockIds(entries),
       "connected-components scratch checkpoints stayed pinned")
@@ -218,8 +218,8 @@ class CacheHygieneSpec extends AnyFunSuite {
 
   test("C4 pair-ledger memo shares one frame, equals the fresh query, and releases") {
     graft.util.GraftSession.releaseCaches(spark)
-    val a = ops.Dedup.ngramPairsCached(spark, dir, 0.5)
-    assert(ops.Dedup.ngramPairsCached(spark, dir, 0.5) eq a,
+    val a = ops.Dedup.ngramPairsCached(spark, dir)
+    assert(ops.Dedup.ngramPairsCached(spark, dir) eq a,
       "second lookup should reuse the memoized ledger")
     // the ledger IS the declared C4 pair set (dropping only the score
     // column) — the consumers (C18/C71/C78) must see identical edges
@@ -227,7 +227,7 @@ class CacheHygieneSpec extends AnyFunSuite {
       .select("doc_a", "doc_b").collect().map(_.toSeq).toSet
     assert(a.collect().map(_.toSeq).toSet == fresh)
     graft.util.GraftSession.releaseCaches(spark)
-    val b = ops.Dedup.ngramPairsCached(spark, dir, 0.5)
+    val b = ops.Dedup.ngramPairsCached(spark, dir)
     assert(!(b eq a), "release must drop the pair memo")
     assert(b.collect().map(_.toSeq).toSet == fresh)
     graft.util.GraftSession.releaseCaches(spark)
@@ -235,14 +235,14 @@ class CacheHygieneSpec extends AnyFunSuite {
 
   test("C59 span-ledger memo shares one frame, equals the fresh query, and releases") {
     graft.util.GraftSession.releaseCaches(spark)
-    val a = ops.Retrieval.substringSpansCached(spark, dir, 8)
-    assert(ops.Retrieval.substringSpansCached(spark, dir, 8) eq a,
+    val a = ops.Retrieval.substringSpansCached(spark, dir)
+    assert(ops.Retrieval.substringSpansCached(spark, dir) eq a,
       "second lookup should reuse the memoized ledger")
     val fresh = ops.Retrieval.dedupSubstringSpans(spark, dir)
       .collect().map(_.toSeq).toSet
     assert(a.collect().map(_.toSeq).toSet == fresh)
     graft.util.GraftSession.releaseCaches(spark)
-    val b = ops.Retrieval.substringSpansCached(spark, dir, 8)
+    val b = ops.Retrieval.substringSpansCached(spark, dir)
     assert(!(b eq a), "release must drop the span memo")
     assert(b.collect().map(_.toSeq).toSet == fresh)
     graft.util.GraftSession.releaseCaches(spark)

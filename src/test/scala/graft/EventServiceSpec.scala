@@ -293,7 +293,7 @@ class EventServiceSpec extends AnyFunSuite {
     * a locked map + an unlocked-ts map and recompute every output. */
   test("A96: range-lock frame equals the sequential lock/unlock replay") {
     val cl = cdc.ChangeEvents.changelog(spark, dir)
-    val R = cdc.RangeLock.NRegions
+    val R = cdc.Scheduler.NRegions
     val W = cdc.RangeLock.TickW
     val maxTick = cdc.RangeLock.MaxTick
     def bucket(s: String, n: Int): Long = {
@@ -385,7 +385,7 @@ class EventServiceSpec extends AnyFunSuite {
     assert(got.nonEmpty)
     val commits = cl.collect().map { r =>
       (r.getAs[String]("schema_name"), r.getAs[String]("table_name"),
-        bucket(r.getAs[Long]("pk").toString, cdc.RegionInit.NRegions),
+        bucket(r.getAs[Long]("pk").toString, cdc.Scheduler.NRegions),
         r.getAs[Long]("commit_ts"), r.getAs[Long]("pk"))
     }
     val byRegion = commits.groupBy(c => (c._1, c._2, c._3))
@@ -658,7 +658,7 @@ class EventServiceSpec extends AnyFunSuite {
       val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
       java.lang.Long.parseLong(hex.take(15), 16)
     }
-    val R = cdc.RangeLock.NRegions
+    val R = cdc.Scheduler.NRegions
     case class Lock(ts: Long, key: Long, status: String)
     val rows = cl.select("schema_name", "table_name", "pk", "start_ts",
       "commit_ts").collect()

@@ -261,7 +261,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
       (1L, "a1", "a1#p4", 16L, 0L, "DML", "k10"))
     import spark.implicits._
     val queue = fleet.toDF("stream", "area", "path", "ts", "tie", "kind", "detail")
-    val got = cdc.DynStreamQueue.drainFrame(queue, batchCount = 4)
+    val got = cdc.DynStreamQueue.drainFrame(queue)
       .select("path", "ts", "tie", "batch_seq", "pos_in_batch", "batch_size",
         "emitted")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
@@ -327,7 +327,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     val exact = ops.Similarity.annTopK(spark, dir, nQueries = nq, k = 3)
       .select(col("query_id"), col("vec_id"))
       .collect().map(_.toSeq).toSet
-    val ivf = ops.Similarity.annIvf(spark, dir, nQueries = nq, topK = 3)
+    val ivf = ops.Similarity.annIvf(spark, dir, nQueries = nq)
       .select(col("query_id"), col("vec_id"))
       .collect().map(_.toSeq).toSet
     val recall = exact.intersect(ivf).size.toDouble / exact.size
@@ -1996,7 +1996,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
 
   test("A54: syncpoint statements carry a monotone applied position and the cleanup cadence") {
     val cl = cdc.ChangeEvents.changelog(spark, dir)
-    val sp = cdc.MysqlDdl.syncpointStmts(cl, step = 100L, cleanupEvery = 5)
+    val sp = cdc.MysqlDdl.syncpointStmts(cl, step = 100L)
       .orderBy(col("primary_ts")).collect()
     assert(sp.nonEmpty)
     // the downstream position never exceeds the syncpoint's upstream ts
@@ -2509,7 +2509,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
       ("db0", "t0", 2900L, "click", "{}"),
       ("db0", "t1", 800L,  "click", "{}"))
       .toDF("schema_name", "table_name", "commit_ts", "event_type", "props")
-    val got = cdc.Materialize.tableProgress(hand, step = 1000L)
+    val got = cdc.Materialize.tableProgress(hand)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
       .toSet

@@ -204,7 +204,7 @@ class PlanQualitySpec extends AnyFunSuite {
       assert(seq.isEmpty, s"seqCheck started ${seq.size} job(s) while building")
       // the winnow fingerprints and the gram frame are session caches:
       // building them runs jobs, the operator over them must not
-      ops.Retrieval.winnowHashesCached(spark, dir, 4)
+      ops.Retrieval.winnowHashesCached(spark, dir)
       ops.Dedup.gramFrame(spark, dir)
       val cont = jobsOf(ops.Retrieval.dedupContainment(spark, dir))
       assert(cont.isEmpty, s"dedupContainment started ${cont.size} job(s) while building")

@@ -195,9 +195,9 @@ class RetrievalSpec extends AnyFunSuite {
     // are exact, so forcing EVERYTHING through either one must
     // reproduce the production frame bit-for-bit on real data
     val g = ops.Dedup.gramFrame(spark, dir)
-    val fps = ops.Retrieval.winnowHashesCached(spark, dir, 4)
+    val fps = ops.Retrieval.winnowHashesCached(spark, dir)
     def run(hotMax: Long) =
-      ops.Retrieval.containmentFromFps(fps, g, 800000L, hotMax)
+      ops.Retrieval.containmentFromFps(fps, g, hotMax)
         .orderBy("doc_a", "doc_b").collect().toSeq
     val prod = run(64L)
     assert(prod.nonEmpty, "fixture must produce containment pairs")

@@ -102,4 +102,135 @@ class SourceLintSpec extends AnyFunSuite {
     val found = hits("""\bfrom_(json|csv)\s*\(""".r, "cdc/Checksum.scala#verifyMessages")
     assert(found.isEmpty, "use graft.functions.WireScanExprs.decode for: " + found.mkString(", "))
   }
+
+  /** Source text with comments and string literals blanked (offsets and
+    * newlines kept); the code of an interpolated string's `${...}` stays,
+    * since oracle builders call each other there. */
+  private def codeOnly(src: String): String = {
+    val out = src.toCharArray
+    def blank(a: Int, b: Int): Unit = (a until b).foreach(k => if (out(k) != '\n') out(k) = ' ')
+    def code(from: Int, inBrace: Boolean): Int = {
+      var i = from; var depth = 0
+      while (i < src.length) {
+        if (src.startsWith("//", i)) {
+          val j = src.indexOf('\n', i) match { case -1 => src.length; case j => j }
+          blank(i, j); i = j
+        } else if (src.startsWith("/*", i)) {
+          val j = src.indexOf("*/", i + 2) match { case -1 => src.length; case j => j + 2 }
+          blank(i, j); i = j
+        } else if (src(i) == '"') {
+          val interp = i > 0 && (src(i - 1).isLetterOrDigit || src(i - 1) == '_')
+          val q = if (src.startsWith("\"\"\"", i)) 3 else 1
+          var j = i + q; var start = j; var open = true
+          while (open && j < src.length) {
+            if (q == 3 && src.startsWith("\"\"\"", j)) {
+              while (j + 3 < src.length && src(j + 3) == '"') j += 1
+              open = false
+            } else if (q == 1 && src(j) == '"') open = false
+            else if (q == 1 && src(j) == '\\') j += 2
+            else if (interp && src.startsWith("${", j)) {
+              blank(start, j + 2); j = code(j + 2, inBrace = true); start = j
+            } else j += 1
+          }
+          blank(start, j); i = j + q
+        } else if (src(i) == '\'' && i + 2 < src.length &&
+            (src(i + 2) == '\'' || src(i + 1) == '\\')) {
+          val j = src.indexOf('\'', i + (if (src(i + 1) == '\\') 3 else 2))
+          blank(i + 1, j); i = j + 1
+        } else if (src(i) == '{') { depth += 1; i += 1 }
+        else if (src(i) == '}') {
+          if (inBrace && depth == 0) return i
+          depth -= 1; i += 1
+        } else i += 1
+      }
+      src.length
+    }
+    code(0, inBrace = false)
+    new String(out)
+  }
+
+  /** The top-level comma-separated items of the bracketed list opening
+    * at `s(open)`, and the index just past its closing bracket. */
+  private def items(s: String, open: Int): (Seq[String], Int) = {
+    val found = Seq.newBuilder[String]
+    var depth = 0; var start = open + 1; var i = open
+    while (i < s.length) {
+      s(i) match {
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' =>
+          depth -= 1
+          if (depth == 0) {
+            found += s.substring(start, i)
+            return (found.result().filter(_.trim.nonEmpty), i + 1)
+          }
+        case ',' if depth == 1 => found += s.substring(start, i); start = i + 1
+        case _ =>
+      }
+      i += 1
+    }
+    (found.result().filter(_.trim.nonEmpty), s.length)
+  }
+
+  /** Every bracketed clause that directly follows `from` (`f(a)(b)`). */
+  private def clauses(s: String, from: Int): Seq[Seq[String]] =
+    if (from < s.length && s(from) == '(') {
+      val (args, next) = items(s, from)
+      args +: clauses(s, next)
+    } else Nil
+
+  /** An operator parameter exists only where a caller sets it: a
+    * defaulted parameter that no call in src/main, src/test or the
+    * benchmark harness passes — by name, or positionally at its index —
+    * is one value written as an option. It belongs in a named constant
+    * of its object, where the Spark build, its SQL oracle and its
+    * streaming twin all read it. Calls are matched by method name, so a
+    * call to a same-named method elsewhere also counts as setting it. */
+  test("every defaulted parameter in src/main is set by some caller") {
+    assert(main.isDirectory, s"run from the repository root (no ${main.getPath})")
+    val callers = (scalaFiles(main) ++ scalaFiles(new java.io.File("src/test/scala")) ++
+      scalaFiles(new java.io.File("perfbench/harness")))
+      .map(f => codeOnly(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")))
+    val named = """(?s)\s*(\w+)\s*=(?![=>]).*""".r
+    def positional(args: Seq[String]) = args.takeWhile(a => named.unapplySeq(a).isEmpty).size
+    val param = """(?s)\s*(?:implicit\s+)?(?:val\s+)?(\w+)\s*:(.*)""".r
+    def hasDefault(rest: String): Boolean = {
+      var depth = 0
+      rest.indices.exists { k =>
+        rest(k) match {
+          case '(' | '[' | '{' => depth += 1; false
+          case ')' | ']' | '}' => depth -= 1; false
+          case '=' => depth == 0 && !rest.startsWith("=>", k) && !rest.startsWith("==", k) &&
+            (k == 0 || !"<>!=".contains(rest(k - 1)))
+          case _ => false
+        }
+      }
+    }
+    val defRe = """\bdef\s+(\w+)\s*(?:\[[^\]]*\])?\s*(?=\()""".r
+    // (place, def, clause, index, parameter) of every defaulted parameter
+    val defaulted = scalaFiles(main).flatMap { f =>
+      val s = codeOnly(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+      defRe.findAllMatchIn(s).toSeq.flatMap { d =>
+        val at = s"${f.getPath}:${s.substring(0, d.start).count(_ == '\n') + 1}"
+        clauses(s, d.end).zipWithIndex.flatMap { case (params, ci) =>
+          params.zipWithIndex.collect {
+            case (param(p, rest), pi) if hasDefault(rest) => (at, d.group(1), ci, pi, p)
+          }
+        }
+      }
+    }
+    val callsOf = defaulted.map(_._2).distinct.map { name =>
+      name -> callers.flatMap { c =>
+        ("""(?<![\w$])""" + name + """\s*(?:\[[^\]]*\])?\s*(?=\()""").r.findAllMatchIn(c)
+          .filterNot(m => c.substring(math.max(0, m.start - 8), m.start).trim.endsWith("def"))
+          .map(m => clauses(c, m.end))
+      }
+    }.toMap
+    val unset = defaulted.collect {
+      case (at, name, ci, pi, p) if !callsOf(name).exists(cl => cl.size > ci &&
+          (positional(cl(ci)) > pi || cl(ci).exists { case named(n) => n == p; case _ => false })) =>
+        s"$at $name.$p"
+    }
+    assert(unset.isEmpty, s"${unset.size} defaulted parameters no caller sets " +
+      "(make each a constant of its object): " + unset.mkString(", "))
+  }
 }

@@ -236,7 +236,7 @@ class StreamingSpec extends AnyFunSuite {
     val wmStream = spark.readStream.schema(schema).parquet(s"$dir/documents.parquet*")
       .withColumn("ingest_time", expr("timestamp_micros((doc_id + 86400) * 1000000)"))
     runToCompletion(
-      graft.streaming.DataOps.streamLineDedup(wmStream, 10, Some("10 minutes")),
+      graft.streaming.DataOps.streamLineDedup(wmStream, Some("10 minutes")),
       "c27sw", "append")
     assert(spark.table("c27sw").count() == batchKept)
   }

@@ -24,9 +24,9 @@ for tier in $TIERS; do
   log=/tmp/bench_${tier}.log
   if [ "$tier" = sf0_1 ]; then
     python3 tools/make_stream_slices.py /root/testdata/sf0.1 /tmp/stream_sf0_1 8
-    export SPARK_GRAFT_STREAM_SLICES=/tmp/stream_sf0_1 SPARK_GRAFT_STREAM_MFPT=2
+    export SPARK_GRAFT_STREAM_SLICES=/tmp/stream_sf0_1
   else
-    unset SPARK_GRAFT_STREAM_SLICES SPARK_GRAFT_STREAM_MFPT
+    unset SPARK_GRAFT_STREAM_SLICES
   fi
   echo "=== $tier (${DIRS[$tier]}) $(date -u +%H:%M:%SZ)"
   # >=3 interleaved passes (VERDICT r13 #5): two passes could not
