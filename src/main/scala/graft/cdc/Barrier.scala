@@ -46,6 +46,7 @@ import org.apache.spark.sql.functions._
   * over the same key partitioning (no second exchange).
   */
 object Barrier {
+  import Materialize.SyncStep
 
   /** The table-trigger event dispatcher (heartbeatpb DDLSpan). */
   val TriggerDispatcher = -1L
@@ -75,7 +76,7 @@ object Barrier {
     *  - every syncpoint boundary (the A16 cadence) blocks ALL
     *    dispatchers including the trigger.
     */
-  def blockedEvents(cl: DataFrame, syncStep: Long): DataFrame = {
+  def blockedEvents(cl: DataFrame): DataFrame = {
     val uni = ClDims.tables(cl)
       .withColumn("dispatcher_id", dispId(col("schema_name"), col("table_name")))
     val versions = SchemaStore.schemaVersions(cl)
@@ -90,8 +91,8 @@ object Barrier {
       dispId(col("schema_name"), col("table_name")).as("dispatcher_id"))
     // empty-safe boundary grid, the A16 syncpoint cadence
     val bounds = ClDims.maxTs(cl)
-      .select(explode(when(col("m") >= syncStep,
-        sequence(lit(syncStep), col("m"), lit(syncStep)))
+      .select(explode(when(col("m") >= SyncStep,
+        sequence(lit(SyncStep), col("m"), lit(SyncStep)))
         .otherwise(array().cast("array<long>"))).as("block_ts"))
     val syncTables = bounds.crossJoin(broadcast(uni)).select(
       col("block_ts"), lit(1L).as("is_syncpoint"),
@@ -140,18 +141,18 @@ object Barrier {
 
   /** A75 production query: barrier resolution of the derived DDL +
     * syncpoint block-event stream. */
-  def ddlBarrier(cl: DataFrame, syncStep: Long): DataFrame =
-    frame(blockedEvents(cl, syncStep))
+  def ddlBarrier(cl: DataFrame): DataFrame =
+    frame(blockedEvents(cl))
 
-  def ddlBarrierSql(syncStep: Long): String =
+  def ddlBarrierSql: String =
     s"""WITH versions AS (${SchemaStore.schemaVersionsSql}),
        |uni AS (
        |  SELECT DISTINCT schema_name, table_name, $dispIdSql AS dispatcher_id
        |  FROM changelog
        |),
        |bounds AS (
-       |  SELECT UNNEST(GENERATE_SERIES($syncStep,
-       |    (SELECT MAX(commit_ts) FROM changelog), $syncStep)) AS block_ts
+       |  SELECT UNNEST(GENERATE_SERIES($SyncStep,
+       |    (SELECT MAX(commit_ts) FROM changelog), $SyncStep)) AS block_ts
        |),
        |blocked AS (
        |  SELECT valid_from AS block_ts, CAST(0 AS BIGINT) AS is_syncpoint,
@@ -225,8 +226,8 @@ object Barrier {
     * dimension-scale (one row per table after the frontier reduce); the
     * rule match is a broadcast nested loop over (changefeeds × tables);
     * one final aggregation on the handful of changefeed keys. */
-  def watermarkAgg(cl: DataFrame, changefeeds: Seq[(String, Seq[String])],
-                   syncStep: Long): DataFrame = {
+  def watermarkAgg(cl: DataFrame,
+                   changefeeds: Seq[(String, Seq[String])]): DataFrame = {
     val spark = cl.sparkSession
     import spark.implicits._
     val defs = changefeeds.flatMap { case (cf, rules) =>
@@ -235,7 +236,7 @@ object Barrier {
     val spans = Materialize.spanFrontier(cl)
       .select(col("schema_name"), col("table_name"),
         col("frontier_ts").as("resolved_ts"),
-        expr(s"(frontier_ts div $syncStep) * $syncStep").as("checkpoint_ts"),
+        expr(s"(frontier_ts div $SyncStep) * $SyncStep").as("checkpoint_ts"),
         concat_ws(".", col("schema_name"), col("table_name")).as("span"))
     val members = defs
       .join(broadcast(spans), expr("span LIKE rule"), "left")
@@ -261,8 +262,7 @@ object Barrier {
 
   /** The A76 pipeline as a reusable CTE chain ending in `wm` —
     * A78's safepoint query extends it. */
-  private def watermarkCtes(changefeeds: Seq[(String, Seq[String])],
-                            syncStep: Long): String = {
+  private def watermarkCtes(changefeeds: Seq[(String, Seq[String])]): String = {
     val defRows = changefeeds.flatMap { case (cf, rules) =>
       rules.map(r => s"('$cf', '$r')")
     }.mkString(", ")
@@ -275,7 +275,7 @@ object Barrier {
        |spans AS (
        |  SELECT schema_name || '.' || table_name AS span,
        |    MIN(rts) AS resolved_ts,
-       |    (MIN(rts) // $syncStep) * $syncStep AS checkpoint_ts
+       |    (MIN(rts) // $SyncStep) * $SyncStep AS checkpoint_ts
        |  FROM regions GROUP BY schema_name, table_name
        |),
        |defs(changefeed, rule) AS (VALUES $defRows),
@@ -298,9 +298,8 @@ object Barrier {
        |)""".stripMargin
   }
 
-  def watermarkAggSql(changefeeds: Seq[(String, Seq[String])],
-                      syncStep: Long): String =
-    s"""WITH ${watermarkCtes(changefeeds, syncStep)}
+  def watermarkAggSql(changefeeds: Seq[(String, Seq[String])]): String =
+    s"""WITH ${watermarkCtes(changefeeds)}
        |SELECT * FROM wm""".stripMargin
 
   // ------------------------------------------------------------------
@@ -333,10 +332,9 @@ object Barrier {
     * Checkpoints come from the A76 watermark aggregation; one row per
     * changefeed carrying its state, blocking verdict, and the fleet's
     * safepoint upper bound. Dimension-scale end to end. */
-  def gcSafepoint(cl: DataFrame, fleet: Seq[CfState],
-                  syncStep: Long): DataFrame =
+  def gcSafepoint(cl: DataFrame, fleet: Seq[CfState]): DataFrame =
     gcSafepointFromWm(
-      watermarkAgg(cl, fleet.map(f => f.changefeed -> f.rules), syncStep),
+      watermarkAgg(cl, fleet.map(f => f.changefeed -> f.rules)),
       fleet)
       .select(col("changefeed"), col("state"), col("error_code"),
         col("n_spans"), col("checkpoint_ts"), col("blocks_gc"),
@@ -382,8 +380,7 @@ object Barrier {
     * frame is independently oracle-checked; the join fabric is
     * dimension-scale (fleet × spans LIKE-join + the span-level hot
     * frame), the C46-funnel discipline applied to the CDC plane. */
-  def changefeedOverview(cl: DataFrame, fleet: Seq[CfState],
-                         syncStep: Long): DataFrame = {
+  def changefeedOverview(cl: DataFrame, fleet: Seq[CfState]): DataFrame = {
     val spark = cl.sparkSession
     import spark.implicits._
     // ONE watermark aggregation feeds both the safepoint and the
@@ -391,7 +388,7 @@ object Barrier {
     // gcSafepoint, once as a separate wmFull — identical subtrees the
     // planner cannot merge across a join)
     val base = gcSafepointFromWm(
-      watermarkAgg(cl, fleet.map(f => f.changefeed -> f.rules), syncStep),
+      watermarkAgg(cl, fleet.map(f => f.changefeed -> f.rules)),
       fleet)
     val rules = fleet.flatMap(f => f.rules.map(r => (f.changefeed, r)))
       .toDF("changefeed", "rule")
@@ -411,13 +408,13 @@ object Barrier {
         coalesce(col("n_hot_spans"), lit(0L)).as("n_hot_spans"))
   }
 
-  def changefeedOverviewSql(fleet: Seq[CfState], syncStep: Long): String = {
+  def changefeedOverviewSql(fleet: Seq[CfState]): String = {
     val ruleRows = fleet.flatMap(f =>
       f.rules.map(r => s"('${f.changefeed}', '$r')")).mkString(", ")
     s"""WITH base AS (
-       |  ${gcSafepointSql(fleet, syncStep).replace("\n", "\n  ")}
+       |  ${gcSafepointSql(fleet).replace("\n", "\n  ")}
        |), wmfull AS (
-       |  ${watermarkAggSql(fleet.map(f => f.changefeed -> f.rules), syncStep)
+       |  ${watermarkAggSql(fleet.map(f => f.changefeed -> f.rules))
              .replace("\n", "\n  ")}
        |), hot AS (
        |  SELECT span FROM (
@@ -439,14 +436,14 @@ object Barrier {
        |LEFT JOIN hotcf h ON h.changefeed = b.changefeed""".stripMargin
   }
 
-  def gcSafepointSql(fleet: Seq[CfState], syncStep: Long): String = {
+  def gcSafepointSql(fleet: Seq[CfState]): String = {
     val stateRows = fleet.map { f =>
       val err = f.errorCode.map(c => s"'$c'").getOrElse("NULL")
       s"('${f.changefeed}', '${f.state}', $err)"
     }.mkString(", ")
     val blockList = blockStates.map(s => s"'$s'").mkString(", ")
     val fastFail = GcFastFailCodes.map(c => s"'$c'").mkString(", ")
-    s"""WITH ${watermarkCtes(fleet.map(f => f.changefeed -> f.rules), syncStep)},
+    s"""WITH ${watermarkCtes(fleet.map(f => f.changefeed -> f.rules))},
        |states(changefeed, state, error_code) AS (VALUES $stateRows),
        |joined AS (
        |  SELECT w.changefeed, s.state, s.error_code, w.n_spans, w.checkpoint_ts,

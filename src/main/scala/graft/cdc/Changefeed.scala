@@ -26,7 +26,6 @@ object Changefeed {
     case object Debezium extends Protocol
     case object Csv extends Protocol
     case object Avro extends Protocol
-    case object Simple extends Protocol
   }
 
   /** Declarative changefeed definition. Defaults mirror the
@@ -36,13 +35,17 @@ object Changefeed {
       tableRules: Seq[String] = Seq("%.%"),
       ignoreOps: Seq[String] = Nil,
       ignoreTsAtOrBelow: Option[Long] = None,
-      ignoreExpr: Option[Column] = None,
       nParts: Int = 16,
       topicRules: Seq[(Seq[String], String)] = Nil,
       defaultTopic: String = "changefeed",
-      protocol: Protocol = Protocol.CanalJson,
-      safeMode: Boolean = false,
-      maxTxnRow: Int = 256)
+      protocol: Protocol = Protocol.CanalJson) {
+    /** Rows per MySQL-sink batch (pkg/sink/mysql/config.go
+      * DefaultMaxTxnRow). */
+    val maxTxnRow: Int = 256
+  }
+
+  /** The MySQL sink writes INSERT, not safe-mode REPLACE. */
+  val SafeMode = false
 
   /** The filter chain every sink shares (reference: pkg/filter applied
     * before routing). */
@@ -50,7 +53,6 @@ object Changefeed {
     var out = Filters.tableFilter(cl, cfg.tableRules)
     if (cfg.ignoreOps.nonEmpty) out = Filters.eventTypeFilter(out, cfg.ignoreOps)
     cfg.ignoreTsAtOrBelow.foreach(ts => out = Filters.tsFilter(out, ts))
-    cfg.ignoreExpr.foreach(e => out = Filters.exprFilter(out, e))
     out
   }
 
@@ -71,7 +73,6 @@ object Changefeed {
     case Protocol.Debezium     => Codecs.debeziumValue
     case Protocol.Csv          => Codecs.csvLine
     case Protocol.Avro         => Codecs.avroValue
-    case Protocol.Simple       => SimpleProtocol.dmlValue
   }
 
   /** Kafka-sink message frame: filter → route topic (per-table
@@ -89,11 +90,8 @@ object Changefeed {
         valueCol(cfg).as("value"))
   }
 
-  /** DuckDB oracle for [[kafka]] with a debezium-protocol config.
-    * `ignoreExpr` is a Catalyst Column and has no SQL rendering here —
-    * reject configs that set it rather than emit a wrong oracle. */
+  /** DuckDB oracle for [[kafka]] with a debezium-protocol config. */
   def kafkaDebeziumSql(cfg: Config): String = {
-    require(cfg.ignoreExpr.isEmpty, "ignoreExpr has no oracle rendering")
     require(cfg.protocol == Protocol.Debezium,
       s"this oracle renders debezium values; config says ${cfg.protocol}")
     s"""SELECT commit_ts,
@@ -107,11 +105,7 @@ object Changefeed {
 
   /** MySQL-sink statement frame: filter → per-txn batched statements. */
   def mysql(cl: DataFrame, cfg: Config): DataFrame =
-    Sinks.mysqlStmts(filtered(cl, cfg), cfg.maxTxnRow, cfg.safeMode)
-
-  /** Storage-sink layout frame: filter → partitioned file manifest. */
-  def storage(cl: DataFrame, cfg: Config): DataFrame =
-    Codecs.storageLayout(filtered(cl, cfg))
+    Sinks.mysqlStmts(filtered(cl, cfg), cfg.maxTxnRow, SafeMode)
 
   /** Materialized downstream table (blackhole/verification sink). */
   def snapshot(cl: DataFrame, cfg: Config): DataFrame =

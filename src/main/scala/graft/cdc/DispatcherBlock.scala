@@ -36,7 +36,11 @@ import org.apache.spark.sql.functions._
   * all joins are broadcast equi-joins on schema/table keys. */
 object DispatcherBlock {
 
-  /** Commit-ts spacing of the planted block events. */
+  /** Commit-ts spacing of the planted block events past the horizon.
+    * Not the syncpoint interval ([[Materialize.SyncStep]]) nor the
+    * schema-version cadence ([[SchemaStore.step]]): it only has to
+    * order the planted events after every real one, and any positive
+    * spacing does. */
   val SyncStep = 1000L
 
   val SyncPoints = 3L

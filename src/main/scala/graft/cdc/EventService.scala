@@ -43,8 +43,9 @@ import org.apache.spark.sql.functions._
   * post-filter), partial-aggregated before the final join. */
 object EventService {
 
-  /** Commit-ts width of one [[scanTasks]] / [[scanEmit]] tick. */
-  val SyncStep = 100L
+  // one scan tick is the syncpoint interval: a lagging dispatcher's
+  // sent ts is the last syncpoint-aligned boundary
+  import Materialize.SyncStep
 
   /** A77: one row per dispatcher span with its scan decision. */
   def scanTasks(cl: DataFrame): DataFrame = {

@@ -232,6 +232,13 @@ object Materialize {
       |FROM changelog
       |GROUP BY schema_name, table_name, start_ts""".stripMargin
 
+  /** Commit-ts interval between syncpoints (the changefeed's
+    * sync-point interval). One setting: the A16 syncpoint boundaries,
+    * the A75 syncpoint block events, the A76 checkpoint alignment, the
+    * syncpoint statements and the event service's syncpoint-aligned
+    * dispatchers all read it. */
+  val SyncStep = 100L
+
   /** Syncpoint snapshots: consistent table state at each ts boundary
     * (reference: downstreamadapter/syncpoint — periodic aligned
     * snapshots downstream can diff against). Emits per boundary/table:
@@ -245,7 +252,8 @@ object Materialize {
     * boundary grid. Cost: one lag-window shuffle keyed by pk, one
     * aggregation, and a cumsum over the tiny (tables × boundaries)
     * grid — telescoping makes it exact. */
-  def syncpoint(spark: SparkSession, cl: DataFrame, step: Long): DataFrame = {
+  def syncpoint(spark: SparkSession, cl: DataFrame): DataFrame = {
+    val step = SyncStep
     import org.apache.spark.sql.expressions.Window
     val wk = Window.partitionBy(col("schema_name"), col("table_name"), col("pk"))
       .orderBy(col("commit_ts"))
@@ -287,7 +295,8 @@ object Materialize {
         col("live_rows"), col("total_value_cents"))
   }
 
-  def syncpointSql(step: Long): String =
+  def syncpointSql: String = {
+    val step = SyncStep
     s"""SELECT boundary_ts, schema_name, table_name,
        |  COUNT(*) AS live_rows,
        |  CAST(SUM(CAST(ROUND(value * 100.0, 0) AS BIGINT)) AS BIGINT) AS total_value_cents
@@ -301,6 +310,7 @@ object Materialize {
        |  GROUP BY b.boundary_ts, c.schema_name, c.table_name, c.pk
        |) WHERE last_op <> 'D'
        |GROUP BY boundary_ts, schema_name, table_name""".stripMargin
+  }
 
   /** Event sort order — TiCDC's eventstore guarantee: per key, events
     * are delivered in (commit_ts, start_ts) order (reference:

@@ -151,7 +151,8 @@ object MysqlDdl {
     * [[SyncpointCleanupEvery]]-th boundary. Shapes: one tiny boundary grid
     * (max_ts/step rows) + one aggregation for the per-boundary max —
     * broadcast-scale at any corpus size. */
-  def syncpointStmts(cl: DataFrame, step: Long = 100L): DataFrame = {
+  def syncpointStmts(cl: DataFrame): DataFrame = {
+    val step = Materialize.SyncStep
     import org.apache.spark.sql.expressions.Window
     val bounds = ClDims.maxTs(cl)
       .select(explode(when(col("m") >= step, sequence(lit(step), col("m"), lit(step)))
@@ -190,7 +191,8 @@ object MysqlDdl {
           .otherwise(lit(null).cast("string")).as("cleanup_stmt"))
   }
 
-  def syncpointStmtsSql(step: Long = 100L): String =
+  def syncpointStmtsSql: String = {
+    val step = Materialize.SyncStep
     s"""WITH bounds AS (
        |  SELECT UNNEST(GENERATE_SERIES($step, (SELECT MAX(commit_ts) FROM changelog), $step))
        |    AS primary_ts
@@ -217,6 +219,7 @@ object MysqlDdl {
        |    'DELETE IGNORE FROM tidb_cdc.syncpoint_v1 WHERE ticdc_cluster_id = ''$ClusterId'' and changefeed = ''$ChangefeedId'' and created_at < (NOW() - INTERVAL $SyncpointRetentionSec.00 SECOND)'
        |  END AS cleanup_stmt
        |FROM filled""".stripMargin
+  }
 
   /** A55 — restart/resume read path (reference: mysql_writer.go:374-430
     * `GetStartTsList`): on restart the sink reads each table's recorded

@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   *    event: 8-byte big-endian key length + key JSON bytes
   *  - message VALUE = per event: 8-byte big-endian value length +
   *    value JSON bytes (no version head on the value side)
-  *  - a message holds at most `maxBatch` events (MaxBatchSize; the
-  *    companion MaxMessageBytes cap is the A50 fold / A31 claim-check
-  *    path), events appended in commit_ts order per (table, sink
-  *    partition) — the same stream keying as A49
+  *  - a message holds at most `maxBatch` events (MaxBatchSize) and,
+  *    in [[messagesByteCapped]], at most `maxBytes` wire bytes
+  *    (MaxMessageBytes), events appended in commit_ts order per (table,
+  *    sink partition) — the same stream keying as A49
   *  - DDL events and resolved-ts checkpoints are messages TOO
   *    (encoder.go:205-231): single-event frames with the same
   *    version+length framing; the resolved-ts value is the bare
@@ -28,9 +28,9 @@ import org.apache.spark.sql.functions._
   * tiflow model.MessageType). Emitted as uppercase hex, byte-exact
   * against the DuckDB oracle.
   *
-  * Scale shape: ROW batching is ONE window shuffle keyed exactly like
-  * the kafka writer (A49's shape) followed by an ordered string
-  * aggregation on the same key — no new shuffle classes; DDL/RESOLVED
+  * Scale shape: the ROW leg is the [[Sinks.batches]] fold — ONE
+  * shuffle keyed exactly like the kafka writer, a sort and one
+  * streaming pass that emits each message as it closes; DDL/RESOLVED
   * legs are tiny. */
 object OpenWire {
 
@@ -47,34 +47,27 @@ object OpenWire {
   private def segHexSql(e: String): String =
     s"CONCAT(${lenHexSql(e)}, hex(encode($e)))"
 
-  /** commit_ts-ordered concat within the batch (collect_list order is
-    * not deterministic; the sort key rides in the struct). */
-  private def orderedConcat(c: Column): Column = array_join(
-    transform(array_sort(collect_list(struct(col("commit_ts").as("k"), c.as("v")))),
-      x => x.getField("v")), "")
-
-  /** The full open-protocol message stream: batched ROW messages +
-    * one DDL message per DDL event + the resolved-ts checkpoint. */
-  def messages(cl: DataFrame, n: Int, maxBatch: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window
-      .partitionBy(col("schema_name"), col("table_name"), col("partition"))
-      .orderBy(col("commit_ts"))
-    val rows = cl.select(col("schema_name"), col("table_name"), col("commit_ts"),
-        Dispatchers.indexValueBucket(n).as("partition"),
-        segHex(Codecs.openProtocolKey).as("k_seg"),
-        segHex(Codecs.openProtocolValue).as("v_seg"))
-      .withColumn("batch_id",
-        call_function("div", row_number().over(w) - lit(1), lit(maxBatch.toLong)))
-      .groupBy(col("schema_name"), col("table_name"), col("partition"),
-        col("batch_id"))
-      .agg(count(lit(1)).as("n_rows"),
-        concat(lit(versionHex), orderedConcat(col("k_seg"))).as("key_wire"),
-        orderedConcat(col("v_seg")).as("value_wire"))
+  /** The ROW messages: the [[Sinks.batches]] fold over the per-event
+    * key/value segments. An event's bytes are its two segments' bytes
+    * (key + value + the 16 prefix bytes; each segment is hex, 2 chars a
+    * byte) and every message carries the 8-byte version head, so the
+    * byte term is the reference's message Length(). */
+  def rows(cl: DataFrame, n: Int, maxBatch: Int, maxBytes: Long): DataFrame = {
+    val segs = cl.select(col("schema_name"), col("table_name"),
+      Dispatchers.indexValueBucket(n).as("partition"), col("commit_ts"),
+      segHex(Codecs.openProtocolKey).as("k_seg"),
+      segHex(Codecs.openProtocolValue).as("v_seg"))
+    Sinks.batches(segs, expr("(length(k_seg) + length(v_seg)) div 2"),
+        col("k_seg"), col("v_seg"), maxBatch, maxBytes, 8L, Long.MaxValue)
       .select(lit("ROW").as("msg_type"), col("schema_name"), col("table_name"),
         col("partition"), col("batch_id"), col("n_rows"),
-        col("key_wire"), col("value_wire"))
+        concat(lit(versionHex), col("key_wire")).as("key_wire"),
+        col("value_wire"))
+  }
 
+  /** The non-row messages: one DDL message per DDL event + the
+    * resolved-ts checkpoint. */
+  private def envelopes(cl: DataFrame): DataFrame = {
     // DDL envelope (codec.go:99-147): single-event message, the key's
     // t=2, the value {"q":…,"t":<TiDB action type>}
     val ddlKey = concat(lit("{\"ts\":"), col("valid_from"),
@@ -100,10 +93,35 @@ object OpenWire {
         concat(lit(versionHex), segHex(resolvedKey)).as("key_wire"),
         lit(f"${0L}%016X").as("value_wire"))
 
-    rows.unionAll(ddl).unionAll(resolved)
+    ddl.unionAll(resolved)
   }
 
-  def messagesSql(n: Int, maxBatch: Int): String = {
+  /** The full open-protocol message stream: batched ROW messages of at
+    * most `maxBatch` events + the DDL and resolved-ts messages. */
+  def messages(cl: DataFrame, n: Int, maxBatch: Int): DataFrame =
+    messagesByteCapped(cl, n, maxBatch, Long.MaxValue)
+
+  /** The PRODUCTION batch-close rule of `pushMessage` (encoder.go:122:
+    * a new message opens when the current one would exceed
+    * `MaxMessageBytes` OR holds `MaxBatchSize` events) applied to the
+    * actual ROW wire; DDL / RESOLVED legs as in [[messages]]. */
+  def messagesByteCapped(cl: DataFrame, n: Int, maxBatch: Int,
+                         maxBytes: Long): DataFrame =
+    rows(cl, n, maxBatch, maxBytes).unionAll(envelopes(cl))
+
+  /** Per event: stream key, commit_ts and the key/value segments. */
+  private def segsSql(n: Int): String =
+    s"""SELECT schema_name, table_name, commit_ts,
+       |      ${Dispatchers.indexValueBucketSql(n)} AS partition,
+       |      ${segHexSql(Codecs.openProtocolKeySql)} AS k_seg,
+       |      ${segHexSql(Codecs.openProtocolValueSql)} AS v_seg
+       |    FROM changelog""".stripMargin
+
+  /** The message stream over `batched`, a relation holding every
+    * event's segments with its batch_id: the ROW leg concatenates each
+    * batch's segments in commit_ts order, then the DDL and RESOLVED
+    * legs. */
+  private def wireSql(batched: String): String = {
     val ddlKeySql =
       """CONCAT('{"ts":', valid_from, ',"scm":"', schema_name,
         |       '","tbl":"', table_name, '","t":2}')""".stripMargin
@@ -114,18 +132,7 @@ object OpenWire {
        |  COUNT(*) AS n_rows,
        |  CONCAT('$versionHex', string_agg(k_seg, '' ORDER BY commit_ts)) AS key_wire,
        |  string_agg(v_seg, '' ORDER BY commit_ts) AS value_wire
-       |FROM (
-       |  SELECT *, CAST((ROW_NUMBER() OVER (
-       |      PARTITION BY schema_name, table_name, partition
-       |      ORDER BY commit_ts) - 1) // $maxBatch AS BIGINT) AS batch_id
-       |  FROM (
-       |    SELECT schema_name, table_name, commit_ts,
-       |      ${Dispatchers.indexValueBucketSql(n)} AS partition,
-       |      ${segHexSql(Codecs.openProtocolKeySql)} AS k_seg,
-       |      ${segHexSql(Codecs.openProtocolValueSql)} AS v_seg
-       |    FROM changelog
-       |  )
-       |)
+       |FROM $batched
        |GROUP BY 1, 2, 3, 4, 5
        |UNION ALL
        |SELECT 'DDL' AS msg_type, schema_name, table_name,
@@ -144,147 +151,25 @@ object OpenWire {
        |FROM changelog""".stripMargin
   }
 
-  /** The PRODUCTION batch-close rule of `pushMessage` (encoder.go:122:
-    * a new message opens when the current one would exceed
-    * `MaxMessageBytes` OR holds `MaxBatchSize` events — the byte term
-    * counts key + value + 16 prefix bytes per event) applied to the
-    * actual ROW wire: the A50 greedy fold assigns each event its batch
-    * id, then the same ordered segment aggregation renders each
-    * batch's key/value wire. DDL / RESOLVED legs are identical to
-    * [[messages]].
-    *
-    * Plan (the r10 #4 cut — 23.4 s → sf10 ≤ ~10 s): ONE payload
-    * shuffle, ONE sort, ONE streaming pass. The r10 shape folded over
-    * the full typed-image wire, and — because mapPartitions wipes
-    * outputPartitioning — paid a SECOND payload shuffle into the
-    * groupBy plus the collect_list/array_sort agg machinery. The
-    * intermediate fix the judge sketched (fold over lengths + ids,
-    * reattach payloads by a join) measured 20.8 s: Catalyst rewrites
-    * the payload repartition to the 4-column join key, so the batch
-    * groupBy re-shuffles the payload anyway. This fold instead EMITS
-    * completed messages directly — the O(1)-state sequential pass
-    * builds each batch's key/value wire in a string builder and
-    * yields one row per closed batch, so the agg, the reattach join
-    * and the second payload shuffle all vanish. Per-batch state is
-    * bounded by maxBytes; message order inside a batch is the sorted
-    * (commit_ts) order, identical to the window variant's
-    * (commit_ts, seg) sort and the oracle's ORDER BY commit_ts.
-    *
-    * Precondition (probed, zero ties at sf0.01 and sf10 / 10 M rows):
-    * `commit_ts` is unique within (schema, table, partition) — the
-    * changelog derives commit_ts injectively from event_id. Under a
-    * tie the fold's ORDER (and thus a boundary falling between tied
-    * rows) would be nondeterministic — exactly as it already is for
-    * the window variant and the DuckDB oracle's ORDER BY commit_ts. */
-  def messagesByteCapped(cl: DataFrame, n: Int, maxBatch: Int,
-                         maxBytes: Long): DataFrame = {
-    val spark = cl.sparkSession
-    import spark.implicits._
-    // rendered payload, narrow (single render pass, row-local)
-    val base = cl.select(col("schema_name"), col("table_name"),
-        Dispatchers.indexValueBucket(n).as("partition"), col("commit_ts"),
-        segHex(Codecs.openProtocolKey).as("k_seg"),
-        segHex(Codecs.openProtocolValue).as("v_seg"))
-      .repartition(col("schema_name"), col("table_name"), col("partition"))
-      .sortWithinPartitions(col("schema_name"), col("table_name"),
-        col("partition"), col("commit_ts"))
-      .as[(String, String, Long, Long, String, String)]
-    val rows = base.mapPartitions { it =>
-      // streaming greedy fold (encoder.go:122): a batch closes when it
-      // holds maxBatch events or the next event would exceed maxBytes;
-      // each seg hex is (8-byte prefix + body) at 2 chars/byte, so seg
-      // byte length = hex length / 2 (includes the 16 prefix bytes),
-      // and a fresh message adds the 8-byte version head — exactly
-      // message.Length() upstream
-      new Iterator[(String, String, Long, Long, Long, String, String)] {
-        private var open = false
-        private var sch = ""; private var tbl = ""; private var part = 0L
-        private var batchId = 0L; private var nEv = 0L; private var bytes = 0L
-        private val kb = new java.lang.StringBuilder
-        private val vb = new java.lang.StringBuilder
-        private var out: (String, String, Long, Long, Long, String, String) = _
+  /** The oracle of [[messages]]: its batches by formula
+    * (row_number div maxBatch), independent of the fold. */
+  def messagesSql(n: Int, maxBatch: Int): String =
+    wireSql(
+      s"""(
+         |  SELECT *, CAST((ROW_NUMBER() OVER (
+         |      PARTITION BY schema_name, table_name, partition
+         |      ORDER BY commit_ts) - 1) // $maxBatch AS BIGINT) AS batch_id
+         |  FROM (
+         |    ${segsSql(n)}
+         |  )
+         |)""".stripMargin)
 
-        private def close(): (String, String, Long, Long, Long, String, String) = {
-          val m = (sch, tbl, part, batchId, nEv, versionHex + kb.toString, vb.toString)
-          kb.setLength(0); vb.setLength(0)
-          m
-        }
-        private def advance(): Unit = {
-          while (out == null && it.hasNext) {
-            val (s, t, p, _, k, v) = it.next()
-            val evBytes = (k.length + v.length) / 2L
-            if (open && (s != sch || t != tbl || p != part)) {
-              out = close(); open = false
-            } else if (open && (nEv >= maxBatch || bytes + evBytes > maxBytes)) {
-              out = close(); batchId += 1L
-              nEv = 1L; bytes = evBytes + 8L; kb.append(k); vb.append(v)
-            } else if (open) {
-              nEv += 1L; bytes += evBytes; kb.append(k); vb.append(v)
-            }
-            if (!open) {
-              open = true; sch = s; tbl = t; part = p; batchId = 0L
-              nEv = 1L; bytes = evBytes + 8L; kb.append(k); vb.append(v)
-            }
-          }
-          if (out == null && open) { out = close(); open = false }
-        }
-        override def hasNext: Boolean = { if (out == null) advance(); out != null }
-        override def next(): (String, String, Long, Long, Long, String, String) = {
-          if (out == null) advance()
-          val m = out; out = null; m
-        }
-      }
-    }.toDF("schema_name", "table_name", "partition", "batch_id", "n_rows",
-      "key_wire", "value_wire")
-      .select(lit("ROW").as("msg_type"), col("schema_name"), col("table_name"),
-        col("partition"), col("batch_id"), col("n_rows"),
-        col("key_wire"), col("value_wire"))
-    rows.unionAll(messages(cl, n, maxBatch)
-      .filter(col("msg_type") =!= "ROW"))
-  }
-
-  def messagesByteCappedSql(n: Int, maxBatch: Int, maxBytes: Long): String = {
-    val ddlResolvedLegs = messagesSql(n, maxBatch)
-      .split("\\nUNION ALL\\n", 2)(1) // the DDL + RESOLVED legs verbatim
+  def messagesByteCappedSql(n: Int, maxBatch: Int, maxBytes: Long): String =
     s"""WITH RECURSIVE msgs AS (
-       |  SELECT schema_name, table_name, commit_ts,
-       |    ${Dispatchers.indexValueBucketSql(n)} AS partition,
-       |    ${segHexSql(Codecs.openProtocolKeySql)} AS k_seg,
-       |    ${segHexSql(Codecs.openProtocolValueSql)} AS v_seg
-       |  FROM changelog
-       |), o AS (
-       |  SELECT *, CAST((length(k_seg) + length(v_seg)) // 2 AS BIGINT) AS ev_bytes,
-       |    ROW_NUMBER() OVER (
-       |      PARTITION BY schema_name, table_name, partition
-       |      ORDER BY commit_ts) AS rn
-       |  FROM msgs
-       |), fold AS (
-       |  SELECT schema_name, table_name, partition, commit_ts, k_seg, v_seg, rn,
-       |    CAST(0 AS BIGINT) AS batch_id, CAST(1 AS BIGINT) AS rows_in,
-       |    ev_bytes + 8 AS acc
-       |  FROM o WHERE rn = 1
-       |  UNION ALL
-       |  SELECT m.schema_name, m.table_name, m.partition, m.commit_ts,
-       |    m.k_seg, m.v_seg, m.rn,
-       |    CASE WHEN f.rows_in >= $maxBatch OR f.acc + m.ev_bytes > $maxBytes
-       |         THEN f.batch_id + 1 ELSE f.batch_id END,
-       |    CASE WHEN f.rows_in >= $maxBatch OR f.acc + m.ev_bytes > $maxBytes
-       |         THEN CAST(1 AS BIGINT) ELSE f.rows_in + 1 END,
-       |    CASE WHEN f.rows_in >= $maxBatch OR f.acc + m.ev_bytes > $maxBytes
-       |         THEN m.ev_bytes + 8 ELSE f.acc + m.ev_bytes END
-       |  FROM fold f JOIN o m
-       |    ON m.schema_name = f.schema_name AND m.table_name = f.table_name
-       |   AND m.partition = f.partition AND m.rn = f.rn + 1
-       |)
-       |SELECT 'ROW' AS msg_type, schema_name, table_name, partition, batch_id,
-       |  COUNT(*) AS n_rows,
-       |  CONCAT('$versionHex', string_agg(k_seg, '' ORDER BY commit_ts)) AS key_wire,
-       |  string_agg(v_seg, '' ORDER BY commit_ts) AS value_wire
-       |FROM fold
-       |GROUP BY 1, 2, 3, 4, 5
-       |UNION ALL
-       |$ddlResolvedLegs""".stripMargin
-  }
+       |    ${segsSql(n)}
+       |), ${Sinks.batchesSql("msgs", "CAST((length(k_seg) + length(v_seg)) // 2 AS BIGINT)",
+             maxBatch, maxBytes, 8L, Long.MaxValue)}
+       |${wireSql("fold")}""".stripMargin
 
   /** Decode — split every message back into its (key, value) event
     * pairs, the exact inverse of `pushMessage` (native parser

@@ -19,6 +19,10 @@ object SchemaStore {
   /** The table filter of [[schemaSnapshot]]. */
   val SnapshotRules: Seq[String] = Seq("db0.%", "db1.t1")
 
+  /** Commit-ts cadence of schema versions (a new version every `step`
+    * timestamps). Its own setting, not the syncpoint interval
+    * ([[Materialize.SyncStep]]): syncpoints and DDLs are separate block
+    * events, and the event service reads both grids. */
   val step = 1000L
 
   /** Deterministic version table: (schema, table, valid_from, schema_ver). */

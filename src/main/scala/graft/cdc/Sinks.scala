@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Sink-side frame derivations beyond the codecs: large-message
@@ -340,41 +340,172 @@ object Sinks {
        |GROUP BY 1, 2, 3, 4, 5""".stripMargin
   }
 
+  /** The open-protocol sink stream the A49/A50/A93 batchers close
+    * batches over: per event its (table, sink partition) stream key,
+    * commit_ts and encoded value bytes. */
+  private def sinkStream(cl: DataFrame, n: Int): DataFrame =
+    cl.select(col("schema_name"), col("table_name"),
+      Dispatchers.indexValueBucket(n).as("partition"), col("commit_ts"),
+      octet_length(Codecs.openProtocolValue).cast("long").as("payload_bytes"))
+
+  private def sinkStreamSql(n: Int): String =
+    s"""SELECT schema_name, table_name, commit_ts,
+       |    ${Dispatchers.indexValueBucketSql(n)} AS partition,
+       |    CAST(octet_length(encode(${Codecs.openProtocolValueSql})) AS BIGINT)
+       |      AS payload_bytes
+       |  FROM changelog""".stripMargin
+
+  /** The columns of one sink batch frame row. */
+  private val batchCols = Seq("schema_name", "table_name", "partition",
+    "batch_id", "n_rows", "batch_bytes", "first_ts", "last_ts").map(col)
+
+  /** The one batch-close fold of the sinks and the open-protocol wire
+    * (reference: open/encoder.go:122 `pushMessage` — a message holds at
+    * most MaxBatchSize events and closes when the next event would pass
+    * MaxMessageBytes — and kafka_dml_worker.go:264-307 `batch`, whose
+    * flush ticker closes a batch `flushInterval` after its first
+    * event). `events` carries schema_name, table_name, partition and
+    * commit_ts; per event `bytes` is its size and `key`/`value` the
+    * segments its message concatenates. Within each (table, partition)
+    * stream in commit_ts order, a batch admits the next event iff
+    * `rows < maxBatch`, `head + bytes + b <= maxBytes` (a message's
+    * fixed head plus the bytes it holds plus the event's) and
+    * `ts - firstTs < flushInterval`. A rule that does not apply is
+    * `Long.MaxValue`; an event over the byte cap alone forms a
+    * singleton batch.
+    *
+    * One row per closed batch: stream key, batch_id (0, 1, … per
+    * stream), n_rows, batch_bytes (the events' bytes, without the
+    * head), first/last ts, the concatenated key/value segments
+    * (key_wire, value_wire) and close_reason — 'size' (maxBatch
+    * reached), 'eof' (the stream drained), 'bytes' or 'flush' (the
+    * next event failed that term).
+    *
+    * A greedy prefix fold is sequential per stream, so it runs as the
+    * secondary-sort shape: ONE repartition by the stream key (the
+    * kafka writer's key), a sort by key + commit_ts, and one lazy
+    * `mapPartitions` pass that keeps O(1) state (the open batch; its
+    * segments are bounded by the caps) and emits each batch as it
+    * closes — no window, no aggregate, no second shuffle. Precondition
+    * (probed at sf0.01 and sf10): commit_ts is unique within a stream,
+    * so the order and every boundary are deterministic. */
+  def batches(events: DataFrame, bytes: Column, key: Column, value: Column,
+              maxBatch: Int, maxBytes: Long, head: Long,
+              flushInterval: Long): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val stream = events.select(col("schema_name"), col("table_name"),
+        col("partition"), col("commit_ts"), bytes, key, value)
+      .repartition(col("schema_name"), col("table_name"), col("partition"))
+      .sortWithinPartitions(col("schema_name"), col("table_name"),
+        col("partition"), col("commit_ts"))
+      .as[(String, String, Long, Long, Long, String, String)]
+    stream.mapPartitions { it =>
+      val in = it.buffered
+      val kb = new java.lang.StringBuilder
+      val vb = new java.lang.StringBuilder
+      var lastKey: (String, String, Long) = null
+      var lastId = -1L
+      new Iterator[(String, String, Long, Long, Long, Long, Long, Long,
+          String, String, String)] {
+        override def hasNext: Boolean = in.hasNext
+        override def next(): (String, String, Long, Long, Long, Long, Long,
+            Long, String, String, String) = {
+          val (s, t, p, ts0, b0, k0, v0) = in.next()
+          val streamKey = (s, t, p)
+          val id = if (streamKey == lastKey) lastId + 1 else 0L
+          var rows = 1L; var acc = b0; var last = ts0
+          kb.setLength(0); vb.setLength(0); kb.append(k0); vb.append(v0)
+          var reason: String = null
+          while (reason == null) {
+            if (rows >= maxBatch) reason = "size"
+            else if (!in.hasNext || in.head._1 != s || in.head._2 != t ||
+                in.head._3 != p) reason = "eof"
+            else {
+              val (_, _, _, ts, b, k, v) = in.head
+              if (head + acc + b > maxBytes) reason = "bytes"
+              else if (ts - ts0 >= flushInterval) reason = "flush"
+              else {
+                in.next()
+                rows += 1; acc += b; last = ts; kb.append(k); vb.append(v)
+              }
+            }
+          }
+          lastKey = streamKey; lastId = id
+          (s, t, p, id, rows, acc, ts0, last, kb.toString, vb.toString, reason)
+        }
+      }
+    }.toDF("schema_name", "table_name", "partition", "batch_id", "n_rows",
+      "batch_bytes", "first_ts", "last_ts", "key_wire", "value_wire",
+      "close_reason")
+  }
+
+  /** The DuckDB replay of [[batches]]: the `o` and recursive `fold`
+    * CTEs over a `stream` CTE (schema_name, table_name, partition,
+    * commit_ts, …), with `bytes` the per-event size over the stream's
+    * columns. `fold` holds every stream column plus `ev_bytes`, `rn`
+    * and the event's `batch_id`; the caller aggregates it. Written to
+    * follow a `WITH RECURSIVE` list. */
+  def batchesSql(stream: String, bytes: String, maxBatch: Int, maxBytes: Long,
+                 head: Long, flushInterval: Long): String = {
+    val close =
+      s"""f.rows_in >= $maxBatch
+         |           OR $head + f.acc + m.ev_bytes > $maxBytes
+         |           OR m.commit_ts - f.bfirst >= $flushInterval""".stripMargin
+    s"""o AS (
+       |  SELECT *, $bytes AS ev_bytes, ROW_NUMBER() OVER (
+       |      PARTITION BY schema_name, table_name, partition
+       |      ORDER BY commit_ts) AS rn
+       |  FROM $stream
+       |), fold AS (
+       |  SELECT *, CAST(0 AS BIGINT) AS batch_id, CAST(1 AS BIGINT) AS rows_in,
+       |    ev_bytes AS acc, commit_ts AS bfirst
+       |  FROM o WHERE rn = 1
+       |  UNION ALL
+       |  SELECT m.*,
+       |    CASE WHEN $close
+       |         THEN f.batch_id + 1 ELSE f.batch_id END,
+       |    CASE WHEN $close
+       |         THEN CAST(1 AS BIGINT) ELSE f.rows_in + 1 END,
+       |    CASE WHEN $close
+       |         THEN m.ev_bytes ELSE f.acc + m.ev_bytes END,
+       |    CASE WHEN $close
+       |         THEN m.commit_ts ELSE f.bfirst END
+       |  FROM fold f JOIN o m
+       |    ON m.schema_name = f.schema_name AND m.table_name = f.table_name
+       |   AND m.partition = f.partition AND m.rn = f.rn + 1
+       |)""".stripMargin
+  }
+
+  /** The sink batch frame of a [[batchesSql]] fold over the sink stream. */
+  private def batchFrameFoldSql(n: Int, maxBatch: Int, maxBytes: Long,
+                                flushInterval: Long): String =
+    s"""WITH RECURSIVE msgs AS (
+       |  ${sinkStreamSql(n)}
+       |), ${batchesSql("msgs", "payload_bytes", maxBatch, maxBytes, 0L, flushInterval)},
+       |agged AS (
+       |  SELECT schema_name, table_name, partition, batch_id,
+       |    COUNT(*) AS n_rows,
+       |    CAST(SUM(payload_bytes) AS BIGINT) AS batch_bytes,
+       |    MIN(commit_ts) AS first_ts, MAX(commit_ts) AS last_ts
+       |  FROM fold
+       |  GROUP BY 1, 2, 3, 4
+       |)""".stripMargin
+
   /** A49 — encoder-group batch framing (reference:
     * pkg/sink/codec/encoder_group.go + open/encoder.go:122 — "one
     * message can contain at most MaxBatchSize events"): within each
     * (table, sink partition) stream, consecutive commit_ts-ordered
     * events pack into messages of at most `maxBatch` rows; the frame
     * carries each message's row count, encoded byte total, and ts
-    * span. The reference's companion byte cap (MaxMessageBytes) is the
-    * per-event claim-check/compression path (A31/A48) — an event
-    * stream under that cap batches exactly as here. One window shuffle
-    * keyed by the same (table, partition) the kafka writer uses. */
-  def batchFrame(cl: DataFrame, n: Int, maxBatch: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window
-      .partitionBy(col("schema_name"), col("table_name"), col("partition"))
-      .orderBy(col("commit_ts"))
-    cl.select(col("schema_name"), col("table_name"), col("commit_ts"),
-        Dispatchers.indexValueBucket(n).as("partition"),
-        octet_length(Codecs.openProtocolValue).cast("long").as("payload_bytes"))
-      .withColumn("batch_id",
-        call_function("div", row_number().over(w) - lit(1), lit(maxBatch.toLong)))
-      .groupBy(col("schema_name"), col("table_name"), col("partition"),
-        col("batch_id"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("payload_bytes")).as("batch_bytes"),
-        min(col("commit_ts")).as("first_ts"),
-        max(col("commit_ts")).as("last_ts"))
-  }
+    * span. The [[batches]] fold with only the count term; the oracle
+    * states the same batches by formula (row_number div maxBatch). */
+  def batchFrame(cl: DataFrame, n: Int, maxBatch: Int): DataFrame =
+    batchFrameBytes(cl, n, maxBatch, Long.MaxValue)
 
   def batchFrameSql(n: Int, maxBatch: Int): String =
     s"""WITH msgs AS (
-       |  SELECT schema_name, table_name, commit_ts,
-       |    ${Dispatchers.indexValueBucketSql(n)} AS partition,
-       |    CAST(octet_length(encode(${Codecs.openProtocolValueSql})) AS BIGINT)
-       |      AS payload_bytes
-       |  FROM changelog
+       |  ${sinkStreamSql(n)}
        |), b AS (
        |  SELECT *, CAST((ROW_NUMBER() OVER (
        |      PARTITION BY schema_name, table_name, partition
@@ -391,57 +522,16 @@ object Sinks {
   /** A50 — the byte-capped half of encoder-group batching (reference:
     * open/encoder.go:122 — a new message starts when appending would
     * exceed MaxMessageBytes OR the message already holds MaxBatchSize
-    * rows). A greedy prefix fold is inherently sequential per stream,
-    * so it runs as the canonical secondary-sort shape: repartition by
-    * the (table, partition) sink key, sort within partitions by key +
-    * commit_ts, one `mapPartitions` pass with O(1) state per stream —
-    * no per-group buffering, no window, linear at any scale. An event
-    * larger than the cap alone forms a singleton batch (the claim-check
-    * path would divert it in the real sink). The DuckDB oracle replays
-    * the identical fold as a recursive CTE over row_number. */
+    * rows): the [[batches]] fold with the count and byte terms and no
+    * message head. */
   def batchFrameBytes(cl: DataFrame, n: Int, maxBatch: Int,
-                      maxBytes: Long): DataFrame = {
-    val spark = cl.sparkSession
-    import spark.implicits._
-    val base = cl.select(col("schema_name"), col("table_name"),
-        Dispatchers.indexValueBucket(n).as("partition"), col("commit_ts"),
-        octet_length(Codecs.openProtocolValue).cast("long").as("payload_bytes"))
-      .repartition(col("schema_name"), col("table_name"), col("partition"))
-      .sortWithinPartitions(col("schema_name"), col("table_name"),
-        col("partition"), col("commit_ts"))
-      .as[(String, String, Long, Long, Long)]
-    base.mapPartitions { it =>
-      // lazy one-batch-at-a-time fold: O(1) state per partition (the
-      // current stream key + batch counter), never materializing the
-      // partition's output — each next() consumes exactly one batch's
-      // input rows and emits its frame row
-      val in = it.buffered
-      new Iterator[(String, String, Long, Long, Long, Long, Long, Long)] {
-        private var lastKey: (String, String, Long) = null
-        private var lastBatchId = -1L
-        override def hasNext: Boolean = in.hasNext
-        override def next(): (String, String, Long, Long, Long, Long, Long, Long) = {
-          val (sch, tbl, part, ts0, len0) = in.next()
-          val key = (sch, tbl, part)
-          val batchId = if (key == lastKey) lastBatchId + 1 else 0L
-          var rows = 1L; var bytes = len0; var last = ts0
-          // accept while the next event shares the stream and fits both
-          // caps — the same greedy rule as the eager fold (an oversize
-          // event alone forms a singleton batch via the first accept)
-          while (in.hasNext && {
-            val (s, t, p, _, l) = in.head
-            (s, t, p) == key && rows < maxBatch && bytes + l <= maxBytes
-          }) {
-            val (_, _, _, ts, len) = in.next()
-            rows += 1; bytes += len; last = ts
-          }
-          lastKey = key; lastBatchId = batchId
-          (sch, tbl, part, batchId, rows, bytes, ts0, last)
-        }
-      }
-    }.toDF("schema_name", "table_name", "partition", "batch_id",
-      "n_rows", "batch_bytes", "first_ts", "last_ts")
-  }
+                      maxBytes: Long): DataFrame =
+    batches(sinkStream(cl, n), col("payload_bytes"), lit(""), lit(""),
+      maxBatch, maxBytes, 0L, Long.MaxValue).select(batchCols: _*)
+
+  def batchFrameBytesSql(n: Int, maxBatch: Int, maxBytes: Long): String =
+    s"""${batchFrameFoldSql(n, maxBatch, maxBytes, Long.MaxValue)}
+       |SELECT * FROM agged""".stripMargin
 
   /** A93 — the Kafka DML worker's flush-interval batching (reference:
     * downstreamadapter/worker/kafka_dml_worker.go:219-262
@@ -455,105 +545,19 @@ object Sinks {
     * commit_ts, and the ticker at `first_ts + interval` beats any
     * event arriving at or after that instant.
     *
-    * The deadline chains from each batch's first event, so the fold is
-    * inherently sequential per (table, partition) stream — the A50
-    * secondary-sort shape: repartition by the sink key, sort by key +
-    * commit_ts, one `mapPartitions` pass with O(1) state. Each batch
-    * also records WHY it closed: 'size' (hit maxBatch — the immediate
+    * The [[batches]] fold with the count and flush terms; each batch
+    * records WHY it closed: 'size' (hit maxBatch — the immediate
     * return), 'flush' (a successor event arrived past the deadline),
-    * 'eof' (stream drained). The DuckDB oracle replays the identical
-    * fold as a recursive CTE. */
+    * 'eof' (stream drained). The oracle derives the reason from the
+    * folded batches. */
   def batchFrameFlush(cl: DataFrame, n: Int, maxBatch: Int,
-                      flushInterval: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = cl.sparkSession
-    import spark.implicits._
-    val base = cl.select(col("schema_name"), col("table_name"),
-        Dispatchers.indexValueBucket(n).as("partition"), col("commit_ts"),
-        octet_length(Codecs.openProtocolValue).cast("long").as("payload_bytes"))
-      .repartition(col("schema_name"), col("table_name"), col("partition"))
-      .sortWithinPartitions(col("schema_name"), col("table_name"),
-        col("partition"), col("commit_ts"))
-      .as[(String, String, Long, Long, Long)]
-    val folded = base.mapPartitions { it =>
-      val in = it.buffered
-      new Iterator[(String, String, Long, Long, Long, Long, Long, Long)] {
-        private var lastKey: (String, String, Long) = null
-        private var lastBatchId = -1L
-        override def hasNext: Boolean = in.hasNext
-        override def next(): (String, String, Long, Long, Long, Long, Long, Long) = {
-          val (sch, tbl, part, ts0, len0) = in.next()
-          val key = (sch, tbl, part)
-          val batchId = if (key == lastKey) lastBatchId + 1 else 0L
-          var rows = 1L; var bytes = len0; var last = ts0
-          // admit while the successor shares the stream, the buffer
-          // has room, and the ticker has not fired
-          while (in.hasNext && {
-            val (s, t, p, ts, _) = in.head
-            (s, t, p) == key && rows < maxBatch && ts - ts0 < flushInterval
-          }) {
-            val (_, _, _, ts, len) = in.next()
-            rows += 1; bytes += len; last = ts
-          }
-          lastKey = key; lastBatchId = batchId
-          (sch, tbl, part, batchId, rows, bytes, ts0, last)
-        }
-      }
-    }.toDF("schema_name", "table_name", "partition", "batch_id",
-      "n_rows", "batch_bytes", "first_ts", "last_ts")
-    // close reason: maxBatch returns immediately ('size'); otherwise a
-    // successor batch proves the ticker fired ('flush'); a stream's
-    // final short batch drained with the channel ('eof'). The window
-    // is stream-partitioned — bounded per sink partition.
-    val ws = Window.partitionBy(col("schema_name"), col("table_name"),
-      col("partition"))
-    folded
-      .withColumn("close_reason",
-        when(col("n_rows") >= maxBatch.toLong, "size")
-          .when(col("batch_id") === max(col("batch_id")).over(ws), "eof")
-          .otherwise("flush"))
-  }
+                      flushInterval: Long): DataFrame =
+    batches(sinkStream(cl, n), col("payload_bytes"), lit(""), lit(""),
+      maxBatch, Long.MaxValue, 0L, flushInterval)
+      .select(batchCols :+ col("close_reason"): _*)
 
   def batchFrameFlushSql(n: Int, maxBatch: Int, flushInterval: Long): String =
-    s"""WITH RECURSIVE msgs AS (
-       |  SELECT schema_name, table_name, commit_ts,
-       |    ${Dispatchers.indexValueBucketSql(n)} AS partition,
-       |    CAST(octet_length(encode(${Codecs.openProtocolValueSql})) AS BIGINT)
-       |      AS payload_bytes
-       |  FROM changelog
-       |), o AS (
-       |  SELECT *, ROW_NUMBER() OVER (
-       |      PARTITION BY schema_name, table_name, partition
-       |      ORDER BY commit_ts) AS rn
-       |  FROM msgs
-       |), fold AS (
-       |  SELECT schema_name, table_name, partition, commit_ts, payload_bytes, rn,
-       |    CAST(0 AS BIGINT) AS batch_id, CAST(1 AS BIGINT) AS rows_in,
-       |    commit_ts AS bfirst
-       |  FROM o WHERE rn = 1
-       |  UNION ALL
-       |  SELECT m.schema_name, m.table_name, m.partition, m.commit_ts,
-       |    m.payload_bytes, m.rn,
-       |    CASE WHEN f.rows_in >= $maxBatch
-       |           OR m.commit_ts - f.bfirst >= $flushInterval
-       |         THEN f.batch_id + 1 ELSE f.batch_id END,
-       |    CASE WHEN f.rows_in >= $maxBatch
-       |           OR m.commit_ts - f.bfirst >= $flushInterval
-       |         THEN CAST(1 AS BIGINT) ELSE f.rows_in + 1 END,
-       |    CASE WHEN f.rows_in >= $maxBatch
-       |           OR m.commit_ts - f.bfirst >= $flushInterval
-       |         THEN m.commit_ts ELSE f.bfirst END
-       |  FROM fold f JOIN o m
-       |    ON m.schema_name = f.schema_name AND m.table_name = f.table_name
-       |   AND m.partition = f.partition AND m.rn = f.rn + 1
-       |), agged AS (
-       |  SELECT schema_name, table_name, partition, batch_id,
-       |    COUNT(*) AS n_rows,
-       |    CAST(SUM(payload_bytes) AS BIGINT) AS batch_bytes,
-       |    MIN(commit_ts) AS first_ts, MAX(commit_ts) AS last_ts
-       |  FROM fold
-       |  GROUP BY 1, 2, 3, 4
-       |)
+    s"""${batchFrameFoldSql(n, maxBatch, Long.MaxValue, flushInterval)}
        |SELECT *,
        |  CASE WHEN n_rows >= $maxBatch THEN 'size'
        |       WHEN batch_id = MAX(batch_id) OVER (
@@ -585,43 +589,6 @@ object Sinks {
       |  MAX(commit_ts) AS checkpoint_ts
       |FROM changelog
       |GROUP BY 1, 2""".stripMargin
-
-  def batchFrameBytesSql(n: Int, maxBatch: Int, maxBytes: Long): String =
-    s"""WITH RECURSIVE msgs AS (
-       |  SELECT schema_name, table_name, commit_ts,
-       |    ${Dispatchers.indexValueBucketSql(n)} AS partition,
-       |    CAST(octet_length(encode(${Codecs.openProtocolValueSql})) AS BIGINT)
-       |      AS payload_bytes
-       |  FROM changelog
-       |), o AS (
-       |  SELECT *, ROW_NUMBER() OVER (
-       |      PARTITION BY schema_name, table_name, partition
-       |      ORDER BY commit_ts) AS rn
-       |  FROM msgs
-       |), fold AS (
-       |  SELECT schema_name, table_name, partition, commit_ts, payload_bytes, rn,
-       |    CAST(0 AS BIGINT) AS batch_id, CAST(1 AS BIGINT) AS rows_in,
-       |    payload_bytes AS acc
-       |  FROM o WHERE rn = 1
-       |  UNION ALL
-       |  SELECT m.schema_name, m.table_name, m.partition, m.commit_ts,
-       |    m.payload_bytes, m.rn,
-       |    CASE WHEN f.rows_in >= $maxBatch OR f.acc + m.payload_bytes > $maxBytes
-       |         THEN f.batch_id + 1 ELSE f.batch_id END,
-       |    CASE WHEN f.rows_in >= $maxBatch OR f.acc + m.payload_bytes > $maxBytes
-       |         THEN CAST(1 AS BIGINT) ELSE f.rows_in + 1 END,
-       |    CASE WHEN f.rows_in >= $maxBatch OR f.acc + m.payload_bytes > $maxBytes
-       |         THEN m.payload_bytes ELSE f.acc + m.payload_bytes END
-       |  FROM fold f JOIN o m
-       |    ON m.schema_name = f.schema_name AND m.table_name = f.table_name
-       |   AND m.partition = f.partition AND m.rn = f.rn + 1
-       |)
-       |SELECT schema_name, table_name, partition, batch_id,
-       |  COUNT(*) AS n_rows,
-       |  CAST(SUM(payload_bytes) AS BIGINT) AS batch_bytes,
-       |  MIN(commit_ts) AS first_ts, MAX(commit_ts) AS last_ts
-       |FROM fold
-       |GROUP BY 1, 2, 3, 4""".stripMargin
 
   // ------------------------------------------------------------------
   // A111 — encoder-group ordered merge

@@ -19,17 +19,17 @@ class BarrierSpec extends AnyFunSuite {
       cdc.Barrier.CfState("cf-fail", Seq("db1.%"), "failed",
         Some("CDC:ErrGCTTLExceeded")),
       cdc.Barrier.CfState("cf-empty", Seq("db9.%"), "pending", None))
-    val ov = cdc.Barrier.changefeedOverview(cl, fleet, 100L).cache()
+    val ov = cdc.Barrier.changefeedOverview(cl, fleet).cache()
     assert(ov.count() == fleet.size)
     // every shared column equals the A78 frame verbatim
-    val gc = cdc.Barrier.gcSafepoint(cl, fleet, 100L)
+    val gc = cdc.Barrier.gcSafepoint(cl, fleet)
       .select("changefeed", "state", "n_spans", "checkpoint_ts",
         "blocks_gc", "safepoint_upper")
     assert(ov.select("changefeed", "state", "n_spans", "checkpoint_ts",
       "blocks_gc", "safepoint_upper").exceptAll(gc).count() == 0)
     // lag/resolved equal the A76 frame verbatim
     val wm = cdc.Barrier.watermarkAgg(cl,
-        fleet.map(f => f.changefeed -> f.rules), 100L)
+        fleet.map(f => f.changefeed -> f.rules))
       .select("changefeed", "resolved_ts", "lag_ts")
     assert(ov.select("changefeed", "resolved_ts", "lag_ts")
       .exceptAll(wm).count() == 0)
@@ -59,7 +59,7 @@ class BarrierSpec extends AnyFunSuite {
 
   test("A75: every barrier key resolves exactly one writer") {
     val cl = cdc.ChangeEvents.changelog(spark, dir)
-    val frame = cdc.Barrier.ddlBarrier(cl, 100L).cache()
+    val frame = cdc.Barrier.ddlBarrier(cl).cache()
     val perKey = frame.groupBy("block_ts", "is_syncpoint")
       .agg(sum("is_writer").as("writers"),
         count(lit(1)).as("n"),
@@ -84,7 +84,7 @@ class BarrierSpec extends AnyFunSuite {
   test("A75: derived stream — CREATE blocks only the trigger, syncpoints block everyone") {
     val cl = cdc.ChangeEvents.changelog(spark, dir)
     val nTables = cl.select("schema_name", "table_name").distinct().count()
-    val frame = cdc.Barrier.ddlBarrier(cl, 100L).cache()
+    val frame = cdc.Barrier.ddlBarrier(cl).cache()
     // the v0 CREATEs all land at blockTs 0 under one barrier key whose
     // blocked set is just the trigger span (persist_storage.go:1504)
     val createKey = frame.filter(col("block_ts") === 0 && col("is_syncpoint") === 0)
@@ -161,7 +161,7 @@ class BarrierSpec extends AnyFunSuite {
       "cf-a" -> Seq("db0.%"),
       "cf-b" -> Seq("db1.t1", "db1.t2"),
       "cf-empty" -> Seq("db9.%"))
-    val agg = cdc.Barrier.watermarkAgg(cl, cfs, 100L)
+    val agg = cdc.Barrier.watermarkAgg(cl, cfs)
       .collect().map(r => r.getAs[String]("changefeed") -> r).toMap
 
     // empty changefeed reports the NewMaxWatermark seed
@@ -173,10 +173,11 @@ class BarrierSpec extends AnyFunSuite {
     assert(empty.getAs[String]("slowest_span") == null)
 
     // recompute cf-a's watermark from the span frontier independently
+    val step = cdc.Materialize.SyncStep
     val spans = cdc.Materialize.spanFrontier(cl)
       .filter(col("schema_name") === "db0")
       .select(col("table_name"), col("frontier_ts"),
-        expr("(frontier_ts div 100) * 100").as("cp"))
+        expr(s"(frontier_ts div $step) * $step").as("cp"))
       .collect()
     assert(agg("cf-a").getAs[Long]("n_spans") == spans.length.toLong)
     assert(agg("cf-a").getAs[Long]("resolved_ts") ==
@@ -203,7 +204,7 @@ class BarrierSpec extends AnyFunSuite {
         Some("CDC:ErrGCTTLExceeded")),
       cdc.Barrier.CfState("done", Seq("db1.%"), "finished", None),
       cdc.Barrier.CfState("idle", Seq("db9.%"), "pending", None))
-    val rows = cdc.Barrier.gcSafepoint(cl, fleet, 100L)
+    val rows = cdc.Barrier.gcSafepoint(cl, fleet)
       .collect().map(r => r.getAs[String]("changefeed") -> r).toMap
     // blocking verdicts per state arm
     assert(rows("live").getAs[Long]("blocks_gc") == 1L)
@@ -222,16 +223,16 @@ class BarrierSpec extends AnyFunSuite {
     assert(minBlocking < cdc.Barrier.MaxWatermark)
     // an all-non-blocking fleet leaves the seed: the PD-time fallback arm
     val none = cdc.Barrier.gcSafepoint(cl,
-      Seq(cdc.Barrier.CfState("done", Seq("db0.%"), "finished", None)), 100L)
+      Seq(cdc.Barrier.CfState("done", Seq("db0.%"), "finished", None)))
       .head
     assert(none.getAs[Long]("safepoint_upper") == cdc.Barrier.MaxWatermark - 1L)
   }
 
   test("A76: a span matching two rules of one changefeed counts once") {
     val cl = cdc.ChangeEvents.changelog(spark, dir)
-    val once = cdc.Barrier.watermarkAgg(cl, Seq("cf-x" -> Seq("db0.%")), 100L)
+    val once = cdc.Barrier.watermarkAgg(cl, Seq("cf-x" -> Seq("db0.%")))
     val twice = cdc.Barrier.watermarkAgg(cl,
-      Seq("cf-x" -> Seq("db0.%", "db0.t0")), 100L)
+      Seq("cf-x" -> Seq("db0.%", "db0.t0")))
     assert(once.head.getAs[Long]("n_spans") == twice.head.getAs[Long]("n_spans"))
   }
 

@@ -311,7 +311,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
       cdc.Filters.eventTypeFilter(cdc.Filters.tableFilter(cl, Seq("db0.%")), Seq("D")))
     val facade = cdc.Changefeed.kafka(cl, cfg).select("commit_ts", "value")
     assert(facade.exceptAll(manual).isEmpty && manual.exceptAll(facade).isEmpty)
-    // mysql/storage/snapshot facades filter identically
+    // the snapshot facade filters identically
     assert(cdc.Changefeed.snapshot(cl, cfg).count() ==
       cdc.Materialize.snapshot(
         cdc.Filters.eventTypeFilter(cdc.Filters.tableFilter(cl, Seq("db0.%")), Seq("D"))).count())
@@ -1703,9 +1703,9 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     val f = cdc.Sinks.batchFrameBytes(cl, 16, maxBatch = 6, maxBytes = 300L)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5)))
+        r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))
     assert(f.map(_._5).sum == cl.count(), "row conservation")
-    for ((_, _, _, _, rows, bytes) <- f) {
+    for ((_, _, _, _, rows, bytes, _, _) <- f) {
       assert(rows >= 1L && rows <= 6L)
       // the byte cap can only be exceeded by a singleton oversize event
       assert(bytes <= 300L || rows == 1L, s"batch of $rows rows at $bytes bytes")
@@ -1718,8 +1718,29 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     // both close reasons occur on this data: count-full and byte-capped
     assert(f.exists(_._5 == 6L), "no count-capped batch")
     assert(f.exists(b => b._5 < 6L && b._5 > 1L), "no byte-capped batch")
-    // exact greedy maximality vs this frame is proven by the DuckDB
-    // oracle, which replays the identical fold as a recursive CTE
+    // open/encoder.go pushMessage transcribed (no message head): the
+    // three streams with the most batches, replayed sequentially, must
+    // produce identical batch boundaries
+    for ((key, stream) <- f.groupBy(t => (t._1, t._2, t._3)).toSeq
+        .sortBy(kv => (-kv._2.length, kv._1.toString)).take(3)) {
+      val evs = cl.filter(col("schema_name") === key._1 &&
+          col("table_name") === key._2)
+        .select(cdc.Dispatchers.indexValueBucket(16).as("p"), col("commit_ts"),
+          octet_length(cdc.Codecs.openProtocolValue).cast("long"))
+        .filter(col("p") === key._3)
+        .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+      val batches = collection.mutable.Buffer.empty[(Long, Long, Long, Long)]
+      var i = 0
+      while (i < evs.length) {
+        val (t0, b0) = evs(i); var n = 1L; var acc = b0; var lastT = t0; i += 1
+        while (i < evs.length && n < 6L && acc + evs(i)._2 <= 300L) {
+          n += 1; acc += evs(i)._2; lastT = evs(i)._1; i += 1
+        }
+        batches += ((n, acc, t0, lastT))
+      }
+      val got = stream.sortBy(_._4).map(t => (t._5, t._6, t._7, t._8)).toSeq
+      assert(got == batches.toSeq, s"$key: $got != $batches")
+    }
   }
 
   test("flush-interval batches close on size, ticker, and eof exactly like the worker loop") {
@@ -1996,7 +2017,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
 
   test("A54: syncpoint statements carry a monotone applied position and the cleanup cadence") {
     val cl = cdc.ChangeEvents.changelog(spark, dir)
-    val sp = cdc.MysqlDdl.syncpointStmts(cl, step = 100L)
+    val sp = cdc.MysqlDdl.syncpointStmts(cl)
       .orderBy(col("primary_ts")).collect()
     assert(sp.nonEmpty)
     // the downstream position never exceeds the syncpoint's upstream ts
@@ -2013,7 +2034,8 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     }
     // retention sweep fires exactly on the cadence (every 5th boundary)
     assert(sp.forall(r =>
-      (r.getLong(4) == 1L) == ((r.getLong(0) / 100L) % 5L == 0L)))
+      (r.getLong(4) == 1L) ==
+        ((r.getLong(0) / cdc.Materialize.SyncStep) % 5L == 0L)))
     assert(sp.forall(r => (r.getLong(4) == 1L) == !r.isNullAt(5)))
   }
 
@@ -2198,6 +2220,37 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     val direct = cl.select(cdc.Codecs.openProtocolKey.as("key"),
       cdc.Codecs.openProtocolValue.as("value"))
     assert(pairs.exceptAll(direct).isEmpty && direct.exceptAll(pairs).isEmpty)
+    // pushMessage transcribed: a message opens with the 8-byte version
+    // head and admits an event (key + value + 16 prefix bytes) while it
+    // holds fewer than maxBatch events and stays within maxBytes; the
+    // three streams with the most messages, replayed sequentially, must
+    // produce identical boundaries and wire lengths
+    val got = rows.select(col("schema_name"), col("table_name"), col("partition"),
+        col("batch_id"), col("n_rows"),
+        ((length(col("key_wire")) + length(col("value_wire"))) / 2).cast("long"))
+      .collect().map(r => ((r.getString(0), r.getString(1), r.getLong(2)),
+        (r.getLong(3), r.getLong(4), r.getLong(5))))
+      .groupBy(_._1).toSeq.sortBy(kv => (-kv._2.length, kv._1.toString)).take(3)
+    for ((key, stream) <- got) {
+      val evs = cl.filter(col("schema_name") === key._1 &&
+          col("table_name") === key._2)
+        .select(cdc.Dispatchers.indexValueBucket(16).as("p"), col("commit_ts"),
+          (octet_length(cdc.Codecs.openProtocolKey) +
+            octet_length(cdc.Codecs.openProtocolValue) + 16).cast("long"))
+        .filter(col("p") === key._3)
+        .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).map(_._2).toSeq
+      val msgLens = collection.mutable.Buffer.empty[(Long, Long)]
+      var i = 0
+      while (i < evs.length) {
+        var n = 1L; var len = 8L + evs(i); i += 1
+        while (i < evs.length && n < maxBatch && len + evs(i) <= maxBytes) {
+          n += 1; len += evs(i); i += 1
+        }
+        msgLens += ((n, len))
+      }
+      val byId = stream.map(_._2).sortBy(_._1).map(m => (m._2, m._3)).toSeq
+      assert(byId == msgLens.toSeq, s"$key: $byId != $msgLens")
+    }
   }
 
   test("canal envelope carries _tidb extensions, DDL frames, and one watermark") {

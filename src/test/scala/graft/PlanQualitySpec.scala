@@ -485,12 +485,17 @@ class PlanQualitySpec extends AnyFunSuite {
       "avro arm must match the JSON arm's shuffle budget")
     // handle-key degrade is a pure projection over the changelog
     assert(exchanges(cdc.Sinks.handleKeyOnly(cl, 16, 75)) == 0)
-    // open-wire ROW batching is ONE window shuffle whose (table,
-    // partition) hash partitioning the batch groupBy reuses (its keys
-    // are a superset), so the ROW leg contributes exactly one exchange
+    // open-wire ROW batching is the one sink fold: exactly one
+    // exchange, hash-partitioned on the (table, partition) stream key,
+    // then a sort and the streaming pass — no window, no aggregate
+    val rowLeg = cdc.OpenWire.rows(cl, 16, 4, Long.MaxValue)
+    val paid = exchangeLines(rowLeg)._1
+    val p = rowLeg.queryExecution.executedPlan.toString
+    assert(exchanges(rowLeg) == 1 && paid.head.contains(
+      "Exchange hashpartitioning(schema_name#") && paid.head.contains(", table_name#") &&
+      paid.head.contains(", partition#"), p)
+    assert(!p.contains("Window") && !p.contains("Aggregate"), p)
     val ow = cdc.OpenWire.messages(cl, 16, 4)
-    val p = ow.queryExecution.executedPlan.toString
-    assert("Window".r.findAllIn(p).length == 1, p)
     val ddlLeg = exchanges(cdc.SchemaStore.ddlEvents(cl, Nil))
     assert(exchanges(ow) <= 1 + ddlLeg + 1,
       s"open-wire exchanges ${exchanges(ow)} vs ROW 1 + ddl $ddlLeg + watermark 1")

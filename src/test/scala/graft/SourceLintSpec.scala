@@ -103,6 +103,15 @@ class SourceLintSpec extends AnyFunSuite {
     assert(found.isEmpty, "use graft.functions.WireScanExprs.decode for: " + found.mkString(", "))
   }
 
+  /** Every batcher of the sinks and the open-protocol wire closes its
+    * batches with the one per-stream fold, [[graft.cdc.Sinks.batches]];
+    * a `sortWithinPartitions` elsewhere would be a second copy of its
+    * repartition → sort → iterator shape. */
+  test("batches are closed only by the one sink fold") {
+    val found = hits("""\bsortWithinPartitions\b""".r, "cdc/Sinks.scala#batches")
+    assert(found.isEmpty, "use graft.cdc.Sinks.batches for: " + found.mkString(", "))
+  }
+
   /** Source text with comments and string literals blanked (offsets and
     * newlines kept); the code of an interpolated string's `${...}` stays,
     * since oracle builders call each other there. */
@@ -183,8 +192,10 @@ class SourceLintSpec extends AnyFunSuite {
     * benchmark harness passes — by name, or positionally at its index —
     * is one value written as an option. It belongs in a named constant
     * of its object, where the Spark build, its SQL oracle and its
-    * streaming twin all read it. Calls are matched by method name, so a
-    * call to a same-named method elsewhere also counts as setting it. */
+    * streaming twin all read it. A case-class field counts as a
+    * parameter of its constructor, which a `copy(field = …)` also sets.
+    * Calls are matched by method name, so a call to a same-named method
+    * elsewhere also counts as setting it. */
   test("every defaulted parameter in src/main is set by some caller") {
     assert(main.isDirectory, s"run from the repository root (no ${main.getPath})")
     val callers = (scalaFiles(main) ++ scalaFiles(new java.io.File("src/test/scala")) ++
@@ -205,29 +216,36 @@ class SourceLintSpec extends AnyFunSuite {
         }
       }
     }
-    val defRe = """\bdef\s+(\w+)\s*(?:\[[^\]]*\])?\s*(?=\()""".r
-    // (place, def, clause, index, parameter) of every defaulted parameter
+    val defRe = """\b(def|case\s+class)\s+(\w+)\s*(?:\[[^\]]*\])?\s*(?=\()""".r
+    // (place, def, clause, index, parameter, case-class field?) of every
+    // defaulted parameter
     val defaulted = scalaFiles(main).flatMap { f =>
       val s = codeOnly(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
       defRe.findAllMatchIn(s).toSeq.flatMap { d =>
         val at = s"${f.getPath}:${s.substring(0, d.start).count(_ == '\n') + 1}"
         clauses(s, d.end).zipWithIndex.flatMap { case (params, ci) =>
           params.zipWithIndex.collect {
-            case (param(p, rest), pi) if hasDefault(rest) => (at, d.group(1), ci, pi, p)
+            case (param(p, rest), pi) if hasDefault(rest) =>
+              (at, d.group(2), ci, pi, p, d.group(1) != "def")
           }
         }
       }
     }
-    val callsOf = defaulted.map(_._2).distinct.map { name =>
-      name -> callers.flatMap { c =>
-        ("""(?<![\w$])""" + name + """\s*(?:\[[^\]]*\])?\s*(?=\()""").r.findAllMatchIn(c)
-          .filterNot(m => c.substring(math.max(0, m.start - 8), m.start).trim.endsWith("def"))
-          .map(m => clauses(c, m.end))
-      }
-    }.toMap
+    def callsTo(name: String): Seq[Seq[Seq[String]]] = callers.flatMap { c =>
+      ("""(?<![\w$])""" + name + """\s*(?:\[[^\]]*\])?\s*(?=\()""").r.findAllMatchIn(c)
+        .filterNot { m =>
+          val before = c.substring(math.max(0, m.start - 8), m.start).trim
+          before.endsWith("def") || before.endsWith("class")
+        }
+        .map(m => clauses(c, m.end))
+    }
+    val callsOf = defaulted.map(_._2).distinct.map(name => name -> callsTo(name)).toMap
+    val copies = callsTo("copy")
+    def setsByName(cl: Seq[String], p: String) = cl.exists { case named(n) => n == p; case _ => false }
     val unset = defaulted.collect {
-      case (at, name, ci, pi, p) if !callsOf(name).exists(cl => cl.size > ci &&
-          (positional(cl(ci)) > pi || cl(ci).exists { case named(n) => n == p; case _ => false })) =>
+      case (at, name, ci, pi, p, field) if !callsOf(name).exists(cl => cl.size > ci &&
+          (positional(cl(ci)) > pi || setsByName(cl(ci), p))) &&
+          !(field && copies.exists(cl => cl.nonEmpty && setsByName(cl.head, p))) =>
         s"$at $name.$p"
     }
     assert(unset.isEmpty, s"${unset.size} defaulted parameters no caller sets " +

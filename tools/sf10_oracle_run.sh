@@ -40,10 +40,10 @@ WINDOWS="q_window_topn q_window_running q_window_ranks q_range_frame
 # skewed keys are where the salted-join and byte-fold batch paths could
 # mis-batch; every wire byte is hash-compared. The three RECURSIVE-fold
 # oracles (codec_open_wire_bytes, sink_batch_bytes, sink_batch_flush)
-# go through the python fold-replay checkers instead: DuckDB's
+# go through the python fold-replay checker instead: DuckDB's
 # recursive CTE grinds for hours on deep groups (the skew tier's 21k
 # hot partition; measured ~90 min without completing), while the
-# imperative replay (third engine, a63_fold_check pattern) is seconds.
+# imperative replay of the same rule (a third engine) is seconds.
 SKEW="codec_craft codec_craft_decode codec_craft_resolved codec_checksum
  codec_open_wire codec_open_wire_decode
  codec_avro_binary codec_avro_decode codec_simple_avro
@@ -74,7 +74,6 @@ else
   python3 tools/check_sf10.py /tmp/emb25  "$OUT" $ANN     || rc=1
   python3 tools/check_sf10.py /tmp/sf10   "$OUT" $WINDOWS || rc=1
   python3 tools/check_sf10.py /tmp/skew01 "$OUT" $SKEW    || rc=1
-  python3 tools/a63_fold_check.py  /tmp/skew01 "$OUT"     || rc=1
   python3 tools/sink_fold_check.py /tmp/skew01 "$OUT"     || rc=1
   python3 tools/check_sf10.py /tmp/sf10   "$OUT" $R15_SF10  || rc=1
 fi

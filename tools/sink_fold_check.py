@@ -1,19 +1,30 @@
 #!/usr/bin/env python3
-"""Corpus-tier oracle for the A50/A93 sink batch folds
-(sink_batch_bytes, sink_batch_flush) — the a63_fold_check.py pattern.
+"""Corpus-tier oracle for the three batch-fold queries
+(sink_batch_bytes, sink_batch_flush, codec_open_wire_bytes).
 
-The registry oracles express the per-(schema,table,partition) batch
-fold as a RECURSIVE CTE — exact, but DuckDB evaluates each recursion
-step against the full event frame, so deep groups (sf10's ~110k, the
+Their registry oracles replay the batch-close rule of `Sinks.batches`
+as a RECURSIVE CTE (the `o` + `fold` pair written by
+`Sinks.batchesSql`). That is exact, but DuckDB evaluates each recursion
+step against the full event frame, so deep streams (sf10's ~110k, the
 skew tier's ~21k hot partition) grind for hours. This checker replaces
-ONLY the recursion with an imperative fold computed independently in
-Python (a third engine), and leaves everything else — payload
-rendering, ordering, aggregation, bag-equality hashing — inside DuckDB
-at scan speed. Fold parameters are parsed from the registry oracle SQL
-itself so a registry retune cannot silently desynchronize this checker.
+ONLY the recursion with a replay of the same rule in Python (a third
+engine) and leaves the rest of the oracle (payload rendering, ordering,
+aggregation, the DDL/RESOLVED legs) to DuckDB at scan speed:
 
-Usage: tools/sink_fold_check.py <sfDir> <mergeIntoJson> <query> [...]
-  query in {sink_batch_bytes, sink_batch_flush}
+  1. DuckDB computes the oracle's own `o` CTE: per event its stream
+     key, commit_ts, ev_bytes and row number in the stream.
+  2. Python replays the rule: within a stream, a batch admits the next
+     event iff rows < maxBatch, head + bytes + b <= maxBytes and
+     ts - firstTs < flushInterval.
+  3. The oracle runs again with its `fold` CTE replaced by `o` joined
+     to the Python batch ids, and its result is compared with the Spark
+     parquet by (count, SUM(hash(row)), BIT_XOR(hash(row))).
+
+The rule's four parameters are parsed from the oracle text, so a
+registry retune cannot silently desynchronize this checker; a pattern
+that matches nothing stops the run.
+
+Usage: tools/sink_fold_check.py <sfDir> <mergeIntoJson> [query ...]
 """
 import json
 import os
@@ -21,82 +32,79 @@ import re
 import shutil
 import subprocess
 import sys
+import tempfile
 import time
 
 import duckdb
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+QUERIES = ("sink_batch_bytes", "sink_batch_flush", "codec_open_wire_bytes")
 TABLES = ("region nation customer supplier part orders lineitem "
           "events documents embeddings").split()
+FOLD_START = "\n), fold AS (\n"
+FOLD_END = "AND m.partition = f.partition AND m.rn = f.rn + 1\n)"
+
+
+def find(pattern, text, query):
+    m = re.search(pattern, text)
+    if m is None:
+        raise SystemExit(f"{query}: no match for {pattern!r} in its oracle")
+    return m
+
+
+def rule(oracle, query):
+    """(maxBatch, head, maxBytes, flushInterval) of the oracle's fold."""
+    max_batch = int(find(r"f\.rows_in >= (\d+)", oracle, query).group(1))
+    m = find(r"(\d+) \+ f\.acc \+ m\.ev_bytes > (\d+)", oracle, query)
+    flush = int(find(r"m\.commit_ts - f\.bfirst >= (\d+)", oracle,
+                     query).group(1))
+    return max_batch, int(m.group(1)), int(m.group(2)), flush
+
+
+def replay(meta, max_batch, head, max_bytes, flush):
+    """Batch id of every event, in the (stream, rn) order of `meta`."""
+    ids = []
+    prev = None
+    batch = rows = acc = first = 0
+    for key, ts, b in zip(
+            zip(meta["schema_name"].values, meta["table_name"].values,
+                meta["partition"].values),
+            meta["commit_ts"].values, meta["ev_bytes"].values):
+        ts, b = int(ts), int(b)
+        if key != prev:
+            prev, batch, rows, acc, first = key, 0, 1, b, ts
+        elif (rows >= max_batch or head + acc + b > max_bytes
+              or ts - first >= flush):
+            batch, rows, acc, first = batch + 1, 1, b, ts
+        else:
+            rows, acc = rows + 1, acc + b
+        ids.append(batch)
+    return ids
 
 
 def check_one(con, query, oracle, sf_dir, out_dir):
-    o_prefix = oracle.split("\n), fold AS (", 1)[0]
-    max_batch = int(re.search(r"f\.rows_in >= (\d+)", oracle).group(1))
-    if query == "sink_batch_bytes":
-        max_bytes = int(re.search(
-            r"f\.acc \+ m\.payload_bytes > (\d+)", oracle).group(1))
-        rule = f"maxBatch={max_batch}, maxBytes={max_bytes}"
-    else:
-        flush_ticks = int(re.search(
-            r"m\.commit_ts - f\.bfirst >= (\d+)", oracle).group(1))
-        rule = f"maxBatch={max_batch}, flushTicks={flush_ticks}"
-    print(f"[fold] {query}: params from oracle: {rule}")
-    con.execute("DROP TABLE IF EXISTS o")
-    con.execute(f"CREATE TEMP TABLE o AS {o_prefix}\n) SELECT * FROM o")
+    if oracle.count(FOLD_START) != 1 or oracle.count(FOLD_END) != 1:
+        raise SystemExit(f"{query}: the oracle has no single fold CTE")
+    pre, rest = oracle.split(FOLD_START)
+    tail = rest.split(FOLD_END, 1)[1]
+    params = rule(oracle, query)
+    print(f"[fold] {query}: maxBatch={params[0]} head={params[1]} "
+          f"maxBytes={params[2]} flushInterval={params[3]}")
+    con.execute("DROP TABLE IF EXISTS o_rows")
+    con.execute(f"CREATE TEMP TABLE o_rows AS {pre}\n) SELECT * FROM o")
     meta = con.execute(
-        "SELECT schema_name, table_name, partition, rn, commit_ts, "
-        "payload_bytes FROM o "
-        "ORDER BY schema_name, table_name, partition, rn").df()
-    print(f"[fold] python fold over {len(meta)} events")
-    batch_ids = []
-    prev_key = None
-    rows_in = acc = batch = bfirst = 0
-    for sch, tbl, part, rn, cts, pb in zip(
-            meta["schema_name"].values, meta["table_name"].values,
-            meta["partition"].values, meta["rn"].values,
-            meta["commit_ts"].values, meta["payload_bytes"].values):
-        key = (sch, tbl, part)
-        if query == "sink_batch_bytes":
-            if key != prev_key:
-                prev_key, batch, rows_in, acc = key, 0, 1, int(pb)
-            elif rows_in >= max_batch or acc + int(pb) > max_bytes:
-                batch += 1
-                rows_in, acc = 1, int(pb)
-            else:
-                rows_in += 1
-                acc += int(pb)
-        else:  # sink_batch_flush
-            if key != prev_key:
-                prev_key, batch, rows_in, bfirst = key, 0, 1, int(cts)
-            elif rows_in >= max_batch or int(cts) - bfirst >= flush_ticks:
-                batch += 1
-                rows_in, bfirst = 1, int(cts)
-            else:
-                rows_in += 1
-        batch_ids.append(batch)
-    meta["batch_id"] = batch_ids
-    con.unregister("fold_py") if hasattr(con, "unregister") else None
-    con.register("fold_py", meta[["schema_name", "table_name",
-                                  "partition", "rn", "batch_id"]])
-    agged = """
-      SELECT o.schema_name, o.table_name, o.partition, f.batch_id,
-        COUNT(*) AS n_rows,
-        CAST(SUM(o.payload_bytes) AS BIGINT) AS batch_bytes,
-        MIN(o.commit_ts) AS first_ts, MAX(o.commit_ts) AS last_ts
-      FROM o JOIN fold_py f
-        ON f.schema_name = o.schema_name AND f.table_name = o.table_name
-       AND f.partition = o.partition AND f.rn = o.rn
-      GROUP BY 1, 2, 3, 4"""
-    if query == "sink_batch_bytes":
-        final = agged
-    else:
-        final = f"""
-      SELECT *, CASE WHEN n_rows >= {max_batch} THEN 'size'
-        WHEN batch_id = MAX(batch_id) OVER (
-          PARTITION BY schema_name, table_name, partition) THEN 'eof'
-        ELSE 'flush' END AS close_reason
-      FROM ({agged})"""
-    con.execute(f"CREATE OR REPLACE TEMP VIEW oracle_res AS {final}")
+        "SELECT schema_name, table_name, partition, rn, commit_ts, ev_bytes "
+        "FROM o_rows ORDER BY schema_name, table_name, partition, rn").df()
+    print(f"[fold] python replay over {len(meta)} events")
+    meta["batch_id"] = replay(meta, *params)
+    con.register("fold_py", meta[["schema_name", "table_name", "partition",
+                                  "rn", "batch_id"]])
+    replayed = f"""{pre}{FOLD_START}  SELECT o.*, f.batch_id
+  FROM o_rows o JOIN fold_py f
+    ON f.schema_name = o.schema_name AND f.table_name = o.table_name
+   AND f.partition = o.partition AND f.rn = o.rn
+){tail}"""
+    con.execute(f"CREATE OR REPLACE TEMP VIEW oracle_res AS {replayed}")
     con.execute(f"CREATE OR REPLACE TEMP VIEW spark_res AS "
                 f"SELECT * FROM '{out_dir}/{query}/*.parquet'")
     s_cols = sorted(r[0] for r in con.execute(
@@ -113,12 +121,10 @@ def check_one(con, query, oracle, sf_dir, out_dir):
            "hash_match": list(hs) == list(ho), "spark_rows": hs[0],
            "oracle_rows": ho[0], "err": None, "tier": sf_dir,
            "spark_hash": list(hs), "oracle_hash": list(ho),
-           "note": ("registry oracle's recursive fold grinds at deep "
-                    "groups in DuckDB; the batch fold was replayed "
-                    "imperatively in Python (third engine) with the "
-                    "payload rendering, ordering and aggregation reused "
-                    "verbatim from the registry oracle SQL (the "
-                    "a63_fold_check pattern)")}
+           "note": ("the registry oracle's recursive fold grinds at deep "
+                    "streams in DuckDB; the batch-close rule was replayed "
+                    "in Python (third engine) and the rest of the "
+                    "registry oracle SQL ran verbatim around it")}
     if not res["hash_match"]:
         res["err"] = f"hash triple diff: spark={hs} oracle={ho}"
     return res
@@ -126,14 +132,16 @@ def check_one(con, query, oracle, sf_dir, out_dir):
 
 def main():
     sf_dir, out_json = sys.argv[1], sys.argv[2]
-    queries = sys.argv[3:] or ["sink_batch_bytes", "sink_batch_flush"]
-    out_dir = "/tmp/verify_sink_fold"
-    shutil.rmtree(out_dir, ignore_errors=True)
-    env = dict(os.environ, SKIP_BUILD="1", SPARK_GRAFT_CPUS="32",
-               SPARK_DRIVER_MEM="48g")
+    queries = sys.argv[3:] or list(QUERIES)
+    unknown = set(queries) - set(QUERIES)
+    if unknown:
+        raise SystemExit(f"not a batch-fold query: {sorted(unknown)}")
+    out_dir = tempfile.mkdtemp(prefix="verify_sink_fold_")
+    env = dict(os.environ, SKIP_BUILD="1")
+    env.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     r = subprocess.run(
         ["tools/run.sh", "graft.Verify", sf_dir, out_dir] + queries,
-        cwd="/root/repo", env=env, capture_output=True, text=True)
+        cwd=REPO, env=env, capture_output=True, text=True)
     if r.returncode != 0:
         raise SystemExit(f"verify failed:\n{r.stderr[-2000:]}")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
@@ -145,7 +153,8 @@ def main():
     rc = 0
     for q in queries:
         res = check_one(con, q, oracles[q], sf_dir, out_dir)
-        doc = json.load(open(out_json))
+        doc = (json.load(open(out_json)) if os.path.exists(out_json)
+               else {"results": {}})
         doc["results"][q] = res
         doc["checked_utc"] = time.strftime(
             "%Y-%m-%dT%H:%M:%SZ", time.gmtime())
