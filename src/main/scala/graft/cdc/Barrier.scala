@@ -51,13 +51,12 @@ object Barrier {
   /** The table-trigger event dispatcher (heartbeatpb DDLSpan). */
   val TriggerDispatcher = -1L
 
-  /** Shared deterministic dispatcher id, A52's tableId convention. */
-  private def dispId(schema: Column, table: Column): Column =
-    substring(schema, 3, 10).cast("bigint") * 1000L +
-      substring(table, 2, 10).cast("bigint")
+  /** A table's dispatcher id: its [[ClDims.tableId]], as BIGINT. */
+  private val dispId: Column =
+    ClDims.tableId(col("schema_name"), col("table_name")).cast("bigint")
 
   private val dispIdSql =
-    "CAST(SUBSTR(schema_name, 3) AS BIGINT) * 1000 + CAST(SUBSTR(table_name, 2) AS BIGINT)"
+    s"CAST(${ClDims.tableIdSql("schema_name", "table_name")} AS BIGINT)"
 
   /** Influence severity: normal < db < all (barrier_event.go:127-129
     * folds db and all into the trigger-writer arm). */
@@ -78,7 +77,7 @@ object Barrier {
     */
   def blockedEvents(cl: DataFrame): DataFrame = {
     val uni = ClDims.tables(cl)
-      .withColumn("dispatcher_id", dispId(col("schema_name"), col("table_name")))
+      .withColumn("dispatcher_id", dispId)
     val versions = SchemaStore.schemaVersions(cl)
       .withColumn("event_tag", concat_ws(".", col("schema_name"), col("table_name")))
     val ddlTrigger = versions.select(
@@ -88,7 +87,7 @@ object Barrier {
     val ddlSelf = versions.filter(col("valid_from") > 0L).select(
       col("valid_from").as("block_ts"), lit(0L).as("is_syncpoint"),
       col("event_tag"), lit(0).as("sev"),
-      dispId(col("schema_name"), col("table_name")).as("dispatcher_id"))
+      dispId.as("dispatcher_id"))
     // empty-safe boundary grid, the A16 syncpoint cadence
     val bounds = ClDims.maxTs(cl)
       .select(explode(when(col("m") >= SyncStep,

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Changelog dimension frames, kept per (session, changelog plan) by
@@ -31,4 +31,14 @@ object ClDims {
   /** 1-row max(commit_ts) watermark, column `m`. Call-sites alias. */
   def maxTs(cl: DataFrame): DataFrame =
     cached(cl, "maxts")(cl.agg(max(col("commit_ts")).as("m")))
+
+  /** Deterministic table id, INT: db ordinal × 1000 + table ordinal of
+    * `db<N>` / `t<N>` names, injective below 1000 tables per schema.
+    * Every wire, sink and dispatcher that names a table by id reads it. */
+  def tableId(schema: Column, table: Column): Column =
+    substring(schema, 3, Int.MaxValue).cast("int") * 1000 +
+      substring(table, 2, Int.MaxValue).cast("int")
+
+  def tableIdSql(schema: String, table: String): String =
+    s"CAST(SUBSTRING($schema, 3) AS INT) * 1000 + CAST(SUBSTRING($table, 2) AS INT)"
 }

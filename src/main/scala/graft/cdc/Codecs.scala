@@ -32,7 +32,7 @@ object Codecs {
   private[cdc] def fmtSql(e: String): String =
     s"CASE WHEN $e IS NULL THEN 'null' ELSE printf('%.4f', $e) END"
 
-  private val opWordSql =
+  private[cdc] val opWordSql =
     "CASE op WHEN 'I' THEN 'INSERT' WHEN 'D' THEN 'DELETE' ELSE 'UPDATE' END"
 
   /** A19 — canal-json envelope (reference: pkg/sink/codec/canal/
@@ -102,57 +102,45 @@ object Codecs {
     * `es` stays commit_ts (the reference's convertToCanalTs shifts a
     * TSO's physical-millis bits — our clock is not a TSO), `ts`
     * (BuildTime, wall clock in the reference) = commit_ts, watermark
-    * `ts` = the resolved ts. Row-local projections + the A15 max
-    * aggregate; one union, no joins. */
-  def canalEnvelope(cl: DataFrame): DataFrame = {
-    val dml = cl.select(col("commit_ts"), lit("ROW").as("msg_type"),
-      WireRender.kernel(WireKernels.CanalTidb).as("value"))
-    val canalDdlType =
-      when(col("ddl_type") === "CREATE", lit("CREATE")).otherwise(lit("ALTER"))
-    val ddl = SchemaStore.ddlEvents(cl, Nil)
-      .select(col("valid_from").as("commit_ts"), lit("DDL").as("msg_type"),
-        concat(
-          lit("{\"id\":0,\"database\":\""), col("schema_name"),
-          lit("\",\"table\":\""), col("table_name"),
-          lit("\",\"pkNames\":null,\"isDdl\":true,\"type\":\""), canalDdlType,
-          lit("\",\"es\":"), col("valid_from"),
-          lit(",\"ts\":"), col("valid_from"),
-          lit(",\"sql\":\""), col("query"),
-          lit("\",\"data\":null,\"old\":null,\"_tidb\":{\"commitTs\":"),
-          col("valid_from"), lit("}}")).as("value"))
-    val watermark = ClDims.maxTs(cl).select(col("m").as("rts"))
-      .select(col("rts").as("commit_ts"), lit("WATERMARK").as("msg_type"),
-        concat(
-          lit("{\"id\":0,\"database\":\"\",\"table\":\"\",\"pkNames\":null," +
-            "\"isDdl\":false,\"type\":\"TIDB_WATERMARK\",\"es\":"), col("rts"),
-          lit(",\"ts\":"), col("rts"),
-          lit(",\"data\":null,\"old\":null,\"_tidb\":{\"watermarkTs\":"),
-          col("rts"), lit("}}")).as("value"))
-    dml.unionAll(ddl).unionAll(watermark)
-  }
+    * `ts` = the resolved ts. The legs are the [[MessageStream]]
+    * skeleton's, without BOOTSTRAP; the DML label is ROW. */
+  def canalEnvelope(cl: DataFrame): DataFrame =
+    MessageStream.frame(cl, "ROW", boot = None, resendEvery = 0,
+      ddl = (ts, _) => concat(
+        lit("{\"id\":0,\"database\":\""), col("schema_name"),
+        lit("\",\"table\":\""), col("table_name"),
+        lit("\",\"pkNames\":null,\"isDdl\":true,\"type\":\""),
+        when(col("ddl_type") === "CREATE", lit("CREATE")).otherwise(lit("ALTER")),
+        lit("\",\"es\":"), ts,
+        lit(",\"ts\":"), ts,
+        lit(",\"sql\":\""), col("query"),
+        lit("\",\"data\":null,\"old\":null,\"_tidb\":{\"commitTs\":"),
+        ts, lit("}}")),
+      dml = WireRender.kernel(WireKernels.CanalTidb),
+      watermark = rts => concat(
+        lit("{\"id\":0,\"database\":\"\",\"table\":\"\",\"pkNames\":null," +
+          "\"isDdl\":false,\"type\":\"TIDB_WATERMARK\",\"es\":"), rts,
+        lit(",\"ts\":"), rts,
+        lit(",\"data\":null,\"old\":null,\"_tidb\":{\"watermarkTs\":"),
+        rts, lit("}}")))
 
   val canalEnvelopeSql: String =
-    s"""SELECT commit_ts, 'ROW' AS msg_type,
-       |  CONCAT($canalJsonCoreSql, ',"_tidb":{"commitTs":', commit_ts, '}}') AS value
-       |FROM changelog
-       |UNION ALL
-       |SELECT valid_from AS commit_ts, 'DDL' AS msg_type,
-       |  CONCAT('{"id":0,"database":"', schema_name,
-       |    '","table":"', table_name,
-       |    '","pkNames":null,"isDdl":true,"type":"',
-       |    CASE WHEN ddl_type = 'CREATE' THEN 'CREATE' ELSE 'ALTER' END,
-       |    '","es":', valid_from,
-       |    ',"ts":', valid_from,
-       |    ',"sql":"', query,
-       |    '","data":null,"old":null,"_tidb":{"commitTs":', valid_from, '}}') AS value
-       |FROM (${SchemaStore.ddlEventsSql(Nil)}) ddl_frame
-       |UNION ALL
-       |SELECT MAX(commit_ts) AS commit_ts, 'WATERMARK' AS msg_type,
-       |  CONCAT('{"id":0,"database":"","table":"","pkNames":null,',
-       |    '"isDdl":false,"type":"TIDB_WATERMARK","es":', MAX(commit_ts),
-       |    ',"ts":', MAX(commit_ts),
-       |    ',"data":null,"old":null,"_tidb":{"watermarkTs":', MAX(commit_ts), '}}') AS value
-       |FROM changelog""".stripMargin
+    MessageStream.sql("ROW", boot = None,
+      ddl = (ts, _) =>
+        s"""CONCAT('{"id":0,"database":"', schema_name,
+           |    '","table":"', table_name,
+           |    '","pkNames":null,"isDdl":true,"type":"',
+           |    CASE WHEN ddl_type = 'CREATE' THEN 'CREATE' ELSE 'ALTER' END,
+           |    '","es":', $ts,
+           |    ',"ts":', $ts,
+           |    ',"sql":"', query,
+           |    '","data":null,"old":null,"_tidb":{"commitTs":', $ts, '}}')""".stripMargin,
+      dml = s"""CONCAT($canalJsonCoreSql, ',"_tidb":{"commitTs":', commit_ts, '}}')""",
+      watermark = rts =>
+        s"""CONCAT('{"id":0,"database":"","table":"","pkNames":null,',
+           |    '"isDdl":false,"type":"TIDB_WATERMARK","es":', $rts,
+           |    ',"ts":', $rts,
+           |    ',"data":null,"old":null,"_tidb":{"watermarkTs":', $rts, '}}')""".stripMargin)
 
   /** A42 — consumer-side canal-json DECODE (reference:
     * pkg/sink/codec/decoder + canal decoding — the path every

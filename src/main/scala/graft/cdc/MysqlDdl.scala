@@ -44,14 +44,6 @@ object MysqlDdl {
 
   val RetryBudget = 20 // mysql_writer.go:42 defaultDDLMaxRetry
 
-  /** deterministic tableID, shared convention with SimpleProtocol:
-    * db ordinal × 1000 + table ordinal — injective for any schema with
-    * fewer than 1000 tables (the old ×3 multiplier collided at 4 tables
-    * per schema, silently merging ddl_ts bookkeeping rows; injectivity
-    * over the universe is spec-asserted). */
-  private val tableId: Column =
-    expr("cast(substr(u_schema, 3) as int) * 1000 + cast(substr(u_table, 2) as int)")
-
   /** Influence taxonomy of WriteBlockEvent (mysql_writer.go:258-281). */
   private val influence: Column =
     when(col("ddl_type") === "DROP_DATABASE", "db")
@@ -60,11 +52,13 @@ object MysqlDdl {
   private val isDrop: Column =
     col("ddl_type").isin("DROP_TABLE", "DROP_DATABASE").cast("long")
 
-  /** The changefeed's table universe: (u_schema, u_table, table_id). */
+  /** The changefeed's table universe: (u_schema, u_table, table_id),
+    * the id [[ClDims.tableId]] (its injectivity over the universe, which
+    * keeps ddl_ts bookkeeping rows apart, is spec-asserted). */
   private[graft] def universe(cl: DataFrame): DataFrame =
     cl.select(col("schema_name").as("u_schema"), col("table_name").as("u_table"))
       .distinct()
-      .withColumn("table_id", tableId)
+      .withColumn("table_id", ClDims.tableId(col("u_schema"), col("u_table")))
 
   /** Generic frame over any DDL-event stream + table universe — the
     * spec drives the db/all/drop arms through this entry point. `ddl`
@@ -263,8 +257,7 @@ object MysqlDdl {
        |),
        |uni AS (
        |  SELECT schema_name AS u_schema, table_name AS u_table,
-       |    CAST(SUBSTRING(schema_name, 3) AS INT) * 1000
-       |      + CAST(SUBSTRING(table_name, 2) AS INT) AS table_id
+       |    ${ClDims.tableIdSql("schema_name", "table_name")} AS table_id
        |  FROM (SELECT DISTINCT schema_name, table_name FROM changelog)
        |),
        |blocked AS (
@@ -306,8 +299,7 @@ object MysqlDdl {
        |),
        |uni AS (
        |  SELECT schema_name AS u_schema, table_name AS u_table,
-       |    CAST(SUBSTRING(schema_name, 3) AS INT) * 1000
-       |      + CAST(SUBSTRING(table_name, 2) AS INT) AS table_id
+       |    ${ClDims.tableIdSql("schema_name", "table_name")} AS table_id
        |  FROM (SELECT DISTINCT schema_name, table_name FROM changelog)
        |),
        |blocked AS (

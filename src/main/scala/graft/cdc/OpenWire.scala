@@ -117,17 +117,21 @@ object OpenWire {
        |      ${segHexSql(Codecs.openProtocolValueSql)} AS v_seg
        |    FROM changelog""".stripMargin
 
+  /** The DDL key and value JSONs and the resolved-ts key, over a
+    * [[SchemaStore.ddlEventsSql]] row and the changelog. */
+  private val ddlKeySql =
+    """CONCAT('{"ts":', valid_from, ',"scm":"', schema_name,
+      |       '","tbl":"', table_name, '","t":2}')""".stripMargin
+  private val ddlValueSql =
+    """CONCAT('{"q":"', query, '","t":',
+      |       CASE WHEN ddl_type = 'CREATE' THEN 3 ELSE 5 END, '}')""".stripMargin
+  private val resolvedKeySql = """CONCAT('{"ts":', MAX(commit_ts), ',"t":3}')"""
+
   /** The message stream over `batched`, a relation holding every
     * event's segments with its batch_id: the ROW leg concatenates each
     * batch's segments in commit_ts order, then the DDL and RESOLVED
     * legs. */
-  private def wireSql(batched: String): String = {
-    val ddlKeySql =
-      """CONCAT('{"ts":', valid_from, ',"scm":"', schema_name,
-        |       '","tbl":"', table_name, '","t":2}')""".stripMargin
-    val ddlValueSql =
-      """CONCAT('{"q":"', query, '","t":',
-        |       CASE WHEN ddl_type = 'CREATE' THEN 3 ELSE 5 END, '}')""".stripMargin
+  private def wireSql(batched: String): String =
     s"""SELECT 'ROW' AS msg_type, schema_name, table_name, partition, batch_id,
        |  COUNT(*) AS n_rows,
        |  CONCAT('$versionHex', string_agg(k_seg, '' ORDER BY commit_ts)) AS key_wire,
@@ -146,10 +150,9 @@ object OpenWire {
        |  CAST(-1 AS BIGINT) AS partition, CAST(-1 AS BIGINT) AS batch_id,
        |  CAST(1 AS BIGINT) AS n_rows,
        |  CONCAT('$versionHex',
-       |    ${segHexSql("""CONCAT('{"ts":', MAX(commit_ts), ',"t":3}')""")}) AS key_wire,
+       |    ${segHexSql(resolvedKeySql)}) AS key_wire,
        |  '${f"${0L}%016X"}' AS value_wire
        |FROM changelog""".stripMargin
-  }
 
   /** The oracle of [[messages]]: its batches by formula
     * (row_number div maxBatch), independent of the fold. */
@@ -212,16 +215,14 @@ object OpenWire {
        |SELECT 'DDL' AS msg_type, schema_name, table_name,
        |  CAST(-1 AS BIGINT) AS partition, CAST(-1 AS BIGINT) AS batch_id,
        |  CAST(0 AS BIGINT) AS idx,
-       |  CONCAT('{"ts":', valid_from, ',"scm":"', schema_name,
-       |         '","tbl":"', table_name, '","t":2}') AS key,
-       |  CONCAT('{"q":"', query, '","t":',
-       |         CASE WHEN ddl_type = 'CREATE' THEN 3 ELSE 5 END, '}') AS value
+       |  $ddlKeySql AS key,
+       |  $ddlValueSql AS value
        |FROM (${SchemaStore.ddlEventsSql(Nil)}) ddl_frame
        |UNION ALL
        |SELECT 'RESOLVED' AS msg_type, NULL AS schema_name, NULL AS table_name,
        |  CAST(-1 AS BIGINT) AS partition, CAST(-1 AS BIGINT) AS batch_id,
        |  CAST(0 AS BIGINT) AS idx,
-       |  CONCAT('{"ts":', MAX(commit_ts), ',"t":3}') AS key,
+       |  $resolvedKeySql AS key,
        |  '' AS value
        |FROM changelog""".stripMargin
 }

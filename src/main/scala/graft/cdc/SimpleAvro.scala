@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * Every message is the Avro-binary encoding of the top-level `Message`
   * record — enum(MessageType) + union branch + payload record — over
-  * the SAME message population as the JSON arm ([[SimpleProtocol
-  * .messages]]): BOOTSTRAP priming + re-send cadence, DDL with as-of
-  * tableSchema, DML with data/old maps, WATERMARK. Emitted as uppercase
+  * the SAME [[MessageStream]] legs as the JSON arm: BOOTSTRAP priming
+  * + re-send cadence, DDL with as-of tableSchema, DML with data/old
+  * maps, WATERMARK. Emitted as uppercase
   * hex (the A41 convention) so the frame stays byte-exact-checkable in
   * SQL. Wire rules (all mirrored 1:1 in the DuckDB oracle):
   *  - int/long → zigzag varint; enum/union index → zigzag varint
@@ -35,8 +35,7 @@ import org.apache.spark.sql.functions._
   * The 3-column table schema (pk BIGINT PK, value DOUBLE, props JSON)
   * is constant apart from (database, table, tableID, version), so its
   * hex renders as four dynamic fields + one precomputed literal tail —
-  * the whole encoder is a row-local projection, zero shuffle beyond
-  * the legs A34 already has.
+  * every value is a row-local projection over the skeleton's legs.
   */
 object SimpleAvro {
 
@@ -44,6 +43,9 @@ object SimpleAvro {
 
   private val version = 1
   private val verHex = zvarHexConst(version.toLong) // int 1
+
+  private val tableId = ClDims.tableId(col("schema_name"), col("table_name"))
+  private val tableIdSql = ClDims.tableIdSql("schema_name", "table_name")
 
   // enum MessageType ordinals (message.json): WATERMARK BOOTSTRAP DDL DML
   // — the payload union lists the records in the same order, so the
@@ -105,11 +107,11 @@ object SimpleAvro {
     * the constant columns/indexes tail. */
   private def tableSchemaHex(verCol: Column): Column = concat(
     strHex(col("schema_name")), strHex(col("table_name")),
-    zvarHex(SimpleProtocol.tableId), zvarHex(verCol), lit(schemaTailHex))
+    zvarHex(tableId), zvarHex(verCol), lit(schemaTailHex))
 
   private def tableSchemaHexSql(verExpr: String): String =
     s"""CONCAT(${strHexSql("schema_name")}, ${strHexSql("table_name")},
-       |  ${zvarHexSql(SimpleProtocol.tableIdSql)}, ${zvarHexSql(verExpr)},
+       |  ${zvarHexSql(tableIdSql)}, ${zvarHexSql(verExpr)},
        |  '$schemaTailHex')""".stripMargin
 
   /** DML data/old map entry for the nullable money column: union null |
@@ -140,7 +142,7 @@ object SimpleAvro {
     concat(
       lit(wrapper(3) + verHex),
       strHex(col("schema_name")), strHex(col("table_name")),
-      zvarHex(SimpleProtocol.tableId), dmlTypeHex,
+      zvarHex(tableId), dmlTypeHex,
       zvarHex(col("commit_ts")), zvarHex(col("commit_ts")),
       zvarHex(expr(s"commit_ts div ${SchemaStore.step}")),
       lit("00" + "00" + "00"), // claimCheckLocation, handleKeyOnly, checksum: null
@@ -156,7 +158,7 @@ object SimpleAvro {
       s"""CONCAT('02${zvarHexConst(2)}', $pkEntrySql, ${valueEntrySql("before_value")}, '00')""".stripMargin
     s"""CONCAT('${wrapper(3) + verHex}',
        |  ${strHexSql("schema_name")}, ${strHexSql("table_name")},
-       |  ${zvarHexSql(SimpleProtocol.tableIdSql)}, $dmlTypeHexSql,
+       |  ${zvarHexSql(tableIdSql)}, $dmlTypeHexSql,
        |  ${zvarHexSql("commit_ts")}, ${zvarHexSql("commit_ts")},
        |  ${zvarHexSql(s"commit_ts // ${SchemaStore.step}")},
        |  '000000',
@@ -164,81 +166,36 @@ object SimpleAvro {
        |  CASE WHEN op = 'I' THEN '00' ELSE $oldMap END)""".stripMargin
   }
 
-  /** The full simple-protocol Avro-binary message stream — the same
-    * legs, commit_ts column and msg_type labels as [[SimpleProtocol
+  /** The full simple-protocol Avro-binary message stream — the
+    * [[MessageStream]] legs and msg_type labels of [[SimpleProtocol
     * .messages]], with `value` carrying the wire hex instead of JSON. */
-  def messages(cl: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def messages(cl: DataFrame): DataFrame =
+    MessageStream.frame(cl, "DML",
+      // Bootstrap payload: version, buildTs, tableSchema (a required
+      // field — no union branch before it)
+      boot = Some((buildTs, ver) =>
+        concat(lit(wrapper(1) + verHex), zvarHex(buildTs), tableSchemaHex(ver))),
+      resendEvery = MessageStream.ResendEvery,
+      // DDL payload: version, type, sql, commitTs, buildTs,
+      // tableSchema union (present), preTableSchema union (null)
+      ddl = (ts, ver) => concat(lit(wrapper(2) + verHex), ddlTypeHex,
+        strHex(col("query")), zvarHex(ts), zvarHex(ts),
+        lit("02"), tableSchemaHex(ver), lit("00")),
+      dml = dmlHex,
+      watermark = rts => concat(lit(wrapper(0) + verHex), zvarHex(rts), zvarHex(rts)))
 
-    val dml = cl.select(col("commit_ts"), lit("DML").as("msg_type"),
-      dmlHex.as("value"))
-
-    // Bootstrap payload: version, buildTs, tableSchema (a required
-    // field — no union branch before it)
-    val bootstrap = ClDims.tables(cl)
-      .select(lit(0L).as("commit_ts"), lit("BOOTSTRAP").as("msg_type"),
-        concat(lit(wrapper(1) + verHex + zvarHexConst(0)),
-          tableSchemaHex(lit(0L))).as("value"))
-
-    val w = Window.partitionBy(col("schema_name"), col("table_name"))
-      .orderBy(col("commit_ts"))
-    val resend = cl.select(col("schema_name"), col("table_name"), col("commit_ts"))
-      .withColumn("rn", row_number().over(w))
-      .filter(pmod(col("rn"), lit(SimpleProtocol.ResendEvery)) === 0)
-      .select(col("commit_ts"), lit("BOOTSTRAP").as("msg_type"),
-        concat(lit(wrapper(1) + verHex), zvarHex(col("commit_ts")),
-          tableSchemaHex(expr(s"commit_ts div ${SchemaStore.step}")))
-          .as("value"))
-
-    // DDL payload: version, type, sql, commitTs, buildTs,
-    // tableSchema union (present), preTableSchema union (null)
-    val ddl = SchemaStore.ddlEvents(cl, Nil)
-      .select(col("valid_from").as("commit_ts"), lit("DDL").as("msg_type"),
-        concat(lit(wrapper(2) + verHex), ddlTypeHex, strHex(col("query")),
-          zvarHex(col("valid_from")), zvarHex(col("valid_from")),
-          lit("02"), tableSchemaHex(expr(s"valid_from div ${SchemaStore.step}")),
-          lit("00")).as("value"))
-
-    val watermark = ClDims.maxTs(cl).select(col("m").as("rts"))
-      .select(col("rts").as("commit_ts"), lit("WATERMARK").as("msg_type"),
-        concat(lit(wrapper(0) + verHex), zvarHex(col("rts")), zvarHex(col("rts")))
-          .as("value"))
-
-    bootstrap.unionAll(ddl).unionAll(dml).unionAll(watermark).unionAll(resend)
-  }
-
-  def messagesSql: String = {
-    val resendLeg =
-      s"""
-         |UNION ALL
-         |SELECT commit_ts, 'BOOTSTRAP' AS msg_type,
-         |  CONCAT('${wrapper(1) + verHex}', ${zvarHexSql("commit_ts")},
-         |    ${tableSchemaHexSql(s"commit_ts // ${SchemaStore.step}")}) AS value
-         |FROM (SELECT *, ROW_NUMBER() OVER (
-         |        PARTITION BY schema_name, table_name ORDER BY commit_ts) AS rn
-         |      FROM changelog)
-         |WHERE rn % ${SimpleProtocol.ResendEvery} = 0""".stripMargin
-    s"""SELECT CAST(0 AS BIGINT) AS commit_ts, 'BOOTSTRAP' AS msg_type,
-       |  CONCAT('${wrapper(1) + verHex + zvarHexConst(0)}',
-       |    ${tableSchemaHexSql("0")}) AS value
-       |FROM (SELECT DISTINCT schema_name, table_name FROM changelog)
-       |UNION ALL
-       |SELECT valid_from AS commit_ts, 'DDL' AS msg_type,
-       |  CONCAT('${wrapper(2) + verHex}', $ddlTypeHexSql, ${strHexSql("query")},
-       |    ${zvarHexSql("valid_from")}, ${zvarHexSql("valid_from")},
-       |    '02', ${tableSchemaHexSql(s"valid_from // ${SchemaStore.step}")},
-       |    '00') AS value
-       |FROM (${SchemaStore.ddlEventsSql(Nil)}) ddl_frame
-       |UNION ALL
-       |SELECT commit_ts, 'DML' AS msg_type,
-       |  $dmlHexSql AS value
-       |FROM changelog
-       |UNION ALL
-       |SELECT MAX(commit_ts) AS commit_ts, 'WATERMARK' AS msg_type,
-       |  CONCAT('${wrapper(0) + verHex}', ${zvarHexSql("MAX(commit_ts)")},
-       |    ${zvarHexSql("MAX(commit_ts)")}) AS value
-       |FROM changelog$resendLeg""".stripMargin
-  }
+  def messagesSql: String =
+    MessageStream.sql("DML",
+      boot = Some((buildTs, ver) =>
+        s"""CONCAT('${wrapper(1) + verHex}', ${zvarHexSql(buildTs)},
+           |    ${tableSchemaHexSql(ver)})""".stripMargin),
+      ddl = (ts, ver) =>
+        s"""CONCAT('${wrapper(2) + verHex}', $ddlTypeHexSql, ${strHexSql("query")},
+           |    ${zvarHexSql(ts)}, ${zvarHexSql(ts)},
+           |    '02', ${tableSchemaHexSql(ver)}, '00')""".stripMargin,
+      dml = dmlHexSql,
+      watermark = rts =>
+        s"CONCAT('${wrapper(0) + verHex}', ${zvarHexSql(rts)}, ${zvarHexSql(rts)})")
 
   /** Avro-arm DECODE — the consumer side of [[messages]], running a
     * real sequential Avro-binary parser per message (native loop-
@@ -246,9 +203,9 @@ object SimpleAvro {
     * union dispatch, varint-length strings, block-counted arrays/maps,
     * the full TableSchema walk) and then resolving every DML's schema
     * by exact (schema, table, schemaVersion) lookup against the cache
-    * the stream's own BOOTSTRAP/DDL messages build — the SAME broadcast
-    * left join as the JSON arm ([[SimpleProtocol.decodeFrom]], mirroring
-    * decoder.go:309-356 memoryTableInfoProvider). Output frame is
+    * the stream's own BOOTSTRAP/DDL messages build — the one schema
+    * cache join of both arms, [[MessageStream.resolveSchemas]]. Output
+    * frame is
     * column-identical to the JSON decode, so the DuckDB oracle IS
     * [[SimpleProtocol.decodeSql]] — the oracle equality proves the two
     * wire formats of marshaller.go carry identical information. */
@@ -281,14 +238,7 @@ object SimpleAvro {
         m("schema_version").as("schema_version"),
         m("ts_cols").as("schema_cols"))
       .distinct()
-    decoded
-      .join(broadcast(schemas),
-        Seq("schema_name", "table_name", "schema_version"), "left")
-      .select(col("msg_kind"), col("commit_ts"), col("schema_name"),
-        col("table_name"), col("op"), col("ddl_type"), col("ddl_sql"),
-        col("pk"), col("after_value"), col("before_value"),
-        col("schema_version"),
-        coalesce(col("schema_cols"), lit(-1L)).as("schema_cols"))
+    MessageStream.resolveSchemas(decoded, schemas)
   }
 
   /** The decode oracle: the JSON arm's decode SQL — both wire formats

@@ -13,22 +13,19 @@ import org.apache.spark.sql.functions._
   *
   * Divergence from the reference, for determinism: `buildTs` is the
   * message's own commitTs instead of wall-clock time, `tableID` derives
-  * from the schema/table ordinals, and bootstrap messages carry
-  * commitTs 0. Everything is a row-local codegen'd string expression
-  * over the changelog / schema-version frames plus one tiny max()
-  * aggregate for the watermark — one union, no joins.
+  * from the schema/table ordinals ([[ClDims.tableId]]), and bootstrap
+  * messages carry commitTs 0. The legs are the [[MessageStream]]
+  * skeleton; this object supplies its JSON text. Every value is a
+  * row-local codegen'd string expression; the DDL leg embeds the
+  * schema-version grid's tiny broadcast and the watermark the 1-row
+  * max.
   */
 object SimpleProtocol {
 
   private val version = 1
 
-  /** deterministic tableID: db ordinal × 1000 + table ordinal —
-    * injective below 1000 tables per schema (shared convention with
-    * [[MysqlDdl]]; the old ×3 multiplier collided at 4 tables). */
-  private[cdc] val tableId: Column =
-    expr("cast(substr(schema_name, 3) as int) * 1000 + cast(substr(table_name, 2) as int)")
-  private[cdc] val tableIdSql: String =
-    "CAST(SUBSTRING(schema_name, 3) AS INT) * 1000 + CAST(SUBSTRING(table_name, 2) AS INT)"
+  private val tableId = ClDims.tableId(col("schema_name"), col("table_name"))
+  private val tableIdSql = ClDims.tableIdSql("schema_name", "table_name")
 
   /** tableSchema JSON for schema version `v` (reference: TableSchema). */
   private def tableSchema(verCol: Column): Column = concat(
@@ -47,8 +44,9 @@ object SimpleProtocol {
        |  '{"name":"value","dataType":"DOUBLE","nullable":true},',
        |  '{"name":"props","dataType":"JSON","nullable":true}]}')""".stripMargin
 
-  /** DML message value — row-local; reused by the Changefeed facade. */
-  private[cdc] def dmlValue: Column = {
+  /** The DML message value (reference: simple/message.go
+    * `newDMLMessage`), row-local over the changelog. */
+  private def dmlValue: Column = {
     val dmlType = when(col("op") === "I", lit("INSERT"))
       .when(col("op") === "D", lit("DELETE")).otherwise(lit("UPDATE"))
     val image = concat(lit("{\"pk\":"), col("pk"),
@@ -69,128 +67,68 @@ object SimpleProtocol {
       lit("}"))
   }
 
-  /** Bootstrap re-send cadence: one re-sent BOOTSTRAP per table per 500
-    * DML messages (reference default send-bootstrap-in-msg-count;
-    * bootstraper.go:55), shared by the JSON and Avro wires. */
-  val ResendEvery = 500
-
-  /** A34 — the full simple-protocol message stream over a changelog.
-    *
-    * Bootstrap re-send cadence (reference: pkg/sink/codec/
-    * bootstraper.go:80-156 — `sendBootstrapMsg` re-emits a table's
-    * BOOTSTRAP when the row count since the last send exceeds
-    * `sendBootstrapInMsgCount` OR the wall-clock interval elapses):
-    * every `resendEvery`-th DML of a table (row_number per table in
-    * commit_ts order — commit_ts is this engine's deterministic clock,
-    * so the msg-count arm is exact and the interval arm maps to the
-    * same mechanism) re-emits that table's BOOTSTRAP carrying the
-    * AS-OF tableSchema version (the reference re-sends the table's
-    * CURRENT tableInfo, bootstraper.go:141), message commitTs 0 (the
-    * bootstrap DDL's FinishedTs, :156-163) and buildTs = the
-    * triggering commit_ts (deterministic stand-in for the reference's
-    * wall-clock build time). A consumer joining mid-stream is thus at
-    * most `resendEvery` DMLs per table away from a schema-carrying
-    * message — the invariant the spec checks. One extra per-table
-    * window shuffle; `resendEvery` ≤ 0 disables. */
-  def messages(cl: DataFrame, resendEvery: Int = ResendEvery): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dml = cl.select(col("commit_ts"), lit("DML").as("msg_type"),
-      dmlValue.as("value"))
-
-    val resend = if (resendEvery <= 0) None else Some {
-      val w = Window.partitionBy(col("schema_name"), col("table_name"))
-        .orderBy(col("commit_ts"))
-      // project to the three needed columns BEFORE the window so the
-      // per-table sort shuffles 24-byte rows, not full-width changelog
-      // rows with both images (decode re-plans this subtree twice)
-      cl.select(col("schema_name"), col("table_name"), col("commit_ts"))
-        .withColumn("rn", row_number().over(w))
-        .filter(pmod(col("rn"), lit(resendEvery)) === 0)
-        .select(col("commit_ts"), lit("BOOTSTRAP").as("msg_type"), concat(
-          lit(s"""{"version":$version,"type":"BOOTSTRAP","commitTs":0,"buildTs":"""),
-          col("commit_ts"), lit(",\"tableSchema\":"),
-          tableSchema(expr(s"commit_ts div ${SchemaStore.step}")), lit("}"))
-          .as("value"))
-    }
-
-    val ddlFrame = SchemaStore.ddlEvents(cl, Nil)
-    val ddl = ddlFrame.select(col("valid_from").as("commit_ts"),
-      lit("DDL").as("msg_type"), concat(
+  /** A34 — the full simple-protocol message stream over a changelog:
+    * the [[MessageStream]] legs with JSON values. BOOTSTRAP and its
+    * re-send carry the AS-OF tableSchema version (the reference re-sends
+    * the table's CURRENT tableInfo, bootstraper.go:141), message
+    * commitTs 0 (the bootstrap DDL's FinishedTs, :156-163) and buildTs
+    * = the triggering commit_ts (0 for the priming bootstrap; the
+    * deterministic stand-in for the reference's wall-clock build time).
+    * `resendEvery` ≤ 0 disables the re-send. */
+  def messages(cl: DataFrame, resendEvery: Int = MessageStream.ResendEvery): DataFrame =
+    MessageStream.frame(cl, "DML",
+      boot = Some((buildTs, ver) => concat(
+        lit(s"""{"version":$version,"type":"BOOTSTRAP","commitTs":0,"buildTs":"""),
+        buildTs, lit(",\"tableSchema\":"), tableSchema(ver), lit("}"))),
+      resendEvery = resendEvery,
+      ddl = (ts, ver) => concat(
         lit(s"""{"version":$version,"database":""""), col("schema_name"),
         lit("\",\"table\":\""), col("table_name"),
         lit("\",\"tableID\":"), tableId,
         lit(",\"type\":\""), col("ddl_type"),
         lit("\",\"sql\":\""), col("query"),
-        lit("\",\"commitTs\":"), col("valid_from"),
-        lit(",\"buildTs\":"), col("valid_from"),
-        lit(",\"tableSchema\":"),
-        tableSchema(expr(s"valid_from div ${SchemaStore.step}")),
-        lit("}")).as("value"))
-
-    val bootstrap = ClDims.tables(cl)
-      .select(lit(0L).as("commit_ts"), lit("BOOTSTRAP").as("msg_type"), concat(
-        lit(s"""{"version":$version,"type":"BOOTSTRAP","commitTs":0,"buildTs":0,"tableSchema":"""),
-        tableSchema(lit(0)), lit("}")).as("value"))
-
-    val watermark = ClDims.maxTs(cl).select(col("m").as("rts"))
-      .select(col("rts").as("commit_ts"), lit("WATERMARK").as("msg_type"), concat(
-        lit(s"""{"version":$version,"type":"WATERMARK","commitTs":"""), col("rts"),
-        lit(",\"buildTs\":"), col("rts"), lit("}")).as("value"))
-
-    val base = bootstrap.unionAll(ddl).unionAll(dml).unionAll(watermark)
-    resend.fold(base)(base.unionAll)
-  }
+        lit("\",\"commitTs\":"), ts,
+        lit(",\"buildTs\":"), ts,
+        lit(",\"tableSchema\":"), tableSchema(ver),
+        lit("}")),
+      dml = dmlValue,
+      watermark = rts => concat(
+        lit(s"""{"version":$version,"type":"WATERMARK","commitTs":"""), rts,
+        lit(",\"buildTs\":"), rts, lit("}")))
 
   def messagesSql: String = {
-    val resendLeg =
-      s"""
-         |UNION ALL
-         |SELECT commit_ts, 'BOOTSTRAP' AS msg_type,
-         |  CONCAT('{"version":$version,"type":"BOOTSTRAP","commitTs":0,"buildTs":', commit_ts,
-         |    ',"tableSchema":', ${tableSchemaSql(s"commit_ts // ${SchemaStore.step}")}, '}') AS value
-         |FROM (SELECT *, ROW_NUMBER() OVER (
-         |        PARTITION BY schema_name, table_name ORDER BY commit_ts) AS rn
-         |      FROM changelog)
-         |WHERE rn % $ResendEvery = 0""".stripMargin
-    val dmlTypeSql = "CASE op WHEN 'I' THEN 'INSERT' WHEN 'D' THEN 'DELETE' ELSE 'UPDATE' END"
     val imageSql =
       s"""CONCAT('{"pk":', pk, ',"value":', ${Codecs.fmtSql("after_value")}, ',"props":', props, '}')"""
     val oldSql =
       s"""CONCAT('{"pk":', pk, ',"value":', ${Codecs.fmtSql("before_value")}, '}')"""
-    s"""SELECT CAST(0 AS BIGINT) AS commit_ts, 'BOOTSTRAP' AS msg_type,
-       |  CONCAT('{"version":$version,"type":"BOOTSTRAP","commitTs":0,"buildTs":0,"tableSchema":',
-       |    ${tableSchemaSql("0")}, '}') AS value
-       |FROM (SELECT DISTINCT schema_name, table_name FROM changelog)
-       |UNION ALL
-       |SELECT valid_from AS commit_ts, 'DDL' AS msg_type,
-       |  CONCAT('{"version":$version,"database":"', schema_name,
-       |    '","table":"', table_name,
-       |    '","tableID":', $tableIdSql,
-       |    ',"type":"', ddl_type,
-       |    '","sql":"', query,
-       |    '","commitTs":', valid_from,
-       |    ',"buildTs":', valid_from,
-       |    ',"tableSchema":', ${tableSchemaSql(s"valid_from // ${SchemaStore.step}")},
-       |    '}') AS value
-       |FROM (${SchemaStore.ddlEventsSql(Nil)}) ddl_frame
-       |UNION ALL
-       |SELECT commit_ts, 'DML' AS msg_type,
-       |  CONCAT('{"version":$version,"database":"', schema_name,
-       |    '","table":"', table_name,
-       |    '","tableID":', $tableIdSql,
-       |    ',"type":"', $dmlTypeSql,
-       |    '","commitTs":', commit_ts,
-       |    ',"buildTs":', commit_ts,
-       |    ',"schemaVersion":', commit_ts // ${SchemaStore.step},
-       |    CASE WHEN op <> 'D' THEN CONCAT(',"data":', $imageSql) ELSE '' END,
-       |    CASE WHEN op <> 'I' THEN CONCAT(',"old":', $oldSql) ELSE '' END,
-       |    '}') AS value
-       |FROM changelog
-       |UNION ALL
-       |SELECT MAX(commit_ts) AS commit_ts, 'WATERMARK' AS msg_type,
-       |  CONCAT('{"version":$version,"type":"WATERMARK","commitTs":', MAX(commit_ts),
-       |    ',"buildTs":', MAX(commit_ts), '}') AS value
-       |FROM changelog$resendLeg""".stripMargin
+    MessageStream.sql("DML",
+      boot = Some((buildTs, ver) =>
+        s"""CONCAT('{"version":$version,"type":"BOOTSTRAP","commitTs":0,"buildTs":', $buildTs,
+           |    ',"tableSchema":', ${tableSchemaSql(ver)}, '}')""".stripMargin),
+      ddl = (ts, ver) =>
+        s"""CONCAT('{"version":$version,"database":"', schema_name,
+           |    '","table":"', table_name,
+           |    '","tableID":', $tableIdSql,
+           |    ',"type":"', ddl_type,
+           |    '","sql":"', query,
+           |    '","commitTs":', $ts,
+           |    ',"buildTs":', $ts,
+           |    ',"tableSchema":', ${tableSchemaSql(ver)},
+           |    '}')""".stripMargin,
+      dml =
+        s"""CONCAT('{"version":$version,"database":"', schema_name,
+           |    '","table":"', table_name,
+           |    '","tableID":', $tableIdSql,
+           |    ',"type":"', ${Codecs.opWordSql},
+           |    '","commitTs":', commit_ts,
+           |    ',"buildTs":', commit_ts,
+           |    ',"schemaVersion":', commit_ts // ${SchemaStore.step},
+           |    CASE WHEN op <> 'D' THEN CONCAT(',"data":', $imageSql) ELSE '' END,
+           |    CASE WHEN op <> 'I' THEN CONCAT(',"old":', $oldSql) ELSE '' END,
+           |    '}')""".stripMargin,
+      watermark = rts =>
+        s"""CONCAT('{"version":$version,"type":"WATERMARK","commitTs":', $rts,
+           |    ',"buildTs":', $rts, '}')""".stripMargin)
   }
 
   /** A45 — simple-protocol DECODE, the consumer side of [[messages]]
@@ -200,18 +138,10 @@ object SimpleProtocol {
     * DDL otherwise (bootstrap rides the DDL path) — and each ROW
     * resolves its schema by exact (schema, table, schemaVersion)
     * lookup against the cache the BOOTSTRAP/DDL messages populate
-    * (decoder.go:309-356 `memoryTableInfoProvider.Read`).
-    *
-    * The provider is an in-memory map in the reference; here it is the
-    * deduplicated schema frame of the same stream, broadcast into a
-    * left join — tables × versions rows, trivially broadcastable at
-    * any corpus scale, so resolution adds zero shuffles to the
-    * row-local JSON extraction. `schema_cols` carries the resolved
-    * column count (-1 ≙ the reference's cache-miss path, where the
-    * consumer parks the message until its DDL arrives; a batch decode
-    * has the whole stream, so only the schema-less WATERMARK rows
-    * miss). Absent numerics take -1 sentinels, never NULL (oracle
-    * pandas-bridge contract). */
+    * (decoder.go:309-356 `memoryTableInfoProvider.Read`, here
+    * [[MessageStream.resolveSchemas]]). `schema_cols` carries the
+    * resolved column count, -1 on a miss; absent numerics take -1
+    * sentinels, never NULL (oracle pandas-bridge contract). */
   def decode(cl: DataFrame): DataFrame = decodeFrom(messages(cl))
 
   /** Decode an already-encoded message stream — the entry point a
@@ -261,14 +191,7 @@ object SimpleProtocol {
         m("ts_version").as("schema_version"),
         m("ts_cols").as("schema_cols"))
       .distinct() // bootstrap v0 and the CREATE DDL write the same entry
-    decoded
-      .join(broadcast(schemas),
-        Seq("schema_name", "table_name", "schema_version"), "left")
-      .select(col("msg_kind"), col("commit_ts"), col("schema_name"),
-        col("table_name"), col("op"), col("ddl_type"), col("ddl_sql"),
-        col("pk"), col("after_value"), col("before_value"),
-        col("schema_version"),
-        coalesce(col("schema_cols"), lit(-1L)).as("schema_cols"))
+    MessageStream.resolveSchemas(decoded, schemas)
   }
 
   def decodeSql: String = {

@@ -2225,32 +2225,52 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     // holds fewer than maxBatch events and stays within maxBytes; the
     // three streams with the most messages, replayed sequentially, must
     // produce identical boundaries and wire lengths
-    val got = rows.select(col("schema_name"), col("table_name"), col("partition"),
-        col("batch_id"), col("n_rows"),
-        ((length(col("key_wire")) + length(col("value_wire"))) / 2).cast("long"))
-      .collect().map(r => ((r.getString(0), r.getString(1), r.getLong(2)),
-        (r.getLong(3), r.getLong(4), r.getLong(5))))
-      .groupBy(_._1).toSeq.sortBy(kv => (-kv._2.length, kv._1.toString)).take(3)
-    for ((key, stream) <- got) {
-      val evs = cl.filter(col("schema_name") === key._1 &&
-          col("table_name") === key._2)
+    type Key = (String, String, Long)
+    def messageLens(msgs: org.apache.spark.sql.DataFrame): Map[Key, Seq[(Long, Long)]] =
+      msgs.filter(col("msg_type") === "ROW")
+        .select(col("schema_name"), col("table_name"), col("partition"),
+          col("batch_id"), col("n_rows"),
+          ((length(col("key_wire")) + length(col("value_wire"))) / 2).cast("long"))
+        .collect().map(r => ((r.getString(0), r.getString(1), r.getLong(2)),
+          (r.getLong(3), r.getLong(4), r.getLong(5))))
+        .groupBy(_._1).map { case (k, ms) =>
+          k -> ms.map(_._2).sortBy(_._1).map(m => (m._2, m._3)).toSeq }
+    def eventLens(key: Key): Seq[Long] =
+      cl.filter(col("schema_name") === key._1 && col("table_name") === key._2)
         .select(cdc.Dispatchers.indexValueBucket(16).as("p"), col("commit_ts"),
           (octet_length(cdc.Codecs.openProtocolKey) +
             octet_length(cdc.Codecs.openProtocolValue) + 16).cast("long"))
         .filter(col("p") === key._3)
         .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1).map(_._2).toSeq
+    def replay(evs: Seq[Long], cap: Long): Seq[(Long, Long)] = {
       val msgLens = collection.mutable.Buffer.empty[(Long, Long)]
       var i = 0
       while (i < evs.length) {
         var n = 1L; var len = 8L + evs(i); i += 1
-        while (i < evs.length && n < maxBatch && len + evs(i) <= maxBytes) {
+        while (i < evs.length && n < maxBatch && len + evs(i) <= cap) {
           n += 1; len += evs(i); i += 1
         }
         msgLens += ((n, len))
       }
-      val byId = stream.map(_._2).sortBy(_._1).map(m => (m._2, m._3)).toSeq
-      assert(byId == msgLens.toSeq, s"$key: $byId != $msgLens")
+      msgLens.toSeq
     }
+    val got = messageLens(msgs).toSeq
+      .sortBy(kv => (-kv._2.length, kv._1.toString)).take(3)
+    for ((key, byId) <- got) {
+      val msgLens = replay(eventLens(key), maxBytes)
+      assert(byId == msgLens, s"$key: $byId != $msgLens")
+    }
+    // the head decides a boundary: with the cap at S + 4, S the wire
+    // bytes of a stream's first k events, the k events fit only in a
+    // message without the 8-byte head, so the first message closes at
+    // k - 1 (a fold that dropped the head would hold all k)
+    val (key, _) = got.head
+    val evs = eventLens(key)
+    val k = 3
+    val headCap = evs.take(k).sum + 4
+    val capped = messageLens(cdc.OpenWire.rows(cl, 16, maxBatch, headCap))(key)
+    assert(capped.head._1 == k - 1, s"$key at cap $headCap: $capped")
+    assert(capped == replay(evs, headCap), s"$key at cap $headCap: $capped")
   }
 
   test("canal envelope carries _tidb extensions, DDL frames, and one watermark") {

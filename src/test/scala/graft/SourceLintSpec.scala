@@ -158,6 +158,23 @@ class SourceLintSpec extends AnyFunSuite {
     new String(out)
   }
 
+  /** The simple JSON and Avro wires and the canal envelope build their
+    * BOOTSTRAP resend, DDL and watermark legs in the one skeleton,
+    * [[graft.cdc.MessageStream]], and supply only renderers. A DDL-event,
+    * max-ts or `row_number` call in the code of one of them (an
+    * interpolated oracle builder included) would be a second copy of
+    * the leg structure. */
+  test("message legs are built only by the message-stream skeleton") {
+    val legs = """\b(SchemaStore\s*\.\s*ddlEvents(Sql)?|ClDims\s*\.\s*maxTs|row_number)\s*\(""".r
+    val found = Seq("SimpleProtocol", "SimpleAvro", "Codecs").flatMap { w =>
+      val f = new java.io.File(main, s"graft/cdc/$w.scala")
+      val src = codeOnly(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+      legs.findAllMatchIn(src)
+        .map(m => s"${f.getPath}:${src.substring(0, m.start).count(_ == '\n') + 1}")
+    }
+    assert(found.isEmpty, "build the legs with graft.cdc.MessageStream: " + found.mkString(", "))
+  }
+
   /** The top-level comma-separated items of the bracketed list opening
     * at `s(open)`, and the index just past its closing bracket. */
   private def items(s: String, open: Int): (Seq[String], Int) = {
